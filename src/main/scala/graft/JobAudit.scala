@@ -67,7 +67,9 @@ object JobAudit {
         System.err.println(s"[audit] $name cold failed: ${e.getMessage}")
       }
       // warm measured pass: the listener events for a job arrive
-      // asynchronously; the sleep lets the bus drain before reading
+      // asynchronously; the sleeps let the bus drain before the reset
+      // (late cold-pass events would count as warm) and before reading
+      Thread.sleep(300)
       jobs.set(0); stages.set(0); tasks.set(0L)
       val t0 = System.nanoTime()
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()

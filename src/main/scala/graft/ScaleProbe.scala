@@ -1499,18 +1499,19 @@ object ScaleProbe {
     val emb = Tables.embeddings(spark, dir)
     val qids = graft.ext.Similarity.sampleQueryIds(
       emb.filter(col("embedding").isNotNull), 16)
+    val spec = graft.ext.PqSpec(m = 16, kSub = 32, iters = 2,
+      coarse = Some(graft.ext.PqCoarse(nprobe = 3)), fitSampleMod = 4L)
     val idxDir = java.nio.file.Files
       .createTempDirectory("graft_pqidx_probe").toString
     try {
       val tB0 = System.nanoTime()
-      graft.ext.Similarity.buildPqIndex(emb, idxDir, m = 16,
-        kSub = 32, iters = 2, fitSampleMod = 4L)
+      graft.ext.Similarity.buildPqIndex(spec, emb, idxDir)
       println(f"[probe] pq index build (once)  " +
         f"${(System.nanoTime() - tB0) / 1e9}%7.2fs")
       val probeTimes = (0 until reps).map { _ =>
         val t0 = System.nanoTime()
-        graft.ext.Similarity.pqIndexProbe(spark, idxDir, emb, qids,
-            k = 5, nprobe = 3)
+        graft.ext.Similarity.pqIndexProbe(spark, idxDir, spec, emb,
+            qids, k = 5)
           .write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9
       }

@@ -482,8 +482,8 @@ object Pca {
     * running log-eigenvalue product that still has a free slot, so
     * every PQ codebook quantizes a comparable amount of variance
     * (the free-lunch upgrade over the round-robin variance heuristic
-    * of `pqTopKBalanced`, which permutes raw dims instead of
-    * rotating). Row `i` of the returned matrix holds output
+    * of the `VarianceBalanced` PQ layout, which permutes raw dims
+    * instead of rotating). Row `i` of the returned matrix holds output
     * dimension i's coefficients over the input dims; subspace s owns
     * rows [s·dim/m, (s+1)·dim/m). Entries are rounded to 6 decimals
     * so the rotation embeds as identical plan literals in Spark and

@@ -1027,7 +1027,7 @@ object Similarity {
     * every Lloyd iteration is ONE broadcast join + two aggregates
     * regardless of m (the per-subspace formulation cost m separate
     * job chains — 16× the scheduling and corpus passes at the
-    * catalog parameterization; measured 38.5s → see pqTopK). */
+    * catalog parameterization; measured 38.5s → see pqSearch). */
   private def pqSubExplode(base: DataFrame, m: Int, subDim: Int)
       : DataFrame =
     base.select(col("vec_id"), posexplode(
@@ -1129,150 +1129,204 @@ object Similarity {
     cents
   }
 
-  /** Product-quantization ANN (Jégou et al. 2011) — the memory-layout
-    * production shape for corpus-scale similarity search. The `dim`
-    * dimensions are split into `m` contiguous subspaces of dim/m; a
-    * separate [[kmeansCentroidsL2]] codebook of `kSub` centroids is
-    * fitted per subspace; every corpus vector is encoded as `m` small
-    * codes (nearest sub-centroid per subspace — at kSub ≤ 256 that is
-    * m BYTES per vector vs 8·dim for raw doubles, a 128× compression
-    * at the catalog's 64-dim/4-byte-code parameterization). Queries
-    * are NOT quantized (asymmetric distance computation): each query
-    * precomputes a lookup table of `⟨q_sub, centroid⟩` partial dots —
-    * |Q|·m·kSub tiny rows, broadcast — and a candidate's approximate
-    * inner product is the sum of its m table entries, reached without
-    * ever touching the raw corpus vectors again.
+  /** Product-quantization ANN (Jégou et al. 2011) under `spec` — the
+    * memory-layout production shape for corpus-scale similarity
+    * search: every corpus vector is encoded as `m` codes (nearest
+    * sub-centroid per subspace — at kSub ≤ 256 that is m BYTES per
+    * vector vs 8·dim for raw doubles), queries are NOT quantized
+    * (asymmetric distance computation): each query precomputes a
+    * lookup table of `⟨q_sub, centroid⟩` partial dots — |Q|·m·kSub
+    * tiny rows, broadcast — and a candidate's approximate inner
+    * product (`adc_dot`) is the sum of its m table entries, reached
+    * without touching the raw corpus vectors again.
+    *
+    * With `spec.coarse` this is IVF-PQ, the FAISS/SCaNN-class
+    * composition: the per-label coarse quantizer prunes the corpus to
+    * the `nprobe` probed label partitions per query and fine ranking
+    * runs on the codes inside them; `residual` encodes `v − c(v)`
+    * (residuals concentrate near the origin, so the same code budget
+    * buys tighter reconstruction) and scores `⟨q,c(v)⟩ + Σ LUT` with
+    * the coarse term computed while probing; `filter` restricts the
+    * CODE index before the probed-partition join (a pushed predicate
+    * on the index read — fits and codes stay filter-agnostic, callers
+    * widen nprobe ∝ 1/selectivity).
     *
     * Distributed shape: all m codebooks fit in ONE batched Lloyd loop
-    * over the subspace-exploded corpus ([[pqSubExplode]] /
-    * [[pqFitCodebooks]] — per iteration one broadcast join + two
-    * partial-combined aggregates, regardless of m; the per-subspace
-    * formulation cost m separate job chains and ran 4× slower at
-    * m=16); encode is one batched argmin aggregate; scoring joins
-    * the corpus-sized CODES frame to the broadcast LUT and reduces
-    * per (query, vector) with map-side combine — the only
+    * over the subspace-exploded corpus ([[pqFitEncode]]); encode is
+    * one projection; scoring joins the corpus-sized CODES frame to
+    * the broadcast LUT and reduces per (query, vector) — the only
     * corpus-sized shuffle carries (query_id, vec_id, partial-sum)
     * rows, never vectors. Every step is rounded/decimal-summed, so
     * the whole index — fit, codes, ADC scores — is hash-verified
-    * against an unrolled DuckDB oracle.
-    *
-    * Scores are approximate inner products (`adc_dot`), the standard
-    * PQ ranking score; recall vs the exact scan is bounded in
-    * SimilaritySpec and measured per-corpus the same way
-    * `s_ann_recall` does for LSH. */
-  /** `fitSampleMod` > 1 fits the codebooks on the DETERMINISTIC
-    * sample `vec_id % fitSampleMod == 0` (seeds, assignments and
-    * centroid updates all over the sample) while the FULL corpus is
-    * still encoded and scored — the production fit shape
-    * (FAISS-class systems train quantizers on a bounded sample): fit
-    * cost becomes sample-sized × iters, corpus-independent, and the
-    * corpus pays exactly one encode pass. The modulus predicate is
-    * SQL-mirrorable, so the sampled fit stays hash-verifiable. */
-  def pqTopK(embeddings: DataFrame, queryIds: DataFrame, k: Int,
-      m: Int, kSub: Int, iters: Int, dim: Int = 64,
-      fitSampleMod: Long = 1L): DataFrame = {
-    require(m >= 1 && dim % m == 0, s"dim=$dim must split into m=$m")
-    require(fitSampleMod >= 1L, "fitSampleMod must be >= 1")
-    val subDim = dim / m
-    val base = embeddings.select(col("vec_id"),
-        toDouble(col("embedding")).as("emb"))
-      .filter(col("emb").isNotNull)
+    * against [[PqSpec.oracleSql]]; recall vs the exact scan is
+    * bounded in SimilaritySpec. */
+  def pqSearch(spec: PqSpec, embeddings: DataFrame, queryIds: DataFrame,
+      k: Int): DataFrame = {
+    val keep = if (spec.coarse.isDefined) Seq("vec_id", "label")
+      else Seq("vec_id")
+    val base = pqBase(spec, embeddings, keep)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Corpus-sized subspace frame storage — every option was MEASURED
-    // at the 1000× tier (2M vectors / 32M subspace rows, one session,
-    // BASELINE.md r12 ANN section):
-    //  - FULL fit (3 passes: 2 Lloyd + encode): persist wins — SER
-    //    cache 706s < no-persist re-explode 847s; SER vs the r11
-    //    deserialized cache is ~neutral (the pressure is round-trip
-    //    volume, not object overhead). Keep MEMORY_AND_DISK_SER.
-    //  - SAMPLED fit: the frame is consumed exactly ONCE (the
-    //    encode); persisting a single-use corpus frame is pure
-    //    overhead — removing it cut the 1000× build ~2.2×
-    //    host-adjusted (294s vs the r11 ~395s on a faster host).
-    val subBaseLazy = pqSubExplode(base, m, subDim)
-    val subBase =
-      if (fitSampleMod > 1L) subBaseLazy
-      else subBaseLazy.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    val (fitBase, fitSub) =
-      if (fitSampleMod > 1L) {
-        val fb = base.filter(col("vec_id") % fitSampleMod === 0)
-        (fb, pqSubExplode(fb, m, subDim))
-      } else (base, subBase)
-    val cents = pqFitCodebooks(fitBase, fitSub, m, subDim, kSub, iters)
-    val codes = pqAssign(subBase, cents)
-      .select(col("vec_id"), col("sub"), col("cid"))
-    val q = base.join(broadcast(queryIds), Seq("vec_id"))
-      .select(col("vec_id").as("query_id"), col("emb").as("q_emb"))
-    // pdot stays a RAW double: the decimal cast inside sumDec is the
-    // one quantization point (the proven centroid-mean pattern). A
-    // per-term round(·,6) here would add 16 extra half-way rounding
-    // decisions per pair, and round() at a boundary is the one
-    // operation Spark (exact-expansion HALF_UP) and DuckDB (scaled
-    // multiply) can disagree on — observed once in 40 960 terms at
-    // sf0.01 before this was removed.
-    val lut = q.crossJoin(broadcast(cents))
-      .select(col("query_id"), col("sub"), col("cid"),
-        graft.functions.ArrayOps.dot_product(
-          slice(col("q_emb"), col("sub") * lit(subDim) + lit(1),
-            lit(subDim)),
-          col("centroid")).as("pdot"))
-    val scored = codes.join(broadcast(lut), Seq("sub", "cid"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .groupBy(col("query_id"), col("vec_id"))
-      .agg(round(graft.queries.QueryUtil.sumDec(col("pdot")), 6)
-        .as("adc_dot"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(desc("adc_dot"), asc("vec_id"))
-    val topk = scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("adc_dot"), col("rank"))
-    val out = topk.localCheckpoint()
-    subBase.unpersist() // no-op under a sampled fit (never persisted)
+    // the residual pass and the probes both read the centroids —
+    // compute them once; without residuals they feed only the probe
+    // broadcast and stay lazy
+    val cent = spec.coarse.map { _ =>
+      if (spec.residual) labelCentroids(base).localCheckpoint()
+      else labelCentroids(base)
+    }
+    val (cents, index, persisted) = pqFitEncode(spec, base, cent)
+    val q = pqQueries(base, queryIds)
+    val probed = cent.map(pqProbed(spec, q, _, base))
+    val out = pqAdcTopK(spec, index, probed, pqLut(spec, q, cents), k)
+      .localCheckpoint()
+    persisted.foreach(_.unpersist())
     base.unpersist()
     out
   }
 
-  /** PQ with VARIANCE-BALANCED subspace assignment — the classic
-    * pre-rotation fix for anisotropic embeddings (the allocation
-    * heuristic OPQ [Ge et al. 2013] initializes from; PCA-permutation
-    * balancing appears in Jégou et al. 2011 §5 as the "structured
-    * ordering" variant): contiguous slicing puts correlated
-    * high-variance dimensions in the SAME codebook, starving the
-    * kSub centroids; ranking dimensions by variance and dealing them
-    * round-robin across the m subspaces equalizes per-subspace
-    * variance, so every codebook spends its centroids on comparable
-    * signal. The true inner product is permutation-invariant, so
-    * ground truth is unchanged — only the quantization error moves.
+  /** (vec_id, `keep`…, emb): the non-NULL corpus as doubles in the
+    * spec's subspace layout. */
+  private def pqBase(spec: PqSpec, embeddings: DataFrame,
+      keep: Seq[String]): DataFrame = {
+    val laid = spec.layout match {
+      case PqLayout.Contiguous => embeddings
+      case PqLayout.VarianceBalanced =>
+        variancePermuted(embeddings, spec.m, spec.dim, keep)
+      case PqLayout.Rotation(rot) => Pca.applyRotation(embeddings, rot, keep)
+    }
+    laid.select(keep.map(col) :+ toDouble(col("embedding")).as("emb"): _*)
+      .filter(col("emb").isNotNull)
+  }
+
+  /** Fit the m codebooks and encode `base` (persisted by the caller):
+    * returns the codebook frame (sub, cid, centroid), the code index
+    * (vec_id, [label,] sub, cid) — label attached when the spec has a
+    * coarse level — and the frames to unpersist once the codes are
+    * consumed.
     *
-    * The permutation derives from ONE narrow corpus pass (per-dim
-    * decimal sums → dim² driver rows — 64 values, the MLlib
-    * local-finish pattern) and is applied as a plan-literal
-    * projection; everything downstream is the unmodified [[pqTopK]]
-    * machinery, so the balanced index inherits its scale shape and
-    * its oracle verifiability (the variance ranking is
-    * SQL-mirrorable: same decimal sums, same (variance DESC, dim)
-    * order). */
-  def pqTopKBalanced(embeddings: DataFrame, queryIds: DataFrame,
-      k: Int, m: Int, kSub: Int, iters: Int, dim: Int = 64)
-      : DataFrame = {
-    val permuted = variancePermuted(embeddings, m, dim,
-      keep = Seq("vec_id"))
-    pqTopK(permuted, queryIds, k, m, kSub, iters, dim)
+    * Storage, MEASURED at the 1000× tier (2M vectors / 32M subspace
+    * rows, BASELINE.md r12 ANN section): under the FULL fit the
+    * subspace frame is read three times (two Lloyd rounds + encode),
+    * so it persists SER (706 s vs 847 s re-exploding; the pressure is
+    * round-trip volume, not object overhead), and so does the
+    * residual frame it derives from. Under a SAMPLED fit both are
+    * consumed exactly once (the encode) and stay lazy — dropping that
+    * single-use persist cut the 1000× build ~2.2× (host-adjusted); the
+    * fit passes re-derive the sample-sized slice (the modulus
+    * filter pushes below the residual join). The coded frame itself
+    * streams into its consumer. */
+  private def pqFitEncode(spec: PqSpec, base: DataFrame,
+      cent: Option[DataFrame]): (DataFrame, DataFrame, Seq[DataFrame]) = {
+    val sampled = spec.fitSampleMod > 1L
+    def multiPass(df: DataFrame): DataFrame =
+      if (sampled) df
+      else df.persist(
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    // residual pass: one broadcast join + element-wise subtraction
+    // (raw doubles; a-b is IEEE-exact so Spark and DuckDB agree)
+    val src = cent.filter(_ => spec.residual).fold(base)(c =>
+      multiPass(base.join(broadcast(c), Seq("label"))
+        .select(col("vec_id"), zip_with(col("emb"), col("centroid"),
+          (a, b) => a - b).as("emb"))))
+    val subBase = multiPass(pqSubExplode(src, spec.m, spec.subDim))
+    val (fitBase, fitSub) =
+      if (sampled) {
+        val fb = src.filter(col("vec_id") % spec.fitSampleMod === 0)
+        (fb, pqSubExplode(fb, spec.m, spec.subDim))
+      } else (src, subBase)
+    val cents = pqFitCodebooks(fitBase, fitSub, spec.m, spec.subDim,
+      spec.kSub, spec.iters)
+    val codes = pqAssign(subBase, cents)
+      .select(col("vec_id"), col("sub"), col("cid"))
+    val index = if (spec.coarse.isEmpty) codes
+      else codes.join(base.select(col("vec_id"), col("label")),
+        Seq("vec_id"))
+    (cents, index, if (src eq base) Seq(subBase) else Seq(subBase, src))
+  }
+
+  /** (query_id, q_emb) for the query ids — queries are never
+    * quantized (the asymmetric-ADC contract). */
+  private def pqQueries(base: DataFrame, queryIds: DataFrame): DataFrame =
+    base.join(broadcast(queryIds), Seq("vec_id"))
+      .select(col("vec_id").as("query_id"), col("emb").as("q_emb"))
+
+  /** (query_id, label[, qc_dot]): each query's probed label
+    * partitions — the top nprobe by rounded cosine to the coarse
+    * centroids, ties to the smaller label; residual specs carry the
+    * raw coarse dot ⟨q,c⟩, the first ADC term, free at probe time.
+    * `corpus` only feeds the selectivity-widened nprobe. */
+  private def pqProbed(spec: PqSpec, q: DataFrame, cent: DataFrame,
+      corpus: => DataFrame): DataFrame = {
+    val c = spec.coarse.get
+    val nprobe =
+      if (c.widenForFilter) autoNprobe(corpus, c.nprobe,
+        spec.filter.get.column)
+      else c.nprobe
+    val qc = if (spec.residual) Seq(graft.functions.ArrayOps.dot_product(
+      col("q_emb"), col("centroid")).as("qc_dot")) else Nil
+    val wq = Window.partitionBy(col("query_id"))
+      .orderBy(desc("c_sim"), asc("label"))
+    q.crossJoin(broadcast(cent))
+      .select(Seq(col("query_id"), col("label"),
+        round(cosine(col("q_emb"), col("centroid")), 6).as("c_sim")) ++
+        qc: _*)
+      .withColumn("prn", row_number().over(wq))
+      .filter(col("prn") <= nprobe)
+      .drop("c_sim", "prn")
+  }
+
+  /** (query_id, sub, cid, pdot): the per-query ADC lookup table. pdot
+    * stays a RAW double: the decimal cast inside sumDec is the one
+    * quantization point (the proven centroid-mean pattern). A per-term
+    * round(·,6) would add m extra half-way rounding decisions per
+    * pair, and round() at a boundary is the one operation Spark
+    * (exact-expansion HALF_UP) and DuckDB (scaled multiply) can
+    * disagree on — observed once in 40 960 terms at sf0.01. */
+  private def pqLut(spec: PqSpec, q: DataFrame, cents: DataFrame)
+      : DataFrame =
+    q.crossJoin(broadcast(cents))
+      .select(col("query_id"), col("sub"), col("cid"),
+        graft.functions.ArrayOps.dot_product(
+          slice(col("q_emb"), col("sub") * lit(spec.subDim) + lit(1),
+            lit(spec.subDim)),
+          col("centroid")).as("pdot"))
+
+  /** ADC score → top-k over a code index: exhaustive when `probed` is
+    * absent, else restricted to each query's probed partitions; the
+    * spec's candidate filter applies to the index first. */
+  private def pqAdcTopK(spec: PqSpec, index: DataFrame,
+      probed: Option[DataFrame], lut: DataFrame, k: Int): DataFrame = {
+    val cand = spec.filter.fold(index)(f => index.filter(f.column))
+    val notSelf = col("vec_id") =!= col("query_id")
+    val pairs = probed match {
+      case None => cand.join(broadcast(lut), Seq("sub", "cid"))
+        .filter(notSelf)
+      case Some(p) => cand.join(broadcast(p), Seq("label")).filter(notSelf)
+        .join(broadcast(lut), Seq("query_id", "sub", "cid"))
+    }
+    val adc = graft.queries.QueryUtil.sumDec(col("pdot"))
+    // qc_dot is constant per (query, candidate): its cell is the
+    // candidate's one label ∩ the query's probed set
+    val scored = pairs.groupBy(col("query_id"), col("vec_id"))
+      .agg(round(if (spec.residual) first(col("qc_dot")) + adc else adc,
+        6).as("adc_dot"))
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(desc("adc_dot"), asc("vec_id"))
+    scored.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(col("query_id"), col("vec_id").as("neighbor_id"),
+        col("adc_dot"), col("rank"))
   }
 
   /** The variance-balancing permutation applied as a plan-literal
-    * projection — ONE definition shared by the balanced PQ and the
-    * residual×balanced composition. Per-dim variance via exact
-    * decimal sums: both engines compute (s2 − s1²/n)/n on identical
-    * doubles, rounded before ranking so a 1-ulp divergence can never
-    * flip the permutation; rank r deals to subspace r % m, slot
-    * r / m. `keep` lists the id columns carried through (the IVF
-    * variants need `label` next to `vec_id`). */
+    * projection. Per-dim variance via exact decimal sums: both
+    * engines compute (s2 − s1²/n)/n on identical doubles, rounded
+    * before ranking so a 1-ulp divergence can never flip the
+    * permutation; rank r deals to subspace r % m, slot r / m. The
+    * permutation derives from ONE narrow corpus pass (dim driver
+    * rows, the MLlib local-finish pattern). `keep` lists the id
+    * columns carried through. */
   private def variancePermuted(embeddings: DataFrame, m: Int,
       dim: Int, keep: Seq[String]): DataFrame = {
-    require(m >= 1 && dim % m == 0, s"dim=$dim must split into m=$m")
     val subDim = dim / m
     val base = embeddings.select(col("vec_id"),
         toDouble(col("embedding")).as("emb"))
@@ -1301,200 +1355,36 @@ object Similarity {
           element_at(col("embedding"), d + 1)): _*).as("embedding"): _*)
   }
 
-  /** Residual IVF-PQ over the variance-balanced subspace layout —
-    * the two orthogonal quantization-error levers composed (OPQ-style
-    * allocation fixes WHICH dimensions share a codebook; residual
-    * encoding fixes WHAT the codebook must represent). The
-    * permutation is applied first as a plan-literal projection (the
-    * true inner product is permutation-invariant, so coarse probing
-    * and ground truth are unchanged up to summation order), then the
-    * unmodified [[ivfTopKPqResidual]] machinery runs on the permuted
-    * corpus — the composition inherits both parents' scale shape and
-    * both parents' oracle fragments (SimilaritySpec pins recall ≥
-    * each parent on the fixtures where each lever matters). */
-  def ivfTopKPqResidualBalanced(embeddings: DataFrame,
-      queryIds: DataFrame, k: Int, nprobe: Int, m: Int, kSub: Int,
-      iters: Int, dim: Int = 64): DataFrame = {
-    val permuted = variancePermuted(embeddings, m, dim,
-      keep = Seq("vec_id", "label"))
-    ivfTopKPqResidual(permuted, queryIds, k, nprobe, m, kSub, iters,
-      dim)
-  }
-
-  /** IVF × PQ — the canonical production ANN composition (IVF-PQ,
-    * Jégou et al. 2011; what FAISS/SCaNN-class systems deploy at
-    * billion-vector scale): [[ivfTopK]]'s per-label coarse quantizer
-    * prunes the corpus to `nprobe` label partitions per query, and
-    * fine ranking inside the probed partitions runs entirely on the
-    * [[pqTopK]] code index — candidates are scored by summing m
-    * broadcast-LUT entries, never re-reading raw vectors. Codebooks
-    * are fitted on the full vectors (non-residual IVF-PQ — the
-    * residual variant quantizes `v − centroid(v)` for tighter error
-    * at the same code size, but couples the two fits; the simpler
-    * composition keeps both levels independently oracle-verifiable).
+  /** Materialize the STORED IVF-PQ index of `spec` — what a 100 TB
+    * deployment keeps between corpus snapshots (the ANN sibling of
+    * [[graft.ext.Retrieval.buildPhraseIndex]]). Layout v2, two
+    * artifacts:
     *
-    * The coded index frame (vec_id, label, m codes) is materialized
-    * once — in production that IS the stored ANN index (codes live
-    * next to the partition key; at kSub ≤ 256, m bytes + a label per
-    * vector), and queries touch raw doubles only for their own
-    * embeddings. Work per query: k_clusters coarse dots + nprobe·|C|/
-    * k_clusters LUT-sum candidates — corpus-linear at fixed |Q|, with
-    * the PQ constant ~32× smaller than the raw-vector IVF scan. */
-  /** `fitSampleMod` > 1 trains all m codebooks on the deterministic
-    * `vec_id % fitSampleMod == 0` sample (the [[pqTopK]] production
-    * fit lever, measured at the 1000× tier: the full-corpus fit pays
-    * THREE subspace-assign passes over the persisted 32M-row
-    * subspace frame — two Lloyd iterations + the encode — and at 2M
-    * vectors that frame's MEMORY_AND_DISK footprint round-trips to
-    * disk; sampling bounds the two fit passes, the corpus pays
-    * exactly one encode). SQL-mirrorable, so hash-verified. */
-  /** `candidateFilter` composes the metadata-filtered search
-    * ([[ivfTopKFiltered]]'s pre-filter form) with the CODED index —
-    * what a filtered query actually runs on a 100 TB corpus, where
-    * fine ranking must stay on the m-byte codes, never raw vectors:
-    * the index (codes + label + vec_id, carrying whatever metadata
-    * the deployment stores beside the codes) is filtered BEFORE the
-    * probed-partition join, i.e. a pushed column predicate on the
-    * partition-pruned index read — candidates are restricted, the
-    * stored index and the codebooks are filter-agnostic (centroids
-    * and fits always derive from the full corpus; a per-filter refit
-    * would be absurd at production churn). Callers widen nprobe ∝
-    * 1/selectivity, the documented filtered-search recall lever. */
-  def ivfTopKPq(embeddings: DataFrame, queryIds: DataFrame, k: Int,
-      nprobe: Int, m: Int, kSub: Int, iters: Int, dim: Int = 64,
-      fitSampleMod: Long = 1L,
-      candidateFilter: Option[Column] = None)
-      : DataFrame = {
-    require(m >= 1 && dim % m == 0, s"dim=$dim must split into m=$m")
-    require(fitSampleMod >= 1L, "fitSampleMod must be >= 1")
-    val subDim = dim / m
-    val base = embeddings.select(col("vec_id"), col("label"),
-        toDouble(col("embedding")).as("emb"))
-      .filter(col("emb").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // coarse level: exact decimal-mean per-label centroids (the
-    // ivfTopK frame, unrounded — see kmeansCentroids' portability
-    // note), probed with raw-double cosine
-    val cent = labelCentroids(base)
-    // fine level: the pqTopK codebooks + code index (batched fit —
-    // one Lloyd job chain for all m subspaces), label attached via
-    // one (vec_id)-keyed join of two narrow frames, materialized once
-    // as "the stored index"
-    // same storage rule as pqTopK: SER-persist the subspace frame
-    // for the 3-pass full fit, skip the persist when the sampled fit
-    // leaves it single-use (both measured, see pqTopK). The coded
-    // frame itself STREAMS into the probed join — in this query path
-    // it is consumed exactly once, so the r11 eager localCheckpoint
-    // materialized 32M rows to executor storage for nothing (in
-    // production the deployment writes it out as the stored index;
-    // that is a sink decision, not a query-path cost).
-    val subBaseLazy = pqSubExplode(base, m, subDim)
-    val subBase =
-      if (fitSampleMod > 1L) subBaseLazy
-      else subBaseLazy.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    val (fitBase, fitSub) =
-      if (fitSampleMod > 1L) {
-        val fb = base.filter(col("vec_id") % fitSampleMod === 0)
-        (fb, pqSubExplode(fb, m, subDim))
-      } else (base, subBase)
-    val cents = pqFitCodebooks(fitBase, fitSub, m, subDim, kSub, iters)
-    val index = pqAssign(subBase, cents)
-      .select(col("vec_id"), col("sub"), col("cid"))
-      .join(base.select(col("vec_id"), col("label")), Seq("vec_id"))
-    val q = base.join(broadcast(queryIds), Seq("vec_id"))
-      .select(col("vec_id").as("query_id"), col("emb").as("q_emb"))
-    val probes = q.crossJoin(broadcast(cent))
-      .select(col("query_id"), col("label"),
-        round(cosine(col("q_emb"), col("centroid")), 6).as("c_sim"))
-    val wq = Window.partitionBy(col("query_id"))
-      .orderBy(desc("c_sim"), asc("label"))
-    val probed = probes.withColumn("prn", row_number().over(wq))
-      .filter(col("prn") <= nprobe)
-      .select(col("query_id"), col("label"))
-    // raw pdots; the sumDec decimal cast is the one quantization
-    // point (same rationale as pqTopK)
-    val lut = q.crossJoin(broadcast(cents))
-      .select(col("query_id"), col("sub"), col("cid"),
-        graft.functions.ArrayOps.dot_product(
-          slice(col("q_emb"), col("sub") * lit(subDim) + lit(1),
-            lit(subDim)),
-          col("centroid")).as("pdot"))
-    // pre-filter ON THE CODE INDEX, before the probed-partition join:
-    // candidates shrink at the index scan, scores stay pure ADC
-    val cand = candidateFilter.map(index.filter).getOrElse(index)
-    val scored = cand.join(broadcast(probed), Seq("label"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .join(broadcast(lut), Seq("query_id", "sub", "cid"))
-      .groupBy(col("query_id"), col("vec_id"))
-      .agg(round(graft.queries.QueryUtil.sumDec(col("pdot")), 6)
-        .as("adc_dot"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(desc("adc_dot"), asc("vec_id"))
-    val topk = scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("adc_dot"), col("rank"))
-    val out = topk.localCheckpoint()
-    subBase.unpersist() // no-op under a sampled fit (never persisted)
-    base.unpersist()
-    out
-  }
-
-  /** Materialize the STORED IVF-PQ index — the ANN sibling of
-    * [[graft.ext.Retrieval.buildPhraseIndex]], closing the persisted-
-    * layout family (phrase postings, BFS adjacency, MV store, z-order
-    * all have one; the coded ANN index is what a 100 TB deployment
-    * actually keeps between corpus snapshots). Two artifacts
-    * (layout v2, round 16 — the v1 layout wrote coarse and codebooks
-    * as separate dirs, paying a parquet commit cycle each for two
-    * vocab-sized tables every build):
-    *
-    *  - `$dir/codes` — (vec_id, sub, cid) PARTITIONED BY label: m
-    *    small codes per vector, laid out so a probe's label set is a
-    *    planning-time partition filter (the phrase-index bucket rule
-    *    with the coarse quantizer's own key — probes are label
-    *    lookups, there is no range to cluster);
-    *  - `$dir/meta` — the two vocab-sized fit tables packed into ONE
+    *  - `$dir/codes` — (vec_id, sub, cid) PARTITIONED BY label, so a
+    *    probe's label set is a planning-time partition filter;
+    *  - `$dir/meta` — the two vocab-sized fit tables in ONE
     *    kind-discriminated file: `coarse` rows carry the per-label
-    *    exact decimal-mean centroids (O(labels)), `codebooks` rows
-    *    all m fitted sub-codebooks (m·kSub). One commit cycle, one
-    *    read per serve ([[pqIndexProbe]] / [[appendToPqIndex]]
-    *    collect it once driver-side — it is bounded by contract).
+    *    centroids (O(labels)), `codebooks` rows the m·kSub fitted
+    *    sub-centroids. One commit cycle, one read per serve.
     *
-    * Fit/encode are EXACTLY [[ivfTopKPq]]'s (shared helpers), with
-    * the production `fitSampleMod` lever; parquet round-trips doubles
-    * bit-exactly, so serving from the layout can never change
-    * results — SimilaritySpec pins probe ≡ ivfTopKPq equality and the
-    * partition pruning. Build cost is the index-build price, one
-    * corpus scan + one encode projection, amortized across every
-    * probe on the snapshot. */
-  def buildPqIndex(embeddings: DataFrame, dir: String, m: Int,
-      kSub: Int, iters: Int, dim: Int = 64,
-      fitSampleMod: Long = 1L): Unit = {
-    require(m >= 1 && dim % m == 0, s"dim=$dim must split into m=$m")
-    val subDim = dim / m
-    val base = embeddings.select(col("vec_id"), col("label"),
-        toDouble(col("embedding")).as("emb"))
-      .filter(col("emb").isNotNull)
+    * Fit/encode are [[pqSearch]]'s (shared helpers); parquet
+    * round-trips doubles bit-exactly, so serving from the layout can
+    * never change results — SimilaritySpec pins probe ≡ pqSearch and
+    * the partition pruning. Overwrites `dir`, including the
+    * `coarse`/`codebooks` dirs a v1 layout left there. */
+  def buildPqIndex(spec: PqSpec, embeddings: DataFrame, dir: String)
+      : Unit = {
+    requireStorable(spec)
+    val base = pqBase(spec, embeddings, Seq("vec_id", "label"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the ivfTopKPq storage rule: SER-persist the subspace frame only
-    // when the full fit makes it multi-pass (it then also serves the
-    // encode); a sampled fit leaves the corpus explode single-use
-    val subBase = pqSubExplode(base, m, subDim)
-    val (fitBase, fitSub, persisted) =
-      if (fitSampleMod > 1L) {
-        val fb = base.filter(col("vec_id") % fitSampleMod === 0)
-        (fb, pqSubExplode(fb, m, subDim), None)
-      } else {
-        val sb = subBase.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-        (base, sb, Some(sb))
-      }
-    val cents = pqFitCodebooks(fitBase, fitSub, m, subDim, kSub, iters)
-    // coarse + codebooks ride one union into one commit cycle; label
-    // is normalized to LONG at write time (the probe normalized the
-    // partition-dir type the same way in v1, so joins stay exact)
+    val (cents, index, persisted) = pqFitEncode(spec, base, None)
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(base.sparkSession.sparkContext.hadoopConfiguration)
+    PqIndexV1Dirs.foreach(d =>
+      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/$d"), true))
+    // label is normalized to LONG at write time: the partition
+    // directory re-infers its own numeric type, so one explicit width
+    // keeps the probe's joins exact
     labelCentroids(base)
       .select(lit("coarse").as("kind"),
         col("label").cast("long").as("label"),
@@ -1505,25 +1395,45 @@ object Similarity {
         col("centroid")))
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/meta")
-    pqAssign(persisted.getOrElse(subBase), cents)
-      .select(col("vec_id"), col("sub"), col("cid"))
-      .join(base.select(col("vec_id"), col("label")), Seq("vec_id"))
-      .repartition(col("label")) // one writer task per partition dir
-      .write.mode("overwrite").partitionBy("label")
-      .parquet(s"$dir/codes")
+    writePqCodes(index, "overwrite", dir)
     persisted.foreach(_.unpersist())
     base.unpersist(): Unit
   }
+
+  /** The v1 layout's separate fit dirs (replaced by `meta` in v2). */
+  private val PqIndexV1Dirs = Seq("coarse", "codebooks")
+
+  /** The stored layout holds plain codes of the raw coordinates. */
+  private def requireStorable(spec: PqSpec): Unit =
+    require(spec.coarse.isDefined && !spec.residual &&
+      spec.layout == PqLayout.Contiguous,
+      "the stored PQ index holds contiguous non-residual IVF-PQ codes")
+
+  /** One writer task per label partition dir. */
+  private def writePqCodes(index: DataFrame, mode: String, dir: String)
+      : Unit =
+    index.repartition(col("label"))
+      .write.mode(mode).partitionBy("label").parquet(s"$dir/codes")
 
   /** ONE read of a [[buildPqIndex]] layout's `meta` artifact,
     * collected driver-side (bounded: O(labels) + m·kSub rows by the
     * layout contract) and split back into its two tables as
     * LocalRelations — every downstream broadcast/collect of either
     * table is then job-free. Returns (coarse (label, centroid),
-    * codebooks (sub, cid, centroid), m). */
+    * codebooks (sub, cid, centroid)); fails loudly on a v1 layout, a
+    * meta without codebooks, or a codebook count that is not
+    * `spec.m`. */
   private def readPqIndexMeta(spark: org.apache.spark.sql.SparkSession,
-      dir: String): (DataFrame, DataFrame, Int) = {
+      dir: String, spec: PqSpec): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.types._
+    requireStorable(spec)
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def has(d: String) = fs.exists(new org.apache.hadoop.fs.Path(s"$dir/$d"))
+    if (!has("meta") && PqIndexV1Dirs.exists(has))
+      throw new IllegalStateException(s"$dir holds a v1 PQ index " +
+        "layout (coarse/codebooks dirs, no meta) — rebuild required: " +
+        "run buildPqIndex on it")
     val df = spark.read.parquet(s"$dir/meta")
     val rows = df.collect()
     val iKind = df.schema.fieldIndex("kind")
@@ -1539,6 +1449,10 @@ object Similarity {
       StructType(Seq(StructField("label", LongType),
         StructField("centroid", centType))))
     val cbRows = rows.filter(_.getString(iKind) == "codebooks")
+    require(cbRows.nonEmpty, s"$dir/meta holds no codebooks rows — " +
+      "corrupt PQ index meta, rebuild the index")
+    val m = cbRows.map(_.getInt(iSub)).max + 1
+    require(m == spec.m, s"$dir holds m=$m codebooks, spec has m=${spec.m}")
     val cents = spark.createDataFrame(
       java.util.Arrays.asList(cbRows
         .map(r => org.apache.spark.sql.Row(r.getInt(iSub),
@@ -1546,35 +1460,25 @@ object Similarity {
       StructType(Seq(StructField("sub", IntegerType),
         StructField("cid", IntegerType),
         StructField("centroid", centType))))
-    val m = cbRows.map(_.getInt(iSub)).max + 1
-    (coarse, cents, m)
+    (coarse, cents)
   }
 
   /** Append a batch to a [[buildPqIndex]] layout WITHOUT refit — the
-    * FAISS `add` path on the stored index, the coded sibling of
-    * [[ivfIncremental]]'s no-refit contract: the batch is encoded
-    * with the STORED codebooks ([[pqAssign]]'s projection over the
-    * collected ≤ m·kSub rows) and its codes land as an APPEND into
-    * the label-partitioned codes layout — existing code files are
-    * never rewritten, the coarse centroids and codebooks never move,
-    * and a probe sees old and new vectors through the identical ADC
-    * machinery. Encode cost is one narrow projection pass over the
-    * batch (m·kSub candidate l2s per row); the append writes only the
-    * batch's partitions. Production appends bounded batches between
-    * refit cycles exactly like this; quantizer drift across many
-    * appends is the documented trigger for the next [[buildPqIndex]]
-    * refit. AppendSpec pins: manifest codes bit-identical pre/post
-    * append, and split-appends compose to the one-shot append. */
+    * FAISS `add` path on the stored index: the batch is encoded with
+    * the STORED codebooks and its codes land as an APPEND into the
+    * label-partitioned codes — existing code files are never
+    * rewritten, the coarse centroids and codebooks never move, and a
+    * probe sees old and new vectors through the identical ADC
+    * machinery. Quantizer drift across many appends is the trigger
+    * for the next [[buildPqIndex]] refit. AppendSpec pins: manifest
+    * codes bit-identical pre/post append, and split-appends compose
+    * to the one-shot append. */
   def appendToPqIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String, batch: DataFrame, dim: Int = 64): Unit = {
-    // one meta read serves m, the known-label check AND the frozen
-    // codebooks (v1 read the codebooks artifact twice and coarse once
-    // — three read jobs for two bounded tables)
-    val (coarse, cents, m) = readPqIndexMeta(spark, dir)
-    val subDim = dim / m
-    val base = batch.select(col("vec_id"), col("label"),
-        toDouble(col("embedding")).as("emb"))
-      .filter(col("emb").isNotNull)
+      dir: String, spec: PqSpec, batch: DataFrame): Unit = {
+    // one meta read serves the known-label check AND the frozen
+    // codebooks
+    val (coarse, cents) = readPqIndexMeta(spark, dir, spec)
+    val base = pqBase(spec, batch, Seq("vec_id", "label"))
     // a label the stored coarse centroids don't know would land in a
     // partition NO probe ever selects — silently unreachable rows.
     // New labels are the refit trigger, not an append; fail loudly.
@@ -1585,88 +1489,44 @@ object Similarity {
       s"batch carries labels absent from the stored coarse index " +
         s"(${novel.mkString(",")}) — appending them would create " +
         "unreachable partitions; rebuild the index instead")
-    pqAssign(pqSubExplode(base, m, subDim), cents)
+    writePqCodes(pqAssign(pqSubExplode(base, spec.m, spec.subDim), cents)
       .select(col("vec_id"), col("sub"), col("cid"))
-      .join(base.select(col("vec_id"), col("label")), Seq("vec_id"))
-      .repartition(col("label"))
-      .write.mode("append").partitionBy("label")
-      .parquet(s"$dir/codes")
+      .join(base.select(col("vec_id"), col("label")), Seq("vec_id")),
+      "append", dir)
   }
 
   /** Probe served from a [[buildPqIndex]] layout: the query vectors
-    * score the O(labels) stored coarse centroids, the |Q|·nprobe
-    * probed set collects driver-side (bounded by the fixed-|Q|
-    * contract — the phraseIndexProbe rule), its label set becomes a
-    * PLANNING-time partition filter on the codes read, and fine
-    * ranking is the usual broadcast-LUT ADC sum over the pruned
-    * partitions — no raw corpus vectors, no fit, no
-    * corpus-proportional probe state. `embeddings` supplies only the
-    * |Q| query rows (queries are never quantized — the asymmetric-ADC
-    * contract). Results are bit-identical to [[ivfTopKPq]] at the
-    * same parameters: parquet preserves the fit's doubles exactly and
-    * every downstream expression is shared. */
+    * score the stored coarse centroids, the |Q|·nprobe probed set
+    * collects driver-side (bounded by the fixed-|Q| contract — the
+    * phraseIndexProbe rule), its label set becomes a PLANNING-time
+    * partition filter on the codes read, and fine ranking is
+    * [[pqSearch]]'s ADC over the pruned partitions — no raw corpus
+    * vectors, no fit, no corpus-proportional probe state.
+    * `embeddings` supplies the |Q| query rows (and, for a widened
+    * nprobe, the corpus the filter's selectivity is measured on).
+    * Results are bit-identical to [[pqSearch]] at the same spec. */
   def pqIndexProbe(spark: org.apache.spark.sql.SparkSession,
-      dir: String, embeddings: DataFrame, queryIds: DataFrame, k: Int,
-      nprobe: Int, dim: Int = 64): DataFrame = {
-    // one meta read serves m and both fit tables (v1 launched three
-    // parquet read jobs); the LocalRelations broadcast job-free below
-    val (cent, cents, m) = readPqIndexMeta(spark, dir)
-    val subDim = dim / m
-    val q = embeddings.select(col("vec_id"),
-        toDouble(col("embedding")).as("emb"))
-      .filter(col("emb").isNotNull)
-      .join(broadcast(queryIds), Seq("vec_id"))
-      .select(col("vec_id").as("query_id"), col("emb").as("q_emb"))
-    // label normalized to LONG inside the probe: the source schema
-    // may carry int labels and the partition directory re-infers its
-    // own numeric type — one explicit width everywhere keeps the
-    // joins exact regardless (meta stores label as long already; the
-    // cast below is then a no-op)
-    val probes = q.crossJoin(broadcast(cent))
-      .select(col("query_id"), col("label").cast("long").as("label"),
-        round(cosine(col("q_emb"), col("centroid")), 6).as("c_sim"))
-    val wq = Window.partitionBy(col("query_id"))
-      .orderBy(desc("c_sim"), asc("label"))
-    // |Q|·nprobe rows by contract → driver-side, labels become the
-    // partition filter (the phraseIndexProbe planning-time prune)
-    val probedRows = probes.withColumn("prn", row_number().over(wq))
-      .filter(col("prn") <= nprobe)
-      .select(col("query_id"), col("label"))
-      .collect()
-    val labels = probedRows.map(_.getLong(1)).distinct.toSeq
+      dir: String, spec: PqSpec, embeddings: DataFrame,
+      queryIds: DataFrame, k: Int): DataFrame = {
+    val (cent, cents) = readPqIndexMeta(spark, dir, spec)
+    val q = pqQueries(pqBase(spec, embeddings, Seq("vec_id")), queryIds)
+    val probedRows = pqProbed(spec, q, cent,
+      embeddings.filter(col("embedding").isNotNull)).collect()
     import spark.implicits._
     val probed = probedRows.map(r => (r.getLong(0), r.getLong(1)))
       .toSeq.toDF("query_id", "label")
     // filter BEFORE the cast so the isin stays a partition filter;
     // the directory-inferred partition type then normalizes to long
     val codes = spark.read.parquet(s"$dir/codes")
-      .filter(col("label").isin(labels: _*))
+      .filter(col("label").isin(probedRows.map(_.getLong(1)).distinct
+        .toSeq: _*))
       .withColumn("label", col("label").cast("long"))
-    val lut = q.crossJoin(broadcast(cents))
-      .select(col("query_id"), col("sub"), col("cid"),
-        graft.functions.ArrayOps.dot_product(
-          slice(col("q_emb"), col("sub") * lit(subDim) + lit(1),
-            lit(subDim)),
-          col("centroid")).as("pdot"))
-    val scored = codes.join(broadcast(probed), Seq("label"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .join(broadcast(lut), Seq("query_id", "sub", "cid"))
-      .groupBy(col("query_id"), col("vec_id"))
-      .agg(round(graft.queries.QueryUtil.sumDec(col("pdot")), 6)
-        .as("adc_dot"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(desc("adc_dot"), asc("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("adc_dot"), col("rank"))
+    pqAdcTopK(spec, codes, Some(probed), pqLut(spec, q, cents), k)
   }
 
   /** The per-label exact decimal-mean coarse centroid frame — ONE
-    * definition shared by [[ivfTopKPq]], [[ivfTopKPqResidual]] and
-    * [[buildPqIndex]] (the three were identical inline copies before
-    * r12; a drift here would desynchronize the stored index from the
-    * inline composition). */
+    * definition shared by every coarse level (a drift here would
+    * desynchronize the stored index from the inline composition). */
   private def labelCentroids(base: DataFrame): DataFrame = base
     .select(col("label"), posexplode(col("emb")).as(Seq("dim", "v")))
     .groupBy(col("label"), col("dim"))
@@ -1676,130 +1536,6 @@ object Similarity {
     .agg(transform(
       array_sort(collect_list(struct(col("dim"), col("cv")))),
       x => x("cv")).as("centroid"))
-
-  /** RESIDUAL IVF-PQ — the production FAISS form of [[ivfTopKPq]]:
-    * each vector is PQ-encoded not on its raw coordinates but on its
-    * residual `r = v − c(v)` against its assigned coarse centroid.
-    * Residuals concentrate near the origin (the coarse quantizer has
-    * already explained the between-cell variance), so the same m×kSub
-    * code budget spends its centroids on a tighter distribution —
-    * better reconstruction, better recall at equal bits. The ADC
-    * score decomposes exactly: `⟨q,v⟩ ≈ ⟨q,c(v)⟩ + ⟨q,r̂⟩`, where the
-    * first term is one raw dot per (query, probed cell) — already
-    * computed while probing — and the second is the usual m-entry
-    * LUT sum over the residual codebooks.
-    *
-    * Distributed shape is [[ivfTopKPq]]'s with one extra narrow pass:
-    * the residual frame is a broadcast join of the corpus against the
-    * O(cells) centroid table followed by an element-wise `zip_with`
-    * subtraction — no shuffle, IEEE-exact, and SQL-mirrorable, so the
-    * coupled two-level fit (coarse means → residuals → all m Lloyd
-    * fits) stays hash-verifiable end to end. Costs vs non-residual:
-    * the LUT must be per (query, cell) in full generality; with the
-    * single shared codebook set fitted on residuals (the standard
-    * IVF-PQ simplification, FAISS's default) the LUT stays per-query
-    * and the only extra per-candidate work is adding the coarse term.
-    *
-    * `fitSampleMod` > 1 trains all m residual codebooks on the
-    * deterministic `vec_id % fitSampleMod == 0` sample — the
-    * [[ivfTopKPq]] production fit lever composed THROUGH the coupled
-    * two-level fit: coarse means stay full-corpus (one cheap decimal
-    * aggregate, and the family's rule — the encode must subtract the
-    * centroids every stored vector will subtract), the sampled
-    * residuals feed seeds + both Lloyd rounds, and the full corpus
-    * still pays exactly one encode projection. */
-  def ivfTopKPqResidual(embeddings: DataFrame, queryIds: DataFrame,
-      k: Int, nprobe: Int, m: Int, kSub: Int, iters: Int,
-      dim: Int = 64, fitSampleMod: Long = 1L): DataFrame = {
-    require(m >= 1 && dim % m == 0, s"dim=$dim must split into m=$m")
-    require(fitSampleMod >= 1L, "fitSampleMod must be >= 1")
-    val subDim = dim / m
-    val base = embeddings.select(col("vec_id"), col("label"),
-        toDouble(col("embedding")).as("emb"))
-      .filter(col("emb").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // coarse level: identical frame to ivfTopKPq (the shared
-    // labelCentroids helper)
-    val cent = labelCentroids(base)
-      .localCheckpoint() // feeds residuals AND probes — compute once
-    // residual pass: one broadcast join + element-wise subtraction
-    // (raw doubles; a-b is IEEE-exact so Spark and DuckDB agree)
-    // the residual BASE (corpus-sized vectors, same footprint class
-    // as `base`) persists — it feeds the seeds and every subspace
-    // re-explode; the 16×-larger SUBSPACE frame does not (re-explode
-    // from the cached rbase per pass — the r12 1000× finding, see
-    // pqTopK)
-    // Storage follows the ivfTopKPq rule, extended to the residual
-    // frame: under the FULL fit, rbase persists SER (it feeds the
-    // seeds and every subspace re-explode) and so does the 3-pass
-    // subspace frame; under a SAMPLED fit both become single-use —
-    // the fit passes re-derive the sample-sized residual slice from
-    // the cached base (the modulus filter pushes below the broadcast
-    // join), and the full corpus streams through its one encode. The
-    // coded frame streams into the probed join in both regimes.
-    val rbaseLazy = base.join(broadcast(cent), Seq("label"))
-      .select(col("vec_id"),
-        zip_with(col("emb"), col("centroid"), (a, b) => a - b).as("emb"))
-    val rbase =
-      if (fitSampleMod > 1L) rbaseLazy
-      else rbaseLazy.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    val subResLazy = pqSubExplode(rbase, m, subDim)
-    val subRes =
-      if (fitSampleMod > 1L) subResLazy
-      else subResLazy.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    val (fitRes, fitSub) =
-      if (fitSampleMod > 1L) {
-        val fb = rbaseLazy.filter(col("vec_id") % fitSampleMod === 0)
-        (fb, pqSubExplode(fb, m, subDim))
-      } else (rbase, subRes)
-    val cents = pqFitCodebooks(fitRes, fitSub, m, subDim, kSub, iters)
-    val index = pqAssign(subRes, cents)
-      .select(col("vec_id"), col("sub"), col("cid"))
-      .join(base.select(col("vec_id"), col("label")), Seq("vec_id"))
-    val q = base.join(broadcast(queryIds), Seq("vec_id"))
-      .select(col("vec_id").as("query_id"), col("emb").as("q_emb"))
-    // probes carry BOTH the ranking cosine and the raw coarse dot
-    // ⟨q,c⟩ — the first ADC term, free at probe time
-    val probes = q.crossJoin(broadcast(cent))
-      .select(col("query_id"), col("label"),
-        round(cosine(col("q_emb"), col("centroid")), 6).as("c_sim"),
-        graft.functions.ArrayOps.dot_product(col("q_emb"),
-          col("centroid")).as("qc_dot"))
-    val wq = Window.partitionBy(col("query_id"))
-      .orderBy(desc("c_sim"), asc("label"))
-    val probed = probes.withColumn("prn", row_number().over(wq))
-      .filter(col("prn") <= nprobe)
-      .select(col("query_id"), col("label"), col("qc_dot"))
-    // LUT over the RESIDUAL codebooks; pdots raw, sumDec is the one
-    // quantization point (same rationale as pqTopK)
-    val lut = q.crossJoin(broadcast(cents))
-      .select(col("query_id"), col("sub"), col("cid"),
-        graft.functions.ArrayOps.dot_product(
-          slice(col("q_emb"), col("sub") * lit(subDim) + lit(1),
-            lit(subDim)),
-          col("centroid")).as("pdot"))
-    val scored = index.join(broadcast(probed), Seq("label"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .join(broadcast(lut), Seq("query_id", "sub", "cid"))
-      .groupBy(col("query_id"), col("vec_id"))
-      // qc_dot is constant per (query, candidate): its cell is the
-      // candidate's one label ∩ the query's probed set
-      .agg(round(first(col("qc_dot")) +
-        graft.queries.QueryUtil.sumDec(col("pdot")), 6).as("adc_dot"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(desc("adc_dot"), asc("vec_id"))
-    val topk = scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("adc_dot"), col("rank"))
-    val out = topk.localCheckpoint()
-    subRes.unpersist()
-    rbase.unpersist()
-    base.unpersist()
-    out
-  }
 
   /** [[ivfTopK]] with a real (deterministic) k-means coarse quantizer
     * instead of the `label` column: fit `kClusters` centroids with
@@ -1893,7 +1629,7 @@ object Similarity {
     * amortized across every batch until the next refit (the FAISS
     * train+add path). `fitSampleMod` > 1 bounds that build the way
     * production actually does (FAISS trains quantizers on a sample,
-    * same shape as [[pqTopK]]'s `fitSampleMod`): seeds and every
+    * same shape as [[PqSpec]]'s `fitSampleMod`): seeds and every
     * Lloyd pass run on the deterministic `vec_id % mod = 0` sample
     * while the FULL manifest is still assigned to partitions — build
     * drops to O(N·k/mod) + one full assignment, and the modulus
@@ -2427,7 +2163,7 @@ object Similarity {
     *
     * `fitSampleMod` > 1 trains the k-means on the DETERMINISTIC
     * `vec_id % fitSampleMod == 0` sample (seeds and every Lloyd pass
-    * — the [[pqTopK]]/[[ivfIndexBuild]] production bound; FAISS
+    * — the [[PqSpec]]/[[ivfIndexBuild]] production bound; FAISS
     * trains quantizers on a sample) while the FULL corpus is still
     * assigned and pair-pruned: the fit drops from O(N·k·iters) to
     * O(N·k·iters/mod) and the modulus stays SQL-mirrorable. Dedup

@@ -35,6 +35,23 @@ object QueryUtil {
   def sqlAvgDec(e: String): String =
     s"round(${sqlSumDec(e)} / count(*), 6)"
 
+  /** SQL fragment mirroring `round(Similarity.cosine(a, b), 6)`. */
+  def sqlCosine(a: String, b: String): String =
+    s"round(list_dot_product($a, $b) / " +
+    s"(sqrt(list_dot_product($a, $a)) * " +
+    s"sqrt(list_dot_product($b, $b))), 6)"
+
+  /** `qids` CTE mirroring `Similarity.sampleQueryIds(base, 16)` over a
+    * `base` CTE. The inner `(x % m + m) % m` spells Spark's pmod in
+    * sign-preserving SQL `%` — without it a negative BIGINT vec_id
+    * would order by a negative residue here while Spark orders by the
+    * non-negative pmod, silently selecting different query samples in
+    * the two engines. */
+  def qidsSql: String =
+    """qids AS (SELECT vec_id FROM base
+      |  ORDER BY ((((vec_id % 2147483647) + 2147483647) % 2147483647) * 48271) % 2147483647, vec_id
+      |  LIMIT 16)""".stripMargin
+
   /** Recursive temp-layout reclamation — the ONE definition shared by
     * every entry/probe that materializes a run-scoped directory
     * (MV stores, phrase indexes, z-order layouts). Call sites wrap it

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.ext.{Dedup, Similarity, TextStats}
+import graft.ext.{Dedup, PqCoarse, PqFilter, PqLayout, PqSpec, Similarity,
+  TextStats}
 import QueryUtil._
 
 /** Training-data pipeline operators over `documents` / `embeddings`:
@@ -1184,18 +1185,6 @@ object TrainingData {
        |    sqrt(list_dot_product(qv, qv)) AS qn FROM qz)
        |  WHERE qn > 0)""".stripMargin
 
-  // The inner `(x % m + m) % m` spells Spark's pmod in sign-preserving
-  // SQL `%` — without it a negative BIGINT vec_id would order by a
-  // negative residue here while Spark orders by the non-negative pmod,
-  // silently selecting different query samples in the two engines.
-  // `def`, not `val`: referenced from oracle-SQL builders that may sit
-  // ABOVE this line in declaration order (a val would interpolate as
-  // "null" there — object vals initialize strictly top-to-bottom)
-  private def qidsSql =
-    """qids AS (SELECT vec_id FROM base
-      |  ORDER BY ((((vec_id % 2147483647) + 2147483647) % 2147483647) * 48271) % 2147483647, vec_id
-      |  LIMIT 16)""".stripMargin
-
   private val sAnnInt8Sql =
     s"""WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS emb
        |  FROM embeddings WHERE embedding IS NOT NULL),
@@ -1324,11 +1313,6 @@ object TrainingData {
         k = 5, numPlanes = 4, seed = 42L, dim = 64)
       .orderBy("query_id", "rank")
   }
-
-  private def sqlCosine(a: String, b: String): String =
-    s"round(list_dot_product($a, $b) / " +
-    s"(sqrt(list_dot_product($a, $a)) * " +
-    s"sqrt(list_dot_product($b, $b))), 6)"
 
   private val sAnnLshSql = {
     val planes = Similarity.hyperplanes(numPlanes = 4, dim = 64,
@@ -1843,210 +1827,156 @@ object TrainingData {
        |SELECT query_id, neighbor_id, cos_sim, rank FROM ranked
        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
 
-  /** Product-quantization ANN ([[Similarity.pqTopK]]): 64 dims → 16
-    * subspaces × 4 dims, one deterministic L2 codebook (32 centroids,
-    * 2 Lloyd iterations) per subspace, corpus encoded to 16 codes per
-    * vector, asymmetric-distance scoring for the fixed |Q| = 16 query
-    * sample. The whole index — sixteen k-means fits, the code
-    * assignment, the per-query lookup tables, the summed ADC scores —
-    * is hash-verified against an oracle that unrolls every subspace
-    * fit. Complements the int8 entries: scalar quantization
-    * compresses bandwidth ~7×; PQ compresses the scan state 32× (16
-    * code bytes vs 512 raw bytes) and replaces per-pair arithmetic
-    * with table lookups — the memory layout a 100-TB corpus scan
-    * actually ships. Parameter sweep on this corpus (uniform-random
-    * embeddings — PQ's worst case, no cluster structure to exploit):
-    * recall@5 vs brute = 0.16 (m=4,k=8), 0.29 (8,16), 0.54 (16,32),
-    * 0.65 (16,64); the catalog pins (16,32) as the cost/recall
-    * balance and SimilaritySpec bounds both this corpus's recall and
-    * exactness on a separable fixture. */
-  def sAnnPq(s: SparkSession, d: String): DataFrame = {
+  /** One PQ catalog row: the [[PqSpec]] plus how the entry runs it.
+    *
+    *  - `trainOpq` — the OPQ rotation ([[graft.ext.Pca.opqRotation]],
+    *    Ge et al. 2013's parametric form: full Jacobi eigenbasis +
+    *    greedy eigenvalue allocation across the subspaces) is trained
+    *    at run time from the covariance integers `d_embed_cov`
+    *    hash-verifies, and runs as the spec's `Rotation` layout; the
+    *    rotation is a pure local function of those integers (PcaSpec
+    *    pins its invariants) and the oracle replays the same literals,
+    *    dumped after the query runs ([[dynamicOracle]]);
+    *  - `stored` — served from the persisted index, built and
+    *    reclaimed per run ([[Similarity.buildPqIndex]] /
+    *    [[Similarity.pqIndexProbe]]); parquet round-trips the fit's
+    *    doubles bit-exactly, so the oracle is the inline spec's;
+    *  - `appendMod` — that index is built on the manifest
+    *    (`vec_id % n <> 0`) and the rest is appended without refit
+    *    ([[Similarity.appendToPqIndex]]); the oracle fits on the
+    *    manifest and encodes every row, so fit-freeze semantics are
+    *    hash-verified end to end. */
+  private final case class PqEntry(spec: PqSpec,
+      trainOpq: Boolean = false, stored: Boolean = false,
+      appendMod: Option[Int] = None)
+
+  /** The PQ / IVF-PQ family — one Spark implementation and one oracle
+    * generator ([[PqSpec.oracleSql]]) serve every row, so no two
+    * entries' fits, codes or ADC chains can drift. Catalog
+    * parameterization: 64 dims → 16 subspaces × 4 dims, 32 L2
+    * centroids each, 2 Lloyd rounds, |Q| = 16, k = 5. On this corpus
+    * (uniform-random embeddings — PQ's worst case, no cluster
+    * structure) exhaustive recall@5 vs brute is 0.16 (m=4, kSub=8),
+    * 0.29 (8,16), 0.54 (16,32), 0.65 (16,64); (16,32) is the
+    * cost/recall balance. The fixtures where residuals, balancing and
+    * rotation each win recall are pinned in SimilaritySpec. */
+  private val PqTopK = 5 // both engines rank the same k
+
+  private val pqEntries: Seq[(String, PqEntry)] = {
+    val pq = PqSpec(m = 16, kSub = 32, iters = 2)
+    val ivf = pq.copy(coarse = Some(PqCoarse(nprobe = 3)))
+    val balanced = PqLayout.VarianceBalanced
+    Seq(
+      "s_ann_pq" -> PqEntry(pq),
+      "s_ann_pq_sampled" -> PqEntry(pq.copy(fitSampleMod = 4L)),
+      "s_ann_pq_balanced" -> PqEntry(pq.copy(layout = balanced)),
+      "s_ann_pq_opq" -> PqEntry(pq, trainOpq = true),
+      "s_ann_ivf_pq" -> PqEntry(ivf),
+      "s_ann_ivf_pq_sampled" -> PqEntry(ivf.copy(fitSampleMod = 4L)),
+      "s_ann_ivf_pq_res" -> PqEntry(ivf.copy(residual = true)),
+      "s_ann_ivf_pq_resbal" ->
+        PqEntry(ivf.copy(residual = true, layout = balanced)),
+      "s_ann_ivf_pq_opq_res" ->
+        PqEntry(ivf.copy(residual = true), trainOpq = true),
+      "s_ann_ivf_pq_opq_res_sampled" -> PqEntry(
+        ivf.copy(residual = true, fitSampleMod = 4L), trainOpq = true),
+      // nprobe widened 3 → 5 for the ~1/3 selectivity (the
+      // raw-vector s_ann_filtered's stand-in predicate)
+      "s_ann_filtered_pq" -> PqEntry(ivf.copy(
+        coarse = Some(PqCoarse(nprobe = 5)),
+        filter = Some(PqFilter.vecIdMultipleOf(3)))),
+      // nprobe derived from the selectivity: 6 of 10 on the fixture
+      "s_ann_filtered_pq_auto" -> PqEntry(ivf.copy(
+        coarse = Some(PqCoarse(nprobe = 3, widenForFilter = true)),
+        filter = Some(PqFilter.vecIdMultipleOf(2)))),
+      "s_ann_index_scan" ->
+        PqEntry(ivf.copy(fitSampleMod = 4L), stored = true),
+      "s_ann_index_append" -> PqEntry(ivf.copy(fitSampleMod = 4L),
+        stored = true, appendMod = Some(10)))
+  }
+
+  private def runPq(name: String, entry: PqEntry)(s: SparkSession,
+      d: String): DataFrame = {
     val e = embs(s, d)
-    Similarity.pqTopK(e,
-        Similarity.sampleQueryIds(
-          e.filter(col("embedding").isNotNull), n = 16),
-        k = 5, m = 16, kSub = 32, iters = 2)
-      .orderBy("query_id", "rank")
+    val qids = Similarity.sampleQueryIds(
+      e.filter(col("embedding").isNotNull), n = 16)
+    val spec =
+      if (!entry.trainOpq) entry.spec
+      else {
+        val (_, c) = graft.ext.Pca.covMeans(e, entry.spec.dim)
+        val rot = graft.ext.Pca.opqRotation(c, entry.spec.dim,
+          m = entry.spec.m)
+        recordRotation(name, d, rot)
+        entry.spec.copy(layout = PqLayout.Rotation(rot))
+      }
+    if (!entry.stored)
+      Similarity.pqSearch(spec, e, qids, PqTopK)
+        .orderBy("query_id", "rank")
+    else {
+      val dir = java.nio.file.Files.createTempDirectory(s"graft_$name")
+        .toString
+      try {
+        entry.appendMod match {
+          case None => Similarity.buildPqIndex(spec, e, dir)
+          case Some(n) =>
+            Similarity.buildPqIndex(spec, e.filter(col("vec_id") % n =!= 0),
+              dir)
+            Similarity.appendToPqIndex(s, dir, spec,
+              e.filter(col("vec_id") % n === 0))
+        }
+        Similarity.pqIndexProbe(s, dir, spec, e, qids, PqTopK)
+          .orderBy("query_id", "rank").localCheckpoint()
+      } finally QueryUtil.deleteRecursively(dir)
+    }
   }
 
-  /** Shared oracle fragments for the PQ family (catalog
-    * parameterization m=16, subDim=4, kSub=32). [[pqFitsSql]] unrolls
-    * every subspace fit — per subspace s, CTEs `bs` (sliced corpus) →
-    * `is` (seeds) → assign/update ×2 → `ms` (final assignment, the
-    * codes) with `cs2` the fitted codebook; [[pqCodesUnionSql]] /
-    * [[pqLutUnionSql]] splice the per-subspace frames into the
-    * `codes` and `lut` bodies. Same fragment grammar as
-    * [[kmUnrolledSql]] with L2 in place of cosine; shared by
-    * `s_ann_pq` and `s_ann_ivf_pq` so the two fits can never
-    * drift. */
-  private val PqM = 16; private val PqSubDim = 4; private val PqKSub = 32
-  private def pqLo(s: Int) = s * PqSubDim + 1
-  private def pqHi(s: Int) = (s + 1) * PqSubDim
-  private def pqFitsSql: String = pqFitsSqlWith(None)
-  /** `sampleMod = Some(n)` fits every subspace codebook (seeds,
-    * both Lloyd rounds) on the `vec_id % n = 0` sample while the
-    * final code assignment `m$s` still covers the full corpus —
-    * mirrors [[Similarity.pqTopK]]'s `fitSampleMod`. `src` is the
-    * (vec_id, emb) CTE the subspaces slice — `base` for raw-vector
-    * PQ, `rbase` for the residual variant. */
-  private def pqFitsSqlWith(sampleMod: Option[Int],
-      src: String = "base", encodeSrc: Option[String] = None): String = {
-    // identical float expression tree to Similarity.l2sq
-    def l2(a: String, b: String) =
-      s"round(list_dot_product($a, $a) - 2 * list_dot_product($a, $b)" +
-      s" + list_dot_product($b, $b), 6)"
-    def assignSql(src: String, cent: String, out: String) =
-      s"""$out AS (SELECT vec_id, emb, cid FROM (
-         |  SELECT b.vec_id, b.emb, c.cid,
-         |    row_number() OVER (PARTITION BY b.vec_id
-         |      ORDER BY ${l2("b.emb", "c.centroid")} ASC, c.cid)
-         |      AS rn
-         |  FROM $src b CROSS JOIN $cent c) WHERE rn = 1)""".stripMargin
-    def updateSql(assigned: String, out: String) =
-      s"""${out}d AS (SELECT cid, i,
-         |    CAST(sum(CAST(emb[i] AS DECIMAL(18,6))) AS DOUBLE)
-         |      / count(*) AS cv
-         |  FROM $assigned CROSS JOIN range(1, ${PqSubDim + 1}) t(i)
-         |  GROUP BY cid, i),
-         |$out AS (SELECT cid, list(cv ORDER BY i) AS centroid
-         |  FROM ${out}d GROUP BY cid)""".stripMargin
-    (0 until PqM).map { s =>
-      val fitSrc = if (sampleMod.isDefined) s"fb$s" else s"b$s"
-      val fbCte = sampleMod.map(n =>
-        s"fb$s AS (SELECT vec_id, emb FROM b$s WHERE vec_id % $n = 0),\n")
-        .getOrElse("")
-      // encodeSrc splits the FIT corpus from the ENCODE corpus (the
-      // stored-index append path: codebooks fitted on the manifest,
-      // membership codes for every row); default = encode what you fit
-      val encCte = encodeSrc.map(es =>
-        s"e$s AS (SELECT vec_id, emb[${pqLo(s)}:${pqHi(s)}] AS emb" +
-          s" FROM $es),\n").getOrElse("")
-      val encName = if (encodeSrc.isDefined) s"e$s" else s"b$s"
-      s"""b$s AS (SELECT vec_id, emb[${pqLo(s)}:${pqHi(s)}] AS emb
-         |  FROM $src),
-         |$encCte${fbCte}i$s AS (SELECT CAST(rn - 1 AS INT) AS cid, emb AS centroid
-         |  FROM (SELECT emb, row_number() OVER (ORDER BY vec_id) AS rn
-         |    FROM $fitSrc) WHERE rn <= $PqKSub),
-         |${assignSql(fitSrc, s"i$s", s"a${s}1")},
-         |${updateSql(s"a${s}1", s"c${s}1")},
-         |${assignSql(fitSrc, s"c${s}1", s"a${s}2")},
-         |${updateSql(s"a${s}2", s"c${s}2")},
-         |${assignSql(encName, s"c${s}2", s"m$s")}""".stripMargin
-    }.mkString(",\n")
-  }
-  private def pqCodesUnionSql: String = (0 until PqM)
-    .map(s => s"SELECT vec_id, $s AS sub, cid FROM m$s")
-    .mkString("\n  UNION ALL ")
-  // pdot raw (no per-term round) — see Similarity.pqTopK's note on
-  // half-way rounding divergence; the sumDec decimal cast is the one
-  // shared quantization point
-  private def pqLutUnionSql: String = (0 until PqM)
-    .map(s => s"SELECT query_id, $s AS sub, cid, " +
-      s"list_dot_product(q_emb[${pqLo(s)}:${pqHi(s)}], centroid)" +
-      s" AS pdot FROM q CROSS JOIN c${s}2")
-    .mkString("\n  UNION ALL ")
+  /** The rotation each `trainOpq` entry derived, keyed by entry name,
+    * then by dataset dir (a bare global would yield a
+    * plausible-but-wrong oracle if one JVM ran queries on one dataset
+    * and dumped for another). */
+  private val opqRotations = new java.util.concurrent.ConcurrentHashMap[
+    String, Map[String, Array[Array[Double]]]]()
 
-  /** Everything downstream of the (vec_id, emb) `base` CTE in the
-    * exhaustive-ADC PQ oracle — ONE definition shared by the raw,
-    * sampled-fit, balanced-permutation and OPQ-rotation entries
-    * (whose only difference is how `base` is derived and which fit
-    * fragments run), so the four ADC chains can never drift. */
-  private def pqAdcBodySql(fits: String): String =
-    s"""$fits,
-       |$qidsSql,
-       |q AS (SELECT b.vec_id AS query_id, b.emb AS q_emb
-       |  FROM base b JOIN qids s ON b.vec_id = s.vec_id),
-       |codes AS ($pqCodesUnionSql),
-       |lut AS ($pqLutUnionSql),
-       |scored AS (SELECT query_id, k.vec_id AS neighbor_id,
-       |    round(${sqlSumDec("pdot")}, 6) AS adc_dot
-       |  FROM codes k JOIN lut l ON k.sub = l.sub AND k.cid = l.cid
-       |  WHERE k.vec_id <> l.query_id
-       |  GROUP BY query_id, k.vec_id),
-       |ranked AS (SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-       |    ORDER BY adc_dot DESC, neighbor_id ASC) AS INT) AS rank
-       |  FROM scored)
-       |SELECT query_id, neighbor_id, adc_dot, rank FROM ranked
-       |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
+  private[graft] def recordRotation(name: String, dir: String,
+      rot: Array[Array[Double]]): Unit =
+    opqRotations.merge(name, Map(dir -> rot), (a, b) => a ++ b): Unit
 
-  private val sAnnPqSql =
-    s"""WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS emb
-       |  FROM embeddings WHERE embedding IS NOT NULL),
-       |${pqAdcBodySql(pqFitsSql)}""".stripMargin
+  /** Oracle of a `trainOpq` entry, built at DUMP time from the
+    * rotation the query derived (Verify runs every query before
+    * dumping oracle_sql.json): the rotation literals only when exactly
+    * one dataset ran the entry in this JVM; none or several → a marker
+    * statement that fails the compare loudly instead of passing
+    * wrongly. */
+  private[graft] def rotationOracle(name: String, spec: PqSpec): String =
+    opqRotations.getOrDefault(name, Map.empty).toSeq match {
+      case Seq() => s"SELECT 'run $name before dumping its oracle' AS err"
+      case Seq((_, rot)) =>
+        PqSpec.oracleSql(spec.copy(layout = PqLayout.Rotation(rot)),
+          PqTopK)
+      case many =>
+        s"SELECT '$name ran against ${many.size} datasets in this " +
+          "JVM - rotation ambiguous, rerun a single-dataset dump' AS err"
+    }
 
-  /** PQ with the SAMPLED codebook fit ([[Similarity.pqTopK]] at
-    * `fitSampleMod = 4`): quantizers trained on the deterministic
-    * quarter-sample, full corpus encoded and scored — the production
-    * fit shape (bounded-sample training makes fit cost
-    * corpus-independent; the corpus pays exactly one encode pass).
-    * Hash-verified because the modulus sample is SQL-mirrorable. */
-  def sAnnPqSampled(s: SparkSession, d: String): DataFrame = {
-    val e = embs(s, d)
-    Similarity.pqTopK(e,
-        Similarity.sampleQueryIds(
-          e.filter(col("embedding").isNotNull), n = 16),
-        k = 5, m = 16, kSub = 32, iters = 2, fitSampleMod = 4L)
-      .orderBy("query_id", "rank")
-  }
-
-  private val sAnnPqSampledSql =
-    s"""WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS emb
-       |  FROM embeddings WHERE embedding IS NOT NULL),
-       |${pqAdcBodySql(pqFitsSqlWith(Some(4)))}""".stripMargin
-
-  /** Variance-balanced PQ ([[Similarity.pqTopKBalanced]]): dims
-    * ranked by exact-decimal variance and dealt round-robin across
-    * the 16 subspaces before the standard fit/encode/ADC — the
-    * anisotropy fix (OPQ's initialization heuristic). The oracle
-    * derives the SAME permutation in SQL (identical decimal sums,
-    * identical (variance DESC, dim) rank) and feeds the permuted CTE
-    * through the SHARED subspace-fit fragments (`pqFitsSqlWith`), so
-    * permutation + fit + codes + ADC are all hash-verified end to
-    * end. On this corpus (uniform embeddings, near-equal variances)
-    * the permutation is near-identity by design — the anisotropic
-    * case where balancing wins recall is pinned in SimilaritySpec. */
-  def sAnnPqBalanced(s: SparkSession, d: String): DataFrame = {
-    val e = embs(s, d)
-    Similarity.pqTopKBalanced(e,
-        Similarity.sampleQueryIds(
-          e.filter(col("embedding").isNotNull), n = 16),
-        k = 5, m = 16, kSub = 32, iters = 2)
-      .orderBy("query_id", "rank")
-  }
-
-  private val sAnnPqBalancedSql =
-    s"""WITH rawb AS (SELECT vec_id, embedding::DOUBLE[] AS emb
-       |  FROM embeddings WHERE embedding IS NOT NULL),
-       |vstat AS (SELECT i,
-       |    CAST(sum(CAST(emb[i] AS DECIMAL(18,6))) AS DOUBLE) AS s1,
-       |    CAST(sum(CAST(emb[i] * emb[i] AS DECIMAL(18,6))) AS DOUBLE)
-       |      AS s2,
-       |    count(*) AS n
-       |  FROM rawb CROSS JOIN range(1, 65) t(i) GROUP BY i),
-       |vr AS (SELECT i, round((s2 - s1 * s1 / n) / n, 6) AS variance
-       |  FROM vstat),
-       |-- rank r (0-based) deals dim to subspace r % 16, slot r // 16
-       |rk AS (SELECT i AS olddim, CAST(row_number() OVER (
-       |      ORDER BY variance DESC, i) - 1 AS INT) AS r FROM vr),
-       |dm AS (SELECT (r % 16) * 4 + (r // 16) AS newpos, olddim
-       |  FROM rk),
-       |pm AS (SELECT list(olddim ORDER BY newpos) AS pm FROM dm),
-       |base AS (SELECT vec_id,
-       |    list_transform(range(1, 65), p -> emb[pm[p]]) AS emb
-       |  FROM rawb CROSS JOIN pm),
-       |${pqAdcBodySql(pqFitsSql)}""".stripMargin
+  /** Oracle statements that depend on state a query derives at run
+    * time (plan-literal rotations). [[graft.SparkEntry.oracleSql]]
+    * splices these in at dump time. */
+  def dynamicOracle: Map[String, String] = pqEntries.collect {
+    case (n, e) if e.trainOpq => n -> rotationOracle(n, e.spec)
+  }.toMap
 
   /** The exact integer-micro covariance matrix of the embedding
     * corpus — [[graft.ext.Pca.covMeans]]' fused-kernel aggregate
     * surfaced as its own hash-verified entry. This is the
     * verification anchor for every LOCAL eigensolve built on it
     * (power iteration, Hotelling deflation, and the OPQ Jacobi
-    * rotation of [[sAnnPqOpq]]): DuckDB independently reproduces the
-    * 4096 BIGINT cells, and the rotation is a pure deterministic
-    * function of exactly these integers (PcaSpec pins the function's
-    * invariants), so the chain covariance → rotation → rotated-ADC
-    * is verified end to end even though no SQL engine can replay a
-    * Jacobi sweep. One corpus pass; the shuffle is matrix-sized. */
+    * rotation of the `trainOpq` PQ entries): DuckDB independently
+    * reproduces the 4096 BIGINT cells, and the rotation is a pure
+    * deterministic function of exactly these integers (PcaSpec pins
+    * the function's invariants), so the chain covariance → rotation
+    * → rotated-ADC is verified end to end even though no SQL engine
+    * can replay a Jacobi sweep. One corpus pass; the shuffle is
+    * matrix-sized. */
   def dEmbedCov(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val (_, c) = graft.ext.Pca.covMeans(embs(s, d), 64)
@@ -2055,549 +1985,7 @@ object TrainingData {
       .toDF("i", "j", "ci").orderBy("i", "j")
   }
 
-  /** PQ over the TRAINED OPQ rotation ([[graft.ext.Pca.opqRotation]]
-    * — Ge et al. 2013's parametric form: full Jacobi eigenbasis +
-    * greedy eigenvalue allocation across the 16 subspaces). The
-    * rotation is derived from the SAME covariance integers the
-    * hash-verified [[dEmbedCov]] entry dumps, applied as a
-    * plan-literal 64×64 projection (left-fold sums — identical IEEE
-    * order in both engines), and everything downstream is the
-    * unmodified [[Similarity.pqTopK]] machinery. Verification chain:
-    * the covariance is hash-verified by `d_embed_cov`; the rotation
-    * is a pure deterministic local function of it (orthogonality,
-    * eigen-residuals and allocation pinned in PcaSpec); the oracle
-    * embeds the derived rotation as literals (the
-    * hyperplane-literal pattern of `s_ann_lsh`) and replays
-    * rotation-application + fit + codes + ADC in full — dumped AFTER
-    * the query runs (Verify's contract), via [[dynamicOracle]]. */
-  def sAnnPqOpq(s: SparkSession, d: String): DataFrame = {
-    val e = embs(s, d)
-    val (_, c) = graft.ext.Pca.covMeans(e, 64)
-    val rot = graft.ext.Pca.opqRotation(c, 64, m = PqM)
-    opqRotationUsed.put(d, rot)
-    // r15: the rotation is ONE mat_vec_lit kernel node (MatVecLit),
-    // so the checkpoint that severed the old 4096-literal tree from
-    // the PQ chain's Catalyst transforms is gone — the lazy rotated
-    // frame feeds pqTopK, whose internal base persist is the single
-    // corpus materialization (the checkpoint was a SECOND corpus-
-    // sized copy plus an extra eager pass)
-    val rotated = graft.ext.Pca.applyRotation(e, rot)
-    Similarity.pqTopK(rotated,
-        Similarity.sampleQueryIds(
-          e.filter(col("embedding").isNotNull), n = 16),
-        k = 5, m = PqM, kSub = PqKSub, iters = 2)
-      .orderBy("query_id", "rank")
-  }
-
-  /** Rotations derived at query time, KEYED BY DATASET DIR (r11
-    * advice: a bare global would yield a plausible-but-wrong oracle
-    * if one JVM ever ran queries on one dataset and dumped for
-    * another). [[rotationSqlNow]] only emits literals when exactly
-    * one dataset has run; zero or several → a marker statement that
-    * fails the compare loudly instead of passing wrongly. */
-  private val opqRotationUsed =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      Array[Array[Double]]]()
-  private val opqResRotationUsed =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      Array[Array[Double]]]()
-
-  /** Plan-literal rotation oracle builder, shared by the OPQ entries:
-    * built at DUMP time from the rotation the query actually derived
-    * (Verify runs every query before dumping oracle_sql.json, so the
-    * driver's correctness gate always sees the real literals; a
-    * restricted dev dump that skipped the query — or a JVM that ran
-    * several datasets — gets a marker statement instead). The rotated
-    * base reproduces the plan's left-fold double sums term by term;
-    * `mkBody` supplies everything downstream of the rotated base. */
-  private def rotationSqlNow(name: String,
-      cache: java.util.concurrent.ConcurrentHashMap[String,
-        Array[Array[Double]]],
-      keep: String, mkBody: String => String): String = {
-    import scala.jdk.CollectionConverters._
-    cache.asScala.toSeq match {
-      case Seq() =>
-        s"SELECT 'run $name before dumping its oracle' AS err"
-      case Seq((_, rot)) =>
-        val rows = (0 until 64).map { i =>
-          (0 until 64).map(j => s"(${rot(i)(j)}) * emb[${j + 1}]")
-            .mkString(" + ")
-        }.mkString(",\n      ")
-        // MATERIALIZED: the rotated frame is a 64×64 = 4096-term
-        // expression per row and the residual body references `base`
-        // ~20 times (16 subspace slices, dims, q, codesl). DuckDB
-        // inlines plain CTEs per reference, which re-plans and
-        // re-evaluates the rotation everywhere — measured 232 s for
-        // s_ann_pq_opq and ~620 s for each OPQ×residual oracle at
-        // sf0.01; forcing one materialization cuts them to seconds
-        // (4.5 s measured) without touching semantics.
-        mkBody(s"""rawb AS (SELECT vec_id,$keep
-           |    embedding::DOUBLE[] AS emb
-           |  FROM embeddings WHERE embedding IS NOT NULL),
-           |base AS MATERIALIZED (SELECT vec_id,$keep list_value(
-           |      $rows) AS emb
-           |  FROM rawb)""".stripMargin)
-      case many =>
-        s"SELECT '$name ran against ${many.size} datasets in this " +
-          "JVM - rotation ambiguous, rerun a single-dataset dump' AS err"
-    }
-  }
-
-  private def sAnnPqOpqSqlNow: String =
-    rotationSqlNow("s_ann_pq_opq", opqRotationUsed, keep = "",
-      rotated => s"""WITH $rotated,
-         |${pqAdcBodySql(pqFitsSql)}""".stripMargin)
-
-  /** Oracle statements that depend on state a query derives at run
-    * time (plan-literal rotations). [[graft.SparkEntry.oracleSql]]
-    * splices these in at dump time. */
-  def dynamicOracle: Map[String, String] =
-    Map("s_ann_pq_opq" -> sAnnPqOpqSqlNow,
-      "s_ann_ivf_pq_opq_res" -> sAnnIvfPqOpqResSqlNow,
-      "s_ann_ivf_pq_opq_res_sampled" -> sAnnIvfPqOpqResSampledSqlNow)
-
   private val dEmbedCovSql = graft.ext.Pca.covSql(64)
-
-  /** IVF × PQ ([[Similarity.ivfTopKPq]]) — the canonical production
-    * composition (what FAISS-class systems deploy): per-label coarse
-    * pruning to nprobe=3 partitions per query + PQ-coded ADC fine
-    * ranking inside them. Both levels hash-verified in one oracle:
-    * the per-label decimal-mean centroids AND all 16 unrolled
-    * subspace fits (shared fragments with `s_ann_pq`, so the two
-    * indexes can never drift). */
-  def sAnnIvfPq(s: SparkSession, d: String): DataFrame = {
-    val e = embs(s, d)
-    Similarity.ivfTopKPq(e,
-        Similarity.sampleQueryIds(
-          e.filter(col("embedding").isNotNull), n = 16),
-        k = 5, nprobe = 3, m = 16, kSub = 32, iters = 2)
-      .orderBy("query_id", "rank")
-  }
-
-  private def ivfPqSqlWith(fits: String, nprobe: String = "3",
-      candWhere: String = "") =
-    s"""WITH base AS (SELECT vec_id, label, embedding::DOUBLE[] AS emb
-       |  FROM embeddings WHERE embedding IS NOT NULL),
-       |dims AS (SELECT label, i,
-       |    CAST(sum(CAST(emb[i] AS DECIMAL(18,6))) AS DOUBLE)
-       |      / count(*) AS cv
-       |  FROM base CROSS JOIN range(1, 65) t(i)
-       |  GROUP BY label, i),
-       |cent AS (SELECT label, list(cv ORDER BY i) AS centroid
-       |  FROM dims GROUP BY label),
-       |$fits,
-       |$qidsSql,
-       |q AS (SELECT b.vec_id AS query_id, b.emb AS q_emb
-       |  FROM base b JOIN qids s ON b.vec_id = s.vec_id),
-       |probes AS (SELECT query_id, label,
-       |    ${sqlCosine("q_emb", "centroid")} AS c_sim
-       |  FROM q CROSS JOIN cent),
-       |probed AS (SELECT query_id, label FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY query_id
-       |      ORDER BY c_sim DESC, label ASC) AS prn FROM probes)
-       |  WHERE prn <= $nprobe),
-       |codes AS ($pqCodesUnionSql),
-       |codesl AS (SELECT c.vec_id, b.label, c.sub, c.cid
-       |  FROM codes c JOIN base b ON c.vec_id = b.vec_id),
-       |lut AS ($pqLutUnionSql),
-       |scored AS (SELECT l.query_id, k.vec_id AS neighbor_id,
-       |    round(${sqlSumDec("pdot")}, 6) AS adc_dot
-       |  FROM codesl k
-       |  JOIN probed p ON k.label = p.label
-       |  JOIN lut l ON l.query_id = p.query_id
-       |    AND l.sub = k.sub AND l.cid = k.cid
-       |  WHERE k.vec_id <> l.query_id$candWhere
-       |  GROUP BY l.query_id, k.vec_id),
-       |ranked AS (SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-       |    ORDER BY adc_dot DESC, neighbor_id ASC) AS INT) AS rank
-       |  FROM scored)
-       |SELECT query_id, neighbor_id, adc_dot, rank FROM ranked
-       |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
-
-  private val sAnnIvfPqSql = ivfPqSqlWith(pqFitsSql)
-
-  /** IVF-PQ with the SAMPLED codebook fit
-    * ([[Similarity.ivfTopKPq]] at `fitSampleMod = 4`) — the
-    * production parameterization of the composition, shipped after
-    * the 1000× probe named the full-fit cost: three subspace-assign
-    * passes over the persisted corpus-sized subspace frame (two
-    * Lloyd iterations + encode) round-trip to disk at 2M vectors
-    * (444.7s; shuffle sizing ruled out — 1024 partitions measured
-    * the same). Training the quantizers on the deterministic
-    * quarter-sample bounds the fit; the corpus pays exactly one
-    * encode pass. Hash-verified via the modulus-mirrored fit
-    * fragments (the `s_ann_pq_sampled` pattern, spliced into the
-    * shared IVF body). */
-  def sAnnIvfPqSampled(s: SparkSession, d: String): DataFrame = {
-    val e = embs(s, d)
-    Similarity.ivfTopKPq(e,
-        Similarity.sampleQueryIds(
-          e.filter(col("embedding").isNotNull), n = 16),
-        k = 5, nprobe = 3, m = 16, kSub = 32, iters = 2,
-        fitSampleMod = 4L)
-      .orderBy("query_id", "rank")
-  }
-
-  private val sAnnIvfPqSampledSql = ivfPqSqlWith(pqFitsSqlWith(Some(4)))
-
-  /** The STORED ANN index served end to end
-    * ([[Similarity.buildPqIndex]] / [[Similarity.pqIndexProbe]]) —
-    * the IVF-PQ sibling of `d_phrase_index_scan`, completing the
-    * persisted-layout family: codes (m bytes + a label per vector)
-    * are materialized ONCE partitioned by the coarse label, the
-    * codebooks and coarse centroids beside them, and the probe is a
-    * planning-time partition-pruned read of the probed labels' codes
-    * + the broadcast-LUT ADC sum — no raw corpus vectors, no fit, no
-    * corpus-proportional probe state. Fit is the production sampled
-    * parameterization (`fitSampleMod = 4`); parquet round-trips the
-    * fit's doubles bit-exactly, so the layout can never change
-    * results — the oracle IS the inline sampled composition's
-    * (hash-equality against it is the correctness claim), and
-    * SimilaritySpec pins probe ≡ [[Similarity.ivfTopKPq]] plus the
-    * pruned numFiles. The temp layout is reclaimed after the probe
-    * (the zorderScan treatment); in production the build amortizes
-    * across every probe on the snapshot. */
-  /** Stored-index MAINTENANCE ([[Similarity.appendToPqIndex]]) — the
-    * FAISS `add` path on the [[Similarity.buildPqIndex]] layout,
-    * completing the no-refit family (`s_ann_incremental` for the raw
-    * IVF gate, this for the coded index): the index is built from the
-    * MANIFEST only (vec_id % 10 ≠ 0, sampled fit), the batch
-    * (vec_id % 10 = 0) is encoded with the STORED codebooks and
-    * APPENDED into the label-partitioned codes — no refit, no
-    * re-encode, no rewrite of existing code files — then a probe
-    * serves old and new vectors through the identical partition-
-    * pruned ADC machinery. The oracle mirrors the split exactly:
-    * coarse centroids + codebook fits derive from the manifest CTE
-    * while membership codes cover every row (`pqFitsSqlWith`'s
-    * encodeSrc split), so fit-freeze semantics are hash-verified end
-    * to end. AppendSpec pins the layout claims (manifest codes
-    * bit-identical pre/post append; split-appends ≡ one-shot). */
-  def sAnnIndexAppend(s: SparkSession, d: String): DataFrame = {
-    val e = embs(s, d)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_pqidx_app").toString
-    try {
-      Similarity.buildPqIndex(e.filter(col("vec_id") % 10 =!= 0), dir,
-        m = 16, kSub = 32, iters = 2, fitSampleMod = 4L)
-      Similarity.appendToPqIndex(s, dir,
-        e.filter(col("vec_id") % 10 === 0))
-      Similarity.pqIndexProbe(s, dir, e,
-          Similarity.sampleQueryIds(
-            e.filter(col("embedding").isNotNull), n = 16),
-          k = 5, nprobe = 3)
-        .orderBy("query_id", "rank").localCheckpoint()
-    } finally QueryUtil.deleteRecursively(dir)
-  }
-
-  private val sAnnIndexAppendSql =
-    s"""WITH base AS (SELECT vec_id, label, embedding::DOUBLE[] AS emb
-       |  FROM embeddings WHERE embedding IS NOT NULL),
-       |man AS (SELECT vec_id, label, emb FROM base
-       |  WHERE vec_id % 10 <> 0),
-       |dims AS (SELECT label, i,
-       |    CAST(sum(CAST(emb[i] AS DECIMAL(18,6))) AS DOUBLE)
-       |      / count(*) AS cv
-       |  FROM man CROSS JOIN range(1, 65) t(i)
-       |  GROUP BY label, i),
-       |cent AS (SELECT label, list(cv ORDER BY i) AS centroid
-       |  FROM dims GROUP BY label),
-       |${pqFitsSqlWith(Some(4), src = "man",
-          encodeSrc = Some("base"))},
-       |$qidsSql,
-       |q AS (SELECT b.vec_id AS query_id, b.emb AS q_emb
-       |  FROM base b JOIN qids s ON b.vec_id = s.vec_id),
-       |probes AS (SELECT query_id, label,
-       |    ${sqlCosine("q_emb", "centroid")} AS c_sim
-       |  FROM q CROSS JOIN cent),
-       |probed AS (SELECT query_id, label FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY query_id
-       |      ORDER BY c_sim DESC, label ASC) AS prn FROM probes)
-       |  WHERE prn <= 3),
-       |codes AS ($pqCodesUnionSql),
-       |codesl AS (SELECT c.vec_id, b.label, c.sub, c.cid
-       |  FROM codes c JOIN base b ON c.vec_id = b.vec_id),
-       |lut AS ($pqLutUnionSql),
-       |scored AS (SELECT l.query_id, k.vec_id AS neighbor_id,
-       |    round(${sqlSumDec("pdot")}, 6) AS adc_dot
-       |  FROM codesl k
-       |  JOIN probed p ON k.label = p.label
-       |  JOIN lut l ON l.query_id = p.query_id
-       |    AND l.sub = k.sub AND l.cid = k.cid
-       |  WHERE k.vec_id <> l.query_id
-       |  GROUP BY l.query_id, k.vec_id),
-       |ranked AS (SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-       |    ORDER BY adc_dot DESC, neighbor_id ASC) AS INT) AS rank
-       |  FROM scored)
-       |SELECT query_id, neighbor_id, adc_dot, rank FROM ranked
-       |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
-
-  def sAnnIndexScan(s: SparkSession, d: String): DataFrame = {
-    val e = embs(s, d)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_pqidx").toString
-    try {
-      Similarity.buildPqIndex(e, dir, m = 16, kSub = 32, iters = 2,
-        fitSampleMod = 4L)
-      Similarity.pqIndexProbe(s, dir, e,
-          Similarity.sampleQueryIds(
-            e.filter(col("embedding").isNotNull), n = 16),
-          k = 5, nprobe = 3)
-        .orderBy("query_id", "rank").localCheckpoint()
-    } finally QueryUtil.deleteRecursively(dir)
-  }
-
-  /** Metadata-FILTERED IVF-PQ ([[Similarity.ivfTopKPq]] with
-    * `candidateFilter`) — [[sAnnFiltered]]'s pre-filter semantics
-    * composed with the CODED index: at 100 TB a filtered vector query
-    * runs on the stored PQ codes, not raw-vector partitions, so the
-    * predicate must restrict the ADC fine-rank scan (a pushed column
-    * predicate on the partition-pruned index read), never the index
-    * or the fits. Same stand-in predicate (`vec_id % 3 = 0`) and the
-    * same nprobe 3 → 5 selectivity widening as the raw-vector
-    * filtered entry; SimilaritySpec proves the all-probes form ≡ the
-    * exhaustive filtered ADC ranking and that every result satisfies
-    * the predicate. Hash-verified via the shared IVF-PQ oracle body
-    * with the candidate WHERE in the scored fragment. */
-  def sAnnFilteredPq(s: SparkSession, d: String): DataFrame = {
-    val e = embs(s, d)
-    Similarity.ivfTopKPq(e,
-        Similarity.sampleQueryIds(
-          e.filter(col("embedding").isNotNull), n = 16),
-        k = 5, nprobe = 5, m = 16, kSub = 32, iters = 2,
-        candidateFilter = Some(pmod(col("vec_id"), lit(3)) === 0))
-      .orderBy("query_id", "rank")
-  }
-
-  private val sAnnFilteredPqSql = ivfPqSqlWith(pqFitsSql, nprobe = "5",
-    candWhere = " AND ((k.vec_id % 3) + 3) % 3 = 0")
-
-  /** [[sAnnFilteredPq]] with nprobe DERIVED from the predicate's
-    * measured selectivity — the `_auto` composition on the CODED
-    * index ([[Similarity.autoNprobe]] feeding
-    * [[Similarity.ivfTopKPq]]'s pre-filter): the same
-    * `min(n_labels, ⌈3·N/N_match⌉)` rule as `s_ann_filtered_auto`,
-    * oracle-mirrored as a scalar subquery feeding the shared IVF-PQ
-    * body. Predicate `vec_id % 2 = 0` → nprobe 6 of 10 on the
-    * fixture (non-degenerate both sides). */
-  def sAnnFilteredPqAuto(s: SparkSession, d: String): DataFrame = {
-    val e = embs(s, d)
-    val nn = e.filter(col("embedding").isNotNull)
-    val pred = pmod(col("vec_id"), lit(2)) === 0
-    Similarity.ivfTopKPq(e,
-        Similarity.sampleQueryIds(nn, n = 16),
-        k = 5, nprobe = Similarity.autoNprobe(nn, 3, pred),
-        m = 16, kSub = 32, iters = 2,
-        candidateFilter = Some(pred))
-      .orderBy("query_id", "rank")
-  }
-
-  private val sAnnFilteredPqAutoSql = ivfPqSqlWith(pqFitsSql,
-    nprobe = ("(SELECT least(count(DISTINCT label), " +
-      "(3 * count(*) + sum(CASE WHEN ((vec_id % 2) + 2) % 2 = 0 " +
-      "THEN 1 ELSE 0 END) - 1) " +
-      "// sum(CASE WHEN ((vec_id % 2) + 2) % 2 = 0 " +
-      "THEN 1 ELSE 0 END)) FROM base)"),
-    candWhere = " AND ((k.vec_id % 2) + 2) % 2 = 0")
-
-  /** RESIDUAL IVF-PQ ([[Similarity.ivfTopKPqResidual]]) — the FAISS
-    * production form: codebooks fitted on `v − c(v)` residuals
-    * against the coarse per-label centroids, ADC score
-    * `⟨q,c(v)⟩ + Σ LUT` with the coarse term computed at probe time.
-    * The oracle derives the residual frame with the same IEEE-exact
-    * element-wise subtraction (`emb[i] − centroid[i]`) and reuses the
-    * shared unrolled-fit fragments over it, so the coupled two-level
-    * fit is hash-verified end to end; SimilaritySpec compares recall
-    * against the non-residual composition at the identical code
-    * budget. */
-  def sAnnIvfPqRes(s: SparkSession, d: String): DataFrame = {
-    val e = embs(s, d)
-    Similarity.ivfTopKPqResidual(e,
-        Similarity.sampleQueryIds(
-          e.filter(col("embedding").isNotNull), n = 16),
-        k = 5, nprobe = 3, m = 16, kSub = 32, iters = 2)
-      .orderBy("query_id", "rank")
-  }
-
-  /** Everything downstream of the (vec_id, label, emb) `base` CTE in
-    * the residual IVF-PQ oracle — shared verbatim by the raw-layout
-    * entry and the variance-balanced composition (whose only
-    * difference is the permuted `base`), so the two residual fits can
-    * never drift. */
-  private def ivfPqResBodySql: String =
-    ivfPqResBodySqlWith(pqFitsSqlWith(None, src = "rbase"))
-
-  /** [[ivfPqResBodySql]] with the subspace-fit fragment injectable —
-    * the sampled-fit OPQ×residual entry swaps in
-    * `pqFitsSqlWith(Some(4), src = "rbase")` (fits on the sampled
-    * residuals, codes for every row) and everything else stays the
-    * one shared body. */
-  private def ivfPqResBodySqlWith(fits: String) =
-    s"""dims AS (SELECT label, i,
-       |    CAST(sum(CAST(emb[i] AS DECIMAL(18,6))) AS DOUBLE)
-       |      / count(*) AS cv
-       |  FROM base CROSS JOIN range(1, 65) t(i)
-       |  GROUP BY label, i),
-       |cent AS (SELECT label, list(cv ORDER BY i) AS centroid
-       |  FROM dims GROUP BY label),
-       |rbase AS (SELECT b.vec_id,
-       |    list_transform(range(1, 65),
-       |      i -> b.emb[i] - c.centroid[i]) AS emb
-       |  FROM base b JOIN cent c ON b.label = c.label),
-       |$fits,
-       |$qidsSql,
-       |q AS (SELECT b.vec_id AS query_id, b.emb AS q_emb
-       |  FROM base b JOIN qids s ON b.vec_id = s.vec_id),
-       |probes AS (SELECT query_id, label,
-       |    ${sqlCosine("q_emb", "centroid")} AS c_sim,
-       |    list_dot_product(q_emb, centroid) AS qc_dot
-       |  FROM q CROSS JOIN cent),
-       |probed AS (SELECT query_id, label, qc_dot FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY query_id
-       |      ORDER BY c_sim DESC, label ASC) AS prn FROM probes)
-       |  WHERE prn <= 3),
-       |codes AS ($pqCodesUnionSql),
-       |codesl AS (SELECT c.vec_id, b.label, c.sub, c.cid
-       |  FROM codes c JOIN base b ON c.vec_id = b.vec_id),
-       |lut AS ($pqLutUnionSql),
-       |scored AS (SELECT l.query_id, k.vec_id AS neighbor_id,
-       |    round(p.qc_dot + ${sqlSumDec("pdot")}, 6) AS adc_dot
-       |  FROM codesl k
-       |  JOIN probed p ON k.label = p.label
-       |  JOIN lut l ON l.query_id = p.query_id
-       |    AND l.sub = k.sub AND l.cid = k.cid
-       |  WHERE k.vec_id <> l.query_id
-       |  GROUP BY l.query_id, k.vec_id, p.qc_dot),
-       |ranked AS (SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-       |    ORDER BY adc_dot DESC, neighbor_id ASC) AS INT) AS rank
-       |  FROM scored)
-       |SELECT query_id, neighbor_id, adc_dot, rank FROM ranked
-       |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
-
-  private val sAnnIvfPqResSql =
-    s"""WITH base AS (SELECT vec_id, label, embedding::DOUBLE[] AS emb
-       |  FROM embeddings WHERE embedding IS NOT NULL),
-       |$ivfPqResBodySql""".stripMargin
-
-  /** Residual IVF-PQ × variance-balanced allocation
-    * ([[Similarity.ivfTopKPqResidualBalanced]]): the two orthogonal
-    * quantization-error levers composed — the balanced permutation
-    * decides WHICH dimensions share a codebook, residual encoding
-    * decides WHAT the codebook must represent. The oracle derives
-    * the identical permutation in SQL (the `s_ann_pq_balanced`
-    * fragments, label carried through) and feeds the permuted base
-    * into the SHARED residual body ([[ivfPqResBodySql]]), so
-    * permutation + coarse fit + residuals + all 16 subspace fits +
-    * ADC verify end to end; SimilaritySpec pins recall ≥ each parent
-    * on the fixture where each lever matters. */
-  def sAnnIvfPqResBal(s: SparkSession, d: String): DataFrame = {
-    val e = embs(s, d)
-    Similarity.ivfTopKPqResidualBalanced(e,
-        Similarity.sampleQueryIds(
-          e.filter(col("embedding").isNotNull), n = 16),
-        k = 5, nprobe = 3, m = 16, kSub = 32, iters = 2)
-      .orderBy("query_id", "rank")
-  }
-
-  private val sAnnIvfPqResBalSql =
-    s"""WITH rawb AS (SELECT vec_id, label, embedding::DOUBLE[] AS emb
-       |  FROM embeddings WHERE embedding IS NOT NULL),
-       |vstat AS (SELECT i,
-       |    CAST(sum(CAST(emb[i] AS DECIMAL(18,6))) AS DOUBLE) AS s1,
-       |    CAST(sum(CAST(emb[i] * emb[i] AS DECIMAL(18,6))) AS DOUBLE)
-       |      AS s2,
-       |    count(*) AS n
-       |  FROM rawb CROSS JOIN range(1, 65) t(i) GROUP BY i),
-       |vr AS (SELECT i, round((s2 - s1 * s1 / n) / n, 6) AS variance
-       |  FROM vstat),
-       |-- rank r (0-based) deals dim to subspace r % 16, slot r // 16
-       |rk AS (SELECT i AS olddim, CAST(row_number() OVER (
-       |      ORDER BY variance DESC, i) - 1 AS INT) AS r FROM vr),
-       |dm AS (SELECT (r % 16) * 4 + (r // 16) AS newpos, olddim
-       |  FROM rk),
-       |pm AS (SELECT list(olddim ORDER BY newpos) AS pm FROM dm),
-       |base AS (SELECT vec_id, label,
-       |    list_transform(range(1, 65), p -> emb[pm[p]]) AS emb
-       |  FROM rawb CROSS JOIN pm),
-       |$ivfPqResBodySql""".stripMargin
-
-  /** OPQ × RESIDUAL IVF-PQ ([[graft.ext.Pca.opqRotation]] before
-    * [[Similarity.ivfTopKPqResidual]]) — the actual FAISS production
-    * string (`OPQ16,IVF…,PQ16`): the trained rotation is applied
-    * FIRST as a plan-literal 64×64 projection (so the coarse
-    * quantizer, the residuals, and all 16 codebook fits run in the
-    * rotated frame — rotation-before-residual-fit, Ge et al. 2013
-    * composed with Jégou et al. 2011), then the unmodified coupled
-    * two-level residual machinery runs on the rotated corpus. The
-    * true inner product is rotation-invariant up to summation order,
-    * so ground truth is unchanged — only the quantization error
-    * moves; SimilaritySpec pins recall ≥ the unrotated residual form
-    * AND ≥ the exhaustive rotated form on the fixtures where each
-    * lever binds. Verification chain = [[sAnnPqOpq]]'s (covariance
-    * hash-verified by `d_embed_cov`, rotation a pure local function
-    * of it, oracle embeds the derived literals at dump time) feeding
-    * the SHARED residual body ([[ivfPqResBodySql]]), so rotation +
-    * coarse fit + residuals + 16 fits + ADC verify end to end. */
-  def sAnnIvfPqOpqRes(s: SparkSession, d: String): DataFrame = {
-    val e = embs(s, d)
-    val (_, c) = graft.ext.Pca.covMeans(e, 64)
-    val rot = graft.ext.Pca.opqRotation(c, 64, m = PqM)
-    opqResRotationUsed.put(d, rot)
-    // lazy rotated frame — one mat_vec_lit node; the residual stack's
-    // own base persist is the single materialization (see sAnnPqOpq)
-    val rotated = graft.ext.Pca.applyRotation(e, rot,
-      keep = Seq("vec_id", "label"))
-    Similarity.ivfTopKPqResidual(rotated,
-        Similarity.sampleQueryIds(
-          e.filter(col("embedding").isNotNull), n = 16),
-        k = 5, nprobe = 3, m = PqM, kSub = PqKSub, iters = 2)
-      .orderBy("query_id", "rank")
-  }
-
-  private def sAnnIvfPqOpqResSqlNow: String =
-    rotationSqlNow("s_ann_ivf_pq_opq_res", opqResRotationUsed,
-      keep = " label,",
-      rotated => s"""WITH $rotated,
-         |$ivfPqResBodySql""".stripMargin)
-
-  /** [[sAnnIvfPqOpqRes]] at the PRODUCTION fit bound
-    * (`fitSampleMod = 4`) — the catalog's most expensive entry
-    * (10 s full-fit) recomposed the way `s_ann_ivf_pq_sampled`
-    * recomposed the plain stack: the trained rotation still applies
-    * first and the coarse means stay full-corpus, but seeds + both
-    * Lloyd rounds of every residual codebook run on the
-    * `vec_id % 4 = 0` slice while the full corpus pays exactly one
-    * encode. Oracle = the rotation-literal CTE feeding the SHARED
-    * residual body with the split-fit fragments
-    * ([[ivfPqResBodySqlWith]] × `pqFitsSqlWith(Some(4))`), so
-    * rotation + coarse fit + sampled residual fits + full-corpus
-    * codes + ADC hash-verify end to end; SimilaritySpec pins recall
-    * within the full-fit band on the blob fixture. */
-  def sAnnIvfPqOpqResSampled(s: SparkSession, d: String): DataFrame = {
-    val e = embs(s, d)
-    val (_, c) = graft.ext.Pca.covMeans(e, 64)
-    val rot = graft.ext.Pca.opqRotation(c, 64, m = PqM)
-    opqResSampledRotationUsed.put(d, rot)
-    // lazy — see sAnnPqOpq's r15 note
-    val rotated = graft.ext.Pca.applyRotation(e, rot,
-      keep = Seq("vec_id", "label"))
-    Similarity.ivfTopKPqResidual(rotated,
-        Similarity.sampleQueryIds(
-          e.filter(col("embedding").isNotNull), n = 16),
-        k = 5, nprobe = 3, m = PqM, kSub = PqKSub, iters = 2,
-        fitSampleMod = 4L)
-      .orderBy("query_id", "rank")
-  }
-
-  private val opqResSampledRotationUsed =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      Array[Array[Double]]]()
-
-  private def sAnnIvfPqOpqResSampledSqlNow: String =
-    rotationSqlNow("s_ann_ivf_pq_opq_res_sampled",
-      opqResSampledRotationUsed, keep = " label,",
-      rotated => s"""WITH $rotated,
-         |${ivfPqResBodySqlWith(pqFitsSqlWith(Some(4), src = "rbase"))}"""
-        .stripMargin)
 
   /** ANN quality evaluation: recall@k of the LSH path against the
     * brute-force ground truth — the number that decides whether an
@@ -2836,7 +2224,7 @@ object TrainingData {
   /** [[dSemdedupAuto]] with the k-means trained on the deterministic
     * `vec_id % 4 = 0` sample while the FULL corpus is still assigned
     * and pair-pruned — the `fitSampleMod` production bound ported
-    * from the ANN family ([[sAnnIvfPqSampled]]'s recipe; FAISS trains
+    * from the ANN family (`s_ann_ivf_pq_sampled`'s recipe; FAISS trains
     * quantizers on a sample). With k ∝ N the FULL fit pays O(N²/64)
     * per Lloyd pass — the measured assignment wall — and the sampled
     * fit divides every fit pass by the modulus while dedup SEMANTICS
@@ -4355,7 +3743,7 @@ object TrainingData {
   /** [[dPhraseSearch]] with the phrase DERIVATION on the
     * deterministic quarter-sample (`doc_id % 4 = 0`) while the
     * positional search still covers the FULL corpus — the production
-    * parameterization (the [[sAnnPqSampled]] pattern): top bigrams
+    * parameterization (the `s_ann_pq_sampled` pattern): top bigrams
     * are a corpus statistic, so a fixed-rate sample finds the same
     * heavy phrases at scale while the derivation's bigram shuffle —
     * the measured 1000×-probe cost center (corpus-cardinality STRING
@@ -4517,7 +3905,7 @@ object TrainingData {
     * — integer micro-unit contributions floor(1e9/(60+rk)+0.5), so
     * the fused ordering is exact cross-engine. The dense leg here is
     * the fixed-|Q| brute form; at scale it swaps for
-    * [[graft.ext.Similarity.pqTopK]] without touching the fusion
+    * [[graft.ext.Similarity.pqSearch]] without touching the fusion
     * (rank-space legs are interchangeable by construction). */
   def sHybridRrf(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -5909,21 +5297,7 @@ object TrainingData {
     "s_ann_rerank" -> (sAnnRerank _),
     "s_ann_ivf_kmeans" -> (sAnnIvfKmeans _),
     "s_ann_ivf_two_level" -> (sAnnIvfTwoLevel _),
-    "s_ann_pq" -> (sAnnPq _),
-    "s_ann_pq_sampled" -> (sAnnPqSampled _),
-    "s_ann_pq_balanced" -> (sAnnPqBalanced _),
-    "s_ann_pq_opq" -> (sAnnPqOpq _),
     "d_embed_cov" -> (dEmbedCov _),
-    "s_ann_ivf_pq" -> (sAnnIvfPq _),
-    "s_ann_ivf_pq_sampled" -> (sAnnIvfPqSampled _),
-    "s_ann_ivf_pq_res" -> (sAnnIvfPqRes _),
-    "s_ann_ivf_pq_resbal" -> (sAnnIvfPqResBal _),
-    "s_ann_ivf_pq_opq_res" -> (sAnnIvfPqOpqRes _),
-    "s_ann_ivf_pq_opq_res_sampled" -> (sAnnIvfPqOpqResSampled _),
-    "s_ann_filtered_pq" -> (sAnnFilteredPq _),
-    "s_ann_filtered_pq_auto" -> (sAnnFilteredPqAuto _),
-    "s_ann_index_scan" -> (sAnnIndexScan _),
-    "s_ann_index_append" -> (sAnnIndexAppend _),
     "d_embed_dups" -> (dEmbedDups _),
     "d_embed_decontaminate" -> (dEmbedDecontaminate _),
     "d_embed_dups_auto" -> (dEmbedDupsAuto _),
@@ -5985,7 +5359,7 @@ object TrainingData {
     "m_features" -> (mFeatures _),
     "m_resize" -> (mResize _),
     "m_phash_dups" -> (mPhashDups _),
-  )
+  ) ++ pqEntries.map { case (n, e) => n -> (runPq(n, e) _) }
 
   val oracle: Map[String, String] = Map(
     "d_dedup_exact" -> dDedupExactSql,
@@ -6081,24 +5455,7 @@ object TrainingData {
     "s_ann_rerank" -> sAnnRerankSql,
     "s_ann_ivf_kmeans" -> sAnnIvfKmeansSql,
     "s_ann_ivf_two_level" -> sAnnIvfTwoLevelSql,
-    "s_ann_pq" -> sAnnPqSql,
-    "s_ann_pq_sampled" -> sAnnPqSampledSql,
-    "s_ann_pq_balanced" -> sAnnPqBalancedSql,
-    // s_ann_pq_opq's oracle lives in dynamicOracle (plan-literal
-    // rotation, built at dump time)
     "d_embed_cov" -> dEmbedCovSql,
-    "s_ann_ivf_pq" -> sAnnIvfPqSql,
-    "s_ann_ivf_pq_sampled" -> sAnnIvfPqSampledSql,
-    "s_ann_ivf_pq_res" -> sAnnIvfPqResSql,
-    "s_ann_ivf_pq_resbal" -> sAnnIvfPqResBalSql,
-    // s_ann_ivf_pq_opq_res's oracle lives in dynamicOracle
-    // (plan-literal rotation, dumped after the query runs)
-    "s_ann_filtered_pq" -> sAnnFilteredPqSql,
-    "s_ann_filtered_pq_auto" -> sAnnFilteredPqAutoSql,
-    // the stored-index probe must equal the inline sampled
-    // composition — the layout can never change results
-    "s_ann_index_scan" -> sAnnIvfPqSampledSql,
-    "s_ann_index_append" -> sAnnIndexAppendSql,
     "d_embed_dups" -> dEmbedDupsSql,
     "d_embed_dups_auto" -> dEmbedDupsAutoSql,
     "d_embed_decontaminate" -> dEmbedDecontaminateSql,
@@ -6110,5 +5467,10 @@ object TrainingData {
     "m_features" -> mFeaturesSql,
     "m_resize" -> mResizeSql,
     "m_phash_dups" -> mPhashDupsSql,
-  )
+  ) ++ pqEntries.collect {
+    // trainOpq rows: dynamicOracle (plan-literal rotation, dumped
+    // after the query runs)
+    case (n, e) if !e.trainOpq => n -> PqSpec.oracleSql(e.spec, PqTopK,
+      fitWhere = e.appendMod.map(m => s"vec_id % $m <> 0"))
+  }
 }

@@ -13,6 +13,10 @@ import graft.SparkSpec
 class AppendSpec extends SparkSpec {
   import spark.implicits._
 
+  // the catalog's stored-index spec (s_ann_index_scan/_append)
+  private val spec = PqSpec(m = 16, kSub = 32, iters = 2,
+    coarse = Some(PqCoarse(nprobe = 3)), fitSampleMod = 4L)
+
   private def codesOf(dir: String): Seq[(Long, Int, Int)] =
     spark.read.parquet(s"$dir/codes")
       .select($"vec_id", $"sub", $"cid")
@@ -29,18 +33,16 @@ class AppendSpec extends SparkSpec {
     val dir2 = java.nio.file.Files
       .createTempDirectory("graft_append2").toString
     try {
-      Similarity.buildPqIndex(manifest, dir1, m = 16, kSub = 32,
-        iters = 2, fitSampleMod = 4L)
+      Similarity.buildPqIndex(spec, manifest, dir1)
       // identical second layout (same deterministic fit)
-      Similarity.buildPqIndex(manifest, dir2, m = 16, kSub = 32,
-        iters = 2, fitSampleMod = 4L)
+      Similarity.buildPqIndex(spec, manifest, dir2)
       val before = codesOf(dir1)
 
       // one-shot append vs two split appends (even/odd batch halves)
-      Similarity.appendToPqIndex(spark, dir1, batch)
-      Similarity.appendToPqIndex(spark, dir2,
+      Similarity.appendToPqIndex(spark, dir1, spec, batch)
+      Similarity.appendToPqIndex(spark, dir2, spec,
         batch.filter($"vec_id" % 20 === 0))
-      Similarity.appendToPqIndex(spark, dir2,
+      Similarity.appendToPqIndex(spark, dir2, spec,
         batch.filter($"vec_id" % 20 =!= 0))
       val after1 = codesOf(dir1)
       val after2 = codesOf(dir2)
@@ -61,10 +63,10 @@ class AppendSpec extends SparkSpec {
       // the probe serves appended vectors: an appended vector that
       // DUPLICATES a manifest vector shares its code word, so both
       // carry the same adc_dot for every query that sees their label
-      val got = Similarity.pqIndexProbe(spark, dir1, emb,
+      val got = Similarity.pqIndexProbe(spark, dir1, spec, emb,
         Similarity.sampleQueryIds(
           emb.filter($"embedding".isNotNull), 16),
-        k = 5, nprobe = 3)
+        k = 5)
       assert(got.filter($"neighbor_id" % 10 === 0).count() > 0,
         "no appended vector ever surfaced in the probe results")
     } finally {
@@ -79,16 +81,94 @@ class AppendSpec extends SparkSpec {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_append3").toString
     try {
-      Similarity.buildPqIndex(emb.filter($"vec_id" % 10 =!= 0), dir,
-        m = 16, kSub = 32, iters = 2, fitSampleMod = 4L)
+      Similarity.buildPqIndex(spec, emb.filter($"vec_id" % 10 =!= 0), dir)
       val donor = emb.filter($"embedding".isNotNull)
         .orderBy("vec_id").limit(1).collect().head
       val novel = Seq((999999L, donor.getSeq[Float](1), 424242))
         .toDF("vec_id", "embedding", "label")
       val e = intercept[IllegalArgumentException] {
-        Similarity.appendToPqIndex(spark, dir, novel)
+        Similarity.appendToPqIndex(spark, dir, spec, novel)
       }
       assert(e.getMessage.contains("424242"))
+    } finally graft.queries.QueryUtil.deleteRecursively(dir)
+  }
+
+  // a small labeled 8-dim corpus: cheap to build, enough for the
+  // layout checks below
+  private def small = (0L until 24L)
+    .map(i => (i, i % 3,
+      Seq.tabulate(8)(d => ((i * 7 + d * 5) % 11).toFloat)))
+    .toDF("vec_id", "label", "embedding")
+  private val smallSpec = PqSpec(m = 2, kSub = 2, iters = 1, dim = 8,
+    coarse = Some(PqCoarse(nprobe = 2)))
+
+  private def exists(path: String) = new java.io.File(path).exists()
+
+  /** Rewrites `dir`'s meta through `f` (collected first, so the
+    * rewrite never reads the path it replaces). */
+  private def rewriteMeta(dir: String)(
+      f: org.apache.spark.sql.DataFrame => Unit): Unit = {
+    val meta = spark.read.parquet(s"$dir/meta")
+    val rows = spark.createDataFrame(
+      java.util.Arrays.asList(meta.collect(): _*), meta.schema)
+    graft.queries.QueryUtil.deleteRecursively(s"$dir/meta")
+    f(rows)
+  }
+
+  test("probe and append refuse a v1 layout (coarse/codebooks dirs, " +
+      "no meta) with an explicit rebuild-required error") {
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_append_v1").toString
+    try {
+      Similarity.buildPqIndex(smallSpec, small, dir)
+      rewriteMeta(dir) { rows =>
+        rows.filter($"kind" === "coarse").write.parquet(s"$dir/coarse")
+        rows.filter($"kind" === "codebooks")
+          .write.parquet(s"$dir/codebooks")
+      }
+      val probe = intercept[IllegalStateException] {
+        Similarity.pqIndexProbe(spark, dir, smallSpec, small,
+          Seq(0L).toDF("vec_id"), k = 3)
+      }
+      val append = intercept[IllegalStateException] {
+        Similarity.appendToPqIndex(spark, dir, smallSpec, small)
+      }
+      for (e <- Seq(probe, append))
+        assert(e.getMessage.contains("v1") &&
+          e.getMessage.contains("rebuild required"), e.getMessage)
+    } finally graft.queries.QueryUtil.deleteRecursively(dir)
+  }
+
+  test("buildPqIndex over a v1 layout deletes its stale coarse and " +
+      "codebooks dirs") {
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_append_v1_rebuild").toString
+    try {
+      Seq("coarse", "codebooks").foreach(d =>
+        Seq((1L, 2L)).toDF("a", "b").write.parquet(s"$dir/$d"))
+      Similarity.buildPqIndex(smallSpec, small, dir)
+      assert(!exists(s"$dir/coarse") && !exists(s"$dir/codebooks"),
+        "stale v1 dirs survived the rebuild")
+      assert(exists(s"$dir/meta") && exists(s"$dir/codes"))
+      assert(Similarity.pqIndexProbe(spark, dir, smallSpec, small,
+        Seq(0L).toDF("vec_id"), k = 3).count() == 3)
+    } finally graft.queries.QueryUtil.deleteRecursively(dir)
+  }
+
+  test("a meta without codebooks rows is reported as corrupt, naming " +
+      "the index dir") {
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_append_corrupt").toString
+    try {
+      Similarity.buildPqIndex(smallSpec, small, dir)
+      rewriteMeta(dir)(_.filter($"kind" === "coarse")
+        .write.parquet(s"$dir/meta"))
+      val e = intercept[IllegalArgumentException] {
+        Similarity.pqIndexProbe(spark, dir, smallSpec, small,
+          Seq(0L).toDF("vec_id"), k = 3)
+      }
+      assert(e.getMessage.contains(dir) &&
+        e.getMessage.contains("codebooks"), e.getMessage)
     } finally graft.queries.QueryUtil.deleteRecursively(dir)
   }
 }

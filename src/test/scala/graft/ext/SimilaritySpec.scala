@@ -6,6 +6,13 @@ import graft.SparkSpec
 class SimilaritySpec extends SparkSpec {
   import spark.implicits._
 
+  // the PQ specs the tests share: the 8-dim fixtures' starved
+  // codebooks and the catalog parameterization
+  private val ivf8 = PqSpec(m = 2, kSub = 2, iters = 2, dim = 8,
+    coarse = Some(PqCoarse(nprobe = 2)))
+  private val pq64 = PqSpec(m = 16, kSub = 32, iters = 2)
+  private val ivf64 = pq64.copy(coarse = Some(PqCoarse(nprobe = 3)))
+
   test("brute-force top-k ranks an identical vector first") {
     val vecs = Seq(
       (0L, Seq(1.0f, 0.0f, 0.0f)),
@@ -722,8 +729,8 @@ class SimilaritySpec extends SparkSpec {
       (i.toLong, v(i % 3, 0.01 * (i / 3))))
     val df = vecs.toDF("vec_id", "embedding")
     val qids = Seq(0L, 1L, 2L).toDF("vec_id")
-    val pq = Similarity.pqTopK(df, qids, k = 3, m = 2, kSub = 3,
-      iters = 2, dim = 8)
+    val pq = Similarity.pqSearch(PqSpec(m = 2, kSub = 3, iters = 2,
+      dim = 8), df, qids, k = 3)
     val byQ = pq.select("query_id", "neighbor_id")
       .as[(Long, Long)].collect().groupBy(_._1)
     assert(byQ.keySet == Set(0L, 1L, 2L))
@@ -739,8 +746,7 @@ class SimilaritySpec extends SparkSpec {
     val truth = Similarity.bruteForceTopK(emb, q16, 5)
       .select("query_id", "neighbor_id").as[(Long, Long)]
       .collect().toSet
-    val approx = Similarity.pqTopK(emb, q16, 5, m = 16, kSub = 32,
-        iters = 2)
+    val approx = Similarity.pqSearch(pq64, emb, q16, 5)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect()
     val recall = approx.count(truth.contains).toDouble / truth.size
     // uniform-random embeddings are PQ's worst case (no cluster
@@ -781,10 +787,9 @@ class SimilaritySpec extends SparkSpec {
       rows.map(t => (t._1, t._2)).count(truthB.contains)
         .toDouble / truthB.size
     }
-    val nonres = recallOf(Similarity.ivfTopKPq(df, qids, 3,
-      nprobe = 2, m = 2, kSub = 2, iters = 2, dim = 8))
-    val res = recallOf(Similarity.ivfTopKPqResidual(df, qids, 3,
-      nprobe = 2, m = 2, kSub = 2, iters = 2, dim = 8))
+    val nonres = recallOf(Similarity.pqSearch(ivf8, df, qids, 3))
+    val res = recallOf(Similarity.pqSearch(ivf8.copy(residual = true),
+      df, qids, 3))
     // deterministic fits: measured non-residual 2/3, residual 3/4
     assert(res >= nonres,
       s"residual recall $res < non-residual $nonres on clustered data")
@@ -803,10 +808,9 @@ class SimilaritySpec extends SparkSpec {
     def recallC(r: org.apache.spark.sql.DataFrame): Double =
       r.select("query_id", "neighbor_id").as[(Long, Long)]
         .collect().count(truth.contains).toDouble / truth.size
-    val nonresC = recallC(Similarity.ivfTopKPq(emb, q16, 5, nprobe = 3,
-      m = 16, kSub = 32, iters = 2))
-    val resC = recallC(Similarity.ivfTopKPqResidual(emb, q16, 5,
-      nprobe = 3, m = 16, kSub = 32, iters = 2))
+    val nonresC = recallC(Similarity.pqSearch(ivf64, emb, q16, 5))
+    val resC = recallC(Similarity.pqSearch(
+      ivf64.copy(residual = true), emb, q16, 5))
     assert(resC >= nonresC - 0.05,
       s"residual recall $resC collapsed vs non-residual $nonresC")
   }
@@ -830,12 +834,11 @@ class SimilaritySpec extends SparkSpec {
     def recallOf(r: org.apache.spark.sql.DataFrame): Double =
       r.select("query_id", "neighbor_id").as[(Long, Long)]
         .collect().count(truth.contains).toDouble / truth.size
-    val nonres = recallOf(Similarity.ivfTopKPq(df, qids, 3,
-      nprobe = 2, m = 2, kSub = 2, iters = 2, dim = 8))
-    val res = recallOf(Similarity.ivfTopKPqResidual(df, qids, 3,
-      nprobe = 2, m = 2, kSub = 2, iters = 2, dim = 8))
-    val resbal = recallOf(Similarity.ivfTopKPqResidualBalanced(df,
-      qids, 3, nprobe = 2, m = 2, kSub = 2, iters = 2, dim = 8))
+    val nonres = recallOf(Similarity.pqSearch(ivf8, df, qids, 3))
+    val res = recallOf(Similarity.pqSearch(ivf8.copy(residual = true),
+      df, qids, 3))
+    val resbal = recallOf(Similarity.pqSearch(ivf8.copy(residual = true,
+      layout = PqLayout.VarianceBalanced), df, qids, 3))
     assert(resbal >= res,
       s"composition $resbal < residual parent $res")
     assert(resbal >= nonres,
@@ -853,10 +856,10 @@ class SimilaritySpec extends SparkSpec {
     def recallC(r: org.apache.spark.sql.DataFrame): Double =
       r.select("query_id", "neighbor_id").as[(Long, Long)]
         .collect().count(truthC.contains).toDouble / truthC.size
-    val resC = recallC(Similarity.ivfTopKPqResidual(emb, q16, 5,
-      nprobe = 3, m = 16, kSub = 32, iters = 2))
-    val resbalC = recallC(Similarity.ivfTopKPqResidualBalanced(emb,
-      q16, 5, nprobe = 3, m = 16, kSub = 32, iters = 2))
+    val resC = recallC(Similarity.pqSearch(
+      ivf64.copy(residual = true), emb, q16, 5))
+    val resbalC = recallC(Similarity.pqSearch(ivf64.copy(residual = true,
+      layout = PqLayout.VarianceBalanced), emb, q16, 5))
     assert(resbalC >= resC - 0.1,
       s"composition recall $resbalC collapsed vs residual $resC")
   }
@@ -893,13 +896,12 @@ class SimilaritySpec extends SparkSpec {
       .select("query_id", "neighbor_id").as[(Long, Long)]
       .collect().toSet
     assert(truthRot == truth, "rotation moved the exact ground truth")
-    val res = recallOf(Similarity.ivfTopKPqResidual(df, qids, 3,
-      nprobe = 2, m = 2, kSub = 2, iters = 2, dim = 8))
-    val opqExh = recallOf(Similarity.pqTopK(
-      Pca.applyRotation(df, rot), qids, 3,
-      m = 2, kSub = 2, iters = 2, dim = 8))
-    val opqRes = recallOf(Similarity.ivfTopKPqResidual(rotated, qids,
-      3, nprobe = 2, m = 2, kSub = 2, iters = 2, dim = 8))
+    val res = recallOf(Similarity.pqSearch(ivf8.copy(residual = true),
+      df, qids, 3))
+    val opqExh = recallOf(Similarity.pqSearch(PqSpec(m = 2, kSub = 2,
+      iters = 2, dim = 8, layout = PqLayout.Rotation(rot)), df, qids, 3))
+    val opqRes = recallOf(Similarity.pqSearch(ivf8.copy(residual = true,
+      layout = PqLayout.Rotation(rot)), df, qids, 3))
     assert(opqRes >= res,
       s"OPQ x residual $opqRes < residual parent $res")
     assert(opqRes >= opqExh,
@@ -917,12 +919,10 @@ class SimilaritySpec extends SparkSpec {
         .collect().count(truthC.contains).toDouble / truthC.size
     val (_, covC) = Pca.covMeans(emb, 64)
     val rotC = Pca.opqRotation(covC, 64, m = 16)
-    val resC = recallC(Similarity.ivfTopKPqResidual(emb, q16, 5,
-      nprobe = 3, m = 16, kSub = 32, iters = 2))
-    val opqResC = recallC(Similarity.ivfTopKPqResidual(
-      Pca.applyRotation(emb, rotC, keep = Seq("vec_id", "label"))
-        .localCheckpoint(),
-      q16, 5, nprobe = 3, m = 16, kSub = 32, iters = 2))
+    val resC = recallC(Similarity.pqSearch(
+      ivf64.copy(residual = true), emb, q16, 5))
+    val opqResC = recallC(Similarity.pqSearch(ivf64.copy(residual = true,
+      layout = PqLayout.Rotation(rotC)), emb, q16, 5))
     assert(opqResC >= resC - 0.1,
       s"OPQ x residual recall $opqResC collapsed vs residual $resC")
   }
@@ -932,10 +932,11 @@ class SimilaritySpec extends SparkSpec {
     val emb = graft.Tables.embeddings(spark, sf0001)
     val nn = emb.filter(col("embedding").isNotNull)
     val q16 = Similarity.sampleQueryIds(nn, 16)
-    val pred = pmod(col("vec_id"), lit(3)) === 0
+    val pred = PqFilter.vecIdMultipleOf(3)
     // catalog shape: nprobe widened 3 → 5 for ~1/3 selectivity
-    val got = Similarity.ivfTopKPq(emb, q16, 5, nprobe = 5, m = 16,
-      kSub = 32, iters = 2, candidateFilter = Some(pred))
+    val got = Similarity.pqSearch(ivf64.copy(
+      coarse = Some(PqCoarse(nprobe = 5)), filter = Some(pred)),
+      emb, q16, 5)
     assert(got.filter(pmod(col("neighbor_id"), lit(3)) =!= 0).isEmpty,
       "a result violated the candidate predicate")
     // all-probes: the filtered composition must equal the exhaustive
@@ -943,12 +944,12 @@ class SimilaritySpec extends SparkSpec {
     // and codes are filter-agnostic, so adc_dot values are identical
     // row-for-row)
     val nLabels = nn.select("label").distinct().count().toInt
-    val all = Similarity.ivfTopKPq(emb, q16, 5, nprobe = nLabels,
-        m = 16, kSub = 32, iters = 2, candidateFilter = Some(pred))
+    val allProbes = ivf64.copy(coarse = Some(PqCoarse(nprobe = nLabels)))
+    val all = Similarity.pqSearch(allProbes.copy(filter = Some(pred)),
+        emb, q16, 5)
       .orderBy("query_id", "rank").collect().toSeq
     val nCorpus = nn.count().toInt
-    val exhaustive = Similarity.ivfTopKPq(emb, q16, nCorpus,
-        nprobe = nLabels, m = 16, kSub = 32, iters = 2)
+    val exhaustive = Similarity.pqSearch(allProbes, emb, q16, nCorpus)
       .filter(pmod(col("neighbor_id"), lit(3)) === 0)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id"))
@@ -968,7 +969,8 @@ class SimilaritySpec extends SparkSpec {
     val emb = graft.Tables.embeddings(spark, sf0001)
     val nn = emb.filter(col("embedding").isNotNull)
     val q16 = Similarity.sampleQueryIds(nn, 16)
-    val pred = pmod(col("vec_id"), lit(2)) === 0
+    val filter = PqFilter.vecIdMultipleOf(2)
+    val pred = filter.column
     val n = nn.count()
     val m = nn.filter(pred).count()
     val l = nn.select("label").distinct().count()
@@ -976,12 +978,13 @@ class SimilaritySpec extends SparkSpec {
     assert(Similarity.autoNprobe(nn, 3, pred) == expected)
     assert(expected > 3 && expected < l,
       s"fixture widening degenerate (nprobe=$expected, labels=$l)")
-    val auto = Similarity.ivfTopKPq(emb, q16, 5,
-        nprobe = Similarity.autoNprobe(nn, 3, pred), m = 16,
-        kSub = 32, iters = 2, candidateFilter = Some(pred))
+    val auto = Similarity.pqSearch(ivf64.copy(
+        coarse = Some(PqCoarse(nprobe = 3, widenForFilter = true)),
+        filter = Some(filter)), emb, q16, 5)
       .orderBy("query_id", "rank").collect().toSeq
-    val hand = Similarity.ivfTopKPq(emb, q16, 5, nprobe = expected,
-        m = 16, kSub = 32, iters = 2, candidateFilter = Some(pred))
+    val hand = Similarity.pqSearch(ivf64.copy(
+        coarse = Some(PqCoarse(nprobe = expected)),
+        filter = Some(filter)), emb, q16, 5)
       .orderBy("query_id", "rank").collect().toSeq
     assert(auto == hand)
     assert(auto.forall(_.getLong(1) % 2 == 0),
@@ -1001,17 +1004,16 @@ class SimilaritySpec extends SparkSpec {
       .createTempDirectory("pqidx_spec").toString
     try {
       spark.sharedState.cacheManager.clearCache()
-      Similarity.buildPqIndex(emb, dir, m = 16, kSub = 32, iters = 2,
-        fitSampleMod = 4L)
+      val spec = ivf64.copy(fitSampleMod = 4L)
+      Similarity.buildPqIndex(spec, emb, dir)
       val nLabelDirs = Option(new java.io.File(s"$dir/codes")
         .listFiles()).toSeq.flatten.count(_.getName.startsWith("label="))
       assert(nLabelDirs > 3,
         s"layout too small to prove pruning: $nLabelDirs label dirs")
-      val probe = Similarity.pqIndexProbe(spark, dir, emb, q16,
-        k = 5, nprobe = 3)
+      val probe = Similarity.pqIndexProbe(spark, dir, spec, emb, q16,
+        k = 5)
       val got = probe.orderBy("query_id", "rank").collect().toSeq
-      val want = Similarity.ivfTopKPq(emb, q16, 5, nprobe = 3, m = 16,
-          kSub = 32, iters = 2, fitSampleMod = 4L)
+      val want = Similarity.pqSearch(spec, emb, q16, 5)
         .orderBy("query_id", "rank").collect().toSeq
       assert(got == want, "stored layout changed results")
       // the executed codes scan reads ONLY the probed labels'
@@ -1026,8 +1028,9 @@ class SimilaritySpec extends SparkSpec {
         case f: FileSourceScanExec => Seq(f)
         case o => o.children.flatMap(allScans)
       }
-      val one = Similarity.pqIndexProbe(spark, dir, emb,
-        q16.limit(1), k = 5, nprobe = 1)
+      val one = Similarity.pqIndexProbe(spark, dir,
+        spec.copy(coarse = Some(PqCoarse(nprobe = 1))), emb,
+        q16.limit(1), k = 5)
       one.collect()
       val codeScans = allScans(one.queryExecution.executedPlan)
         .filter(_.toString.contains("codes"))
@@ -1059,7 +1062,7 @@ class SimilaritySpec extends SparkSpec {
     def v(a: Int, b: Int, j: Int): Seq[Float] =
       (Seq((2 * a - 1) * 10.0, (2 * b - 1) * 10.0) ++
         (2 until 8).map(i => 0.01 * j * (i - 1))).map(_.toFloat)
-    // vec_ids are assigned so the two SMALLEST ids — pqTopK's
+    // vec_ids are assigned so the two SMALLEST ids — pqSearch's
     // deterministic codebook seeds — come from clusters (0,0) and
     // (1,1): both subspace signals are seeded with both of their
     // values, isolating the allocation effect from seed starvation.
@@ -1076,10 +1079,10 @@ class SimilaritySpec extends SparkSpec {
     def recallOf(r: org.apache.spark.sql.DataFrame): Double =
       r.select("query_id", "neighbor_id").as[(Long, Long)]
         .collect().count(truth.contains).toDouble / truth.size
-    val contig = recallOf(Similarity.pqTopK(df, qids, 3,
-      m = 2, kSub = 2, iters = 2, dim = 8))
-    val balanced = recallOf(Similarity.pqTopKBalanced(df, qids, 3,
-      m = 2, kSub = 2, iters = 2, dim = 8))
+    val pq8 = PqSpec(m = 2, kSub = 2, iters = 2, dim = 8)
+    val contig = recallOf(Similarity.pqSearch(pq8, df, qids, 3))
+    val balanced = recallOf(Similarity.pqSearch(
+      pq8.copy(layout = PqLayout.VarianceBalanced), df, qids, 3))
     assert(balanced > contig,
       s"balanced recall $balanced !> contiguous $contig on " +
         "anisotropic data")
@@ -1091,9 +1094,8 @@ class SimilaritySpec extends SparkSpec {
     // reward allocation
     val (_, cov) = Pca.covMeans(df, 8)
     val rot = Pca.opqRotation(cov, 8, m = 2)
-    val opq = recallOf(Similarity.pqTopK(
-      Pca.applyRotation(df, rot), qids, 3,
-      m = 2, kSub = 2, iters = 2, dim = 8))
+    val opq = recallOf(Similarity.pqSearch(
+      pq8.copy(layout = PqLayout.Rotation(rot)), df, qids, 3))
     assert(opq >= balanced,
       s"trained rotation $opq < balanced heuristic $balanced on " +
         "anisotropic data")
@@ -1110,10 +1112,9 @@ class SimilaritySpec extends SparkSpec {
     def recallC(r: org.apache.spark.sql.DataFrame): Double =
       r.select("query_id", "neighbor_id").as[(Long, Long)]
         .collect().count(truthC.contains).toDouble / truthC.size
-    val plainC = recallC(Similarity.pqTopK(emb, q16, 5,
-      m = 16, kSub = 32, iters = 2))
-    val balC = recallC(Similarity.pqTopKBalanced(emb, q16, 5,
-      m = 16, kSub = 32, iters = 2))
+    val plainC = recallC(Similarity.pqSearch(pq64, emb, q16, 5))
+    val balC = recallC(Similarity.pqSearch(
+      pq64.copy(layout = PqLayout.VarianceBalanced), emb, q16, 5))
     assert(balC >= plainC - 0.15,
       s"balanced recall $balC collapsed vs contiguous $plainC")
   }
@@ -1124,14 +1125,14 @@ class SimilaritySpec extends SparkSpec {
     val emb = graft.Tables.embeddings(spark, sf0001)
     val nn = emb.filter(col("embedding").isNotNull)
     val q16 = Similarity.sampleQueryIds(nn, 16)
-    val full = Similarity.pqTopK(emb, q16, 5, m = 16, kSub = 32,
-      iters = 2).orderBy("query_id", "rank").collect().toSeq
-    val mod1 = Similarity.pqTopK(emb, q16, 5, m = 16, kSub = 32,
-      iters = 2, fitSampleMod = 1L)
+    val full = Similarity.pqSearch(pq64, emb, q16, 5)
+      .orderBy("query_id", "rank").collect().toSeq
+    val mod1 = Similarity.pqSearch(pq64.copy(fitSampleMod = 1L), emb,
+        q16, 5)
       .orderBy("query_id", "rank").collect().toSeq
     assert(mod1 == full)
-    val sampled = Similarity.pqTopK(emb, q16, 5, m = 16, kSub = 32,
-        iters = 2, fitSampleMod = 4L)
+    val sampled = Similarity.pqSearch(pq64.copy(fitSampleMod = 4L), emb,
+        q16, 5)
       .orderBy("query_id", "rank")
       .select("query_id", "neighbor_id", "rank")
       .as[(Long, Long, Int)].collect()
@@ -1160,15 +1161,14 @@ class SimilaritySpec extends SparkSpec {
     val emb = graft.Tables.embeddings(spark, sf0001)
     val nn = emb.filter(col("embedding").isNotNull)
     val q16 = Similarity.sampleQueryIds(nn, 16)
-    val full = Similarity.ivfTopKPq(emb, q16, 5, nprobe = 3, m = 16,
-      kSub = 32, iters = 2).orderBy("query_id", "rank")
-      .collect().toSeq
-    val mod1 = Similarity.ivfTopKPq(emb, q16, 5, nprobe = 3, m = 16,
-      kSub = 32, iters = 2, fitSampleMod = 1L)
+    val full = Similarity.pqSearch(ivf64, emb, q16, 5)
+      .orderBy("query_id", "rank").collect().toSeq
+    val mod1 = Similarity.pqSearch(ivf64.copy(fitSampleMod = 1L), emb,
+        q16, 5)
       .orderBy("query_id", "rank").collect().toSeq
     assert(mod1 == full)
-    val sampled = Similarity.ivfTopKPq(emb, q16, 5, nprobe = 3,
-        m = 16, kSub = 32, iters = 2, fitSampleMod = 4L)
+    val sampled = Similarity.pqSearch(ivf64.copy(fitSampleMod = 4L), emb,
+        q16, 5)
       .orderBy("query_id", "rank")
       .select("query_id", "neighbor_id", "rank")
       .as[(Long, Long, Int)].collect()
@@ -1201,17 +1201,16 @@ class SimilaritySpec extends SparkSpec {
     val q16 = Similarity.sampleQueryIds(nn, 16)
     val (_, cov) = Pca.covMeans(emb, 64)
     val rot = Pca.opqRotation(cov, 64, m = 16)
-    val rotated = Pca.applyRotation(emb, rot,
-      keep = Seq("vec_id", "label")).localCheckpoint()
-    val full = Similarity.ivfTopKPqResidual(rotated, q16, 5,
-        nprobe = 3, m = 16, kSub = 32, iters = 2)
+    val opqRes = ivf64.copy(residual = true,
+      layout = PqLayout.Rotation(rot))
+    val full = Similarity.pqSearch(opqRes, emb, q16, 5)
       .orderBy("query_id", "rank").collect().toSeq
-    val mod1 = Similarity.ivfTopKPqResidual(rotated, q16, 5,
-        nprobe = 3, m = 16, kSub = 32, iters = 2, fitSampleMod = 1L)
+    val mod1 = Similarity.pqSearch(opqRes.copy(fitSampleMod = 1L), emb,
+        q16, 5)
       .orderBy("query_id", "rank").collect().toSeq
     assert(mod1 == full)
-    val sampled = Similarity.ivfTopKPqResidual(rotated, q16, 5,
-        nprobe = 3, m = 16, kSub = 32, iters = 2, fitSampleMod = 4L)
+    val sampled = Similarity.pqSearch(opqRes.copy(fitSampleMod = 4L), emb,
+        q16, 5)
       .orderBy("query_id", "rank")
       .select("query_id", "neighbor_id", "rank")
       .as[(Long, Long, Int)].collect()
@@ -1282,12 +1281,12 @@ class SimilaritySpec extends SparkSpec {
         .select("cid", "centroid").as[(Int, Seq[Double])].collect()
         .map { case (cid, c) => (si, cid) -> c }
     }.toMap
-    // batched: what pqTopK actually runs (private — reached through
+    // batched: what pqSearch actually runs (private — reached through
     // the query, so compare through the LUT-visible quantity: the
-    // pqTopK output against a hand-built ADC over the per-sub fit)
+    // pqSearch output against a hand-built ADC over the per-sub fit)
     val qids = Similarity.sampleQueryIds(emb, 4).localCheckpoint()
-    val pq = Similarity.pqTopK(emb, qids, k = 3, m = m, kSub = kSub,
-      iters = 2)
+    val pq = Similarity.pqSearch(PqSpec(m = m, kSub = kSub, iters = 2),
+      emb, qids, k = 3)
     // hand ADC from the per-subspace reference fit
     val codes = (0 until m).flatMap { si =>
       val sliced = base.select(col("vec_id"),
@@ -1318,17 +1317,17 @@ class SimilaritySpec extends SparkSpec {
     val got = pq.select("query_id", "neighbor_id")
       .as[(Long, Long)].collect().toSet
     assert(got == want,
-      "batched pqTopK diverged from the per-subspace reference ADC")
+      "batched pqSearch diverged from the per-subspace reference ADC")
     // IVF×PQ with every label probed ranks the same candidate set as
     // the unpruned PQ scan — the pruning-only invariant (mirrors the
     // int8 nprobe=all spec)
     val nLabels = emb.select("label").distinct().count().toInt
-    val full = Similarity.ivfTopKPq(emb, qids, k = 3, nprobe = nLabels,
-      m = m, kSub = kSub, iters = 2)
+    val full = Similarity.pqSearch(PqSpec(m = m, kSub = kSub, iters = 2,
+      coarse = Some(PqCoarse(nprobe = nLabels))), emb, qids, k = 3)
       .select("query_id", "neighbor_id", "rank")
       .as[(Long, Long, Int)].collect().toSet
-    val plain = Similarity.pqTopK(emb, qids, k = 3, m = m, kSub = kSub,
-      iters = 2)
+    val plain = Similarity.pqSearch(PqSpec(m = m, kSub = kSub,
+      iters = 2), emb, qids, k = 3)
       .select("query_id", "neighbor_id", "rank")
       .as[(Long, Long, Int)].collect().toSet
     assert(full == plain,

@@ -867,4 +867,27 @@ class TrainingDataSpec extends SparkSpec {
     assert(uniTotal == uniStandalone)
     e.unpersist()
   }
+
+  test("OPQ rotation oracle: marker before any run, rotation literals " +
+      "after exactly one dataset, ambiguity marker after two") {
+    // a name no catalog entry uses, so queries other suites run in
+    // this JVM cannot touch its state
+    val name = "opq_oracle_spec_probe"
+    val spec = graft.ext.PqSpec(m = 16, kSub = 32, iters = 2)
+    val none = TrainingData.rotationOracle(name, spec)
+    assert(none.contains(s"run $name before dumping its oracle"), none)
+    val rot = Array.tabulate(64, 64)((i, j) => if (i == j) 0.5 else 0.0)
+    TrainingData.recordRotation(name, "/data/a", rot)
+    val one = TrainingData.rotationOracle(name, spec)
+    assert(!one.contains(" AS err"), one)
+    assert(one.contains("(0.5) * emb[1] + (0.0) * emb[2]") &&
+      one.contains("base AS MATERIALIZED"), one.take(400))
+    // the same dataset again is still one rotation
+    TrainingData.recordRotation(name, "/data/a", rot)
+    assert(TrainingData.rotationOracle(name, spec) == one)
+    TrainingData.recordRotation(name, "/data/b", rot)
+    val many = TrainingData.rotationOracle(name, spec)
+    assert(many.contains("ran against 2 datasets") &&
+      many.contains("rotation ambiguous"), many)
+  }
 }
