@@ -12,7 +12,9 @@ by all columns, and compares values exactly.
 Besides the stdout report, writes a machine artifact
 CORRECTNESS_local.json (same per-query schema as the driver's gate:
 {name: {"status": "pass"|"fail-..."|"rows-only", "rows": N,
-"oracle_s": seconds}}) next to this script's repo root, and exits
+"oracle_s": seconds}}) into the verify output dir, next to
+oracle_sql.json — a run over a subset of entries never overwrites a
+committed full-gate artifact — and exits
 NON-ZERO if the artifact would be empty — round 12's driver artifact
 was a 2-byte `{}` and nothing repo-side noticed; a gate this central
 must fail loudly when it measured nothing.
@@ -144,8 +146,7 @@ def main(sf_dir, out_dir):
                   reverse=True)[:10]
     print("slowest oracles: " +
           ", ".join(f"{n}={s}s" for s, n in slow if s > 0))
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    art = os.path.join(repo_root, "CORRECTNESS_local.json")
+    art = os.path.join(out_dir, "CORRECTNESS_local.json")
     with open(art, "w") as f:
         json.dump(results, f, indent=1, sort_keys=True)
     print(f"wrote {art} ({len(results)} entries)")

@@ -643,7 +643,7 @@ object ScaleProbe {
     * and the two legs are timed separately, mirroring the production
     * cost model:
     *  - BUILD (amortized index state, the FAISS train+add path):
-    *    `ivfIndexBuild` with k = ⌈N/64⌉ — r9's k ∝ N quantizer; cost
+    *    `ivfBuild` with k = ⌈N/64⌉ — r9's k ∝ N quantizer; cost
     *    grows with N × k and is paid once per refit cycle, not per
     *    batch. Centroids + members are materialized (localCheckpoint)
     *    exactly as a deployment persists them.
@@ -667,18 +667,17 @@ object ScaleProbe {
     // the sample bound the way production applies it)
     val fitMod = if (scale >= 100) 10L else 1L
     val tB0 = System.nanoTime()
-    val built =
-      if (sqrtK) graft.ext.Similarity.ivfIndexBuildSqrt(manifest,
-        iters = 2, fitSampleMod = fitMod)
-      else graft.ext.Similarity.ivfIndexBuild(manifest,
-        targetPartitionSize = 64, iters = 2, fitSampleMod = fitMod)
+    val spec = graft.ext.IvfSpec(graft.ext.Coarse.Kmeans(
+      if (sqrtK) graft.ext.Coarse.SqrtRows else graft.ext.Coarse.PerRows(64),
+      iters = 2, nprobe = 3, fitSampleMod = fitMod))
+    val built = graft.ext.Similarity.ivfBuild(spec, manifest)
     val index = built.copy(
       centroids = built.centroids.localCheckpoint(),
       members = built.members.localCheckpoint())
     val tBuild = (System.nanoTime() - tB0) / 1e9
     val times = (0 until reps).map { _ =>
       val t0 = System.nanoTime()
-      graft.ext.Similarity.ivfProbe(index, batch, k = 3, nprobe = 3)
+      graft.ext.Similarity.ivfProbe(spec, index, batch, k = 3)
         .write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9
     }
@@ -1500,7 +1499,7 @@ object ScaleProbe {
     val qids = graft.ext.Similarity.sampleQueryIds(
       emb.filter(col("embedding").isNotNull), 16)
     val spec = graft.ext.PqSpec(m = 16, kSub = 32, iters = 2,
-      coarse = Some(graft.ext.PqCoarse(nprobe = 3)), fitSampleMod = 4L)
+      coarse = Some(graft.ext.Coarse.Labels(nprobe = 3)), fitSampleMod = 4L)
     val idxDir = java.nio.file.Files
       .createTempDirectory("graft_pqidx_probe").toString
     try {

@@ -1,0 +1,320 @@
+package graft.ext
+
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions._
+
+import graft.queries.QueryUtil.{kmUnrolledCoreSplitSql, qidsSql,
+  quantizeSql, sqlCosine, sqlSumDec}
+
+/** The coarse level of an ANN index: how the corpus is cut into cells
+  * and how many of them each query probes. [[IvfSpec]] searches with
+  * every variant; [[PqSpec]] shares the label cells. Probing is one
+  * rule at every level: keep the `nprobe` cells of best rounded
+  * similarity, ties to the smaller cell id. */
+sealed trait Coarse { def nprobe: Int }
+
+object Coarse {
+
+  /** The per-label exact decimal-mean centroids. `widenForFilter`
+    * derives the probe count from the candidate filter's selectivity
+    * instead (min(labels, ⌈nprobe·N / N_match⌉),
+    * [[Similarity.autoNprobe]]). */
+  final case class Labels(nprobe: Int, widenForFilter: Boolean = false)
+      extends Coarse
+
+  /** A deterministic k-means quantizer ([[Similarity.kmeansCentroids]]):
+    * `iters` Lloyd rounds seeded on the k smallest vec_ids, fitted on
+    * the `vec_id % fitSampleMod == 0` sample while the whole corpus is
+    * assigned. */
+  final case class Kmeans(k: KRule, iters: Int, nprobe: Int,
+      fitSampleMod: Long = 1L) extends Coarse {
+    require(fitSampleMod >= 1L, "fitSampleMod must be >= 1")
+  }
+
+  /** Label cells split into `k2` k-means sub-cells each; a query probes
+    * `nprobe` labels, then `nprobe2` sub-cells inside each. */
+  final case class TwoLevel(nprobe: Int, k2: Int, nprobe2: Int,
+      iters: Int) extends Coarse
+
+  /** How many k-means cells a corpus of `rows` rows gets (a fixed k
+    * never counts them). */
+  sealed trait KRule {
+    def of(rows: => Long): Int
+    /** The same rule as a DuckDB scalar over the CTE `from`. */
+    def sql(from: String): String
+  }
+  final case class Fixed(n: Int) extends KRule {
+    def of(rows: => Long): Int = n
+    def sql(from: String): String = n.toString
+  }
+  /** ⌈N / target⌉: cell size, and with it probe cost, stays flat. */
+  final case class PerRows(target: Int) extends KRule {
+    def of(rows: => Long): Int =
+      math.max(1, math.ceil(rows.toDouble / target).toInt)
+    def sql(from: String): String =
+      s"SELECT CAST(ceil(count(*) / $target.0) AS INT) FROM $from"
+  }
+  /** ⌈√N⌉, the classical IVF operating point (IEEE sqrt is correctly
+    * rounded, so both engines agree). */
+  case object SqrtRows extends KRule {
+    def of(rows: => Long): Int =
+      math.max(1, math.ceil(math.sqrt(rows.toDouble)).toInt)
+    def sql(from: String): String =
+      s"SELECT CAST(ceil(sqrt(count(*))) AS INT) FROM $from"
+  }
+
+  /** `dims`/`cent`: the label centroids of the (label, emb) CTE `src`
+    * as exact decimal means — [[Similarity.labelCentroids]]' mirror. */
+  def centroidsSql(src: String, dim: Int): String =
+    s"""dims AS (SELECT label, i, ${sqlSumDec("emb[i]")} / count(*) AS cv
+       |  FROM $src CROSS JOIN range(1, ${dim + 1}) t(i)
+       |  GROUP BY label, i),
+       |cent AS (SELECT label, list(cv ORDER BY i) AS centroid
+       |  FROM dims GROUP BY label)""".stripMargin
+
+  /** `${name}s`/`name`: each query's probed cells —
+    * [[Similarity.probeCells]]' mirror. `pairs` is the FROM clause of
+    * (query, cell) pairs, `cols` the columns kept (expressions with
+    * an alias or a qualified name), `sim` the rounded similarity,
+    * ranked per `part`. */
+  def probedSql(name: String, pairs: String, cols: Seq[String],
+      sim: String, part: Seq[String], cell: String, nprobe: String)
+      : String = {
+    val out = cols.map(_.split(" AS |\\.").last)
+    s"""${name}s AS (SELECT ${cols.mkString(", ")}, $sim AS c_sim
+       |  FROM $pairs),
+       |$name AS (SELECT ${out.mkString(", ")} FROM (
+       |    SELECT *, row_number() OVER (PARTITION BY ${part.mkString(", ")}
+       |      ORDER BY c_sim DESC, $cell ASC) AS prn FROM ${name}s)
+       |  WHERE prn <= $nprobe)""".stripMargin
+  }
+
+  /** The probe count of `c` over the CTE `base` as SQL: the literal, or
+    * the selectivity-widened scalar subquery. */
+  def nprobeSql(c: Labels, filter: Option[AnnFilter], base: String)
+      : String =
+    if (!c.widenForFilter) c.nprobe.toString
+    else {
+      val hits = s"sum(CASE WHEN ${filter.get.sql} THEN 1 ELSE 0 END)"
+      s"(SELECT least(count(DISTINCT label), " +
+        s"(${c.nprobe} * count(*) + $hits - 1) // $hits) FROM $base)"
+    }
+}
+
+/** What the fine ranking scores: the exact double cosine, or the
+  * quantized cosine of the 72-byte int8 codes
+  * ([[graft.functions.QuantizeOps]]) for corpus, centroids and
+  * queries alike. */
+sealed trait IvfCodes
+object IvfCodes {
+  case object Exact extends IvfCodes
+  /** `rerank = Some(n)`: keep the n best int8 candidates per query and
+    * rescore them with the exact cosine. */
+  final case class Int8(rerank: Option[Int] = None) extends IvfCodes
+}
+
+/** A candidate restriction applied before fine ranking (the coarse
+  * level stays filter-agnostic): the Spark predicate and its DuckDB
+  * mirror over the same `vec_id`. */
+final case class AnnFilter(column: Column, sql: String)
+object AnnFilter {
+  /** Candidates whose vec_id is a multiple of `n`. */
+  def vecIdMultipleOf(n: Int): AnnFilter =
+    AnnFilter(pmod(col("vec_id"), lit(n)) === 0,
+      s"((vec_id % $n) + $n) % $n = 0")
+}
+
+/** One inverted-file ANN search: the corpus is cut into `coarse`
+  * cells, each query probes its nearest cells, and only the vectors
+  * in them are scored under `codes`, optionally restricted by
+  * `filter`. `otherLabel` mines hard negatives: the query's own label
+  * cell is never probed and same-label candidates are dropped.
+  *
+  * [[Similarity.ivfSearch]] (a query-id sample), the ingest gate
+  * ([[Similarity.ivfBuild]] + [[Similarity.ivfProbe]], an incoming
+  * batch against a frozen index) and the DuckDB oracle
+  * ([[IvfSpec.oracleSql]]) all read this one value. */
+final case class IvfSpec(coarse: Coarse,
+    codes: IvfCodes = IvfCodes.Exact, filter: Option[AnnFilter] = None,
+    otherLabel: Boolean = false) {
+  private def labelCells = coarse.isInstanceOf[Coarse.Labels]
+  require(codes == IvfCodes.Exact || labelCells,
+    "int8 codes run on label cells")
+  require(!otherLabel || labelCells, "otherLabel excludes label cells")
+  require(coarse match {
+    case c: Coarse.Labels => !c.widenForFilter || filter.isDefined
+    case _ => true
+  }, "widenForFilter needs a candidate filter")
+
+  /** The corpus keeps its label: label cells and the hard-negative
+    * exclusion read it. */
+  private[ext] def keepsLabel: Boolean = !coarse.isInstanceOf[Coarse.Kmeans]
+
+  /** The corpus is read by several jobs — the Lloyd fit, or the
+    * centroid pass ahead of quantization — so the search persists it
+    * and materializes its top-k before releasing it. */
+  private[ext] def persistsCorpus: Boolean =
+    coarse.isInstanceOf[Coarse.Kmeans] || codes != IvfCodes.Exact
+
+  /** The k-means fine-rank join carries no broadcast hint: an ingest
+    * batch, which the probed frame scales with, can be large. */
+  private[ext] def hintsProbed: Boolean = !coarse.isInstanceOf[Coarse.Kmeans]
+}
+
+object IvfSpec {
+
+  /** The embeddings table's dimension (the oracle unrolls per dim). */
+  private val Dim = 64
+
+  /** The DuckDB oracle of `spec`: [[Similarity.ivfSearch]] over the
+    * 16-query sample, or with `batchMod` the ingest gate — the index
+    * built on `vec_id % batchMod <> 0`, probed by the rest,
+    * (new_id, match_id) out. Top-`k` per query. */
+  def oracleSql(spec: IvfSpec, k: Int, batchMod: Option[Int] = None)
+      : String = {
+    import spec._
+    val int8 = codes != IvfCodes.Exact
+    val (qid, nid) =
+      if (batchMod.isDefined) ("new_id", "match_id")
+      else ("query_id", "neighbor_id")
+    def rows(where: String) =
+      s"SELECT vec_id, label, embedding::DOUBLE[] AS emb\n" +
+        s"  FROM embeddings WHERE embedding IS NOT NULL$where"
+    val corpus = batchMod.fold(s"base AS (${rows("")})") { m =>
+      s"base AS (${rows(s" AND vec_id % $m <> 0")}),\n" +
+        s"newb AS (${rows(s" AND vec_id % $m = 0")})"
+    }
+    // the codes: corpus (…, emb) or (…, qv, qn), queries q_-prefixed
+    val quantized = if (int8) quantizeSql(" label,") + ",\n" else ""
+    val coded = if (int8) "qn" else "base"
+    val vec = if (int8) Seq("qv", "qn") else Seq("emb")
+    def sim(a: String, b: String): String =
+      if (int8) s"round(list_dot_product($a.q_qv, $b.qv) / " +
+        s"($a.q_qn * $b.qn), 6)"
+      else sqlCosine(s"$a.q_emb", s"$b.emb")
+    val qLabel = if (otherLabel) Seq("q_label") else Nil
+    val qCols = vec.map(v => s"q_$v") ++ qLabel
+    val queries = batchMod.fold(
+      s"""$qidsSql,
+         |q AS (SELECT b.vec_id AS query_id,
+         |    ${(vec.map(v => s"b.$v AS q_$v") ++
+                 qLabel.map(_ => "b.label AS q_label")).mkString(", ")}
+         |  FROM $coded b JOIN qids s ON b.vec_id = s.vec_id)"""
+        .stripMargin)(_ =>
+      "q AS (SELECT vec_id AS new_id, emb AS q_emb FROM newb)")
+    def probeCols(cell: String*) = (qid +: qCols).map(c => s"q.$c") ++
+      cell.map(c => s"c.$c")
+    // cell centroids renamed to the corpus' code columns
+    val (coarseCtes, members, probed, on) = coarse match {
+      case c: Coarse.Labels =>
+        val cents =
+          if (!int8) "cents AS (SELECT label, centroid AS emb FROM cent)"
+          else quantizeSql(src = "(SELECT label, centroid AS emb " +
+            "FROM cent)", key = "label", prefix = "c")
+        val pairs = s"q CROSS JOIN ${if (int8) "cqn" else "cents"} c" +
+          (if (otherLabel) " WHERE c.label <> q.q_label" else "")
+        (s"""${Coarse.centroidsSql("base", Dim)},
+            |$cents,
+            |${Coarse.probedSql("probed", pairs, probeCols("label"),
+                sim("q", "c"), Seq(qid), "label",
+                Coarse.nprobeSql(c, filter, "base"))}""".stripMargin,
+          coded, "probed", "m.label = p.label")
+      case c: Coarse.Kmeans =>
+        val fit =
+          if (c.fitSampleMod == 1L) "base"
+          else s"(SELECT * FROM base WHERE vec_id % ${c.fitSampleMod} = 0)"
+        val last = s"c${c.iters}"
+        (s"""${kmUnrolledCoreSplitSql(fit, "base", c.k.sql("base"),
+                c.iters)},
+            |cents AS (SELECT cid, centroid AS emb FROM $last),
+            |${Coarse.probedSql("probed", "q CROSS JOIN cents c",
+                probeCols("cid"), sim("q", "c"), Seq(qid), "cid",
+                c.nprobe.toString)}""".stripMargin,
+          "members", "probed", "m.cid = p.cid")
+      case c: Coarse.TwoLevel =>
+        val last = s"sc${c.iters}"
+        (s"""${Coarse.centroidsSql("base", Dim)},
+            |cents AS (SELECT label, centroid AS emb FROM cent),
+            |${subCellsSql(c)},
+            |${Coarse.probedSql("probed", "q CROSS JOIN cents c",
+                probeCols("label"), sim("q", "c"), Seq(qid), "label",
+                c.nprobe.toString)},
+            |subs AS (SELECT label, scid, centroid AS emb FROM $last),
+            |${Coarse.probedSql("probed2",
+                "probed q JOIN subs c ON q.label = c.label",
+                probeCols("label", "scid"), sim("q", "c"),
+                Seq(qid, "label"), "scid", c.nprobe2.toString)}"""
+            .stripMargin,
+          "members", "probed2", "m.label = p.label AND m.scid = p.scid")
+    }
+    val cand = filter.fold(members)(f =>
+      s"(SELECT * FROM $members WHERE ${f.sql})")
+    val negLabel = if (otherLabel) "m.label AS neg_label, " else ""
+    val notSame = if (otherLabel) " AND m.label <> p.q_label" else ""
+    val ranked =
+      s"""scored AS (SELECT p.$qid, m.vec_id AS $nid, $negLabel
+         |    ${sim("p", "m")} AS cos_sim
+         |  FROM $cand m JOIN $probed p ON $on
+         |  WHERE m.vec_id <> p.$qid$notSame),
+         |ranked AS (SELECT *, CAST(row_number() OVER (PARTITION BY $qid
+         |    ORDER BY cos_sim DESC, $nid ASC) AS INT) AS rank
+         |  FROM scored)""".stripMargin
+    val out = if (otherLabel) s"$qid, $nid, neg_label" else s"$qid, $nid"
+    val tail = codes match {
+      case IvfCodes.Int8(Some(n)) =>
+        s""",
+           |cand AS (SELECT query_id, neighbor_id FROM ranked
+           |  WHERE rank <= $n),
+           |ex AS (SELECT c.query_id, c.neighbor_id,
+           |    ${sqlCosine("qb.emb", "nb.emb")} AS cos_sim
+           |  FROM cand c
+           |  JOIN base nb ON nb.vec_id = c.neighbor_id
+           |  JOIN base qb ON qb.vec_id = c.query_id),
+           |rr AS (SELECT *, CAST(row_number() OVER (PARTITION BY query_id
+           |    ORDER BY cos_sim DESC, neighbor_id ASC) AS INT) AS rank
+           |  FROM ex)
+           |SELECT query_id, neighbor_id, cos_sim, rank FROM rr
+           |WHERE rank <= $k ORDER BY query_id, rank""".stripMargin
+      case _ =>
+        s"""
+           |SELECT $out, cos_sim, rank FROM ranked
+           |WHERE rank <= $k ORDER BY $qid, rank""".stripMargin
+    }
+    s"""WITH $corpus,
+       |$quantized$queries,
+       |$coarseCtes,
+       |$ranked$tail""".stripMargin
+  }
+
+  /** The two-level grid's sub-cells: per label, `k2` seeds (smallest
+    * vec_ids), `iters` Lloyd rounds by rounded cosine, then the
+    * corpus' sub-cell membership `members` (vec_id, label, emb, scid)
+    * — [[Similarity]]'s per-label fit with `label` in every
+    * GROUP BY / PARTITION BY. */
+  private def subCellsSql(c: Coarse.TwoLevel): String = {
+    def assign(cent: String, out: String) =
+      s"""$out AS (SELECT vec_id, label, emb, scid FROM (
+         |  SELECT b.vec_id, b.label, b.emb, c.scid,
+         |    row_number() OVER (PARTITION BY b.vec_id
+         |      ORDER BY ${sqlCosine("b.emb", "c.centroid")} DESC,
+         |        c.scid) AS rn
+         |  FROM base b JOIN $cent c ON b.label = c.label)
+         |  WHERE rn = 1)""".stripMargin
+    def update(assigned: String, out: String) =
+      s"""${out}d AS (SELECT label, scid, i, ${sqlSumDec("emb[i]")}
+         |      / count(*) AS cv
+         |  FROM $assigned CROSS JOIN range(1, ${Dim + 1}) t(i)
+         |  GROUP BY label, scid, i),
+         |$out AS (SELECT label, scid, list(cv ORDER BY i) AS centroid
+         |  FROM ${out}d GROUP BY label, scid)""".stripMargin
+    val rounds = (1 to c.iters).map { r =>
+      s"${assign(s"sc${r - 1}", s"sa$r")},\n${update(s"sa$r", s"sc$r")}"
+    }
+    (s"""sc0 AS (SELECT label, CAST(rn - 1 AS INT) AS scid,
+        |    emb AS centroid
+        |  FROM (SELECT label, emb, row_number() OVER (
+        |      PARTITION BY label ORDER BY vec_id) AS rn FROM base)
+        |  WHERE rn <= ${c.k2})""".stripMargin +: rounds :+
+      assign(s"sc${c.iters}", "members")).mkString(",\n")
+  }
+}

@@ -1,16 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
-
 import graft.queries.QueryUtil.{qidsSql, sqlCosine, sqlSumDec}
-
-/** Coarse level of a PQ index: the per-label exact decimal-mean
-  * centroids, each query probing its `nprobe` nearest labels by
-  * rounded cosine. `widenForFilter` derives the probe count from the
-  * candidate filter's selectivity instead
-  * (min(labels, ⌈nprobe·N / N_match⌉), [[Similarity.autoNprobe]]). */
-final case class PqCoarse(nprobe: Int, widenForFilter: Boolean = false)
 
 /** Which dimensions share a codebook. The true inner product is
   * invariant under all three, so only the quantization error moves. */
@@ -27,38 +17,29 @@ object PqLayout {
   final case class Rotation(rot: Array[Array[Double]]) extends PqLayout
 }
 
-/** A candidate restriction applied to the code index before fine
-  * ranking (fits and codes stay filter-agnostic): the Spark predicate
-  * and its DuckDB mirror over the same `vec_id`. */
-final case class PqFilter(column: Column, sql: String)
-object PqFilter {
-  /** Candidates whose vec_id is a multiple of `n`. */
-  def vecIdMultipleOf(n: Int): PqFilter =
-    PqFilter(pmod(col("vec_id"), lit(n)) === 0,
-      s"((vec_id % $n) + $n) % $n = 0")
-}
-
 /** One product-quantization index (Jégou et al. 2011): `m` codebooks
   * of `kSub` L2 centroids over dim/m-dim subspaces, `iters` batched
   * Lloyd rounds seeded on the kSub smallest vec_ids, asymmetric (ADC)
   * inner-product scoring. The optional levels compose:
   *
-  *  - `coarse` — IVF pruning to the probed label partitions;
+  *  - `coarse` — IVF pruning to the probed label partitions (the
+  *    label cells [[IvfSpec]] shares);
   *  - `residual` — codebooks fitted on `v − c(v)` against the coarse
   *    centroid, ADC score `⟨q,c(v)⟩ + Σ LUT` (needs `coarse`);
   *  - `layout` — contiguous, variance-balanced or rotated subspaces;
   *  - `fitSampleMod` > 1 — seeds and Lloyd rounds run on the
   *    deterministic `vec_id % fitSampleMod == 0` sample while the full
   *    corpus is encoded;
-  *  - `filter` — candidates restricted before fine ranking.
+  *  - `filter` — candidates restricted on the code index before fine
+  *    ranking (fits and codes stay filter-agnostic).
   *
   * [[Similarity.pqSearch]], the stored index
   * ([[Similarity.buildPqIndex]] and its append/probe) and the DuckDB
   * oracle ([[PqSpec.oracleSql]]) all read this one value. */
 final case class PqSpec(m: Int, kSub: Int, iters: Int, dim: Int = 64,
-    coarse: Option[PqCoarse] = None, residual: Boolean = false,
+    coarse: Option[Coarse.Labels] = None, residual: Boolean = false,
     layout: PqLayout = PqLayout.Contiguous, fitSampleMod: Long = 1L,
-    filter: Option[PqFilter] = None) {
+    filter: Option[AnnFilter] = None) {
   require(m >= 1 && dim % m == 0, s"dim=$dim must split into m=$m")
   require(fitSampleMod >= 1L, "fitSampleMod must be >= 1")
   require(!residual || coarse.isDefined,
@@ -114,14 +95,8 @@ object PqSpec {
     }
     val coarseSrc = fitWhere.fold("base")(w =>
       s"(SELECT label, emb FROM base WHERE $w)")
-    val coarseCtes = coarse.fold("") { _ =>
-      s"""dims AS (SELECT label, i, ${sqlSumDec("emb[i]")} / count(*) AS cv
-         |  FROM $coarseSrc CROSS JOIN $allDims t(i)
-         |  GROUP BY label, i),
-         |cent AS (SELECT label, list(cv ORDER BY i) AS centroid
-         |  FROM dims GROUP BY label),
-         |""".stripMargin
-    }
+    val coarseCtes =
+      coarse.fold("")(_ => Coarse.centroidsSql(coarseSrc, dim) + ",\n")
     val residualCte =
       if (!residual) ""
       else s"""rbase AS (SELECT b.vec_id,
@@ -171,22 +146,13 @@ object PqSpec {
         .stripMargin
     }.mkString(",\n")
     val probeCtes = coarse.fold("") { c =>
-      val nprobe =
-        if (!c.widenForFilter) c.nprobe.toString
-        else {
-          val hits = s"sum(CASE WHEN ${filter.get.sql} THEN 1 ELSE 0 END)"
-          s"(SELECT least(count(DISTINCT label), " +
-            s"(${c.nprobe} * count(*) + $hits - 1) // $hits) FROM base)"
-        }
-      val qc = if (residual) ", qc_dot" else ""
-      s"""probes AS (SELECT query_id, label,
-         |    ${sqlCosine("q_emb", "centroid")} AS c_sim,
-         |    list_dot_product(q_emb, centroid) AS qc_dot
-         |  FROM q CROSS JOIN cent),
-         |probed AS (SELECT query_id, label$qc FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY query_id
-         |      ORDER BY c_sim DESC, label ASC) AS prn FROM probes)
-         |  WHERE prn <= $nprobe),
+      val qc =
+        if (residual) Seq("list_dot_product(q.q_emb, c.centroid) AS qc_dot")
+        else Nil
+      s"""${Coarse.probedSql("probed", "q CROSS JOIN cent c",
+            Seq("q.query_id", "c.label") ++ qc,
+            sqlCosine("q.q_emb", "c.centroid"), Seq("query_id"), "label",
+            Coarse.nprobeSql(c, filter, "base"))},
          |codesl AS (SELECT c.vec_id, b.label, c.sub, c.cid
          |  FROM codes c JOIN base b ON c.vec_id = b.vec_id),
          |""".stripMargin

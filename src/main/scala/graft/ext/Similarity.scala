@@ -51,12 +51,13 @@ object Similarity {
       .select(col("vec_id"))
 
   /** Shared top-k ranking: score every (query, candidate) pair fed in
-    * and keep the k best per query, ties by neighbor_id. Scores are
+    * and keep the k best per query `qid`, ties by `nid`. Scores are
     * rounded before ranking so the ordering is reproducible
     * cross-engine. */
-  private def rankTopK(scored: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(desc("cos_sim"), asc("neighbor_id"))
+  private def rankTopK(scored: DataFrame, k: Int, qid: String = "query_id",
+      nid: String = "neighbor_id"): DataFrame = {
+    val w = Window.partitionBy(col(qid))
+      .orderBy(desc("cos_sim"), asc(nid))
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
   }
@@ -143,25 +144,16 @@ object Similarity {
     * cosine direction to rank anyway). In SQL the single `qn > 0`
     * predicate covers the last two: a NULL-element code yields NULL
     * qn, and NULL > 0 filters out. */
-  private def int8Base(embeddings: DataFrame): DataFrame = {
-    import graft.functions.QuantizeOps._
-    embeddings.select(col("vec_id"),
+  private def int8Base(embeddings: DataFrame): DataFrame =
+    encoded(IvfCodes.Int8(), embeddings.select(col("vec_id"),
         toDouble(col("embedding")).as("emb"))
-      .filter(col("emb").isNotNull)
-      .select(col("vec_id"), quantize_i8(col("emb")).as("qv"))
-      .filter(col("qv").isNotNull)
-      .withColumn("qn", sqrt(dot_i8(col("qv"), col("qv")).cast("double")))
-      .filter(col("qn") > 0)
-  }
+      .filter(col("emb").isNotNull), Seq(col("vec_id")), "emb", "")
 
-  private def int8Core(base: DataFrame, q: DataFrame, k: Int): DataFrame = {
-    import graft.functions.QuantizeOps._
+  private def int8Core(base: DataFrame, q: DataFrame, k: Int): DataFrame =
     rankTopK(
       base.join(broadcast(q), col("vec_id") =!= col("query_id"))
         .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          round(dot_i8(col("q_qv"), col("qv")).cast("double") /
-            (col("q_qn") * col("qn")), 6).as("cos_sim")), k)
-  }
+          codeSim(IvfCodes.Int8(), "q_", "").as("cos_sim")), k)
 
   /** Hard-negative mining for contrastive training: for each query
     * (anchor) vector, the k most cosine-similar vectors carrying a
@@ -170,8 +162,8 @@ object Similarity {
     * loss. Brute-force form over a small anchor set (same broadcast
     * argument as [[bruteForceTopK]]); the scale-path claim — label
     * exclusion is a post-filter on the candidate stream — is shipped
-    * code, not prose: [[hardNegativesIvfInt8]] composes it with the
-    * IVF × int8 pruned stream. */
+    * code, not prose: [[ivfSearch]] with `otherLabel` composes it with
+    * the IVF × int8 pruned stream. */
   def hardNegatives(embeddings: DataFrame, isQuery: Column, k: Int)
       : DataFrame = {
     val base = hardNegBase(embeddings)
@@ -185,8 +177,8 @@ object Similarity {
     * (single `vec_id` column, e.g. from [[sampleQueryIds]]) — the
     * fixed-|Q| baseline shape: the broadcast anchor frame is bounded
     * by construction and total work is O(|Q|·|C|), linear in the
-    * corpus. The production scale path is [[hardNegativesIvfInt8]],
-    * which also prunes the per-anchor candidate scan. */
+    * corpus. The production scale path is [[ivfSearch]] with
+    * `otherLabel`, which also prunes the per-anchor candidate scan. */
   def hardNegatives(embeddings: DataFrame, queryIds: DataFrame, k: Int)
       : DataFrame = {
     val base = hardNegBase(embeddings)
@@ -217,65 +209,6 @@ object Similarity {
       .orderBy(desc("cos_sim"), asc("neighbor_id"))
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
-  }
-
-  /** Hard-negative mining on the IVF × int8 production path — the
-    * scale-safe composition [[hardNegatives]]' scaladoc promises:
-    * label exclusion rides the SAME pruned candidate stream as
-    * [[ivfTopKInt8]] instead of a per-anchor full corpus scan.
-    *
-    * Two-level exclusion: (1) probe selection drops the anchor's own
-    * label partition BEFORE ranking — an IVF partition is exactly one
-    * label here, so probing it would yield only excluded candidates
-    * (wasted nprobe slots and, for nprobe=1, an empty result);
-    * (2) the candidate stream keeps the `label =!= q_label`
-    * post-filter, the composition SURVEY §8 describes — redundant
-    * given (1) for the label-quantizer, but load-bearing the moment
-    * the coarse quantizer is k-means (a cluster then mixes labels).
-    *
-    * Scale shape = [[ivfTopKInt8]] exactly: one persisted corpus
-    * scan, exact-decimal centroids quantized with the portable
-    * formula, broadcast-pruned probes (only |Q|·nprobe partition
-    * keys), int8 scoring on every pair. Total work
-    * O(|Q|·(k_clusters + nprobe·|C|/k_clusters)) — corpus-linear,
-    * nothing corpus-sized broadcasts. Hash-verified like the IVF
-    * family (the DuckDB oracle reproduces both quantization levels
-    * bit-for-bit). */
-  def hardNegativesIvfInt8(embeddings: DataFrame, queryIds: DataFrame,
-      k: Int, nprobe: Int): DataFrame = {
-    import graft.functions.QuantizeOps._
-    val base0 = embeddings.select(col("vec_id"), col("label"),
-        toDouble(col("embedding")).as("emb"))
-      .filter(col("emb").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cq = quantizedLabelCentroids(base0)
-    val base = int8LabelBase(base0)
-    val q = base.join(broadcast(queryIds), Seq("vec_id"))
-      .select(col("vec_id").as("query_id"), col("label").as("q_label"),
-        col("qv").as("q_qv"), col("qn").as("q_qn"))
-    val probes = q.crossJoin(broadcast(cq))
-      .filter(col("label") =!= col("q_label"))
-      .select(col("query_id"), col("q_label"), col("q_qv"), col("q_qn"),
-        col("label"),
-        round(dot_i8(col("q_qv"), col("c_qv")).cast("double") /
-          (col("q_qn") * col("c_qn")), 6).as("c_sim"))
-    val wq = Window.partitionBy(col("query_id"))
-      .orderBy(desc("c_sim"), asc("label"))
-    val probed = probes.withColumn("prn", row_number().over(wq))
-      .filter(col("prn") <= nprobe)
-      .select(col("query_id"), col("q_label"), col("q_qv"), col("q_qn"),
-        col("label"))
-    val topk = rankTopK(
-      base.join(broadcast(probed), Seq("label"))
-        .filter(col("vec_id") =!= col("query_id") &&
-          col("label") =!= col("q_label"))
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          col("label").as("neg_label"),
-          round(dot_i8(col("q_qv"), col("qv")).cast("double") /
-            (col("q_qn") * col("qn")), 6).as("cos_sim")), k)
-    val out = topk.localCheckpoint()
-    base0.unpersist()
-    out
   }
 
   /** Deterministic pseudo-random hyperplanes: numPlanes × dim doubles
@@ -651,7 +584,7 @@ object Similarity {
     * entire hazard class instead of shrinking it.
     * Distributed shape: assignment is a broadcast cross join (k tiny),
     * the update is the same explode-by-dimension aggregation as
-    * [[ivfTopK]] — no driver-side collect anywhere. */
+    * [[labelCentroids]] — no driver-side collect anywhere. */
   def kmeansCentroids(base: DataFrame, k: Int, iters: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val seedW = Window.orderBy("vec_id")
@@ -1166,21 +1099,25 @@ object Similarity {
       else Seq("vec_id")
     val base = pqBase(spec, embeddings, keep)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the residual pass and the probes both read the centroids —
-    // compute them once; without residuals they feed only the probe
-    // broadcast and stay lazy
-    val cent = spec.coarse.map { _ =>
-      if (spec.residual) labelCentroids(base).localCheckpoint()
-      else labelCentroids(base)
+    var persisted = Seq.empty[DataFrame]
+    try {
+      // the residual pass and the probes both read the centroids —
+      // compute them once; without residuals they feed only the probe
+      // broadcast and stay lazy
+      val cent = spec.coarse.map { _ =>
+        if (spec.residual) labelCentroids(base).localCheckpoint()
+        else labelCentroids(base)
+      }
+      val (cents, index, fitPersisted) = pqFitEncode(spec, base, cent)
+      persisted = fitPersisted
+      val q = pqQueries(base, queryIds)
+      val probed = cent.map(pqProbed(spec, q, _, base))
+      pqAdcTopK(spec, index, probed, pqLut(spec, q, cents), k)
+        .localCheckpoint()
+    } finally {
+      persisted.foreach(_.unpersist())
+      base.unpersist()
     }
-    val (cents, index, persisted) = pqFitEncode(spec, base, cent)
-    val q = pqQueries(base, queryIds)
-    val probed = cent.map(pqProbed(spec, q, _, base))
-    val out = pqAdcTopK(spec, index, probed, pqLut(spec, q, cents), k)
-      .localCheckpoint()
-    persisted.foreach(_.unpersist())
-    base.unpersist()
-    out
   }
 
   /** (vec_id, `keep`…, emb): the non-NULL corpus as doubles in the
@@ -1256,22 +1193,12 @@ object Similarity {
     * `corpus` only feeds the selectivity-widened nprobe. */
   private def pqProbed(spec: PqSpec, q: DataFrame, cent: DataFrame,
       corpus: => DataFrame): DataFrame = {
-    val c = spec.coarse.get
-    val nprobe =
-      if (c.widenForFilter) autoNprobe(corpus, c.nprobe,
-        spec.filter.get.column)
-      else c.nprobe
     val qc = if (spec.residual) Seq(graft.functions.ArrayOps.dot_product(
       col("q_emb"), col("centroid")).as("qc_dot")) else Nil
-    val wq = Window.partitionBy(col("query_id"))
-      .orderBy(desc("c_sim"), asc("label"))
-    q.crossJoin(broadcast(cent))
-      .select(Seq(col("query_id"), col("label"),
-        round(cosine(col("q_emb"), col("centroid")), 6).as("c_sim")) ++
-        qc: _*)
-      .withColumn("prn", row_number().over(wq))
-      .filter(col("prn") <= nprobe)
-      .drop("c_sim", "prn")
+    probeCells(q.crossJoin(broadcast(cent)),
+      Seq(col("query_id"), col("label")) ++ qc,
+      round(cosine(col("q_emb"), col("centroid")), 6), Seq("query_id"),
+      "label", labelNprobe(spec.coarse.get, spec.filter, corpus))
   }
 
   /** (query_id, sub, cid, pdot): the per-query ADC lookup table. pdot
@@ -1524,9 +1451,14 @@ object Similarity {
     pqAdcTopK(spec, codes, Some(probed), pqLut(spec, q, cents), k)
   }
 
-  /** The per-label exact decimal-mean coarse centroid frame — ONE
-    * definition shared by every coarse level (a drift here would
-    * desynchronize the stored index from the inline composition). */
+  /** The per-label exact decimal-mean centroid frame (label, centroid)
+    * — ONE definition for every label-celled coarse level: IVF
+    * search, the PQ coarse level and the stored PQ index. The
+    * component mean uses the exact-decimal sum (QueryUtil strategy):
+    * engine AVG accumulates doubles in partition order, which is
+    * nondeterministic across runs and engines; this form is
+    * order-independent and SQL-reproducible
+    * ([[Coarse.centroidsSql]]). */
   private def labelCentroids(base: DataFrame): DataFrame = base
     .select(col("label"), posexplode(col("emb")).as(Seq("dim", "v")))
     .groupBy(col("label"), col("dim"))
@@ -1537,331 +1469,106 @@ object Similarity {
       array_sort(collect_list(struct(col("dim"), col("cv")))),
       x => x("cv")).as("centroid"))
 
-  /** [[ivfTopK]] with a real (deterministic) k-means coarse quantizer
-    * instead of the `label` column: fit `kClusters` centroids with
-    * [[kmeansCentroids]], assign the corpus, probe the `nprobe`
-    * nearest centroids per query. */
-  def ivfTopKKmeans(embeddings: DataFrame, isQuery: Column, k: Int,
-      nprobe: Int, kClusters: Int, iters: Int): DataFrame =
-    ivfTopKKmeansImpl(embeddings, _.filter(isQuery), k, nprobe,
-      kClusters, iters)
-
-  /** [[ivfTopKKmeans]] with the query set given as an id frame
-    * (single `vec_id` column, e.g. from [[sampleQueryIds]]) — the
-    * fixed-|Q| shape; the id frame broadcasts. */
-  def ivfTopKKmeans(embeddings: DataFrame, queryIds: DataFrame, k: Int,
-      nprobe: Int, kClusters: Int, iters: Int): DataFrame =
-    ivfTopKKmeansImpl(embeddings,
-      _.join(broadcast(queryIds), Seq("vec_id")), k, nprobe,
-      kClusters, iters)
-
-  private def ivfTopKKmeansImpl(embeddings: DataFrame,
-      mkQ: DataFrame => DataFrame, k: Int,
-      nprobe: Int, kClusters: Int, iters: Int): DataFrame = {
-    // same NULL-drop as semDedup (they share the k-means fit AND the
-    // unrolled-SQL oracle base, which filters NULLs — a NULL vector
-    // would otherwise NULL its assignment cosines corpus-wide)
-    val base = embeddings.select(col("vec_id"),
-        toDouble(col("embedding")).as("emb"))
-      .filter(col("emb").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val centroids = kmeansCentroids(base, kClusters, iters)
-    val members = assignClusters(base, centroids)
-    val q = mkQ(base)
-      .select(col("vec_id").as("query_id"), col("emb").as("q_emb"))
-    val probes = q.crossJoin(broadcast(centroids))
-      .select(col("query_id"), col("q_emb"), col("cid"),
-        round(cosine(col("q_emb"), col("centroid")), 6).as("c_sim"))
-    val wq = Window.partitionBy(col("query_id"))
-      .orderBy(desc("c_sim"), asc("cid"))
-    val probed = probes.withColumn("prn", row_number().over(wq))
+  /** Keep each query's `nprobe` best coarse cells — the one probe
+    * rule of every coarse level ([[Coarse.probedSql]] mirrors it):
+    * (query, cell) `pairs` ranked per `part` by the rounded
+    * similarity `sim`, ties to the smaller `cell`; `keep` lists the
+    * columns carried on. The two-level grid applies it once per
+    * level. */
+  private def probeCells(pairs: DataFrame, keep: Seq[Column], sim: Column,
+      part: Seq[String], cell: String, nprobe: Int): DataFrame = {
+    val w = Window.partitionBy(part.map(col): _*)
+      .orderBy(desc("c_sim"), asc(cell))
+    pairs.select(keep :+ sim.as("c_sim"): _*)
+      .withColumn("prn", row_number().over(w))
       .filter(col("prn") <= nprobe)
-      .select(col("query_id"), col("q_emb"), col("cid"))
-    val scored = members.join(probed, Seq("cid"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(cosine(col("q_emb"), col("emb")), 6).as("cos_sim"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(desc("cos_sim"), asc("neighbor_id"))
-    val topk = scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-    // top-k per query is tiny: materialize and release the corpus
-    // cache (same leak-avoidance pattern as cosineDupPairs)
-    val out = topk.localCheckpoint()
-    base.unpersist()
-    out
+      .drop("c_sim", "prn")
   }
 
-  /** IVF-style coarse quantization using per-label centroids (the
-    * embeddings table's `label` column is the cluster assignment):
-    * queries probe only the `nprobe` nearest centroids' partitions.
-    * The centroid table is tiny → broadcast both directions. */
-  def ivfTopK(embeddings: DataFrame, isQuery: Column, k: Int,
-      nprobe: Int): DataFrame =
-    ivfTopKImpl(embeddings, _.filter(isQuery), k, nprobe)
+  /** The probe count of label cells: `c.nprobe`, or widened by the
+    * filter's selectivity over `corpus` ([[autoNprobe]]). */
+  private def labelNprobe(c: Coarse.Labels, filter: Option[AnnFilter],
+      corpus: => DataFrame): Int =
+    if (c.widenForFilter) autoNprobe(corpus, c.nprobe, filter.get.column)
+    else c.nprobe
 
-  /** [[ivfTopK]] with the query set given as an id frame (single
-    * `vec_id` column, e.g. from [[sampleQueryIds]]) — the fixed-|Q|
-    * shape; the id frame broadcasts. */
-  def ivfTopK(embeddings: DataFrame, queryIds: DataFrame, k: Int,
-      nprobe: Int): DataFrame =
-    ivfTopKImpl(embeddings, _.join(broadcast(queryIds), Seq("vec_id")),
-      k, nprobe)
+  /** `df`'s vector column `vec` under `codes`, next to `keep`: exact
+    * as `${p}emb`, or int8 as `${p}qv`/`${p}qn` — quantized with the
+    * portable formula, NULL-element and zero-norm rows dropped (the
+    * [[int8Base]] policy). Corpus, centroids and queries all pass
+    * through here, so every level scores the same codes. */
+  private def encoded(codes: IvfCodes, df: DataFrame, keep: Seq[Column],
+      vec: String, p: String): DataFrame = codes match {
+    case IvfCodes.Exact => df.select(keep :+ col(vec).as(s"${p}emb"): _*)
+    case _: IvfCodes.Int8 =>
+      import graft.functions.QuantizeOps._
+      df.select(keep :+ quantize_i8(col(vec)).as(s"${p}qv"): _*)
+        .filter(col(s"${p}qv").isNotNull)
+        .withColumn(s"${p}qn",
+          sqrt(dot_i8(col(s"${p}qv"), col(s"${p}qv")).cast("double")))
+        .filter(col(s"${p}qn") > 0)
+  }
 
-  /** The ingest gate's index state: k-means coarse centroids
-    * (cid, centroid) and the manifest's partition assignment
-    * (vec_id, emb, cid). Both frames are what a production deployment
-    * persists between refits — centroids are O(k) rows, members are
-    * the manifest re-keyed by partition. */
+  /** Rounded cosine between the `a`- and `b`-prefixed codes: exact
+    * doubles, or the int8 integer dot over the code norms (per-vector
+    * scales cancel out of cosine). */
+  private def codeSim(codes: IvfCodes, a: String, b: String): Column =
+    codes match {
+      case IvfCodes.Exact =>
+        round(cosine(col(s"${a}emb"), col(s"${b}emb")), 6)
+      case _: IvfCodes.Int8 =>
+        import graft.functions.QuantizeOps._
+        round(dot_i8(col(s"${a}qv"), col(s"${b}qv")).cast("double") /
+          (col(s"${a}qn") * col(s"${b}qn")), 6)
+    }
+
+  // NULL embeddings drop (the oracle filters `embedding IS NOT NULL`):
+  // a NULL row would enter fine ranking with a NULL cos_sim and
+  // surface whenever a probed cell holds fewer than k candidates
+  private def ivfBase(spec: IvfSpec, embeddings: DataFrame): DataFrame =
+    embeddings.select(Seq(col("vec_id")) ++
+        (if (spec.keepsLabel) Seq(col("label")) else Nil) :+
+        toDouble(col("embedding")).as("emb"): _*)
+      .filter(col("emb").isNotNull)
+
+  /** A k-means coarse index — the ingest gate's state between refits:
+    * the fitted centroids (cid, centroid) and the manifest keyed by
+    * cell (vec_id, emb, cid). Centroids are O(k) rows; members are the
+    * manifest re-keyed by cell. `kClusters` is the k the rule chose
+    * (a cell no vector joins drops out of `centroids`). */
   final case class IvfIndex(centroids: DataFrame, members: DataFrame,
       kClusters: Int)
 
-  /** Build the ANN ingest gate's coarse index from the manifest with
-    * the quantizer's k SCALED TO THE MANIFEST:
-    * k = ⌈N / targetPartitionSize⌉, so partition size — and therefore
-    * per-batch probe cost — stays flat as the corpus grows (the r8
-    * fixed-k=8 label quantizer made probe cost linear in N: 1.9 s at
-    * an 18k manifest → 15.4 s at 198k for the same 2k batch). The fit
-    * is the deterministic [[kmeansCentroids]] (smallest-vec_id seeds,
-    * exact-decimal updates) so the whole index is engine-portable and
-    * DuckDB-verifiable. Build cost is the index-build price — `iters`+1
-    * corpus×k assignment passes, O(N·k) = O(N²/target) with k ∝ N —
-    * amortized across every batch until the next refit (the FAISS
-    * train+add path). `fitSampleMod` > 1 bounds that build the way
-    * production actually does (FAISS trains quantizers on a sample,
-    * same shape as [[PqSpec]]'s `fitSampleMod`): seeds and every
-    * Lloyd pass run on the deterministic `vec_id % mod = 0` sample
-    * while the FULL manifest is still assigned to partitions — build
-    * drops to O(N·k/mod) + one full assignment, and the modulus
-    * predicate stays SQL-mirrorable. The 100× probe measured the
-    * full fit at 637s vs 223s for mod=10 at the same flat probe cost;
-    * the residue is the one unavoidable full N×k assignment pass,
-    * which is why beyond ~10M vectors production additionally moves
-    * to a √N-cluster or HNSW coarse quantizer (bounding k itself
-    * rather than just the fit corpus). */
-  def ivfIndexBuild(manifest: DataFrame, targetPartitionSize: Int,
-      iters: Int, fitSampleMod: Long = 1L): IvfIndex =
-    ivfIndexBuildWithK(manifest,
-      n => math.ceil(n.toDouble / targetPartitionSize).toInt,
-      iters, fitSampleMod)
-
-  /** [[ivfIndexBuild]] with k = ⌈√N⌉ — the BOUNDED-k coarse quantizer
-    * the k ∝ N scaladoc points to beyond ~10M vectors. √N is not an
-    * arbitrary bound: per-query probe cost is `k + nprobe·N/k`
-    * (centroid scoring + fine ranking in the probed partitions),
-    * minimized at k = √(nprobe·N) — the classical IVF operating
-    * point (FAISS's own guideline is k between √N and 16√N). The
-    * trade vs k ∝ N: build drops from O(N²/target) to O(N^1.5)
-    * (it stops being the refit-cadence wall), per-batch probe grows
-    * as √N instead of staying flat — and at today's corpus sizes the
-    * √N probe is CHEAPER anyway, because k ∝ N's k already exceeds
-    * the √-optimum (198k manifest: k=3094 vs 446 — centroid scoring
-    * dominates its probe). Same deterministic fit, same
-    * `fitSampleMod` bound, oracle-mirrorable with
-    * `ceil(sqrt(count(*)))` (IEEE sqrt is correctly rounded —
-    * engine-portable). */
-  def ivfIndexBuildSqrt(manifest: DataFrame, iters: Int,
-      fitSampleMod: Long = 1L): IvfIndex =
-    ivfIndexBuildWithK(manifest,
-      n => math.ceil(math.sqrt(n.toDouble)).toInt, iters, fitSampleMod)
-
-  private def ivfIndexBuildWithK(manifest: DataFrame,
-      kOf: Long => Int, iters: Int, fitSampleMod: Long): IvfIndex = {
-    require(fitSampleMod >= 1L, "fitSampleMod must be >= 1")
-    val base = ivfBase(manifest).select(col("vec_id"), col("emb"))
-    val n = base.count()
-    val kClusters = math.max(1, kOf(n))
+  /** Fit `c` on `base` (vec_id, emb) and assign it. k = ⌈N/target⌉
+    * keeps cell size — and per-batch probe cost — flat as the corpus
+    * grows; ⌈√N⌉ bounds the build at O(N^1.5) (per-query probe cost
+    * `k + nprobe·N/k` is minimized near k = √(nprobe·N)). With
+    * `fitSampleMod` > 1 seeds and Lloyd passes run on the
+    * `vec_id % mod = 0` sample (FAISS trains quantizers on a sample)
+    * while every vector is still assigned; the build drops to
+    * O(N·k/mod) plus one full assignment pass. */
+  private def kmeansIndex(c: Coarse.Kmeans, base: DataFrame): IvfIndex = {
+    val kClusters = c.k.of(base.count())
     val fitBase =
-      if (fitSampleMod > 1L) base.filter(col("vec_id") % fitSampleMod === 0)
+      if (c.fitSampleMod > 1L) base.filter(col("vec_id") % c.fitSampleMod === 0)
       else base
-    val centroids = kmeansCentroids(fitBase, kClusters, iters)
+    val centroids = kmeansCentroids(fitBase, kClusters, c.iters)
     IvfIndex(centroids, assignClusters(base, centroids), kClusters)
   }
 
-  /** Probe-only leg of the ingest gate: each incoming vector scores
-    * the O(k) centroids, keeps its `nprobe` best partitions, and
-    * fine-ranks ONLY against the manifest vectors in them — per-batch
-    * cost |batch| × (k + nprobe × targetPartitionSize), flat in the
-    * corpus. The fine-rank join on `cid` carries NO broadcast hint:
-    * the probed frame scales with the batch (the documented
-    * ingest-gate exception to the fixed-|Q| rule), so AQE broadcasts
-    * it while a batch fits and shuffles on `cid` beyond the threshold
-    * — a forced hint would OOM the driver on a large ingest. */
-  def ivfProbe(index: IvfIndex, incoming: DataFrame, k: Int,
-      nprobe: Int): DataFrame = {
-    val q = ivfBase(incoming)
-      .select(col("vec_id").as("new_id"), col("emb").as("q_emb"))
-    val probes = q.crossJoin(broadcast(index.centroids))
-      .select(col("new_id"), col("q_emb"), col("cid"),
-        round(cosine(col("q_emb"), col("centroid")), 6).as("c_sim"))
-    val wq = Window.partitionBy(col("new_id"))
-      .orderBy(desc("c_sim"), asc("cid"))
-    val probed = probes.withColumn("prn", row_number().over(wq))
-      .filter(col("prn") <= nprobe)
-      .select(col("new_id"), col("q_emb"), col("cid"))
-    val scored = index.members.join(probed, Seq("cid"))
-      .filter(col("vec_id") =!= col("new_id"))
-      .select(col("new_id"), col("vec_id").as("match_id"),
-        round(cosine(col("q_emb"), col("emb")), 6).as("cos_sim"))
-    val w = Window.partitionBy(col("new_id"))
-      .orderBy(desc("cos_sim"), asc("match_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-  }
-
-  /** Index MAINTENANCE without refit — the ANN ingest gate, the
-    * vector-side sibling of [[Dedup.minhashLshIncremental]]: the
-    * `manifest` frame is the already-ingested corpus whose IVF index
-    * EXISTS ([[ivfIndexBuild]] — in production, persisted state; here
-    * built inline so the catalog entry is self-contained); the
-    * `incoming` batch probes that index via [[ivfProbe]] — each new
-    * vector is assigned its `nprobe` nearest centroids and fine-ranked
-    * ONLY against the manifest vectors in those partitions, emitting
-    * its top-`k` attach points (new_id, match_id, cos_sim, rank) for
-    * dedup-or-link decisions downstream. The centroids are computed
-    * from the MANIFEST alone — appending a batch moves no centroid and
-    * re-encodes nothing, exactly how production IVF indexes absorb
-    * inserts between refits (the FAISS `add` path).
-    *
-    * Scale shape: the coarse quantizer's k scales with the manifest
-    * (k = ⌈N/targetPartitionSize⌉), so per-batch work is
-    * |batch| × (k + nprobe × targetPartitionSize) — linear in the
-    * batch, flat in the corpus; never all-pairs, never a refit. |Q|
-    * here deliberately scales WITH the batch (the documented
-    * ingest-gate exception to the fixed-|Q| rule, same as the MinHash
-    * ingest gate). */
-  def ivfIncremental(manifest: DataFrame, incoming: DataFrame, k: Int,
-      nprobe: Int, targetPartitionSize: Int = 64, iters: Int = 2)
-      : DataFrame =
-    ivfProbe(ivfIndexBuild(manifest, targetPartitionSize, iters),
-      incoming, k, nprobe)
-
-  /** [[ivfIncremental]] on the √N-cluster index
-    * ([[ivfIndexBuildSqrt]]) — the bounded-k ingest gate for corpora
-    * where the k ∝ N build cost (O(N²/target)) outruns the refit
-    * cadence. Identical probe machinery; only the coarse quantizer's
-    * k rule changes. */
-  def ivfIncrementalSqrt(manifest: DataFrame, incoming: DataFrame,
-      k: Int, nprobe: Int, iters: Int = 2): DataFrame =
-    ivfProbe(ivfIndexBuildSqrt(manifest, iters), incoming, k, nprobe)
-
-  // NULL embeddings drop on the Spark side too (the oracle filters
-  // `embedding IS NOT NULL`): a NULL row kept here would enter fine
-  // ranking with a NULL cos_sim and surface whenever a probed label
-  // partition holds fewer than k non-NULL candidates — a one-sided
-  // divergence the other ANN bases (lshBase, int8Base, ivfTopKInt8,
-  // ivfTopKKmeansImpl) already guard against.
-  private def ivfBase(embeddings: DataFrame): DataFrame =
-    embeddings.select(col("vec_id"), col("label"),
-        toDouble(col("embedding")).as("emb"))
-      .filter(col("emb").isNotNull)
-
-  private def ivfTopKImpl(embeddings: DataFrame,
-      mkQ: DataFrame => DataFrame, k: Int, nprobe: Int): DataFrame = {
-    val base = ivfBase(embeddings)
-    val q = mkQ(base)
-      .select(col("vec_id").as("query_id"), col("emb").as("q_emb"))
-    ivfCore(base, q, k, nprobe)
-  }
-
-  /** Metadata-FILTERED ANN — the vector-search feature every modern
-    * deployment needs ("nearest neighbors among documents WHERE
-    * <predicate>"): the predicate restricts CANDIDATES, not the
-    * index. Centroids are still built from the full corpus (the
-    * stored index is filter-agnostic — a per-filter refit would be
-    * absurd at production churn), probing is unchanged, and the
-    * predicate applies inside the probed partitions as a pre-filter
-    * on the fine-rank scan — in storage terms, a pushed-down column
-    * predicate on the partition-pruned index read, the cheapest of
-    * the pre/post-filter family (post-filtering top-k then filtering
-    * k·selectivity⁻¹ results is the recall trap this form avoids).
-    *
-    * The residual recall risk is selectivity: a probed partition may
-    * hold < k matching candidates, so callers WIDEN nprobe in
-    * proportion to 1/selectivity (the catalog entry probes 5 vs the
-    * unfiltered 3 at ~1/3 selectivity); SimilaritySpec pins recall
-    * against the filtered brute-force ground truth. */
-  def ivfTopKFiltered(embeddings: DataFrame, queryIds: DataFrame,
-      k: Int, nprobe: Int, candidateFilter: Column): DataFrame = {
-    val base = ivfBase(embeddings)
-    val q = base.join(broadcast(queryIds), Seq("vec_id"))
-      .select(col("vec_id").as("query_id"), col("emb").as("q_emb"))
-    ivfCore(base, q, k, nprobe,
-      candidates = Some(base.filter(candidateFilter)))
-  }
-
-  /** [[ivfTopKFiltered]] with nprobe DERIVED from the predicate's
-    * measured selectivity — the `_auto` production sibling of the
-    * hand-widened form, closing the one knob `s_ann_filtered` left
-    * hand-set. Rule (exact integer arithmetic, oracle-mirrorable as a
-    * scalar subquery): `nprobe = min(n_labels, ⌈baseNprobe · N /
-    * N_match⌉)` — widen the unfiltered default by the inverse
-    * selectivity so the EXPECTED number of matching candidates inside
-    * the probed partitions stays what `baseNprobe` partitions yield
-    * unfiltered (the standard filtered-search recall lever, here tied
-    * to a corpus statistic instead of a guess; FAISS documents the
-    * same 1/selectivity widening for metadata-filtered IVF search).
-    * Clamped at the label count: past that, filtered search IS the
-    * exact filtered scan.
-    *
-    * Cost of the derivation: one O(1)-row aggregate over the base
-    * scan (count, match count, label count) — the same bounded
-    * driver-side statistic the other `_auto` entries collect. The
-    * coarse quantizer stays filter-agnostic ([[ivfCore]]'s contract:
-    * centroids always derive from the FULL base — the stored index is
-    * shared across predicates). */
-  def ivfTopKFilteredAuto(embeddings: DataFrame, queryIds: DataFrame,
-      k: Int, baseNprobe: Int, candidateFilter: Column): DataFrame = {
-    val base = ivfBase(embeddings)
-    val nprobe = autoNprobe(base, baseNprobe, candidateFilter)
-    val q = base.join(broadcast(queryIds), Seq("vec_id"))
-      .select(col("vec_id").as("query_id"), col("emb").as("q_emb"))
-    ivfCore(base, q, k, nprobe,
-      candidates = Some(base.filter(candidateFilter)))
-  }
-
-  /** TWO-LEVEL coarse quantizer ANN (IMI-style hierarchy, Babenko &
-    * Lempitsky's inverted multi-index argument specialized to a
-    * label×sub-cluster grid): level 1 is the exact per-label centroid
-    * index the IVF family stores; level 2 fits an INDEPENDENT
-    * deterministic k-means of `k2` sub-clusters INSIDE each label
-    * (seeds = the k2 smallest vec_ids per label, same rounded-cosine
-    * assignment and decimal-mean updates as [[kmeansCentroids]], so
-    * the whole grid is engine-portable and the DuckDB oracle unrolls
-    * it with `label` added to every GROUP BY / PARTITION BY).
-    *
-    * WHY a hierarchy — the assignment-cost wall this retires: a flat
-    * quantizer with C cells pays N·C candidate evaluations to assign
-    * the corpus (the measured k ∝ N quadratic wall; √N bounds it at
-    * O(N^1.5)). Two levels pay N·(k1 + k2) for k1·k2 cells — at 2M
-    * vectors and a 31k-cell grid that is ~7×10⁸ evaluations instead
-    * of 6×10¹⁰. Probe cost factors the same way: k1 coarse dots +
-    * nprobe1·k2 sub-cluster dots + fine ranking inside
-    * nprobe1·nprobe2 cells of ~N/(k1·k2) vectors each — finer
-    * pruning granularity than one-level IVF at equal per-query
-    * centroid work. This is the production regime FAISS reaches with
-    * IMI/HNSW coarse quantizers once a flat coarse index stops
-    * amortizing.
-    *
-    * Per-probed-label sub-cluster selection (`nprobe2` best cells per
-    * probed label, not a global cell top-n) keeps the window
-    * SQL-mirrorable and the probed-cell count exactly
-    * nprobe1·nprobe2. Ties: rounded cosine then smallest id at both
-    * levels, the family rule. */
-  def ivfTopKTwoLevel(embeddings: DataFrame, queryIds: DataFrame,
-      k: Int, nprobe1: Int, nprobe2: Int, k2: Int,
-      iters: Int): DataFrame = {
-    val base = ivfBase(embeddings)
-    val cent1 = labelCentroids(base)
+  /** The two-level grid's sub-cells (label, scid, centroid): per label
+    * an independent k-means of `k2` cells, seeded on the label's k2
+    * smallest vec_ids, same rounded-cosine assignment and decimal-mean
+    * updates as [[kmeansCentroids]]. */
+  private def subCells(base: DataFrame, c: Coarse.TwoLevel): DataFrame = {
     val seedW = Window.partitionBy(col("label")).orderBy(col("vec_id"))
     var cents2 = base
       .withColumn("rn", row_number().over(seedW))
-      .filter(col("rn") <= k2)
+      .filter(col("rn") <= c.k2)
       .select(col("label"), (col("rn") - 1).cast("int").as("scid"),
         col("emb").as("centroid"))
-    for (_ <- 0 until iters) {
-      val assigned = assignSubClusters(base, cents2, "label")
-      cents2 = assigned
+    for (_ <- 0 until c.iters) {
+      cents2 = assignSubClusters(base, cents2, "label")
         .select(col("label"), col("scid"),
           posexplode(col("emb")).as(Seq("dim", "v")))
         .groupBy(col("label"), col("scid"), col("dim"))
@@ -1874,33 +1581,177 @@ object Similarity {
         // per-iteration truncation stays REQUIRED here (the
         // broadcast-LUT sub-assign never collects, so the plan would
         // chain geometrically) — routed through Ckpt so reliable mode
-        // covers this fit loop too (r14 verdict)
+        // covers this fit loop too
         .transform(Ckpt(_))
     }
-    val members = assignSubClusters(base, cents2, "label")
+    cents2
+  }
+
+  /** A built coarse level: cell centroids keyed by the spec's cell
+    * column, the two-level grid's sub-cells, and the corpus (under
+    * the spec's codes) keyed by cell. */
+  private final case class Cells(centroids: DataFrame,
+      sub: Option[DataFrame], members: DataFrame, nprobe: Int)
+
+  private def buildCells(spec: IvfSpec, base: DataFrame): Cells =
+    spec.coarse match {
+      case c: Coarse.Labels =>
+        Cells(labelCentroids(base), None,
+          encoded(spec.codes, base, Seq(col("vec_id"), col("label")),
+            "emb", ""),
+          labelNprobe(c, spec.filter, base))
+      case c: Coarse.Kmeans =>
+        val idx = kmeansIndex(c, base)
+        Cells(idx.centroids, None, idx.members, c.nprobe)
+      case c: Coarse.TwoLevel =>
+        val cents2 = subCells(base, c)
+        Cells(labelCentroids(base), Some(cents2),
+          assignSubClusters(base, cents2, "label"), c.nprobe)
+    }
+
+  /** Probe `cells` with the query frame `q` (`qid`, q_-prefixed codes,
+    * optional q_label) and rank the `k` best candidates per query
+    * (`qid`, `nid`, [neg_label,] cos_sim, rank). Label probes and their
+    * fine-rank join broadcast (|Q|·nprobe rows); the k-means join
+    * stays unhinted ([[IvfSpec.hintsProbed]]). */
+  private def probeRank(spec: IvfSpec, cells: Cells, q: DataFrame,
+      qid: String, nid: String, k: Int): DataFrame = {
+    val cell = spec.coarse match {
+      case _: Coarse.Kmeans => "cid"
+      case _ => "label"
+    }
+    val qCols = q.columns.toSeq.map(col)
+    val sim = codeSim(spec.codes, "q_", "c_")
+    val pairs = q.crossJoin(broadcast(encoded(spec.codes, cells.centroids,
+      Seq(col(cell)), "centroid", "c_")))
+    val probed1 = probeCells(
+      if (spec.otherLabel) pairs.filter(col(cell) =!= col("q_label"))
+      else pairs,
+      qCols :+ col(cell), sim, Seq(qid), cell, cells.nprobe)
+    val (probed, keys) = (spec.coarse, cells.sub) match {
+      case (c: Coarse.TwoLevel, Some(sub)) =>
+        val subCodes = encoded(spec.codes, sub,
+          Seq(col("label"), col("scid")), "centroid", "c_")
+        (probeCells(probed1.join(broadcast(subCodes), Seq("label")),
+          qCols ++ Seq(col("label"), col("scid")), sim,
+          Seq(qid, "label"), "scid", c.nprobe2), Seq("label", "scid"))
+      case _ => (probed1, Seq(cell))
+    }
+    val cand = spec.filter.fold(cells.members)(f =>
+      cells.members.filter(f.column))
+    val notSelf = col("vec_id") =!= col(qid)
+    val keep = col(qid) +: col("vec_id").as(nid) +:
+      (if (spec.otherLabel) Seq(col("label").as("neg_label")) else Nil)
+    rankTopK(
+      cand.join(if (spec.hintsProbed) broadcast(probed) else probed, keys)
+        .filter(if (spec.otherLabel)
+          notSelf && col("label") =!= col("q_label") else notSelf)
+        .select(keep :+ codeSim(spec.codes, "q_", "").as("cos_sim"): _*),
+      k, qid, nid)
+  }
+
+  /** Inverted-file ANN under `spec` for a query-id frame (single
+    * `vec_id` column, e.g. [[sampleQueryIds]]; it broadcasts): the
+    * corpus is cut into the spec's coarse cells, each query probes its
+    * nearest cells, and only the vectors in them are scored — total
+    * work O(|Q|·(cells + nprobe·|C|/cells)), linear in the corpus.
+    *
+    *  - label cells: the `label` column is the partitioning; centroids
+    *    are exact decimal means, so DuckDB reproduces the quantizer
+    *    bit-for-bit;
+    *  - k-means cells: the deterministic [[kmeansCentroids]] fit;
+    *  - two-level: label cells split into per-label k-means sub-cells
+    *    (IMI-style — assignment pays N·(k1 + k2) for k1·k2 cells,
+    *    probing nprobe labels then nprobe2 sub-cells in each);
+    *  - `filter` restricts CANDIDATES, never the index (a pushed
+    *    predicate on the pruned read — the coarse level stays shared
+    *    across predicates; widen nprobe ∝ 1/selectivity);
+    *  - int8 codes score centroids and candidates on the 72-byte
+    *    codes (~7× fewer bytes broadcast or shuffled); `rerank`
+    *    rescores that coarse top-n with the exact cosine on raw
+    *    vectors reattached by id, repairing quantization at the final
+    *    ranking;
+    *  - `otherLabel` mines hard negatives: the anchor's own label cell
+    *    is dropped at probe time, and the candidate stream keeps the
+    *    `label <> q_label` post-filter.
+    *
+    * When the corpus is read by several jobs (a Lloyd fit, or the
+    * centroid pass ahead of quantization) it persists, and the top-k
+    * materializes before the corpus is released — also when the
+    * search fails. Every score is rounded and ties break by id, so
+    * the result is hash-verified against [[IvfSpec.oracleSql]]. */
+  def ivfSearch(spec: IvfSpec, embeddings: DataFrame, queryIds: DataFrame,
+      k: Int): DataFrame = {
+    val coarseK = spec.codes match {
+      case IvfCodes.Int8(Some(n)) => n
+      case _ => k
+    }
+    val base = ivfBase(spec, embeddings)
+    if (spec.persistsCorpus)
+      base.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val top = try {
+      val q = encoded(spec.codes,
+        base.join(broadcast(queryIds), Seq("vec_id")),
+        col("vec_id").as("query_id") +:
+          (if (spec.otherLabel) Seq(col("label").as("q_label")) else Nil),
+        "emb", "q_")
+      val ranked = probeRank(spec, buildCells(spec, base), q,
+        "query_id", "neighbor_id", coarseK)
+      if (spec.persistsCorpus) ranked.localCheckpoint() else ranked
+    } finally if (spec.persistsCorpus) base.unpersist()
+    spec.codes match {
+      case IvfCodes.Int8(Some(_)) => exactRerank(embeddings, queryIds, top, k)
+      case _ => top
+    }
+  }
+
+  /** Rescore coarse (query_id, neighbor_id) candidates with the exact
+    * double cosine: raw vectors reattach by a vec_id equi-join (ship
+    * ids, not payloads), the bounded query side broadcasts. */
+  private def exactRerank(embeddings: DataFrame, queryIds: DataFrame,
+      coarse: DataFrame, k: Int): DataFrame = {
+    val base = embeddings.select(col("vec_id"),
+        toDouble(col("embedding")).as("emb"))
+      .filter(col("emb").isNotNull)
     val q = base.join(broadcast(queryIds), Seq("vec_id"))
       .select(col("vec_id").as("query_id"), col("emb").as("q_emb"))
-    val probes1 = q.crossJoin(broadcast(cent1))
-      .select(col("query_id"), col("q_emb"), col("label"),
-        round(cosine(col("q_emb"), col("centroid")), 6).as("c_sim"))
-    val w1 = Window.partitionBy(col("query_id"))
-      .orderBy(desc("c_sim"), asc("label"))
-    val probed1 = probes1.withColumn("prn", row_number().over(w1))
-      .filter(col("prn") <= nprobe1)
-      .select(col("query_id"), col("q_emb"), col("label"))
-    val probes2 = probed1.join(broadcast(cents2), Seq("label"))
-      .select(col("query_id"), col("q_emb"), col("label"), col("scid"),
-        round(cosine(col("q_emb"), col("centroid")), 6).as("s_sim"))
-    val w2 = Window.partitionBy(col("query_id"), col("label"))
-      .orderBy(desc("s_sim"), asc("scid"))
-    val probed2 = probes2.withColumn("srn", row_number().over(w2))
-      .filter(col("srn") <= nprobe2)
-      .select(col("query_id"), col("q_emb"), col("label"), col("scid"))
-    val scored = members.join(broadcast(probed2), Seq("label", "scid"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(cosine(col("q_emb"), col("emb")), 6).as("cos_sim"))
-    rankTopK(scored, k)
+    rankTopK(coarse.select(col("query_id"), col("neighbor_id"))
+      .join(base.select(col("vec_id").as("neighbor_id"),
+        col("emb").as("n_emb")), Seq("neighbor_id"))
+      .join(broadcast(q), Seq("query_id"))
+      .select(col("query_id"), col("neighbor_id"),
+        round(cosine(col("q_emb"), col("n_emb")), 6).as("cos_sim")), k)
+  }
+
+  /** Build the ANN ingest gate's index on the manifest — the FAISS
+    * train+add path, paid once per refit cycle. The gate's coarse
+    * level is k-means cells (the spec's k rule and sampled fit; see
+    * [[kmeansIndex]]). */
+  def ivfBuild(spec: IvfSpec, manifest: DataFrame): IvfIndex =
+    spec.coarse match {
+      case c: Coarse.Kmeans => kmeansIndex(c, ivfBase(spec, manifest))
+      case c => throw new IllegalArgumentException(
+        s"an ingest-gate index has k-means cells, not $c")
+    }
+
+  /** The ingest gate's per-batch leg — index MAINTENANCE without refit,
+    * the vector-side sibling of [[Dedup.minhashLshIncremental]]: each
+    * incoming vector scores the O(k) centroids of the frozen `index`,
+    * keeps its nprobe best cells and fine-ranks ONLY against the
+    * manifest vectors in them, emitting its top-`k` attach points
+    * (new_id, match_id, cos_sim, rank). Appending a batch moves no
+    * centroid and re-encodes nothing. Per-batch cost |batch| ×
+    * (k + nprobe × cell size), flat in the corpus; |Q| scales WITH the
+    * batch here (the documented ingest-gate exception to the fixed-|Q|
+    * rule), which is why the fine-rank join is unhinted: AQE
+    * broadcasts the probed frame while a batch fits and shuffles on
+    * `cid` beyond it. */
+  def ivfProbe(spec: IvfSpec, index: IvfIndex, incoming: DataFrame,
+      k: Int): DataFrame = {
+    val q = encoded(spec.codes, ivfBase(spec, incoming),
+      Seq(col("vec_id").as("new_id")), "emb", "q_")
+    probeRank(spec, Cells(index.centroids, None, index.members,
+      spec.coarse.nprobe), q, "new_id", "match_id", k)
   }
 
   /** Sub-cluster assignment for the two-level grid: the per-group
@@ -1984,162 +1835,6 @@ object Similarity {
     val (n, m, l) = (st.getLong(0), st.getLong(1), st.getLong(2))
     require(m > 0, "candidateFilter matches no rows — nothing to rank")
     math.min(l, (baseNprobe.toLong * n + m - 1) / m).toInt
-  }
-
-  /** Shared IVF probe + fine-rank core: centroids from `base`'s
-    * label partitions, `q` probes its `nprobe` best partitions,
-    * fine ranking only within them (restricted to `candidates` when
-    * given — the filtered-search form; centroids ALWAYS derive from
-    * the full `base`, the filter-agnostic stored index). */
-  private def ivfCore(base: DataFrame, q: DataFrame, k: Int,
-      nprobe: Int, candidates: Option[DataFrame] = None): DataFrame = {
-    // centroid per label via explode-by-dimension — scales to any
-    // partition size (no per-group collect of whole vectors). The
-    // component mean uses the exact-decimal sum (QueryUtil strategy):
-    // engine AVG accumulates doubles in partition order, which is
-    // nondeterministic across runs and engines; this form is
-    // order-independent and SQL-reproducible (→ DuckDB oracle).
-    val centroids = base
-      .select(col("label"), posexplode(col("emb")).as(Seq("dim", "v")))
-      .groupBy(col("label"), col("dim"))
-      .agg((graft.queries.QueryUtil.sumDec(col("v")) /
-        count(lit(1))).as("cv"))
-      .groupBy(col("label"))
-      .agg(transform(
-        array_sort(collect_list(struct(col("dim"), col("cv")))),
-        x => x("cv")).as("centroid"))
-    val probes = q.crossJoin(broadcast(centroids))
-      .select(col("query_id"), col("q_emb"), col("label"),
-        round(cosine(col("q_emb"), col("centroid")), 6).as("c_sim"))
-    val wq = Window.partitionBy(col("query_id"))
-      .orderBy(desc("c_sim"), asc("label"))
-    val probed = probes.withColumn("prn", row_number().over(wq))
-      .filter(col("prn") <= nprobe)
-      .select(col("query_id"), col("q_emb"), col("label"))
-    val scored = candidates.getOrElse(base)
-      .join(broadcast(probed), Seq("label"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(cosine(col("q_emb"), col("emb")), 6).as("cos_sim"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(desc("cos_sim"), asc("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-  }
-
-  /** IVF × int8 — the production composition of the two ANN levers.
-    * [[ivfTopK]]'s coarse quantizer prunes the corpus to `nprobe`
-    * label partitions per query, and EVERY pair score downstream of
-    * quantization (probe selection and fine ranking) runs on the
-    * 72-byte int8 codes — so a 100-TB pass gets both the
-    * nprobe/k_clusters candidate reduction and the ~7× byte reduction
-    * on everything broadcast or shuffled. Centroids are the exact
-    * decimal-arithmetic per-label means of [[ivfTopK]] (computed once
-    * from the double embeddings, engine-portable), then quantized
-    * with the identical formula as the corpus, so a DuckDB oracle
-    * reproduces both levels bit-for-bit and the entry is
-    * hash-verified. The query set is a fixed-size id frame
-    * ([[sampleQueryIds]]): total work O(|Q|·(k_clusters +
-    * nprobe·|C|/k_clusters)) — linear in the corpus, unlike the
-    * brute [[int8TopK]] baseline with a proportional predicate.
-    * One corpus scan: the double base persists across the centroid
-    * aggregation and the quantization, then releases (the
-    * [[cosineDupPairs]] leak-avoidance pattern). */
-  def ivfTopKInt8(embeddings: DataFrame, queryIds: DataFrame, k: Int,
-      nprobe: Int): DataFrame = {
-    import graft.functions.QuantizeOps._
-    val base0 = embeddings.select(col("vec_id"), col("label"),
-        toDouble(col("embedding")).as("emb"))
-      .filter(col("emb").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cq = quantizedLabelCentroids(base0)
-    val base = int8LabelBase(base0)
-    val q = base.join(broadcast(queryIds), Seq("vec_id"))
-      .select(col("vec_id").as("query_id"),
-        col("qv").as("q_qv"), col("qn").as("q_qn"))
-    val probes = q.crossJoin(broadcast(cq))
-      .select(col("query_id"), col("q_qv"), col("q_qn"), col("label"),
-        round(dot_i8(col("q_qv"), col("c_qv")).cast("double") /
-          (col("q_qn") * col("c_qn")), 6).as("c_sim"))
-    val wq = Window.partitionBy(col("query_id"))
-      .orderBy(desc("c_sim"), asc("label"))
-    val probed = probes.withColumn("prn", row_number().over(wq))
-      .filter(col("prn") <= nprobe)
-      .select(col("query_id"), col("q_qv"), col("q_qn"), col("label"))
-    val topk = rankTopK(
-      base.join(broadcast(probed), Seq("label"))
-        .filter(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          round(dot_i8(col("q_qv"), col("qv")).cast("double") /
-            (col("q_qn") * col("qn")), 6).as("cos_sim")), k)
-    val out = topk.localCheckpoint()
-    base0.unpersist()
-    out
-  }
-
-  /** Two-stage retrieval (coarse ANN + exact rerank) — the standard
-    * production composition for recall-critical search: the IVF×int8
-    * index of [[ivfTopKInt8]] generates `kCoarse` cheap candidates
-    * per query, then ONLY those candidates are re-scored with the
-    * exact double-precision cosine and the true top `k` kept. The
-    * coarse stage eats the corpus-scale work on 72-byte codes; the
-    * exact stage touches raw vectors for just |Q|·kCoarse pairs —
-    * reattached by a vec_id equi-join against the corpus scan (ship
-    * ids, not payloads; the small candidate side broadcast-joins), so
-    * no corpus-sized frame is ever broadcast and recall losses from
-    * quantization at the final ranking are repaired at negligible
-    * cost. Deterministic end-to-end (both stages round before
-    * ranking, ties by neighbor_id) and fully oracle-reproducible. */
-  def ivfInt8RerankTopK(embeddings: DataFrame, queryIds: DataFrame,
-      k: Int, kCoarse: Int, nprobe: Int): DataFrame = {
-    val coarse = ivfTopKInt8(embeddings, queryIds, kCoarse, nprobe)
-      .select(col("query_id"), col("neighbor_id"))
-    val base = embeddings.select(col("vec_id"),
-        toDouble(col("embedding")).as("emb"))
-      .filter(col("emb").isNotNull)
-    val q = base.join(broadcast(queryIds), Seq("vec_id"))
-      .select(col("vec_id").as("query_id"), col("emb").as("q_emb"))
-    val exact = coarse
-      .join(base.select(col("vec_id").as("neighbor_id"),
-        col("emb").as("n_emb")), Seq("neighbor_id"))
-      .join(broadcast(q), Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        round(cosine(col("q_emb"), col("n_emb")), 6).as("cos_sim"))
-    rankTopK(exact, k)
-  }
-
-  /** Int8-quantized per-label centroid frame (label, c_qv, c_qn)
-    * shared by the IVF×int8 scorers: the exact decimal-arithmetic
-    * per-label means of [[ivfTopK]] (order-independent and
-    * SQL-reproducible), then quantized with the identical portable
-    * formula as the corpus codes. */
-  private def quantizedLabelCentroids(base0: DataFrame): DataFrame = {
-    import graft.functions.QuantizeOps._
-    base0
-      .select(col("label"), posexplode(col("emb")).as(Seq("dim", "v")))
-      .groupBy(col("label"), col("dim"))
-      .agg((graft.queries.QueryUtil.sumDec(col("v")) /
-        count(lit(1))).as("cv"))
-      .groupBy(col("label"))
-      .agg(transform(
-        array_sort(collect_list(struct(col("dim"), col("cv")))),
-        x => x("cv")).as("centroid"))
-      .select(col("label"), quantize_i8(col("centroid")).as("c_qv"))
-      .withColumn("c_qn",
-        sqrt(dot_i8(col("c_qv"), col("c_qv")).cast("double")))
-      .filter(col("c_qn") > 0)
-  }
-
-  /** Quantized labeled corpus (vec_id, label, qv, qn) — the only
-    * frame that flows into IVF×int8 pair scoring (same NULL/zero-norm
-    * drops as [[int8Base]], plus the label key). */
-  private def int8LabelBase(base0: DataFrame): DataFrame = {
-    import graft.functions.QuantizeOps._
-    base0
-      .select(col("vec_id"), col("label"), quantize_i8(col("emb")).as("qv"))
-      .filter(col("qv").isNotNull)
-      .withColumn("qn", sqrt(dot_i8(col("qv"), col("qv")).cast("double")))
-      .filter(col("qn") > 0)
   }
 
   /** Semantic deduplication (the SemDeDup recipe, Abbas et al. 2023,
@@ -2282,7 +1977,7 @@ object Similarity {
 
   /** HIERARCHICAL SemDeDup — the two-level cell structure that
     * retires the flat k ∝ N variant's assignment wall structurally
-    * (the [[ivfTopKTwoLevel]] argument applied to dedup blocking):
+    * (the two-level [[ivfSearch]] argument applied to dedup blocking):
     * level 1 is a deterministic k-means of k₁ = ⌈√⌈N/target⌉⌉
     * clusters, level 2 an independent per-cluster k-means of the same
     * k₂ = k₁ sub-clusters, so the k₁·k₂ ≥ N/target cells keep mean

@@ -971,17 +971,6 @@ object Parity {
     out.orderBy("section", "id", "k", "v")
   }
 
-  /** Dev-only ([[graft.ProjProfile]]): the six section frames of
-    * [[pProjectsPipeline]], individually, to time each union branch
-    * at a probe corpus. Built by re-running the query builder and
-    * splitting its union back apart — same plan per branch. */
-  def projProfileParts(s: SparkSession, d: String)
-      : Seq[(String, DataFrame)] = {
-    val all = pProjectsPipeline(s, d)
-    Seq("project", "link", "role_update", "returning", "quarantine",
-      "summary").map(sec => sec -> all.filter(col("section") === sec))
-  }
-
   /** Mirrors [[pProjectsPipeline]] as the straight relational form of
     * the lifecycle — same joins/windows replayed in ANSI SQL (the
     * insert-id rule is the documented max(cur)+row_number-by-name,

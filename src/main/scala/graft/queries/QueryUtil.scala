@@ -52,6 +52,69 @@ object QueryUtil {
       |  ORDER BY ((((vec_id % 2147483647) + 2147483647) % 2147483647) * 48271) % 2147483647, vec_id
       |  LIMIT 16)""".stripMargin
 
+  /** Quantize CTE chain `src` → (`${prefix}qz0`, `${prefix}qz`,
+    * `${prefix}qn`) reproducing [[graft.functions.QuantizeOps]]
+    * bit-for-bit — max-abs scale, round-half-away-from-zero spelled
+    * with floor so both engines run the identical IEEE sequence. The
+    * `qn > 0` predicate mirrors the Spark side's zero-norm and
+    * NULL-element drops (a NULL element makes qn NULL; NULL > 0 is
+    * not true). `src` has (`key`, …, emb); `extraCols` carries more of
+    * its columns (e.g. `label`) through the chain. */
+  def quantizeSql(extraCols: String = "", src: String = "base",
+      key: String = "vec_id", prefix: String = ""): String =
+    s"""${prefix}qz0 AS (SELECT $key,$extraCols emb,
+       |    list_aggregate(list_transform(emb, x -> abs(x)), 'max') AS s
+       |  FROM $src),
+       |${prefix}qz AS (SELECT $key,$extraCols
+       |    list_transform(emb, e -> CASE WHEN s = 0 THEN 0.0
+       |      WHEN e >= 0 THEN floor(e * 127.0 / s + 0.5)
+       |      ELSE -floor(-(e * 127.0 / s) + 0.5) END) AS qv
+       |  FROM ${prefix}qz0),
+       |${prefix}qn AS (SELECT * FROM (SELECT $key,$extraCols qv,
+       |    sqrt(list_dot_product(qv, qv)) AS qn FROM ${prefix}qz)
+       |  WHERE qn > 0)""".stripMargin
+
+  /** The unrolled deterministic k-means fit of
+    * [[graft.ext.Similarity.kmeansCentroids]] over a base CTE `b`
+    * (vec_id, emb), k given as a SQL expression — a literal for the
+    * fixed-k entries, a scalar subquery for the k ∝ N shapes. Emits
+    * CTEs init → a1/c1 → … → a`iters`/c`iters` → members
+    * (vec_id, emb, cid). */
+  def kmUnrolledCoreSql(b: String, kExpr: String): String =
+    kmUnrolledCoreSplitSql(b, b, kExpr)
+
+  /** [[kmUnrolledCoreSql]] with the FIT corpus split from the ASSIGN
+    * corpus — seeds and the Lloyd passes run over `fitB` while the
+    * final `members` assignment covers `assignB`: the oracle form of
+    * the `fitSampleMod` sampled-fit lever (`fitB` = the
+    * `vec_id % mod = 0` slice of `assignB`). */
+  def kmUnrolledCoreSplitSql(fitB: String, assignB: String,
+      kExpr: String, iters: Int = 2): String = {
+    def assignSql(src: String, cent: String, out: String): String =
+      s"""$out AS (SELECT vec_id, emb, cid FROM (
+         |  SELECT b.vec_id, b.emb, c.cid,
+         |    row_number() OVER (PARTITION BY b.vec_id
+         |      ORDER BY ${sqlCosine("b.emb", "c.centroid")} DESC, c.cid)
+         |      AS rn
+         |  FROM $src b CROSS JOIN $cent c) WHERE rn = 1)""".stripMargin
+    def updateSql(assigned: String, out: String): String =
+      s"""${out}d AS (SELECT cid, i,
+         |    ${sqlSumDec("emb[i]")}
+         |      / count(*) AS cv
+         |  FROM $assigned CROSS JOIN range(1, 65) t(i)
+         |  GROUP BY cid, i),
+         |$out AS (SELECT cid, list(cv ORDER BY i) AS centroid
+         |  FROM ${out}d GROUP BY cid)""".stripMargin
+    val rounds = (1 to iters).map { r =>
+      val from = if (r == 1) "init" else s"c${r - 1}"
+      s"${assignSql(fitB, from, s"a$r")},\n${updateSql(s"a$r", s"c$r")}"
+    }
+    (s"""init AS (SELECT CAST(rn - 1 AS INT) AS cid, emb AS centroid
+        |  FROM (SELECT emb, row_number() OVER (ORDER BY vec_id) AS rn
+        |    FROM $fitB) WHERE rn <= ($kExpr))""".stripMargin +: rounds :+
+      assignSql(assignB, s"c$iters", "members")).mkString(",\n")
+  }
+
   /** Recursive temp-layout reclamation — the ONE definition shared by
     * every entry/probe that materializes a run-scoped directory
     * (MV stores, phrase indexes, z-order layouts). Call sites wrap it

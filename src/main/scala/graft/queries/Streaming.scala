@@ -226,20 +226,23 @@ object Streaming {
     * so stream ≡ batch for ANY batching — VectorStreamSpec pins the
     * union of per-micro-batch outputs row-for-row against this batch
     * core and the no-stateful-operator plan claim. Hash-verified via
-    * the shared unrolled-fit oracle builder
-    * ([[TrainingData.annGateOracleSql]]), the s_ann_incremental
-    * machinery at the streaming entry's own split. */
+    * the IVF oracle generator ([[graft.ext.IvfSpec.oracleSql]]), the
+    * s_ann_incremental spec at the streaming entry's own split and
+    * probe count. */
   def stAnnGate(s: SparkSession, d: String): DataFrame = {
     val e = Tables.embeddings(s, d)
-    val index = graft.ext.Similarity.ivfIndexBuild(
-      e.filter(col("vec_id") % 5 =!= 0),
-      targetPartitionSize = 64, iters = 2)
-    graft.streaming.VectorStream.gateBatch(index, k = 2, nprobe = 2,
+    val index = graft.ext.Similarity.ivfBuild(annGate,
+      e.filter(col("vec_id") % 5 =!= 0))
+    graft.streaming.VectorStream.gateBatch(annGate, index, k = 2,
         e.filter(col("vec_id") % 5 === 0))
       .orderBy("new_id", "rank")
   }
 
-  private val stAnnGateSql = TrainingData.annGateOracleSql(5, 2, 2)
+  private val annGate = graft.ext.IvfSpec(graft.ext.Coarse.Kmeans(
+    graft.ext.Coarse.PerRows(64), iters = 2, nprobe = 2))
+
+  private val stAnnGateSql = graft.ext.IvfSpec.oracleSql(annGate, 2,
+    batchMod = Some(5))
 
   /** Batch core of the STREAMING semantic-dedup gate
     * ([[graft.streaming.VectorStream.semGateBatch]]) — the

@@ -4,8 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.ext.{Dedup, PqCoarse, PqFilter, PqLayout, PqSpec, Similarity,
-  TextStats}
+import graft.ext.{AnnFilter, Coarse, Dedup, IvfCodes, IvfSpec, PqLayout,
+  PqSpec, Similarity, TextStats}
 import QueryUtil._
 
 /** Training-data pipeline operators over `documents` / `embeddings`:
@@ -1164,27 +1164,6 @@ object TrainingData {
       .orderBy("query_id", "rank")
   }
 
-  /** Shared oracle fragment: quantize CTE chain `base` →
-    * (`qz0`, `qz`, `qn`) reproducing [[graft.functions.QuantizeOps]]
-    * bit-for-bit — max-abs scale, round-half-away-from-zero spelled
-    * with floor so both engines run the identical IEEE sequence. The
-    * `qn > 0` predicate mirrors the Spark side's zero-norm and
-    * NULL-element drops (a NULL element makes qn NULL; NULL > 0 is
-    * not true). `extraCols` carries additional base columns (e.g.
-    * `label`) through the chain. */
-  private def quantizeSql(extraCols: String = ""): String =
-    s"""qz0 AS (SELECT vec_id,$extraCols emb,
-       |    list_aggregate(list_transform(emb, x -> abs(x)), 'max') AS s
-       |  FROM base),
-       |qz AS (SELECT vec_id,$extraCols
-       |    list_transform(emb, e -> CASE WHEN s = 0 THEN 0.0
-       |      WHEN e >= 0 THEN floor(e * 127.0 / s + 0.5)
-       |      ELSE -floor(-(e * 127.0 / s) + 0.5) END) AS qv
-       |  FROM qz0),
-       |qn AS (SELECT * FROM (SELECT vec_id,$extraCols qv,
-       |    sqrt(list_dot_product(qv, qv)) AS qn FROM qz)
-       |  WHERE qn > 0)""".stripMargin
-
   private val sAnnInt8Sql =
     s"""WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS emb
        |  FROM embeddings WHERE embedding IS NOT NULL),
@@ -1199,103 +1178,6 @@ object TrainingData {
        |    ORDER BY cos_sim DESC, neighbor_id ASC) AS INT) AS rank
        |  FROM scored)
        |SELECT query_id, neighbor_id, cos_sim, rank FROM ranked
-       |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
-
-  /** IVF × int8 ANN — the production composition
-    * ([[Similarity.ivfTopKInt8]]): coarse label-centroid pruning to
-    * `nprobe` partitions per query, int8 scoring everywhere
-    * downstream of quantization. Hash-verified: centroids are the
-    * same exact-decimal means as [[sAnnIvf]], quantized with the
-    * same portable formula as the corpus codes. Fixed |Q| = 16. */
-  def sAnnIvfInt8(s: SparkSession, d: String): DataFrame = {
-    val e = embs(s, d)
-    Similarity.ivfTopKInt8(e,
-        Similarity.sampleQueryIds(
-          e.filter(col("embedding").isNotNull), n = 16),
-        k = 5, nprobe = 3)
-      .orderBy("query_id", "rank")
-  }
-
-  /** Shared oracle CTE chain of the two-level IVF×int8 index — ends at
-    * `ranked` (all fine-ranked candidates, rank unfiltered) so both
-    * [[sAnnIvfInt8Sql]] (top-5 directly) and [[sAnnRerankSql]]
-    * (top-20 coarse candidates + exact rerank) read from the ONE
-    * definition and cannot drift. */
-  private val ivfInt8RankedCtes =
-    s"""WITH base AS (SELECT vec_id, label, embedding::DOUBLE[] AS emb
-       |  FROM embeddings WHERE embedding IS NOT NULL),
-       |dims AS (SELECT label, i,
-       |    CAST(sum(CAST(emb[i] AS DECIMAL(18,6))) AS DOUBLE)
-       |      / count(*) AS cv
-       |  FROM base CROSS JOIN range(1, 65) t(i)
-       |  GROUP BY label, i),
-       |cent AS (SELECT label, list(cv ORDER BY i) AS centroid
-       |  FROM dims GROUP BY label),
-       |cq0 AS (SELECT label, centroid,
-       |    list_aggregate(list_transform(centroid, x -> abs(x)), 'max')
-       |      AS cs
-       |  FROM cent),
-       |cq AS (SELECT * FROM (SELECT label,
-       |    sqrt(list_dot_product(c_qv, c_qv)) AS c_qn, c_qv
-       |  FROM (SELECT label,
-       |      list_transform(centroid, e -> CASE WHEN cs = 0 THEN 0.0
-       |        WHEN e >= 0 THEN floor(e * 127.0 / cs + 0.5)
-       |        ELSE -floor(-(e * 127.0 / cs) + 0.5) END) AS c_qv
-       |    FROM cq0)) WHERE c_qn > 0),
-       |${quantizeSql(" label,")},
-       |$qidsSql,
-       |q AS (SELECT n.vec_id AS query_id, n.qv AS q_qv, n.qn AS q_qn
-       |  FROM qn n JOIN qids s ON n.vec_id = s.vec_id),
-       |probes AS (SELECT query_id, q_qv, q_qn, label,
-       |    round(list_dot_product(q_qv, c_qv) / (q_qn * c_qn), 6)
-       |      AS c_sim
-       |  FROM q CROSS JOIN cq),
-       |probed AS (SELECT query_id, q_qv, q_qn, label FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY query_id
-       |      ORDER BY c_sim DESC, label ASC) AS prn FROM probes)
-       |  WHERE prn <= 3),
-       |scored AS (SELECT p.query_id, n.vec_id AS neighbor_id,
-       |    round(list_dot_product(p.q_qv, n.qv) / (p.q_qn * n.qn), 6)
-       |      AS cos_sim
-       |  FROM qn n JOIN probed p ON n.label = p.label
-       |  WHERE n.vec_id <> p.query_id),
-       |ranked AS (SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-       |    ORDER BY cos_sim DESC, neighbor_id ASC) AS INT) AS rank
-       |  FROM scored)""".stripMargin
-
-  private val sAnnIvfInt8Sql =
-    s"""$ivfInt8RankedCtes
-       |SELECT query_id, neighbor_id, cos_sim, rank FROM ranked
-       |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
-
-  /** Two-stage retrieval: IVF×int8 coarse candidates (top-20 per
-    * query on the quantized index) re-scored with the exact
-    * double-precision cosine, true top-5 kept — the standard
-    * recall-repair composition every production vector-search stack
-    * runs (coarse ANN + exact rerank). See
-    * [[Similarity.ivfInt8RerankTopK]] for the scale shape. */
-  def sAnnRerank(s: SparkSession, d: String): DataFrame = {
-    val e = embs(s, d)
-    Similarity.ivfInt8RerankTopK(e,
-        Similarity.sampleQueryIds(
-          e.filter(col("embedding").isNotNull), n = 16),
-        k = 5, kCoarse = 20, nprobe = 3)
-      .orderBy("query_id", "rank")
-  }
-
-  private val sAnnRerankSql =
-    s"""$ivfInt8RankedCtes,
-       |cand AS (SELECT query_id, neighbor_id FROM ranked
-       |  WHERE rank <= 20),
-       |ex AS (SELECT c.query_id, c.neighbor_id,
-       |    ${sqlCosine("qb.emb", "nb.emb")} AS cos_sim
-       |  FROM cand c
-       |  JOIN base nb ON nb.vec_id = c.neighbor_id
-       |  JOIN base qb ON qb.vec_id = c.query_id),
-       |rr AS (SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-       |    ORDER BY cos_sim DESC, neighbor_id ASC) AS INT) AS rank
-       |  FROM ex)
-       |SELECT query_id, neighbor_id, cos_sim, rank FROM rr
        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
 
   /** LSH-bucketed ANN. Oracle-verified: the seeded hyperplanes are
@@ -1398,434 +1280,78 @@ object TrainingData {
        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
   }
 
-  /** IVF-style ANN probing nearest label centroids. Oracle-verified:
-    * centroid components are order-independent decimal sums
-    * (QueryUtil strategy), so DuckDB reproduces the coarse quantizer
-    * bit-for-bit. Fixed |Q| = 16 (r6, see [[sAnnLsh]]). */
-  def sAnnIvf(s: SparkSession, d: String): DataFrame = {
+  /** One IVF catalog row: the [[IvfSpec]], the top-k, and for the
+    * ingest gates the `vec_id % n` split — the index is built on the
+    * rest (the manifest) and probed by the multiples of n, (new_id,
+    * match_id) out; the others search the standard 16-query sample. */
+  private[queries] final case class IvfEntry(spec: IvfSpec, k: Int,
+      gateMod: Option[Int] = None)
+
+  /** The inverted-file family on raw or int8 vectors — one Spark
+    * implementation ([[Similarity.ivfSearch]], or
+    * [[Similarity.ivfBuild]] + [[Similarity.ivfProbe]] for the gates)
+    * and one oracle generator ([[IvfSpec.oracleSql]]) serve every row,
+    * so no two entries' coarse levels, probes or rankings can drift.
+    * Every score is rounded and every centroid an exact decimal mean
+    * (k-means fits unroll in the oracle), so each row is
+    * hash-verified. */
+  private[queries] val ivfEntries: Seq[(String, IvfEntry)] = {
+    import Coarse._
+    val labels = IvfSpec(Labels(nprobe = 3))
+    val int8 = labels.copy(codes = IvfCodes.Int8())
+    Seq(
+      "s_ann_ivf" -> IvfEntry(labels, 5),
+      // candidates restricted to vec_id % 3 = 0 (a stand-in metadata
+      // predicate) over the unchanged index; nprobe widened 3 → 5 for
+      // the ~1/3 selectivity
+      "s_ann_filtered" -> IvfEntry(IvfSpec(Labels(nprobe = 5),
+        filter = Some(AnnFilter.vecIdMultipleOf(3))), 5),
+      // nprobe derived from the selectivity: 6 of the fixture's 10
+      // labels — wider than 3, narrower than the exact filtered scan
+      "s_ann_filtered_auto" -> IvfEntry(IvfSpec(
+        Labels(nprobe = 3, widenForFilter = true),
+        filter = Some(AnnFilter.vecIdMultipleOf(2))), 5),
+      "s_ann_ivf_kmeans" -> IvfEntry(
+        IvfSpec(Kmeans(Fixed(8), iters = 2, nprobe = 3)), 5),
+      // 10 labels × 4 sub-cells, 3 labels × 2 sub-cells probed
+      "s_ann_ivf_two_level" -> IvfEntry(IvfSpec(
+        TwoLevel(nprobe = 3, k2 = 4, nprobe2 = 2, iters = 2)), 5),
+      "s_ann_ivf_int8" -> IvfEntry(int8, 5),
+      // the int8 top-20 rescored with the exact cosine
+      "s_ann_rerank" -> IvfEntry(
+        labels.copy(codes = IvfCodes.Int8(rerank = Some(20))), 5),
+      "s_hard_negatives_ivf" -> IvfEntry(int8.copy(otherLabel = true), 5),
+      // the ingest gates: k = ⌈N/64⌉ keeps cell size, and with it the
+      // per-batch probe cost, flat as the manifest grows; k = ⌈√N⌉
+      // bounds the build where k ∝ N outruns the refit cadence
+      "s_ann_incremental" -> IvfEntry(
+        IvfSpec(Kmeans(PerRows(64), iters = 2, nprobe = 3)), 3, Some(10)),
+      "s_ann_incremental_sqrt" -> IvfEntry(
+        IvfSpec(Kmeans(SqrtRows, iters = 2, nprobe = 3)), 3, Some(10)))
+  }
+
+  private def runIvf(entry: IvfEntry)(s: SparkSession, d: String)
+      : DataFrame = {
     val e = embs(s, d)
-    Similarity.ivfTopK(e,
-        Similarity.sampleQueryIds(
-          e.filter(col("embedding").isNotNull), n = 16),
-        k = 5, nprobe = 3)
-      .orderBy("query_id", "rank")
+    entry.gateMod match {
+      case None =>
+        Similarity.ivfSearch(entry.spec, e, Similarity.sampleQueryIds(
+            e.filter(col("embedding").isNotNull), n = 16), entry.k)
+          .orderBy("query_id", "rank")
+      case Some(n) =>
+        Similarity.ivfProbe(entry.spec,
+            Similarity.ivfBuild(entry.spec, e.filter(col("vec_id") % n =!= 0)),
+            e.filter(col("vec_id") % n === 0), entry.k)
+          .orderBy("new_id", "rank")
+    }
   }
 
-  /** Metadata-FILTERED ANN ([[Similarity.ivfTopKFiltered]]): top-k
-    * among candidates satisfying `vec_id % 3 = 0` (the stand-in for
-    * a metadata predicate — deterministic and SQL-mirrorable), over
-    * the UNCHANGED full-corpus IVF index. nprobe widened 3 → 5 to
-    * compensate ~1/3 selectivity inside the probed partitions (the
-    * documented filtered-search recall lever); queries are the
-    * standard 16-id sample and need not satisfy the predicate. */
-  def sAnnFiltered(s: SparkSession, d: String): DataFrame = {
-    val e = embs(s, d)
-    Similarity.ivfTopKFiltered(e,
-        Similarity.sampleQueryIds(
-          e.filter(col("embedding").isNotNull), n = 16),
-        k = 5, nprobe = 5,
-        candidateFilter = pmod(col("vec_id"), lit(3)) === 0)
-      .orderBy("query_id", "rank")
-  }
-
-  /** [[sAnnFiltered]] with nprobe DERIVED from the predicate's
-    * measured selectivity ([[Similarity.ivfTopKFilteredAuto]]):
-    * `nprobe = min(n_labels, ⌈3·N/N_match⌉)`, exact integer
-    * arithmetic, oracle-mirrored as a scalar subquery over the same
-    * base CTE — the production form of the filtered-search recall
-    * lever (the one knob the r11/r12 filtered entries left hand-set).
-    * Predicate here is `vec_id % 2 = 0` (~1/2 selectivity → nprobe 6
-    * of the fixture's 10 labels — non-degenerate on BOTH sides: wider
-    * than the unfiltered 3, narrower than the exact filtered scan). */
-  def sAnnFilteredAuto(s: SparkSession, d: String): DataFrame = {
-    val e = embs(s, d)
-    Similarity.ivfTopKFilteredAuto(e,
-        Similarity.sampleQueryIds(
-          e.filter(col("embedding").isNotNull), n = 16),
-        k = 5, baseNprobe = 3,
-        candidateFilter = pmod(col("vec_id"), lit(2)) === 0)
-      .orderBy("query_id", "rank")
-  }
-
-  private val sAnnFilteredAutoSql =
-    s"""WITH base AS (SELECT vec_id, label, embedding::DOUBLE[] AS emb
-       |  FROM embeddings WHERE embedding IS NOT NULL),
-       |np AS (SELECT least(count(DISTINCT label),
-       |    (3 * count(*) + sum(CASE WHEN ((vec_id % 2) + 2) % 2 = 0
-       |      THEN 1 ELSE 0 END) - 1)
-       |    // sum(CASE WHEN ((vec_id % 2) + 2) % 2 = 0
-       |      THEN 1 ELSE 0 END)) AS nprobe FROM base),
-       |dims AS (SELECT label, i,
-       |    CAST(sum(CAST(emb[i] AS DECIMAL(18,6))) AS DOUBLE)
-       |      / count(*) AS cv
-       |  FROM base CROSS JOIN range(1, 65) t(i)
-       |  GROUP BY label, i),
-       |cent AS (SELECT label, list(cv ORDER BY i) AS centroid
-       |  FROM dims GROUP BY label),
-       |$qidsSql,
-       |q AS (SELECT b.vec_id AS query_id, b.emb AS q_emb
-       |  FROM base b JOIN qids s ON b.vec_id = s.vec_id),
-       |probes AS (SELECT query_id, q_emb, label,
-       |    ${sqlCosine("q_emb", "centroid")} AS c_sim
-       |  FROM q CROSS JOIN cent),
-       |probed AS (SELECT query_id, q_emb, label FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY query_id
-       |      ORDER BY c_sim DESC, label ASC) AS prn FROM probes)
-       |  WHERE prn <= (SELECT nprobe FROM np)),
-       |scored AS (SELECT p.query_id, b.vec_id AS neighbor_id,
-       |    ${sqlCosine("p.q_emb", "b.emb")} AS cos_sim
-       |  FROM base b JOIN probed p ON b.label = p.label
-       |  WHERE b.vec_id <> p.query_id
-       |    AND ((b.vec_id % 2) + 2) % 2 = 0),
-       |ranked AS (SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-       |    ORDER BY cos_sim DESC, neighbor_id ASC) AS INT) AS rank
-       |  FROM scored)
-       |SELECT query_id, neighbor_id, cos_sim, rank FROM ranked
-       |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
-
-  private val sAnnFilteredSql =
-    s"""WITH base AS (SELECT vec_id, label, embedding::DOUBLE[] AS emb
-       |  FROM embeddings WHERE embedding IS NOT NULL),
-       |dims AS (SELECT label, i,
-       |    CAST(sum(CAST(emb[i] AS DECIMAL(18,6))) AS DOUBLE)
-       |      / count(*) AS cv
-       |  FROM base CROSS JOIN range(1, 65) t(i)
-       |  GROUP BY label, i),
-       |cent AS (SELECT label, list(cv ORDER BY i) AS centroid
-       |  FROM dims GROUP BY label),
-       |$qidsSql,
-       |q AS (SELECT b.vec_id AS query_id, b.emb AS q_emb
-       |  FROM base b JOIN qids s ON b.vec_id = s.vec_id),
-       |probes AS (SELECT query_id, q_emb, label,
-       |    ${sqlCosine("q_emb", "centroid")} AS c_sim
-       |  FROM q CROSS JOIN cent),
-       |probed AS (SELECT query_id, q_emb, label FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY query_id
-       |      ORDER BY c_sim DESC, label ASC) AS prn FROM probes)
-       |  WHERE prn <= 5),
-       |scored AS (SELECT p.query_id, b.vec_id AS neighbor_id,
-       |    ${sqlCosine("p.q_emb", "b.emb")} AS cos_sim
-       |  FROM base b JOIN probed p ON b.label = p.label
-       |  WHERE b.vec_id <> p.query_id
-       |    AND ((b.vec_id % 3) + 3) % 3 = 0),
-       |ranked AS (SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-       |    ORDER BY cos_sim DESC, neighbor_id ASC) AS INT) AS rank
-       |  FROM scored)
-       |SELECT query_id, neighbor_id, cos_sim, rank FROM ranked
-       |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
-
-  private val sAnnIvfSql =
-    s"""WITH base AS (SELECT vec_id, label, embedding::DOUBLE[] AS emb
-       |  FROM embeddings WHERE embedding IS NOT NULL),
-       |dims AS (SELECT label, i,
-       |    CAST(sum(CAST(emb[i] AS DECIMAL(18,6))) AS DOUBLE)
-       |      / count(*) AS cv
-       |  FROM base CROSS JOIN range(1, 65) t(i)
-       |  GROUP BY label, i),
-       |cent AS (SELECT label, list(cv ORDER BY i) AS centroid
-       |  FROM dims GROUP BY label),
-       |$qidsSql,
-       |q AS (SELECT b.vec_id AS query_id, b.emb AS q_emb
-       |  FROM base b JOIN qids s ON b.vec_id = s.vec_id),
-       |probes AS (SELECT query_id, q_emb, label,
-       |    ${sqlCosine("q_emb", "centroid")} AS c_sim
-       |  FROM q CROSS JOIN cent),
-       |probed AS (SELECT query_id, q_emb, label FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY query_id
-       |      ORDER BY c_sim DESC, label ASC) AS prn FROM probes)
-       |  WHERE prn <= 3),
-       |scored AS (SELECT p.query_id, b.vec_id AS neighbor_id,
-       |    ${sqlCosine("p.q_emb", "b.emb")} AS cos_sim
-       |  FROM base b JOIN probed p ON b.label = p.label
-       |  WHERE b.vec_id <> p.query_id),
-       |ranked AS (SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-       |    ORDER BY cos_sim DESC, neighbor_id ASC) AS INT) AS rank
-       |  FROM scored)
-       |SELECT query_id, neighbor_id, cos_sim, rank FROM ranked
-       |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
-
-  /** ANN index MAINTENANCE ([[Similarity.ivfIncremental]]) — the
-    * vector-side ingest gate, completing the incremental family
-    * (`d_incremental_dedup`, `d_incremental_minhash`): the manifest
-    * (vec_id % 10 ≠ 0) is the already-ingested corpus whose IVF
-    * index exists; the batch (vec_id % 10 = 0) probes that index —
-    * nprobe nearest MANIFEST centroids, fine-rank only inside those
-    * partitions, top-3 attach points per new vector for downstream
-    * dedup-or-link. No refit, no re-encode; per-batch work linear in
-    * the batch (|Q| scales with the batch BY CONTRACT — the
-    * documented ingest-gate exception to the fixed-|Q| rule).
-    *
-    * r9: the coarse quantizer's k scales with the manifest —
-    * k = ⌈N/64⌉ deterministic k-means partitions instead of r8's
-    * fixed 8 label partitions — so partition size, and with it
-    * per-batch probe cost, stays FLAT as the corpus grows (the r8
-    * shape was linear in N: 1.9 s → 15.4 s for 18k → 198k manifests
-    * at the same 2k batch). The oracle derives the same k via a
-    * scalar subquery over count(*) and unrolls the same 2-iteration
-    * fit, so the k ∝ N index is hash-verified end to end. */
-  def sAnnIncremental(s: SparkSession, d: String): DataFrame = {
-    val e = embs(s, d)
-    Similarity.ivfIncremental(
-        e.filter(col("vec_id") % 10 =!= 0),
-        e.filter(col("vec_id") % 10 === 0),
-        k = 3, nprobe = 3, targetPartitionSize = 64, iters = 2)
-      .orderBy("new_id", "rank")
-  }
-
-  private val sAnnIncrementalSql = annGateOracleSql(10, 3, 3)
-
-  /** [[sAnnIncremental]] on the √N-cluster coarse quantizer
-    * ([[Similarity.ivfIncrementalSqrt]]) — the BOUNDED-k ingest gate
-    * the k ∝ N entry's scale story points to beyond ~10M vectors.
-    * k = ⌈√N⌉ is the classical IVF operating point (per-query probe
-    * cost `k + nprobe·N/k` is minimized at k = √(nprobe·N); FAISS's
-    * guideline is √N…16√N clusters): build drops from O(N²/target)
-    * to O(N^1.5), probe grows as √N instead of flat — and at
-    * measured corpus sizes the √N probe is cheaper outright because
-    * k ∝ N already over-shoots the √-optimum (198k manifest: k=3094
-    * vs 446). Oracle: the same unrolled 2-iteration fit with
-    * k = ceil(sqrt(count(*))) as a scalar subquery — IEEE sqrt is
-    * correctly rounded, so the k derivation is engine-portable. */
-  def sAnnIncrementalSqrt(s: SparkSession, d: String): DataFrame = {
-    val e = embs(s, d)
-    Similarity.ivfIncrementalSqrt(
-        e.filter(col("vec_id") % 10 =!= 0),
-        e.filter(col("vec_id") % 10 === 0),
-        k = 3, nprobe = 3, iters = 2)
-      .orderBy("new_id", "rank")
-  }
-
-  private val sAnnIncrementalSqrtSql =
-    s"""WITH man AS (SELECT vec_id, embedding::DOUBLE[] AS emb
-       |  FROM embeddings
-       |  WHERE embedding IS NOT NULL AND vec_id % 10 <> 0),
-       |newb AS (SELECT vec_id, embedding::DOUBLE[] AS emb
-       |  FROM embeddings
-       |  WHERE embedding IS NOT NULL AND vec_id % 10 = 0),
-       |${kmUnrolledCoreSql("man",
-          "SELECT CAST(ceil(sqrt(count(*))) AS INT) FROM man")},
-       |probes AS (SELECT n.vec_id AS new_id, n.emb AS q_emb, c.cid,
-       |    ${sqlCosine("n.emb", "c.centroid")} AS c_sim
-       |  FROM newb n CROSS JOIN c2 c),
-       |probed AS (SELECT new_id, q_emb, cid FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY new_id
-       |      ORDER BY c_sim DESC, cid ASC) AS prn FROM probes)
-       |  WHERE prn <= 3),
-       |scored AS (SELECT p.new_id, m.vec_id AS match_id,
-       |    ${sqlCosine("p.q_emb", "m.emb")} AS cos_sim
-       |  FROM members m JOIN probed p ON m.cid = p.cid
-       |  WHERE m.vec_id <> p.new_id),
-       |ranked AS (SELECT *, CAST(row_number() OVER (PARTITION BY new_id
-       |    ORDER BY cos_sim DESC, match_id ASC) AS INT) AS rank
-       |  FROM scored)
-       |SELECT new_id, match_id, cos_sim, rank
-       |FROM ranked WHERE rank <= 3 ORDER BY new_id, rank""".stripMargin
-
-  /** Oracle builder for the ANN ingest gate shared with the streaming
-    * entry (`st_ann_gate`, queries/Streaming.scala): the same
-    * unrolled k ∝ N fit + probe as [[sAnnIncremental]]'s oracle,
-    * parameterized by the manifest/incoming modulus split and the
-    * probe knobs, so the stream-side gate can never drift from the
-    * batch family's hash-verified machinery. */
-  private[queries] def annGateOracleSql(mod: Int, k: Int,
-      nprobe: Int): String =
-    s"""WITH man AS (SELECT vec_id, embedding::DOUBLE[] AS emb
-       |  FROM embeddings
-       |  WHERE embedding IS NOT NULL AND vec_id % $mod <> 0),
-       |newb AS (SELECT vec_id, embedding::DOUBLE[] AS emb
-       |  FROM embeddings
-       |  WHERE embedding IS NOT NULL AND vec_id % $mod = 0),
-       |${kmUnrolledCoreSql("man",
-          "SELECT CAST(ceil(count(*) / 64.0) AS INT) FROM man")},
-       |probes AS (SELECT n.vec_id AS new_id, n.emb AS q_emb, c.cid,
-       |    ${sqlCosine("n.emb", "c.centroid")} AS c_sim
-       |  FROM newb n CROSS JOIN c2 c),
-       |probed AS (SELECT new_id, q_emb, cid FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY new_id
-       |      ORDER BY c_sim DESC, cid ASC) AS prn FROM probes)
-       |  WHERE prn <= $nprobe),
-       |scored AS (SELECT p.new_id, m.vec_id AS match_id,
-       |    ${sqlCosine("p.q_emb", "m.emb")} AS cos_sim
-       |  FROM members m JOIN probed p ON m.cid = p.cid
-       |  WHERE m.vec_id <> p.new_id),
-       |ranked AS (SELECT *, CAST(row_number() OVER (PARTITION BY new_id
-       |    ORDER BY cos_sim DESC, match_id ASC) AS INT) AS rank
-       |  FROM scored)
-       |SELECT new_id, match_id, cos_sim, rank
-       |FROM ranked WHERE rank <= $k ORDER BY new_id, rank""".stripMargin
-
-  /** IVF with a real deterministic k-means coarse quantizer (8
-    * clusters, 2 Lloyd iterations, smallest-vec_id seeds). Every step
-    * — seeding, rounded-cosine assignment, decimal-sum centroid
-    * updates — is order-independent and engine-portable, so the whole
-    * iterative fit is hash-verified against a DuckDB oracle that
-    * unrolls the same two iterations. */
-  def sAnnIvfKmeans(s: SparkSession, d: String): DataFrame = {
-    val e = embs(s, d)
-    Similarity.ivfTopKKmeans(e,
-        Similarity.sampleQueryIds(
-          e.filter(col("embedding").isNotNull), n = 16),
-        k = 5, nprobe = 3, kClusters = 8, iters = 2)
-      .orderBy("query_id", "rank")
-  }
-
-  /** TWO-LEVEL quantizer ANN ([[Similarity.ivfTopKTwoLevel]]) — the
-    * hierarchical production regime: level 1 = the exact per-label
-    * centroids, level 2 = an independent deterministic k-means of 4
-    * sub-clusters INSIDE each label (k1·k2 = 40 cells). Assignment
-    * cost is N·(k1 + k2) instead of a flat quantizer's N·k1·k2 — the
-    * scaling answer to the measured k ∝ N assignment wall (at 2M
-    * vectors a 31k-cell flat grid costs 6×10¹⁰ candidate evals, the
-    * hierarchy ~7×10⁸). Probe: nprobe1 labels, then nprobe2
-    * sub-clusters per probed label, fine rank inside the
-    * nprobe1·nprobe2 cells. The oracle unrolls the per-label fit —
-    * the shared k-means machinery with `label` added to every GROUP
-    * BY / PARTITION BY — so the grid is hash-verified end to end. */
-  def sAnnIvfTwoLevel(s: SparkSession, d: String): DataFrame = {
-    val e = embs(s, d)
-    Similarity.ivfTopKTwoLevel(e,
-        Similarity.sampleQueryIds(
-          e.filter(col("embedding").isNotNull), n = 16),
-        k = 5, nprobe1 = 3, nprobe2 = 2, k2 = 4, iters = 2)
-      .orderBy("query_id", "rank")
-  }
-
-  private val sAnnIvfTwoLevelSql = {
-    def assign(src: String, cent: String, out: String) =
-      s"""$out AS (SELECT vec_id, label, emb, scid FROM (
-         |  SELECT b.vec_id, b.label, b.emb, c.scid,
-         |    row_number() OVER (PARTITION BY b.vec_id
-         |      ORDER BY ${sqlCosine("b.emb", "c.centroid")} DESC,
-         |        c.scid) AS rn
-         |  FROM base b JOIN $cent c ON b.label = c.label)
-         |  WHERE rn = 1)""".stripMargin
-    def update(assigned: String, out: String) =
-      s"""${out}d AS (SELECT label, scid, i,
-         |    CAST(sum(CAST(emb[i] AS DECIMAL(18,6))) AS DOUBLE)
-         |      / count(*) AS cv
-         |  FROM $assigned CROSS JOIN range(1, 65) t(i)
-         |  GROUP BY label, scid, i),
-         |$out AS (SELECT label, scid, list(cv ORDER BY i) AS centroid
-         |  FROM ${out}d GROUP BY label, scid)""".stripMargin
-    s"""WITH base AS (SELECT vec_id, label, embedding::DOUBLE[] AS emb
-       |  FROM embeddings WHERE embedding IS NOT NULL),
-       |dims AS (SELECT label, i,
-       |    CAST(sum(CAST(emb[i] AS DECIMAL(18,6))) AS DOUBLE)
-       |      / count(*) AS cv
-       |  FROM base CROSS JOIN range(1, 65) t(i)
-       |  GROUP BY label, i),
-       |cent AS (SELECT label, list(cv ORDER BY i) AS centroid
-       |  FROM dims GROUP BY label),
-       |init2 AS (SELECT label, CAST(rn - 1 AS INT) AS scid,
-       |    emb AS centroid
-       |  FROM (SELECT label, emb, row_number() OVER (
-       |      PARTITION BY label ORDER BY vec_id) AS rn FROM base)
-       |  WHERE rn <= 4),
-       |${assign("base", "init2", "sa1")},
-       |${update("sa1", "sc1")},
-       |${assign("base", "sc1", "sa2")},
-       |${update("sa2", "sc2")},
-       |${assign("base", "sc2", "members")},
-       |$qidsSql,
-       |q AS (SELECT b.vec_id AS query_id, b.emb AS q_emb
-       |  FROM base b JOIN qids s ON b.vec_id = s.vec_id),
-       |p1 AS (SELECT query_id, q_emb, label,
-       |    ${sqlCosine("q_emb", "centroid")} AS c_sim
-       |  FROM q CROSS JOIN cent),
-       |pr1 AS (SELECT query_id, q_emb, label FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY query_id
-       |      ORDER BY c_sim DESC, label ASC) AS prn FROM p1)
-       |  WHERE prn <= 3),
-       |p2 AS (SELECT p.query_id, p.q_emb, p.label, c.scid,
-       |    ${sqlCosine("p.q_emb", "c.centroid")} AS s_sim
-       |  FROM pr1 p JOIN sc2 c ON p.label = c.label),
-       |pr2 AS (SELECT query_id, q_emb, label, scid FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY query_id, label
-       |      ORDER BY s_sim DESC, scid ASC) AS srn FROM p2)
-       |  WHERE srn <= 2),
-       |scored AS (SELECT p.query_id, m.vec_id AS neighbor_id,
-       |    ${sqlCosine("p.q_emb", "m.emb")} AS cos_sim
-       |  FROM members m JOIN pr2 p
-       |    ON m.label = p.label AND m.scid = p.scid
-       |  WHERE m.vec_id <> p.query_id),
-       |ranked AS (SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-       |    ORDER BY cos_sim DESC, neighbor_id ASC) AS INT) AS rank
-       |  FROM scored)
-       |SELECT query_id, neighbor_id, cos_sim, rank FROM ranked
-       |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
-  }
-
-  /** Shared oracle prefix: the unrolled deterministic k-means fit
-    * (smallest-vec_id seeds → 2×(assign, update) → final membership)
-    * as a WITH-clause body ending in CTEs `c2` (fitted centroids) and
-    * `members` (vec_id, emb, cid). Used by both the IVF-k-means ANN
-    * oracle and the SemDeDup oracle so the two can never drift. */
-  /** [[kmUnrolledSql]]'s core over an arbitrary base CTE `b`
-    * (vec_id, emb) with k given as a SQL expression — a literal for
-    * the fixed-k entries, a scalar subquery for the k ∝ N ingest
-    * gate. Emits CTEs init → a1/c1 → a2/c2 → members. */
-  private def kmUnrolledCoreSql(b: String, kExpr: String): String =
-    kmUnrolledCoreSplitSql(b, b, kExpr)
-
-  /** [[kmUnrolledCoreSql]] with the FIT corpus split from the ASSIGN
-    * corpus — seeds and both Lloyd passes run over `fitB` while the
-    * final `members` assignment covers `assignB`: the oracle form of
-    * the family's `fitSampleMod` sampled-fit lever (`fitB` = the
-    * `vec_id % mod = 0` slice of `assignB`). With `fitB == assignB`
-    * this IS the shared full-fit fragment. */
-  private def kmUnrolledCoreSplitSql(fitB: String, assignB: String,
-      kExpr: String): String = {
-    def assignSql(src: String, cent: String, out: String): String =
-      s"""$out AS (SELECT vec_id, emb, cid FROM (
-         |  SELECT b.vec_id, b.emb, c.cid,
-         |    row_number() OVER (PARTITION BY b.vec_id
-         |      ORDER BY ${sqlCosine("b.emb", "c.centroid")} DESC, c.cid)
-         |      AS rn
-         |  FROM $src b CROSS JOIN $cent c) WHERE rn = 1)""".stripMargin
-    def updateSql(assigned: String, out: String): String =
-      s"""${out}d AS (SELECT cid, i,
-         |    CAST(sum(CAST(emb[i] AS DECIMAL(18,6))) AS DOUBLE)
-         |      / count(*) AS cv
-         |  FROM $assigned CROSS JOIN range(1, 65) t(i)
-         |  GROUP BY cid, i),
-         |$out AS (SELECT cid, list(cv ORDER BY i) AS centroid
-         |  FROM ${out}d GROUP BY cid)""".stripMargin
-    s"""init AS (SELECT CAST(rn - 1 AS INT) AS cid, emb AS centroid
-       |  FROM (SELECT emb, row_number() OVER (ORDER BY vec_id) AS rn
-       |    FROM $fitB) WHERE rn <= ($kExpr)),
-       |${assignSql(fitB, "init", "a1")},
-       |${updateSql("a1", "c1")},
-       |${assignSql(fitB, "c1", "a2")},
-       |${updateSql("a2", "c2")},
-       |${assignSql(assignB, "c2", "members")}""".stripMargin
-  }
-
+  /** `base` (vec_id, emb) and the unrolled k-means fit over it —
+    * the SemDeDup oracles' shared prefix (CTEs `c2`, `members`). */
   private def kmUnrolledSql(kClusters: Int): String =
     s"""base AS (SELECT vec_id, embedding::DOUBLE[] AS emb
        |  FROM embeddings WHERE embedding IS NOT NULL),
        |${kmUnrolledCoreSql("base", kClusters.toString)}""".stripMargin
-
-  private val sAnnIvfKmeansSql =
-    s"""WITH ${kmUnrolledSql(8)},
-       |$qidsSql,
-       |q AS (SELECT b.vec_id AS query_id, b.emb AS q_emb
-       |  FROM base b JOIN qids s ON b.vec_id = s.vec_id),
-       |probes AS (SELECT query_id, q_emb, cid,
-       |    ${sqlCosine("q_emb", "centroid")} AS c_sim
-       |  FROM q CROSS JOIN c2),
-       |probed AS (SELECT query_id, q_emb, cid FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY query_id
-       |      ORDER BY c_sim DESC, cid ASC) AS prn FROM probes)
-       |  WHERE prn <= 3),
-       |scored AS (SELECT p.query_id, m.vec_id AS neighbor_id,
-       |    ${sqlCosine("p.q_emb", "m.emb")} AS cos_sim
-       |  FROM members m JOIN probed p ON m.cid = p.cid
-       |  WHERE m.vec_id <> p.query_id),
-       |ranked AS (SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-       |    ORDER BY cos_sim DESC, neighbor_id ASC) AS INT) AS rank
-       |  FROM scored)
-       |SELECT query_id, neighbor_id, cos_sim, rank FROM ranked
-       |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
 
   /** One PQ catalog row: the [[PqSpec]] plus how the entry runs it.
     *
@@ -1864,7 +1390,7 @@ object TrainingData {
 
   private val pqEntries: Seq[(String, PqEntry)] = {
     val pq = PqSpec(m = 16, kSub = 32, iters = 2)
-    val ivf = pq.copy(coarse = Some(PqCoarse(nprobe = 3)))
+    val ivf = pq.copy(coarse = Some(Coarse.Labels(nprobe = 3)))
     val balanced = PqLayout.VarianceBalanced
     Seq(
       "s_ann_pq" -> PqEntry(pq),
@@ -1883,12 +1409,12 @@ object TrainingData {
       // nprobe widened 3 → 5 for the ~1/3 selectivity (the
       // raw-vector s_ann_filtered's stand-in predicate)
       "s_ann_filtered_pq" -> PqEntry(ivf.copy(
-        coarse = Some(PqCoarse(nprobe = 5)),
-        filter = Some(PqFilter.vecIdMultipleOf(3)))),
+        coarse = Some(Coarse.Labels(nprobe = 5)),
+        filter = Some(AnnFilter.vecIdMultipleOf(3)))),
       // nprobe derived from the selectivity: 6 of 10 on the fixture
       "s_ann_filtered_pq_auto" -> PqEntry(ivf.copy(
-        coarse = Some(PqCoarse(nprobe = 3, widenForFilter = true)),
-        filter = Some(PqFilter.vecIdMultipleOf(2)))),
+        coarse = Some(Coarse.Labels(nprobe = 3, widenForFilter = true)),
+        filter = Some(AnnFilter.vecIdMultipleOf(2)))),
       "s_ann_index_scan" ->
         PqEntry(ivf.copy(fitSampleMod = 4L), stored = true),
       "s_ann_index_append" -> PqEntry(ivf.copy(fitSampleMod = 4L),
@@ -2073,7 +1599,7 @@ object TrainingData {
     * sample (|Q| = 16, [[Similarity.sampleQueryIds]] — same r6
     * treatment as `s_ann_int8`): O(|Q|·|C|) work, a bounded broadcast
     * anchor frame, linear in the corpus. The production scale path is
-    * [[sHardNegativesIvf]]. */
+    * `s_hard_negatives_ivf` ([[IvfSpec]] with `otherLabel`). */
   def sHardNegatives(s: SparkSession, d: String): DataFrame = {
     val e = embs(s, d)
     Similarity.hardNegatives(e,
@@ -2100,72 +1626,8 @@ object TrainingData {
        |SELECT query_id, neighbor_id, neg_label, cos_sim, rank
        |FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
 
-  /** Hard-negative mining on the IVF × int8 production path
-    * ([[Similarity.hardNegativesIvfInt8]]): label exclusion composed
-    * with the pruned candidate stream of [[sAnnIvfInt8]] instead of a
-    * per-anchor full corpus scan — the anchor's own label partition
-    * is dropped at probe selection, the `label <> q_label`
-    * post-filter guards the candidate stream, and every pair score
-    * runs on int8 codes. Fixed |Q| = 16; total work corpus-linear;
-    * hash-verified (both quantization levels reproduced in the
-    * oracle). */
-  def sHardNegativesIvf(s: SparkSession, d: String): DataFrame = {
-    val e = embs(s, d)
-    Similarity.hardNegativesIvfInt8(e,
-        Similarity.sampleQueryIds(
-          e.filter(col("embedding").isNotNull), n = 16),
-        k = 5, nprobe = 3)
-      .orderBy("query_id", "rank")
-  }
-
-  private val sHardNegativesIvfSql =
-    s"""WITH base AS (SELECT vec_id, label, embedding::DOUBLE[] AS emb
-       |  FROM embeddings WHERE embedding IS NOT NULL),
-       |dims AS (SELECT label, i,
-       |    CAST(sum(CAST(emb[i] AS DECIMAL(18,6))) AS DOUBLE)
-       |      / count(*) AS cv
-       |  FROM base CROSS JOIN range(1, 65) t(i)
-       |  GROUP BY label, i),
-       |cent AS (SELECT label, list(cv ORDER BY i) AS centroid
-       |  FROM dims GROUP BY label),
-       |cq0 AS (SELECT label, centroid,
-       |    list_aggregate(list_transform(centroid, x -> abs(x)), 'max')
-       |      AS cs
-       |  FROM cent),
-       |cq AS (SELECT * FROM (SELECT label,
-       |    sqrt(list_dot_product(c_qv, c_qv)) AS c_qn, c_qv
-       |  FROM (SELECT label,
-       |      list_transform(centroid, e -> CASE WHEN cs = 0 THEN 0.0
-       |        WHEN e >= 0 THEN floor(e * 127.0 / cs + 0.5)
-       |        ELSE -floor(-(e * 127.0 / cs) + 0.5) END) AS c_qv
-       |    FROM cq0)) WHERE c_qn > 0),
-       |${quantizeSql(" label,")},
-       |$qidsSql,
-       |q AS (SELECT n.vec_id AS query_id, n.label AS q_label,
-       |    n.qv AS q_qv, n.qn AS q_qn
-       |  FROM qn n JOIN qids s ON n.vec_id = s.vec_id),
-       |probes AS (SELECT query_id, q_label, q_qv, q_qn, cq.label,
-       |    round(list_dot_product(q_qv, c_qv) / (q_qn * c_qn), 6)
-       |      AS c_sim
-       |  FROM q CROSS JOIN cq WHERE cq.label <> q.q_label),
-       |probed AS (SELECT query_id, q_label, q_qv, q_qn, label FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY query_id
-       |      ORDER BY c_sim DESC, label ASC) AS prn FROM probes)
-       |  WHERE prn <= 3),
-       |scored AS (SELECT p.query_id, n.vec_id AS neighbor_id,
-       |    n.label AS neg_label,
-       |    round(list_dot_product(p.q_qv, n.qv) / (p.q_qn * n.qn), 6)
-       |      AS cos_sim
-       |  FROM qn n JOIN probed p ON n.label = p.label
-       |  WHERE n.vec_id <> p.query_id AND n.label <> p.q_label),
-       |ranked AS (SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-       |    ORDER BY cos_sim DESC, neighbor_id ASC) AS INT) AS rank
-       |  FROM scored)
-       |SELECT query_id, neighbor_id, neg_label, cos_sim, rank
-       |FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
-
   /** Semantic deduplication (SemDeDup, Abbas et al. 2023): k-means
-    * clustering (same deterministic fit as [[sAnnIvfKmeans]], shared
+    * clustering (same deterministic fit as `s_ann_ivf_kmeans`, shared
     * oracle fragment) + exact within-cluster cosine pruning with a
     * greedy keep-smallest-id rule. One row per vector: cluster id and
     * whether the vector survives at threshold 0.45. The quadratic
@@ -2267,7 +1729,7 @@ object TrainingData {
     * /64 is a binary shift, IEEE sqrt/ceil are correctly rounded —
     * engine-portable), unrolls the level-1 fit with the shared
     * fragment and the level-2 fit with `cid` added to every GROUP BY
-    * / PARTITION BY — the [[sAnnIvfTwoLevelSql]] pattern with a
+    * / PARTITION BY — the `s_ann_ivf_two_level` pattern with a
     * derived grid. */
   def dSemdedupHier(s: SparkSession, d: String): DataFrame =
     Similarity.semDedupHier(embs(s, d), targetCellSize = 64L,
@@ -3929,7 +3391,7 @@ object TrainingData {
   }
 
   /** [[sHybridRrf]] with the dense leg swapped brute → IVF
-    * ([[graft.ext.Similarity.ivfTopK]], nprobe 3) — the
+    * ([[graft.ext.Similarity.ivfSearch]] on label cells, nprobe 3) — the
     * leg-interchangeability claim made CONCRETE and hash-verified:
     * same query set, same fusion, only `dr` changes. This is the
     * production composition at scale (the coarse index eats the
@@ -3946,8 +3408,8 @@ object TrainingData {
     val sparse = graft.ext.Retrieval.bm25TopK(docs(s, d), terms,
         k = 10, k1 = 1.5, b = 0.75)
       .select(col("qid"), col("doc_id"), col("rk"))
-    val dense = Similarity.ivfTopK(embs(s, d),
-        qmap.select(col("qvec_id").as("vec_id")), k = 10, nprobe = 3)
+    val dense = Similarity.ivfSearch(IvfSpec(Coarse.Labels(nprobe = 3)),
+        embs(s, d), qmap.select(col("qvec_id").as("vec_id")), k = 10)
       .join(broadcast(qmap), col("query_id") === col("qvec_id"))
       .select(col("qid"), col("neighbor_id").as("doc_id"),
         col("rank").cast("long").as("rk"))
@@ -3955,25 +3417,14 @@ object TrainingData {
       .orderBy("qid", "rk")
   }
 
+  // the dense leg reuses the IVF oracle's coarse fragments
   private val sHybridRrfIvfSql = hybridRrfSqlWith(
-    """ibase AS (SELECT vec_id, label, embedding::DOUBLE[] AS emb
+    s"""ibase AS (SELECT vec_id, label, embedding::DOUBLE[] AS emb
       |  FROM embeddings WHERE embedding IS NOT NULL),
-      |dims AS (SELECT label, i,
-      |    CAST(sum(CAST(emb[i] AS DECIMAL(18,6))) AS DOUBLE)
-      |      / count(*) AS cv
-      |  FROM ibase CROSS JOIN range(1, 65) t(i)
-      |  GROUP BY label, i),
-      |cent AS (SELECT label, list(cv ORDER BY i) AS centroid
-      |  FROM dims GROUP BY label),
-      |cprobes AS (SELECT qd.qid, qd.qvec_id, qd.q_emb, cent.label,
-      |    round(list_dot_product(q_emb, centroid) /
-      |      (sqrt(list_dot_product(q_emb, q_emb)) *
-      |       sqrt(list_dot_product(centroid, centroid))), 6) AS c_sim
-      |  FROM qd CROSS JOIN cent),
-      |probed AS (SELECT qid, qvec_id, q_emb, label FROM (
-      |    SELECT *, row_number() OVER (PARTITION BY qid
-      |      ORDER BY c_sim DESC, label ASC) AS prn FROM cprobes)
-      |  WHERE prn <= 3),
+      |${Coarse.centroidsSql("ibase", 64)},
+      |${Coarse.probedSql("probed", "qd q CROSS JOIN cent c",
+          Seq("q.qid", "q.qvec_id", "q.q_emb", "c.label"),
+          sqlCosine("q.q_emb", "c.centroid"), Seq("qid"), "label", "3")},
       |dscored AS (SELECT p.qid, b.vec_id AS doc_id,
       |    round(list_dot_product(p.q_emb, b.emb) /
       |      (sqrt(list_dot_product(p.q_emb, p.q_emb)) *
@@ -5288,15 +4739,6 @@ object TrainingData {
     "s_ann_int8" -> (sAnnInt8 _),
     "s_ann_lsh" -> (sAnnLsh _),
     "s_ann_lsh_mp" -> (sAnnLshMp _),
-    "s_ann_ivf" -> (sAnnIvf _),
-    "s_ann_filtered" -> (sAnnFiltered _),
-    "s_ann_filtered_auto" -> (sAnnFilteredAuto _),
-    "s_ann_incremental" -> (sAnnIncremental _),
-    "s_ann_incremental_sqrt" -> (sAnnIncrementalSqrt _),
-    "s_ann_ivf_int8" -> (sAnnIvfInt8 _),
-    "s_ann_rerank" -> (sAnnRerank _),
-    "s_ann_ivf_kmeans" -> (sAnnIvfKmeans _),
-    "s_ann_ivf_two_level" -> (sAnnIvfTwoLevel _),
     "d_embed_cov" -> (dEmbedCov _),
     "d_embed_dups" -> (dEmbedDups _),
     "d_embed_decontaminate" -> (dEmbedDecontaminate _),
@@ -5347,7 +4789,6 @@ object TrainingData {
     "d_kl_sources" -> (dKlSources _),
     "s_ann_recall" -> (sAnnRecall _),
     "s_hard_negatives" -> (sHardNegatives _),
-    "s_hard_negatives_ivf" -> (sHardNegativesIvf _),
     "d_pack_greedy" -> (dPackGreedy _),
     "d_pii_redact" -> (dPiiRedact _),
     "d_mix_sources" -> (dMixSources _),
@@ -5359,7 +4800,8 @@ object TrainingData {
     "m_features" -> (mFeatures _),
     "m_resize" -> (mResize _),
     "m_phash_dups" -> (mPhashDups _),
-  ) ++ pqEntries.map { case (n, e) => n -> (runPq(n, e) _) }
+  ) ++ pqEntries.map { case (n, e) => n -> (runPq(n, e) _) } ++
+    ivfEntries.map { case (n, e) => n -> (runIvf(e) _) }
 
   val oracle: Map[String, String] = Map(
     "d_dedup_exact" -> dDedupExactSql,
@@ -5436,7 +4878,6 @@ object TrainingData {
     "d_kl_sources" -> dKlSourcesSql,
     "s_ann_recall" -> sAnnRecallSql,
     "s_hard_negatives" -> sHardNegativesSql,
-    "s_hard_negatives_ivf" -> sHardNegativesIvfSql,
     "d_pack_greedy" -> dPackGreedySql,
     "d_pii_redact" -> dPiiRedactSql,
     "d_mix_sources" -> dMixSourcesSql,
@@ -5446,15 +4887,6 @@ object TrainingData {
     "s_ann_int8" -> sAnnInt8Sql,
     "s_ann_lsh" -> sAnnLshSql,
     "s_ann_lsh_mp" -> sAnnLshMpSql,
-    "s_ann_ivf" -> sAnnIvfSql,
-    "s_ann_filtered" -> sAnnFilteredSql,
-    "s_ann_filtered_auto" -> sAnnFilteredAutoSql,
-    "s_ann_incremental" -> sAnnIncrementalSql,
-    "s_ann_incremental_sqrt" -> sAnnIncrementalSqrtSql,
-    "s_ann_ivf_int8" -> sAnnIvfInt8Sql,
-    "s_ann_rerank" -> sAnnRerankSql,
-    "s_ann_ivf_kmeans" -> sAnnIvfKmeansSql,
-    "s_ann_ivf_two_level" -> sAnnIvfTwoLevelSql,
     "d_embed_cov" -> dEmbedCovSql,
     "d_embed_dups" -> dEmbedDupsSql,
     "d_embed_dups_auto" -> dEmbedDupsAutoSql,
@@ -5472,5 +4904,7 @@ object TrainingData {
     // after the query runs)
     case (n, e) if !e.trainOpq => n -> PqSpec.oracleSql(e.spec, PqTopK,
       fitWhere = e.appendMod.map(m => s"vec_id % $m <> 0"))
+  } ++ ivfEntries.map { case (n, e) =>
+    n -> IvfSpec.oracleSql(e.spec, e.k, e.gateMod)
   }
 }

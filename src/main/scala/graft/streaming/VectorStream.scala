@@ -4,15 +4,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
-import graft.ext.Similarity
+import graft.ext.{IvfSpec, Similarity}
 
 /** Structured Streaming surface for the ANN ingest gate — the
   * stream-side composition of the vector family with §2.10's
   * streaming tier (north-star extension; the reference is batch-only).
   *
   * Production shape: the IVF index is STATIC state between refits
-  * ([[Similarity.ivfIndexBuild]] / [[Similarity.ivfIndexBuildSqrt]] —
-  * persisted centroids + members, the FAISS train+add split), and the
+  * ([[Similarity.ivfBuild]] on k-means cells — persisted centroids +
+  * members, the FAISS train+add split), and the
   * incoming vector stream is gated per micro-batch through
   * [[Similarity.ivfProbe]] — each arriving vector emits its top-k
   * attach points against the manifest for downstream dedup-or-link
@@ -76,17 +76,18 @@ object VectorStream {
     StructField("label", IntegerType)))
 
   /** The per-micro-batch gate body: probe `incoming` against the
-    * static `index`, emitting (new_id, match_id, cos_sim, rank). */
-  def gateBatch(index: Similarity.IvfIndex, k: Int, nprobe: Int,
+    * static `index` under `spec`, emitting (new_id, match_id, cos_sim,
+    * rank). */
+  def gateBatch(spec: IvfSpec, index: Similarity.IvfIndex, k: Int,
       incoming: DataFrame): DataFrame =
-    Similarity.ivfProbe(index, incoming, k, nprobe)
+    Similarity.ivfProbe(spec, index, incoming, k)
 
   /** Wire a parquet-directory vector stream through the gate via
     * foreachBatch. `onBatch` receives each micro-batch's attach
     * points (already computed); checkpointing and restart semantics
     * are the standard file-source contract. */
   def ingestGateStream(spark: SparkSession, srcDir: String,
-      index: Similarity.IvfIndex, k: Int, nprobe: Int,
+      spec: IvfSpec, index: Similarity.IvfIndex, k: Int,
       checkpointDir: String)(
       onBatch: (DataFrame, Long) => Unit): StreamingQuery =
     spark.readStream
@@ -97,7 +98,7 @@ object VectorStream {
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (b: DataFrame, epoch: Long) =>
-        onBatch(gateBatch(index, k, nprobe, b), epoch)
+        onBatch(gateBatch(spec, index, k, b), epoch)
       }
       .start()
 

@@ -186,7 +186,7 @@ class ScanAuditSpec extends SparkSpec {
       "value"), s"widened to $upCols")
     // s_ann_filtered: label rides for partition probing; everything
     // else pruned
-    val fa = queries.TrainingData.sAnnFiltered(spark, sf0001)
+    val fa = queries.TrainingData.queries("s_ann_filtered")(spark, sf0001)
     val (faCols, _) = scanOf(fa, "embeddings")
     assert(faCols == Set("vec_id", "embedding", "label"),
       s"widened to $faCols")

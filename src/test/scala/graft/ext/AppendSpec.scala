@@ -15,7 +15,7 @@ class AppendSpec extends SparkSpec {
 
   // the catalog's stored-index spec (s_ann_index_scan/_append)
   private val spec = PqSpec(m = 16, kSub = 32, iters = 2,
-    coarse = Some(PqCoarse(nprobe = 3)), fitSampleMod = 4L)
+    coarse = Some(Coarse.Labels(nprobe = 3)), fitSampleMod = 4L)
 
   private def codesOf(dir: String): Seq[(Long, Int, Int)] =
     spark.read.parquet(s"$dir/codes")
@@ -100,7 +100,7 @@ class AppendSpec extends SparkSpec {
       Seq.tabulate(8)(d => ((i * 7 + d * 5) % 11).toFloat)))
     .toDF("vec_id", "label", "embedding")
   private val smallSpec = PqSpec(m = 2, kSub = 2, iters = 1, dim = 8,
-    coarse = Some(PqCoarse(nprobe = 2)))
+    coarse = Some(Coarse.Labels(nprobe = 2)))
 
   private def exists(path: String) = new java.io.File(path).exists()
 

@@ -9,9 +9,25 @@ class SimilaritySpec extends SparkSpec {
   // the PQ specs the tests share: the 8-dim fixtures' starved
   // codebooks and the catalog parameterization
   private val ivf8 = PqSpec(m = 2, kSub = 2, iters = 2, dim = 8,
-    coarse = Some(PqCoarse(nprobe = 2)))
+    coarse = Some(Coarse.Labels(nprobe = 2)))
   private val pq64 = PqSpec(m = 16, kSub = 32, iters = 2)
-  private val ivf64 = pq64.copy(coarse = Some(PqCoarse(nprobe = 3)))
+  private val ivf64 = pq64.copy(coarse = Some(Coarse.Labels(nprobe = 3)))
+
+  // the IVF family's spec shorthands
+  private def labels(nprobe: Int, filter: Option[AnnFilter] = None) =
+    IvfSpec(Coarse.Labels(nprobe), filter = filter)
+  private def twoLevel(nprobe1: Int, nprobe2: Int, k2: Int, iters: Int) =
+    IvfSpec(Coarse.TwoLevel(nprobe1, k2, nprobe2, iters))
+  private def int8(nprobe: Int, rerank: Option[Int] = None,
+      otherLabel: Boolean = false) =
+    IvfSpec(Coarse.Labels(nprobe), codes = IvfCodes.Int8(rerank),
+      otherLabel = otherLabel)
+  // the ingest gate: k-means cells at k = ⌈N/target⌉ or ⌈√N⌉
+  private def gate(k: Coarse.KRule, fitSampleMod: Long = 1L) =
+    IvfSpec(Coarse.Kmeans(k, iters = 2, nprobe = 3, fitSampleMod))
+  private def gateRun(spec: IvfSpec, manifest: org.apache.spark.sql.DataFrame,
+      batch: org.apache.spark.sql.DataFrame, k: Int) =
+    Similarity.ivfProbe(spec, Similarity.ivfBuild(spec, manifest), batch, k)
 
   test("brute-force top-k ranks an identical vector first") {
     val vecs = Seq(
@@ -83,21 +99,55 @@ class SimilaritySpec extends SparkSpec {
 
   test("IVF top-k probes centroids and returns ranked neighbors") {
     val emb = graft.Tables.embeddings(spark, sf0001)
-    val got = Similarity.ivfTopK(emb, col("vec_id") % 100 === 0, 5,
-      nprobe = 10) // nprobe = all labels → equals brute force
-    val brute = Similarity.bruteForceTopK(emb, col("vec_id") % 100 === 0, 5)
-    val g = got.select("query_id", "neighbor_id", "rank")
-      .as[(Long, Long, Int)].collect().toSet
+    val isQ = col("vec_id") % 100 === 0
+    val brute = Similarity.bruteForceTopK(emb, isQ, 5)
     val b = brute.select("query_id", "neighbor_id", "rank")
       .as[(Long, Long, Int)].collect().toSet
-    assert(g == b, "IVF with all probes must equal brute force")
+    val nLabels = emb.filter(col("embedding").isNotNull)
+      .select("label").distinct().count().toInt
+    // every cell probed → candidates = the whole corpus → brute force:
+    // all labels; all 8 k-means cells; every label × every sub-cell
+    for (spec <- Seq(labels(10),
+        IvfSpec(Coarse.Kmeans(Coarse.Fixed(8), iters = 2, nprobe = 8)),
+        twoLevel(nLabels, nprobe2 = 4, k2 = 4, iters = 2))) {
+      val g = Similarity.ivfSearch(spec, emb,
+          emb.filter(isQ).select("vec_id"), 5)
+        .select("query_id", "neighbor_id", "rank")
+        .as[(Long, Long, Int)].collect().toSet
+      assert(g == b, s"IVF with all probes must equal brute force: $spec")
+    }
+  }
+
+  // an id frame without `vec_id` fails at analysis, after the corpus
+  // persisted: the cached-data count must be back where it started
+  private def assertReleasesCorpus(search: () => Any): Unit = {
+    spark.sharedState.cacheManager.clearCache()
+    intercept[org.apache.spark.sql.AnalysisException](search())
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "a failed search left its corpus cached")
+  }
+
+  test("a failed IVF search releases its persisted corpus") {
+    val emb = graft.Tables.embeddings(spark, sf0001)
+    val badIds = emb.select(col("vec_id").as("id")).limit(4)
+    assertReleasesCorpus(() => Similarity.ivfSearch(IvfSpec(
+      Coarse.Kmeans(Coarse.Fixed(4), iters = 1, nprobe = 2)), emb, badIds, 5))
+    assertReleasesCorpus(() =>
+      Similarity.ivfSearch(int8(3), emb, badIds, 5))
+  }
+
+  test("a failed PQ search releases its persisted corpus") {
+    val emb = graft.Tables.embeddings(spark, sf0001)
+    val badIds = emb.select(col("vec_id").as("id")).limit(4)
+    assertReleasesCorpus(() => Similarity.pqSearch(ivf64, emb, badIds, 5))
   }
 
   test("filtered ANN: every neighbor satisfies the predicate, all-" +
       "probes equals the filtered exact scan, and the widened-nprobe " +
       "catalog shape keeps positive recall against it") {
     val emb = graft.Tables.embeddings(spark, sf0001)
-    val pred = pmod(col("vec_id"), lit(3)) === 0
+    val filter = AnnFilter.vecIdMultipleOf(3)
+    val pred = filter.column
     val nn = emb.filter(col("embedding").isNotNull)
     val qids = Similarity.sampleQueryIds(nn, 16)
     // independent exact ground truth: query × filtered-candidate
@@ -122,8 +172,7 @@ class SimilaritySpec extends SparkSpec {
       .as[(Long, Long, Int)].collect().toSet
     // all 10 label partitions probed → candidate set IS the filtered
     // corpus → exact equality with the ground-truth scan
-    val all = Similarity.ivfTopKFiltered(emb, qids, 5, nprobe = 10,
-        candidateFilter = pred)
+    val all = Similarity.ivfSearch(labels(10, Some(filter)), emb, qids, 5)
       .select("query_id", "neighbor_id", "rank")
       .as[(Long, Long, Int)].collect().toSet
     assert(all == truth, "all-probes filtered IVF must equal the " +
@@ -132,8 +181,8 @@ class SimilaritySpec extends SparkSpec {
     // ~1/3-selective predicate): predicate holds on every result,
     // no self-matches, and recall against the exact scan is high
     // (deterministic per corpus; measured 0.95 at sf0.001)
-    val got = Similarity.ivfTopKFiltered(emb, qids, 5, nprobe = 5,
-      candidateFilter = pred).collect()
+    val got = Similarity.ivfSearch(labels(5, Some(filter)), emb, qids, 5)
+      .collect()
     assert(got.nonEmpty)
     assert(got.forall(r => r.getLong(1) % 3 == 0),
       "a neighbor violates the candidate predicate")
@@ -147,8 +196,8 @@ class SimilaritySpec extends SparkSpec {
     // the operative claims are the floor and the nprobe recall lever
     val recall = recallOf(got)
     assert(recall >= 0.55, s"filtered recall degraded: $recall")
-    val narrow = recallOf(Similarity.ivfTopKFiltered(emb, qids, 5,
-      nprobe = 3, candidateFilter = pred).collect())
+    val narrow = recallOf(Similarity.ivfSearch(labels(3, Some(filter)),
+      emb, qids, 5).collect())
     assert(recall >= narrow,
       s"widening nprobe lost recall: $recall < $narrow")
   }
@@ -162,8 +211,8 @@ class SimilaritySpec extends SparkSpec {
     val nLabels = nn.select("label").distinct().count().toInt
     // every label probed, every sub-cluster taken → candidates = the
     // whole corpus → must equal the brute-force exact ranking
-    val all = Similarity.ivfTopKTwoLevel(emb, qids, 5,
-        nprobe1 = nLabels, nprobe2 = 4, k2 = 4, iters = 2)
+    val all = Similarity.ivfSearch(twoLevel(nprobe1 = nLabels,
+        nprobe2 = 4, k2 = 4, iters = 2), emb, qids, 5)
       .select("query_id", "neighbor_id", "rank")
       .as[(Long, Long, Int)].collect().toSet
     val qset = qids.as[Long].collect().toSet
@@ -180,10 +229,10 @@ class SimilaritySpec extends SparkSpec {
       df.select("query_id", "neighbor_id").as[(Long, Long)]
         .collect().toSet.count(truthPairs.contains).toDouble /
         truthPairs.size
-    val narrow = recallOf(Similarity.ivfTopKTwoLevel(emb, qids, 5,
-      nprobe1 = 3, nprobe2 = 2, k2 = 4, iters = 2))
-    val wide = recallOf(Similarity.ivfTopKTwoLevel(emb, qids, 5,
-      nprobe1 = 3, nprobe2 = 4, k2 = 4, iters = 2))
+    val narrow = recallOf(Similarity.ivfSearch(twoLevel(nprobe1 = 3,
+      nprobe2 = 2, k2 = 4, iters = 2), emb, qids, 5))
+    val wide = recallOf(Similarity.ivfSearch(twoLevel(nprobe1 = 3,
+      nprobe2 = 4, k2 = 4, iters = 2), emb, qids, 5))
     assert(narrow >= 0.3, s"two-level recall floor broke: $narrow")
     assert(wide >= narrow,
       s"widening nprobe2 lost recall: $wide < $narrow")
@@ -195,20 +244,22 @@ class SimilaritySpec extends SparkSpec {
     val emb = graft.Tables.embeddings(spark, sf0001)
     val nn = emb.filter(col("embedding").isNotNull)
     val qids = Similarity.sampleQueryIds(nn, 16)
-    val pred = pmod(col("vec_id"), lit(2)) === 0
+    val filter = AnnFilter.vecIdMultipleOf(2)
+    val pred = filter.column
     // hand-compute the rule: nprobe = min(l, ceil(3n/m))
     val n = nn.count()
     val m = nn.filter(pred).count()
     val l = nn.select("label").distinct().count()
     val expected = math.min(l, (3L * n + m - 1) / m).toInt
-    val auto = Similarity.ivfTopKFilteredAuto(emb, qids, 5,
-      baseNprobe = 3, candidateFilter = pred)
+    val auto = Similarity.ivfSearch(IvfSpec(
+        Coarse.Labels(3, widenForFilter = true), filter = Some(filter)),
+        emb, qids, 5)
       .select("query_id", "neighbor_id", "rank")
       .as[(Long, Long, Int)].collect().toSet
     // behavioral pin: auto ≡ the hand-widened form at the derived
     // nprobe (the rule is the ONLY thing the auto variant adds)
-    val hand = Similarity.ivfTopKFiltered(emb, qids, 5,
-      nprobe = expected, candidateFilter = pred)
+    val hand = Similarity.ivfSearch(labels(expected, Some(filter)),
+        emb, qids, 5)
       .select("query_id", "neighbor_id", "rank")
       .as[(Long, Long, Int)].collect().toSet
     assert(auto == hand,
@@ -222,13 +273,14 @@ class SimilaritySpec extends SparkSpec {
         s"(nprobe=$expected, labels=$l)")
     // rare predicate → inverse selectivity exceeds the label count →
     // clamp: auto IS the exact filtered scan (all partitions probed)
-    val rare = pmod(col("vec_id"), lit(50)) === 0
-    val clamped = Similarity.ivfTopKFilteredAuto(emb, qids, 5,
-      baseNprobe = 3, candidateFilter = rare)
+    val rare = AnnFilter.vecIdMultipleOf(50)
+    val clamped = Similarity.ivfSearch(IvfSpec(
+        Coarse.Labels(3, widenForFilter = true), filter = Some(rare)),
+        emb, qids, 5)
       .select("query_id", "neighbor_id", "rank")
       .as[(Long, Long, Int)].collect().toSet
-    val exact = Similarity.ivfTopKFiltered(emb, qids, 5,
-      nprobe = l.toInt, candidateFilter = rare)
+    val exact = Similarity.ivfSearch(labels(l.toInt, Some(rare)),
+        emb, qids, 5)
       .select("query_id", "neighbor_id", "rank")
       .as[(Long, Long, Int)].collect().toSet
     assert(clamped == exact,
@@ -465,9 +517,9 @@ class SimilaritySpec extends SparkSpec {
       threshold = 0.9, dim = 3)
     assert(sd.count() == 4, "NULL vector contributes no output row")
     assert(sd.filter(col("vec_id") === 2L).isEmpty)
-    val ivf = Similarity.ivfTopKKmeans(vecs,
-      col("vec_id") === 0L, k = 2, nprobe = 2, kClusters = 2,
-      iters = 1)
+    val ivf = Similarity.ivfSearch(IvfSpec(Coarse.Kmeans(Coarse.Fixed(2),
+        iters = 1, nprobe = 2)), vecs,
+      vecs.filter(col("vec_id") === 0L).select("vec_id"), k = 2)
     assert(ivf.filter(col("neighbor_id") === 2L).isEmpty,
       "NULL vector is never a neighbor")
   }
@@ -571,11 +623,11 @@ class SimilaritySpec extends SparkSpec {
     // composition must then reproduce the exact int8 scan, proving
     // the only difference is the candidate pruning
     val nLabels = emb.select("label").distinct().count().toInt
-    assert(rows(Similarity.ivfTopKInt8(emb, qids, 5, nprobe = nLabels))
+    assert(rows(Similarity.ivfSearch(int8(nLabels), emb, qids, 5))
       == brute)
     // with real pruning it returns k rows per surviving query from a
     // strict candidate subset
-    val pruned = Similarity.ivfTopKInt8(emb, qids, 5, nprobe = 1)
+    val pruned = Similarity.ivfSearch(int8(1), emb, qids, 5)
     assert(pruned.count() > 0)
   }
 
@@ -635,8 +687,8 @@ class SimilaritySpec extends SparkSpec {
     // full probing (every other-label partition survives): candidates
     // = all other-label vectors, so the composition is the brute scan
     // under quantized scoring — high overlap, exact exclusion
-    val full = Similarity.hardNegativesIvfInt8(emb, qids, k = 5,
-        nprobe = nLabels)
+    val full = Similarity.ivfSearch(int8(nLabels, otherLabel = true),
+        emb, qids, k = 5)
       .select("query_id", "neighbor_id", "neg_label")
       .as[(Long, Long, Int)].collect()
     assert(full.nonEmpty)
@@ -652,8 +704,8 @@ class SimilaritySpec extends SparkSpec {
     assert(recall >= 0.85, s"full-probe IVF×int8 recall $recall")
     // real pruning still emits k rows per anchor from a candidate
     // subset, and the exclusion invariant survives
-    val pruned = Similarity.hardNegativesIvfInt8(emb, qids, k = 5,
-        nprobe = 1)
+    val pruned = Similarity.ivfSearch(int8(1, otherLabel = true),
+        emb, qids, k = 5)
       .select("query_id", "neighbor_id", "neg_label")
       .as[(Long, Long, Int)].collect()
     assert(pruned.nonEmpty)
@@ -932,10 +984,10 @@ class SimilaritySpec extends SparkSpec {
     val emb = graft.Tables.embeddings(spark, sf0001)
     val nn = emb.filter(col("embedding").isNotNull)
     val q16 = Similarity.sampleQueryIds(nn, 16)
-    val pred = PqFilter.vecIdMultipleOf(3)
+    val pred = AnnFilter.vecIdMultipleOf(3)
     // catalog shape: nprobe widened 3 → 5 for ~1/3 selectivity
     val got = Similarity.pqSearch(ivf64.copy(
-      coarse = Some(PqCoarse(nprobe = 5)), filter = Some(pred)),
+      coarse = Some(Coarse.Labels(nprobe = 5)), filter = Some(pred)),
       emb, q16, 5)
     assert(got.filter(pmod(col("neighbor_id"), lit(3)) =!= 0).isEmpty,
       "a result violated the candidate predicate")
@@ -944,7 +996,7 @@ class SimilaritySpec extends SparkSpec {
     // and codes are filter-agnostic, so adc_dot values are identical
     // row-for-row)
     val nLabels = nn.select("label").distinct().count().toInt
-    val allProbes = ivf64.copy(coarse = Some(PqCoarse(nprobe = nLabels)))
+    val allProbes = ivf64.copy(coarse = Some(Coarse.Labels(nprobe = nLabels)))
     val all = Similarity.pqSearch(allProbes.copy(filter = Some(pred)),
         emb, q16, 5)
       .orderBy("query_id", "rank").collect().toSeq
@@ -969,7 +1021,7 @@ class SimilaritySpec extends SparkSpec {
     val emb = graft.Tables.embeddings(spark, sf0001)
     val nn = emb.filter(col("embedding").isNotNull)
     val q16 = Similarity.sampleQueryIds(nn, 16)
-    val filter = PqFilter.vecIdMultipleOf(2)
+    val filter = AnnFilter.vecIdMultipleOf(2)
     val pred = filter.column
     val n = nn.count()
     val m = nn.filter(pred).count()
@@ -979,11 +1031,11 @@ class SimilaritySpec extends SparkSpec {
     assert(expected > 3 && expected < l,
       s"fixture widening degenerate (nprobe=$expected, labels=$l)")
     val auto = Similarity.pqSearch(ivf64.copy(
-        coarse = Some(PqCoarse(nprobe = 3, widenForFilter = true)),
+        coarse = Some(Coarse.Labels(nprobe = 3, widenForFilter = true)),
         filter = Some(filter)), emb, q16, 5)
       .orderBy("query_id", "rank").collect().toSeq
     val hand = Similarity.pqSearch(ivf64.copy(
-        coarse = Some(PqCoarse(nprobe = expected)),
+        coarse = Some(Coarse.Labels(nprobe = expected)),
         filter = Some(filter)), emb, q16, 5)
       .orderBy("query_id", "rank").collect().toSeq
     assert(auto == hand)
@@ -1029,7 +1081,7 @@ class SimilaritySpec extends SparkSpec {
         case o => o.children.flatMap(allScans)
       }
       val one = Similarity.pqIndexProbe(spark, dir,
-        spec.copy(coarse = Some(PqCoarse(nprobe = 1))), emb,
+        spec.copy(coarse = Some(Coarse.Labels(nprobe = 1))), emb,
         q16.limit(1), k = 5)
       one.collect()
       val codeScans = allScans(one.queryExecution.executedPlan)
@@ -1323,7 +1375,7 @@ class SimilaritySpec extends SparkSpec {
     // int8 nprobe=all spec)
     val nLabels = emb.select("label").distinct().count().toInt
     val full = Similarity.pqSearch(PqSpec(m = m, kSub = kSub, iters = 2,
-      coarse = Some(PqCoarse(nprobe = nLabels))), emb, qids, k = 3)
+      coarse = Some(Coarse.Labels(nprobe = nLabels))), emb, qids, k = 3)
       .select("query_id", "neighbor_id", "rank")
       .as[(Long, Long, Int)].collect().toSet
     val plain = Similarity.pqSearch(PqSpec(m = m, kSub = kSub,
@@ -1340,8 +1392,8 @@ class SimilaritySpec extends SparkSpec {
     val nonNull = emb.filter(col("embedding").isNotNull)
     val qids = Similarity.sampleQueryIds(nonNull, n = 8)
     val nLabels = emb.select("label").distinct().count().toInt
-    val got = Similarity.ivfInt8RerankTopK(emb, qids, k = 5,
-      kCoarse = 100, nprobe = nLabels)
+    val got = Similarity.ivfSearch(int8(nLabels, rerank = Some(100)),
+      emb, qids, k = 5)
       .select("query_id", "neighbor_id", "cos_sim", "rank")
       .as[(Long, Long, Double, Int)].collect()
     val qset = qids.as[Long].collect().toSet
@@ -1361,8 +1413,8 @@ class SimilaritySpec extends SparkSpec {
     val emb = graft.Tables.embeddings(spark, sf0001)
     val manifest = emb.filter($"vec_id" % 10 =!= 0)
     val batch = emb.filter($"vec_id" % 10 === 0)
-    val got = Similarity.ivfIncremental(manifest, batch,
-      k = 3, nprobe = 3).cache()
+    val got = gateRun(gate(Coarse.PerRows(64)), manifest, batch, k = 3)
+      .cache()
     // every match_id is a manifest id; every new_id is a batch id
     assert(got.filter($"match_id" % 10 === 0).isEmpty)
     assert(got.filter($"new_id" % 10 =!= 0).isEmpty)
@@ -1374,8 +1426,8 @@ class SimilaritySpec extends SparkSpec {
     val planted = Seq(
         (1000000L, donor.getSeq[Float](1), donor.getInt(2)))
       .toDF("vec_id", "embedding", "label")
-    val got2 = Similarity.ivfIncremental(manifest,
-      batch.unionByName(planted), k = 3, nprobe = 3)
+    val got2 = gateRun(gate(Coarse.PerRows(64)), manifest,
+      batch.unionByName(planted), k = 3)
     val top = got2.filter($"new_id" === 1000000L && $"rank" === 1)
       .select($"match_id", $"cos_sim").collect().head
     assert(top.getLong(0) == donor.getLong(0))
@@ -1395,20 +1447,19 @@ class SimilaritySpec extends SparkSpec {
     val manifest = emb.filter($"vec_id" % 10 =!= 0)
       .filter($"embedding".isNotNull)
     val n = manifest.count()
-    val full = Similarity.ivfIndexBuild(manifest,
-      targetPartitionSize = 8, iters = 2)
+    val full = Similarity.ivfBuild(gate(Coarse.PerRows(8)), manifest)
     assert(full.kClusters == math.ceil(n / 8.0).toInt)
     assert(full.centroids.count() <= full.kClusters)
     // identity: mod=1 takes the exact same fit path
-    val mod1 = Similarity.ivfIndexBuild(manifest,
-      targetPartitionSize = 8, iters = 2, fitSampleMod = 1L)
+    val mod1 = Similarity.ivfBuild(gate(Coarse.PerRows(8),
+      fitSampleMod = 1L), manifest)
     assert(mod1.members.orderBy("vec_id").collect().toSeq ==
       full.members.orderBy("vec_id").collect().toSeq)
     // sampled fit: seeds + Lloyd passes on vec_id % 3 = 0, but every
     // manifest vector is still assigned a partition (the index covers
     // the corpus — the production train-on-sample/add-all shape)
-    val sampled = Similarity.ivfIndexBuild(manifest,
-      targetPartitionSize = 8, iters = 2, fitSampleMod = 3L)
+    val sampledSpec = gate(Coarse.PerRows(8), fitSampleMod = 3L)
+    val sampled = Similarity.ivfBuild(sampledSpec, manifest)
     assert(sampled.members.count() == n,
       "sampled fit must still assign the full manifest")
     assert(sampled.members.select("vec_id").distinct().count() == n)
@@ -1422,7 +1473,7 @@ class SimilaritySpec extends SparkSpec {
     val idx = sampled.copy(
       centroids = sampled.centroids.localCheckpoint(),
       members = sampled.members.localCheckpoint())
-    val top = Similarity.ivfProbe(idx, planted, k = 3, nprobe = 3)
+    val top = Similarity.ivfProbe(sampledSpec, idx, planted, k = 3)
       .filter($"new_id" === 1000000L && $"rank" === 1)
       .select($"match_id", $"cos_sim").collect().head
     assert(top.getLong(0) == donor.getLong(0))
@@ -1436,14 +1487,14 @@ class SimilaritySpec extends SparkSpec {
     val manifest = emb.filter($"vec_id" % 10 =!= 0)
       .filter($"embedding".isNotNull)
     val n = manifest.count()
-    val idx = Similarity.ivfIndexBuildSqrt(manifest, iters = 2)
+    val idx = Similarity.ivfBuild(gate(Coarse.SqrtRows), manifest)
     assert(idx.kClusters == math.ceil(math.sqrt(n.toDouble)).toInt,
       s"sqrt rule drifted: k=${idx.kClusters} for n=$n")
     assert(idx.members.count() == n)
     // same k under the sampled fit (the rule binds to the MANIFEST
     // size, not the fit sample — the index must cover the corpus)
-    val sampled = Similarity.ivfIndexBuildSqrt(manifest, iters = 2,
-      fitSampleMod = 3L)
+    val sampled = Similarity.ivfBuild(gate(Coarse.SqrtRows,
+      fitSampleMod = 3L), manifest)
     assert(sampled.kClusters == idx.kClusters)
     assert(sampled.members.count() == n)
     // the gate end-to-end: manifest-only matches, planted exact
@@ -1454,8 +1505,8 @@ class SimilaritySpec extends SparkSpec {
     val planted = Seq(
         (1000000L, donor.getSeq[Float](1), donor.getInt(2)))
       .toDF("vec_id", "embedding", "label")
-    val got = Similarity.ivfIncrementalSqrt(manifest,
-      batch.unionByName(planted), k = 3, nprobe = 3).cache()
+    val got = gateRun(gate(Coarse.SqrtRows), manifest,
+      batch.unionByName(planted), k = 3).cache()
     assert(got.filter($"match_id" % 10 === 0).isEmpty)
     val top = got.filter($"new_id" === 1000000L && $"rank" === 1)
       .select($"match_id", $"cos_sim").collect().head

@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.ext.Similarity
+import graft.ext.{Coarse, IvfSpec, Similarity}
 
 /** Pins the streaming ANN ingest gate's contract
   * ([[VectorStream]]): the gate is STATELESS given the static index,
@@ -22,8 +22,9 @@ class VectorStreamSpec extends SparkSpec {
       .filter($"embedding".isNotNull)
     val manifest = emb.filter($"vec_id" % 5 =!= 0)
     val incoming = emb.filter($"vec_id" % 5 === 0)
-    val built = Similarity.ivfIndexBuild(manifest,
-      targetPartitionSize = 64, iters = 2)
+    val spec = IvfSpec(Coarse.Kmeans(Coarse.PerRows(64), iters = 2,
+      nprobe = 2))
+    val built = Similarity.ivfBuild(spec, manifest)
     // static state between refits — persisted exactly as production
     val index = built.copy(
       centroids = built.centroids.localCheckpoint(),
@@ -37,8 +38,8 @@ class VectorStreamSpec extends SparkSpec {
       // 4 files + maxFilesPerTrigger=1 → 4 micro-batches
       incoming.repartition(4).write.mode("overwrite").parquet(srcDir)
       val out = new ConcurrentLinkedQueue[(Long, Long, Double, Int)]()
-      val q = VectorStream.ingestGateStream(spark, srcDir, index,
-          k = 2, nprobe = 2, ckpt) { (attach: DataFrame, _: Long) =>
+      val q = VectorStream.ingestGateStream(spark, srcDir, spec, index,
+          k = 2, ckpt) { (attach: DataFrame, _: Long) =>
         attach.select("new_id", "match_id", "cos_sim", "rank")
           .as[(Long, Long, Double, Int)].collect().foreach(out.add)
         ()
@@ -58,8 +59,7 @@ class VectorStreamSpec extends SparkSpec {
 
       val streamed = out.toArray(
         Array.empty[(Long, Long, Double, Int)]).toSet
-      val batch = VectorStream.gateBatch(index, k = 2, nprobe = 2,
-          incoming)
+      val batch = VectorStream.gateBatch(spec, index, k = 2, incoming)
         .select("new_id", "match_id", "cos_sim", "rank")
         .as[(Long, Long, Double, Int)].collect().toSet
       assert(streamed == batch,
