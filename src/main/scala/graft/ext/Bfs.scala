@@ -85,8 +85,11 @@ object Bfs {
     // RDD scan, so the plan grows one shallow leaf per round (K ≈
     // diameter), and one materialization job per round disappears
     // (same rows, BfsSpec/GraphOpsSpec unchanged).
-    // The init's own truncation + emptiness probe fuse the same way
-    // (lazily + count — the eager Ckpt + isEmpty pair was two jobs).
+    // The init's truncation is marked lazily too and probed with a
+    // full count. Measured (perfbench catalog_iterative --trace 1,
+    // g_bfs on this in-memory path): 2 SQL executions, 3 jobs — the
+    // lazily call runs the min-aggregate's exchange stage (1 job,
+    // which also builds sym's blocks), the count runs 2.
     var frontier = Ckpt.lazily(sym.agg(min(col("a")).as("node"))
       .withColumn("dist", lit(0L))
       .filter(col("node").isNotNull))
@@ -94,10 +97,16 @@ object Bfs {
     var iter = 0
     var done = frontier.count() == 0L
     while (!done && iter < maxIter) {
-      // Round-16 barrier fusion: the round's truncation is marked
-      // LAZILY and the emptiness probe is a full count(), so ONE job
-      // per round materializes the frontier blocks AND answers the
-      // loop condition (the eager Ckpt + isEmpty pair was two).
+      // The round's truncation is marked LAZILY and the emptiness
+      // probe is a full count(), so the count's own job materializes
+      // the frontier blocks. That is NOT one job per round. Measured
+      // (perfbench catalog_iterative --trace 1, g_bfs on this
+      // in-memory path): each round is 2 SQL executions and 5–6
+      // jobs. Under AQE, localCheckpoint(eager = false) executes the
+      // round's plan to get its RDD, which runs the round's 3–4
+      // shuffle-map stages as jobs during the call; the count then
+      // runs 2 (the marked result stage inside its map stage, then
+      // the final aggregate).
       val next = Ckpt.lazily(frontier
         .join(sym, frontier("node") === sym("a"))
         .select(col("b").as("node"), (col("dist") + 1).as("dist"))
@@ -278,9 +287,9 @@ object Bfs {
     // labels as a lazy union of checkpointed frontiers — see
     // [[distances]]; every member is checkpoint-backed, so the frame
     // stays computable after the adjacency table is reclaimed below
-    // init truncation + emptiness probe fused (the [[distances]]
-    // treatment): lazily + count is one job where Ckpt + isEmpty
-    // was two
+    // init truncation marked lazily and probed with a full count
+    // (the [[distances]] treatment; measured there: 2 SQL
+    // executions, 3 jobs)
     var frontier = Ckpt.lazily(sym.agg(min(col("a")).as("node"))
       .withColumn("dist", lit(0L))
       .filter(col("node").isNotNull))
@@ -288,10 +297,11 @@ object Bfs {
     var iter = 0
     var done = frontier.count() == 0L
     while (!done && iter < maxIter) {
-      // Round-16 barrier fusion: the round's truncation is marked
-      // LAZILY and the emptiness probe is a full count(), so ONE job
-      // per round materializes the frontier blocks AND answers the
-      // loop condition (the eager Ckpt + isEmpty pair was two).
+      // The round's truncation is marked LAZILY and the emptiness
+      // probe is a full count() — the [[distances]] loop, whose
+      // measured round is 2 SQL executions and 5–6 jobs (the lazily
+      // call runs the round's shuffle-map stages under AQE), not one
+      // job. This bucketed path was not traced.
       val next = Ckpt.lazily(frontier
         .join(sym, frontier("node") === sym("a"))
         .select(col("b").as("node"), (col("dist") + 1).as("dist"))

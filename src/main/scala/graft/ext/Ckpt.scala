@@ -76,12 +76,16 @@ object Ckpt {
   /** LAZY truncation for loop state whose first consumer is a FULL
     * driver-side aggregate (a convergence `count()` / change count /
     * stable-signature probe — one that computes EVERY partition): in
-    * local mode the checkpoint is only MARKED, so the consumer's one
-    * job both materializes the blocks and returns the scalar — the
-    * eager form paid a materialization job AND a block-read job per
-    * round (round 16; the iterative loops' per-round job floor was
-    * the r15 verdict's #1 remaining cost). The caller MUST run such
-    * a full-partition action before any other consumer; a
+    * local mode the checkpoint is only MARKED, so the consumer's job
+    * materializes the blocks while computing the scalar, instead of
+    * a separate materialization job before it. This does NOT make a
+    * round one job: under AQE `localCheckpoint(eager = false)` still
+    * executes the plan to get its RDD, which runs every shuffle-map
+    * stage below the result stage as a job during the call. Measured
+    * with perfbench catalog_iterative --trace 1 (g_bfs): each BFS
+    * round is 2 SQL executions and 5–6 jobs (3–4 in this call, 2 in
+    * the count), and the BFS init is 3 jobs (1 + 2). The caller MUST
+    * run such a full-partition action before any other consumer; a
     * partial-partition first action (limit/isEmpty) would leave the
     * tail partitions to a separate backfill job, re-paying what this
     * exists to remove. Reliable mode stays EAGER — a lazy reliable

@@ -1,7 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+
+import graft.functions.DayBitmaps
 
 /** The reference's signature transform (SURVEY.md §2.4 R1): the
   * availability bitmap pivot, cf.
@@ -12,9 +14,11 @@ import org.apache.spark.sql.functions._
   * '0'/'1' string per day with one character per slot, slots ordered by
   * the lexicographically sorted slot headers.
   *
-  * Pure `Column` composition: `split` → `exists` HOF → `concat`. The
-  * slot list comes from the DataFrame schema (driver side), mirroring
-  * the reference's first-row-keys assumption — no data pass needed.
+  * One [[graft.functions.DayBitmaps]] call per row computes all 7
+  * bitmaps into one array column, which a second projection splits
+  * into the 7 output columns. The slot list comes from the DataFrame
+  * schema (driver side), mirroring the reference's first-row-keys
+  * assumption — no data pass needed.
   */
 object Availability {
 
@@ -24,38 +28,30 @@ object Availability {
     "availability_fri" -> "friday", "availability_sat" -> "saturday",
     "availability_sun" -> "sunday")
 
-  /** Does a comma-separated day list mention `day` (case-insensitive,
-    * trimmed)? Cf. `staffing-roster-pipeline.py:96-113`. */
-  def slotMentionsDay(slot: Column, day: String): Column =
-    exists(split(coalesce(slot, lit("")), ","),
-      x => lower(trim(x)) === day.toLowerCase)
-
   /** Fixed bitmap width: the reference pre-allocates `['0'] * 30`
     * (staffing-roster-pipeline.py:93) and writes slot idx into it, so
     * the output is always exactly 30 chars regardless of how many slot
-    * headers the sheet carries. */
+    * headers the sheet carries. More than 30 slots would IndexError in
+    * the reference (write past the 30-slot list), so the kernel
+    * rejects that case eagerly. */
   val BitmapWidth = 30
 
-  /** One day's bitmask over the (pre-sorted) slot columns, right-padded
-    * with '0' to the fixed 30-char width. More than 30 slots would
-    * IndexError in the reference (write past the 30-slot list), so we
-    * reject that case eagerly. */
-  def dayBitmap(slotCols: Seq[Column], day: String): Column = {
-    require(slotCols.size <= BitmapWidth,
-      s"${slotCols.size} slot columns exceed the fixed $BitmapWidth-slot " +
-        "bitmap (the reference raises IndexError past 30 slots)")
-    val bits = slotCols.map(s =>
-      when(slotMentionsDay(s, day), lit("1")).otherwise(lit("0")))
-    rpad(if (bits.isEmpty) lit("") else concat(bits: _*),
-      BitmapWidth, "0")
-  }
+  /** The 7 day bitmaps (in [[DayNames]] order) as one array column,
+    * over the columns whose header contains `slotMarker` (reference:
+    * "GMT-0600"). */
+  def dayBitmaps(columns: Seq[String], slotMarker: String): Column =
+    DayBitmaps.day_bitmaps(
+      columns.filter(_.contains(slotMarker)).sorted.map(c => col(s"`$c`")),
+      DayNames.map(_._2), BitmapWidth)
 
-  /** All 7 day bitmaps for a sheet frame whose slot headers contain
-    * `slotMarker` (reference: "GMT-0600"). Returns (colName, expr)
-    * pairs to attach with `withColumns`. */
-  def allDayBitmaps(columns: Seq[String], slotMarker: String)
-      : Seq[(String, Column)] = {
-    val slots = columns.filter(_.contains(slotMarker)).sorted.map(col)
-    DayNames.map { case (out, day) => out -> dayBitmap(slots, day) }
+  /** `df` with the 7 availability columns appended. The kernel's
+    * array is its own projection, so the optimizer keeps one call per
+    * row instead of inlining it into each of the 7 extractions. */
+  def withDayBitmaps(df: DataFrame, slotMarker: String): DataFrame = {
+    val packed = "_day_bitmaps"
+    df.withColumn(packed, dayBitmaps(df.columns, slotMarker))
+      .select(col("*") +: DayNames.zipWithIndex.map { case ((n, _), i) =>
+        col(packed).getItem(i).as(n) }: _*)
+      .drop(packed)
   }
 }

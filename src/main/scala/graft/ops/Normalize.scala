@@ -35,13 +35,16 @@ object Normalize {
     * `pipelines/staffing-roster-pipeline.py:58-73`: null when the row
     * is valid, else "missing: <comma-joined missing column names>".
     * `concat_ws` skips nulls in both Spark and ANSI SQL engines, which
-    * keeps the oracle translation 1:1. */
+    * keeps the oracle translation 1:1. The field list appears once in
+    * the expression (`nullif` evaluates its argument once); a form
+    * that repeats it, such as `when(list <> '', ... list)`, compiles
+    * the per-field checks once per occurrence. */
   def missingReason(required: Seq[(String, Column)]): Column = {
     val parts = required.map { case (name, c) =>
       when(coalesce(trim(c), lit("")) === "", lit(name))
     }
-    val joined = nullif(concat_ws(", ", parts: _*), lit(""))
-    when(joined.isNotNull, concat(lit("missing: "), joined))
+    val prefix = lit("missing: ")
+    nullif(concat(prefix, concat_ws(", ", parts: _*)), prefix)
   }
 
   /** Numeric-string guard, cf. `pipelines/projects-pipeline.py:136-142`:

@@ -11,9 +11,9 @@ import org.apache.spark.sql.functions._
   * data (and S6's one-line JSON summary is just
   * `to_json(collect(...))` over it).
   *
-  * All counts are plain aggregates over frames the pipeline already
-  * computes — lazily composed, so the report costs one job of tiny
-  * 1-row aggregates when (and only when) it is actually written.
+  * All counts are plain aggregates over the pipeline's outputs,
+  * which read the frames the pipeline materialized, so the report
+  * runs (tiny 1-row aggregates) only when it is actually written.
   */
 object RunReport {
 

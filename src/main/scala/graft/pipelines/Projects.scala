@@ -43,26 +43,22 @@ object Projects {
   /** Run against current `users(user_id, netid, curr_role)` and
     * `projects` state. `sheet` is the all-string staged frame.
     *
-    * Two materialization knobs, one per fan-out point, both defaulting
-    * to identity (single-output callers keep a fully lazy plan, and
-    * Spark's ReuseExchange still dedups the shuffles):
+    * Its only eager work: the merged projects frame (full-outer
+    * merge + id window) is `localCheckpoint`ed, because the projects
+    * output and the melt below both read it; links, role updates and
+    * returning marks therefore never re-run the merge.
     *
-    *   - `materialize` wraps the merged projects frame (full-outer
-    *     merge + id window; consumed by the project output and the
-    *     melt) — pass `_.localCheckpoint()` when all outputs are
-    *     consumed so the merge runs once;
-    *   - `materializeMelt` wraps the NARROW exploded long frame
-    *     (4 columns; consumed by links, reconciliation, and returning
-    *     marks) — pass `_.persist(...)` (LAZY, not a checkpoint: an
-    *     eager job for the 5×-row exploded frame measured net slower
-    *     than re-melting; a lazy cache is populated inside the
-    *     caller's single output job and shared by all three
-    *     consumers). The caller owns the returned frame's lifecycle:
-    *     keep the handle and `unpersist()` after consuming the
-    *     outputs, as [[graft.queries.Parity.pProjectsPipeline]] does. */
+    * `materializeMelt` (default identity) wraps the NARROW exploded
+    * long frame (4 columns; consumed by links, reconciliation, and
+    * returning marks) — pass `_.persist(...)` (LAZY, not a
+    * checkpoint: an eager job for the 5×-row exploded frame measured
+    * net slower than re-melting; a lazy cache is populated inside the
+    * caller's single output job and shared by all three consumers).
+    * The caller owns the returned frame's lifecycle: keep the handle
+    * and `unpersist()` after consuming the outputs, as
+    * [[graft.queries.Parity.pProjectsPipeline]] does. */
   def run(sheet: DataFrame, users: DataFrame,
       curProjects: DataFrame,
-      materialize: DataFrame => DataFrame = identity,
       materializeMelt: DataFrame => DataFrame = identity): Result = {
     // P2: multi-candidate header coalesce (absent headers → skip)
     val resolvedCols = KeyMap.map { case (target, cands) =>
@@ -103,8 +99,8 @@ object Projects {
       Seq("project_name"),
       Seq("project_semester", "client_name") ++
         Roles.map { case (r, _) => s"${r}_id" })
-    val projects = materialize(Merge.assignIds(merged0, "project_id",
-      "project_name", curProjects))
+    val projects = Merge.assignIds(merged0, "project_id",
+      "project_name", curProjects).localCheckpoint()
 
     // ONE melt of the merged frame feeds links (R2/J9), role
     // reconciliation (J7), and returning marks (J8). The 100× probe

@@ -7,15 +7,17 @@ import graft.ops.{Availability, Merge, Normalize}
 
 /** The staffing-roster pipeline (reference
   * `pipelines/staffing-roster-pipeline.py`, lifecycle SURVEY.md §3.1)
-  * as a single declarative DataFrame program:
+  * as set-based DataFrame steps:
   *
   *   sheet → availability pivot (R1) → validate/quarantine (F1,F2)
   *         → header rename + typed casts (P1) → users MERGE by email
   *           (J4) → consultants MERGE by user_id (J5) → summary (A1)
   *
   * The reference's per-row SQL loop (2-4 round-trips per row) becomes
-  * two full-outer merge joins over the whole batch; at cluster scale
-  * the staged sheet is broadcast and the big side streams.
+  * two full-outer merge joins over the whole batch. The two frames
+  * that several outputs read are materialized once per run (see
+  * [[run]]), so writing every output does not re-run the sheet
+  * pivot or the users merge per output.
   */
 object Staffing {
 
@@ -75,18 +77,23 @@ object Staffing {
 
   /** Run the full pipeline against the current users/consultants state.
     * `sheet` is the all-string staged frame (headers as in the
-    * reference sheet, incl. the GMT-0600 slot columns). */
+    * reference sheet, incl. the GMT-0600 slot columns).
+    *
+    * Its only eager work: it `localCheckpoint`s the validated sheet
+    * (pivot + `_invalid_reason`; read by staged, quarantine and
+    * summary) and the id-assigned users merge (read by the users
+    * output and the consultants merge). Every returned frame reads
+    * those two, never the sheet or the current users. */
   def run(sheet: DataFrame, curUsers: DataFrame,
       curConsultants: DataFrame): Result = {
-    // R1: availability pivot from schema-derived slot headers
-    val withAvail = sheet.withColumns(
-      Availability.allDayBitmaps(sheet.columns, "GMT-0600").toMap)
-
-    // F1/F2: validation split with quarantine reasons
+    // R1 + F1/F2: availability pivot from schema-derived slot headers,
+    // then the validation reason that splits staged from quarantine
     val present = SheetColsToSql.map(_._1).filter(
       sheet.columns.contains)
-    val reasoned = withAvail.withColumn("_invalid_reason",
-      Normalize.missingReason(RequiredCols.map(c => c -> col(s"`$c`"))))
+    val reasoned = Availability.withDayBitmaps(sheet, "GMT-0600")
+      .withColumn("_invalid_reason", Normalize.missingReason(
+        RequiredCols.map(c => c -> col(s"`$c`"))))
+      .localCheckpoint()
     val quarantine = reasoned.filter(col("_invalid_reason").isNotNull)
     val valid = reasoned.filter(col("_invalid_reason").isNull)
 
@@ -109,6 +116,7 @@ object Staffing {
     val users0 = Merge.merge(stagedUsers, curUsers, Seq("email"),
       UsersCols.filterNot(_ == "email"))
     val users = Merge.assignIds(users0, "user_id", "email", curUsers)
+      .localCheckpoint()
 
     // J5: consultants merge keyed on the resolved user_id
     val stagedConsultants = staged

@@ -916,9 +916,8 @@ object Parity {
       when(k % 3 === 0, lit(null).cast("long"))
         .otherwise(((c + 3) % 150).cast("long")).as("sc1_id"),
       lit(null).cast("long").as("sc2_id")) // k even ⇒ staged sc2 NULL
-    // all six output sections consume the merged frame → materialize
-    // it once (the full-outer merge + id window would otherwise
-    // re-execute per union branch); the narrow exploded melt persists
+    // all six output sections consume the merged frame, which
+    // Projects.run materializes once; the narrow exploded melt persists
     // LAZILY so its three consumers share one copy inside the single
     // union job — the handle is held here and released after the
     // eager evaluation below (the cosineDupPairs lifecycle pattern:
@@ -926,7 +925,6 @@ object Parity {
     // so without the unpersist every Bench rep would leak a cache)
     var meltCache: Option[DataFrame] = None
     val r = graft.pipelines.Projects.run(sheet, users, curProjects,
-      materialize = _.localCheckpoint(),
       materializeMelt = df => {
         val p = df.persist(
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -1,5 +1,6 @@
 package graft.pipelines
 
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Window}
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -67,6 +68,13 @@ class PipelinesSpec extends SparkSpec {
       .select("availability_mon", "availability_wed")
       .as[(String, String)].collect().head
     assert(ada == ("110".padTo(30, '0'), "010".padTo(30, '0')))
+    // computed once: the consultants merge reads the materialized users
+    // merge (no assignIds Window) and the materialized validated sheet;
+    // both fixtures above are LocalRelations, so no leaf may be one
+    val cplan = r.consultants.queryExecution.optimizedPlan
+    assert(cplan.collect { case w: Window => w }.isEmpty, cplan)
+    assert(!cplan.collectLeaves().exists(_.isInstanceOf[LocalRelation]),
+      cplan)
   }
 
   test("projects pipeline: header coalesce, netid errors, merge, links") {
@@ -97,6 +105,9 @@ class PipelinesSpec extends SparkSpec {
     val upd = r.userRoleUpdates.select("user_id", "new_role")
       .as[(Long, String)].collect().toSeq
     assert(upd == Seq((1L, "EM")))
+    // links read the materialized projects merge: no assignIds Window
+    val lplan = r.links.queryExecution.optimizedPlan
+    assert(lplan.collect { case w: Window => w }.isEmpty, lplan)
   }
 
   test("end-semester pipeline: rollover + affected count") {
