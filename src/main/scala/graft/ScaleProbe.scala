@@ -210,9 +210,10 @@ object ScaleProbe {
       val kScaled = 80
       val times = (0 until reps).map { _ =>
         val t0 = System.nanoTime()
-        graft.ext.Similarity.semDedup(
-            graft.Tables.embeddings(spark, ProbeDir),
-            kClusters = kScaled, iters = 2, threshold = 0.45)
+        graft.ext.Similarity.semDedup(graft.ext.SemDedupSpec(
+            graft.ext.SemDedupGrid.Flat(graft.ext.Coarse.Fixed(kScaled)),
+            iters = 2, threshold = 0.45),
+            graft.Tables.embeddings(spark, ProbeDir))
           .orderBy("vec_id")
           .write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9
@@ -713,12 +714,17 @@ object ScaleProbe {
       println(f"[probe] semdedup/$tag%-12s (n=$n) min ${times.min}%7.2fs  " +
         f"(runs ${times.map(t => f"$t%.2f").mkString("/")})")
     }
+    import graft.ext.{Coarse, SemDedupGrid, SemDedupSpec, Similarity}
+    val flat = SemDedupSpec(SemDedupGrid.Flat(Coarse.PerRowsMin2(64)),
+      iters = 2, threshold = 0.45)
+    val hier = flat.copy(grid = SemDedupGrid.Hier(64))
+    def gate(spec: SemDedupSpec) = Similarity.semDedupGateBatch(spec,
+      Similarity.semDedupFit(spec, emb.filter(col("vec_id") % 10 =!= 0)),
+      emb.filter(col("vec_id") % 10 === 0))
     if (scale <= 100) {
-      leg("flat_full")(
-        graft.ext.Similarity.semDedupAuto(emb, 64L, 2, 0.45))
+      leg("flat_full")(Similarity.semDedup(flat, emb))
       leg("flat_sampled")(
-        graft.ext.Similarity.semDedupAuto(emb, 64L, 2, 0.45,
-          fitSampleMod = 4L))
+        Similarity.semDedup(flat.copy(fitSampleMod = 4L), emb))
     } else println("[probe] flat legs gated <=100x by policy " +
       "(the O(N^2/64) full-corpus assignment)")
     // the ingest gate pays the manifest fit per probe run (in
@@ -726,24 +732,13 @@ object ScaleProbe {
     // leg was gated >100x WITH the flat legs — its refit WAS the flat
     // k ∝ N_man fit; r14's hier-fit composition ungates it (the
     // verdict ask: the 1000x gate leg in the hier class)
-    leg("incremental")(
-      graft.ext.Similarity.semDedupIncremental(
-        emb.filter(col("vec_id") % 10 =!= 0),
-        emb.filter(col("vec_id") % 10 === 0),
-        targetClusterSize = 64L, iters = 2, threshold = 0.45))
-    leg("incremental_sampled")(
-      graft.ext.Similarity.semDedupIncremental(
-        emb.filter(col("vec_id") % 10 =!= 0),
-        emb.filter(col("vec_id") % 10 === 0),
-        targetClusterSize = 64L, iters = 2, threshold = 0.45,
-        fitSampleMod = 4L))
-    leg("hier")(
-      graft.ext.Similarity.semDedupHier(emb, 64L, 2, 0.45))
+    leg("incremental")(gate(hier))
+    leg("incremental_sampled")(gate(hier.copy(fitSampleMod = 4L)))
+    leg("hier")(Similarity.semDedup(hier, emb))
     // the r13 sampled-hier lever (both Lloyd levels on the mod-4
     // slice): must land at or under the full-hier time at every tier
     leg("hier_sampled")(
-      graft.ext.Similarity.semDedupHier(emb, 64L, 2, 0.45,
-        fitSampleMod = 4L))
+      Similarity.semDedup(hier.copy(fitSampleMod = 4L), emb))
   }
 
   /** Shuffle-byte AUDIT of the PageRank shuffle regime

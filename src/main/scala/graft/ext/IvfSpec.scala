@@ -3,8 +3,8 @@ package graft.ext
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-import graft.queries.QueryUtil.{kmUnrolledCoreSplitSql, qidsSql,
-  quantizeSql, sqlCosine, sqlSumDec}
+import graft.queries.QueryUtil.{kmUnrolledSql, qidsSql, quantizeSql,
+  sqlCosine, sqlSumDec}
 
 /** The coarse level of an ANN index: how the corpus is cut into cells
   * and how many of them each query probes. [[IvfSpec]] searches with
@@ -53,6 +53,15 @@ object Coarse {
       math.max(1, math.ceil(rows.toDouble / target).toInt)
     def sql(from: String): String =
       s"SELECT CAST(ceil(count(*) / $target.0) AS INT) FROM $from"
+  }
+  /** max(2, ⌈N / target⌉) in integer arithmetic: the flat SemDeDup
+    * grid's rule — cell size stays flat and blocking always splits. */
+  final case class PerRowsMin2(target: Long) extends KRule {
+    require(target >= 1, "target must be >= 1")
+    def of(rows: => Long): Int =
+      math.max(2L, (rows + target - 1) / target).min(Int.MaxValue).toInt
+    def sql(from: String): String =
+      s"SELECT GREATEST(2, (count(*) + ${target - 1}) // $target) FROM $from"
   }
   /** ⌈√N⌉, the classical IVF operating point (IEEE sqrt is correctly
     * rounded, so both engines agree). */
@@ -224,8 +233,7 @@ object IvfSpec {
           if (c.fitSampleMod == 1L) "base"
           else s"(SELECT * FROM base WHERE vec_id % ${c.fitSampleMod} = 0)"
         val last = s"c${c.iters}"
-        (s"""${kmUnrolledCoreSplitSql(fit, "base", c.k.sql("base"),
-                c.iters)},
+        (s"""${kmUnrolledSql(fit, "base", c.k.sql("base"), c.iters)},
             |cents AS (SELECT cid, centroid AS emb FROM $last),
             |${Coarse.probedSql("probed", "q CROSS JOIN cents c",
                 probeCols("cid"), sim("q", "c"), Seq(qid), "cid",
@@ -235,7 +243,8 @@ object IvfSpec {
         val last = s"sc${c.iters}"
         (s"""${Coarse.centroidsSql("base", Dim)},
             |cents AS (SELECT label, centroid AS emb FROM cent),
-            |${subCellsSql(c)},
+            |${kmUnrolledSql("base", "base", c.k2.toString, c.iters,
+                Some("label"), dim = Dim)},
             |${Coarse.probedSql("probed", "q CROSS JOIN cents c",
                 probeCols("label"), sim("q", "c"), Seq(qid), "label",
                 c.nprobe.toString)},
@@ -284,37 +293,5 @@ object IvfSpec {
        |$quantized$queries,
        |$coarseCtes,
        |$ranked$tail""".stripMargin
-  }
-
-  /** The two-level grid's sub-cells: per label, `k2` seeds (smallest
-    * vec_ids), `iters` Lloyd rounds by rounded cosine, then the
-    * corpus' sub-cell membership `members` (vec_id, label, emb, scid)
-    * — [[Similarity]]'s per-label fit with `label` in every
-    * GROUP BY / PARTITION BY. */
-  private def subCellsSql(c: Coarse.TwoLevel): String = {
-    def assign(cent: String, out: String) =
-      s"""$out AS (SELECT vec_id, label, emb, scid FROM (
-         |  SELECT b.vec_id, b.label, b.emb, c.scid,
-         |    row_number() OVER (PARTITION BY b.vec_id
-         |      ORDER BY ${sqlCosine("b.emb", "c.centroid")} DESC,
-         |        c.scid) AS rn
-         |  FROM base b JOIN $cent c ON b.label = c.label)
-         |  WHERE rn = 1)""".stripMargin
-    def update(assigned: String, out: String) =
-      s"""${out}d AS (SELECT label, scid, i, ${sqlSumDec("emb[i]")}
-         |      / count(*) AS cv
-         |  FROM $assigned CROSS JOIN range(1, ${Dim + 1}) t(i)
-         |  GROUP BY label, scid, i),
-         |$out AS (SELECT label, scid, list(cv ORDER BY i) AS centroid
-         |  FROM ${out}d GROUP BY label, scid)""".stripMargin
-    val rounds = (1 to c.iters).map { r =>
-      s"${assign(s"sc${r - 1}", s"sa$r")},\n${update(s"sa$r", s"sc$r")}"
-    }
-    (s"""sc0 AS (SELECT label, CAST(rn - 1 AS INT) AS scid,
-        |    emb AS centroid
-        |  FROM (SELECT label, emb, row_number() OVER (
-        |      PARTITION BY label ORDER BY vec_id) AS rn FROM base)
-        |  WHERE rn <= ${c.k2})""".stripMargin +: rounds :+
-      assign(s"sc${c.iters}", "members")).mkString(",\n")
   }
 }

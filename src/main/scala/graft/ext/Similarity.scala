@@ -1,8 +1,9 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types._
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (`array<float>`).
@@ -24,11 +25,11 @@ object Similarity {
     * `aggregate(zip_with(...))` HOF formulation computes the same
     * value through an interpreted lambda per element (~10³× slower —
     * it dominated every ANN query's runtime). */
-  def cosine(a: Column, b: Column): Column = {
-    def dot(x: Column, y: Column): Column =
-      graft.functions.ArrayOps.dot_product(x, y)
+  def cosine(a: Column, b: Column): Column =
     dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
-  }
+
+  private def dot(x: Column, y: Column): Column =
+    graft.functions.ArrayOps.dot_product(x, y)
 
   def toDouble(v: Column): Column = transform(v, _.cast("double"))
 
@@ -229,8 +230,7 @@ object Similarity {
     * compile dominated cold runs (~100 s at sf0.01 vs ~1 s warm). */
   def lshBucket(emb: Column, planes: Seq[Seq[Double]]): Column =
     planes.zipWithIndex.map { case (plane, i) =>
-      val proj = graft.functions.ArrayOps.dot_product(emb,
-        typedLit(plane))
+      val proj = dot(emb, typedLit(plane))
       when(proj > 0, lit(1 << i)).otherwise(lit(0))
     }.reduce(_ + _)
 
@@ -311,8 +311,8 @@ object Similarity {
     // (|projection|, bit) per plane; array_sort orders by margin
     // then bit — the flip sequence, cheapest boundary first
     val margins = planes.zipWithIndex.map { case (p, i) =>
-      struct(abs(graft.functions.ArrayOps.dot_product(col("q_emb"),
-        typedLit(p))).as("m"), lit(1 << i).as("bit"))
+      struct(abs(dot(col("q_emb"), typedLit(p))).as("m"),
+        lit(1 << i).as("bit"))
     }
     val probes = q.withColumn("flip",
         slice(array_sort(array(margins: _*)), 1, nProbe - 1))
@@ -352,8 +352,6 @@ object Similarity {
     * ever scored. */
   def mipsTopK(embeddings: DataFrame, queryIds: DataFrame, k: Int,
       numPlanes: Int, seed: Long, dim: Int = 64): DataFrame = {
-    def dot(x: Column, y: Column): Column =
-      graft.functions.ArrayOps.dot_product(x, y)
     val base0 = embeddings.select(col("vec_id"),
         toDouble(col("embedding")).as("emb"))
       .filter(col("emb").isNotNull)
@@ -403,8 +401,6 @@ object Similarity {
   def cosineDupPairs(embeddings: DataFrame, threshold: Double,
       tables: Int, planesPerTable: Int, seed: Long,
       dim: Int = 64): DataFrame = {
-    def dot(x: Column, y: Column): Column =
-      graft.functions.ArrayOps.dot_product(x, y)
     // feeds three plan subtrees (bucket keying + both reattaches) —
     // persist like Dedup.jaccardPairs so the scan+norm runs once.
     // NULL embeddings are dropped (they can never pair — pre-guard
@@ -472,14 +468,14 @@ object Similarity {
     * (1−(1−θ/π)^p)^T — e.g. at cos 0.9, p=12, T=8: <6%; borderline
     * pairs near the threshold lose more, which is the documented
     * recall/cost trade every LSH blocking makes). Rows-only by
-    * contract, like [[semDedupAuto]]: the oracle SQL inlines plane
-    * literals, whose count auto-p by definition doesn't fix;
+    * contract: the oracle SQL inlines plane literals, whose count
+    * auto-p by definition doesn't fix;
     * SimilaritySpec asserts auto ≡ explicit at the derived p. */
   def cosineDupPairsAuto(embeddings: DataFrame, threshold: Double,
       tables: Int, targetBucketSize: Long, seed: Long,
       dim: Int = 64): DataFrame = {
     require(targetBucketSize >= 1, "targetBucketSize must be >= 1")
-    // bounded driver-side scalar (count), same pattern as semDedupAuto
+    // bounded driver-side scalar (count), as the row-derived k rules
     val n = embeddings.filter(col("embedding").isNotNull).count()
     val buckets = math.max(2L,
       (n + targetBucketSize - 1) / targetBucketSize)
@@ -514,8 +510,6 @@ object Similarity {
   def embedDecontaminate(embeddings: DataFrame, isEval: Column,
       threshold: Double, tables: Int, planesPerTable: Int, seed: Long,
       dim: Int = 64): DataFrame = {
-    def dot(x: Column, y: Column): Column =
-      graft.functions.ArrayOps.dot_product(x, y)
     // same base guards as cosineDupPairs (NULL embeddings can never
     // pair; dim mismatch fails fast), plus the eval flag computed
     // once from the caller's predicate
@@ -582,51 +576,120 @@ object Similarity {
     * across 4096 means in the m=16 PQ fit. Cluster counts are small,
     * so such counts are common; dropping the round removes the
     * entire hazard class instead of shrinking it.
-    * Distributed shape: assignment is a broadcast cross join (k tiny),
-    * the update is the same explode-by-dimension aggregation as
-    * [[labelCentroids]] — no driver-side collect anywhere. */
-  def kmeansCentroids(base: DataFrame, k: Int, iters: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val seedW = Window.orderBy("vec_id")
-    var centroids = base.orderBy("vec_id").limit(k)
-      .withColumn("cid", (row_number().over(seedW) - 1).cast("int"))
-      .select(col("cid"), col("emb").as("centroid"))
-    // Iteration barriers (round 15): in LUT mode (k within the plan-
-    // literal gate) the assignment COLLECTS the centroid frame anyway
-    // and embeds it as literals, so lineage is flat by construction —
-    // per-iteration truncation was a redundant materialization job
-    // (the collect itself executes each update plan exactly once).
-    // Past the gate (k ∝ N shapes) the broadcast-row assignment keeps
-    // the plan chained, so every iteration still truncates via Ckpt.
-    // Either path executes each Lloyd update exactly once; results
-    // are bit-identical (AssignFormSpec pins Lut ≡ Bcast).
-    // Final state (round 16): in LUT mode the fitted frame returns as
-    // a LocalRelation ([[asLocalRelation]]) instead of a checkpoint —
-    // consumers collect/broadcast it job-free; reliable mode keeps
-    // Ckpt (durable-placement opt-in, CkptSpec).
+    * Distributed shape: assignment is a per-row projection over the
+    * k centroids ([[assignClusters]]), the update the one
+    * explode-by-dimension aggregation ([[decimalMeans]]); only the k
+    * seeds and, within the LUT gate, the k centroids reach the
+    * driver. */
+  def kmeansCentroids(base: DataFrame, k: Int, iters: Int): DataFrame =
+    kmeansFit(base, k, iters, assignClustersLut, assignClustersBcast)
+
+  /** The flat k-means loop of [[kmeansCentroids]] and
+    * [[kmeansCentroidsL2]] under the assignment forms of one metric.
+    * Iteration barriers (round 15): in LUT mode (k within the plan-
+    * literal gate) the assignment COLLECTS the centroid frame anyway
+    * and embeds it as literals, so lineage is flat by construction —
+    * per-iteration truncation was a redundant materialization job
+    * (the collect itself executes each update plan exactly once).
+    * Past the gate (k ∝ N shapes) the broadcast-row assignment keeps
+    * the plan chained, so every iteration still truncates via Ckpt.
+    * Either path executes each Lloyd update exactly once; results
+    * are bit-identical (AssignFormSpec pins Lut ≡ Bcast).
+    * Final state (round 16): in LUT mode the fitted frame returns as
+    * a LocalRelation ([[asLocalRelation]]) instead of a checkpoint —
+    * consumers collect/broadcast it job-free; reliable mode keeps
+    * Ckpt (durable-placement opt-in, CkptSpec). */
+  private def kmeansFit(base: DataFrame, k: Int, iters: Int,
+      lut: (DataFrame, Seq[(Int, Seq[Double])]) => DataFrame,
+      bcast: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     val lutMode = k <= AssignLutMaxCentroids
     val localFinish = lutMode && !reliableMode(base)
-    for (i <- 0 until iters) {
-      val assigned =
-        if (lutMode) assignClustersLut(base, collectedSorted(centroids))
-        else assignClustersBcast(base, centroids)
-      centroids = assigned
-        .select(col("cid"), posexplode(col("emb")).as(Seq("dim", "v")))
-        .groupBy(col("cid"), col("dim"))
-        .agg((graft.queries.QueryUtil.sumDec(col("v")) /
-          count(lit(1))).as("cv"))
-        .groupBy(col("cid"))
-        .agg(transform(
-          array_sort(collect_list(struct(col("dim"), col("cv")))),
-          x => x("cv")).as("centroid"))
-      if (i == iters - 1)
-        centroids =
-          if (localFinish) asLocalRelation(centroids)
-          else Ckpt(centroids)
-      else if (!lutMode) centroids = Ckpt(centroids)
+    lloyd(lloydSeed(base, k), iters, Seq("cid"), "emb")(c =>
+      if (lutMode) lut(base, collectedSorted(c)) else bcast(base, c)) {
+      (c, last) =>
+        if (last) { if (localFinish) asLocalRelation(c) else Ckpt(c) }
+        else if (lutMode) c
+        else Ckpt(c)
     }
-    centroids
   }
+
+  /** The one Lloyd loop under every k-means fit here (flat, L2, PQ
+    * codebooks, two-level sub-cells): `iters` rounds of `assign` (the
+    * fit corpus labelled with its nearest of the current centroids)
+    * followed by the exact decimal-mean update per `cell`; `place`
+    * decides each round's placement (`last` for the final one). */
+  private def lloyd(seed: DataFrame, iters: Int, cell: Seq[String],
+      vec: String)(assign: DataFrame => DataFrame)(
+      place: (DataFrame, Boolean) => DataFrame): DataFrame =
+    (0 until iters).foldLeft(seed) { (cents, i) =>
+      place(decimalMeans(assign(cents), cell, vec), i == iters - 1)
+    }
+
+  /** The per-`cell` exact decimal-mean centroid frame (cell…, centroid)
+    * of the vector column `vec` — ONE definition for every Lloyd update
+    * and every label-celled coarse level. The component mean uses the
+    * exact-decimal sum (QueryUtil strategy): engine AVG accumulates
+    * doubles in partition order, which is nondeterministic across runs
+    * and engines; this form is order-independent and
+    * SQL-reproducible. */
+  private def decimalMeans(assigned: DataFrame, cell: Seq[String],
+      vec: String): DataFrame = {
+    val keys = cell.map(col)
+    assigned
+      .select(keys :+ posexplode(col(vec)).as(Seq("dim", "v")): _*)
+      .groupBy(keys :+ col("dim"): _*)
+      .agg((graft.queries.QueryUtil.sumDec(col("v")) /
+        count(lit(1))).as("cv"))
+      .groupBy(keys: _*)
+      .agg(transform(
+        array_sort(collect_list(struct(col("dim"), col("cv")))),
+        x => x("cv")).as("centroid"))
+  }
+
+  /** Lloyd seeds: the `k` smallest-vec_id rows of `base` as
+    * (cid, centroid), numbered by vec_id. The ≤ k rows collect in one
+    * top-k job and are numbered on the DRIVER — a LocalRelation, so no
+    * unpartitioned window runs and a LUT-mode first iteration reads
+    * the seeds job-free. */
+  private def lloydSeed(base: DataFrame, k: Int): DataFrame =
+    localFrame(base.sparkSession, StructType(Seq(
+        StructField("cid", IntegerType), base.schema("emb")
+          .copy(name = "centroid"))),
+      base.orderBy("vec_id").limit(k).select(col("emb")).collect()
+        .toSeq.zipWithIndex.map { case (r, i) => Row(i, r.get(0)) })
+
+  /** Per-`key` k-means of `k` sub-cells (key, scid, centroid) over
+    * `base` (vec_id, key, emb): seeded per key on its `k` smallest
+    * vec_ids, then [[lloyd]] with the [[assignSubClusters]] projection.
+    * Every round is truncated (the broadcast-LUT sub-assign never
+    * collects, so the plan would otherwise chain geometrically):
+    * through [[Ckpt]], or with `local` — for a bounded grid outside
+    * reliable mode — by collecting the seeds and each round into a
+    * LocalRelation, so the next round's assignment builds its LUT on
+    * the driver ([[subClusterLutLocal]]) and the fitted state
+    * broadcasts job-free. On `catalog_iterative` (10 alternating
+    * pairs, 4 vCPUs) the Ckpt form measured `op_tail_s` 4.81 s vs
+    * 4.03 s and `pass_s` 7.19 vs 6.35 s, and one or two more jobs on
+    * the hierarchical SemDeDup entries. The two-level IVF grid keys it
+    * on `label`, the hierarchical SemDeDup on `cid`. */
+  private def subCellFit(base: DataFrame, key: String, k: Int,
+      iters: Int, local: Boolean = false): DataFrame = {
+    val w = Window.partitionBy(col(key)).orderBy(col("vec_id"))
+    val seed = base.withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= k)
+      .select(col(key), (col("rn") - 1).cast("int").as("scid"),
+        col("emb").as("centroid"))
+    val place: DataFrame => DataFrame =
+      if (local) asLocalRelation else Ckpt(_)
+    lloyd(if (local) place(seed) else seed, iters, Seq(key, "scid"),
+      "emb")(assignSubClusters(base, _, key))((c, _) => place(c))
+  }
+
+  /** Rows of `schema` as a LocalRelation: collects and broadcasts of it
+    * are job-free. */
+  private def localFrame(spark: org.apache.spark.sql.SparkSession,
+      schema: StructType, rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 
   /** Bounded collect of a ≤[[AssignLutMaxCentroids]]-row centroid
     * frame in [[assignClustersLut]]'s (cid-sorted) input form. */
@@ -656,11 +719,8 @@ object Similarity {
     * doubles unchanged, so results are bit-identical (the same
     * argument as the LUT-mode assignment forms). Only call under a
     * static row bound (the LUT gate) and never in reliable mode. */
-  private def asLocalRelation(df: DataFrame): DataFrame = {
-    val rows = df.collect()
-    df.sparkSession.createDataFrame(
-      java.util.Arrays.asList(rows: _*), df.schema)
-  }
+  private def asLocalRelation(df: DataFrame): DataFrame =
+    localFrame(df.sparkSession, df.schema, df.collect().toSeq)
 
   /** Centroid-count gate for the plan-LITERAL projection assignment:
     * up to this many centroids the codebook collects driver-side and
@@ -757,11 +817,8 @@ object Similarity {
     * break hash parity). No division anywhere: L2 assignment is
     * well-defined even for zero-norm subvectors, which is why the PQ
     * fit uses it rather than cosine. */
-  private def l2sq(a: Column, b: Column): Column = {
-    def dot(x: Column, y: Column): Column =
-      graft.functions.ArrayOps.dot_product(x, y)
+  private def l2sq(a: Column, b: Column): Column =
     round(dot(a, a) - lit(2) * dot(a, b) + dot(b, b), 6)
-  }
 
   /** Nearest-centroid assignment under rounded squared-L2 — the
     * [[assignClusters]] sibling for L2 fits, with the same
@@ -812,42 +869,12 @@ object Similarity {
 
   /** [[kmeansCentroids]] under squared-L2 assignment (the textbook
     * k-means objective and the metric PQ codebooks are trained with):
-    * same smallest-vec_id seeding, same order-independent decimal-sum
-    * centroid updates, same per-iteration lineage truncation — so the
+    * the same Lloyd loop ([[kmeansFit]]): smallest-vec_id seeding,
+    * order-independent decimal-sum updates, the same placement — so the
     * fit is bit-reproducible across runs, partitionings, AND engines
     * and the DuckDB oracle can unroll it. */
-  def kmeansCentroidsL2(base: DataFrame, k: Int, iters: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val seedW = Window.orderBy("vec_id")
-    var centroids = base.orderBy("vec_id").limit(k)
-      .withColumn("cid", (row_number().over(seedW) - 1).cast("int"))
-      .select(col("cid"), col("emb").as("centroid"))
-    // same barrier + final-state structure as [[kmeansCentroids]]
-    // (see its note)
-    val lutMode = k <= AssignLutMaxCentroids
-    val localFinish = lutMode && !reliableMode(base)
-    for (i <- 0 until iters) {
-      val assigned =
-        if (lutMode)
-          assignClustersL2Lut(base, collectedSorted(centroids))
-        else assignClustersL2Bcast(base, centroids)
-      centroids = assigned
-        .select(col("cid"), posexplode(col("emb")).as(Seq("dim", "v")))
-        .groupBy(col("cid"), col("dim"))
-        .agg((graft.queries.QueryUtil.sumDec(col("v")) /
-          count(lit(1))).as("cv"))
-        .groupBy(col("cid"))
-        .agg(transform(
-          array_sort(collect_list(struct(col("dim"), col("cv")))),
-          x => x("cv")).as("centroid"))
-      if (i == iters - 1)
-        centroids =
-          if (localFinish) asLocalRelation(centroids)
-          else Ckpt(centroids)
-      else if (!lutMode) centroids = Ckpt(centroids)
-    }
-    centroids
-  }
+  def kmeansCentroidsL2(base: DataFrame, k: Int, iters: Int): DataFrame =
+    kmeansFit(base, k, iters, assignClustersL2Lut, assignClustersL2Bcast)
 
   /** Greedy k-center (farthest-point traversal, Gonzalez 1985)
     * diverse-subset selection — the curation op that picks a maximally
@@ -897,8 +924,6 @@ object Similarity {
     val n = base.count()
     require(n >= k,
       s"k-center needs at least k=$k corpus rows, found $n")
-    def dot(x: Column, y: Column): Column =
-      graft.functions.ArrayOps.dot_product(x, y)
     // distance of the corpus row's emb to one plan-literal center —
     // the exact [[l2sq]] expression shape, so the oracle can replay it
     def dLit(c: Seq[Double]): Column = {
@@ -1019,19 +1044,18 @@ object Similarity {
     * the kSub smallest vec_ids — the SAME rows for every subspace, so
     * one TakeOrdered of the unsliced corpus seeds all m codebooks
     * (sliced per subspace). Each iteration: [[pqAssign]] + the
-    * decimal-mean update keyed (sub, cid, dim) — order-independent
-    * and unrounded, per [[kmeansCentroids]]' portability note. */
+    * decimal-mean update keyed (sub, cid) — order-independent and
+    * unrounded, per [[kmeansCentroids]]' portability note. */
   private def pqFitCodebooks(base: DataFrame, subBase: DataFrame,
       m: Int, subDim: Int, kSub: Int, iters: Int): DataFrame = {
-    val seedW = Window.orderBy("vec_id")
-    var cents = base.orderBy("vec_id").limit(kSub)
-      .withColumn("cid", (row_number().over(seedW) - 1).cast("int"))
-      .select(col("cid"), posexplode(
-          array((0 until m).map(si =>
-            slice(col("emb"), si * subDim + 1, subDim)): _*))
-        .as(Seq("sub", "centroid")))
-      .select(col("sub"), col("cid"), col("centroid"))
-    // barrier structure per [[kmeansCentroids]]'s round-15 note:
+    // the kSub seed rows are local: slice them on the driver
+    val seed = lloydSeed(base, kSub)
+    val seeds = localFrame(base.sparkSession, StructType(
+        StructField("sub", IntegerType) +: seed.schema.fields),
+      for (r <- seed.collect().toSeq; si <- 0 until m) yield
+        Row(si, r.getInt(0), r.getSeq[Double](1)
+          .slice(si * subDim, (si + 1) * subDim)))
+    // barrier structure per [[kmeansFit]]'s round-15 note:
     // [[pqAssign]] collects the codebook frame each iteration (the
     // bounded m·kSub contract) and embeds it as plan literals, so
     // lineage is flat without truncation — each update plan executes
@@ -1043,23 +1067,10 @@ object Similarity {
     // (durable-placement opt-in, CkptSpec).
     val localFinish = m.toLong * kSub <= AssignLutMaxCentroids &&
       !reliableMode(base)
-    for (i <- 0 until iters) {
-      cents = pqAssign(subBase, cents)
-        .select(col("sub"), col("cid"),
-          posexplode(col("semb")).as(Seq("dim", "v")))
-        .groupBy(col("sub"), col("cid"), col("dim"))
-        .agg((graft.queries.QueryUtil.sumDec(col("v")) /
-          count(lit(1))).as("cv"))
-        .groupBy(col("sub"), col("cid"))
-        .agg(transform(
-          array_sort(collect_list(struct(col("dim"), col("cv")))),
-          x => x("cv")).as("centroid"))
-      if (i == iters - 1)
-        cents =
-          if (localFinish) asLocalRelation(cents)
-          else Ckpt(cents)
+    lloyd(seeds, iters, Seq("sub", "cid"), "semb")(pqAssign(subBase, _)) {
+      (c, last) =>
+        if (!last) c else if (localFinish) asLocalRelation(c) else Ckpt(c)
     }
-    cents
   }
 
   /** Product-quantization ANN (Jégou et al. 2011) under `spec` — the
@@ -1193,8 +1204,8 @@ object Similarity {
     * `corpus` only feeds the selectivity-widened nprobe. */
   private def pqProbed(spec: PqSpec, q: DataFrame, cent: DataFrame,
       corpus: => DataFrame): DataFrame = {
-    val qc = if (spec.residual) Seq(graft.functions.ArrayOps.dot_product(
-      col("q_emb"), col("centroid")).as("qc_dot")) else Nil
+    val qc = if (spec.residual)
+      Seq(dot(col("q_emb"), col("centroid")).as("qc_dot")) else Nil
     probeCells(q.crossJoin(broadcast(cent)),
       Seq(col("query_id"), col("label")) ++ qc,
       round(cosine(col("q_emb"), col("centroid")), 6), Seq("query_id"),
@@ -1212,10 +1223,8 @@ object Similarity {
       : DataFrame =
     q.crossJoin(broadcast(cents))
       .select(col("query_id"), col("sub"), col("cid"),
-        graft.functions.ArrayOps.dot_product(
-          slice(col("q_emb"), col("sub") * lit(spec.subDim) + lit(1),
-            lit(spec.subDim)),
-          col("centroid")).as("pdot"))
+        dot(slice(col("q_emb"), col("sub") * lit(spec.subDim) + lit(1),
+          lit(spec.subDim)), col("centroid")).as("pdot"))
 
   /** ADC score → top-k over a code index: exhaustive when `probed` is
     * absent, else restricted to each query's probed partitions; the
@@ -1352,7 +1361,6 @@ object Similarity {
     * `spec.m`. */
   private def readPqIndexMeta(spark: org.apache.spark.sql.SparkSession,
       dir: String, spec: PqSpec): (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.types._
     requireStorable(spec)
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1369,24 +1377,20 @@ object Similarity {
     val iCid = df.schema.fieldIndex("cid")
     val iCent = df.schema.fieldIndex("centroid")
     val centType = df.schema("centroid").dataType
-    val coarse = spark.createDataFrame(
-      java.util.Arrays.asList(rows.filter(_.getString(iKind) == "coarse")
-        .map(r => org.apache.spark.sql.Row(r.getLong(iLabel),
-          r.get(iCent))): _*),
-      StructType(Seq(StructField("label", LongType),
-        StructField("centroid", centType))))
+    val coarse = localFrame(spark, StructType(Seq(
+        StructField("label", LongType), StructField("centroid", centType))),
+      rows.filter(_.getString(iKind) == "coarse").toSeq
+        .map(r => Row(r.getLong(iLabel), r.get(iCent))))
     val cbRows = rows.filter(_.getString(iKind) == "codebooks")
     require(cbRows.nonEmpty, s"$dir/meta holds no codebooks rows — " +
       "corrupt PQ index meta, rebuild the index")
     val m = cbRows.map(_.getInt(iSub)).max + 1
     require(m == spec.m, s"$dir holds m=$m codebooks, spec has m=${spec.m}")
-    val cents = spark.createDataFrame(
-      java.util.Arrays.asList(cbRows
-        .map(r => org.apache.spark.sql.Row(r.getInt(iSub),
-          r.getInt(iCid), r.get(iCent))): _*),
-      StructType(Seq(StructField("sub", IntegerType),
-        StructField("cid", IntegerType),
-        StructField("centroid", centType))))
+    val cents = localFrame(spark, StructType(Seq(
+        StructField("sub", IntegerType), StructField("cid", IntegerType),
+        StructField("centroid", centType))),
+      cbRows.toSeq.map(r =>
+        Row(r.getInt(iSub), r.getInt(iCid), r.get(iCent))))
     (coarse, cents)
   }
 
@@ -1453,21 +1457,10 @@ object Similarity {
 
   /** The per-label exact decimal-mean centroid frame (label, centroid)
     * — ONE definition for every label-celled coarse level: IVF
-    * search, the PQ coarse level and the stored PQ index. The
-    * component mean uses the exact-decimal sum (QueryUtil strategy):
-    * engine AVG accumulates doubles in partition order, which is
-    * nondeterministic across runs and engines; this form is
-    * order-independent and SQL-reproducible
-    * ([[Coarse.centroidsSql]]). */
-  private def labelCentroids(base: DataFrame): DataFrame = base
-    .select(col("label"), posexplode(col("emb")).as(Seq("dim", "v")))
-    .groupBy(col("label"), col("dim"))
-    .agg((graft.queries.QueryUtil.sumDec(col("v")) /
-      count(lit(1))).as("cv"))
-    .groupBy(col("label"))
-    .agg(transform(
-      array_sort(collect_list(struct(col("dim"), col("cv")))),
-      x => x("cv")).as("centroid"))
+    * search, the PQ coarse level and the stored PQ index
+    * ([[Coarse.centroidsSql]] mirrors it). */
+  private def labelCentroids(base: DataFrame): DataFrame =
+    decimalMeans(base, Seq("label"), "emb")
 
   /** Keep each query's `nprobe` best coarse cells — the one probe
     * rule of every coarse level ([[Coarse.probedSql]] mirrors it):
@@ -1549,42 +1542,9 @@ object Similarity {
     * O(N·k/mod) plus one full assignment pass. */
   private def kmeansIndex(c: Coarse.Kmeans, base: DataFrame): IvfIndex = {
     val kClusters = c.k.of(base.count())
-    val fitBase =
-      if (c.fitSampleMod > 1L) base.filter(col("vec_id") % c.fitSampleMod === 0)
-      else base
-    val centroids = kmeansCentroids(fitBase, kClusters, c.iters)
+    val centroids = kmeansCentroids(fitSample(base, c.fitSampleMod),
+      kClusters, c.iters)
     IvfIndex(centroids, assignClusters(base, centroids), kClusters)
-  }
-
-  /** The two-level grid's sub-cells (label, scid, centroid): per label
-    * an independent k-means of `k2` cells, seeded on the label's k2
-    * smallest vec_ids, same rounded-cosine assignment and decimal-mean
-    * updates as [[kmeansCentroids]]. */
-  private def subCells(base: DataFrame, c: Coarse.TwoLevel): DataFrame = {
-    val seedW = Window.partitionBy(col("label")).orderBy(col("vec_id"))
-    var cents2 = base
-      .withColumn("rn", row_number().over(seedW))
-      .filter(col("rn") <= c.k2)
-      .select(col("label"), (col("rn") - 1).cast("int").as("scid"),
-        col("emb").as("centroid"))
-    for (_ <- 0 until c.iters) {
-      cents2 = assignSubClusters(base, cents2, "label")
-        .select(col("label"), col("scid"),
-          posexplode(col("emb")).as(Seq("dim", "v")))
-        .groupBy(col("label"), col("scid"), col("dim"))
-        .agg((graft.queries.QueryUtil.sumDec(col("v")) /
-          count(lit(1))).as("cv"))
-        .groupBy(col("label"), col("scid"))
-        .agg(transform(
-          array_sort(collect_list(struct(col("dim"), col("cv")))),
-          x => x("cv")).as("centroid"))
-        // per-iteration truncation stays REQUIRED here (the
-        // broadcast-LUT sub-assign never collects, so the plan would
-        // chain geometrically) — routed through Ckpt so reliable mode
-        // covers this fit loop too
-        .transform(Ckpt(_))
-    }
-    cents2
   }
 
   /** A built coarse level: cell centroids keyed by the spec's cell
@@ -1604,7 +1564,7 @@ object Similarity {
         val idx = kmeansIndex(c, base)
         Cells(idx.centroids, None, idx.members, c.nprobe)
       case c: Coarse.TwoLevel =>
-        val cents2 = subCells(base, c)
+        val cents2 = subCellFit(base, "label", c.k2, c.iters)
         Cells(labelCentroids(base), Some(cents2),
           assignSubClusters(base, cents2, "label"), c.nprobe)
     }
@@ -1767,7 +1727,7 @@ object Similarity {
     * exact cold-cost pathology the [[lshBucket]] kernel note
     * documents — the broadcast row keeps plans small instead. `key`
     * is `label` for the ANN grid, `cid` for the hierarchical
-    * SemDeDup ([[semDedupHier]]). */
+    * SemDeDup ([[semDedup]]). */
   private def assignSubClusters(base: DataFrame,
       cents2: DataFrame, key: String): DataFrame = {
     // r16: when the sub-codebook is ALREADY a LocalRelation (the
@@ -1804,7 +1764,6 @@ object Similarity {
     * from a LOCAL sub-codebook frame — see [[assignSubClusters]]. */
   private def subClusterLutLocal(cents2: DataFrame, key: String)
       : DataFrame = {
-    import org.apache.spark.sql.types._
     val schema = cents2.schema
     val iKey = schema.fieldIndex(key)
     val iScid = schema.fieldIndex("scid")
@@ -1812,15 +1771,12 @@ object Similarity {
     val rows = cents2.collect() // job-free: LocalTableScan
     val grouped = rows.groupBy(_.get(iKey)).toSeq.map { case (k, rs) =>
       val sorted = rs.sortBy(_.getInt(iScid))
-      org.apache.spark.sql.Row(k,
-        sorted.map(_.getSeq[Double](iCent)).toSeq,
+      Row(k, sorted.map(_.getSeq[Double](iCent)).toSeq,
         sorted.map(_.getInt(iScid)).toSeq)
     }
-    cents2.sparkSession.createDataFrame(
-      java.util.Arrays.asList(grouped: _*),
-      StructType(Seq(schema(key),
+    localFrame(cents2.sparkSession, StructType(Seq(schema(key),
         StructField("_cents", ArrayType(ArrayType(DoubleType))),
-        StructField("_scids", ArrayType(IntegerType)))))
+        StructField("_scids", ArrayType(IntegerType)))), grouped)
   }
 
   /** The selectivity-derived nprobe rule shared by the filtered
@@ -1837,228 +1793,156 @@ object Similarity {
     math.min(l, (baseNprobe.toLong * n + m - 1) / m).toInt
   }
 
-  /** Semantic deduplication (the SemDeDup recipe, Abbas et al. 2023,
-    * arXiv:2303.09540): cluster the corpus with the deterministic
-    * k-means of [[kmeansCentroids]], compute exact pairwise cosine
-    * only WITHIN each cluster, and drop every vector that is
-    * ≥ `threshold`-similar to a smaller-id vector in its cluster
-    * (greedy keep-smallest-id — deterministic and SQL-mirrorable).
-    * Output: one row per input vector — (vec_id, cid, kept).
+  /** Semantic deduplication under `spec` (the SemDeDup recipe, Abbas
+    * et al. 2023, arXiv:2303.09540): cut the corpus into the spec's
+    * deterministic k-means cells, compute exact pairwise cosine only
+    * WITHIN each cell, and drop every vector that is ≥
+    * `threshold`-similar to a smaller-id vector of its cell (greedy
+    * keep-smallest-id — deterministic and SQL-mirrorable). Output: one
+    * row per non-NULL input vector — (vec_id, cid[, scid], kept).
     *
-    * Scale shape: the quadratic step is confined to clusters. Total
-    * pair work is Σ|cluster|² ≈ N²/k for balanced clusters, so at
-    * corpus scale `kClusters` grows with N (the paper runs k≈11k on
-    * 100M embeddings, mean cluster ≈10⁴) — the per-cluster join is an
-    * equi-join on `cid`, hash-partitioned, never all-pairs. A skewed
-    * (oversized) cluster concentrates work on one key; the mitigation
-    * at scale is raising k (cluster size is a tuning invariant, like
-    * the Jaccard block cap). Only (vec_id, cid) rows shuffle into the
-    * pair join; vectors reattach by id equi-join afterward — same
-    * ship-ids-not-payload shape as [[cosineDupPairs]].
+    * Scale shape: the quadratic step is confined to cells. Pair work
+    * is Σ|cell|², so at corpus scale the cell count grows with N (the
+    * paper runs k≈11k on 100M embeddings, mean cluster ≈10⁴): the
+    * flat grid's ⌈N/target⌉ rule keeps cell size flat — the 10× scale
+    * probe measured fixed-k as ~56× slower for 10× data — but every
+    * flat assignment pass then costs N·k = O(N²/target); the
+    * hierarchical grid's two √-sized levels cut it to N·2k =
+    * O(N·√(N/target)) (~7×10⁸ instead of 6×10¹⁰ at 2M vectors and
+    * target 64), the two-level [[ivfSearch]] argument applied to dedup
+    * blocking. The per-cell join is an equi-join on the cell keys,
+    * never all-pairs; a skewed cell concentrates work on one key (the
+    * mitigation at scale is a smaller target).
     *
     * `fitSampleMod` > 1 trains the k-means on the DETERMINISTIC
-    * `vec_id % fitSampleMod == 0` sample (seeds and every Lloyd pass
-    * — the [[PqSpec]]/[[ivfIndexBuild]] production bound; FAISS
-    * trains quantizers on a sample) while the FULL corpus is still
-    * assigned and pair-pruned: the fit drops from O(N·k·iters) to
-    * O(N·k·iters/mod) and the modulus stays SQL-mirrorable. Dedup
-    * SEMANTICS are unchanged — clusters are only the blocking
-    * structure; every vector still competes within its cell. */
-  def semDedup(embeddings: DataFrame, kClusters: Int, iters: Int,
-      threshold: Double, dim: Int = 64,
-      fitSampleMod: Long = 1L): DataFrame = {
-    require(fitSampleMod >= 1L, "fitSampleMod must be >= 1")
-    val base = semDedupBase(embeddings, dim)
-    try {
-      val fitBase =
-        if (fitSampleMod > 1L) base.filter(col("vec_id") % fitSampleMod === 0)
-        else base
-      val centroids = kmeansCentroids(fitBase, kClusters, iters)
-      val members = assignClusters(base, centroids)
-      // semDedupPrune checkpoints its output, so unpersisting base in
-      // the finally below never strands the returned frame's lineage
-      semDedupPrune(members, Seq("cid"), threshold)
-    } finally {
-      // reclaim the corpus-sized frame on every exit path (the
-      // PageRank/MvRefresh rule): a failed Lloyd pass or pair join
-      // must not strand MEMORY_AND_DISK blocks
-      base.unpersist()
+    * `vec_id % fitSampleMod == 0` sample (FAISS trains quantizers on a
+    * sample) while the FULL corpus is still assigned and pair-pruned;
+    * dedup SEMANTICS are unchanged — cells are only the blocking
+    * structure. */
+  def semDedup(spec: SemDedupSpec, embeddings: DataFrame): DataFrame =
+    withSemDedupBase(spec, embeddings) { base =>
+      val members = spec.grid match {
+        case SemDedupGrid.Flat(rule) =>
+          // a row-derived k counts the raw input
+          val cent = kmeansCentroids(fitSample(base, spec.fitSampleMod),
+            rule.of(embeddings.count()), spec.iters)
+          assignClusters(base, cent)
+        case h: SemDedupGrid.Hier =>
+          hierFit(base, h.k(base.count()), spec.iters, spec.fitSampleMod)._3
+      }
+      // the prune checkpoints its output, so unpersisting base never
+      // strands the returned frame's lineage
+      semDedupPrune(spec, members, None)
+    }
+
+  /** The FITTED state of the semantic-dedup ingest gate — what a
+    * deployment keeps between refits (the [[IvfIndex]] sibling): the
+    * manifest's TWO-LEVEL cluster centroids ([[hierFit]]) plus its
+    * distinct (cell, sub-cell, value) groups with min-id
+    * representatives. All three frames are materialized and
+    * O(manifest) at most; every incoming batch is judged against this
+    * state without touching the manifest again. */
+  final case class SemDedupState(centroids1: DataFrame,
+      centroids2: DataFrame, manGroups: DataFrame)
+
+  /** Fit the gate state of `spec` — a hierarchical grid, k derived from
+    * the NULL-filtered manifest — on the manifest: [[hierFit]] plus
+    * the manifest's group collapse. */
+  def semDedupFit(spec: SemDedupSpec, manifest: DataFrame): SemDedupState = {
+    val grid = gateGrid(spec)
+    withSemDedupBase(spec, manifest) { man =>
+      val n = man.count()
+      // an EMPTY manifest would fit zero centroids and the gate's
+      // occupied-cell restriction would then drop every incoming
+      // vector — violating its 'one row per incoming vector' contract.
+      // It can drop nothing, so fail loudly at fit time instead.
+      require(n > 0, "semDedupFit: empty manifest — nothing to fit; " +
+        "an empty manifest cannot drop incoming vectors, ingest the " +
+        "first batch unfiltered instead")
+      val (cent1, cents2, members) =
+        hierFit(man, grid.k(n), spec.iters, spec.fitSampleMod)
+      // ≤ O(manifest); reused by every batch
+      SemDedupState(cent1, cents2, Ckpt(cellGroups(members, spec.cellKeys)))
     }
   }
 
-  /** Shared input guard of the SemDeDup family — same policy as
+  /** Judge ONE incoming batch against a fitted [[SemDedupState]] — the
+    * per-micro-batch body of the streaming gate too: each incoming
+    * vector is assigned to its manifest (cell, sub-cell) and dropped
+    * iff ≥ `threshold`-similar to any manifest group there or to a
+    * smaller-id vector of THIS batch (one-pass greedy within the
+    * batch; the state is frozen between refits, so vectors in
+    * different batches never judge each other — the manifest-gate
+    * contract). Output: one row per incoming vector — (vec_id, cid,
+    * scid, kept); the manifest is never re-judged (it IS the kept
+    * corpus).
+    *
+    * The batch's level-1 assignment ranks over OCCUPIED cells only
+    * (cells with ≥1 manifest member — exactly the cids carrying
+    * level-2 structure, [[hierFit]]'s occupancy fact): a vector
+    * falling into a member-less cell would have no sub-cell to join
+    * and silently vanish from the output; restricted, it joins its
+    * nearest occupied cell and is judged there. Per-batch cost is
+    * bounded by the batch: |B|·2k assignment plus the within-sub-cell
+    * pair join over distinct groups. */
+  def semDedupGateBatch(spec: SemDedupSpec, state: SemDedupState,
+      incoming: DataFrame): DataFrame = {
+    gateGrid(spec) // rejects a flat spec
+    withSemDedupBase(spec, incoming) { inc =>
+      val occ1 = state.centroids1.join(
+        state.centroids2.select(col("cid")).distinct(), Seq("cid"),
+        "left_semi")
+      semDedupPrune(spec, assignSubClusters(assignClusters(inc, occ1),
+        state.centroids2, "cid"), Some(state.manGroups))
+    }
+  }
+
+  /** The ingest gate's grid: the hierarchical one, whose refit and
+    * per-batch assignment stay on the N·2k cost line. */
+  private def gateGrid(spec: SemDedupSpec): SemDedupGrid.Hier =
+    spec.grid match {
+      case h: SemDedupGrid.Hier => h
+      case g => throw new IllegalArgumentException(
+        s"the semantic ingest gate runs on the hierarchical grid, not $g")
+    }
+
+  /** Runs `body` on the SemDeDup input guard's frame — same policy as
     * cosineDupPairs/lshTopK: NULL embeddings drop (they can never
-    * pair), a dim mismatch fails fast — dot_product would otherwise
+    * pair), a dim mismatch fails fast (dot_product would otherwise
     * NULL every cosine and the threshold filter would silently drop
-    * nothing (dedup no-op with bogus cids; a NULL seed would even
-    * NULL assignments corpus-wide). Persisted: the frame feeds the
-    * fit passes and the final assignment. */
-  private def semDedupBase(embeddings: DataFrame, dim: Int): DataFrame =
-    embeddings.select(col("vec_id"),
+    * nothing). The frame feeds the fit passes and the final
+    * assignment, so it persists — and is reclaimed on every exit path
+    * (the PageRank/MvRefresh rule). */
+  private def withSemDedupBase[T](spec: SemDedupSpec,
+      embeddings: DataFrame)(body: DataFrame => T): T = {
+    val base = embeddings.select(col("vec_id"),
         toDouble(col("embedding")).as("emb"))
       .filter(col("emb").isNotNull)
-      .filter(coalesce(assert_true(size(col("emb")) === dim,
-        lit(s"semDedup: embedding dim != $dim")), lit(true)))
+      .filter(coalesce(assert_true(size(col("emb")) === spec.dim,
+        lit(s"semDedup: embedding dim != ${spec.dim}")), lit(true)))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-  /** Shared pair-pruning tail of the SemDeDup family: exact pairwise
-    * cosine only WITHIN each cell (the `cellKeys` grouping of the
-    * assigned membership frame), greedy keep-smallest-id.
-    *
-    * Physical shape (the r12 multiplicity finding): identical vectors
-    * assign identically, so the pair join runs over DISTINCT
-    * (cell, value) GROUPS — each collapsed to its min-id
-    * representative — never over members. Member `b` is dropped iff
-    * some qualifying group's representative id < b's vec_id, where
-    * group A qualifies against b's group B when round(cos(A,B),6) ≥
-    * threshold — INCLUDING A = B: the self-cosine rounds to exactly
-    * 1.0 (x/(√x·√x) is within 1 ulp of 1), so own-group
-    * qualification is precisely the `threshold ≤ 1` test and
-    * non-representative members drop exactly as the member-level
-    * rule dictates (their rep is a smaller-id vector at cosine 1).
-    * An EXACT rewrite for every threshold — the DuckDB oracles
-    * verify it unchanged — that makes pair work quadratic in
-    * DISTINCT values per cell instead of in members: dedup corpora
-    * are dup-heavy BY DEFINITION, and the member-level form pays
-    * multiplicity² per value (the 1000× probe corpus, 2k distinct
-    * values × 1000 copies, filled 80 GB of shuffle spill in the
-    * member form; the group form's pair frame is 2k rows).
-    * Output: one row per input vector — (vec_id, cellKeys…, kept). */
-  private def semDedupPrune(members0: DataFrame, cellKeys: Seq[String],
-      threshold: Double): DataFrame = {
-    def dot(x: Column, y: Column): Column =
-      graft.functions.ArrayOps.dot_product(x, y)
-    // members feeds the group collapse and the final output —
-    // checkpoint so assignment runs once, not twice
-    val members = members0.localCheckpoint()
-    val keys = cellKeys.map(col)
-    val groups = members
-      .groupBy(keys :+ col("emb"): _*)
-      .agg(min(col("vec_id")).as("rep_id"))
-      .withColumn("norm", sqrt(dot(col("emb"), col("emb"))))
-    val cellEq = cellKeys.map(k => col(s"a.$k") === col(s"b.$k"))
-      .reduce(_ && _)
-    // directed qualifying pairs a → b over groups (a = b included —
-    // self-cosine 1.0 makes own-group qualification ≡ threshold ≤ 1)
-    val minQual = groups.alias("a").join(groups.alias("b"), cellEq)
-      .filter(round(dot(col("a.emb"), col("b.emb")) /
-        (col("a.norm") * col("b.norm")), 6) >= threshold)
-      .groupBy(cellKeys.map(k => col(s"b.$k")) :+ col("b.emb"): _*)
-      .agg(min(col("a.rep_id")).as("min_rep"))
-    members
-      .join(minQual, cellKeys :+ "emb", "left")
-      .select(col("vec_id") +: keys :+
-        (col("min_rep").isNull || col("min_rep") >= col("vec_id"))
-          .as("kept"): _*)
-      .localCheckpoint()
+    try body(base) finally base.unpersist()
   }
 
-  /** [[semDedup]] with the cluster count derived from the corpus:
-    * k = ⌈n / targetClusterSize⌉ (min 2). This is the production
-    * recipe as code — the 10× scale probe measured fixed-k as ~56×
-    * slower for 10× data (pair work Σ|c|² is quadratic in cluster
-    * size) while scaled-k restores ~linear cost; see BASELINE.md.
-    * Costs one count() job up front; the catalog query keeps an
-    * explicit k because its unrolled-iteration SQL oracle needs a
-    * literal cluster count. `fitSampleMod` bounds the fit corpus as
-    * in [[semDedup]] — with k ∝ N the FULL fit pays O(N²/target) per
-    * Lloyd pass, the measured assignment wall of the k ∝ N family;
-    * the sampled fit divides it by `mod`, and [[semDedupHier]] is
-    * the structural answer beyond that. */
-  def semDedupAuto(embeddings: DataFrame, targetClusterSize: Long,
-      iters: Int, threshold: Double, dim: Int = 64,
-      fitSampleMod: Long = 1L): DataFrame = {
-    require(targetClusterSize >= 1, "targetClusterSize must be >= 1")
-    val n = embeddings.count()
-    val k = math.max(2L, (n + targetClusterSize - 1) / targetClusterSize)
-      .min(Int.MaxValue).toInt
-    semDedup(embeddings, k, iters, threshold, dim, fitSampleMod)
-  }
+  /** The rows of `base` a `fitSampleMod` fit trains on. */
+  private def fitSample(base: DataFrame, mod: Long): DataFrame =
+    if (mod > 1L) base.filter(col("vec_id") % mod === 0) else base
 
-  /** HIERARCHICAL SemDeDup — the two-level cell structure that
-    * retires the flat k ∝ N variant's assignment wall structurally
-    * (the two-level [[ivfSearch]] argument applied to dedup blocking):
-    * level 1 is a deterministic k-means of k₁ = ⌈√⌈N/target⌉⌉
-    * clusters, level 2 an independent per-cluster k-means of the same
-    * k₂ = k₁ sub-clusters, so the k₁·k₂ ≥ N/target cells keep mean
-    * cell size ≤ ~target while EVERY assignment pass costs
-    * N·(k₁+k₂) = O(N·√(N/target)) candidate evaluations instead of
-    * the flat grid's N·k = O(N²/target) — at 2M vectors and
-    * target 64, ~7×10⁸ instead of 6×10¹⁰. Pair work stays linear
-    * (Σ|cell|² ≈ N·target for balanced cells). Dedup semantics are
-    * the family's: exact within-cell cosine, greedy keep-smallest-id;
-    * both fit levels and both assignments are deterministic
-    * (smallest-vec_id seeds, rounded cosine, decimal-mean updates) so
-    * the whole hierarchy unrolls into the DuckDB oracle with `cid`
-    * added to every level-2 GROUP BY / PARTITION BY.
-    *
-    * Distributed shape: level-1 assignment is the [[assignClusters]]
-    * projection (broadcast-row LUT above the literal gate); level-2
-    * sub-assignment is [[assignSubClusters]] keyed on `cid` — one
-    * broadcast LUT row per level-1 cluster, per-row candidate count
-    * k₂ regardless of cell count. The broadcast is k₁·k₂·dim doubles
-    * (~16 MB at 2M vectors / target 64); beyond ~100M vectors the
-    * LUT itself outgrows broadcast and the join would shuffle on
-    * `cid` — the same regime where production moves to an HNSW
-    * coarse quantizer. */
-  /** `fitSampleMod` > 1 trains BOTH k-means levels on deterministic
-    * samples (the family's `fitSampleMod` lever, through the
-    * hierarchy): level 1 fits on the `vec_id % mod == 0` slice of the
-    * corpus; level 2 fits, per level-1 cell, on that cell's sampled
-    * members PLUS the cell's min-id member — the fallback row that
-    * keeps a cell with no sampled members seeded (otherwise its
-    * members would have no level-2 centroids to assign to). Both
-    * full-corpus assignments and the pair prune are unchanged; the
-    * whole rule is integer-exact and unrolls into the oracle. */
-  def semDedupHier(embeddings: DataFrame, targetCellSize: Long,
-      iters: Int, threshold: Double, dim: Int = 64,
-      fitSampleMod: Long = 1L): DataFrame = {
-    require(targetCellSize >= 1, "targetCellSize must be >= 1")
-    require(fitSampleMod >= 1L, "fitSampleMod must be >= 1")
-    val base = semDedupBase(embeddings, dim)
-    try {
-    // k derives from the FULL corpus count — the cell grid is a
-    // layout property of the corpus, not of the fit sample
-    val n = base.count()
-    val (_, cents2, m1) = hierFit(base, hierGridK(n, targetCellSize),
-      iters, fitSampleMod)
-    val members = assignSubClusters(m1, cents2, "cid")
-    // prune checkpoints its output — safe to unpersist base below
-    semDedupPrune(members, Seq("cid", "scid"), threshold)
-    } finally {
-      // every exit path reclaims the corpus-sized frame (the
-      // PageRank/MvRefresh rule)
-      base.unpersist()
-    }
-  }
-
-  /** The hier grid rule shared by [[semDedupHier]] and the ingest
-    * gate's [[semDedupFit]]: k₁ = k₂ = ⌈√⌈n/target⌉⌉ (min 2) — /2⁶
-    * and IEEE sqrt/ceil are exactly rounded, so the derivation is
-    * engine-portable as one integer scalar subquery in the oracle. */
-  private def hierGridK(n: Long, target: Long): Int =
-    math.max(2, math.ceil(math.sqrt(
-      math.ceil(n.toDouble / target))).toInt)
-
-  /** The two-level fit shared by [[semDedupHier]] and [[semDedupFit]]
-    * (EXACT extraction of the r13 hier body): level 1 is a k-cluster
-    * k-means over `base` (or its `fitSampleMod` slice), level 2 an
-    * independent per-cell k-means of the same k over each cell's fit
-    * members (sampled members + the cell's min-id fallback row under
-    * sampling — the row that keeps sample-free cells seeded). Returns
-    * (level-1 centroids, level-2 centroids keyed (cid, scid), the
-    * checkpointed level-1 assignment of the FULL base). Every cid
-    * with ≥1 base member carries level-2 structure, and every cid in
-    * `cents2` is backed by ≥1 base member (a cell empty in the fresh
-    * level-1 assignment has no rows to seed from and drops out) —
-    * the occupancy fact [[semDedupGateBatch]]'s restricted incoming
-    * assignment relies on. */
+  /** The hierarchical grid: level 1 is a k-cluster k-means over `base`
+    * (or its `fitSampleMod` slice), level 2 an independent per-cell
+    * k-means of the same k ([[subCellFit]] keyed on `cid`) over each
+    * cell's fit members — under sampling, its sampled members plus the
+    * cell's min-id member, the row that keeps a sample-free cell
+    * seeded. Every cid with ≥1 base member carries level-2 structure,
+    * and every cid in the level-2 centroids is backed by ≥1 base
+    * member (a cell empty in the fresh level-1 assignment has no rows
+    * to seed from and drops out) — the occupancy fact
+    * [[semDedupGateBatch]]'s restricted assignment relies on. Returns
+    * (level-1 centroids, level-2 centroids (cid, scid, centroid), the
+    * membership of `base` (vec_id, cid, emb, scid)). */
   private def hierFit(base: DataFrame, k: Int, iters: Int,
       fitSampleMod: Long): (DataFrame, DataFrame, DataFrame) = {
-    val fitBase =
-      if (fitSampleMod > 1L) base.filter(col("vec_id") % fitSampleMod === 0)
-      else base
-    val cent1 = kmeansCentroids(fitBase, k, iters)
+    val cent1 = kmeansCentroids(fitSample(base, fitSampleMod), k, iters)
     // m1 feeds every level-2 fit pass and the final sub-assignment —
     // checkpoint so level-1 assignment runs once
     val m1 = Ckpt(assignClusters(base, cent1))
@@ -2071,204 +1955,67 @@ object Similarity {
           .drop("mn")
           .transform(Ckpt(_)) // sample-sized; seeds + both Lloyd passes
       } else m1
-    val seedW = Window.partitionBy(col("cid")).orderBy(col("vec_id"))
-    var cents2 = m1fit
-      .withColumn("rn", row_number().over(seedW))
-      .filter(col("rn") <= k)
-      .select(col("cid"), (col("rn") - 1).cast("int").as("scid"),
-        col("emb").as("centroid"))
-    // Level-2 loop state (round 16): the grid is k×k cells, so within
-    // the LUT gate (k² ≤ AssignLutMaxCentroids — every catalog tier;
-    // k² ≈ n/target crosses it only at corpus scale) each update
-    // collects ONCE into a LocalRelation instead of checkpointing —
-    // flat lineage without the per-iteration truncation job, and the
-    // returned state broadcasts/filters job-free in the gate batches.
-    // Past the gate (or in reliable mode) the Ckpt form is unchanged.
-    // r13's rejected alternative embedded the grid as a MAP LITERAL
-    // (~10× slower cold — Janino re-entry per assign, see
-    // [[assignSubClusters]]); a LocalRelation carries the rows as
-    // data, not expression nodes, so that pathology cannot arise.
-    val localLoop = k.toLong * k <= AssignLutMaxCentroids &&
-      !reliableMode(m1fit)
-    // the seed localizes too, so iteration 1's assign already takes
-    // the driver-built-LUT branch of [[assignSubClusters]] (the seed
-    // window executes exactly once either way — here as the collect
-    // instead of inlined under iteration 1's broadcast aggregate)
-    if (localLoop) cents2 = asLocalRelation(cents2)
-    for (_ <- 0 until iters) {
-      val assigned = assignSubClusters(m1fit, cents2, "cid")
-      val updated = assigned
-        .select(col("cid"), col("scid"),
-          posexplode(col("emb")).as(Seq("dim", "v")))
-        .groupBy(col("cid"), col("scid"), col("dim"))
-        .agg((graft.queries.QueryUtil.sumDec(col("v")) /
-          count(lit(1))).as("cv"))
-        .groupBy(col("cid"), col("scid"))
-        .agg(transform(
-          array_sort(collect_list(struct(col("dim"), col("cv")))),
-          x => x("cv")).as("centroid"))
-      cents2 =
-        if (localLoop) asLocalRelation(updated) else Ckpt(updated)
-    }
-    (cent1, cents2, m1)
+    val cents2 = subCellFit(m1fit, "cid", k, iters,
+      local = k.toLong * k <= AssignLutMaxCentroids && !reliableMode(m1fit))
+    (cent1, cents2, assignSubClusters(m1, cents2, "cid"))
   }
 
-  /** INCREMENTAL SemDeDup — the ingest gate of the dedup family (the
-    * [[ivfIncremental]] shape applied to semantic dedup, the sibling
-    * of the MinHash manifest gate): the cluster structure is fitted
-    * on the MANIFEST only with the HIERARCHICAL two-level grid
-    * ([[hierFit]], k₁ = k₂ = ⌈√⌈N_man/target⌉⌉ — at scale this is
-    * the amortized index the batches reuse until the next refit),
-    * each incoming vector is assigned to its manifest (cell,
-    * sub-cell), and it is dropped iff it is ≥ `threshold`-similar
-    * to ANY manifest vector in that sub-cell or to a SMALLER-ID
-    * incoming vector in it (the family's one-pass greedy rule, so a
-    * batch that contains its own duplicates keeps exactly the
-    * smallest id). Output: one row per incoming vector — (vec_id,
-    * cid, scid, kept); the manifest is never re-judged (it IS the
-    * kept corpus).
-    *
-    * The r13 form fit the FLAT k ∝ N_man grid here — the family's
-    * measured assignment wall (every refit pays N_man·k =
-    * O(N²/target) per Lloyd pass, and every batch pays |B|·k): the
-    * r12 campaign measured the flat gate at 110.4 s vs hier 14.1 s
-    * at the 100× tier, with the 1000× flat legs gated by policy.
-    * Composing [[hierFit]] (r14) puts BOTH the refit and the
-    * per-batch assignment on the hier cost line: refit Lloyd passes
-    * are N_man·√k̄-class, batches pay |B|·2k₁ = O(|B|·√(N_man/t)).
-    *
-    * Per-batch cost is bounded by the batch: |B| · 2k₁ assignment
-    * plus the within-sub-cell pair join, which runs over distinct
-    * (cell, value) GROUPS (the [[semDedupPrune]] multiplicity
-    * collapse — exact for every threshold): a dup-heavy batch, the
-    * regime an ingest gate exists for, pays distinct-values² per
-    * sub-cell, never multiplicity². Deterministic end to end, so the
-    * whole gate hash-verifies via the two-level split fit/assign
-    * oracle fragment. */
-  def semDedupIncremental(manifest: DataFrame, incoming: DataFrame,
-      targetClusterSize: Long, iters: Int, threshold: Double,
-      dim: Int = 64, fitSampleMod: Long = 1L): DataFrame =
-    semDedupGateBatch(
-      semDedupFit(manifest, targetClusterSize, iters, dim,
-        fitSampleMod),
-      incoming, threshold, dim)
-
-  /** The FITTED state of the semantic-dedup ingest gate — what a
-    * deployment keeps between refits (the amortized index of the
-    * manifest-gate trio, the [[IvfIndex]] sibling): the manifest's
-    * TWO-LEVEL cluster centroids ([[hierFit]]) plus its distinct
-    * (cell, sub-cell, value) groups with min-id representatives. All
-    * three frames are checkpointed and O(manifest) at most; every
-    * incoming batch is judged against this state without touching
-    * manifest text again. */
-  case class SemDedupState(centroids1: DataFrame,
-      centroids2: DataFrame, manGroups: DataFrame)
-
-  /** Fit the gate state on the manifest ([[semDedupIncremental]]'s
-    * fit half): the [[hierFit]] two-level deterministic k-means
-    * (k₁ = k₂ = ⌈√⌈N_man/target⌉⌉, optionally `fitSampleMod`-sampled
-    * Lloyd passes) + the manifest's per-sub-cell group collapse. k
-    * derives from the NULL-filtered manifest — the frame the fit
-    * actually runs on, matching [[semDedupHier]]'s convention. */
-  def semDedupFit(manifest: DataFrame, targetClusterSize: Long,
-      iters: Int, dim: Int = 64,
-      fitSampleMod: Long = 1L): SemDedupState = {
-    require(targetClusterSize >= 1, "targetClusterSize must be >= 1")
-    def dot(x: Column, y: Column): Column =
-      graft.functions.ArrayOps.dot_product(x, y)
-    val man = semDedupBase(manifest, dim)
-    try {
-      val nM = man.count()
-      // an EMPTY manifest would fit zero centroids and the gate's
-      // occupied-cell restriction would then drop every incoming
-      // vector — violating its 'one row per incoming vector'
-      // contract (r14 advice). An empty manifest can drop nothing,
-      // so there is nothing to fit: fail loudly at fit time (free —
-      // nM is already counted) instead of silently emitting an empty
-      // gate output per batch.
-      require(nM > 0, "semDedupFit: empty manifest — nothing to fit; " +
-        "an empty manifest cannot drop incoming vectors, ingest the " +
-        "first batch unfiltered instead")
-      val (cent1, cents2, m1) = hierFit(man,
-        hierGridK(nM, targetClusterSize), iters, fitSampleMod)
-      val manGroups = assignSubClusters(m1, cents2, "cid")
-        .groupBy(col("cid"), col("scid"), col("emb"))
-        .agg(min(col("vec_id")).as("rep_id"))
-        .withColumn("norm", sqrt(dot(col("emb"), col("emb"))))
-        .transform(Ckpt(_)) // ≤ O(manifest); reused by every batch
-      SemDedupState(cent1, cents2, manGroups)
-    } finally {
-      // the corpus-sized frame reclaimed on every exit path (the
-      // PageRank/MvRefresh rule)
-      man.unpersist()
-    }
-  }
-
-  /** Judge ONE incoming batch against a fitted [[SemDedupState]]
-    * ([[semDedupIncremental]]'s gate half, and the per-micro-batch
-    * body of the STREAMING gate): each incoming vector is assigned to
-    * its manifest (cell, sub-cell) and dropped iff ≥
-    * `threshold`-similar to any manifest group there or to a
-    * smaller-id vector of THIS batch (one-pass greedy within the
-    * batch; the state is frozen between refits, so vectors in
-    * different batches never judge each other — the documented
-    * manifest-gate contract). Output: one row per incoming vector —
-    * (vec_id, cid, scid, kept).
-    *
-    * The batch's level-1 assignment ranks over OCCUPIED cells only
-    * (cells with ≥1 manifest member — exactly the cids carrying
-    * level-2 structure, [[hierFit]]'s occupancy fact): a level-1
-    * centroid can end the fit with zero fresh manifest members, and
-    * an incoming vector falling into such a cell would have no
-    * sub-cell to assign to and silently vanish from the output;
-    * restricted, it re-assigns to its nearest occupied cell and is
-    * judged there. The oracle mirrors the restriction (occ/c2o
-    * CTEs). `state` must carry ≥1 centroid — [[semDedupFit]], the
-    * one constructor, rejects an empty manifest at fit time (an
-    * entirely empty state would otherwise empty the output, not
-    * keep-all). */
-  def semDedupGateBatch(state: SemDedupState, incoming: DataFrame,
-      threshold: Double, dim: Int = 64): DataFrame = {
-    def dot(x: Column, y: Column): Column =
-      graft.functions.ArrayOps.dot_product(x, y)
-    val inc = semDedupBase(incoming, dim)
-    try {
-    val occ1 = state.centroids1.join(
-      state.centroids2.select(col("cid")).distinct(),
-      Seq("cid"), "left_semi")
-    val mInc = Ckpt(assignSubClusters(
-      assignClusters(inc, occ1), state.centroids2, "cid"))
-    val gInc = Ckpt(mInc
-      .groupBy(col("cid"), col("scid"), col("emb"))
+  /** The SemDeDup group collapse: identical vectors assign identically,
+    * so a cell's members collapse to DISTINCT (cell, value) groups
+    * with their min-id representative and norm. */
+  private def cellGroups(members: DataFrame, keys: Seq[String])
+      : DataFrame =
+    members.groupBy(keys.map(col) :+ col("emb"): _*)
       .agg(min(col("vec_id")).as("rep_id"))
-      .withColumn("norm", sqrt(dot(col("emb"), col("emb")))))
-    // qualifying source groups a for each incoming target group b
-    def qual(a: DataFrame): DataFrame = a.alias("a")
-      .join(gInc.alias("b"), col("a.cid") === col("b.cid") &&
-        col("a.scid") === col("b.scid"))
+      .withColumn("norm", sqrt(dot(col("emb"), col("emb"))))
+
+  /** The one pair prune of the SemDeDup family: exact pairwise cosine
+    * only WITHIN each cell of the membership frame, greedy
+    * keep-smallest-id. With `frozen` manifest groups (the gate), those
+    * rank AHEAD of every batch group: a qualifying manifest value drops
+    * the batch vector whatever the ids.
+    *
+    * Physical shape (the r12 multiplicity finding): the pair join runs
+    * over DISTINCT (cell, value) GROUPS ([[cellGroups]]), never over
+    * members. Member `b` is dropped iff some qualifying group ranks
+    * before it — a manifest group, or a batch group whose
+    * representative id < b's vec_id — where group A qualifies against
+    * b's group B when round(cos(A,B),6) ≥ threshold, INCLUDING A = B:
+    * the self-cosine rounds to exactly 1.0, so own-group qualification
+    * is precisely the `threshold ≤ 1` test and non-representative
+    * members drop exactly as the member-level rule dictates. An EXACT
+    * rewrite for every threshold — the DuckDB oracle verifies it
+    * unchanged — that makes pair work quadratic in DISTINCT values per
+    * cell instead of in members: dedup corpora are dup-heavy BY
+    * DEFINITION (the 1000× probe corpus, 2k distinct values × 1000
+    * copies, filled 80 GB of shuffle spill in the member form; the
+    * group form's pair frame is 2k rows). Both materializations of the
+    * gate route through [[Ckpt]], those of a whole-corpus run are local
+    * checkpoints. */
+  private def semDedupPrune(spec: SemDedupSpec, members0: DataFrame,
+      frozen: Option[DataFrame]): DataFrame = {
+    val place: DataFrame => DataFrame =
+      if (frozen.isEmpty) _.localCheckpoint() else Ckpt(_)
+    val keys = spec.cellKeys
+    // members feeds the group collapse and the final output —
+    // checkpoint so assignment runs once, not twice
+    val members = place(members0)
+    val groups = cellGroups(members, keys)
+    val batch = groups.withColumn("_batch", lit(true))
+    val sources = frozen.fold(batch)(f =>
+      f.withColumn("_batch", lit(false)).unionByName(batch))
+    // the first-ranked qualifying source group per target group b:
+    // manifest before batch, then by representative id
+    val first = sources.alias("a").join(groups.alias("b"),
+        keys.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _))
       .filter(round(dot(col("a.emb"), col("b.emb")) /
-        (col("a.norm") * col("b.norm")), 6) >= threshold)
-    // manifest side: EXISTENCE — any qualifying manifest value in the
-    // sub-cell drops every member of b's group (manifest ids are all
-    // "smaller" by contract: the manifest IS the kept corpus)
-    val manHit = qual(state.manGroups)
-      .groupBy(col("b.cid"), col("b.scid"), col("b.emb"))
-      .agg(lit(true).as("man_hit"))
-    // incoming side: min qualifying incoming representative (own
-    // group included — the threshold ≤ 1 test of [[semDedupPrune]])
-    val minInc = qual(gInc)
-      .groupBy(col("b.cid"), col("b.scid"), col("b.emb"))
-      .agg(min(col("a.rep_id")).as("min_rep"))
-    Ckpt(mInc
-      .join(manHit, Seq("cid", "scid", "emb"), "left")
-      .join(minInc, Seq("cid", "scid", "emb"), "left")
-      .select(col("vec_id"), col("cid"), col("scid"),
-        (!coalesce(col("man_hit"), lit(false)) &&
-         (col("min_rep").isNull || col("min_rep") >= col("vec_id")))
-          .as("kept")))
-    } finally {
-      // the batch-sized frame reclaimed on every exit path
-      inc.unpersist()
-    }
+        (col("a.norm") * col("b.norm")), 6) >= spec.threshold)
+      .groupBy(keys.map(k => col(s"b.$k")) :+ col("b.emb"): _*)
+      .agg(min(struct(col("a._batch"), col("a.rep_id"))).as("q"))
+    place(members.join(first, keys :+ "emb", "left")
+      .select(col("vec_id") +: keys.map(col) :+
+        (col("q").isNull ||
+          (col("q._batch") && col("q.rep_id") >= col("vec_id")))
+          .as("kept"): _*))
   }
 }

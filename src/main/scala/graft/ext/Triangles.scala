@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * than chained through a hub.
   *
   * Scale shape, outer layer — the value collapse (the
-  * [[Similarity]] semDedupPrune move applied to wedges): in a dup
+  * [[Similarity]] SemDeDup group collapse applied to wedges): in a dup
   * pair graph, k identical documents form a k-clique whose members
   * also share every external neighbor — k TRUE TWINS (identical
   * closed neighborhoods); k non-interacting duplicates pointing at

@@ -293,19 +293,6 @@ object Merge {
     others.unionByName(numbered)
   }
 
-  /** Production S3 sink: upsert a merge output into a JDBC target via
-    * the staging-table + server-side-merge pattern. Thin delegate to
-    * [[graft.sources.JdbcUpsertSink.upsert]] so the MERGE semantics
-    * and the wire path live behind one API; returns the generated
-    * server-side script. */
-  def writeJdbc(merged: DataFrame,
-      target: graft.sources.JdbcUpsertSink.JdbcTarget,
-      keys: Seq[String], batchId: Long = 0L,
-      dialect: String = "postgres",
-      runScript: Option[Seq[String] => Unit] = None): Seq[String] =
-    graft.sources.JdbcUpsertSink.upsert(
-      merged, target, keys, batchId, dialect, runScript)
-
   /** Fully distributed id assignment for *large* insert batches
     * (bulk backfill / first load), where [[assignIds]]'s
     * single-partition sort of the insert subset would itself be a

@@ -74,45 +74,62 @@ object QueryUtil {
        |    sqrt(list_dot_product(qv, qv)) AS qn FROM ${prefix}qz)
        |  WHERE qn > 0)""".stripMargin
 
-  /** The unrolled deterministic k-means fit of
-    * [[graft.ext.Similarity.kmeansCentroids]] over a base CTE `b`
-    * (vec_id, emb), k given as a SQL expression — a literal for the
-    * fixed-k entries, a scalar subquery for the k ∝ N shapes. Emits
-    * CTEs init → a1/c1 → … → a`iters`/c`iters` → members
-    * (vec_id, emb, cid). */
-  def kmUnrolledCoreSql(b: String, kExpr: String): String =
-    kmUnrolledCoreSplitSql(b, b, kExpr)
+  /** Nearest-centroid assignment CTE `out`: each row of `src` to its
+    * centroid in `cent` by rounded cosine, ties to the smaller id —
+    * [[graft.ext.Similarity.assignClusters]]' mirror. With a `key` the
+    * centroids are per-key sub-cells (`scid`) and a row ranks only its
+    * own key's. Emits (vec_id, [key,] emb, cid | scid). */
+  def kmAssignSql(src: String, cent: String, out: String,
+      key: Option[String] = None): String = {
+    val id = if (key.isDefined) "scid" else "cid"
+    val kc = key.fold("")(k => s"$k, ")
+    val from = key.fold(s"$src b CROSS JOIN $cent c")(k =>
+      s"$src b JOIN $cent c ON b.$k = c.$k")
+    s"""$out AS (SELECT vec_id, ${kc}emb, $id FROM (
+       |  SELECT b.vec_id, ${key.fold("")(k => s"b.$k, ")}b.emb, c.$id,
+       |    row_number() OVER (PARTITION BY b.vec_id
+       |      ORDER BY ${sqlCosine("b.emb", "c.centroid")} DESC, c.$id)
+       |      AS rn
+       |  FROM $from) WHERE rn = 1)""".stripMargin
+  }
 
-  /** [[kmUnrolledCoreSql]] with the FIT corpus split from the ASSIGN
-    * corpus — seeds and the Lloyd passes run over `fitB` while the
-    * final `members` assignment covers `assignB`: the oracle form of
-    * the `fitSampleMod` sampled-fit lever (`fitB` = the
-    * `vec_id % mod = 0` slice of `assignB`). */
-  def kmUnrolledCoreSplitSql(fitB: String, assignB: String,
-      kExpr: String, iters: Int = 2): String = {
-    def assignSql(src: String, cent: String, out: String): String =
-      s"""$out AS (SELECT vec_id, emb, cid FROM (
-         |  SELECT b.vec_id, b.emb, c.cid,
-         |    row_number() OVER (PARTITION BY b.vec_id
-         |      ORDER BY ${sqlCosine("b.emb", "c.centroid")} DESC, c.cid)
-         |      AS rn
-         |  FROM $src b CROSS JOIN $cent c) WHERE rn = 1)""".stripMargin
-    def updateSql(assigned: String, out: String): String =
-      s"""${out}d AS (SELECT cid, i,
-         |    ${sqlSumDec("emb[i]")}
-         |      / count(*) AS cv
-         |  FROM $assigned CROSS JOIN range(1, 65) t(i)
-         |  GROUP BY cid, i),
-         |$out AS (SELECT cid, list(cv ORDER BY i) AS centroid
-         |  FROM ${out}d GROUP BY cid)""".stripMargin
+  /** The unrolled deterministic k-means fit of
+    * [[graft.ext.Similarity]]'s one Lloyd loop: seeds are the `kExpr`
+    * smallest vec_ids of the fit corpus `fitB`, then `iters` rounds of
+    * [[kmAssignSql]] + exact decimal means, then the assignment of
+    * `assignB` as the CTE `out`. `kExpr` is a SQL expression — a
+    * literal, or a scalar subquery for the row-derived k rules. Fitting
+    * on a `vec_id % mod = 0` slice while assigning the whole corpus is
+    * the sampled-fit lever.
+    *
+    * Without a `key` this is the flat k-means (CTEs c0 … c`iters`,
+    * cell `cid`). With one, every seed, assignment and mean runs per
+    * key (CTEs sc0 … sc`iters`, sub-cell `scid`): keyed on `label` it
+    * is the two-level IVF grid's sub-cells, keyed on `cid` the
+    * hierarchical SemDeDup level 2. */
+  def kmUnrolledSql(fitB: String, assignB: String, kExpr: String,
+      iters: Int = 2, key: Option[String] = None, out: String = "members",
+      dim: Int = 64): String = {
+    val p = if (key.isDefined) "s" else ""
+    val id = if (key.isDefined) "scid" else "cid"
+    val kc = key.fold("")(k => s"$k, ")
+    def update(assigned: String, o: String): String =
+      s"""${o}d AS (SELECT $kc$id, i, ${sqlSumDec("emb[i]")} / count(*) AS cv
+         |  FROM $assigned CROSS JOIN range(1, ${dim + 1}) t(i)
+         |  GROUP BY $kc$id, i),
+         |$o AS (SELECT $kc$id, list(cv ORDER BY i) AS centroid
+         |  FROM ${o}d GROUP BY $kc$id)""".stripMargin
+    val seed =
+      s"""${p}c0 AS (SELECT ${kc}CAST(rn - 1 AS INT) AS $id, emb AS centroid
+         |  FROM (SELECT ${kc}emb, row_number() OVER (
+         |      ${key.fold("")(k => s"PARTITION BY $k ")}ORDER BY vec_id) AS rn
+         |    FROM $fitB) WHERE rn <= ($kExpr))""".stripMargin
     val rounds = (1 to iters).map { r =>
-      val from = if (r == 1) "init" else s"c${r - 1}"
-      s"${assignSql(fitB, from, s"a$r")},\n${updateSql(s"a$r", s"c$r")}"
+      s"${kmAssignSql(fitB, s"${p}c${r - 1}", s"${p}a$r", key)},\n" +
+        update(s"${p}a$r", s"${p}c$r")
     }
-    (s"""init AS (SELECT CAST(rn - 1 AS INT) AS cid, emb AS centroid
-        |  FROM (SELECT emb, row_number() OVER (ORDER BY vec_id) AS rn
-        |    FROM $fitB) WHERE rn <= ($kExpr))""".stripMargin +: rounds :+
-      assignSql(assignB, s"c$iters", "members")).mkString(",\n")
+    (seed +: rounds :+ kmAssignSql(assignB, s"${p}c$iters", out, key))
+      .mkString(",\n")
   }
 
   /** Recursive temp-layout reclamation — the ONE definition shared by

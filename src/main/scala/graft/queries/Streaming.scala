@@ -245,33 +245,27 @@ object Streaming {
     batchMod = Some(5))
 
   /** Batch core of the STREAMING semantic-dedup gate
-    * ([[graft.streaming.VectorStream.semGateBatch]]) — the
-    * [[stAnnGate]] sibling completing the manifest-gate trio's
-    * streaming story: gate state ([[graft.ext.Similarity
-    * .semDedupFit]] — TWO-LEVEL manifest centroids + group
-    * representatives since r14 (the hier fit composed into the refit
-    * leg; r13's flat k ∝ N_man fit was the family's measured wall),
-    * frozen between refits) is fitted on the `vec_id % 5 ≠ 0`
-    * manifest, and the incoming stream (`% 5 = 0`, the family's
-    * streaming split) is judged per micro-batch: drop iff
-    * ≥0.45-similar to any manifest group in the (cell, sub-cell) or
-    * to a smaller-id vector of the SAME batch. Stateless per BATCH (not
-    * per row — within-batch greedy couples rows sharing a
-    * micro-batch); VectorStreamSpec pins per-micro-batch parity and
-    * both sides of the cross-batch contract. Hash-verified via the
-    * shared split-fit oracle at this entry's own split
-    * ([[TrainingData.semdedupGateOracleSql]]). */
-  def stSemdedupGate(s: SparkSession, d: String): DataFrame = {
-    val e = Tables.embeddings(s, d)
-    val state = graft.ext.Similarity.semDedupFit(
-      e.filter(col("vec_id") % 5 =!= 0),
-      targetClusterSize = 64L, iters = 2)
-    graft.streaming.VectorStream.semGateBatch(state, threshold = 0.45,
-        e.filter(col("vec_id") % 5 === 0))
-      .orderBy("vec_id")
-  }
+    * ([[graft.ext.Similarity.semDedupGateBatch]] per micro-batch) —
+    * the [[stAnnGate]] sibling: the gate state
+    * ([[graft.ext.Similarity.semDedupFit]] — hierarchical manifest
+    * centroids + group representatives, frozen between refits) is
+    * fitted on the `vec_id % 5 ≠ 0` manifest, and the incoming stream
+    * (`% 5 = 0`, the st_ann_gate split) is judged per micro-batch:
+    * drop iff ≥0.45-similar to any manifest group in the (cell,
+    * sub-cell) or to a smaller-id vector of the SAME batch. Stateless
+    * per BATCH (not per row — within-batch greedy couples rows
+    * sharing a micro-batch); VectorStreamSpec pins per-micro-batch
+    * parity and both sides of the cross-batch contract. One SemDeDup
+    * catalog row, hash-verified by [[graft.ext.SemDedupSpec.oracleSql]]
+    * at this split. */
+  private val semGate = TrainingData.SemDedupEntry(graft.ext.SemDedupSpec(
+    graft.ext.SemDedupGrid.Hier(64), iters = 2, threshold = 0.45), Some(5))
 
-  private val stSemdedupGateSql = TrainingData.semdedupGateOracleSql(5)
+  def stSemdedupGate(s: SparkSession, d: String): DataFrame =
+    TrainingData.runSemDedup(semGate)(Tables.embeddings(s, d))
+
+  private val stSemdedupGateSql =
+    graft.ext.SemDedupSpec.oracleSql(semGate.spec, semGate.split)
 
   val queries: Map[String, Q] = Map(
     "st_ann_gate" -> (stAnnGate _),

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.ext.{AnnFilter, Coarse, Dedup, IvfCodes, IvfSpec, PqLayout,
-  PqSpec, Similarity, TextStats}
+  PqSpec, SemDedupGrid, SemDedupSpec, Similarity, TextStats}
 import QueryUtil._
 
 /** Training-data pipeline operators over `documents` / `embeddings`:
@@ -1346,13 +1346,6 @@ object TrainingData {
     }
   }
 
-  /** `base` (vec_id, emb) and the unrolled k-means fit over it —
-    * the SemDeDup oracles' shared prefix (CTEs `c2`, `members`). */
-  private def kmUnrolledSql(kClusters: Int): String =
-    s"""base AS (SELECT vec_id, embedding::DOUBLE[] AS emb
-       |  FROM embeddings WHERE embedding IS NOT NULL),
-       |${kmUnrolledCoreSql("base", kClusters.toString)}""".stripMargin
-
   /** One PQ catalog row: the [[PqSpec]] plus how the entry runs it.
     *
     *  - `trainOpq` — the OPQ rotation ([[graft.ext.Pca.opqRotation]],
@@ -1626,284 +1619,54 @@ object TrainingData {
        |SELECT query_id, neighbor_id, neg_label, cos_sim, rank
        |FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
 
-  /** Semantic deduplication (SemDeDup, Abbas et al. 2023): k-means
-    * clustering (same deterministic fit as `s_ann_ivf_kmeans`, shared
-    * oracle fragment) + exact within-cluster cosine pruning with a
-    * greedy keep-smallest-id rule. One row per vector: cluster id and
-    * whether the vector survives at threshold 0.45. The quadratic
-    * step is confined to clusters (Σ|cluster|²), so at corpus scale
-    * `kClusters` grows with N — see [[Similarity.semDedup]]. */
-  def dSemdedup(s: SparkSession, d: String): DataFrame =
-    Similarity.semDedup(embs(s, d), kClusters = 8, iters = 2,
-      threshold = 0.45)
-      .orderBy("vec_id")
+  /** One SemDeDup catalog row: the [[SemDedupSpec]], and for the
+    * ingest gate the `vec_id % n` split — the state is fitted on the
+    * rest (the manifest) and judges the multiples of n. */
+  private[queries] final case class SemDedupEntry(spec: SemDedupSpec,
+      split: Option[Int] = None)
 
-  private val dSemdedupSql =
-    s"""WITH ${kmUnrolledSql(8)},
-       |p AS (SELECT b.vec_id AS vid
-       |  FROM members a JOIN members b
-       |  ON a.cid = b.cid AND a.vec_id < b.vec_id
-       |  WHERE ${sqlCosine("a.emb", "b.emb")} >= 0.45),
-       |d AS (SELECT DISTINCT vid FROM p)
-       |SELECT m.vec_id, m.cid, (d.vid IS NULL) AS kept
-       |FROM members m LEFT JOIN d ON m.vec_id = d.vid
-       |ORDER BY vec_id""".stripMargin
-
-  /** [[dSemdedup]] in its SCALE-SAFE parameterization: the cluster
-    * count is derived from the corpus (k = ⌈n/64⌉, min 2) instead of
-    * fixed, which keeps mean cluster size — and therefore the
-    * within-cluster quadratic pair work Σ|c|² ≈ n·64 — LINEAR in the
-    * corpus. The 10× probe measured fixed-k at ~56× cost for 10× data
-    * vs ~linear for scaled-k (BASELINE.md); this entry ships that
-    * production recipe as a first-class catalog shape.
+  /** The SemDeDup family (Abbas et al. 2023) — one Spark implementation
+    * ([[Similarity.semDedup]], or [[Similarity.semDedupFit]] +
+    * [[Similarity.semDedupGateBatch]] for the gate) and one oracle
+    * generator ([[SemDedupSpec.oracleSql]]) serve every row, at
+    * threshold 0.45 with 2 Lloyd rounds:
     *
-    * Hash-verified since r9: the oracle derives the same
-    * k = max(2, ⌈n/64⌉) via an integer scalar subquery over count(*)
-    * (n counts the RAW frame, pre-null-filter — exactly what
-    * `semDedupAuto`'s `embeddings.count()` counts) and feeds it to
-    * the shared unrolled k-means fragment ([[kmUnrolledCoreSql]]),
-    * the same machinery that hash-verifies the k ∝ N ANN ingest
-    * gate. */
-  def dSemdedupAuto(s: SparkSession, d: String): DataFrame =
-    Similarity.semDedupAuto(embs(s, d), targetClusterSize = 64L,
+    *  - a fixed 8-cell grid, the k-means of `s_ann_ivf_kmeans`;
+    *  - the scale-safe k = max(2, ⌈n/64⌉) over the raw table, which
+    *    keeps mean cell size — and the within-cell pair work Σ|c|² ≈
+    *    n·64 — linear in the corpus (the 10× probe measured fixed k at
+    *    ~56× cost for 10× data, BASELINE.md), fitted on everything or
+    *    on the `vec_id % 4 = 0` sample;
+    *  - the hierarchical grid of two k = ⌈√⌈n/64⌉⌉ levels, full or
+    *    sampled fit;
+    *  - the ingest gate on that grid: fitted on `vec_id % 10 <> 0`,
+    *    judging the rest (`st_semdedup_gate` runs it at split 5). */
+  private val semDedupEntries: Seq[(String, SemDedupEntry)] = {
+    val auto = SemDedupSpec(SemDedupGrid.Flat(Coarse.PerRowsMin2(64)),
       iters = 2, threshold = 0.45)
-      .orderBy("vec_id")
-
-  private val dSemdedupAutoSql =
-    s"""WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS emb
-       |  FROM embeddings WHERE embedding IS NOT NULL),
-       |${kmUnrolledCoreSql("base",
-          "SELECT GREATEST(2, (count(*) + 63) // 64) FROM embeddings")},
-       |p AS (SELECT b.vec_id AS vid
-       |  FROM members a JOIN members b
-       |  ON a.cid = b.cid AND a.vec_id < b.vec_id
-       |  WHERE ${sqlCosine("a.emb", "b.emb")} >= 0.45),
-       |d AS (SELECT DISTINCT vid FROM p)
-       |SELECT m.vec_id, m.cid, (d.vid IS NULL) AS kept
-       |FROM members m LEFT JOIN d ON m.vec_id = d.vid
-       |ORDER BY vec_id""".stripMargin
-
-  /** [[dSemdedupAuto]] with the k-means trained on the deterministic
-    * `vec_id % 4 = 0` sample while the FULL corpus is still assigned
-    * and pair-pruned — the `fitSampleMod` production bound ported
-    * from the ANN family (`s_ann_ivf_pq_sampled`'s recipe; FAISS trains
-    * quantizers on a sample). With k ∝ N the FULL fit pays O(N²/64)
-    * per Lloyd pass — the measured assignment wall — and the sampled
-    * fit divides every fit pass by the modulus while dedup SEMANTICS
-    * are unchanged (clusters are only blocking structure; every
-    * vector still competes within its cell). Hash-verified: the
-    * oracle runs the same split — seeds + both Lloyd passes over the
-    * sample CTE, final membership over the full base
-    * ([[kmUnrolledCoreSplitSql]]). */
-  def dSemdedupSampled(s: SparkSession, d: String): DataFrame =
-    Similarity.semDedupAuto(embs(s, d), targetClusterSize = 64L,
-      iters = 2, threshold = 0.45, fitSampleMod = 4L)
-      .orderBy("vec_id")
-
-  private val dSemdedupSampledSql =
-    s"""WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS emb
-       |  FROM embeddings WHERE embedding IS NOT NULL),
-       |fitb AS (SELECT vec_id, emb FROM base WHERE vec_id % 4 = 0),
-       |${kmUnrolledCoreSplitSql("fitb", "base",
-          "SELECT GREATEST(2, (count(*) + 63) // 64) FROM embeddings")},
-       |p AS (SELECT b.vec_id AS vid
-       |  FROM members a JOIN members b
-       |  ON a.cid = b.cid AND a.vec_id < b.vec_id
-       |  WHERE ${sqlCosine("a.emb", "b.emb")} >= 0.45),
-       |d AS (SELECT DISTINCT vid FROM p)
-       |SELECT m.vec_id, m.cid, (d.vid IS NULL) AS kept
-       |FROM members m LEFT JOIN d ON m.vec_id = d.vid
-       |ORDER BY vec_id""".stripMargin
-
-  /** HIERARCHICAL SemDeDup ([[Similarity.semDedupHier]]) — the
-    * structural retirement of the flat k ∝ N assignment wall, the
-    * [[sAnnIvfTwoLevel]] argument applied to dedup blocking: level 1
-    * is a √-sized k-means (k₁ = ⌈√⌈N/64⌉⌉ clusters), level 2 an
-    * independent per-cluster k-means of k₂ = k₁ sub-clusters, so the
-    * k₁·k₂ ≥ N/64 cells keep mean cell size ≤ ~64 (pair work stays
-    * linear) while every assignment pass costs N·(k₁+k₂) =
-    * O(N^1.5/8) candidate evaluations instead of the flat grid's
-    * O(N²/64) — at 2M vectors, ~7×10⁸ vs 6×10¹⁰. Same dedup
-    * semantics: exact within-cell cosine, greedy keep-smallest-id.
-    * The oracle derives k via one scalar subquery (integer-exact:
-    * /64 is a binary shift, IEEE sqrt/ceil are correctly rounded —
-    * engine-portable), unrolls the level-1 fit with the shared
-    * fragment and the level-2 fit with `cid` added to every GROUP BY
-    * / PARTITION BY — the `s_ann_ivf_two_level` pattern with a
-    * derived grid. */
-  def dSemdedupHier(s: SparkSession, d: String): DataFrame =
-    Similarity.semDedupHier(embs(s, d), targetCellSize = 64L,
-      iters = 2, threshold = 0.45)
-      .orderBy("vec_id")
-
-  /** [[dSemdedupHier]] at the PRODUCTION fit bound (`fitSampleMod =
-    * 4`) — both k-means levels trained on deterministic samples
-    * (level 1 on the `vec_id % 4 = 0` corpus slice, level 2 per cell
-    * on its sampled members plus the cell's min-id fallback row that
-    * keeps sample-free cells seeded), full-corpus assignments and the
-    * pair prune unchanged. The grid k still derives from the FULL
-    * count (the cell layout is a corpus property). Hash-verified via
-    * [[dSemdedupHierSqlWith]]'s split fit CTEs. */
-  def dSemdedupHierSampled(s: SparkSession, d: String): DataFrame =
-    Similarity.semDedupHier(embs(s, d), targetCellSize = 64L,
-      iters = 2, threshold = 0.45, fitSampleMod = 4L)
-      .orderBy("vec_id")
-
-  private val dSemdedupHierSql = dSemdedupHierSqlWith(None)
-  private val dSemdedupHierSampledSql = dSemdedupHierSqlWith(Some(4))
-
-  /** Level-2 (per-cell) assignment CTE of the hier SemDeDup oracles —
-    * rank sub-centroids within the row's own `cid` by rounded cosine,
-    * smallest scid on ties (the [[Similarity]] assignSubClusters
-    * rule). Shared by `d_semdedup_hier(_sampled)` and the two-level
-    * ingest-gate oracle so the fragments can never drift. */
-  private def hierAssign2Sql(src: String, cent: String,
-      out: String): String =
-    s"""$out AS (SELECT vec_id, cid, emb, scid FROM (
-       |  SELECT b.vec_id, b.cid, b.emb, c.scid,
-       |    row_number() OVER (PARTITION BY b.vec_id
-       |      ORDER BY ${sqlCosine("b.emb", "c.centroid")} DESC, c.scid)
-       |      AS srn
-       |  FROM $src b JOIN $cent c ON b.cid = c.cid) WHERE srn = 1)"""
-      .stripMargin
-
-  /** Level-2 Lloyd update CTE (per-(cid, scid) decimal-sum means). */
-  private def hierUpdate2Sql(assigned: String, out: String): String =
-    s"""${out}d AS (SELECT cid, scid, i,
-       |    CAST(sum(CAST(emb[i] AS DECIMAL(18,6))) AS DOUBLE)
-       |      / count(*) AS cv
-       |  FROM $assigned CROSS JOIN range(1, 65) t(i)
-       |  GROUP BY cid, scid, i),
-       |$out AS (SELECT cid, scid, list(cv ORDER BY i) AS centroid
-       |  FROM ${out}d GROUP BY cid, scid)""".stripMargin
-
-  private def dSemdedupHierSqlWith(mod: Option[Int]): String = {
-    def assign2(src: String, cent: String, out: String): String =
-      hierAssign2Sql(src, cent, out)
-    def update2(assigned: String, out: String): String =
-      hierUpdate2Sql(assigned, out)
-    // fit CTEs: full form fits both levels on the whole corpus; the
-    // sampled form fits level 1 on the mod-slice (fitb) and level 2
-    // per cell on sampled members + the cell's min-id fallback (fmem)
-    val fit1 = mod.map(n =>
-      s"""fitb AS (SELECT vec_id, emb FROM base WHERE vec_id % $n = 0),
-         |${kmUnrolledCoreSplitSql("fitb", "base", "SELECT k FROM kk")}"""
-        .stripMargin)
-      .getOrElse(kmUnrolledCoreSql("base", "SELECT k FROM kk"))
-    val fit2Src = mod.map { n =>
-      s"""mn AS (SELECT cid, min(vec_id) AS mn FROM members
-         |  GROUP BY cid),
-         |fmem AS (SELECT m.vec_id, m.cid, m.emb FROM members m
-         |  JOIN mn ON m.cid = mn.cid
-         |  WHERE m.vec_id % $n = 0 OR m.vec_id = mn.mn),
-         |""".stripMargin
-    }.getOrElse("")
-    val f2 = if (mod.isDefined) "fmem" else "members"
-    s"""WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS emb
-       |  FROM embeddings WHERE embedding IS NOT NULL),
-       |kk AS (SELECT GREATEST(2,
-       |    CAST(ceil(sqrt(ceil(count(*) / 64.0))) AS INT)) AS k
-       |  FROM base),
-       |$fit1,
-       |${fit2Src}init2 AS (SELECT cid, CAST(rn - 1 AS INT) AS scid,
-       |    emb AS centroid
-       |  FROM (SELECT cid, emb, row_number() OVER (
-       |      PARTITION BY cid ORDER BY vec_id) AS rn FROM $f2)
-       |  WHERE rn <= (SELECT k FROM kk)),
-       |${assign2(f2, "init2", "sb1")},
-       |${update2("sb1", "sd1")},
-       |${assign2(f2, "sd1", "sb2")},
-       |${update2("sb2", "sd2")},
-       |${assign2("members", "sd2", "cells")},
-       |p AS (SELECT b.vec_id AS vid
-       |  FROM cells a JOIN cells b
-       |  ON a.cid = b.cid AND a.scid = b.scid AND a.vec_id < b.vec_id
-       |  WHERE ${sqlCosine("a.emb", "b.emb")} >= 0.45),
-       |dr AS (SELECT DISTINCT vid FROM p)
-       |SELECT m.vec_id, m.cid, m.scid, (dr.vid IS NULL) AS kept
-       |FROM cells m LEFT JOIN dr ON m.vec_id = dr.vid
-       |ORDER BY vec_id""".stripMargin
+    val hier = auto.copy(grid = SemDedupGrid.Hier(64))
+    Seq(
+      "d_semdedup" -> SemDedupEntry(
+        auto.copy(grid = SemDedupGrid.Flat(Coarse.Fixed(8)))),
+      "d_semdedup_auto" -> SemDedupEntry(auto),
+      "d_semdedup_sampled" -> SemDedupEntry(auto.copy(fitSampleMod = 4)),
+      "d_semdedup_hier" -> SemDedupEntry(hier),
+      "d_semdedup_hier_sampled" -> SemDedupEntry(hier.copy(fitSampleMod = 4)),
+      "d_semdedup_incremental" -> SemDedupEntry(hier, Some(10)))
   }
 
-  /** INCREMENTAL SemDeDup ([[Similarity.semDedupIncremental]]) — the
-    * ingest gate of the semantic-dedup family, completing the
-    * manifest-gate trio (MinHash `d_incremental_minhash`, ANN
-    * `s_ann_incremental`): the cluster structure is fitted on the
-    * MANIFEST only with the HIERARCHICAL two-level grid (k₁ = k₂ =
-    * ⌈√⌈N_man/64⌉⌉ — r14; the r13 flat k ∝ N_man fit was the
-    * family's measured refit wall), each incoming vector (`vec_id %
-    * 10 = 0`, the family's batch split) is assigned to its manifest
-    * (cell, sub-cell) and dropped iff ≥0.45-similar to any manifest
-    * vector there or to a smaller-id batch vector (one-pass greedy,
-    * so an internally duplicated batch keeps exactly its smallest
-    * id). Per-batch work is bounded by the batch — |B|·2k₁
-    * assignment + within-sub-cell pairs against ~64 manifest vectors
-    * per sub-cell, never corpus × corpus. Hash-verified: the oracle
-    * fits level 1 on the manifest CTE ([[kmUnrolledCoreSplitSql]]),
-    * unrolls the per-cell level-2 fit over manifest members
-    * ([[hierAssign2Sql]]/[[hierUpdate2Sql]] — the d_semdedup_hier
-    * fragments), assigns the batch over OCCUPIED cells only (the
-    * engine's restricted assignment), then applies the same
-    * asymmetric pair rule on (cid, scid) with modulus predicates. */
-  def dSemdedupIncremental(s: SparkSession, d: String): DataFrame = {
-    val e = embs(s, d)
-    Similarity.semDedupIncremental(
-        e.filter(col("vec_id") % 10 =!= 0),
-        e.filter(col("vec_id") % 10 === 0),
-        targetClusterSize = 64L, iters = 2, threshold = 0.45)
-      .orderBy("vec_id")
+  /** Run `entry` on the embeddings frame `e`, ordered by vec_id. */
+  private[queries] def runSemDedup(entry: SemDedupEntry)(e: DataFrame)
+      : DataFrame = {
+    val spec = entry.spec
+    (entry.split match {
+      case None => Similarity.semDedup(spec, e)
+      case Some(n) =>
+        Similarity.semDedupGateBatch(spec,
+          Similarity.semDedupFit(spec, e.filter(col("vec_id") % n =!= 0)),
+          e.filter(col("vec_id") % n === 0))
+    }).orderBy("vec_id")
   }
-
-  /** Oracle for the semantic ingest gate at a `vec_id % splitMod`
-    * manifest/batch split — shared by `d_semdedup_incremental`
-    * (mod 10) and the streaming `st_semdedup_gate` (mod 5, the
-    * st_ann_gate split), so the batch core and the streaming entry
-    * can never drift. */
-  def semdedupGateOracleSql(splitMod: Int): String =
-    s"""WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS emb
-       |  FROM embeddings WHERE embedding IS NOT NULL),
-       |man AS (SELECT vec_id, emb FROM base
-       |  WHERE vec_id % $splitMod <> 0),
-       |bat AS (SELECT vec_id, emb FROM base
-       |  WHERE vec_id % $splitMod = 0),
-       |kk AS (SELECT GREATEST(2,
-       |    CAST(ceil(sqrt(ceil(count(*) / 64.0))) AS INT)) AS k
-       |  FROM man),
-       |${kmUnrolledCoreSplitSql("man", "man", "SELECT k FROM kk")},
-       |occ AS (SELECT DISTINCT cid FROM members),
-       |c2o AS (SELECT c.cid, c.centroid FROM c2 c
-       |  JOIN occ o ON c.cid = o.cid),
-       |bm AS (SELECT vec_id, emb, cid FROM (
-       |  SELECT b.vec_id, b.emb, c.cid,
-       |    row_number() OVER (PARTITION BY b.vec_id
-       |      ORDER BY ${sqlCosine("b.emb", "c.centroid")} DESC, c.cid)
-       |      AS rn
-       |  FROM bat b CROSS JOIN c2o c) WHERE rn = 1),
-       |init2 AS (SELECT cid, CAST(rn - 1 AS INT) AS scid,
-       |    emb AS centroid
-       |  FROM (SELECT cid, emb, row_number() OVER (
-       |      PARTITION BY cid ORDER BY vec_id) AS rn FROM members)
-       |  WHERE rn <= (SELECT k FROM kk)),
-       |${hierAssign2Sql("members", "init2", "sb1")},
-       |${hierUpdate2Sql("sb1", "sd1")},
-       |${hierAssign2Sql("members", "sd1", "sb2")},
-       |${hierUpdate2Sql("sb2", "sd2")},
-       |allm AS (SELECT vec_id, cid, emb FROM members
-       |  UNION ALL SELECT vec_id, cid, emb FROM bm),
-       |${hierAssign2Sql("allm", "sd2", "cells")},
-       |p AS (SELECT b.vec_id AS vid
-       |  FROM cells a JOIN cells b
-       |  ON a.cid = b.cid AND a.scid = b.scid
-       |  WHERE b.vec_id % $splitMod = 0
-       |    AND (a.vec_id % $splitMod <> 0 OR a.vec_id < b.vec_id)
-       |    AND ${sqlCosine("a.emb", "b.emb")} >= 0.45),
-       |dr AS (SELECT DISTINCT vid FROM p)
-       |SELECT m.vec_id, m.cid, m.scid, (dr.vid IS NULL) AS kept
-       |FROM cells m LEFT JOIN dr ON m.vec_id = dr.vid
-       |WHERE m.vec_id % $splitMod = 0
-       |ORDER BY vec_id""".stripMargin
-
-  private val dSemdedupIncrementalSql = semdedupGateOracleSql(10)
 
   /** Embedding-cosine near-dup pairs (the vector-space dedup variant):
     * multi-table hyperplane LSH blocking + exact cosine verification.
@@ -4779,12 +4542,6 @@ object TrainingData {
     "d_embed_abtt" -> (dEmbedAbtt _),
     "d_embed_pca2" -> (dEmbedPca2 _),
     "d_dsir" -> (dDsir _),
-    "d_semdedup" -> (dSemdedup _),
-    "d_semdedup_auto" -> (dSemdedupAuto _),
-    "d_semdedup_sampled" -> (dSemdedupSampled _),
-    "d_semdedup_hier" -> (dSemdedupHier _),
-    "d_semdedup_hier_sampled" -> (dSemdedupHierSampled _),
-    "d_semdedup_incremental" -> (dSemdedupIncremental _),
     "d_chunk_dedup" -> (dChunkDedup _),
     "d_kl_sources" -> (dKlSources _),
     "s_ann_recall" -> (sAnnRecall _),
@@ -4801,7 +4558,10 @@ object TrainingData {
     "m_resize" -> (mResize _),
     "m_phash_dups" -> (mPhashDups _),
   ) ++ pqEntries.map { case (n, e) => n -> (runPq(n, e) _) } ++
-    ivfEntries.map { case (n, e) => n -> (runIvf(e) _) }
+    ivfEntries.map { case (n, e) => n -> (runIvf(e) _) } ++
+    semDedupEntries.map { case (n, e) =>
+      n -> ((s: SparkSession, d: String) => runSemDedup(e)(embs(s, d)))
+    }
 
   val oracle: Map[String, String] = Map(
     "d_dedup_exact" -> dDedupExactSql,
@@ -4868,12 +4628,6 @@ object TrainingData {
     "d_embed_abtt" -> graft.ext.Pca.allButTopSql(),
     "d_embed_pca2" -> graft.ext.Pca.topComponents2Sql(),
     "d_dsir" -> dDsirSql,
-    "d_semdedup" -> dSemdedupSql,
-    "d_semdedup_auto" -> dSemdedupAutoSql,
-    "d_semdedup_sampled" -> dSemdedupSampledSql,
-    "d_semdedup_hier" -> dSemdedupHierSql,
-    "d_semdedup_hier_sampled" -> dSemdedupHierSampledSql,
-    "d_semdedup_incremental" -> dSemdedupIncrementalSql,
     "d_chunk_dedup" -> dChunkDedupSql,
     "d_kl_sources" -> dKlSourcesSql,
     "s_ann_recall" -> sAnnRecallSql,
@@ -4906,5 +4660,7 @@ object TrainingData {
       fitWhere = e.appendMod.map(m => s"vec_id % $m <> 0"))
   } ++ ivfEntries.map { case (n, e) =>
     n -> IvfSpec.oracleSql(e.spec, e.k, e.gateMod)
+  } ++ semDedupEntries.map { case (n, e) =>
+    n -> SemDedupSpec.oracleSql(e.spec, e.split)
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
-import graft.ext.{IvfSpec, Similarity}
+import graft.ext.{IvfSpec, SemDedupSpec, Similarity}
 
 /** Structured Streaming surface for the ANN ingest gate — the
   * stream-side composition of the vector family with §2.10's
@@ -102,25 +102,17 @@ object VectorStream {
       }
       .start()
 
-  /** The per-micro-batch SEMANTIC dedup gate body — the
-    * [[Similarity.SemDedupState]] sibling of [[gateBatch]], completing
-    * the manifest-gate trio's streaming story (MinHash and ANN gates
-    * came first): each arriving vector is kept/dropped against the
-    * FROZEN manifest state plus this batch's own smaller ids. Unlike
-    * the ANN gate the body is stateless per BATCH, not per row
-    * (within-batch greedy couples rows that share a micro-batch);
-    * the cross-batch contract is the family's: the manifest does not
+  /** [[ingestGateStream]] for the semantic gate: per-file micro-
+    * batches through [[Similarity.semDedupGateBatch]] against the
+    * frozen state — each arriving vector is kept/dropped against the
+    * manifest plus this batch's own smaller ids. Unlike the ANN gate
+    * the body is stateless per BATCH, not per row (within-batch greedy
+    * couples rows that share a micro-batch); the manifest does not
     * grow between refits, so dups split across micro-batches are both
     * kept until the next refit folds accepted rows in —
     * VectorStreamSpec pins both sides of that contract. */
-  def semGateBatch(state: Similarity.SemDedupState, threshold: Double,
-      incoming: DataFrame): DataFrame =
-    Similarity.semDedupGateBatch(state, incoming, threshold)
-
-  /** [[ingestGateStream]] for the semantic gate: per-file micro-
-    * batches through [[semGateBatch]] against the frozen state. */
   def ingestSemGateStream(spark: SparkSession, srcDir: String,
-      state: Similarity.SemDedupState, threshold: Double,
+      spec: SemDedupSpec, state: Similarity.SemDedupState,
       checkpointDir: String)(
       onBatch: (DataFrame, Long) => Unit): StreamingQuery =
     spark.readStream
@@ -131,7 +123,7 @@ object VectorStream {
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (b: DataFrame, epoch: Long) =>
-        onBatch(semGateBatch(state, threshold, b), epoch)
+        onBatch(Similarity.semDedupGateBatch(spec, state, b), epoch)
       }
       .start()
 }

@@ -97,9 +97,11 @@ class CkptSpec extends SparkSpec {
       .toDF("vec_id", "embedding")
     val man = embs.filter($"vec_id" % 5 =!= 0)
     val inc = embs.filter($"vec_id" % 5 === 0)
+    val spec = SemDedupSpec(SemDedupGrid.Hier(8L), iters = 2,
+      threshold = 0.8, dim = 8)
     def run(): Seq[Seq[Any]] =
-      Similarity.semDedupIncremental(man, inc,
-          targetClusterSize = 8L, iters = 2, threshold = 0.8, dim = 8)
+      Similarity.semDedupGateBatch(spec, Similarity.semDedupFit(spec, man),
+          inc)
         .orderBy("vec_id").collect().map(_.toSeq).toSeq
     val local = run()
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_hier")

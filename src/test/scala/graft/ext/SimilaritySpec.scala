@@ -29,6 +29,16 @@ class SimilaritySpec extends SparkSpec {
       batch: org.apache.spark.sql.DataFrame, k: Int) =
     Similarity.ivfProbe(spec, Similarity.ivfBuild(spec, manifest), batch, k)
 
+  // the SemDeDup grids, and the ingest gate: fit on the manifest, judge
+  // the batch
+  import Coarse.{Fixed, PerRowsMin2}
+  import SemDedupGrid.{Flat, Hier}
+  private def semGate(spec: SemDedupSpec,
+      manifest: org.apache.spark.sql.DataFrame,
+      batch: org.apache.spark.sql.DataFrame) =
+    Similarity.semDedupGateBatch(spec,
+      Similarity.semDedupFit(spec, manifest), batch)
+
   test("brute-force top-k ranks an identical vector first") {
     val vecs = Seq(
       (0L, Seq(1.0f, 0.0f, 0.0f)),
@@ -350,8 +360,8 @@ class SimilaritySpec extends SparkSpec {
       (3L, v(0, 0.9)), // same half-space, far from 0/1/2
       (10L, v(32, 0.0)), (11L, v(32, 0.001)), (12L, v(32, 0.9)))
       .toDF("vec_id", "embedding")
-    val rows = Similarity.semDedup(vecs, kClusters = 2, iters = 2,
-      threshold = 0.999)
+    val rows = Similarity.semDedup(SemDedupSpec(Flat(Fixed(2)),
+        iters = 2, threshold = 0.999), vecs)
       .select("vec_id", "kept").as[(Long, Boolean)].collect()
     // length BEFORE toMap — a duplicate-row regression (join fan-out,
     // lost distinct) would survive a size check on the deduped Map
@@ -364,11 +374,11 @@ class SimilaritySpec extends SparkSpec {
     assert(got(3L) && got(12L))
     // the auto-sized variant (k = ceil(n / targetClusterSize); here
     // ceil(7/4) = 2) must reproduce the explicit k=2 result exactly
-    val auto = Similarity.semDedupAuto(vecs, targetClusterSize = 4,
-      iters = 2, threshold = 0.999)
+    val auto = Similarity.semDedup(SemDedupSpec(Flat(PerRowsMin2(4)),
+        iters = 2, threshold = 0.999), vecs)
       .select("vec_id", "cid", "kept")
-    val explicit = Similarity.semDedup(vecs, kClusters = 2, iters = 2,
-      threshold = 0.999).select("vec_id", "cid", "kept")
+    val explicit = Similarity.semDedup(SemDedupSpec(Flat(Fixed(2)),
+      iters = 2, threshold = 0.999), vecs).select("vec_id", "cid", "kept")
     assert(auto.exceptAll(explicit).isEmpty &&
       explicit.exceptAll(auto).isEmpty)
   }
@@ -387,8 +397,9 @@ class SimilaritySpec extends SparkSpec {
       (3L, v(0, 0.9)),
       (10L, v(32, 0.0)), (11L, v(32, 0.0)), (12L, v(32, 0.9)))
       .toDF("vec_id", "embedding")
-    val rows = Similarity.semDedupAuto(vecs, targetClusterSize = 4,
-        iters = 2, threshold = 0.999, fitSampleMod = 2L)
+    val auto = SemDedupSpec(Flat(PerRowsMin2(4)), iters = 2,
+      threshold = 0.999)
+    val rows = Similarity.semDedup(auto.copy(fitSampleMod = 2L), vecs)
       .select("vec_id", "kept").as[(Long, Boolean)].collect()
     assert(rows.length == 7, "one row per input vector")
     val got = rows.toMap
@@ -396,10 +407,8 @@ class SimilaritySpec extends SparkSpec {
     assert(got(10L) && !got(11L))
     assert(got(3L) && got(12L), "distinct vectors survive")
     // mod=1 IS the full fit — frame equality with the unsampled form
-    val m1 = Similarity.semDedupAuto(vecs, targetClusterSize = 4,
-      iters = 2, threshold = 0.999, fitSampleMod = 1L)
-    val full = Similarity.semDedupAuto(vecs, targetClusterSize = 4,
-      iters = 2, threshold = 0.999)
+    val m1 = Similarity.semDedup(auto.copy(fitSampleMod = 1L), vecs)
+    val full = Similarity.semDedup(auto, vecs)
     assert(m1.exceptAll(full).isEmpty && full.exceptAll(m1).isEmpty)
   }
 
@@ -414,8 +423,8 @@ class SimilaritySpec extends SparkSpec {
       (3L, v(0, 0.9)),
       (10L, v(32, 0.0)), (11L, v(32, 0.0)), (12L, v(32, 0.9)))
       .toDF("vec_id", "embedding")
-    val out = Similarity.semDedupHier(vecs, targetCellSize = 2L,
-      iters = 2, threshold = 0.999)
+    val hier = SemDedupSpec(Hier(2L), iters = 2, threshold = 0.999)
+    val out = Similarity.semDedup(hier, vecs)
     val rows = out.select("vec_id", "kept")
       .as[(Long, Boolean)].collect()
     assert(rows.length == 7, "one row per input vector")
@@ -429,8 +438,7 @@ class SimilaritySpec extends SparkSpec {
     assert(out.columns.toSeq == Seq("vec_id", "cid", "scid", "kept"))
     assert(out.select("vec_id").distinct().count() == 7)
     // threshold above 1 can drop nothing: blocking alone never dedups
-    val all = Similarity.semDedupHier(vecs, targetCellSize = 2L,
-      iters = 2, threshold = 1.1)
+    val all = Similarity.semDedup(hier.copy(threshold = 1.1), vecs)
     assert(all.filter(!col("kept")).isEmpty)
   }
 
@@ -449,8 +457,8 @@ class SimilaritySpec extends SparkSpec {
       (3L, v(0, 0.9)),
       (11L, v(32, 0.0)), (13L, v(32, 0.0)), (15L, v(32, 0.9)))
       .toDF("vec_id", "embedding")
-    val rows = Similarity.semDedupHier(vecs, targetCellSize = 2L,
-        iters = 2, threshold = 0.999, fitSampleMod = 2L)
+    val hier = SemDedupSpec(Hier(2L), iters = 2, threshold = 0.999)
+    val rows = Similarity.semDedup(hier.copy(fitSampleMod = 2L), vecs)
       .select("vec_id", "kept").as[(Long, Boolean)].collect()
     assert(rows.length == 7, "one row per input vector — a sample-" +
       "free cell must not drop its members")
@@ -459,10 +467,8 @@ class SimilaritySpec extends SparkSpec {
     assert(got(11L) && !got(13L))
     assert(got(3L) && got(15L), "distinct vectors survive")
     // mod=1 IS the full fit — frame equality with the unsampled form
-    val m1 = Similarity.semDedupHier(vecs, targetCellSize = 2L,
-      iters = 2, threshold = 0.999, fitSampleMod = 1L)
-    val full = Similarity.semDedupHier(vecs, targetCellSize = 2L,
-      iters = 2, threshold = 0.999)
+    val m1 = Similarity.semDedup(hier.copy(fitSampleMod = 1L), vecs)
+    val full = Similarity.semDedup(hier, vecs)
     assert(m1.exceptAll(full).isEmpty && full.exceptAll(m1).isEmpty)
   }
 
@@ -481,8 +487,8 @@ class SimilaritySpec extends SparkSpec {
       (12L, v(16, 0.0)),  // batch-internal dup of 11 → dropped
       (13L, v(32, 0.9)))  // same cell region as 2 but distinct → kept
       .toDF("vec_id", "embedding")
-    val out = Similarity.semDedupIncremental(manifest, batch,
-      targetClusterSize = 2L, iters = 2, threshold = 0.999)
+    val spec = SemDedupSpec(Hier(2L), iters = 2, threshold = 0.999)
+    val out = semGate(spec, manifest, batch)
     val rows = out.select("vec_id", "kept")
       .as[(Long, Boolean)].collect()
     assert(rows.length == 4, "one row per INCOMING vector only")
@@ -496,10 +502,9 @@ class SimilaritySpec extends SparkSpec {
     // the gate is one-pass greedy like the family: order of batch ids
     // decides the survivor, so an identical pair reversed keeps the
     // (new) smaller id
-    val rev = Similarity.semDedupIncremental(manifest,
+    val rev = semGate(spec, manifest,
       Seq((20L, v(16, 0.0)), (19L, v(16, 0.0)))
-        .toDF("vec_id", "embedding"),
-      targetClusterSize = 2L, iters = 2, threshold = 0.999)
+        .toDF("vec_id", "embedding"))
       .select("vec_id", "kept").as[(Long, Boolean)].collect().toMap
     assert(rev(19L) && !rev(20L))
   }
@@ -513,8 +518,8 @@ class SimilaritySpec extends SparkSpec {
       (2L, None), // NULL embedding
       (3L, Some(v(1, 1.0))), (4L, Some(v(2, 1.0))))
       .toDF("vec_id", "embedding")
-    val sd = Similarity.semDedup(vecs, kClusters = 2, iters = 1,
-      threshold = 0.9, dim = 3)
+    val sd = Similarity.semDedup(SemDedupSpec(Flat(Fixed(2)), iters = 1,
+      threshold = 0.9, dim = 3), vecs)
     assert(sd.count() == 4, "NULL vector contributes no output row")
     assert(sd.filter(col("vec_id") === 2L).isEmpty)
     val ivf = Similarity.ivfSearch(IvfSpec(Coarse.Kmeans(Coarse.Fixed(2),
@@ -1537,8 +1542,8 @@ class SimilaritySpec extends SparkSpec {
     val expected = Map(10L -> false, 11L -> false, 21L -> false,
       30L -> true, 31L -> false, 32L -> false, 40L -> true,
       50L -> true, 51L -> false)
-    val out = Similarity.semDedupIncremental(manifest, batch,
-      targetClusterSize = 2L, iters = 2, threshold = 0.9)
+    val spec = SemDedupSpec(Hier(2L), iters = 2, threshold = 0.9)
+    val out = semGate(spec, manifest, batch)
     assert(out.columns.toSeq == Seq("vec_id", "cid", "scid", "kept"))
     val got = out.select("vec_id", "kept")
       .as[(Long, Boolean)].collect()
@@ -1550,10 +1555,94 @@ class SimilaritySpec extends SparkSpec {
     // their cells carry no manifest structure — the restricted
     // level-1 assignment is what kept them judged above. The sampled
     // fit may re-shape cells but never verdicts on this corpus.
-    val sampled = Similarity.semDedupIncremental(manifest, batch,
-      targetClusterSize = 2L, iters = 2, threshold = 0.9,
-      fitSampleMod = 4L)
+    val sampled = semGate(spec.copy(fitSampleMod = 4L), manifest, batch)
       .select("vec_id", "kept").as[(Long, Boolean)].collect().toMap
     assert(sampled == expected)
+  }
+
+  test("SemDeDup invariant on every catalog spec shape: a row is kept " +
+      "iff no smaller-id vector of its cell (or, at the gate, no " +
+      "manifest vector of its cell) is threshold-similar; the k rules " +
+      "count the frames they name, NULL row included") {
+    // a ring of 36 vectors 10° apart (neighbours at cos 0.985, two
+    // apart at 0.940 — far from the threshold either way, so the
+    // rounding cannot decide a case), exact duplicates of four ring
+    // points, and one NULL embedding: 41 rows, 40 of them vectors
+    val thr = 0.95
+    def ring(deg: Int): Seq[Float] =
+      Seq(math.cos(deg.toRadians).toFloat, math.sin(deg.toRadians).toFloat) ++
+        Seq.fill(6)(0.0f)
+    val fixture: Seq[(Long, Option[Seq[Float]])] =
+      (1 to 36).map(i => (i.toLong, Some(ring((i - 1) * 10)))) ++
+        Seq(5, 14, 23, 32).zipWithIndex.map { case (src, j) =>
+          ((37 + j).toLong, Some(ring((src - 1) * 10)))
+        } :+ ((41L, None))
+    val df = fixture.toDF("vec_id", "embedding")
+    val emb = fixture.collect { case (id, Some(v)) =>
+      id -> v.map(_.toDouble)
+    }.toMap
+    def dotD(a: Seq[Double], b: Seq[Double]) =
+      a.zip(b).foldLeft(0.0) { case (acc, (x, y)) => acc + x * y }
+    def similar(a: Seq[Double], b: Seq[Double]): Boolean =
+      BigDecimal(dotD(a, b) / (math.sqrt(dotD(a, a)) * math.sqrt(dotD(b, b))))
+        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble >= thr
+    val flat = SemDedupSpec(Flat(Fixed(3)), iters = 2, threshold = thr,
+      dim = 8)
+    val gateSplit = 5
+    // (shape, spec, gate, the k its grid derives): per-rows counts the
+    // 41 raw rows (⌈41/8⌉ = 6, not 5); hier counts the 40 vectors
+    // (⌈√⌈40/10⌉⌉ = 2, not 3), the gate the 32 manifest vectors
+    // (⌈√⌈32/8⌉⌉ = 2, not ⌈√⌈33/8⌉⌉ = 3)
+    val shapes = Seq(
+      ("flat fixed", flat, false, 3),
+      ("flat per-rows", flat.copy(grid = Flat(PerRowsMin2(8))), false, 6),
+      ("flat sampled", flat.copy(grid = Flat(PerRowsMin2(8)),
+        fitSampleMod = 2L), false, 6),
+      ("hier", flat.copy(grid = Hier(10)), false, 2),
+      ("hier sampled", flat.copy(grid = Hier(10), fitSampleMod = 2L),
+        false, 2),
+      ("gate", flat.copy(grid = Hier(8)), true, 2))
+    for ((shape, spec, gate, k) <- shapes) {
+      val keys = spec.cellKeys
+      val manifest = df.filter(col("vec_id") % gateSplit =!= 0)
+      // with no Lloyd round the cells are the k seeds, distinct vectors
+      // that each join their own cell
+      val seeded = spec.copy(iters = 0)
+      assert((if (gate) Similarity.semDedupFit(seeded, manifest).centroids1
+        else Similarity.semDedup(seeded, df).select("cid").distinct())
+        .count() == k, s"$shape: derived k")
+      val (out, frozen) =
+        if (!gate) (Similarity.semDedup(spec, df), Seq.empty)
+        else {
+          val state = Similarity.semDedupFit(spec, manifest)
+          (Similarity.semDedupGateBatch(spec, state,
+              df.filter(col("vec_id") % gateSplit === 0)),
+            state.manGroups.select((keys :+ "emb").map(col): _*).collect()
+              .map(r => (keys.indices.map(r.getInt),
+                r.getSeq[Double](keys.size))).toSeq)
+        }
+      assert(out.columns.toSeq == ("vec_id" +: keys :+ "kept"), shape)
+      val rows = out.collect().map(r =>
+        (r.getLong(0), keys.indices.map(i => r.getInt(i + 1)),
+          r.getBoolean(keys.size + 1))).toSeq
+      val judged = emb.keySet.filter(id => !gate || id % gateSplit == 0)
+      assert(rows.map(_._1).sorted == judged.toSeq.sorted,
+        s"$shape: one row per judged non-NULL vector")
+      for ((id, cell, kept) <- rows) {
+        val byManifest = frozen.exists { case (c, e) =>
+          c == cell && similar(e, emb(id))
+        }
+        val byEarlier = rows.exists { case (a, c, _) =>
+          c == cell && a < id && similar(emb(a), emb(id))
+        }
+        assert(kept == !(byManifest || byEarlier), s"$shape: vec $id")
+      }
+      assert(rows.exists(!_._3), s"$shape: the duplicates drop")
+      if (!gate) assert(rows.exists { case (a, ca, _) =>
+        rows.exists { case (b, cb, _) =>
+          ca != cb && similar(emb(a), emb(b))
+        }
+      }, s"$shape: some near-duplicate pair is split across cells")
+    }
   }
 }

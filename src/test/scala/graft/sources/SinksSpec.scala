@@ -48,7 +48,7 @@ class SinksSpec extends SparkSpec {
 
     var captured: Seq[String] = Nil
     val t = JdbcTarget("jdbc:postgresql://db/ibc", "users", "u", "p")
-    val script = Merge.writeJdbc(merged, t, Seq("email"), batchId = 7,
+    val script = JdbcUpsertSink.upsert(merged, t, Seq("email"), batchId = 7,
       runScript = Some(s => captured = s))
 
     assert(captured == script && script.size == 2)
@@ -184,7 +184,7 @@ class SinksSpec extends SparkSpec {
       ("d@x", "Dee", 19)).toDF("email", "name", "age")
     val merged = graft.ops.Merge.merge(next, cur, Seq("email"),
       Seq("name", "age"))
-    graft.ops.Merge.writeJdbc(merged, t, Seq("email"), batchId = 4,
+    JdbcUpsertSink.upsert(merged, t, Seq("email"), batchId = 4,
       dialect = "ansi")
     assert(state() == Seq(("a@x", "Alice-new", 31), ("b@x", "Bob", 23),
       ("c@x", "Cara", 44), ("d@x", "Dee", 19)))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.ext.{Coarse, IvfSpec, Similarity}
+import graft.ext.{Coarse, IvfSpec, SemDedupGrid, SemDedupSpec, Similarity}
 
 /** Pins the streaming ANN ingest gate's contract
   * ([[VectorStream]]): the gate is STATELESS given the static index,
@@ -79,8 +79,9 @@ class VectorStreamSpec extends SparkSpec {
     val manifest = Seq(
       (1L, v(0, 0.0), 0), (2L, v(0, 0.9), 0), (3L, v(32, 0.0), 0))
       .toDF("vec_id", "embedding", "label")
-    val state = Similarity.semDedupFit(manifest,
-      targetClusterSize = 2L, iters = 2)
+    val spec = SemDedupSpec(SemDedupGrid.Hier(2L), iters = 2,
+      threshold = 0.999)
+    val state = Similarity.semDedupFit(spec, manifest)
     // batch A: manifest dup + a new direction and its same-batch dup;
     // batch B: a dup of batch A's survivor (CROSS-batch)
     val batchA = Seq(
@@ -102,8 +103,8 @@ class VectorStreamSpec extends SparkSpec {
       batchA.coalesce(1).write.mode("append").parquet(srcDir)
       batchB.coalesce(1).write.mode("append").parquet(srcDir)
       val out = new ConcurrentLinkedQueue[(Long, Boolean)]()
-      val q = VectorStream.ingestSemGateStream(spark, srcDir, state,
-          threshold = 0.999, ckpt) { (judged: DataFrame, _: Long) =>
+      val q = VectorStream.ingestSemGateStream(spark, srcDir, spec, state,
+          ckpt) { (judged: DataFrame, _: Long) =>
         judged.select("vec_id", "kept").as[(Long, Boolean)]
           .collect().foreach(out.add)
         ()
@@ -126,7 +127,7 @@ class VectorStreamSpec extends SparkSpec {
       // per-batch parity: streaming through foreachBatch ≡ calling
       // the batch body on the same rows
       for (b <- Seq(batchA, batchB)) {
-        val want = VectorStream.semGateBatch(state, 0.999, b)
+        val want = Similarity.semDedupGateBatch(spec, state, b)
           .select("vec_id", "kept").as[(Long, Boolean)]
           .collect().toMap
         assert(want.forall { case (id, kept) => got(id) == kept },
