@@ -2,6 +2,7 @@ package graft
 
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
+import org.apache.spark.graft.ListenerBusFence
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
@@ -67,9 +68,10 @@ object JobAudit {
         System.err.println(s"[audit] $name cold failed: ${e.getMessage}")
       }
       // warm measured pass: the listener events for a job arrive
-      // asynchronously; the sleeps let the bus drain before the reset
-      // (late cold-pass events would count as warm) and before reading
-      Thread.sleep(300)
+      // asynchronously; fencing the bus before the reset keeps late
+      // cold-pass events out of the warm counts, and before reading
+      // keeps the warm pass's own last events in
+      ListenerBusFence.drain(spark.sparkContext)
       jobs.set(0); stages.set(0); tasks.set(0L)
       val t0 = System.nanoTime()
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
@@ -77,7 +79,7 @@ object JobAudit {
         System.err.println(s"[audit] $name warm failed: ${e.getMessage}")
       }
       val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300)
+      ListenerBusFence.drain(spark.sparkContext)
       println(f"$name%-28s ${jobs.get()}%5d ${stages.get()}%5d " +
         f"${tasks.get()}%7d $sec%7.2f")
     }

@@ -7,13 +7,52 @@ import graft.queries.QueryUtil.{kmUnrolledSql, qidsSql, quantizeSql,
   sqlCosine, sqlSumDec}
 
 /** The coarse level of an ANN index: how the corpus is cut into cells
-  * and how many of them each query probes. [[IvfSpec]] searches with
-  * every variant; [[PqSpec]] shares the label cells. Probing is one
-  * rule at every level: keep the `nprobe` cells of best rounded
-  * similarity, ties to the smaller cell id. */
+  * and which of them each query probes. [[IvfSpec]] searches with
+  * every variant; [[PqSpec]] shares the label cells. The centroid
+  * levels (labels, k-means, two-level) probe by one rule: keep the
+  * `nprobe` cells of best rounded similarity, ties to the smaller cell
+  * id. [[Coarse.Exhaustive]] has one cell and nothing to probe;
+  * [[Coarse.Lsh]] has no centroids and probes by hyperplane margins. */
 sealed trait Coarse { def nprobe: Int }
 
 object Coarse {
+
+  /** One cell holding the whole corpus: every query scans every
+    * candidate (the exact flat scan, O(|Q|·|C|)). */
+  case object Exhaustive extends Coarse { def nprobe: Int = 1 }
+
+  /** Random-hyperplane LSH cells: a vector's cell is the sign pattern of
+    * its projections on `planes` seeded hyperplanes of `dim`
+    * ([[Similarity.hyperplanes]]; ids from the
+    * [[graft.functions.HyperplaneBuckets]] kernel). A query probes its
+    * own bucket plus the buckets across its `nprobe − 1` lowest-|margin|
+    * planes, ties by bit — multi-probe LSH (Lv et al. 2007): the planes
+    * a near neighbor most plausibly fell on the other side of. Every
+    * margin is one IEEE dot, so the probe set is engine-reproducible. */
+  final case class Lsh(planes: Int, nprobe: Int, seed: Long,
+      dim: Int = 64) extends Coarse {
+    require(nprobe >= 1 && nprobe <= planes + 1,
+      s"nprobe $nprobe outside 1..${planes + 1}")
+
+    def hyperplanes: Seq[Seq[Double]] =
+      Similarity.hyperplanes(planes, dim, seed)
+
+    /** The bucket id of the DOUBLE[] SQL expression `v`: the
+      * plane-literal sum the kernel computes. */
+    def bucketSql(v: String): String =
+      hyperplanes.zipWithIndex.map { case (pl, i) =>
+        s"CASE WHEN list_dot_product($v, ${literal(pl)}) > 0 " +
+          s"THEN ${1 << i} ELSE 0 END"
+      }.mkString("\n    + ")
+
+    /** The (margin, bit) struct list of `v`, one per plane. */
+    private[ext] def marginsSql(v: String): String =
+      hyperplanes.zipWithIndex.map { case (pl, i) =>
+        s"{'m': abs(list_dot_product($v, ${literal(pl)})), 'bit': ${1 << i}}"
+      }.mkString("[", ",\n      ", "]")
+
+    private def literal(pl: Seq[Double]): String = pl.mkString("[", ", ", "]")
+  }
 
   /** The per-label exact decimal-mean centroids. `widenForFilter`
     * derives the probe count from the candidate filter's selectivity
@@ -137,19 +176,25 @@ object AnnFilter {
   * cells, each query probes its nearest cells, and only the vectors
   * in them are scored under `codes`, optionally restricted by
   * `filter`. `otherLabel` mines hard negatives: the query's own label
-  * cell is never probed and same-label candidates are dropped.
+  * cell is never probed and same-label candidates are dropped. The
+  * flat scan ([[Coarse.Exhaustive]]) and LSH buckets ([[Coarse.Lsh]])
+  * are two more coarse levels, so every cosine top-k here is a spec.
   *
-  * [[Similarity.ivfSearch]] (a query-id sample), the ingest gate
+  * [[Similarity.ivfSearch]] (a query-id set), the ingest gate
   * ([[Similarity.ivfBuild]] + [[Similarity.ivfProbe]], an incoming
   * batch against a frozen index) and the DuckDB oracle
   * ([[IvfSpec.oracleSql]]) all read this one value. */
 final case class IvfSpec(coarse: Coarse,
     codes: IvfCodes = IvfCodes.Exact, filter: Option[AnnFilter] = None,
     otherLabel: Boolean = false) {
-  private def labelCells = coarse.isInstanceOf[Coarse.Labels]
-  require(codes == IvfCodes.Exact || labelCells,
-    "int8 codes run on label cells")
-  require(!otherLabel || labelCells, "otherLabel excludes label cells")
+  private def labelOrFlat = coarse match {
+    case _: Coarse.Labels | Coarse.Exhaustive => true
+    case _ => false
+  }
+  require(codes == IvfCodes.Exact || labelOrFlat,
+    "int8 codes run on label cells or the exhaustive scan")
+  require(!otherLabel || labelOrFlat,
+    "otherLabel excludes label cells or filters the exhaustive scan")
   require(coarse match {
     case c: Coarse.Labels => !c.widenForFilter || filter.isDefined
     case _ => true
@@ -157,17 +202,40 @@ final case class IvfSpec(coarse: Coarse,
 
   /** The corpus keeps its label: label cells and the hard-negative
     * exclusion read it. */
-  private[ext] def keepsLabel: Boolean = !coarse.isInstanceOf[Coarse.Kmeans]
+  private[ext] def keepsLabel: Boolean = coarse match {
+    case _: Coarse.Labels | _: Coarse.TwoLevel => true
+    case _ => otherLabel
+  }
 
-  /** The corpus is read by several jobs — the Lloyd fit, or the
+  /** The corpus is read by several jobs — the Lloyd fit, or the label
     * centroid pass ahead of quantization — so the search persists it
-    * and materializes its top-k before releasing it. */
-  private[ext] def persistsCorpus: Boolean =
-    coarse.isInstanceOf[Coarse.Kmeans] || codes != IvfCodes.Exact
+    * and materializes its top-k before releasing it. The single-cell
+    * and LSH levels read it once. */
+  private[ext] def persistsCorpus: Boolean = coarse match {
+    case _: Coarse.Kmeans => true
+    case _: Coarse.Labels => codes != IvfCodes.Exact
+    case _ => false
+  }
 
   /** The k-means fine-rank join carries no broadcast hint: an ingest
     * batch, which the probed frame scales with, can be large. */
   private[ext] def hintsProbed: Boolean = !coarse.isInstanceOf[Coarse.Kmeans]
+}
+
+/** Which vectors query an [[IvfSpec]] catalog search; the Spark entry
+  * and [[IvfSpec.oracleSql]] read the same value. */
+sealed trait QuerySet
+object QuerySet {
+  /** The `n` ids of [[Similarity.sampleQueryIds]]: |Q| stays fixed, so
+    * the search is linear in the corpus. */
+  final case class Sample(n: Int) extends QuerySet
+  /** Every id that is a multiple of `n`: |Q| grows with the corpus
+    * (the full-scan reference shape), so the queries carry no
+    * broadcast hint ([[Similarity.ivfSearchWhere]]). */
+  final case class EveryNth(n: Int) extends QuerySet
+  /** The ingest gate: the index holds the ids that are not multiples
+    * of `n`, the multiples probe it, (new_id, match_id) out. */
+  final case class Gate(n: Int) extends QuerySet
 }
 
 object IvfSpec {
@@ -175,26 +243,43 @@ object IvfSpec {
   /** The embeddings table's dimension (the oracle unrolls per dim). */
   private val Dim = 64
 
-  /** The DuckDB oracle of `spec`: [[Similarity.ivfSearch]] over the
-    * 16-query sample, or with `batchMod` the ingest gate — the index
-    * built on `vec_id % batchMod <> 0`, probed by the rest,
-    * (new_id, match_id) out. Top-`k` per query. */
-  def oracleSql(spec: IvfSpec, k: Int, batchMod: Option[Int] = None)
-      : String = {
+  /** The searchable corpus rows: no NULL, NULL-element or zero-norm
+    * vector ([[Similarity.ivfSearch]]'s drop). */
+  private def rows(where: String) =
+    "SELECT * FROM (SELECT vec_id, label, embedding::DOUBLE[] AS emb\n" +
+      s"  FROM embeddings) WHERE list_dot_product(emb, emb) > 0$where"
+
+  /** The DuckDB oracle of `spec` over `queries`, top-`k` per query. */
+  def oracleSql(spec: IvfSpec, k: Int, queries: QuerySet): String =
+    queries match {
+      // sampled, like the Spark entry, among the non-NULL rows
+      case QuerySet.Sample(n) => searchSql(spec, k, qidsSql(n,
+        "(SELECT vec_id FROM embeddings WHERE embedding IS NOT NULL)"))
+      case QuerySet.EveryNth(n) => searchSql(spec, k,
+        s"qids AS (SELECT vec_id FROM base WHERE vec_id % $n = 0)")
+      case QuerySet.Gate(n) =>
+        sql(spec, k, s"base AS (${rows(s" AND vec_id % $n <> 0")}),\n" +
+          s"newb AS (${rows(s" AND vec_id % $n = 0")})", None)
+    }
+
+  /** The oracle of [[Similarity.ivfSearch]] for the ids of the CTE
+    * `qids` (one `vec_id` column; it may read the corpus CTE `base` or
+    * the CTEs of an enclosing query): (query_id, neighbor_id,
+    * [neg_label,] cos_sim, rank), ordered. */
+  def searchSql(spec: IvfSpec, k: Int, qids: String): String =
+    sql(spec, k, s"base AS (${rows("")})", Some(qids))
+
+  /** The search over the corpus CTE(s) `corpus`: queried by `qids`, or
+    * without it the gate's `newb` batch. */
+  private def sql(spec: IvfSpec, k: Int, corpus: String,
+      qids: Option[String]): String = {
     import spec._
     val int8 = codes != IvfCodes.Exact
     val (qid, nid) =
-      if (batchMod.isDefined) ("new_id", "match_id")
+      if (qids.isEmpty) ("new_id", "match_id")
       else ("query_id", "neighbor_id")
-    def rows(where: String) =
-      s"SELECT vec_id, label, embedding::DOUBLE[] AS emb\n" +
-        s"  FROM embeddings WHERE embedding IS NOT NULL$where"
-    val corpus = batchMod.fold(s"base AS (${rows("")})") { m =>
-      s"base AS (${rows(s" AND vec_id % $m <> 0")}),\n" +
-        s"newb AS (${rows(s" AND vec_id % $m = 0")})"
-    }
     // the codes: corpus (…, emb) or (…, qv, qn), queries q_-prefixed
-    val quantized = if (int8) quantizeSql(" label,") + ",\n" else ""
+    val quantized = if (int8) Seq(quantizeSql(" label,")) else Nil
     val coded = if (int8) "qn" else "base"
     val vec = if (int8) Seq("qv", "qn") else Seq("emb")
     def sim(a: String, b: String): String =
@@ -203,18 +288,42 @@ object IvfSpec {
       else sqlCosine(s"$a.q_emb", s"$b.emb")
     val qLabel = if (otherLabel) Seq("q_label") else Nil
     val qCols = vec.map(v => s"q_$v") ++ qLabel
-    val queries = batchMod.fold(
-      s"""$qidsSql,
+    val queries = qids.fold(
+      "q AS (SELECT vec_id AS new_id, emb AS q_emb FROM newb)")(ids =>
+      s"""$ids,
          |q AS (SELECT b.vec_id AS query_id,
          |    ${(vec.map(v => s"b.$v AS q_$v") ++
                  qLabel.map(_ => "b.label AS q_label")).mkString(", ")}
          |  FROM $coded b JOIN qids s ON b.vec_id = s.vec_id)"""
-        .stripMargin)(_ =>
-      "q AS (SELECT vec_id AS new_id, emb AS q_emb FROM newb)")
+        .stripMargin)
     def probeCols(cell: String*) = (qid +: qCols).map(c => s"q.$c") ++
       cell.map(c => s"c.$c")
     // cell centroids renamed to the corpus' code columns
-    val (coarseCtes, members, probed, on) = coarse match {
+    val (coarseCtes, members, join) = coarse match {
+      case Coarse.Exhaustive => (Nil, coded, "CROSS JOIN q p")
+      case c: Coarse.Lsh =>
+        val own = s"SELECT $qid, q_emb, q_bucket AS bucket FROM qb"
+        val probes =
+          if (c.nprobe == 1) Seq(s"probed AS ($own)")
+          else Seq(
+            s"""mg AS (SELECT $qid, q_emb, q_bucket,
+               |    unnest(${c.marginsSql("q_emb")}) AS s
+               |  FROM qb)""".stripMargin,
+            s"""fl AS (SELECT $qid, q_emb, q_bucket, s.bit,
+               |    row_number() OVER (PARTITION BY $qid
+               |      ORDER BY s.m ASC, s.bit ASC) AS rn
+               |  FROM mg)""".stripMargin,
+            s"""probed AS ($own
+               |  UNION ALL
+               |  SELECT $qid, q_emb, xor(q_bucket, bit) FROM fl
+               |  WHERE rn <= ${c.nprobe - 1})""".stripMargin)
+        (s"""bk AS (SELECT vec_id, label, emb,
+            |    ${c.bucketSql("emb")} AS bucket
+            |  FROM base)""".stripMargin +:
+          s"""qb AS (SELECT $qid, q_emb,
+             |    ${c.bucketSql("q_emb")} AS q_bucket
+             |  FROM q)""".stripMargin +: probes,
+          "bk", "JOIN probed p ON m.bucket = p.bucket")
       case c: Coarse.Labels =>
         val cents =
           if (!int8) "cents AS (SELECT label, centroid AS emb FROM cent)"
@@ -222,39 +331,36 @@ object IvfSpec {
             "FROM cent)", key = "label", prefix = "c")
         val pairs = s"q CROSS JOIN ${if (int8) "cqn" else "cents"} c" +
           (if (otherLabel) " WHERE c.label <> q.q_label" else "")
-        (s"""${Coarse.centroidsSql("base", Dim)},
-            |$cents,
-            |${Coarse.probedSql("probed", pairs, probeCols("label"),
-                sim("q", "c"), Seq(qid), "label",
-                Coarse.nprobeSql(c, filter, "base"))}""".stripMargin,
-          coded, "probed", "m.label = p.label")
+        (Seq(Coarse.centroidsSql("base", Dim), cents,
+          Coarse.probedSql("probed", pairs, probeCols("label"),
+            sim("q", "c"), Seq(qid), "label",
+            Coarse.nprobeSql(c, filter, "base"))),
+          coded, "JOIN probed p ON m.label = p.label")
       case c: Coarse.Kmeans =>
         val fit =
           if (c.fitSampleMod == 1L) "base"
           else s"(SELECT * FROM base WHERE vec_id % ${c.fitSampleMod} = 0)"
-        val last = s"c${c.iters}"
-        (s"""${kmUnrolledSql(fit, "base", c.k.sql("base"), c.iters)},
-            |cents AS (SELECT cid, centroid AS emb FROM $last),
-            |${Coarse.probedSql("probed", "q CROSS JOIN cents c",
-                probeCols("cid"), sim("q", "c"), Seq(qid), "cid",
-                c.nprobe.toString)}""".stripMargin,
-          "members", "probed", "m.cid = p.cid")
+        (Seq(kmUnrolledSql(fit, "base", c.k.sql("base"), c.iters),
+          s"cents AS (SELECT cid, centroid AS emb FROM c${c.iters})",
+          Coarse.probedSql("probed", "q CROSS JOIN cents c",
+            probeCols("cid"), sim("q", "c"), Seq(qid), "cid",
+            c.nprobe.toString)),
+          "members", "JOIN probed p ON m.cid = p.cid")
       case c: Coarse.TwoLevel =>
-        val last = s"sc${c.iters}"
-        (s"""${Coarse.centroidsSql("base", Dim)},
-            |cents AS (SELECT label, centroid AS emb FROM cent),
-            |${kmUnrolledSql("base", "base", c.k2.toString, c.iters,
-                Some("label"), dim = Dim)},
-            |${Coarse.probedSql("probed", "q CROSS JOIN cents c",
-                probeCols("label"), sim("q", "c"), Seq(qid), "label",
-                c.nprobe.toString)},
-            |subs AS (SELECT label, scid, centroid AS emb FROM $last),
-            |${Coarse.probedSql("probed2",
-                "probed q JOIN subs c ON q.label = c.label",
-                probeCols("label", "scid"), sim("q", "c"),
-                Seq(qid, "label"), "scid", c.nprobe2.toString)}"""
-            .stripMargin,
-          "members", "probed2", "m.label = p.label AND m.scid = p.scid")
+        (Seq(Coarse.centroidsSql("base", Dim),
+          "cents AS (SELECT label, centroid AS emb FROM cent)",
+          kmUnrolledSql("base", "base", c.k2.toString, c.iters,
+            Some("label"), dim = Dim),
+          Coarse.probedSql("probed", "q CROSS JOIN cents c",
+            probeCols("label"), sim("q", "c"), Seq(qid), "label",
+            c.nprobe.toString),
+          s"subs AS (SELECT label, scid, centroid AS emb FROM sc${c.iters})",
+          Coarse.probedSql("probed2",
+            "probed q JOIN subs c ON q.label = c.label",
+            probeCols("label", "scid"), sim("q", "c"),
+            Seq(qid, "label"), "scid", c.nprobe2.toString)),
+          "members",
+          "JOIN probed2 p ON m.label = p.label AND m.scid = p.scid")
     }
     val cand = filter.fold(members)(f =>
       s"(SELECT * FROM $members WHERE ${f.sql})")
@@ -263,7 +369,7 @@ object IvfSpec {
     val ranked =
       s"""scored AS (SELECT p.$qid, m.vec_id AS $nid, $negLabel
          |    ${sim("p", "m")} AS cos_sim
-         |  FROM $cand m JOIN $probed p ON $on
+         |  FROM $cand m $join
          |  WHERE m.vec_id <> p.$qid$notSame),
          |ranked AS (SELECT *, CAST(row_number() OVER (PARTITION BY $qid
          |    ORDER BY cos_sim DESC, $nid ASC) AS INT) AS rank
@@ -289,9 +395,7 @@ object IvfSpec {
            |SELECT $out, cos_sim, rank FROM ranked
            |WHERE rank <= $k ORDER BY $qid, rank""".stripMargin
     }
-    s"""WITH $corpus,
-       |$quantized$queries,
-       |$coarseCtes,
-       |$ranked$tail""".stripMargin
+    ((corpus +: quantized :+ queries) ++ coarseCtes :+ ranked)
+      .mkString("WITH ", ",\n", tail)
   }
 }

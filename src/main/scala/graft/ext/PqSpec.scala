@@ -181,7 +181,7 @@ object PqSpec {
        |  FROM embeddings WHERE embedding IS NOT NULL),
        |$base,
        |$coarseCtes$residualCte$fits,
-       |$qidsSql,
+       |${qidsSql()},
        |q AS (SELECT b.vec_id AS query_id, b.emb AS q_emb
        |  FROM base b JOIN qids s ON b.vec_id = s.vec_id),
        |codes AS ($codes),

@@ -8,14 +8,12 @@ import org.apache.spark.sql.types._
 /** Approximate-nearest-neighbor search over an embedding column
   * (`array<float>`).
   *
-  * Baseline: brute-force cosine top-k — broadcast the (small) query
-  * set against the candidate corpus; linear scan, no shuffle of the
-  * corpus, scales to any corpus size at O(|Q|·|C|) work.
-  *
-  * Scale path: random-hyperplane LSH — each vector gets a compact
-  * signature; only same-bucket pairs are scored. Planes are
-  * deterministic literals baked into the plan (no fit step, no
-  * driver state).
+  * Every cosine top-k is one [[IvfSpec]] run by [[ivfSearch]]: the
+  * exhaustive scan broadcasts the (small) query set against the
+  * corpus at O(|Q|·|C|) work; LSH buckets, label, k-means and
+  * two-level cells prune the candidates. PQ ([[pqSearch]]) and
+  * SemDeDup ([[semDedup]]) have their own specs; MIPS
+  * ([[mipsTopK]]) scores inner products over a norm-augmented corpus.
   */
 object Similarity {
 
@@ -63,155 +61,6 @@ object Similarity {
       .filter(col("rank") <= k)
   }
 
-  /** Brute-force cosine top-k: for each query vector (chosen by
-    * `isQuery`), the k most similar other vectors. The predicate may
-    * select a corpus-proportional query set, so the scorer join
-    * carries NO broadcast hint here — Spark's size estimate picks the
-    * nested-loop build side at runtime (q8/q18 treatment: a forced
-    * broadcast of a corpus-scaled q would OOM the driver). */
-  def bruteForceTopK(embeddings: DataFrame, isQuery: Column, k: Int)
-      : DataFrame = {
-    val base = embeddings.select(col("vec_id"),
-      toDouble(col("embedding")).as("emb"))
-    val q = base.filter(isQuery)
-      .select(col("vec_id").as("query_id"), col("emb").as("q_emb"))
-    bruteCore(base, q, k, hintQ = false)
-  }
-
-  /** [[bruteForceTopK]] with the query set given as an id frame
-    * (single `vec_id` column, e.g. from [[sampleQueryIds]]) instead of
-    * a predicate — the fixed-|Q| shape. The id frame is tiny by
-    * construction → broadcast equi-join to attach embeddings, and the
-    * bounded q frame is safe to hint into the scorer. */
-  def bruteForceTopK(embeddings: DataFrame, queryIds: DataFrame, k: Int)
-      : DataFrame = {
-    val base = embeddings.select(col("vec_id"),
-      toDouble(col("embedding")).as("emb"))
-    val q = base.join(broadcast(queryIds), Seq("vec_id"))
-      .select(col("vec_id").as("query_id"), col("emb").as("q_emb"))
-    bruteCore(base, q, k, hintQ = true)
-  }
-
-  private def bruteCore(base: DataFrame, q: DataFrame, k: Int,
-      hintQ: Boolean): DataFrame =
-    rankTopK(
-      base.join(if (hintQ) broadcast(q) else q,
-          col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          round(cosine(col("q_emb"), col("emb")), 6).as("cos_sim")), k)
-
-  /** Int8-quantized brute-force top-k: the bandwidth-bound variant of
-    * [[bruteForceTopK]]. Vectors are quantized once to the 72-byte
-    * int8 form ([[graft.functions.QuantizeOps.quantize_i8]] — 8-byte
-    * scale header + one signed byte per dim) and ALL downstream work
-    * runs on the codes: the broadcast query frame ships ~7× fewer
-    * bytes than `array<double>` rows, the per-pair score is one exact
-    * integer dot product, and per-vector scales cancel out of cosine
-    * so no de-scaling is needed. Norms are computed once per vector
-    * before the join (never per pair). Scores are the quantized
-    * cosine — deterministic (integer dots are exact, the float tail
-    * is one sqrt/divide/round) and engine-portable, so the entry is
-    * hash-verified like the exact ANN family; SimilaritySpec bounds
-    * its drift from exact cosine and its recall@k against brute
-    * force. NULL embeddings are dropped on both sides (round-5 NULL
-    * policy). */
-  def int8TopK(embeddings: DataFrame, isQuery: Column, k: Int)
-      : DataFrame = {
-    val base = int8Base(embeddings)
-    val q = base.filter(isQuery).select(col("vec_id").as("query_id"),
-      col("qv").as("q_qv"), col("qn").as("q_qn"))
-    int8Core(base, q, k)
-  }
-
-  /** [[int8TopK]] with the query set given as an id frame (single
-    * `vec_id` column, e.g. from [[sampleQueryIds]]) — the fixed-|Q|
-    * shape: total work O(|Q|·|C|) stays linear in the corpus. */
-  def int8TopK(embeddings: DataFrame, queryIds: DataFrame, k: Int)
-      : DataFrame = {
-    val base = int8Base(embeddings)
-    val q = base.join(broadcast(queryIds), Seq("vec_id"))
-      .select(col("vec_id").as("query_id"),
-        col("qv").as("q_qv"), col("qn").as("q_qn"))
-    int8Core(base, q, k)
-  }
-
-  /** Quantized corpus frame shared by the int8 scorers: (vec_id, qv,
-    * qn). Three drops, mirrored in every int8 oracle: NULL embeddings;
-    * vectors a NULL element poisoned to a NULL code (they would emit
-    * k rows ranked purely by neighbor_id — the failure mode the
-    * [[hardNegatives]] NULL policy exists for); and zero-norm vectors
-    * (qn = 0 divides to NULL in Spark but NaN/±inf under DuckDB's
-    * IEEE float division — a hash-parity trap; a zero vector has no
-    * cosine direction to rank anyway). In SQL the single `qn > 0`
-    * predicate covers the last two: a NULL-element code yields NULL
-    * qn, and NULL > 0 filters out. */
-  private def int8Base(embeddings: DataFrame): DataFrame =
-    encoded(IvfCodes.Int8(), embeddings.select(col("vec_id"),
-        toDouble(col("embedding")).as("emb"))
-      .filter(col("emb").isNotNull), Seq(col("vec_id")), "emb", "")
-
-  private def int8Core(base: DataFrame, q: DataFrame, k: Int): DataFrame =
-    rankTopK(
-      base.join(broadcast(q), col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          codeSim(IvfCodes.Int8(), "q_", "").as("cos_sim")), k)
-
-  /** Hard-negative mining for contrastive training: for each query
-    * (anchor) vector, the k most cosine-similar vectors carrying a
-    * DIFFERENT label — close to the anchor in embedding space but of
-    * another class, the negatives that actually move a contrastive
-    * loss. Brute-force form over a small anchor set (same broadcast
-    * argument as [[bruteForceTopK]]); the scale-path claim — label
-    * exclusion is a post-filter on the candidate stream — is shipped
-    * code, not prose: [[ivfSearch]] with `otherLabel` composes it with
-    * the IVF × int8 pruned stream. */
-  def hardNegatives(embeddings: DataFrame, isQuery: Column, k: Int)
-      : DataFrame = {
-    val base = hardNegBase(embeddings)
-    val q = base.filter(isQuery)
-      .select(col("vec_id").as("query_id"),
-        col("label").as("q_label"), col("emb").as("q_emb"))
-    hardNegCore(base, q, k)
-  }
-
-  /** [[hardNegatives]] with the anchor set given as an id frame
-    * (single `vec_id` column, e.g. from [[sampleQueryIds]]) — the
-    * fixed-|Q| baseline shape: the broadcast anchor frame is bounded
-    * by construction and total work is O(|Q|·|C|), linear in the
-    * corpus. The production scale path is [[ivfSearch]] with
-    * `otherLabel`, which also prunes the per-anchor candidate scan. */
-  def hardNegatives(embeddings: DataFrame, queryIds: DataFrame, k: Int)
-      : DataFrame = {
-    val base = hardNegBase(embeddings)
-    val q = base.join(broadcast(queryIds), Seq("vec_id"))
-      .select(col("vec_id").as("query_id"),
-        col("label").as("q_label"), col("emb").as("q_emb"))
-    hardNegCore(base, q, k)
-  }
-
-  // NULL embeddings drop (same policy as lshTopK/semDedup): a NULL
-  // anchor scores NULL against everything and would emit k rows
-  // ranked purely by neighbor_id — semantically meaningless
-  // negatives; a NULL neighbor could likewise enter a sparse top-k
-  private def hardNegBase(embeddings: DataFrame): DataFrame =
-    embeddings.select(col("vec_id"), col("label"),
-        toDouble(col("embedding")).as("emb"))
-      .filter(col("emb").isNotNull)
-
-  private def hardNegCore(base: DataFrame, q: DataFrame, k: Int)
-      : DataFrame = {
-    val scored = base.join(broadcast(q),
-        col("vec_id") =!= col("query_id") &&
-        col("label") =!= col("q_label"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("label").as("neg_label"),
-        round(cosine(col("q_emb"), col("emb")), 6).as("cos_sim"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(desc("cos_sim"), asc("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-  }
-
   /** Deterministic pseudo-random hyperplanes: numPlanes × dim doubles
     * from a seeded JVM PRNG, shipped as plan literals. */
   def hyperplanes(numPlanes: Int, dim: Int, seed: Long): Seq[Seq[Double]] = {
@@ -222,10 +71,11 @@ object Similarity {
   /** Sign-of-projection LSH bucket id (one int per vector).
     *
     * Reference composition, kept for the kernel-equivalence spec and
-    * for readers: the production paths below use the
-    * [[graft.functions.HyperplaneBuckets]] kernel, which computes the
-    * identical bucket ids (same left-to-right IEEE dots, same bit
-    * layout) without inlining planes × dim literals into the plan —
+    * for readers: the production paths ([[Coarse.Lsh]] cells, the
+    * dedup blocking below) use the [[graft.functions.HyperplaneBuckets]]
+    * kernel, which computes the identical bucket ids (same
+    * left-to-right IEEE dots, same bit layout) without inlining
+    * planes × dim literals into the plan —
     * at auto-p scale the literal composition's analysis + Janino
     * compile dominated cold runs (~100 s at sf0.01 vs ~1 s warm). */
   def lshBucket(emb: Column, planes: Seq[Seq[Double]]): Column =
@@ -233,101 +83,6 @@ object Similarity {
       val proj = dot(emb, typedLit(plane))
       when(proj > 0, lit(1 << i)).otherwise(lit(0))
     }.reduce(_ + _)
-
-  /** LSH-bucketed ANN: score only within the query's bucket. Trades
-    * recall for a |C|/2^planes candidate reduction; the corpus shuffle
-    * is a single hash partition on the bucket id. */
-  def lshTopK(embeddings: DataFrame, isQuery: Column, k: Int,
-      numPlanes: Int, seed: Long, dim: Int = 64): DataFrame = {
-    val base = lshBase(embeddings, numPlanes, seed, dim)
-    val q = base.filter(isQuery)
-      .select(col("vec_id").as("query_id"), col("emb").as("q_emb"),
-        col("bucket").as("q_bucket"))
-    lshCore(base, q, k)
-  }
-
-  /** [[lshTopK]] with the query set given as an id frame (single
-    * `vec_id` column, e.g. from [[sampleQueryIds]]) — the fixed-|Q|
-    * shape; the id frame broadcasts. */
-  def lshTopK(embeddings: DataFrame, queryIds: DataFrame, k: Int,
-      numPlanes: Int, seed: Long, dim: Int): DataFrame = {
-    val base = lshBase(embeddings, numPlanes, seed, dim)
-    val q = base.join(broadcast(queryIds), Seq("vec_id"))
-      .select(col("vec_id").as("query_id"), col("emb").as("q_emb"),
-        col("bucket").as("q_bucket"))
-    lshCore(base, q, k)
-  }
-
-  // same null-drop + dim fail-fast as cosineDupPairs: a mismatch
-  // would NULL every projection and collapse the corpus into one
-  // bucket (silent brute force)
-  private def lshBase(embeddings: DataFrame, numPlanes: Int, seed: Long,
-      dim: Int): DataFrame =
-    embeddings.select(col("vec_id"),
-        toDouble(col("embedding")).as("emb"))
-      .filter(col("emb").isNotNull)
-      .filter(coalesce(assert_true(size(col("emb")) === dim,
-        lit(s"lshTopK: embedding dim != $dim")), lit(true)))
-      .withColumn("bucket", graft.functions.HyperplaneBuckets(
-        col("emb"), Seq(hyperplanes(numPlanes, dim, seed))).getItem(0))
-
-  private def lshCore(base: DataFrame, q: DataFrame, k: Int): DataFrame =
-    rankTopK(
-      base.join(broadcast(q),
-          col("bucket") === col("q_bucket") &&
-          col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          round(cosine(col("q_emb"), col("emb")), 6).as("cos_sim")), k)
-
-  /** Multi-probe LSH top-k (Lv et al. 2007): beyond the query's own
-    * bucket, probe the buckets reached by flipping the sign bits the
-    * query is CLOSEST to (smallest |projection| — the planes where a
-    * near neighbor most plausibly landed on the other side). The
-    * standard recall lever at fixed plane count: `nProbe` buckets
-    * searched instead of 2^planes-more tables or fewer planes, so
-    * candidate volume grows by ≤ nProbe× while recall approaches the
-    * OR-construction's at a fraction of the index size.
-    *
-    * Scale shape is [[lshTopK]]'s: the corpus side keys on its ONE
-    * precomputed bucket id; only the tiny (query × nProbe) probe
-    * frame replicates — the corpus is never re-bucketed or re-keyed
-    * per probe. Probe order ties (equal |projection|) break by plane
-    * index; every margin is one IEEE dot + abs, so the probe SET is
-    * engine-reproducible and the operator carries a full DuckDB
-    * oracle (probe selection replayed with a rank over the same
-    * margins).
-    *
-    * `nProbe` = 1 degrades to exactly [[lshTopK]]. */
-  def lshMultiProbeTopK(embeddings: DataFrame, queryIds: DataFrame,
-      k: Int, numPlanes: Int, nProbe: Int, seed: Long, dim: Int)
-      : DataFrame = {
-    require(nProbe >= 1 && nProbe <= numPlanes + 1,
-      s"nProbe $nProbe outside 1..${numPlanes + 1}")
-    val base = lshBase(embeddings, numPlanes, seed, dim)
-    val planes = hyperplanes(numPlanes, dim, seed)
-    val q = base.join(broadcast(queryIds), Seq("vec_id"))
-      .select(col("vec_id").as("query_id"), col("emb").as("q_emb"),
-        col("bucket").as("q_bucket"))
-    // (|projection|, bit) per plane; array_sort orders by margin
-    // then bit — the flip sequence, cheapest boundary first
-    val margins = planes.zipWithIndex.map { case (p, i) =>
-      struct(abs(dot(col("q_emb"), typedLit(p))).as("m"),
-        lit(1 << i).as("bit"))
-    }
-    val probes = q.withColumn("flip",
-        slice(array_sort(array(margins: _*)), 1, nProbe - 1))
-      .select(col("query_id"), col("q_emb"),
-        explode(concat(array(col("q_bucket")),
-          transform(col("flip"),
-            f => col("q_bucket").bitwiseXOR(f.getField("bit")))))
-          .as("p_bucket"))
-    rankTopK(
-      base.join(broadcast(probes),
-          col("bucket") === col("p_bucket") &&
-          col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          round(cosine(col("q_emb"), col("emb")), 6).as("cos_sim")), k)
-  }
 
   /** Maximum-inner-product search (MIPS) via norm augmentation
     * (Bachrach et al. 2014, "XBOX"): when corpus vectors carry
@@ -345,7 +100,7 @@ object Similarity {
     * deterministic synthetic norms `w = 1 + (vec_id mod 5)` — the
     * shape a popularity-weighted deployment has.
     *
-    * Scale shape: identical to [[lshTopK]] — the corpus is bucketed
+    * Scale shape: the [[Coarse.Lsh]] search's — the corpus is bucketed
     * once (narrow projection; the 1-row max-norm frame broadcasts),
     * candidates come from a bucket equi-join against the broadcast
     * |Q|-row query frame, and no pair outside the query's bucket is
@@ -1486,10 +1241,13 @@ object Similarity {
     else c.nprobe
 
   /** `df`'s vector column `vec` under `codes`, next to `keep`: exact
-    * as `${p}emb`, or int8 as `${p}qv`/`${p}qn` — quantized with the
-    * portable formula, NULL-element and zero-norm rows dropped (the
-    * [[int8Base]] policy). Corpus, centroids and queries all pass
-    * through here, so every level scores the same codes. */
+    * as `${p}emb`, or int8 as `${p}qv`/`${p}qn` — the 72-byte codes
+    * ([[graft.functions.QuantizeOps.quantize_i8]]: an 8-byte scale
+    * header and one signed byte per dim), with the norm computed once
+    * per vector. A NULL-element or zero-norm code drops (the oracle's
+    * `qn > 0`; the corpus and queries are already clean, see
+    * [[ivfBase]]). Corpus, centroids and queries all pass through
+    * here, so every level scores the same codes. */
   private def encoded(codes: IvfCodes, df: DataFrame, keep: Seq[Column],
       vec: String, p: String): DataFrame = codes match {
     case IvfCodes.Exact => df.select(keep :+ col(vec).as(s"${p}emb"): _*)
@@ -1515,14 +1273,26 @@ object Similarity {
           (col(s"${a}qn") * col(s"${b}qn")), 6)
     }
 
-  // NULL embeddings drop (the oracle filters `embedding IS NOT NULL`):
-  // a NULL row would enter fine ranking with a NULL cos_sim and
-  // surface whenever a probed cell holds fewer than k candidates
-  private def ivfBase(spec: IvfSpec, embeddings: DataFrame): DataFrame =
-    embeddings.select(Seq(col("vec_id")) ++
+  // NULL, NULL-element and zero-norm embeddings drop, mirrored by the
+  // oracle's `list_dot_product(emb, emb) > 0`: a NULL row would enter
+  // fine ranking with a NULL cos_sim and surface whenever a probed cell
+  // holds fewer than k candidates, and a zero vector has no cosine
+  // direction — its norm divides by zero (an error under ANSI, NaN in
+  // DuckDB). LSH cells also fail fast on a dim mismatch, which would
+  // NULL every projection and collapse the corpus into one bucket (a
+  // silent flat scan); assert_true is kept alive by the filter.
+  private def ivfBase(spec: IvfSpec, embeddings: DataFrame): DataFrame = {
+    val base = embeddings.select(Seq(col("vec_id")) ++
         (if (spec.keepsLabel) Seq(col("label")) else Nil) :+
         toDouble(col("embedding")).as("emb"): _*)
-      .filter(col("emb").isNotNull)
+      .filter(dot(col("emb"), col("emb")) > 0)
+    spec.coarse match {
+      case c: Coarse.Lsh =>
+        base.filter(coalesce(assert_true(size(col("emb")) === c.dim,
+          lit(s"Coarse.Lsh: embedding dim != ${c.dim}")), lit(true)))
+      case _ => base
+    }
+  }
 
   /** A k-means coarse index — the ingest gate's state between refits:
     * the fitted centroids (cid, centroid) and the manifest keyed by
@@ -1547,48 +1317,53 @@ object Similarity {
     IvfIndex(centroids, assignClusters(base, centroids), kClusters)
   }
 
-  /** A built coarse level: cell centroids keyed by the spec's cell
-    * column, the two-level grid's sub-cells, and the corpus (under
-    * the spec's codes) keyed by cell. */
-  private final case class Cells(centroids: DataFrame,
-      sub: Option[DataFrame], members: DataFrame, nprobe: Int)
+  /** A built coarse level: the corpus (under the spec's codes) keyed by
+    * cell, and for the centroid levels the cell centroids keyed by the
+    * spec's cell column plus the two-level grid's sub-cells. */
+  private final case class Cells(members: DataFrame,
+      centroids: Option[DataFrame] = None, sub: Option[DataFrame] = None,
+      nprobe: Int = 1)
 
   private def buildCells(spec: IvfSpec, base: DataFrame): Cells =
     spec.coarse match {
+      case Coarse.Exhaustive =>
+        Cells(encoded(spec.codes, base,
+          base.columns.toSeq.filter(_ != "emb").map(col), "emb", ""))
+      case c: Coarse.Lsh =>
+        Cells(base.withColumn("bucket", graft.functions.HyperplaneBuckets(
+          col("emb"), Seq(c.hyperplanes)).getItem(0)))
       case c: Coarse.Labels =>
-        Cells(labelCentroids(base), None,
-          encoded(spec.codes, base, Seq(col("vec_id"), col("label")),
-            "emb", ""),
+        Cells(encoded(spec.codes, base, Seq(col("vec_id"), col("label")),
+            "emb", ""), Some(labelCentroids(base)), None,
           labelNprobe(c, spec.filter, base))
       case c: Coarse.Kmeans =>
         val idx = kmeansIndex(c, base)
-        Cells(idx.centroids, None, idx.members, c.nprobe)
+        Cells(idx.members, Some(idx.centroids), None, c.nprobe)
       case c: Coarse.TwoLevel =>
         val cents2 = subCellFit(base, "label", c.k2, c.iters)
-        Cells(labelCentroids(base), Some(cents2),
-          assignSubClusters(base, cents2, "label"), c.nprobe)
+        Cells(assignSubClusters(base, cents2, "label"),
+          Some(labelCentroids(base)), Some(cents2), c.nprobe)
     }
 
-  /** Probe `cells` with the query frame `q` (`qid`, q_-prefixed codes,
-    * optional q_label) and rank the `k` best candidates per query
-    * (`qid`, `nid`, [neg_label,] cos_sim, rank). Label probes and their
-    * fine-rank join broadcast (|Q|·nprobe rows); the k-means join
-    * stays unhinted ([[IvfSpec.hintsProbed]]). */
-  private def probeRank(spec: IvfSpec, cells: Cells, q: DataFrame,
-      qid: String, nid: String, k: Int): DataFrame = {
+  /** Each query's nearest centroid cells (`qid`, q_-prefixed codes,
+    * cell keys) and the keys they join the members on: the
+    * [[probeCells]] rule, once per level. */
+  private def nearestCells(spec: IvfSpec, cells: Cells,
+      centroids: DataFrame, q: DataFrame, qid: String)
+      : (DataFrame, Seq[String]) = {
     val cell = spec.coarse match {
       case _: Coarse.Kmeans => "cid"
       case _ => "label"
     }
     val qCols = q.columns.toSeq.map(col)
     val sim = codeSim(spec.codes, "q_", "c_")
-    val pairs = q.crossJoin(broadcast(encoded(spec.codes, cells.centroids,
+    val pairs = q.crossJoin(broadcast(encoded(spec.codes, centroids,
       Seq(col(cell)), "centroid", "c_")))
     val probed1 = probeCells(
       if (spec.otherLabel) pairs.filter(col(cell) =!= col("q_label"))
       else pairs,
       qCols :+ col(cell), sim, Seq(qid), cell, cells.nprobe)
-    val (probed, keys) = (spec.coarse, cells.sub) match {
+    (spec.coarse, cells.sub) match {
       case (c: Coarse.TwoLevel, Some(sub)) =>
         val subCodes = encoded(spec.codes, sub,
           Seq(col("label"), col("scid")), "centroid", "c_")
@@ -1597,25 +1372,72 @@ object Similarity {
           Seq(qid, "label"), "scid", c.nprobe2), Seq("label", "scid"))
       case _ => (probed1, Seq(cell))
     }
+  }
+
+  /** The [[Coarse.Lsh]] probe frame: the query frame `q` (q_emb) once
+    * per probed `bucket` — its own, then with `nprobe` > 1 the buckets
+    * across its lowest-|margin| planes (array_sort orders the
+    * (|projection|, bit) structs by margin, then bit). Only this
+    * (query × nprobe) frame replicates; the corpus keys on its one
+    * precomputed bucket id. */
+  private def lshProbes(c: Coarse.Lsh, q: DataFrame): DataFrame = {
+    val planes = c.hyperplanes
+    val own = graft.functions.HyperplaneBuckets(col("q_emb"), Seq(planes))
+      .getItem(0)
+    if (c.nprobe == 1) q.withColumn("bucket", own)
+    else {
+      val margins = planes.zipWithIndex.map { case (p, i) =>
+        struct(abs(dot(col("q_emb"), typedLit(p))).as("m"),
+          lit(1 << i).as("bit"))
+      }
+      val flips = slice(array_sort(array(margins: _*)), 1, c.nprobe - 1)
+      val bucket = col("q_bucket")
+      q.withColumn("q_bucket", own)
+        .select(q.columns.toSeq.map(col) :+ explode(concat(array(bucket),
+          transform(flips, f => bucket.bitwiseXOR(f.getField("bit")))))
+          .as("bucket"): _*)
+    }
+  }
+
+  /** Probe `cells` with the query frame `q` (`qid`, q_-prefixed codes,
+    * optional q_label) and rank the `k` best candidates per query
+    * (`qid`, `nid`, [neg_label,] cos_sim, rank). The exhaustive scan
+    * pairs every query with every candidate. A `bounded` query set's
+    * probes broadcast into the fine-rank join (|Q|·nprobe rows); the
+    * k-means join stays unhinted ([[IvfSpec.hintsProbed]]). */
+  private def probeRank(spec: IvfSpec, cells: Cells, q: DataFrame,
+      qid: String, nid: String, k: Int, bounded: Boolean): DataFrame = {
+    val (probed, keys) = spec.coarse match {
+      case c: Coarse.Lsh => (lshProbes(c, q), Seq("bucket"))
+      case _ => cells.centroids.fold((q, Seq.empty[String]))(
+        nearestCells(spec, cells, _, q, qid))
+    }
     val cand = spec.filter.fold(cells.members)(f =>
       cells.members.filter(f.column))
+    val right =
+      if (spec.hintsProbed && bounded) broadcast(probed) else probed
     val notSelf = col("vec_id") =!= col(qid)
     val keep = col(qid) +: col("vec_id").as(nid) +:
       (if (spec.otherLabel) Seq(col("label").as("neg_label")) else Nil)
     rankTopK(
-      cand.join(if (spec.hintsProbed) broadcast(probed) else probed, keys)
+      (if (keys.isEmpty) cand.join(right) else cand.join(right, keys))
         .filter(if (spec.otherLabel)
           notSelf && col("label") =!= col("q_label") else notSelf)
         .select(keep :+ codeSim(spec.codes, "q_", "").as("cos_sim"): _*),
       k, qid, nid)
   }
 
-  /** Inverted-file ANN under `spec` for a query-id frame (single
-    * `vec_id` column, e.g. [[sampleQueryIds]]; it broadcasts): the
-    * corpus is cut into the spec's coarse cells, each query probes its
-    * nearest cells, and only the vectors in them are scored — total
-    * work O(|Q|·(cells + nprobe·|C|/cells)), linear in the corpus.
+  /** Cosine top-k under `spec` for a query-id frame (single `vec_id`
+    * column, e.g. [[sampleQueryIds]]; it broadcasts): the corpus is cut
+    * into the spec's coarse cells, each query probes its nearest
+    * cells, and only the vectors in them are scored — total work
+    * O(|Q|·(cells + nprobe·|C|/cells)), linear in the corpus.
     *
+    *  - exhaustive: one cell, every candidate scored — the exact
+    *    baseline every other level is measured against;
+    *  - LSH: hyperplane buckets with no fit step and nothing collected;
+    *    trades recall for a |C|/2^planes candidate reduction, and
+    *    multi-probe buys it back at ≤ nprobe× the candidates;
     *  - label cells: the `label` column is the partitioning; centroids
     *    are exact decimal means, so DuckDB reproduces the quantizer
     *    bit-for-bit;
@@ -1627,21 +1449,38 @@ object Similarity {
     *    predicate on the pruned read — the coarse level stays shared
     *    across predicates; widen nprobe ∝ 1/selectivity);
     *  - int8 codes score centroids and candidates on the 72-byte
-    *    codes (~7× fewer bytes broadcast or shuffled); `rerank`
+    *    codes (~7× fewer bytes broadcast or shuffled; integer dots are
+    *    exact, so the quantized cosine is engine-portable); `rerank`
     *    rescores that coarse top-n with the exact cosine on raw
     *    vectors reattached by id, repairing quantization at the final
     *    ranking;
-    *  - `otherLabel` mines hard negatives: the anchor's own label cell
-    *    is dropped at probe time, and the candidate stream keeps the
-    *    `label <> q_label` post-filter.
+    *  - `otherLabel` mines hard negatives (contrastive training: close
+    *    in embedding space, of another class): the anchor's own label
+    *    cell is dropped at probe time, and the candidate stream keeps
+    *    the `label <> q_label` post-filter.
     *
     * When the corpus is read by several jobs (a Lloyd fit, or the
-    * centroid pass ahead of quantization) it persists, and the top-k
-    * materializes before the corpus is released — also when the
+    * label centroid pass ahead of quantization) it persists, and the
+    * top-k materializes before the corpus is released — also when the
     * search fails. Every score is rounded and ties break by id, so
     * the result is hash-verified against [[IvfSpec.oracleSql]]. */
   def ivfSearch(spec: IvfSpec, embeddings: DataFrame, queryIds: DataFrame,
-      k: Int): DataFrame = {
+      k: Int): DataFrame =
+    search(spec, embeddings, k, bounded = true)(
+      _.join(broadcast(queryIds), Seq("vec_id")))
+
+  /** [[ivfSearch]] for the vectors matching `isQuery` — a set that may
+    * grow with the corpus ([[QuerySet.EveryNth]]), so neither the
+    * queries nor their probes carry a broadcast hint: Spark's size
+    * estimate picks the build side at runtime, where a forced
+    * broadcast would collect a corpus-scaled frame into one JVM. */
+  private[graft] def ivfSearchWhere(spec: IvfSpec, embeddings: DataFrame,
+      isQuery: Column, k: Int): DataFrame =
+    search(spec, embeddings, k, bounded = false)(_.filter(isQuery))
+
+  /** The search over the queries `pick` selects from the corpus. */
+  private def search(spec: IvfSpec, embeddings: DataFrame, k: Int,
+      bounded: Boolean)(pick: DataFrame => DataFrame): DataFrame = {
     val coarseK = spec.codes match {
       case IvfCodes.Int8(Some(n)) => n
       case _ => k
@@ -1650,17 +1489,16 @@ object Similarity {
     if (spec.persistsCorpus)
       base.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val top = try {
-      val q = encoded(spec.codes,
-        base.join(broadcast(queryIds), Seq("vec_id")),
+      val q = encoded(spec.codes, pick(base),
         col("vec_id").as("query_id") +:
           (if (spec.otherLabel) Seq(col("label").as("q_label")) else Nil),
         "emb", "q_")
       val ranked = probeRank(spec, buildCells(spec, base), q,
-        "query_id", "neighbor_id", coarseK)
+        "query_id", "neighbor_id", coarseK, bounded)
       if (spec.persistsCorpus) ranked.localCheckpoint() else ranked
     } finally if (spec.persistsCorpus) base.unpersist()
     spec.codes match {
-      case IvfCodes.Int8(Some(_)) => exactRerank(embeddings, queryIds, top, k)
+      case IvfCodes.Int8(Some(_)) => exactRerank(embeddings, pick, top, k)
       case _ => top
     }
   }
@@ -1668,12 +1506,12 @@ object Similarity {
   /** Rescore coarse (query_id, neighbor_id) candidates with the exact
     * double cosine: raw vectors reattach by a vec_id equi-join (ship
     * ids, not payloads), the bounded query side broadcasts. */
-  private def exactRerank(embeddings: DataFrame, queryIds: DataFrame,
-      coarse: DataFrame, k: Int): DataFrame = {
+  private def exactRerank(embeddings: DataFrame,
+      pick: DataFrame => DataFrame, coarse: DataFrame, k: Int): DataFrame = {
     val base = embeddings.select(col("vec_id"),
         toDouble(col("embedding")).as("emb"))
       .filter(col("emb").isNotNull)
-    val q = base.join(broadcast(queryIds), Seq("vec_id"))
+    val q = pick(base)
       .select(col("vec_id").as("query_id"), col("emb").as("q_emb"))
     rankTopK(coarse.select(col("query_id"), col("neighbor_id"))
       .join(base.select(col("vec_id").as("neighbor_id"),
@@ -1710,8 +1548,8 @@ object Similarity {
       k: Int): DataFrame = {
     val q = encoded(spec.codes, ivfBase(spec, incoming),
       Seq(col("vec_id").as("new_id")), "emb", "q_")
-    probeRank(spec, Cells(index.centroids, None, index.members,
-      spec.coarse.nprobe), q, "new_id", "match_id", k)
+    probeRank(spec, Cells(index.members, Some(index.centroids), None,
+      spec.coarse.nprobe), q, "new_id", "match_id", k, bounded = false)
   }
 
   /** Sub-cluster assignment for the two-level grid: the per-group

@@ -741,6 +741,19 @@ object Parity {
     * fixture's modular arithmetic makes every pipeline decision
     * SQL-derivable (see [[pStaffingPipelineSql]]). */
   def pStaffingPipeline(s: SparkSession, d: String): DataFrame = {
+    val r = staffingRun(s, d)
+    r.users
+      .join(r.consultants.select(col("user_id"),
+        col("availability_mon"), col("status"),
+        col(graft.ops.Merge.ActionCol).as("_c_action")), Seq("user_id"))
+      .orderBy("email")
+  }
+
+  /** The staffing fixture's pipeline run, shared by
+    * [[pStaffingPipeline]] and [[pRunReport]]: the sheet, the current
+    * users (k%3=0) and their consultants rows. */
+  private def staffingRun(s: SparkSession, d: String)
+      : graft.pipelines.Staffing.Result = {
     val c = Tables.customer(s, d)
     val sheet = c.select(
       when(col("c_custkey") % 11 === 3, lit("")).otherwise(col("c_name"))
@@ -784,12 +797,7 @@ object Parity {
         lit(false).as("week_before_finals_availability")) ++
       graft.ops.Availability.DayNames.map { case (n, _) =>
         lit("00").as(n) }: _*)
-    val r = graft.pipelines.Staffing.run(sheet, curUsers, curConsultants)
-    r.users
-      .join(r.consultants.select(col("user_id"),
-        col("availability_mon"), col("status"),
-        col(graft.ops.Merge.ActionCol).as("_c_action")), Seq("user_id"))
-      .orderBy("email")
+    graft.pipelines.Staffing.run(sheet, curUsers, curConsultants)
   }
 
   /** Mirrors [[pStaffingPipeline]] by tracing each fixture row through
@@ -1135,43 +1143,9 @@ object Parity {
     * run: stage/metric/count rows (validation split + per-merge action
     * distributions). The oracle re-derives every count from the
     * fixture's modular arithmetic. */
-  def pRunReport(s: SparkSession, d: String): DataFrame = {
-    val c = Tables.customer(s, d)
-    val sheet = c.select(
-      when(col("c_custkey") % 11 === 3, lit("")).otherwise(col("c_name"))
-        .as("Name"),
-      concat(lit("u"), col("c_custkey").cast("string"), lit("@x.com"))
-        .as("Email"),
-      col("c_mktsegment").as("Current Role"),
-      concat(lit("nid"), col("c_custkey").cast("string")).as("NetID"),
-      lit("Consulting").as("Major"))
-    val curUsers = c.filter(col("c_custkey") % 3 === 0).select(
-      col("c_custkey").as("user_id"), col("c_name").as("name"),
-      concat(lit("u"), col("c_custkey").cast("string"), lit("@x.com"))
-        .as("email"),
-      lit(null).cast("string").as("gender"),
-      lit(null).cast("string").as("race"),
-      lit(false).as("us_citizen"), lit(false).as("residency"),
-      lit(false).as("first_gen"),
-      col("c_mktsegment").as("curr_role"),
-      concat(lit("nid"), col("c_custkey").cast("string")).as("netid"))
-    val curConsultants = curUsers.select(
-      Seq(col("user_id"), lit(null).cast("string").as("year"),
-        lit("Consulting").as("major"),
-        lit(null).cast("string").as("minor"),
-        lit(null).cast("string").as("college"),
-        lit(0).as("consultants_score"), lit(1).as("semesters_in_ibc"),
-        lit(null).cast("string").as("time_zone"),
-        lit("Sometimes").as("willing_to_travel"),
-        lit(null).cast("string").as("industry_interests"),
-        lit(null).cast("string").as("functional_area_interests"),
-        lit("active").as("status"),
-        lit(false).as("week_before_finals_availability")) ++
-      graft.ops.Availability.DayNames.map { case (n, _) =>
-        lit("00").as(n) }: _*)
-    val r = graft.pipelines.Staffing.run(sheet, curUsers, curConsultants)
-    graft.ops.RunReport.staffing(r).orderBy("stage", "metric")
-  }
+  def pRunReport(s: SparkSession, d: String): DataFrame =
+    graft.ops.RunReport.staffing(staffingRun(s, d))
+      .orderBy("stage", "metric")
 
   /** Fixture decision tree (cf. [[pStaffingPipelineSql]]): k%11=3 →
     * invalid; matched (k%3=0) rows always differ (staged residency

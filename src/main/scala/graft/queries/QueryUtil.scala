@@ -41,16 +41,16 @@ object QueryUtil {
     s"(sqrt(list_dot_product($a, $a)) * " +
     s"sqrt(list_dot_product($b, $b))), 6)"
 
-  /** `qids` CTE mirroring `Similarity.sampleQueryIds(base, 16)` over a
-    * `base` CTE. The inner `(x % m + m) % m` spells Spark's pmod in
+  /** `qids` CTE mirroring `Similarity.sampleQueryIds(from, n)` over a
+    * relation `from` with a `vec_id` column. The inner `(x % m + m) % m` spells Spark's pmod in
     * sign-preserving SQL `%` — without it a negative BIGINT vec_id
     * would order by a negative residue here while Spark orders by the
     * non-negative pmod, silently selecting different query samples in
     * the two engines. */
-  def qidsSql: String =
-    """qids AS (SELECT vec_id FROM base
+  def qidsSql(n: Int = 16, from: String = "base"): String =
+    s"""qids AS (SELECT vec_id FROM $from
       |  ORDER BY ((((vec_id % 2147483647) + 2147483647) % 2147483647) * 48271) % 2147483647, vec_id
-      |  LIMIT 16)""".stripMargin
+      |  LIMIT $n)""".stripMargin
 
   /** Quantize CTE chain `src` → (`${prefix}qz0`, `${prefix}qz`,
     * `${prefix}qn`) reproducing [[graft.functions.QuantizeOps]]

@@ -242,7 +242,7 @@ object Streaming {
     graft.ext.Coarse.PerRows(64), iters = 2, nprobe = 2))
 
   private val stAnnGateSql = graft.ext.IvfSpec.oracleSql(annGate, 2,
-    batchMod = Some(5))
+    graft.ext.QuerySet.Gate(5))
 
   /** Batch core of the STREAMING semantic-dedup gate
     * ([[graft.ext.Similarity.semDedupGateBatch]] per micro-batch) —

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.ext.{AnnFilter, Coarse, Dedup, IvfCodes, IvfSpec, PqLayout,
-  PqSpec, SemDedupGrid, SemDedupSpec, Similarity, TextStats}
+  PqSpec, QuerySet, SemDedupGrid, SemDedupSpec, Similarity, TextStats}
 import QueryUtil._
 
 /** Training-data pipeline operators over `documents` / `embeddings`:
@@ -1011,34 +1011,6 @@ object TrainingData {
       |FROM l ORDER BY doc_id""".stripMargin
 
   // ---- similarity search --------------------------------------------
-  // Proportional query predicate — kept ONLY by the two deliberate
-  // full-scan shapes (s_ann_brute: the documented O(Q·C) bandwidth
-  // reference; s_hard_negatives: mining legitimately visits every
-  // anchor). Every approximate entry (lsh/ivf/ivf_kmeans/int8/
-  // ivf_int8) uses the fixed |Q| = 16 sampleQueryIds shape instead:
-  // with Q ∝ N even an index's total cost grows quadratically.
-  private val isQuery = col("vec_id") % 40 === 0
-
-  def sAnnBrute(s: SparkSession, d: String): DataFrame =
-    Similarity.bruteForceTopK(embs(s, d), isQuery, k = 5)
-      .orderBy("query_id", "rank")
-
-  private val sAnnBruteSql =
-    """WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS emb
-      |  FROM embeddings),
-      |q AS (SELECT vec_id AS query_id, emb AS q_emb FROM base
-      |  WHERE vec_id % 40 = 0),
-      |scored AS (SELECT query_id, vec_id AS neighbor_id,
-      |    round(list_dot_product(q_emb, emb) /
-      |      (sqrt(list_dot_product(q_emb, q_emb)) *
-      |       sqrt(list_dot_product(emb, emb))), 6) AS cos_sim
-      |  FROM base CROSS JOIN q WHERE vec_id <> query_id),
-      |ranked AS (SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-      |    ORDER BY cos_sim DESC, neighbor_id ASC) AS INT) AS rank
-      |  FROM scored)
-      |SELECT query_id, neighbor_id, cos_sim, rank FROM ranked
-      |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
-
   /** Greedy k-center diverse subset selection (k = 8) over the
     * embedding corpus — [[Similarity.kcenterSelect]]. */
   def sKcenter(s: SparkSession, d: String): DataFrame =
@@ -1105,13 +1077,8 @@ object TrainingData {
       .orderBy("query_id", "rank")
 
   private val sAnnMipsSql = {
-    val planes = Similarity.hyperplanes(numPlanes = 4, dim = 65,
-      seed = 77L)
-    def bucket(v: String) = planes.zipWithIndex.map { case (pl, i) =>
-      val arr = "[" + pl.mkString(", ") + "]"
-      s"CASE WHEN list_dot_product($v, $arr) > 0 " +
-        s"THEN ${1 << i} ELSE 0 END"
-    }.mkString("\n    + ")
+    // the LSH level's bucket SQL over the (dim+1)-augmented space
+    val lsh = Coarse.Lsh(planes = 4, nprobe = 1, seed = 77L, dim = 65)
     s"""WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS emb
        |  FROM embeddings WHERE embedding IS NOT NULL),
        |sc AS (SELECT vec_id, emb,
@@ -1124,14 +1091,14 @@ object TrainingData {
        |      (SELECT m2 FROM m) - list_dot_product(sv, sv)))) AS av
        |  FROM sc),
        |bk AS (SELECT vec_id, sv,
-       |    ${bucket("av")} AS bucket
+       |    ${lsh.bucketSql("av")} AS bucket
        |  FROM corp),
-       |$qidsSql,
+       |${qidsSql()},
        |qa AS (SELECT b.vec_id, b.emb,
        |    list_append(b.emb, 0.0) AS aq
        |  FROM base b JOIN qids s ON b.vec_id = s.vec_id),
        |q AS (SELECT vec_id AS query_id, emb AS q_emb,
-       |    ${bucket("aq")} AS q_bucket
+       |    ${lsh.bucketSql("aq")} AS q_bucket
        |  FROM qa),
        |scored AS (SELECT query_id, vec_id AS neighbor_id,
        |    round(list_dot_product(q_emb, sv), 6) AS ip
@@ -1144,162 +1111,38 @@ object TrainingData {
        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
   }
 
-  /** Int8-quantized brute-force ANN — the bandwidth REFERENCE POINT:
-    * all scoring runs on 72-byte quantized codes (~7× fewer
-    * broadcast / shuffle bytes than `array<double>` rows), the lever
-    * a 100-TB embedding pass is actually bounded by. Hash-verified:
-    * the explicit floor-based rounding formula and exact integer
-    * dots make the quantized cosine reproducible in DuckDB list
-    * math. The query set is the FIXED deterministic sample
-    * ([[Similarity.sampleQueryIds]], |Q| = 16, same recipe as
-    * [[sAnnRecall]]) — so even this exact-scan baseline is
-    * O(|Q|·|C|), linear in the corpus, not the quadratic
-    * proportional-predicate shape. The production scale path is
-    * [[sAnnIvfInt8]], which rides the IVF candidate pruning. */
-  def sAnnInt8(s: SparkSession, d: String): DataFrame = {
-    val e = embs(s, d)
-    Similarity.int8TopK(e,
-        Similarity.sampleQueryIds(
-          e.filter(col("embedding").isNotNull), n = 16), k = 5)
-      .orderBy("query_id", "rank")
-  }
-
-  private val sAnnInt8Sql =
-    s"""WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS emb
-       |  FROM embeddings WHERE embedding IS NOT NULL),
-       |${quantizeSql()},
-       |$qidsSql,
-       |q AS (SELECT n.vec_id AS query_id, n.qv AS q_qv, n.qn AS q_qn
-       |  FROM qn n JOIN qids s ON n.vec_id = s.vec_id),
-       |scored AS (SELECT query_id, vec_id AS neighbor_id,
-       |    round(list_dot_product(q_qv, qv) / (q_qn * qn), 6) AS cos_sim
-       |  FROM qn CROSS JOIN q WHERE vec_id <> query_id),
-       |ranked AS (SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-       |    ORDER BY cos_sim DESC, neighbor_id ASC) AS INT) AS rank
-       |  FROM scored)
-       |SELECT query_id, neighbor_id, cos_sim, rank FROM ranked
-       |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
-
-  /** LSH-bucketed ANN. Oracle-verified: the seeded hyperplanes are
-    * plan literals, so the oracle SQL inlines the same plane values
-    * and reproduces bucket assignment + in-bucket ranking exactly.
-    * Fixed |Q| = 16 ([[Similarity.sampleQueryIds]], r6): every
-    * approximate entry now carries the scale-safe query shape — a
-    * proportional predicate would grow the query set with the corpus
-    * and re-introduce the quadratic total the index exists to avoid. */
-  def sAnnLsh(s: SparkSession, d: String): DataFrame = {
-    val e = embs(s, d)
-    Similarity.lshTopK(e,
-        Similarity.sampleQueryIds(
-          e.filter(col("embedding").isNotNull), n = 16),
-        k = 5, numPlanes = 4, seed = 42L, dim = 64)
-      .orderBy("query_id", "rank")
-  }
-
-  private val sAnnLshSql = {
-    val planes = Similarity.hyperplanes(numPlanes = 4, dim = 64,
-      seed = 42L)
-    val bucket = planes.zipWithIndex.map { case (pl, i) =>
-      val arr = "[" + pl.mkString(", ") + "]"
-      s"CASE WHEN list_dot_product(emb, $arr) > 0 " +
-      s"THEN ${1 << i} ELSE 0 END"
-    }.mkString("\n    + ")
-    s"""WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS emb
-       |  FROM embeddings WHERE embedding IS NOT NULL),
-       |bk AS (SELECT vec_id, emb,
-       |    $bucket AS bucket
-       |  FROM base),
-       |$qidsSql,
-       |q AS (SELECT k.vec_id AS query_id, k.emb AS q_emb,
-       |    k.bucket AS q_bucket
-       |  FROM bk k JOIN qids s ON k.vec_id = s.vec_id),
-       |scored AS (SELECT query_id, vec_id AS neighbor_id,
-       |    ${sqlCosine("q_emb", "emb")} AS cos_sim
-       |  FROM bk JOIN q ON bucket = q_bucket AND vec_id <> query_id),
-       |ranked AS (SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-       |    ORDER BY cos_sim DESC, neighbor_id ASC) AS INT) AS rank
-       |  FROM scored)
-       |SELECT query_id, neighbor_id, cos_sim, rank FROM ranked
-       |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
-  }
-
-  /** Multi-probe LSH ANN ([[graft.ext.Similarity.lshMultiProbeTopK]],
-    * Lv et al. 2007): 8 planes, 4 probes — the query's own bucket
-    * plus the 3 buckets across its lowest-margin hyperplanes. The
-    * oracle replays the probe selection with a rank over the same
-    * IEEE margins and expands buckets with integer XOR, so the probe
-    * SET (not just the final ranking) is hash-verified. */
-  def sAnnLshMp(s: SparkSession, d: String): DataFrame = {
-    val e = embs(s, d)
-    Similarity.lshMultiProbeTopK(e,
-        Similarity.sampleQueryIds(
-          e.filter(col("embedding").isNotNull), n = 16),
-        k = 5, numPlanes = 8, nProbe = 4, seed = 42L, dim = 64)
-      .orderBy("query_id", "rank")
-  }
-
-  private val sAnnLshMpSql = {
-    val planes = Similarity.hyperplanes(numPlanes = 8, dim = 64,
-      seed = 42L)
-    def arr(pl: Seq[Double]) = "[" + pl.mkString(", ") + "]"
-    val bucket = planes.zipWithIndex.map { case (pl, i) =>
-      s"CASE WHEN list_dot_product(emb, ${arr(pl)}) > 0 " +
-      s"THEN ${1 << i} ELSE 0 END"
-    }.mkString("\n    + ")
-    val marginStructs = planes.zipWithIndex.map { case (pl, i) =>
-      s"{'m': abs(list_dot_product(q_emb, ${arr(pl)})), " +
-      s"'bit': ${1 << i}}"
-    }.mkString(",\n      ")
-    s"""WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS emb
-       |  FROM embeddings WHERE embedding IS NOT NULL),
-       |bk AS (SELECT vec_id, emb,
-       |    $bucket AS bucket
-       |  FROM base),
-       |$qidsSql,
-       |q AS (SELECT k.vec_id AS query_id, k.emb AS q_emb,
-       |    k.bucket AS q_bucket
-       |  FROM bk k JOIN qids s ON k.vec_id = s.vec_id),
-       |mg AS (SELECT query_id, q_bucket, unnest([
-       |      $marginStructs]) AS s
-       |  FROM q),
-       |fl AS (SELECT query_id, q_bucket, s.bit, row_number() OVER (
-       |    PARTITION BY query_id ORDER BY s.m ASC, s.bit ASC) AS rn
-       |  FROM mg),
-       |pr AS (SELECT query_id, q_bucket AS p_bucket FROM q
-       |  UNION ALL
-       |  SELECT query_id, xor(q_bucket, bit) FROM fl WHERE rn <= 3),
-       |scored AS (SELECT p.query_id, b.vec_id AS neighbor_id,
-       |    ${sqlCosine("q.q_emb", "b.emb")} AS cos_sim
-       |  FROM bk b JOIN pr p ON b.bucket = p.p_bucket
-       |  JOIN q ON q.query_id = p.query_id
-       |  WHERE b.vec_id <> p.query_id),
-       |ranked AS (SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-       |    ORDER BY cos_sim DESC, neighbor_id ASC) AS INT) AS rank
-       |  FROM scored)
-       |SELECT query_id, neighbor_id, cos_sim, rank FROM ranked
-       |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
-  }
-
-  /** One IVF catalog row: the [[IvfSpec]], the top-k, and for the
-    * ingest gates the `vec_id % n` split — the index is built on the
-    * rest (the manifest) and probed by the multiples of n, (new_id,
-    * match_id) out; the others search the standard 16-query sample. */
+  /** One IVF catalog row: the [[IvfSpec]], the top-k and the query
+    * set — the standard 16-id sample unless given. */
   private[queries] final case class IvfEntry(spec: IvfSpec, k: Int,
-      gateMod: Option[Int] = None)
+      queries: QuerySet = QuerySet.Sample(16))
 
-  /** The inverted-file family on raw or int8 vectors — one Spark
-    * implementation ([[Similarity.ivfSearch]], or
-    * [[Similarity.ivfBuild]] + [[Similarity.ivfProbe]] for the gates)
-    * and one oracle generator ([[IvfSpec.oracleSql]]) serve every row,
-    * so no two entries' coarse levels, probes or rankings can drift.
-    * Every score is rounded and every centroid an exact decimal mean
-    * (k-means fits unroll in the oracle), so each row is
-    * hash-verified. */
+  /** Every cosine top-k of the catalog, flat scan, LSH buckets or
+    * inverted file, on raw or int8 vectors — one Spark implementation
+    * ([[Similarity.ivfSearch]], or [[Similarity.ivfBuild]] +
+    * [[Similarity.ivfProbe]] for the gates) and one oracle generator
+    * ([[IvfSpec.oracleSql]]) serve every row, so no two entries' coarse
+    * levels, probes or rankings can drift. Every score is rounded,
+    * every centroid an exact decimal mean (k-means fits unroll in the
+    * oracle) and every hyperplane a plan literal the oracle inlines,
+    * so each row is hash-verified. */
   private[queries] val ivfEntries: Seq[(String, IvfEntry)] = {
     import Coarse._
+    val flat = IvfSpec(Exhaustive)
     val labels = IvfSpec(Labels(nprobe = 3))
     val int8 = labels.copy(codes = IvfCodes.Int8())
     Seq(
+      // the exact O(Q·C) reference: the one proportional query set
+      "s_ann_brute" -> IvfEntry(flat, 5, QuerySet.EveryNth(40)),
+      // every pair scored on the 72-byte int8 codes
+      "s_ann_int8" -> IvfEntry(flat.copy(codes = IvfCodes.Int8()), 5),
+      // per anchor, the nearest vectors of another label
+      "s_hard_negatives" -> IvfEntry(flat.copy(otherLabel = true), 5),
+      // 4 planes = 16 buckets, the query's own probed
+      "s_ann_lsh" -> IvfEntry(IvfSpec(Lsh(planes = 4, nprobe = 1,
+        seed = 42L)), 5),
+      // 8 planes, the own bucket + 3 lowest-margin flips
+      "s_ann_lsh_mp" -> IvfEntry(IvfSpec(Lsh(planes = 8, nprobe = 4,
+        seed = 42L)), 5),
       "s_ann_ivf" -> IvfEntry(labels, 5),
       // candidates restricted to vec_id % 3 = 0 (a stand-in metadata
       // predicate) over the unchanged index; nprobe widened 3 → 5 for
@@ -1325,20 +1168,26 @@ object TrainingData {
       // per-batch probe cost, flat as the manifest grows; k = ⌈√N⌉
       // bounds the build where k ∝ N outruns the refit cadence
       "s_ann_incremental" -> IvfEntry(
-        IvfSpec(Kmeans(PerRows(64), iters = 2, nprobe = 3)), 3, Some(10)),
+        IvfSpec(Kmeans(PerRows(64), iters = 2, nprobe = 3)), 3,
+        QuerySet.Gate(10)),
       "s_ann_incremental_sqrt" -> IvfEntry(
-        IvfSpec(Kmeans(SqrtRows, iters = 2, nprobe = 3)), 3, Some(10)))
+        IvfSpec(Kmeans(SqrtRows, iters = 2, nprobe = 3)), 3,
+        QuerySet.Gate(10)))
   }
 
   private def runIvf(entry: IvfEntry)(s: SparkSession, d: String)
       : DataFrame = {
     val e = embs(s, d)
-    entry.gateMod match {
-      case None =>
+    entry.queries match {
+      case QuerySet.Sample(n) =>
         Similarity.ivfSearch(entry.spec, e, Similarity.sampleQueryIds(
-            e.filter(col("embedding").isNotNull), n = 16), entry.k)
+            e.filter(col("embedding").isNotNull), n), entry.k)
           .orderBy("query_id", "rank")
-      case Some(n) =>
+      case QuerySet.EveryNth(n) =>
+        Similarity.ivfSearchWhere(entry.spec, e, col("vec_id") % n === 0,
+            entry.k)
+          .orderBy("query_id", "rank")
+      case QuerySet.Gate(n) =>
         Similarity.ivfProbe(entry.spec,
             Similarity.ivfBuild(entry.spec, e.filter(col("vec_id") % n =!= 0)),
             e.filter(col("vec_id") % n === 0), entry.k)
@@ -1509,7 +1358,8 @@ object TrainingData {
   /** ANN quality evaluation: recall@k of the LSH path against the
     * brute-force ground truth — the number that decides whether an
     * approximate index may replace the exact scan. Per query: how
-    * many of the true top-k neighbors the LSH probe recovered.
+    * many of the true top-k neighbors the LSH probe recovered. Both
+    * legs are [[Similarity.ivfSearch]] runs ([[recallLegs]]).
     *
     * Scale shape: the query set is a FIXED-size deterministic sample
     * ([[Similarity.sampleQueryIds]], |Q| = 16 here) — NOT a
@@ -1518,17 +1368,16 @@ object TrainingData {
     * would make the brute-force truth leg quadratic). The comparison
     * itself joins two k-rows-per-query frames on (query_id,
     * neighbor_id) and aggregates — negligible. NULL embeddings are
-    * dropped up front so BOTH legs see the identical corpus (lshTopK
-    * drops NULLs internally; the truth leg must match or a NULL
-    * vector could pad truth rows that approx can never hit). */
+    * dropped up front, so the sample is drawn from the corpus both
+    * legs search. */
   def sAnnRecall(s: SparkSession, d: String): DataFrame = {
     val e = embs(s, d).filter(col("embedding").isNotNull)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val qids = Similarity.sampleQueryIds(e, n = 16)
-    val truth = Similarity.bruteForceTopK(e, qids, k = 5)
+    val (truthSpec, approxSpec) = recallLegs
+    val truth = Similarity.ivfSearch(truthSpec, e, qids, k = 5)
       .select(col("query_id"), col("neighbor_id"))
-    val approx = Similarity.lshTopK(e, qids, k = 5,
-        numPlanes = 4, seed = 42L, dim = 64)
+    val approx = Similarity.ivfSearch(approxSpec, e, qids, k = 5)
       .select(col("query_id").as("aq"), col("neighbor_id").as("an"))
     val out = truth.join(approx,
         truth("query_id") === approx("aq") &&
@@ -1543,41 +1392,16 @@ object TrainingData {
     out
   }
 
+  /** `s_ann_recall`'s ground truth and approximate leg: the exhaustive
+    * scan and `s_ann_lsh`'s 4-plane buckets. */
+  private val recallLegs = (IvfSpec(Coarse.Exhaustive),
+    IvfSpec(Coarse.Lsh(planes = 4, nprobe = 1, seed = 42L)))
+
   private val sAnnRecallSql = {
-    // same plan-literal hyperplanes as sAnnLshSql — both inline
-    // Similarity.hyperplanes(4, 64, 42L), so they cannot drift
-    val planes = Similarity.hyperplanes(numPlanes = 4, dim = 64,
-      seed = 42L)
-    val bucket = planes.zipWithIndex.map { case (pl, i) =>
-      val arr = "[" + pl.mkString(", ") + "]"
-      s"CASE WHEN list_dot_product(emb, $arr) > 0 " +
-      s"THEN ${1 << i} ELSE 0 END"
-    }.mkString("\n    + ")
-    s"""WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS emb
-       |  FROM embeddings WHERE embedding IS NOT NULL),
-       |$qidsSql,
-       |q AS (SELECT b.vec_id AS query_id, b.emb AS q_emb
-       |  FROM base b JOIN qids s ON b.vec_id = s.vec_id),
-       |bscored AS (SELECT query_id, vec_id AS neighbor_id,
-       |    ${sqlCosine("q_emb", "emb")} AS cos_sim
-       |  FROM base CROSS JOIN q WHERE vec_id <> query_id),
-       |truth AS (SELECT query_id, neighbor_id FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY query_id
-       |      ORDER BY cos_sim DESC, neighbor_id ASC) AS rank
-       |    FROM bscored) WHERE rank <= 5),
-       |bk AS (SELECT vec_id, emb,
-       |    $bucket AS bucket
-       |  FROM base),
-       |qb AS (SELECT k.vec_id AS query_id, k.emb AS q_emb,
-       |    k.bucket AS q_bucket
-       |  FROM bk k JOIN qids s ON k.vec_id = s.vec_id),
-       |ascored AS (SELECT query_id, vec_id AS neighbor_id,
-       |    ${sqlCosine("q_emb", "emb")} AS cos_sim
-       |  FROM bk JOIN qb ON bucket = q_bucket AND vec_id <> query_id),
-       |approx AS (SELECT query_id, neighbor_id FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY query_id
-       |      ORDER BY cos_sim DESC, neighbor_id ASC) AS rank
-       |    FROM ascored) WHERE rank <= 5)
+    def leg(spec: IvfSpec) = "SELECT query_id, neighbor_id FROM (" +
+      IvfSpec.oracleSql(spec, 5, QuerySet.Sample(16)) + ")"
+    s"""WITH truth AS (${leg(recallLegs._1)}),
+       |approx AS (${leg(recallLegs._2)})
        |SELECT t.query_id, count(*) AS n_truth,
        |  count(a.neighbor_id) AS n_hits,
        |  round(count(a.neighbor_id)::DOUBLE / count(*), 6) AS recall
@@ -1585,39 +1409,6 @@ object TrainingData {
        |  ON a.query_id = t.query_id AND a.neighbor_id = t.neighbor_id
        |GROUP BY t.query_id ORDER BY t.query_id""".stripMargin
   }
-
-  /** Hard-negative mining (contrastive-training data prep): per
-    * anchor, the top-k nearest vectors of a different label. This is
-    * the exact-scan BASELINE with the fixed deterministic anchor
-    * sample (|Q| = 16, [[Similarity.sampleQueryIds]] — same r6
-    * treatment as `s_ann_int8`): O(|Q|·|C|) work, a bounded broadcast
-    * anchor frame, linear in the corpus. The production scale path is
-    * `s_hard_negatives_ivf` ([[IvfSpec]] with `otherLabel`). */
-  def sHardNegatives(s: SparkSession, d: String): DataFrame = {
-    val e = embs(s, d)
-    Similarity.hardNegatives(e,
-        Similarity.sampleQueryIds(
-          e.filter(col("embedding").isNotNull), n = 16), k = 5)
-      .orderBy("query_id", "rank")
-  }
-
-  private val sHardNegativesSql =
-    s"""WITH base AS (SELECT vec_id, label, embedding::DOUBLE[] AS emb
-       |  FROM embeddings WHERE embedding IS NOT NULL),
-       |$qidsSql,
-       |q AS (SELECT b.vec_id AS query_id, b.label AS q_label,
-       |    b.emb AS q_emb
-       |  FROM base b JOIN qids s ON b.vec_id = s.vec_id),
-       |scored AS (SELECT query_id, vec_id AS neighbor_id,
-       |    label AS neg_label,
-       |    ${sqlCosine("q_emb", "emb")} AS cos_sim
-       |  FROM base CROSS JOIN q
-       |  WHERE vec_id <> query_id AND label <> q_label),
-       |ranked AS (SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-       |    ORDER BY cos_sim DESC, neighbor_id ASC) AS INT) AS rank
-       |  FROM scored)
-       |SELECT query_id, neighbor_id, neg_label, cos_sim, rank
-       |FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
 
   /** One SemDeDup catalog row: the [[SemDedupSpec]], and for the
     * ingest gate the `vec_id % n` split — the state is fitted on the
@@ -3125,14 +2916,17 @@ object TrainingData {
     * ([[graft.ext.Retrieval.rrfFuse]], Cormack et al. 2009): each
     * query carries BOTH a term set (the [[dBm25]] literals) and a
     * query vector (testdata aligns `vec_id` with `doc_id`, so qid i's
-    * vector is embedding 10·(i+1)); the BM25 leg and the brute-force
-    * cosine leg each return top-10, and RRF fuses them in rank space
-    * — integer micro-unit contributions floor(1e9/(60+rk)+0.5), so
-    * the fused ordering is exact cross-engine. The dense leg here is
-    * the fixed-|Q| brute form; at scale it swaps for
-    * [[graft.ext.Similarity.pqSearch]] without touching the fusion
-    * (rank-space legs are interchangeable by construction). */
-  def sHybridRrf(s: SparkSession, d: String): DataFrame = {
+    * vector is embedding 10·(i+1)); the BM25 leg and the `dense`
+    * cosine leg ([[Similarity.ivfSearch]]) each return top-10, and RRF
+    * fuses them in rank space — integer micro-unit contributions
+    * floor(1e9/(60+rk)+0.5), so the fused ordering is exact
+    * cross-engine. Rank-space legs are interchangeable by
+    * construction: `s_hybrid_rrf` fuses the exhaustive scan,
+    * `s_hybrid_rrf_ivf` label cells at nprobe 3 — the production
+    * composition at scale (the coarse index eats the
+    * corpus-proportional work; fusion cost is unchanged). */
+  private def hybridRrf(dense: IvfSpec)(s: SparkSession, d: String)
+      : DataFrame = {
     import s.implicits._
     val terms = Seq(
       (0L, "sort"), (0L, "merge"), (0L, "join"),
@@ -3144,66 +2938,28 @@ object TrainingData {
     val sparse = graft.ext.Retrieval.bm25TopK(docs(s, d), terms,
         k = 10, k1 = 1.5, b = 0.75)
       .select(col("qid"), col("doc_id"), col("rk"))
-    val dense = Similarity.bruteForceTopK(embs(s, d),
+    val denseLeg = Similarity.ivfSearch(dense, embs(s, d),
         qmap.select(col("qvec_id").as("vec_id")), k = 10)
       .join(broadcast(qmap), col("query_id") === col("qvec_id"))
       .select(col("qid"), col("neighbor_id").as("doc_id"),
         col("rank").cast("long").as("rk"))
-    graft.ext.Retrieval.rrfFuse(Seq(sparse, dense), k = 10)
+    graft.ext.Retrieval.rrfFuse(Seq(sparse, denseLeg), k = 10)
       .orderBy("qid", "rk")
   }
 
-  /** [[sHybridRrf]] with the dense leg swapped brute → IVF
-    * ([[graft.ext.Similarity.ivfSearch]] on label cells, nprobe 3) — the
-    * leg-interchangeability claim made CONCRETE and hash-verified:
-    * same query set, same fusion, only `dr` changes. This is the
-    * production composition at scale (the coarse index eats the
-    * corpus-proportional work; fusion cost is unchanged). */
-  def sHybridRrfIvf(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val terms = Seq(
-      (0L, "sort"), (0L, "merge"), (0L, "join"),
-      (1L, "fast"), (1L, "query"),
-      (2L, "vector"), (2L, "stream"), (2L, "data"))
-      .toDF("qid", "term")
-    val qmap = Seq((0L, 10L), (1L, 20L), (2L, 30L))
-      .toDF("qid", "qvec_id")
-    val sparse = graft.ext.Retrieval.bm25TopK(docs(s, d), terms,
-        k = 10, k1 = 1.5, b = 0.75)
-      .select(col("qid"), col("doc_id"), col("rk"))
-    val dense = Similarity.ivfSearch(IvfSpec(Coarse.Labels(nprobe = 3)),
-        embs(s, d), qmap.select(col("qvec_id").as("vec_id")), k = 10)
-      .join(broadcast(qmap), col("query_id") === col("qvec_id"))
-      .select(col("qid"), col("neighbor_id").as("doc_id"),
-        col("rank").cast("long").as("rk"))
-    graft.ext.Retrieval.rrfFuse(Seq(sparse, dense), k = 10)
-      .orderBy("qid", "rk")
-  }
+  /** The RRF hybrids' dense legs, by entry. */
+  private val hybridEntries = Seq(
+    "s_hybrid_rrf" -> IvfSpec(Coarse.Exhaustive),
+    "s_hybrid_rrf_ivf" -> IvfSpec(Coarse.Labels(nprobe = 3)))
 
-  // the dense leg reuses the IVF oracle's coarse fragments
-  private val sHybridRrfIvfSql = hybridRrfSqlWith(
-    s"""ibase AS (SELECT vec_id, label, embedding::DOUBLE[] AS emb
-      |  FROM embeddings WHERE embedding IS NOT NULL),
-      |${Coarse.centroidsSql("ibase", 64)},
-      |${Coarse.probedSql("probed", "qd q CROSS JOIN cent c",
-          Seq("q.qid", "q.qvec_id", "q.q_emb", "c.label"),
-          sqlCosine("q.q_emb", "c.centroid"), Seq("qid"), "label", "3")},
-      |dscored AS (SELECT p.qid, b.vec_id AS doc_id,
-      |    round(list_dot_product(p.q_emb, b.emb) /
-      |      (sqrt(list_dot_product(p.q_emb, p.q_emb)) *
-      |       sqrt(list_dot_product(b.emb, b.emb))), 6) AS cos_sim
-      |  FROM ibase b JOIN probed p ON b.label = p.label
-      |  WHERE b.vec_id <> p.qvec_id),
-      |dr AS (SELECT qid, doc_id, row_number() OVER (
-      |    PARTITION BY qid ORDER BY cos_sim DESC, doc_id) AS rk
-      |  FROM dscored)""".stripMargin)
-
-  /** Shared oracle builder for the RRF hybrids: the BM25 chain and
-    * the fusion are identical across variants; `denseCtes` supplies
-    * the dense leg ending in a CTE `dr` with (qid, doc_id, rk) —
-    * exactly the leg-interchangeability contract the Spark operator
-    * makes ([[graft.ext.Retrieval.rrfFuse]] takes any ranked frame). */
-  private def hybridRrfSqlWith(denseCtes: String): String =
+  /** The RRF hybrids' oracle: the BM25 chain and the fusion around the
+    * `dense` leg, which is the [[IvfSpec]] oracle fed the `qv` ids and
+    * re-keyed to (qid, doc_id, rk) as `dr` — the
+    * leg-interchangeability contract [[graft.ext.Retrieval.rrfFuse]]
+    * makes (it takes any ranked frame). */
+  private def hybridRrfSql(dense: IvfSpec): String = {
+    val leg = IvfSpec.searchSql(dense, 10,
+      "qids AS (SELECT qvec_id AS vec_id FROM qv)")
     s"""WITH q(qid, term) AS (VALUES
        |    (CAST(0 AS BIGINT), 'sort'), (0, 'merge'), (0, 'join'),
        |    (1, 'fast'), (1, 'query'),
@@ -3233,11 +2989,8 @@ object TrainingData {
        |sr AS (SELECT qid, doc_id, row_number() OVER (
        |    PARTITION BY qid ORDER BY score DESC, doc_id) AS rk
        |  FROM bagg),
-       |base AS (SELECT vec_id, embedding::DOUBLE[] AS emb
-       |  FROM embeddings),
-       |qd AS (SELECT qv.qid, qv.qvec_id, b.emb AS q_emb
-       |  FROM base b JOIN qv ON b.vec_id = qv.qvec_id),
-       |$denseCtes,
+       |dr AS (SELECT qv.qid, d.neighbor_id AS doc_id, d.rank AS rk
+       |  FROM ($leg) d JOIN qv ON d.query_id = qv.qvec_id),
        |legs AS (
        |  SELECT qid, doc_id,
        |    CAST(floor(1e9 / (60 + rk) + 0.5) AS BIGINT) AS contrib
@@ -3256,16 +3009,7 @@ object TrainingData {
        |SELECT qid, doc_id, rrf, CAST(n_legs AS BIGINT) AS n_legs,
        |  CAST(rk AS BIGINT) AS rk
        |FROM r WHERE rk <= 10 ORDER BY qid, rk""".stripMargin
-
-  private val sHybridRrfSql = hybridRrfSqlWith(
-    """dscored AS (SELECT qd.qid, b.vec_id AS doc_id,
-      |    round(list_dot_product(q_emb, emb) /
-      |      (sqrt(list_dot_product(q_emb, q_emb)) *
-      |       sqrt(list_dot_product(emb, emb))), 6) AS cos_sim
-      |  FROM base b CROSS JOIN qd WHERE b.vec_id <> qd.qvec_id),
-      |dr AS (SELECT qid, doc_id, row_number() OVER (
-      |    PARTITION BY qid ORDER BY cos_sim DESC, doc_id) AS rk
-      |  FROM dscored)""".stripMargin)
+  }
 
   /** Benchmark decontamination: find corpus documents sharing any
     * 5-gram with a held-out eval set (doc_id % 10 == 0 stands in for
@@ -4484,8 +4228,6 @@ object TrainingData {
     "d_phrase_search_sampled" -> (dPhraseSearchSampled _),
     "d_phrase_index_scan" -> (dPhraseIndexScan _),
     "d_phrase_index_auto" -> (dPhraseIndexAuto _),
-    "s_hybrid_rrf" -> (sHybridRrf _),
-    "s_hybrid_rrf_ivf" -> (sHybridRrfIvf _),
     "d_dedup_recall" -> (dDedupRecall _),
     "d_neardup_pipeline" -> (dNeardupPipeline _),
     "d_corpus_card" -> (dCorpusCard _),
@@ -4496,12 +4238,8 @@ object TrainingData {
     "d_langid" -> (dLangId _),
     "d_fingerprint" -> (dFingerprint _),
     "d_winnowing" -> (dWinnowing _),
-    "s_ann_brute" -> (sAnnBrute _),
     "s_kcenter" -> (sKcenter _),
     "s_ann_mips" -> (sAnnMips _),
-    "s_ann_int8" -> (sAnnInt8 _),
-    "s_ann_lsh" -> (sAnnLsh _),
-    "s_ann_lsh_mp" -> (sAnnLshMp _),
     "d_embed_cov" -> (dEmbedCov _),
     "d_embed_dups" -> (dEmbedDups _),
     "d_embed_decontaminate" -> (dEmbedDecontaminate _),
@@ -4545,7 +4283,6 @@ object TrainingData {
     "d_chunk_dedup" -> (dChunkDedup _),
     "d_kl_sources" -> (dKlSources _),
     "s_ann_recall" -> (sAnnRecall _),
-    "s_hard_negatives" -> (sHardNegatives _),
     "d_pack_greedy" -> (dPackGreedy _),
     "d_pii_redact" -> (dPiiRedact _),
     "d_mix_sources" -> (dMixSources _),
@@ -4559,6 +4296,7 @@ object TrainingData {
     "m_phash_dups" -> (mPhashDups _),
   ) ++ pqEntries.map { case (n, e) => n -> (runPq(n, e) _) } ++
     ivfEntries.map { case (n, e) => n -> (runIvf(e) _) } ++
+    hybridEntries.map { case (n, e) => n -> (hybridRrf(e) _) } ++
     semDedupEntries.map { case (n, e) =>
       n -> ((s: SparkSession, d: String) => runSemDedup(e)(embs(s, d)))
     }
@@ -4580,8 +4318,6 @@ object TrainingData {
     // from a different physical layout — same oracle by design
     "d_phrase_index_scan" -> dPhraseSearchSampledSql,
     "d_phrase_index_auto" -> dPhraseIndexAutoSql,
-    "s_hybrid_rrf" -> sHybridRrfSql,
-    "s_hybrid_rrf_ivf" -> sHybridRrfIvfSql,
     "d_dedup_recall" -> dDedupRecallSql,
     "d_neardup_pipeline" -> dNeardupPipelineSql,
     "d_corpus_card" -> dCorpusCardSql,
@@ -4631,16 +4367,11 @@ object TrainingData {
     "d_chunk_dedup" -> dChunkDedupSql,
     "d_kl_sources" -> dKlSourcesSql,
     "s_ann_recall" -> sAnnRecallSql,
-    "s_hard_negatives" -> sHardNegativesSql,
     "d_pack_greedy" -> dPackGreedySql,
     "d_pii_redact" -> dPiiRedactSql,
     "d_mix_sources" -> dMixSourcesSql,
-    "s_ann_brute" -> sAnnBruteSql,
     "s_kcenter" -> sKcenterSql(8),
     "s_ann_mips" -> sAnnMipsSql,
-    "s_ann_int8" -> sAnnInt8Sql,
-    "s_ann_lsh" -> sAnnLshSql,
-    "s_ann_lsh_mp" -> sAnnLshMpSql,
     "d_embed_cov" -> dEmbedCovSql,
     "d_embed_dups" -> dEmbedDupsSql,
     "d_embed_dups_auto" -> dEmbedDupsAutoSql,
@@ -4659,7 +4390,8 @@ object TrainingData {
     case (n, e) if !e.trainOpq => n -> PqSpec.oracleSql(e.spec, PqTopK,
       fitWhere = e.appendMod.map(m => s"vec_id % $m <> 0"))
   } ++ ivfEntries.map { case (n, e) =>
-    n -> IvfSpec.oracleSql(e.spec, e.k, e.gateMod)
+    n -> IvfSpec.oracleSql(e.spec, e.k, e.queries)
+  } ++ hybridEntries.map { case (n, e) => n -> hybridRrfSql(e)
   } ++ semDedupEntries.map { case (n, e) =>
     n -> SemDedupSpec.oracleSql(e.spec, e.split)
   }

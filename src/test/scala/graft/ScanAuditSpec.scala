@@ -104,8 +104,9 @@ class ScanAuditSpec extends SparkSpec {
   test("brute-force ANN: the embeddings scan ships only " +
       "(vec_id, embedding) — label is pruned") {
     import org.apache.spark.sql.functions.col
-    val df = ext.Similarity.bruteForceTopK(
-      Tables.embeddings(spark, sf0001), col("vec_id") % 40 === 0, 5)
+    val emb = Tables.embeddings(spark, sf0001)
+    val df = ext.Similarity.ivfSearch(ext.IvfSpec(ext.Coarse.Exhaustive),
+      emb, emb.filter(col("vec_id") % 40 === 0).select("vec_id"), 5)
     val (cols, _) = scanOf(df, "embeddings")
     assert(cols == Set("vec_id", "embedding"), s"scan widened to $cols")
   }
@@ -120,7 +121,7 @@ class ScanAuditSpec extends SparkSpec {
 
   test("s_hybrid_rrf: both legs' scans stay minimal — documents " +
       "(doc_id, text), embeddings (vec_id, embedding)") {
-    val df = queries.TrainingData.sHybridRrf(spark, sf0001)
+    val df = queries.TrainingData.queries("s_hybrid_rrf")(spark, sf0001)
     val (docCols, _) = scanOf(df, "documents")
     assert(docCols == Set("doc_id", "text"),
       s"documents scan widened to $docCols")

@@ -13,7 +13,14 @@ class SimilaritySpec extends SparkSpec {
   private val pq64 = PqSpec(m = 16, kSub = 32, iters = 2)
   private val ivf64 = pq64.copy(coarse = Some(Coarse.Labels(nprobe = 3)))
 
-  // the IVF family's spec shorthands
+  // the IVF family's spec shorthands: the flat scan, LSH buckets (seed
+  // 42, 64 dims), label cells
+  private val flat = IvfSpec(Coarse.Exhaustive)
+  private def lsh(planes: Int, nprobe: Int = 1) =
+    IvfSpec(Coarse.Lsh(planes, nprobe, seed = 42L))
+  // the query-id frame of a predicate
+  private def idsOf(df: org.apache.spark.sql.DataFrame,
+      pred: org.apache.spark.sql.Column) = df.filter(pred).select("vec_id")
   private def labels(nprobe: Int, filter: Option[AnnFilter] = None) =
     IvfSpec(Coarse.Labels(nprobe), filter = filter)
   private def twoLevel(nprobe1: Int, nprobe2: Int, k2: Int, iters: Int) =
@@ -46,7 +53,8 @@ class SimilaritySpec extends SparkSpec {
       (2L, Seq(0.9f, 0.1f, 0.0f)),   // close
       (3L, Seq(0.0f, 0.0f, 1.0f)))   // orthogonal
       .toDF("vec_id", "embedding")
-    val got = Similarity.bruteForceTopK(vecs, col("vec_id") === 0, 3)
+    val got = Similarity.ivfSearch(flat, vecs,
+        idsOf(vecs, col("vec_id") === 0), 3)
       .select("neighbor_id", "rank").as[(Long, Int)].collect()
       .sortBy(_._2)
     assert(got.map(_._1).toSeq == Seq(1L, 2L, 3L))
@@ -55,15 +63,15 @@ class SimilaritySpec extends SparkSpec {
   test("LSH top-k returns a subset of brute-force candidates with " +
       "correct ranking within the bucket") {
     val emb = graft.Tables.embeddings(spark, sf0001)
-    val brute = Similarity.bruteForceTopK(emb, col("vec_id") % 100 === 0, 5)
+    val qids = idsOf(emb, col("vec_id") % 100 === 0)
+    val brute = Similarity.ivfSearch(flat, emb, qids, 5)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val lsh = Similarity.lshTopK(emb, col("vec_id") % 100 === 0, 5,
-      numPlanes = 2, seed = 42L)
+    val got = Similarity.ivfSearch(lsh(planes = 2), emb, qids, 5)
       .select("query_id", "neighbor_id", "rank")
       .as[(Long, Long, Int)].collect()
-    assert(lsh.nonEmpty)
+    assert(got.nonEmpty)
     // recall with 2 planes (4 buckets) should be substantial
-    val recall = lsh.count(r => brute.contains((r._1, r._2))).toDouble /
+    val recall = got.count(r => brute.contains((r._1, r._2))).toDouble /
       math.max(brute.size, 1)
     assert(recall > 0.2, s"LSH recall too low: $recall")
   }
@@ -77,17 +85,12 @@ class SimilaritySpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "neighbor_id", "rank")
         .as[(Long, Long, Int)].collect().toSet
-    // degradation: one probe IS the plain bucketed search
-    val single = rows(Similarity.lshTopK(emb, qids, 5,
-      numPlanes = 8, seed = 42L, dim = 64))
-    val mp1 = rows(Similarity.lshMultiProbeTopK(emb, qids, 5,
-      numPlanes = 8, nProbe = 1, seed = 42L, dim = 64))
-    assert(mp1 == single, "nProbe=1 must equal lshTopK")
+    // one probe IS the plain bucketed search: the same spec field
+    val single = rows(Similarity.ivfSearch(lsh(8, nprobe = 1), emb, qids, 5))
     // monotone: a probed bucket set is a superset, so every
     // single-probe neighbor survives (rank may only improve) and
     // per-query result counts never shrink
-    val mp4 = rows(Similarity.lshMultiProbeTopK(emb, qids, 5,
-      numPlanes = 8, nProbe = 4, seed = 42L, dim = 64))
+    val mp4 = rows(Similarity.ivfSearch(lsh(8, nprobe = 4), emb, qids, 5))
     val mp4Pairs = mp4.map(r => (r._1, r._2))
     val singleByQ = single.groupBy(_._1)
     val mp4ByQ = mp4.groupBy(_._1)
@@ -98,7 +101,7 @@ class SimilaritySpec extends SparkSpec {
     // recall against brute-force ground truth strictly improves on
     // this corpus (8 planes = 256 buckets over 50 vectors leaves
     // most queries alone in their bucket; the flips rescue them)
-    val brute = rows(Similarity.bruteForceTopK(emb, qids, 5))
+    val brute = rows(Similarity.ivfSearch(flat, emb, qids, 5))
       .map(r => (r._1, r._2))
     val rSingle = single.map(r => (r._1, r._2))
       .count(brute.contains).toDouble / brute.size
@@ -107,10 +110,108 @@ class SimilaritySpec extends SparkSpec {
       s"multi-probe recall $rMp must beat single-probe $rSingle")
   }
 
+  test("flat and LSH specs on a fixture with exact ties, a NULL and a " +
+      "zero vector: every catalog shape matches a top-k computed from " +
+      "the collected vectors") {
+    // 64 dims (the LSH planes' width), labels id % 3; 5 is an exact
+    // twin of 2, so query 3 (near 2) ranks the two at one score, ties
+    // by id; 7 is NULL, 11 the zero vector; the queries include all
+    val rnd = new scala.util.Random(7)
+    val raw = Seq.fill(30)(Seq.fill(64)(rnd.nextGaussian().toFloat))
+    val vecs = (0 until 30).map { i =>
+      val e = i match {
+        case 3 => Some(raw(2).zip(raw(3)).map { case (a, b) => a + b / 10 })
+        case 5 => Some(raw(2))
+        case 7 => None
+        case 11 => Some(Seq.fill(64)(0f))
+        case _ => Some(raw(i))
+      }
+      (i.toLong, e, i % 3)
+    }
+    val df = vecs.toDF("vec_id", "embedding", "label")
+    val queries = Seq(0L, 2L, 3L, 5L, 7L, 11L, 16L)
+    val qids = queries.toDF("vec_id")
+    val label = vecs.map(r => r._1 -> r._3).toMap
+    def dot(a: Seq[Double], b: Seq[Double]) =
+      a.zip(b).foldLeft(0.0) { case (s, (x, y)) => s + x * y }
+    // the NULL and the zero vector drop: neither has a cosine
+    val emb = vecs.collect { case (id, Some(e), _) =>
+      id -> e.map(_.toDouble) }.toMap.filter { case (_, e) => dot(e, e) > 0 }
+    def round6(x: Double) =
+      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    def cos(a: Seq[Double], b: Seq[Double]) =
+      dot(a, b) / (math.sqrt(dot(a, a)) * math.sqrt(dot(b, b)))
+    // the int8 codes: max-abs scale, round half away from zero; the
+    // int8 score is the cosine of the codes
+    val codes = emb.map { case (id, e) =>
+      val s = e.map(math.abs).max
+      id -> e.map { x =>
+        val v = x * 127.0 / s
+        if (v >= 0) math.floor(v + 0.5) else -math.floor(-v + 0.5)
+      }
+    }
+    // top-5 per query over `cand` by rounded score DESC, then id
+    def topK(vs: Map[Long, Seq[Double]], cand: (Long, Long) => Boolean) =
+      queries.filter(vs.contains).flatMap { q =>
+        vs.keys.toSeq.filter(n => n != q && cand(q, n))
+          .map(n => (n, round6(cos(vs(q), vs(n)))))
+          .sortBy { case (n, s) => (-s, n) }
+          .take(5).zipWithIndex.map { case ((n, s), r) => (q, n, s, r + 1) }
+      }.toSet
+    def run(spec: IvfSpec) = Similarity.ivfSearch(spec, df, qids, 5)
+      .select("query_id", "neighbor_id", "cos_sim", "rank")
+      .as[(Long, Long, Double, Int)].collect().toSet
+    val any = (_: Long, _: Long) => true
+    val exact = run(flat)
+    val top2 = exact.filter(r => r._1 == 3L && r._4 <= 2).toSeq.sortBy(_._4)
+    assert(top2.map(_._2) == Seq(2L, 5L) && top2.map(_._3).distinct.size == 1,
+      s"the twins must lead query 3 at one score, by id: $top2")
+    assert(exact == topK(emb, any), "exact")
+    assert(run(flat.copy(codes = IvfCodes.Int8())) == topK(codes, any),
+      "int8")
+    val neg = flat.copy(otherLabel = true)
+    assert(run(neg) == topK(emb, (q, n) => label(q) != label(n)),
+      "otherLabel")
+    assert(Similarity.ivfSearch(neg, df, qids, 5)
+      .select("neighbor_id", "neg_label").as[(Long, Int)].collect()
+      .forall { case (n, l) => label(n) == l }, "neg_label")
+    // LSH: the bucket is the sign pattern of the plane dots; a query
+    // probes its own bucket and flips its lowest-|margin| bits
+    for (c <- Seq(Coarse.Lsh(4, 1, 42L), Coarse.Lsh(8, 4, 42L))) {
+      val planes = c.hyperplanes
+      def bucket(e: Seq[Double]) = planes.zipWithIndex
+        .map { case (p, i) => if (dot(e, p) > 0) 1 << i else 0 }.sum
+      def probed(e: Seq[Double]) = {
+        val own = bucket(e)
+        val flips = planes.zipWithIndex
+          .map { case (p, i) => (math.abs(dot(e, p)), 1 << i) }
+          .sorted.take(c.nprobe - 1).map(_._2)
+        (own +: flips.map(own ^ _)).toSet
+      }
+      val got = run(IvfSpec(c))
+      assert(got.forall { case (q, n, _, _) =>
+        probed(emb(q)).contains(bucket(emb(n))) },
+        s"$c: a neighbor outside the probed buckets")
+      assert(got == topK(emb,
+        (q, n) => probed(emb(q)).contains(bucket(emb(n)))), s"$c")
+    }
+  }
+
+  test("an LSH spec fails loudly on an embedding of the wrong dim") {
+    val df = Seq((0L, Seq.fill(8)(1.0f)), (1L, Seq.fill(8)(0.5f)))
+      .toDF("vec_id", "embedding")
+    val e = intercept[Exception](Similarity.ivfSearch(lsh(4), df,
+      Seq(0L).toDF("vec_id"), 5).collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => Option(t.getMessage)
+        .exists(_.contains("Coarse.Lsh: embedding dim != 64"))),
+      s"no dim message in $e")
+  }
+
   test("IVF top-k probes centroids and returns ranked neighbors") {
     val emb = graft.Tables.embeddings(spark, sf0001)
     val isQ = col("vec_id") % 100 === 0
-    val brute = Similarity.bruteForceTopK(emb, isQ, 5)
+    val brute = Similarity.ivfSearch(flat, emb, idsOf(emb, isQ), 5)
     val b = brute.select("query_id", "neighbor_id", "rank")
       .as[(Long, Long, Int)].collect().toSet
     val nLabels = emb.filter(col("embedding").isNotNull)
@@ -226,8 +327,8 @@ class SimilaritySpec extends SparkSpec {
       .select("query_id", "neighbor_id", "rank")
       .as[(Long, Long, Int)].collect().toSet
     val qset = qids.as[Long].collect().toSet
-    val brute = Similarity.bruteForceTopK(nn,
-        col("vec_id").isin(qset.toSeq: _*), 5)
+    val brute = Similarity.ivfSearch(flat, nn,
+        idsOf(nn, col("vec_id").isin(qset.toSeq: _*)), 5)
       .select("query_id", "neighbor_id", "rank")
       .as[(Long, Long, Int)].collect().toSet
     assert(all == brute,
@@ -543,23 +644,6 @@ class SimilaritySpec extends SparkSpec {
     assert(Similarity.sampleQueryIds(emb.limit(5), 16).count() == 5)
   }
 
-  test("query-id-frame overloads of bruteForceTopK and lshTopK match " +
-      "the predicate forms on the same query set") {
-    val emb = graft.Tables.embeddings(spark, sf0001)
-      .filter(col("embedding").isNotNull)
-    val qids = Similarity.sampleQueryIds(emb, 8).localCheckpoint()
-    val idSet = qids.as[Long].collect().toSet
-    val pred = col("vec_id").isInCollection(idSet)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("query_id", "neighbor_id", "rank")
-        .as[(Long, Long, Int)].collect().toSet
-    assert(rows(Similarity.bruteForceTopK(emb, qids, 5)) ==
-      rows(Similarity.bruteForceTopK(emb, pred, 5)))
-    assert(rows(Similarity.lshTopK(emb, qids, 5, numPlanes = 4,
-        seed = 42L, dim = 64)) ==
-      rows(Similarity.lshTopK(emb, pred, 5, numPlanes = 4, seed = 42L)))
-  }
-
   test("hard negatives drop NULL embeddings on both sides") {
     val vecs = Seq(
       (0L, Some(Seq(1.0f, 0.0f, 0.0f)), 1),  // anchor, label 1
@@ -568,8 +652,8 @@ class SimilaritySpec extends SparkSpec {
       (3L, None, 2),                          // NULL other-label vector
       (4L, Some(Seq(0.0f, 0.0f, 1.0f)), 3))
       .toDF("vec_id", "embedding", "label")
-    val got = Similarity.hardNegatives(vecs,
-        col("vec_id").isin(0L, 1L), k = 5)
+    val got = Similarity.ivfSearch(flat.copy(otherLabel = true), vecs,
+        idsOf(vecs, col("vec_id").isin(0L, 1L)), k = 5)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect()
     // the NULL anchor emits no rows; the NULL neighbor never appears
     assert(got.forall(_._1 == 0L), "NULL anchor must emit nothing")
@@ -586,7 +670,8 @@ class SimilaritySpec extends SparkSpec {
       (3L, Seq(0.5f, 0.5f, 0.0f), 2),
       (4L, Seq(0.0f, 0.0f, 1.0f), 3))  // orthogonal, other label
       .toDF("vec_id", "embedding", "label")
-    val got = Similarity.hardNegatives(vecs, col("vec_id") === 0, k = 2)
+    val got = Similarity.ivfSearch(flat.copy(otherLabel = true), vecs,
+        idsOf(vecs, col("vec_id") === 0), k = 2)
       .select("neighbor_id", "neg_label", "rank")
       .as[(Long, Int, Int)].collect().sortBy(_._3)
     // the same-label twin (id 1) must NOT appear despite cos = 1
@@ -617,13 +702,11 @@ class SimilaritySpec extends SparkSpec {
     val emb = graft.Tables.embeddings(spark, sf0001)
       .filter(col("embedding").isNotNull)
     val qids = Similarity.sampleQueryIds(emb, 8).localCheckpoint()
-    val idSet = qids.as[Long].collect().toSet
-    val pred = col("vec_id").isInCollection(idSet)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "neighbor_id", "rank")
         .as[(Long, Long, Int)].collect().toSet
-    val brute = rows(Similarity.int8TopK(emb, qids, 5))
-    assert(brute == rows(Similarity.int8TopK(emb, pred, 5)))
+    val brute = rows(Similarity.ivfSearch(
+      flat.copy(codes = IvfCodes.Int8()), emb, qids, 5))
     // nprobe >= the label count means IVF prunes nothing — the
     // composition must then reproduce the exact int8 scan, proving
     // the only difference is the candidate pruning
@@ -645,7 +728,8 @@ class SimilaritySpec extends SparkSpec {
       (3L, None),                                      // NULL embedding
       (4L, Some(Seq(Option(0.5f), None, Option(0.1f))))) // NULL element
       .toDF("vec_id", "embedding")
-    val got = Similarity.int8TopK(vecs, col("vec_id") <= 1L, 5)
+    val got = Similarity.ivfSearch(flat.copy(codes = IvfCodes.Int8()), vecs,
+        idsOf(vecs, col("vec_id") <= 1L), 5)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect()
     // the zero-norm query (1) emits nothing — in Spark its cosine is
     // NULL (0/0), in DuckDB NaN/inf: dropping it is what keeps the
@@ -658,11 +742,12 @@ class SimilaritySpec extends SparkSpec {
   test("int8 top-k: quantized cosine tracks exact cosine and recall@5 " +
       "vs brute force stays high") {
     val emb = graft.Tables.embeddings(spark, sf0001)
-    val isQ = col("vec_id") % 40 === 0
-    val brute = Similarity.bruteForceTopK(emb, isQ, 5)
+    val q40 = idsOf(emb, col("vec_id") % 40 === 0)
+    val brute = Similarity.ivfSearch(flat, emb, q40, 5)
       .select("query_id", "neighbor_id", "cos_sim")
       .as[(Long, Long, Double)].collect()
-    val i8 = Similarity.int8TopK(emb, isQ, 5)
+    val i8 = Similarity.ivfSearch(flat.copy(codes = IvfCodes.Int8()), emb,
+        q40, 5)
       .select("query_id", "neighbor_id", "cos_sim")
       .as[(Long, Long, Double)].collect()
     assert(i8.length == brute.length)
@@ -702,7 +787,8 @@ class SimilaritySpec extends SparkSpec {
       assert(nl != labelOf(q), s"anchor $q got a same-label negative $n")
       assert(n != q)
     }
-    val brute = Similarity.hardNegatives(emb, qids, k = 5)
+    val brute = Similarity.ivfSearch(flat.copy(otherLabel = true), emb,
+        qids, k = 5)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     val fullSet = full.map(r => (r._1, r._2)).toSet
     val recall = fullSet.count(brute.contains).toDouble / brute.size
@@ -724,20 +810,6 @@ class SimilaritySpec extends SparkSpec {
     assert(pruned.groupBy(_._1).values
       .forall(rs => rs.map(_._3).distinct.length == 1),
       "nprobe=1 negatives must all come from one label partition")
-  }
-
-  test("fixed-Q hard negatives overload matches the predicate form " +
-      "on the same anchor set") {
-    val emb = graft.Tables.embeddings(spark, sf0001)
-      .filter(col("embedding").isNotNull)
-    val qids = Similarity.sampleQueryIds(emb, 8).localCheckpoint()
-    val idSet = qids.as[Long].collect().toSet
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("query_id", "neighbor_id", "rank")
-        .as[(Long, Long, Int)].collect().toSet
-    assert(rows(Similarity.hardNegatives(emb, qids, 5)) ==
-      rows(Similarity.hardNegatives(emb,
-        col("vec_id").isInCollection(idSet), 5)))
   }
 
   test("L2 assignment picks the nearest centroid with smallest-cid " +
@@ -800,7 +872,7 @@ class SimilaritySpec extends SparkSpec {
     val emb = graft.Tables.embeddings(spark, sf0001)
     val nn = emb.filter(col("embedding").isNotNull)
     val q16 = Similarity.sampleQueryIds(nn, 16)
-    val truth = Similarity.bruteForceTopK(emb, q16, 5)
+    val truth = Similarity.ivfSearch(flat, emb, q16, 5)
       .select("query_id", "neighbor_id").as[(Long, Long)]
       .collect().toSet
     val approx = Similarity.pqSearch(pq64, emb, q16, 5)
@@ -828,7 +900,7 @@ class SimilaritySpec extends SparkSpec {
       (i.toLong, (i % 4).toLong, v(i % 4, 0.02 * (i / 4 + 1))))
     val df = vecs.toDF("vec_id", "label", "embedding")
     val qids = Seq(0L, 1L, 2L, 3L).toDF("vec_id")
-    val truthB = Similarity.bruteForceTopK(df, qids, 3)
+    val truthB = Similarity.ivfSearch(flat, df, qids, 3)
       .select("query_id", "neighbor_id").as[(Long, Long)]
       .collect().toSet
     def recallOf(r: org.apache.spark.sql.DataFrame): Double = {
@@ -859,7 +931,7 @@ class SimilaritySpec extends SparkSpec {
     val emb = graft.Tables.embeddings(spark, sf0001)
     val nn = emb.filter(col("embedding").isNotNull)
     val q16 = Similarity.sampleQueryIds(nn, 16)
-    val truth = Similarity.bruteForceTopK(emb, q16, 5)
+    val truth = Similarity.ivfSearch(flat, emb, q16, 5)
       .select("query_id", "neighbor_id").as[(Long, Long)]
       .collect().toSet
     def recallC(r: org.apache.spark.sql.DataFrame): Double =
@@ -885,7 +957,7 @@ class SimilaritySpec extends SparkSpec {
       (i.toLong, (i % 4).toLong, v(i % 4, 0.02 * (i / 4 + 1))))
     val df = vecs.toDF("vec_id", "label", "embedding")
     val qids = Seq(0L, 1L, 2L, 3L).toDF("vec_id")
-    val truth = Similarity.bruteForceTopK(df, qids, 3)
+    val truth = Similarity.ivfSearch(flat, df, qids, 3)
       .select("query_id", "neighbor_id").as[(Long, Long)]
       .collect().toSet
     def recallOf(r: org.apache.spark.sql.DataFrame): Double =
@@ -907,7 +979,7 @@ class SimilaritySpec extends SparkSpec {
     val emb = graft.Tables.embeddings(spark, sf0001)
     val nn = emb.filter(col("embedding").isNotNull)
     val q16 = Similarity.sampleQueryIds(nn, 16)
-    val truthC = Similarity.bruteForceTopK(emb, q16, 5)
+    val truthC = Similarity.ivfSearch(flat, emb, q16, 5)
       .select("query_id", "neighbor_id").as[(Long, Long)]
       .collect().toSet
     def recallC(r: org.apache.spark.sql.DataFrame): Double =
@@ -936,7 +1008,7 @@ class SimilaritySpec extends SparkSpec {
       (i.toLong, (i % 4).toLong, v(i % 4, 0.02 * (i / 4 + 1))))
     val df = vecs.toDF("vec_id", "label", "embedding")
     val qids = Seq(0L, 1L, 2L, 3L).toDF("vec_id")
-    val truth = Similarity.bruteForceTopK(df, qids, 3)
+    val truth = Similarity.ivfSearch(flat, df, qids, 3)
       .select("query_id", "neighbor_id").as[(Long, Long)]
       .collect().toSet
     def recallOf(r: org.apache.spark.sql.DataFrame): Double =
@@ -949,7 +1021,7 @@ class SimilaritySpec extends SparkSpec {
     // the 6-decimal literal rounding — identical on this fixture)
     val rotated = Pca.applyRotation(df, rot,
       keep = Seq("vec_id", "label"))
-    val truthRot = Similarity.bruteForceTopK(rotated, qids, 3)
+    val truthRot = Similarity.ivfSearch(flat, rotated, qids, 3)
       .select("query_id", "neighbor_id").as[(Long, Long)]
       .collect().toSet
     assert(truthRot == truth, "rotation moved the exact ground truth")
@@ -968,7 +1040,7 @@ class SimilaritySpec extends SparkSpec {
     val emb = graft.Tables.embeddings(spark, sf0001)
     val nn = emb.filter(col("embedding").isNotNull)
     val q16 = Similarity.sampleQueryIds(nn, 16)
-    val truthC = Similarity.bruteForceTopK(emb, q16, 5)
+    val truthC = Similarity.ivfSearch(flat, emb, q16, 5)
       .select("query_id", "neighbor_id").as[(Long, Long)]
       .collect().toSet
     def recallC(r: org.apache.spark.sql.DataFrame): Double =
@@ -1130,7 +1202,7 @@ class SimilaritySpec extends SparkSpec {
     } yield ((clusterRank((a, b)) + 4 * (j - 1)).toLong, v(a, b, j))
     val df = vecs.toDF("vec_id", "embedding")
     val qids = Seq(0L, 1L, 2L, 3L).toDF("vec_id")
-    val truth = Similarity.bruteForceTopK(df, qids, 3)
+    val truth = Similarity.ivfSearch(flat, df, qids, 3)
       .select("query_id", "neighbor_id").as[(Long, Long)]
       .collect().toSet
     def recallOf(r: org.apache.spark.sql.DataFrame): Double =
@@ -1163,7 +1235,7 @@ class SimilaritySpec extends SparkSpec {
     val emb = graft.Tables.embeddings(spark, sf0001)
     val nn = emb.filter(col("embedding").isNotNull)
     val q16 = Similarity.sampleQueryIds(nn, 16)
-    val truthC = Similarity.bruteForceTopK(emb, q16, 5)
+    val truthC = Similarity.ivfSearch(flat, emb, q16, 5)
       .select("query_id", "neighbor_id").as[(Long, Long)]
       .collect().toSet
     def recallC(r: org.apache.spark.sql.DataFrame): Double =
@@ -1204,7 +1276,7 @@ class SimilaritySpec extends SparkSpec {
     assert(sampled.exists(_._2 % 4 != 0),
       "every neighbor sits in the fit sample — encode pass looks " +
         "sample-restricted")
-    val truth = Similarity.bruteForceTopK(emb, q16, 5)
+    val truth = Similarity.ivfSearch(flat, emb, q16, 5)
       .select("query_id", "neighbor_id").as[(Long, Long)]
       .collect().toSet
     val recall = sampled.map(r => (r._1, r._2))
@@ -1237,7 +1309,7 @@ class SimilaritySpec extends SparkSpec {
     assert(sampled.exists(_._2 % 4 != 0),
       "encode pass looks sample-restricted")
     // sampled-fit recall stays in the full-fit composition's band
-    val truth = Similarity.bruteForceTopK(emb, q16, 5)
+    val truth = Similarity.ivfSearch(flat, emb, q16, 5)
       .select("query_id", "neighbor_id").as[(Long, Long)]
       .collect().toSet
     val recallFull = full.map(r => (r.getLong(0), r.getLong(1)))
@@ -1281,7 +1353,7 @@ class SimilaritySpec extends SparkSpec {
     // ground truth is rotation-invariant (pinned by the OPQ x
     // residual test); the sampled coupled fit must stay in the
     // full-fit composition's band
-    val truth = Similarity.bruteForceTopK(emb, q16, 5)
+    val truth = Similarity.ivfSearch(flat, emb, q16, 5)
       .select("query_id", "neighbor_id").as[(Long, Long)]
       .collect().toSet
     val recallFull = full.map(r => (r.getLong(0), r.getLong(1)))
@@ -1402,8 +1474,8 @@ class SimilaritySpec extends SparkSpec {
       .select("query_id", "neighbor_id", "cos_sim", "rank")
       .as[(Long, Long, Double, Int)].collect()
     val qset = qids.as[Long].collect().toSet
-    val brute = Similarity.bruteForceTopK(nonNull,
-        col("vec_id").isin(qset.toSeq: _*), k = 5)
+    val brute = Similarity.ivfSearch(flat, nonNull,
+        idsOf(nonNull, col("vec_id").isin(qset.toSeq: _*)), k = 5)
       .select("query_id", "neighbor_id", "cos_sim", "rank")
       .as[(Long, Long, Double, Int)].collect()
     // int8 coarse top-100 of 500 must contain the true top-5, so the
