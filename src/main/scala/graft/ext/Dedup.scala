@@ -405,16 +405,6 @@ object Dedup {
     containmentPairs(docs, idCol, textCol, n, threshold, cap.toInt)
   }
 
-  /** Max gram document frequency over the corpus — the probe's
-    * justification scalar (a cap ≥ max df is provably complete). */
-  def gramDfStats(docs: DataFrame, idCol: String, textCol: String,
-      n: Int): Long =
-    docs.select(col(idCol).as("doc_id"),
-        explode(graft.functions.ArrayOps.array_poly_hash(
-          shingles(col(textCol), n))).as("g"))
-      .groupBy("g").agg(count(lit(1)).as("df"))
-      .agg(max(col("df"))).head().getLong(0)
-
   /** MinHash signature over pre-hashed shingles: for permutation j,
     * min over shingle hashes h of (a_j * h + b_j) mod p. Hashing the
     * shingle strings once (`hs`) and permuting the longs keeps this

@@ -244,10 +244,14 @@ object IvfSpec {
   private val Dim = 64
 
   /** The searchable corpus rows: no NULL, NULL-element or zero-norm
-    * vector ([[Similarity.ivfSearch]]'s drop). */
+    * vector ([[Similarity.ivfSearch]]'s drop). `list_dot_product`
+    * raises on a NULL element, and DuckDB does not promise to
+    * short-circuit AND, so a CASE keeps it off those rows. */
   private def rows(where: String) =
     "SELECT * FROM (SELECT vec_id, label, embedding::DOUBLE[] AS emb\n" +
-      s"  FROM embeddings) WHERE list_dot_product(emb, emb) > 0$where"
+      "  FROM embeddings) WHERE CASE WHEN len(list_filter(emb, " +
+      "x -> x IS NULL)) = 0\n" +
+      s"  THEN list_dot_product(emb, emb) > 0 ELSE false END$where"
 
   /** The DuckDB oracle of `spec` over `queries`, top-`k` per query. */
   def oracleSql(spec: IvfSpec, k: Int, queries: QuerySet): String =

@@ -46,8 +46,7 @@ object MvRefresh {
     * month-partitioned fact layout. In production both already exist
     * — the MV from yesterday's refresh, the layout because that is
     * how fact tables land; the catalog entry builds them per run so
-    * the refresh it times is honest, and [[graft.ScaleProbe]] builds
-    * them ONCE and times the refresh alone. */
+    * the refresh it times is honest. */
   def buildStore(orders: DataFrame, mvDir: String,
       factDir: String): Unit = {
     val o = orders.select(col("o_custkey"), col("o_orderdate"),

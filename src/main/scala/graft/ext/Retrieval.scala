@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.storage.StorageLevel
 
 /** Okapi BM25 ranked retrieval over a tokenized document corpus —
   * the lexical retrieval operator a training-data pipeline uses for
@@ -340,21 +341,9 @@ object Retrieval {
         .agg(count(lit(1)).as("n_bg")))
   }
 
+  /** `materialize = false`: no persist, lineage recompute per leg. */
   private def phraseSearchImpl(docs: DataFrame, phrases: DataFrame,
-      materialize: Boolean): DataFrame =
-    phraseSearchWith(docs, phrases,
-      if (materialize)
-        Some(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else None)
-
-  /** `storage`-parameterized body — the probe harness times the
-    * per-query postings persist at different levels (the 1000×
-    * diagnosis); `None` = no persist, lineage recompute per leg. */
-  private[graft] def phraseSearchWith(docs: DataFrame,
-      phrases: DataFrame,
-      storage: Option[org.apache.spark.storage.StorageLevel])
-      : DataFrame = {
-    val materialize = storage.isDefined
+      materialize: Boolean): DataFrame = {
     val post = docs.select(col("doc_id"),
         posexplode(TextStats.tokens(col("text"))).as(Seq("pos", "term")))
     val terms = phrases.select(col("w1").as("term"))
@@ -364,10 +353,9 @@ object Retrieval {
     // (measured: the doubled pass dominated the 1000x probe at 5M
     // docs). The frame is query-term-df-sized — cheap to cache.
     val qpostLazy = post.join(broadcast(terms), Seq("term"))
-    val qpost = storage match {
-      case Some(lvl) => qpostLazy.persist(lvl)
-      case None => qpostLazy
-    }
+    val qpost =
+      if (materialize) qpostLazy.persist(StorageLevel.MEMORY_AND_DISK)
+      else qpostLazy
     val leg1 = qpost.join(broadcast(phrases), col("term") === col("w1"))
       .select(col("pid"), col("w1"), col("w2"), col("doc_id"),
         col("pos"))

@@ -1274,7 +1274,7 @@ object Similarity {
     }
 
   // NULL, NULL-element and zero-norm embeddings drop, mirrored by the
-  // oracle's `list_dot_product(emb, emb) > 0`: a NULL row would enter
+  // oracle's corpus filter (IvfSpec.rows): a NULL row would enter
   // fine ranking with a NULL cos_sim and surface whenever a probed cell
   // holds fewer than k candidates, and a zero vector has no cosine
   // direction — its norm divides by zero (an error under ANSI, NaN in

@@ -265,8 +265,7 @@ object Merge {
     * driver collect). Only the *insert subset* is row-numbered —
     * keep/update/noop rows never enter the sort — so the documented
     * single-partition window cost is bounded by the incremental
-    * batch's new keys, not the table. For bulk backfills where even
-    * the insert subset is huge, use [[assignIdsDistributed]]. */
+    * batch's new keys, not the table. */
   def assignIds(merged: DataFrame, idCol: String, orderKey: String)
       : DataFrame = assignIds(merged, idCol, orderKey, merged)
 
@@ -290,48 +289,6 @@ object Merge {
       .withColumn(idCol,
         castIdGuarded(col("_max_id") + row_number().over(w), idType))
       .drop("_max_id")
-    others.unionByName(numbered)
-  }
-
-  /** Fully distributed id assignment for *large* insert batches
-    * (bulk backfill / first load), where [[assignIds]]'s
-    * single-partition sort of the insert subset would itself be a
-    * bottleneck: range-partition the inserts on the business key,
-    * number within each partition, and add broadcast per-partition
-    * offsets. Produces ids identical to
-    * `row_number() OVER (ORDER BY orderKey)` for unique keys —
-    * global rank is invariant to where the sampled range boundaries
-    * fall. The sorted frame is localCheckpoint'ed once so the offset
-    * aggregate and the numbering read the same materialized
-    * partitioning (range sampling is otherwise not re-execution
-    * stable). */
-  def assignIdsDistributed(merged: DataFrame, idCol: String,
-      orderKey: String, idSource: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val idType = merged.schema(idCol).dataType
-    val maxId = idSource.agg(
-      coalesce(max(col(idCol)), lit(0L)).cast("long").as("_max_id"))
-    val others = merged.filter(col(ActionCol) =!= "insert")
-    val sorted = merged.filter(col(ActionCol) === "insert")
-      .repartitionByRange(col(orderKey))
-      .sortWithinPartitions(orderKey)
-      .withColumn("_pid", spark_partition_id())
-      .localCheckpoint()
-    val wOff = Window.orderBy("_pid")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    // Tiny: one row per partition; the running-sum window over it is
-    // a few dozen rows on the driver-side single partition.
-    val offsets = sorted.groupBy("_pid").count()
-      .withColumn("_off", coalesce(sum("count").over(wOff), lit(0L)))
-      .drop("count")
-    val wIn = Window.partitionBy("_pid").orderBy(col(orderKey))
-    val numbered = sorted
-      .join(broadcast(offsets), "_pid")
-      .crossJoin(broadcast(maxId))
-      .withColumn(idCol,
-        castIdGuarded(
-          col("_max_id") + col("_off") + row_number().over(wIn), idType))
-      .drop("_pid", "_off", "_max_id")
     others.unionByName(numbered)
   }
 }

@@ -115,27 +115,34 @@ class SimilaritySpec extends SparkSpec {
       "the collected vectors") {
     // 64 dims (the LSH planes' width), labels id % 3; 5 is an exact
     // twin of 2, so query 3 (near 2) ranks the two at one score, ties
-    // by id; 7 is NULL, 11 the zero vector; the queries include all
+    // by id; 7 is NULL, 11 the zero vector, 30 a copy of 4 whose first
+    // element is NULL; the queries include all
     val rnd = new scala.util.Random(7)
     val raw = Seq.fill(30)(Seq.fill(64)(rnd.nextGaussian().toFloat))
-    val vecs = (0 until 30).map { i =>
+    val NullElement = 30L
+    val vecs = (0 to 30).map { i =>
       val e = i match {
         case 3 => Some(raw(2).zip(raw(3)).map { case (a, b) => a + b / 10 })
         case 5 => Some(raw(2))
         case 7 => None
         case 11 => Some(Seq.fill(64)(0f))
+        case 30 => Some(raw(4))
         case _ => Some(raw(i))
       }
       (i.toLong, e, i % 3)
     }
     val df = vecs.toDF("vec_id", "embedding", "label")
-    val queries = Seq(0L, 2L, 3L, 5L, 7L, 11L, 16L)
+      .withColumn("embedding", when(col("vec_id") === NullElement,
+          transform(col("embedding"), (x, j) => when(j > 0, x)))
+        .otherwise(col("embedding")))
+    val queries = Seq(0L, 2L, 3L, 5L, 7L, 11L, 16L, NullElement)
     val qids = queries.toDF("vec_id")
     val label = vecs.map(r => r._1 -> r._3).toMap
     def dot(a: Seq[Double], b: Seq[Double]) =
       a.zip(b).foldLeft(0.0) { case (s, (x, y)) => s + x * y }
-    // the NULL and the zero vector drop: neither has a cosine
-    val emb = vecs.collect { case (id, Some(e), _) =>
+    // the NULL, the NULL-element and the zero vector drop: none has a
+    // cosine
+    val emb = vecs.collect { case (id, Some(e), _) if id != NullElement =>
       id -> e.map(_.toDouble) }.toMap.filter { case (_, e) => dot(e, e) > 0 }
     def round6(x: Double) =
       BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble

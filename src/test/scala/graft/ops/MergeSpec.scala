@@ -101,19 +101,6 @@ class MergeSpec extends SparkSpec {
     assert(messages(e).exists(_.contains("overflows")))
   }
 
-  test("assignIdsDistributed matches assignIds on a bulk insert batch") {
-    val curBig = (1 to 7).map(i => (f"u$i%03d@x", i.toLong, s"N$i", "v"))
-      .toDF("email", "user_id", "name", "note")
-    val stBig = (5 to 40).map(i => (f"u$i%03d@x", s"N$i", "w"))
-      .toDF("email", "name", "note")
-    val m = Merge.merge(stBig, curBig, Seq("email"), Seq("name", "note"))
-    val simple = Merge.assignIds(m, "user_id", "email", curBig)
-      .select("email", "user_id").as[(String, Long)].collect().sortBy(_._1)
-    val dist = Merge.assignIdsDistributed(m, "user_id", "email", curBig)
-      .select("email", "user_id").as[(String, Long)].collect().sortBy(_._1)
-    assert(dist.toSeq == simple.toSeq)
-  }
-
   test("merge is idempotent: re-merging the merged state is all noop/keep") {
     val m = Merge.merge(staged, cur, Seq("email"), Seq("name", "note"))
     val newCur = Merge.assignIds(m, "user_id", "email")
