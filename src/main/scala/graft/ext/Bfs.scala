@@ -256,18 +256,9 @@ object Bfs {
         // `distances` ≡ `distancesIndexed`, so results are identical,
         // and the measured 100× cold-heap sensitivity started at ~6M
         // sym edges — above this bound by construction.
-        if (bound < BfsEdgesPerBucket) {
-          System.err.println(
-            s"[bfs] sym-edge bound $bound < $BfsEdgesPerBucket: " +
-              "in-memory frontier loop (persisted layout skipped)")
+        if (bound < BfsEdgesPerBucket)
           return distances(edges, src, dst, maxIter, symIsDistinct)
-        }
-        val b = f(bound)
-        // probe-visible record of the derivation (the `_auto` rule's
-        // evidence line at every scale tier)
-        System.err.println(
-          s"[bfs] auto nBuckets=$b for sym-edge bound $bound")
-        b
+        f(bound)
     }
     val token =
       s"${ProcessHandle.current().pid()}_${adjCounter.incrementAndGet()}"

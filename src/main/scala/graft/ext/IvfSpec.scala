@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.queries.QueryUtil.{kmUnrolledSql, qidsSql, quantizeSql,
-  sqlCosine, sqlSumDec}
+  sqlCosine, sqlSumDec, vectorRowsSql}
 
 /** The coarse level of an ANN index: how the corpus is cut into cells
   * and which of them each query probes. [[IvfSpec]] searches with
@@ -243,16 +243,6 @@ object IvfSpec {
   /** The embeddings table's dimension (the oracle unrolls per dim). */
   private val Dim = 64
 
-  /** The searchable corpus rows: no NULL, NULL-element or zero-norm
-    * vector ([[Similarity.ivfSearch]]'s drop). `list_dot_product`
-    * raises on a NULL element, and DuckDB does not promise to
-    * short-circuit AND, so a CASE keeps it off those rows. */
-  private def rows(where: String) =
-    "SELECT * FROM (SELECT vec_id, label, embedding::DOUBLE[] AS emb\n" +
-      "  FROM embeddings) WHERE CASE WHEN len(list_filter(emb, " +
-      "x -> x IS NULL)) = 0\n" +
-      s"  THEN list_dot_product(emb, emb) > 0 ELSE false END$where"
-
   /** The DuckDB oracle of `spec` over `queries`, top-`k` per query. */
   def oracleSql(spec: IvfSpec, k: Int, queries: QuerySet): String =
     queries match {
@@ -262,8 +252,9 @@ object IvfSpec {
       case QuerySet.EveryNth(n) => searchSql(spec, k,
         s"qids AS (SELECT vec_id FROM base WHERE vec_id % $n = 0)")
       case QuerySet.Gate(n) =>
-        sql(spec, k, s"base AS (${rows(s" AND vec_id % $n <> 0")}),\n" +
-          s"newb AS (${rows(s" AND vec_id % $n = 0")})", None)
+        sql(spec, k,
+          s"base AS (${vectorRowsSql(s" AND vec_id % $n <> 0")}),\n" +
+            s"newb AS (${vectorRowsSql(s" AND vec_id % $n = 0")})", None)
     }
 
   /** The oracle of [[Similarity.ivfSearch]] for the ids of the CTE
@@ -271,7 +262,7 @@ object IvfSpec {
     * the CTEs of an enclosing query): (query_id, neighbor_id,
     * [neg_label,] cos_sim, rank), ordered. */
   def searchSql(spec: IvfSpec, k: Int, qids: String): String =
-    sql(spec, k, s"base AS (${rows("")})", Some(qids))
+    sql(spec, k, s"base AS (${vectorRowsSql()})", Some(qids))
 
   /** The search over the corpus CTE(s) `corpus`: queried by `qids`, or
     * without it the gate's `newb` batch. */

@@ -208,10 +208,6 @@ object Retrieval {
         .as("n"))
       .head().getLong(0)
     val n = autoPhraseBuckets(nPost)
-    // probe-visible record of the derivation (the `_auto` rule's
-    // evidence line at every scale tier)
-    System.err.println(
-      s"[phraseindex] auto nBuckets=$n for $nPost postings")
     buildPhraseIndex(docs, dir, n)
     n
   }

@@ -1,6 +1,7 @@
 package graft.ext
 
-import graft.queries.QueryUtil.{kmAssignSql, kmUnrolledSql, sqlCosine}
+import graft.queries.QueryUtil.{kmAssignSql, kmUnrolledSql, sqlCosine,
+  vectorRowsSql}
 
 /** The cell grid SemDeDup prunes within: pairs are only ever compared
   * inside one cell. */
@@ -15,7 +16,8 @@ object SemDedupGrid {
 
   /** Two levels, cells (`cid`, `scid`): a k-means of k clusters, then
     * an independent k-means of k sub-clusters inside each, with
-    * k = max(2, ⌈√⌈N/target⌉⌉) over the NULL-filtered input — k² ≥
+    * k = max(2, ⌈√⌈N/target⌉⌉) over the input guard's vectors (no
+    * NULL, NULL-element or zero-norm embedding) — k² ≥
     * N/target cells keep mean cell size near `targetCellSize` while
     * every assignment pass costs N·2k instead of the flat grid's N·k².
     * /target and IEEE sqrt/ceil are exactly rounded, so both engines
@@ -113,8 +115,7 @@ object SemDedupSpec {
     val sameCell = cellKeys.map(k => s"a.$k = b.$k").mkString(" AND ")
     val before = split.fold("a.vec_id < b.vec_id")(m =>
       s"b.vec_id % $m = 0 AND (a.vec_id % $m <> 0 OR a.vec_id < b.vec_id)")
-    s"""WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS emb
-       |  FROM embeddings WHERE embedding IS NOT NULL)$corpus,
+    s"""WITH base AS (${vectorRowsSql()})$corpus,
        |$kk$fit1$level1$batch,
        |$cells,
        |p AS (SELECT b.vec_id AS vid

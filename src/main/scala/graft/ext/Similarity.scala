@@ -331,48 +331,51 @@ object Similarity {
     * across 4096 means in the m=16 PQ fit. Cluster counts are small,
     * so such counts are common; dropping the round removes the
     * entire hazard class instead of shrinking it.
-    * Distributed shape: assignment is a per-row projection over the
-    * k centroids ([[assignClusters]]), the update the one
-    * explode-by-dimension aggregation ([[decimalMeans]]); only the k
-    * seeds and, within the LUT gate, the k centroids reach the
-    * driver. */
+    * Placement: a fit corpus within [[DriverFitMaxDoubles]] collects
+    * in one job and is fitted on the driver ([[DriverLloyd]]); the
+    * centroids come back as a LocalRelation, which consumers collect
+    * or broadcast job-free. Past the gate, or in reliable [[Ckpt]]
+    * mode, the distributed loop runs ([[kmeansSpark]]). Both give the
+    * same frame (LloydFormSpec). */
   def kmeansCentroids(base: DataFrame, k: Int, iters: Int): DataFrame =
-    kmeansFit(base, k, iters, assignClustersLut, assignClustersBcast)
+    kmeansFit(base, k, iters, Cosine, FitDim)
 
-  /** The flat k-means loop of [[kmeansCentroids]] and
-    * [[kmeansCentroidsL2]] under the assignment forms of one metric.
-    * Iteration barriers (round 15): in LUT mode (k within the plan-
-    * literal gate) the assignment COLLECTS the centroid frame anyway
-    * and embeds it as literals, so lineage is flat by construction —
-    * per-iteration truncation was a redundant materialization job
-    * (the collect itself executes each update plan exactly once).
-    * Past the gate (k ∝ N shapes) the broadcast-row assignment keeps
-    * the plan chained, so every iteration still truncates via Ckpt.
-    * Either path executes each Lloyd update exactly once; results
-    * are bit-identical (AssignFormSpec pins Lut ≡ Bcast).
-    * Final state (round 16): in LUT mode the fitted frame returns as
-    * a LocalRelation ([[asLocalRelation]]) instead of a checkpoint —
-    * consumers collect/broadcast it job-free; reliable mode keeps
-    * Ckpt (durable-placement opt-in, CkptSpec). */
+  /** The flat k-means of one metric: on the driver when the fit corpus
+    * collects within the gate, else distributed. */
   private def kmeansFit(base: DataFrame, k: Int, iters: Int,
-      lut: (DataFrame, Seq[(Int, Seq[Double])]) => DataFrame,
-      bcast: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+      metric: Metric, dim: Int): DataFrame =
+    kmeansOn(base, collectFit(base, dim), k, iters, metric)
+
+  /** [[kmeansFit]] on the collected fit corpus `rows` of `base`. */
+  private def kmeansOn(base: DataFrame, rows: Option[FitRows], k: Int,
+      iters: Int, metric: Metric): DataFrame =
+    rows.flatMap(r => DriverLloyd.mirrored(
+        DriverLloyd.fit(r, r.all, k, iters, metric)))
+      .fold(kmeansSpark(base, k, iters, metric))(c =>
+        centroidFrame(base.sparkSession, Nil, Seq(Nil -> c), "cid"))
+
+  /** The distributed flat k-means loop. In LUT mode (k within the
+    * plan-literal gate) each assignment COLLECTS the centroid frame and
+    * embeds it as literals, so lineage is flat without truncation;
+    * past the gate (k ∝ N shapes) the broadcast-row assignment keeps
+    * the plan chained, so every round truncates via [[Ckpt]]. The
+    * final state is a Ckpt either way. Lut ≡ Bcast is pinned by
+    * AssignFormSpec. */
+  private def kmeansSpark(base: DataFrame, k: Int, iters: Int,
+      metric: Metric): DataFrame = {
     val lutMode = k <= AssignLutMaxCentroids
-    val localFinish = lutMode && !reliableMode(base)
     lloyd(lloydSeed(base, k), iters, Seq("cid"), "emb")(c =>
-      if (lutMode) lut(base, collectedSorted(c)) else bcast(base, c)) {
-      (c, last) =>
-        if (last) { if (localFinish) asLocalRelation(c) else Ckpt(c) }
-        else if (lutMode) c
-        else Ckpt(c)
-    }
+      if (lutMode) metric.lut(base, collectedSorted(c))
+      else metric.bcast(base, c))((c, last) =>
+      if (lutMode && !last) c else Ckpt(c))
   }
 
-  /** The one Lloyd loop under every k-means fit here (flat, L2, PQ
-    * codebooks, two-level sub-cells): `iters` rounds of `assign` (the
-    * fit corpus labelled with its nearest of the current centroids)
-    * followed by the exact decimal-mean update per `cell`; `place`
-    * decides each round's placement (`last` for the final one). */
+  /** The one distributed Lloyd loop under every k-means fit here
+    * (flat, L2, PQ codebooks, two-level sub-cells): `iters` rounds of
+    * `assign` (the fit corpus labelled with its nearest of the current
+    * centroids) followed by the exact decimal-mean update per `cell`;
+    * `place` decides each round's placement (`last` for the final
+    * one). [[DriverLloyd]] mirrors it on the driver. */
   private def lloyd(seed: DataFrame, iters: Int, cell: Seq[String],
       vec: String)(assign: DataFrame => DataFrame)(
       place: (DataFrame, Boolean) => DataFrame): DataFrame =
@@ -414,30 +417,22 @@ object Similarity {
         .toSeq.zipWithIndex.map { case (r, i) => Row(i, r.get(0)) })
 
   /** Per-`key` k-means of `k` sub-cells (key, scid, centroid) over
-    * `base` (vec_id, key, emb): seeded per key on its `k` smallest
-    * vec_ids, then [[lloyd]] with the [[assignSubClusters]] projection.
-    * Every round is truncated (the broadcast-LUT sub-assign never
-    * collects, so the plan would otherwise chain geometrically):
-    * through [[Ckpt]], or with `local` — for a bounded grid outside
-    * reliable mode — by collecting the seeds and each round into a
-    * LocalRelation, so the next round's assignment builds its LUT on
-    * the driver ([[subClusterLutLocal]]) and the fitted state
-    * broadcasts job-free. On `catalog_iterative` (10 alternating
-    * pairs, 4 vCPUs) the Ckpt form measured `op_tail_s` 4.81 s vs
-    * 4.03 s and `pass_s` 7.19 vs 6.35 s, and one or two more jobs on
-    * the hierarchical SemDeDup entries. The two-level IVF grid keys it
-    * on `label`, the hierarchical SemDeDup on `cid`. */
+    * `base` (vec_id, key, emb), distributed: seeded per key on its `k`
+    * smallest vec_ids, then [[lloyd]] with the [[assignSubClusters]]
+    * projection. Every round is truncated through [[Ckpt]] (the
+    * broadcast-LUT sub-assign never collects, so the plan would
+    * otherwise chain geometrically). The two-level IVF grid keys it on
+    * `label`, the hierarchical SemDeDup on `cid`; both fit on the
+    * driver within the gate ([[DriverLloyd.perKey]]). */
   private def subCellFit(base: DataFrame, key: String, k: Int,
-      iters: Int, local: Boolean = false): DataFrame = {
+      iters: Int): DataFrame = {
     val w = Window.partitionBy(col(key)).orderBy(col("vec_id"))
     val seed = base.withColumn("rn", row_number().over(w))
       .filter(col("rn") <= k)
       .select(col(key), (col("rn") - 1).cast("int").as("scid"),
         col("emb").as("centroid"))
-    val place: DataFrame => DataFrame =
-      if (local) asLocalRelation else Ckpt(_)
-    lloyd(if (local) place(seed) else seed, iters, Seq(key, "scid"),
-      "emb")(assignSubClusters(base, _, key))((c, _) => place(c))
+    lloyd(seed, iters, Seq(key, "scid"), "emb")(
+      assignSubClusters(base, _, key))((c, _) => Ckpt(c))
   }
 
   /** Rows of `schema` as a LocalRelation: collects and broadcasts of it
@@ -445,6 +440,10 @@ object Similarity {
   private def localFrame(spark: org.apache.spark.sql.SparkSession,
       schema: StructType, rows: Seq[Row]): DataFrame =
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+
+  private def isLocal(df: DataFrame): Boolean =
+    df.queryExecution.logical
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
 
   /** Bounded collect of a ≤[[AssignLutMaxCentroids]]-row centroid
     * frame in [[assignClustersLut]]'s (cid-sorted) input form. */
@@ -455,27 +454,219 @@ object Similarity {
       .sortBy(_._1).toSeq
 
   /** True when the session has opted into durable loop-state
-    * placement ([[Ckpt.ModeKey]] = reliable) — the LUT-mode local
-    * finishes below then keep routing through [[Ckpt]] so the opt-in
-    * still produces its recoverable files. */
+    * placement ([[Ckpt.ModeKey]] = reliable): the fits then run
+    * distributed, so the opt-in still produces its recoverable
+    * files. */
   private def reliableMode(df: DataFrame): Boolean =
     df.sparkSession.conf.get(Ckpt.ModeKey, "local") == "reliable"
 
-  /** FINAL-STATE placement for a LUT-gated fit frame (round 16): the
-    * bounded rows collect once and re-enter as a LocalRelation —
-    * exactly the rows a [[Ckpt]] would have materialized, but every
-    * downstream consumer that COLLECTS or BROADCASTS the frame
-    * ([[pqAssign]]'s bounded collect, [[assignClusters]]' probe, the
-    * ADC-LUT / probe broadcasts) now reads local rows instead of
-    * launching a block-scan job (`LocalTableScanExec.executeCollect`
-    * is job-free). Data rides as relation ROWS, never as expression
-    * literals, so the plan-size pathology documented at
-    * [[assignSubClusters]] cannot arise; values are the collected
-    * doubles unchanged, so results are bit-identical (the same
-    * argument as the LUT-mode assignment forms). Only call under a
-    * static row bound (the LUT gate) and never in reliable mode. */
-  private def asLocalRelation(df: DataFrame): DataFrame =
-    localFrame(df.sparkSession, df.schema, df.collect().toSeq)
+  /** The embedding dimension the fits of the public k-means and the
+    * IVF levels size the driver gate's row cap with. */
+  private val FitDim = 64
+
+  /** The driver-side Lloyd fit's budget: a fit corpus of at most this
+    * many doubles (rows × dim, 8 MB) collects in one job and is fitted
+    * in Scala. The collect stops at this budget over the caller's dim
+    * in rows; the actual rows × dim is checked again after it. Every
+    * catalog fit sits under it (the largest, the sf0.1 PQ fits, is
+    * 2000 × 64); past it each fit runs distributed, one Spark job or
+    * more per round. */
+  private val DriverFitMaxDoubles = 1 << 20
+
+  /** A fit corpus on the driver: per row its `vec_id` (as collected,
+    * and as a long), an optional cell key and the vector; `units` are
+    * the vectors' Decimal(18,6) units — what [[decimalMeans]] sums. */
+  private final class FitRows(val rawIds: Array[Any], val ids: Array[Long],
+      val keys: Array[Any], val vecs: Array[Array[Double]]) {
+    lazy val units: Array[Array[Long]] = vecs.map(_.map(DriverLloyd.units))
+    def size: Int = ids.length
+    def all: Array[Int] = Array.range(0, size)
+    /** Row `i`'s vector replaced by `f(i)`. */
+    def withVecs(f: Int => Array[Double]): FitRows =
+      new FitRows(rawIds, ids, keys, Array.tabulate(size)(f))
+    /** The `len` components from `from` of every vector. */
+    def slice(from: Int, len: Int): FitRows =
+      withVecs(vecs(_).slice(from, from + len))
+    /** The rows `ix`. */
+    def select(ix: Array[Int]): FitRows = new FitRows(ix.map(rawIds),
+      ix.map(ids), ix.map(keys), ix.map(vecs))
+  }
+
+  /** Collect `df`'s (vec_id, [key,] emb) rows for a driver fit: None in
+    * reliable mode, past [[DriverFitMaxDoubles]], or when a row holds
+    * what the driver does not mirror (a NULL id, key, vector or
+    * element, a non-finite element, vectors of unequal length) — the
+    * caller then runs the distributed fit. */
+  private def collectFit(df: DataFrame, dim: Int,
+      key: Option[String] = None): Option[FitRows] =
+    if (reliableMode(df)) None
+    else {
+      val cap = DriverFitMaxDoubles / math.max(1, dim)
+      val rows = df.select(col("vec_id") +: key.map(col).toSeq :+
+        col("emb"): _*).limit(cap + 1).collect()
+      val iEmb = if (key.isDefined) 2 else 1
+      if (rows.length > cap) None
+      else DriverLloyd.mirrored {
+        def nonNull(v: Any): Any =
+          if (v == null) throw new DriverLloyd.NotMirrored else v
+        val vecs = rows.map(r => nonNull(r.get(iEmb))
+          .asInstanceOf[scala.collection.Seq[Any]].map {
+            case d: java.lang.Double if !d.isNaN && !d.isInfinite =>
+              d.doubleValue
+            case _ => throw new DriverLloyd.NotMirrored
+          }.toArray)
+        val n = if (vecs.isEmpty) 0 else vecs(0).length
+        if (vecs.exists(_.length != n)) throw new DriverLloyd.NotMirrored
+        val raw = rows.map(r => nonNull(r.get(0)))
+        new FitRows(raw, raw.map(_.asInstanceOf[Number].longValue),
+          rows.map(r => if (key.isEmpty) null else nonNull(r.get(1))),
+          vecs)
+      }.filter(r => r.size.toLong * r.vecs.headOption.fold(0)(_.length) <=
+        DriverFitMaxDoubles)
+    }
+
+  /** The field of every fitted centroid vector. */
+  private val CentroidField =
+    StructField("centroid", ArrayType(DoubleType, containsNull = true))
+
+  /** Driver-fitted cells as a LocalRelation (keys…, `id`, centroid):
+    * one row per centroid of each `(key values, centroids)` pair. */
+  private def centroidFrame(spark: org.apache.spark.sql.SparkSession,
+      keyFields: Seq[StructField], cells: Seq[(Seq[Any], DriverLloyd.Cents)],
+      id: String): DataFrame =
+    localFrame(spark, StructType(keyFields ++ Seq(
+        StructField(id, IntegerType), CentroidField)),
+      for ((key, c) <- cells; j <- c.ids.indices)
+        yield Row.fromSeq(key ++ Seq(c.ids(j), c.vecs(j).toSeq)))
+
+  /** The assignment metric of a Lloyd fit: its two Spark projection
+    * forms (plan-literal LUT, broadcast row) — [[DriverLloyd.nearest]]
+    * is the driver's. */
+  private sealed abstract class Metric(
+      val lut: (DataFrame, Seq[(Int, Seq[Double])]) => DataFrame,
+      val bcast: (DataFrame, DataFrame) => DataFrame)
+  private case object Cosine
+      extends Metric(assignClustersLut, assignClustersBcast)
+  private case object L2
+      extends Metric(assignClustersL2Lut, assignClustersL2Bcast)
+
+  /** Lloyd on the driver, mirroring the distributed forms' arithmetic
+    * bit for bit by reusing Spark's own: the [[graft.functions.DotProduct]]
+    * kernel's left-to-right accumulation, `Round`'s BigDecimal HALF_UP,
+    * the `Decimal(18,6)` cast (`Decimal(v).changePrecision`), the exact
+    * decimal sum, `Decimal.toDouble` and one IEEE `/ count`; cosine
+    * ranks by (a_sim, −cid), L2 by (d2, cid), and a cell that empties
+    * drops out. What it does not mirror — a zero divisor (an error
+    * under ANSI, NULL otherwise), a NaN score, a decimal overflow —
+    * raises [[NotMirrored]], and the caller runs the distributed fit,
+    * which then behaves exactly as it always has. */
+  private object DriverLloyd {
+
+    final class NotMirrored extends RuntimeException(null, null, false, false)
+
+    def mirrored[T](f: => T): Option[T] =
+      try Some(f) catch {
+        case _: NotMirrored | _: ArithmeticException => None
+      }
+
+    /** Centroids of one round, cid-ascending, with ⟨c,c⟩. */
+    final class Cents(val ids: Array[Int], val vecs: Array[Array[Double]]) {
+      val sq: Array[Double] = vecs.map(v => dot(v, v))
+    }
+
+    def dot(a: Array[Double], b: Array[Double]): Double = {
+      var acc = 0.0
+      var i = 0
+      while (i < a.length) { acc += a(i) * b(i); i += 1 }
+      acc
+    }
+
+    /** Spark's `round(x, 6)` on a double. */
+    def round6(x: Double): Double =
+      if (x.isNaN || x.isInfinite) x
+      else BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+    /** `x` cast to DECIMAL(18,6), as an unscaled long. */
+    def units(x: Double): Long = {
+      val d = Decimal(x)
+      if (!d.changePrecision(18, 6)) throw new NotMirrored
+      d.toUnscaledLong
+    }
+
+    /** `iters` Lloyd rounds over the rows `ix` of `rows`, seeded on
+    * their `k` smallest vec_ids. */
+    def fit(rows: FitRows, ix: Array[Int], k: Int, iters: Int,
+        metric: Metric): Cents = {
+      val seeds = ix.sortBy(rows.ids(_)).take(k)
+      (0 until iters).foldLeft(
+          new Cents(Array.range(0, seeds.length), seeds.map(rows.vecs))) {
+        (c, _) => means(rows, ix, ix.map(i => nearest(metric, rows.vecs(i), c)))
+      }
+    }
+
+    /** [[fit]] per key group (key value → its rows). */
+    def perKey(rows: FitRows, groups: Seq[(Any, Array[Int])], k: Int,
+        iters: Int): Seq[(Any, Cents)] =
+      groups.map { case (key, ix) => key -> fit(rows, ix, k, iters, Cosine) }
+
+    /** Row indices grouped by `key`, in ascending order of their first
+      * row. */
+    def groupBy(ix: Array[Int], key: Int => Any): Seq[(Any, Array[Int])] =
+      ix.groupBy(key).toSeq.sortBy(_._2.head)
+
+    /** Each key's exact decimal mean, keys in first-row order. */
+    def keyMeans(rows: FitRows): Seq[(Any, Array[Double])] =
+      groupBy(rows.all, rows.keys(_)).map { case (key, ix) =>
+        key -> means(rows, ix, new Array[Int](ix.length)).vecs(0)
+      }
+
+    /** The exact decimal means of the rows `ix` per assigned cid. */
+    def means(rows: FitRows, ix: Array[Int], cids: Array[Int]): Cents = {
+      val cells = ix.indices.groupBy(cids(_)).toArray.sortBy(_._1)
+      new Cents(cells.map(_._1), cells.map { case (_, js) =>
+        val sums = new Array[Long](rows.units(ix(js.head)).length)
+        for (j <- js; u = rows.units(ix(j)); d <- sums.indices)
+          sums(d) = Math.addExact(sums(d), u(d))
+        sums.map(s => Decimal(s, 28, 6).toDouble / js.size.toDouble)
+      })
+    }
+
+    /** The cid `e` is assigned to: the best rounded score, ties to the
+      * smallest cid. Rounding is monotone, so only the candidates
+      * within rounding reach of the best raw score are rounded. */
+    def nearest(metric: Metric, e: Array[Double], c: Cents): Int = {
+      val n = c.ids.length
+      if (n == 0) throw new NotMirrored
+      val ee = dot(e, e)
+      val raw = new Array[Double](n)
+      val larger = metric == Cosine
+      var j = 0
+      while (j < n) {
+        raw(j) = if (larger) {
+          val den = math.sqrt(ee) * math.sqrt(c.sq(j))
+          if (den == 0.0) throw new NotMirrored
+          dot(e, c.vecs(j)) / den
+        } else (ee - 2.0 * dot(e, c.vecs(j))) + c.sq(j)
+        if (raw(j).isNaN) throw new NotMirrored
+        j += 1
+      }
+      val best = if (larger) raw.max else raw.min
+      // past 1e6 two 6-decimal values can share a double: round all
+      val roundAll = !(math.abs(best) < 1e6)
+      val slack = 2e-6 + 8 * Math.ulp(math.abs(best) + 1.0)
+      var bj = -1
+      var br = 0.0
+      j = 0
+      while (j < n) {
+        if (roundAll || math.abs(raw(j) - best) <= slack) {
+          val r = round6(raw(j))
+          if (bj < 0 || (if (larger) r > br else r < br)) { bj = j; br = r }
+        }
+        j += 1
+      }
+      c.ids(bj)
+    }
+  }
 
   /** Centroid-count gate for the plan-LITERAL projection assignment:
     * up to this many centroids the codebook collects driver-side and
@@ -629,7 +820,7 @@ object Similarity {
     * fit is bit-reproducible across runs, partitionings, AND engines
     * and the DuckDB oracle can unroll it. */
   def kmeansCentroidsL2(base: DataFrame, k: Int, iters: Int): DataFrame =
-    kmeansFit(base, k, iters, assignClustersL2Lut, assignClustersL2Bcast)
+    kmeansFit(base, k, iters, L2, FitDim)
 
   /** Greedy k-center (farthest-point traversal, Gonzalez 1985)
     * diverse-subset selection — the curation op that picks a maximally
@@ -795,13 +986,33 @@ object Similarity {
       array_min(cands).getField("cid").as("cid"))
   }
 
-  /** All m PQ codebooks fitted in one batched Lloyd loop. Seeds are
-    * the kSub smallest vec_ids — the SAME rows for every subspace, so
-    * one TakeOrdered of the unsliced corpus seeds all m codebooks
-    * (sliced per subspace). Each iteration: [[pqAssign]] + the
-    * decimal-mean update keyed (sub, cid) — order-independent and
-    * unrounded, per [[kmeansCentroids]]' portability note. */
-  private def pqFitCodebooks(base: DataFrame, subBase: DataFrame,
+  /** All m PQ codebooks (sub, cid, centroid), fitted on `base`. Seeds
+    * are the kSub smallest vec_ids — the SAME rows for every subspace —
+    * and each round is an L2 assignment plus the decimal-mean update
+    * keyed (sub, cid), order-independent and unrounded per
+    * [[kmeansCentroids]]' portability note. With the collected fit
+    * corpus `rows` the m subspace fits run on the driver; otherwise
+    * ([[pqCodebooksSpark]]) in one batched distributed loop over
+    * `subBase`, the subspace-exploded `base`. */
+  private def pqFitCodebooks(spec: PqSpec, base: DataFrame,
+      rows: Option[FitRows], subBase: => DataFrame): DataFrame = {
+    import spec._
+    rows.filter(_.vecs.forall(_.length >= m * subDim))
+      .flatMap(rows => DriverLloyd.mirrored((0 until m).map { si =>
+        val sub = rows.slice(si * subDim, subDim)
+        Seq[Any](si) -> DriverLloyd.fit(sub, sub.all, kSub, iters, L2)
+      }))
+      .fold(pqCodebooksSpark(base, subBase, m, subDim, kSub, iters))(
+        centroidFrame(base.sparkSession, Seq(StructField("sub", IntegerType)),
+          _, "cid"))
+  }
+
+  /** The distributed PQ fit: one [[lloyd]] loop for all m codebooks,
+    * one TakeOrdered of the unsliced corpus seeding every subspace.
+    * [[pqAssign]] collects the codebook frame each round (the bounded
+    * m·kSub contract) and embeds it as plan literals, so lineage is
+    * flat without truncation; the fitted codebook is a Ckpt. */
+  private def pqCodebooksSpark(base: DataFrame, subBase: DataFrame,
       m: Int, subDim: Int, kSub: Int, iters: Int): DataFrame = {
     // the kSub seed rows are local: slice them on the driver
     val seed = lloydSeed(base, kSub)
@@ -810,22 +1021,8 @@ object Similarity {
       for (r <- seed.collect().toSeq; si <- 0 until m) yield
         Row(si, r.getInt(0), r.getSeq[Double](1)
           .slice(si * subDim, (si + 1) * subDim)))
-    // barrier structure per [[kmeansFit]]'s round-15 note:
-    // [[pqAssign]] collects the codebook frame each iteration (the
-    // bounded m·kSub contract) and embeds it as plan literals, so
-    // lineage is flat without truncation — each update plan executes
-    // exactly once (at the next iteration's collect). Final state
-    // (round 16): the fitted codebook returns as a LocalRelation
-    // ([[asLocalRelation]] — the same bounded m·kSub rows) so its two
-    // consumers (the encode's [[pqAssign]] collect and the ADC-LUT
-    // broadcast) read local rows job-free; reliable mode keeps Ckpt
-    // (durable-placement opt-in, CkptSpec).
-    val localFinish = m.toLong * kSub <= AssignLutMaxCentroids &&
-      !reliableMode(base)
-    lloyd(seeds, iters, Seq("sub", "cid"), "semb")(pqAssign(subBase, _)) {
-      (c, last) =>
-        if (!last) c else if (localFinish) asLocalRelation(c) else Ckpt(c)
-    }
+    lloyd(seeds, iters, Seq("sub", "cid"), "semb")(pqAssign(subBase, _))(
+      (c, last) => if (last) Ckpt(c) else c)
   }
 
   /** Product-quantization ANN (Jégou et al. 2011) under `spec` — the
@@ -867,14 +1064,15 @@ object Similarity {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     var persisted = Seq.empty[DataFrame]
     try {
+      val rows = pqRows(spec, base)
       // the residual pass and the probes both read the centroids —
-      // compute them once; without residuals they feed only the probe
-      // broadcast and stay lazy
+      // computed once (local rows of a driver fit, or checkpointed);
+      // without residuals they feed only the probe broadcast
       val cent = spec.coarse.map { _ =>
-        if (spec.residual) labelCentroids(base).localCheckpoint()
-        else labelCentroids(base)
+        val c = labelCentroidsOf(base, rows)
+        if (spec.residual && !isLocal(c)) c.localCheckpoint() else c
       }
-      val (cents, index, fitPersisted) = pqFitEncode(spec, base, cent)
+      val (cents, index, fitPersisted) = pqFitEncode(spec, base, cent, rows)
       persisted = fitPersisted
       val q = pqQueries(base, queryIds)
       val probed = cent.map(pqProbed(spec, q, _, base))
@@ -900,6 +1098,11 @@ object Similarity {
       .filter(col("emb").isNotNull)
   }
 
+  /** The PQ base collected for a driver fit — keyed by label with a
+    * coarse level, whose centroids then come from the same rows. */
+  private def pqRows(spec: PqSpec, base: DataFrame): Option[FitRows] =
+    collectFit(base, spec.dim, spec.coarse.map(_ => "label"))
+
   /** Fit the m codebooks and encode `base` (persisted by the caller):
     * returns the codebook frame (sub, cid, centroid), the code index
     * (vec_id, [label,] sub, cid) — label attached when the spec has a
@@ -907,18 +1110,21 @@ object Similarity {
     * consumed.
     *
     * Storage, MEASURED at the 1000× tier (2M vectors / 32M subspace
-    * rows, BASELINE.md r12 ANN section): under the FULL fit the
-    * subspace frame is read three times (two Lloyd rounds + encode),
-    * so it persists SER (706 s vs 847 s re-exploding; the pressure is
-    * round-trip volume, not object overhead), and so does the
-    * residual frame it derives from. Under a SAMPLED fit both are
+    * rows, BASELINE.md r12 ANN section): under the FULL distributed
+    * fit the subspace frame is read three times (two Lloyd rounds +
+    * encode), so it persists SER (706 s vs 847 s re-exploding; the
+    * pressure is round-trip volume, not object overhead), and so does
+    * the residual frame it derives from. Under a SAMPLED fit both are
     * consumed exactly once (the encode) and stay lazy — dropping that
     * single-use persist cut the 1000× build ~2.2× (host-adjusted); the
     * fit passes re-derive the sample-sized slice (the modulus
-    * filter pushes below the residual join). The coded frame itself
+    * filter pushes below the residual join). A driver fit reads the
+    * fit corpus in its one collect, so the encode's subspace frame is
+    * single-use there too and stays lazy. The coded frame itself
     * streams into its consumer. */
   private def pqFitEncode(spec: PqSpec, base: DataFrame,
-      cent: Option[DataFrame]): (DataFrame, DataFrame, Seq[DataFrame]) = {
+      cent: Option[DataFrame], rows: Option[FitRows])
+      : (DataFrame, DataFrame, Seq[DataFrame]) = {
     val sampled = spec.fitSampleMod > 1L
     def multiPass(df: DataFrame): DataFrame =
       if (sampled) df
@@ -930,14 +1136,24 @@ object Similarity {
       multiPass(base.join(broadcast(c), Seq("label"))
         .select(col("vec_id"), zip_with(col("emb"), col("centroid"),
           (a, b) => a - b).as("emb"))))
-    val subBase = multiPass(pqSubExplode(src, spec.m, spec.subDim))
-    val (fitBase, fitSub) =
-      if (sampled) {
-        val fb = src.filter(col("vec_id") % spec.fitSampleMod === 0)
-        (fb, pqSubExplode(fb, spec.m, spec.subDim))
-      } else (src, subBase)
-    val cents = pqFitCodebooks(fitBase, fitSub, spec.m, spec.subDim,
-      spec.kSub, spec.iters)
+    lazy val shared = multiPass(pqSubExplode(src, spec.m, spec.subDim))
+    val fitBase = fitSample(src, spec.fitSampleMod)
+    // the driver fit's corpus: the collected base — as residuals to
+    // its label means, the rows `cent` holds — on the fit sample
+    val fitRows = rows.flatMap(r => DriverLloyd.mirrored {
+      val res = if (!spec.residual) r else {
+        val means = DriverLloyd.keyMeans(r).toMap
+        r.withVecs(i => r.vecs(i).zip(means(r.keys(i))).map {
+          case (a, b) => a - b
+        })
+      }
+      res.select(res.all.filter(i =>
+        !sampled || res.ids(i) % spec.fitSampleMod == 0))
+    })
+    val cents = pqFitCodebooks(spec, fitBase, fitRows,
+      if (sampled) pqSubExplode(fitBase, spec.m, spec.subDim) else shared)
+    val subBase =
+      if (isLocal(cents)) pqSubExplode(src, spec.m, spec.subDim) else shared
     val codes = pqAssign(subBase, cents)
       .select(col("vec_id"), col("sub"), col("cid"))
     val index = if (spec.coarse.isEmpty) codes
@@ -973,13 +1189,21 @@ object Similarity {
     * round(·,6) would add m extra half-way rounding decisions per
     * pair, and round() at a boundary is the one operation Spark
     * (exact-expansion HALF_UP) and DuckDB (scaled multiply) can
-    * disagree on — observed once in 40 960 terms at sf0.01. */
+    * disagree on — observed once in 40 960 terms at sf0.01. The
+    * m·kSub codebook rows (the fit contract) collect and enter the
+    * plan as one literal, [[pqAssign]]'s LUT: broadcasting them would
+    * cost a job even from a LocalRelation. */
   private def pqLut(spec: PqSpec, q: DataFrame, cents: DataFrame)
-      : DataFrame =
-    q.crossJoin(broadcast(cents))
+      : DataFrame = {
+    val book = cents.select(col("sub"), col("cid"), col("centroid"))
+      .collect().map(r => (r.getInt(0), r.getInt(1),
+        r.getSeq[Double](2).toSeq)).toSeq
+    q.select(col("query_id"), col("q_emb"),
+        inline(typedLit(book)).as(Seq("sub", "cid", "centroid")))
       .select(col("query_id"), col("sub"), col("cid"),
         dot(slice(col("q_emb"), col("sub") * lit(spec.subDim) + lit(1),
           lit(spec.subDim)), col("centroid")).as("pdot"))
+  }
 
   /** ADC score → top-k over a code index: exhaustive when `probed` is
     * absent, else restricted to each query's probed partitions; the
@@ -1068,7 +1292,8 @@ object Similarity {
     requireStorable(spec)
     val base = pqBase(spec, embeddings, Seq("vec_id", "label"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (cents, index, persisted) = pqFitEncode(spec, base, None)
+    val rows = pqRows(spec, base)
+    val (cents, index, persisted) = pqFitEncode(spec, base, None, rows)
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(base.sparkSession.sparkContext.hadoopConfiguration)
     PqIndexV1Dirs.foreach(d =>
@@ -1076,7 +1301,7 @@ object Similarity {
     // label is normalized to LONG at write time: the partition
     // directory re-infers its own numeric type, so one explicit width
     // keeps the probe's joins exact
-    labelCentroids(base)
+    labelCentroidsOf(base, rows)
       .select(lit("coarse").as("kind"),
         col("label").cast("long").as("label"),
         lit(null).cast("int").as("sub"), lit(null).cast("int").as("cid"),
@@ -1217,6 +1442,21 @@ object Similarity {
   private def labelCentroids(base: DataFrame): DataFrame =
     decimalMeans(base, Seq("label"), "emb")
 
+  /** [[labelCentroids]] of `base` from its collected rows (keyed by
+    * label), as a LocalRelation. */
+  private def labelCentroidsLocal(base: DataFrame, rows: FitRows)
+      : DataFrame =
+    localFrame(base.sparkSession, StructType(Seq(base.schema("label"),
+        CentroidField)),
+      DriverLloyd.keyMeans(rows).map { case (k, v) => Row(k, v.toSeq) })
+
+  /** [[labelCentroidsLocal]] when `base` was collected, else
+    * [[labelCentroids]]. */
+  private def labelCentroidsOf(base: DataFrame, rows: Option[FitRows])
+      : DataFrame =
+    rows.flatMap(r => DriverLloyd.mirrored(labelCentroidsLocal(base, r)))
+      .getOrElse(labelCentroids(base))
+
   /** Keep each query's `nprobe` best coarse cells — the one probe
     * rule of every coarse level ([[Coarse.probedSql]] mirrors it):
     * (query, cell) `pairs` ranked per `part` by the rounded
@@ -1273,26 +1513,35 @@ object Similarity {
           (col(s"${a}qn") * col(s"${b}qn")), 6)
     }
 
-  // NULL, NULL-element and zero-norm embeddings drop, mirrored by the
-  // oracle's corpus filter (IvfSpec.rows): a NULL row would enter
-  // fine ranking with a NULL cos_sim and surface whenever a probed cell
-  // holds fewer than k candidates, and a zero vector has no cosine
-  // direction — its norm divides by zero (an error under ANSI, NaN in
-  // DuckDB). LSH cells also fail fast on a dim mismatch, which would
-  // NULL every projection and collapse the corpus into one bucket (a
-  // silent flat scan); assert_true is kept alive by the filter.
-  private def ivfBase(spec: IvfSpec, embeddings: DataFrame): DataFrame = {
-    val base = embeddings.select(Seq(col("vec_id")) ++
-        (if (spec.keepsLabel) Seq(col("label")) else Nil) :+
+  /** The cosine corpus read of the IVF and SemDeDup families: `keep`
+    * and `emb` (the embedding as doubles) of the rows whose vector has
+    * a cosine direction, mirrored by the oracles' corpus filter
+    * ([[graft.queries.QueryUtil.vectorRowsSql]]). NULL, NULL-element
+    * and zero-norm embeddings drop: a NULL row would enter fine ranking
+    * with a NULL cos_sim and surface whenever a probed cell holds fewer
+    * than k candidates, and a zero vector's norm divides by zero (an
+    * error under ANSI, NaN in DuckDB). A dim mismatch, which would NULL
+    * every score, fails fast with `dimError` (assert_true is kept alive
+    * by the filter). */
+  private def vectorRows(embeddings: DataFrame, keep: Seq[Column],
+      dim: Option[Int], dimError: String): DataFrame = {
+    // the IS NOT NULL conjunct keeps a NULL row away from the dim
+    // check (a NULL norm test alone would not short-circuit it)
+    val base = embeddings.select(keep :+
         toDouble(col("embedding")).as("emb"): _*)
-      .filter(dot(col("emb"), col("emb")) > 0)
-    spec.coarse match {
-      case c: Coarse.Lsh =>
-        base.filter(coalesce(assert_true(size(col("emb")) === c.dim,
-          lit(s"Coarse.Lsh: embedding dim != ${c.dim}")), lit(true)))
-      case _ => base
-    }
+      .filter(col("emb").isNotNull && dot(col("emb"), col("emb")) > 0)
+    dim.fold(base)(d =>
+      base.filter(coalesce(assert_true(size(col("emb")) === d,
+        lit(s"$dimError: embedding dim != $d")), lit(true))))
   }
+
+  /** LSH cells check the dim: a mismatch would collapse the corpus
+    * into one bucket (a silent flat scan). */
+  private def ivfBase(spec: IvfSpec, embeddings: DataFrame): DataFrame =
+    vectorRows(embeddings, Seq(col("vec_id")) ++
+      (if (spec.keepsLabel) Seq(col("label")) else Nil),
+      PartialFunction.condOpt(spec.coarse) { case c: Coarse.Lsh => c.dim },
+      "Coarse.Lsh")
 
   /** A k-means coarse index — the ingest gate's state between refits:
     * the fitted centroids (cid, centroid) and the manifest keyed by
@@ -1309,11 +1558,14 @@ object Similarity {
     * `fitSampleMod` > 1 seeds and Lloyd passes run on the
     * `vec_id % mod = 0` sample (FAISS trains quantizers on a sample)
     * while every vector is still assigned; the build drops to
-    * O(N·k/mod) plus one full assignment pass. */
+    * O(N·k/mod) plus one full assignment pass. An unsampled driver fit
+    * collects the whole base, which counts it too. */
   private def kmeansIndex(c: Coarse.Kmeans, base: DataFrame): IvfIndex = {
-    val kClusters = c.k.of(base.count())
-    val centroids = kmeansCentroids(fitSample(base, c.fitSampleMod),
-      kClusters, c.iters)
+    val fitBase = fitSample(base, c.fitSampleMod)
+    val rows = collectFit(fitBase, FitDim)
+    val kClusters = c.k.of(rows.filter(_ => c.fitSampleMod == 1L)
+      .fold(base.count())(_.size.toLong))
+    val centroids = kmeansOn(fitBase, rows, kClusters, c.iters, Cosine)
     IvfIndex(centroids, assignClusters(base, centroids), kClusters)
   }
 
@@ -1340,10 +1592,24 @@ object Similarity {
         val idx = kmeansIndex(c, base)
         Cells(idx.members, Some(idx.centroids), None, c.nprobe)
       case c: Coarse.TwoLevel =>
-        val cents2 = subCellFit(base, "label", c.k2, c.iters)
-        Cells(assignSubClusters(base, cents2, "label"),
-          Some(labelCentroids(base)), Some(cents2), c.nprobe)
+        val (cents1, cents2) = twoLevelFit(base, c)
+        Cells(assignSubClusters(base, cents2, "label"), Some(cents1),
+          Some(cents2), c.nprobe)
     }
+
+  /** The two-level grid's label centroids and per-label sub-cells: both
+    * from one collect on the driver within the gate, else
+    * [[labelCentroids]] and [[subCellFit]]. */
+  private def twoLevelFit(base: DataFrame, c: Coarse.TwoLevel)
+      : (DataFrame, DataFrame) =
+    collectFit(base, FitDim, Some("label"))
+      .flatMap(rows => DriverLloyd.mirrored((labelCentroidsLocal(base, rows),
+        centroidFrame(base.sparkSession, Seq(base.schema("label")),
+          DriverLloyd.perKey(rows, DriverLloyd.groupBy(rows.all, rows.keys(_)),
+            c.k2, c.iters).map { case (key, cents) => Seq(key) -> cents },
+          "scid"))))
+      .getOrElse((labelCentroids(base), subCellFit(base, "label", c.k2,
+        c.iters)))
 
   /** Each query's nearest centroid cells (`qid`, q_-prefixed codes,
     * cell keys) and the keys they join the members on: the
@@ -1568,28 +1834,23 @@ object Similarity {
     * SemDeDup ([[semDedup]]). */
   private def assignSubClusters(base: DataFrame,
       cents2: DataFrame, key: String): DataFrame = {
-    // r16: when the sub-codebook is ALREADY a LocalRelation (the
-    // LUT-gated loop state / final fit frame — [[asLocalRelation]]),
-    // group+sort it on the DRIVER instead of through the aggregate:
-    // the broadcast then builds from a LocalRelation (job-free
-    // executeCollect) where the aggregate form submitted one
-    // 32-slice LocalTableScan stage job per consumer. Identical
-    // rows: the SQL form's array_sort(collect_list(struct(scid,
-    // centroid))) is a lexicographic struct sort whose FIRST field
-    // (scid) is unique within a key, so sorting by scid alone
-    // realizes the same order (SimilaritySpec pins the two forms).
-    val lut = cents2.queryExecution.logical match {
-      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        subClusterLutLocal(cents2, key)
-      case _ =>
-        cents2
-          .groupBy(col(key))
-          .agg(array_sort(collect_list(
-            struct(col("scid"), col("centroid")))).as("_sl"))
-          .select(col(key),
-            transform(col("_sl"), e => e("centroid")).as("_cents"),
-            transform(col("_sl"), e => e("scid")).as("_scids"))
-    }
+    // when the sub-codebook is a LocalRelation (a driver fit's state)
+    // it is grouped and sorted on the DRIVER instead of through the
+    // aggregate, whose exchange is one more job per consumer; the
+    // broadcast then scans a LocalRelation. Identical rows: the SQL
+    // form's array_sort(collect_list(struct(scid, centroid))) is a
+    // lexicographic struct sort whose FIRST field (scid) is unique
+    // within a key, so sorting by scid alone realizes the same order
+    // (SimilaritySpec pins the two forms).
+    val lut =
+      if (isLocal(cents2)) subClusterLutLocal(cents2, key)
+      else cents2
+        .groupBy(col(key))
+        .agg(array_sort(collect_list(
+          struct(col("scid"), col("centroid")))).as("_sl"))
+        .select(col(key),
+          transform(col("_sl"), e => e("centroid")).as("_cents"),
+          transform(col("_sl"), e => e("scid")).as("_scids"))
     val cands = zip_with(col("_cents"), col("_scids"),
       (c, id) => struct(round(cosine(col("emb"), c), 6).as("a_sim"),
         (-id).as("neg_scid"), id.as("scid")))
@@ -1662,11 +1923,10 @@ object Similarity {
       val members = spec.grid match {
         case SemDedupGrid.Flat(rule) =>
           // a row-derived k counts the raw input
-          val cent = kmeansCentroids(fitSample(base, spec.fitSampleMod),
-            rule.of(embeddings.count()), spec.iters)
+          val cent = kmeansFit(fitSample(base, spec.fitSampleMod),
+            rule.of(embeddings.count()), spec.iters, Cosine, spec.dim)
           assignClusters(base, cent)
-        case h: SemDedupGrid.Hier =>
-          hierFit(base, h.k(base.count()), spec.iters, spec.fitSampleMod)._3
+        case h: SemDedupGrid.Hier => hierFit(spec, base, h.k).members
       }
       // the prune checkpoints its output, so unpersisting base never
       // strands the returned frame's lineage
@@ -1675,32 +1935,37 @@ object Similarity {
 
   /** The FITTED state of the semantic-dedup ingest gate — what a
     * deployment keeps between refits (the [[IvfIndex]] sibling): the
-    * manifest's TWO-LEVEL cluster centroids ([[hierFit]]) plus its
+    * manifest's TWO-LEVEL grid ([[hierFit]]) — the level-1 centroids
+    * of its OCCUPIED cells and the level-2 centroids — plus its
     * distinct (cell, sub-cell, value) groups with min-id
-    * representatives. All three frames are materialized and
-    * O(manifest) at most; every incoming batch is judged against this
-    * state without touching the manifest again. */
+    * representatives. Within the driver gate all three are
+    * LocalRelations built from one collect of the manifest, so a batch
+    * reads them job-free; otherwise they are O(manifest) frames
+    * materialized at fit time. Every incoming batch is judged against
+    * this state without touching the manifest again. */
   final case class SemDedupState(centroids1: DataFrame,
       centroids2: DataFrame, manGroups: DataFrame)
 
   /** Fit the gate state of `spec` — a hierarchical grid, k derived from
-    * the NULL-filtered manifest — on the manifest: [[hierFit]] plus
-    * the manifest's group collapse. */
+    * the guarded manifest — on the manifest: [[hierFit]] plus the
+    * manifest's group collapse. */
   def semDedupFit(spec: SemDedupSpec, manifest: DataFrame): SemDedupState = {
     val grid = gateGrid(spec)
     withSemDedupBase(spec, manifest) { man =>
-      val n = man.count()
-      // an EMPTY manifest would fit zero centroids and the gate's
-      // occupied-cell restriction would then drop every incoming
-      // vector — violating its 'one row per incoming vector' contract.
-      // It can drop nothing, so fail loudly at fit time instead.
-      require(n > 0, "semDedupFit: empty manifest — nothing to fit; " +
-        "an empty manifest cannot drop incoming vectors, ingest the " +
-        "first batch unfiltered instead")
-      val (cent1, cents2, members) =
-        hierFit(man, grid.k(n), spec.iters, spec.fitSampleMod)
+      val fit = hierFit(spec, man, { n =>
+        // an EMPTY manifest would fit zero centroids and the gate's
+        // occupied-cell restriction would then drop every incoming
+        // vector — violating its 'one row per incoming vector'
+        // contract. It can drop nothing, so fail loudly at fit time.
+        require(n > 0, "semDedupFit: empty manifest — nothing to fit; " +
+          "an empty manifest cannot drop incoming vectors, ingest the " +
+          "first batch unfiltered instead")
+        grid.k(n)
+      })
       // ≤ O(manifest); reused by every batch
-      SemDedupState(cent1, cents2, Ckpt(cellGroups(members, spec.cellKeys)))
+      SemDedupState(fit.occupied1, fit.cents2,
+        if (isLocal(fit.members)) localCellGroups(fit.members, spec.cellKeys)
+        else Ckpt(cellGroups(fit.members, spec.cellKeys)))
     }
   }
 
@@ -1727,11 +1992,9 @@ object Similarity {
       incoming: DataFrame): DataFrame = {
     gateGrid(spec) // rejects a flat spec
     withSemDedupBase(spec, incoming) { inc =>
-      val occ1 = state.centroids1.join(
-        state.centroids2.select(col("cid")).distinct(), Seq("cid"),
-        "left_semi")
-      semDedupPrune(spec, assignSubClusters(assignClusters(inc, occ1),
-        state.centroids2, "cid"), Some(state.manGroups))
+      semDedupPrune(spec, assignSubClusters(
+        assignClusters(inc, state.centroids1), state.centroids2, "cid"),
+        Some(state.manGroups))
     }
   }
 
@@ -1744,20 +2007,17 @@ object Similarity {
         s"the semantic ingest gate runs on the hierarchical grid, not $g")
     }
 
-  /** Runs `body` on the SemDeDup input guard's frame — same policy as
-    * cosineDupPairs/lshTopK: NULL embeddings drop (they can never
-    * pair), a dim mismatch fails fast (dot_product would otherwise
-    * NULL every cosine and the threshold filter would silently drop
-    * nothing). The frame feeds the fit passes and the final
-    * assignment, so it persists — and is reclaimed on every exit path
-    * (the PageRank/MvRefresh rule). */
+  /** Runs `body` on the SemDeDup input guard's frame — the IVF read
+    * ([[vectorRows]]): NULL, NULL-element and zero-norm embeddings drop
+    * (they have no cosine direction, so they can never pair), a dim
+    * mismatch fails fast (dot_product would otherwise NULL every cosine
+    * and the threshold filter would silently drop nothing). The frame
+    * feeds the fit and the final assignment, so it persists — and is
+    * reclaimed on every exit path (the PageRank/MvRefresh rule). */
   private def withSemDedupBase[T](spec: SemDedupSpec,
       embeddings: DataFrame)(body: DataFrame => T): T = {
-    val base = embeddings.select(col("vec_id"),
-        toDouble(col("embedding")).as("emb"))
-      .filter(col("emb").isNotNull)
-      .filter(coalesce(assert_true(size(col("emb")) === spec.dim,
-        lit(s"semDedup: embedding dim != ${spec.dim}")), lit(true)))
+    val base = vectorRows(embeddings, Seq(col("vec_id")), Some(spec.dim),
+        "semDedup")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try body(base) finally base.unpersist()
   }
@@ -1766,23 +2026,74 @@ object Similarity {
   private def fitSample(base: DataFrame, mod: Long): DataFrame =
     if (mod > 1L) base.filter(col("vec_id") % mod === 0) else base
 
+  /** A fitted hierarchical grid: the level-1 centroids of the occupied
+    * cells (cid, centroid), the level-2 centroids (cid, scid,
+    * centroid) and the membership of the base (vec_id, cid, emb,
+    * scid). */
+  private final case class HierGrid(occupied1: DataFrame,
+      cents2: DataFrame, members: DataFrame)
+
   /** The hierarchical grid: level 1 is a k-cluster k-means over `base`
     * (or its `fitSampleMod` slice), level 2 an independent per-cell
-    * k-means of the same k ([[subCellFit]] keyed on `cid`) over each
-    * cell's fit members — under sampling, its sampled members plus the
-    * cell's min-id member, the row that keeps a sample-free cell
-    * seeded. Every cid with ≥1 base member carries level-2 structure,
-    * and every cid in the level-2 centroids is backed by ≥1 base
-    * member (a cell empty in the fresh level-1 assignment has no rows
-    * to seed from and drops out) — the occupancy fact
-    * [[semDedupGateBatch]]'s restricted assignment relies on. Returns
-    * (level-1 centroids, level-2 centroids (cid, scid, centroid), the
-    * membership of `base` (vec_id, cid, emb, scid)). */
-  private def hierFit(base: DataFrame, k: Int, iters: Int,
-      fitSampleMod: Long): (DataFrame, DataFrame, DataFrame) = {
-    val cent1 = kmeansCentroids(fitSample(base, fitSampleMod), k, iters)
-    // m1 feeds every level-2 fit pass and the final sub-assignment —
-    // checkpoint so level-1 assignment runs once
+    * k-means of the same k over each cell's fit members — under
+    * sampling, its sampled members plus the cell's min-id member, the
+    * row that keeps a sample-free cell seeded. Every cid with ≥1 base
+    * member carries level-2 structure, and every cid in the level-2
+    * centroids is backed by ≥1 base member (a cell empty in the fresh
+    * level-1 assignment has no rows to seed from and drops out) — the
+    * occupancy fact [[semDedupGateBatch]]'s restricted assignment
+    * relies on. `k` maps the base's row count to the grid's k.
+    *
+    * Within the driver gate the whole grid — both levels, the
+    * occupied cells and the membership — comes from ONE collect of
+    * `base` ([[hierLocal]]); otherwise from [[hierSpark]]. */
+  private def hierFit(spec: SemDedupSpec, base: DataFrame,
+      k: Long => Int): HierGrid = {
+    import spec.{fitSampleMod, iters}
+    collectFit(base, spec.dim)
+      .flatMap { rows =>
+        val kk = k(rows.size.toLong)
+        DriverLloyd.mirrored(hierLocal(base, rows, kk, iters, fitSampleMod))
+      }
+      .getOrElse(hierSpark(base, k(base.count()), iters, fitSampleMod))
+  }
+
+  /** [[hierFit]] on the driver over the collected `rows` of `base`. */
+  private def hierLocal(base: DataFrame, rows: FitRows, k: Int,
+      iters: Int, mod: Long): HierGrid = {
+    import DriverLloyd.{Cents, fit, groupBy, nearest, perKey}
+    val all = rows.all
+    val c1 = fit(rows, if (mod > 1L) all.filter(rows.ids(_) % mod == 0)
+      else all, k, iters, Cosine)
+    val cid = all.map(i => nearest(Cosine, rows.vecs(i), c1))
+    val cents2: Seq[(Any, Cents)] = perKey(rows,
+      groupBy(all, cid(_)).map { case (c, ix) =>
+        val mn = ix.map(rows.ids).min
+        c -> (if (mod > 1L)
+          ix.filter(i => rows.ids(i) % mod == 0 || rows.ids(i) == mn)
+        else ix)
+      }, k, iters)
+    val sub = cents2.toMap
+    val spark = base.sparkSession
+    val cidField = StructField("cid", IntegerType)
+    HierGrid(
+      localFrame(spark, StructType(Seq(cidField, CentroidField)),
+        c1.ids.indices.filter(j => sub.contains(c1.ids(j)))
+          .map(j => Row(c1.ids(j), c1.vecs(j).toSeq))),
+      centroidFrame(spark, Seq(cidField),
+        cents2.map { case (c, cs) => Seq(c) -> cs }, "scid"),
+      localFrame(spark, StructType(Seq(base.schema("vec_id"), cidField,
+          base.schema("emb"), StructField("scid", IntegerType))),
+        all.toSeq.map(i => Row(rows.rawIds(i), cid(i), rows.vecs(i).toSeq,
+          nearest(Cosine, rows.vecs(i), sub(cid(i)))))))
+  }
+
+  /** [[hierFit]] distributed: the level-1 membership is checkpointed
+    * (it feeds every level-2 pass and the final sub-assignment), the
+    * level-2 fit is [[subCellFit]] keyed on `cid`. */
+  private def hierSpark(base: DataFrame, k: Int, iters: Int,
+      fitSampleMod: Long): HierGrid = {
+    val cent1 = kmeansSpark(fitSample(base, fitSampleMod), k, iters, Cosine)
     val m1 = Ckpt(assignClusters(base, cent1))
     val m1fit =
       if (fitSampleMod > 1L) {
@@ -1793,9 +2104,9 @@ object Similarity {
           .drop("mn")
           .transform(Ckpt(_)) // sample-sized; seeds + both Lloyd passes
       } else m1
-    val cents2 = subCellFit(m1fit, "cid", k, iters,
-      local = k.toLong * k <= AssignLutMaxCentroids && !reliableMode(m1fit))
-    (cent1, cents2, assignSubClusters(m1, cents2, "cid"))
+    val cents2 = subCellFit(m1fit, "cid", k, iters)
+    HierGrid(cent1.join(cents2.select(col("cid")).distinct(), Seq("cid"),
+        "left_semi"), cents2, assignSubClusters(m1, cents2, "cid"))
   }
 
   /** The SemDeDup group collapse: identical vectors assign identically,
@@ -1806,6 +2117,27 @@ object Similarity {
     members.groupBy(keys.map(col) :+ col("emb"): _*)
       .agg(min(col("vec_id")).as("rep_id"))
       .withColumn("norm", sqrt(dot(col("emb"), col("emb"))))
+
+  /** [[cellGroups]] of a LocalRelation membership, on the driver: the
+    * same rows — the group key's −0.0 reads 0.0, as Spark normalizes
+    * floating grouping keys — as a LocalRelation. */
+  private def localCellGroups(members: DataFrame, keys: Seq[String])
+      : DataFrame = {
+    val schema = members.schema
+    val iKeys = keys.map(schema.fieldIndex)
+    val iId = schema.fieldIndex("vec_id")
+    val iEmb = schema.fieldIndex("emb")
+    val groups = members.collect() // job-free: LocalTableScan
+      .groupBy(r => (iKeys.map(r.get), r.getSeq[Double](iEmb)
+        .map(v => if (v == 0.0) 0.0 else v)))
+      .toSeq.map { case ((key, emb), rs) =>
+        Row.fromSeq(key ++ Seq(emb,
+          rs.minBy(_.getAs[Number](iId).longValue).get(iId),
+          math.sqrt(DriverLloyd.dot(emb.toArray, emb.toArray))))
+      }
+    localFrame(members.sparkSession,
+      cellGroups(members, keys).schema, groups)
+  }
 
   /** The one pair prune of the SemDeDup family: exact pairwise cosine
     * only WITHIN each cell of the membership frame, greedy
@@ -1836,8 +2168,9 @@ object Similarity {
       if (frozen.isEmpty) _.localCheckpoint() else Ckpt(_)
     val keys = spec.cellKeys
     // members feeds the group collapse and the final output —
-    // checkpoint so assignment runs once, not twice
-    val members = place(members0)
+    // checkpoint so assignment runs once, not twice (a driver fit's
+    // LocalRelation membership is materialized already)
+    val members = if (isLocal(members0)) members0 else place(members0)
     val groups = cellGroups(members, keys)
     val batch = groups.withColumn("_batch", lit(true))
     val sources = frozen.fold(batch)(f =>

@@ -35,6 +35,18 @@ object QueryUtil {
   def sqlAvgDec(e: String): String =
     s"round(${sqlSumDec(e)} / count(*), 6)"
 
+  /** The embeddings rows (vec_id, label, emb) whose vector has a cosine
+    * direction — no NULL, NULL-element or zero-norm vector — and that
+    * pass the extra predicate `where` (`" AND …"`): the oracle side of
+    * the IVF and SemDeDup corpus read (`Similarity.vectorRows`).
+    * `list_dot_product` raises on a NULL element, and DuckDB does not
+    * promise to short-circuit AND, so a CASE keeps it off those rows. */
+  def vectorRowsSql(where: String = ""): String =
+    "SELECT * FROM (SELECT vec_id, label, embedding::DOUBLE[] AS emb\n" +
+      "  FROM embeddings) WHERE CASE WHEN len(list_filter(emb, " +
+      "x -> x IS NULL)) = 0\n" +
+      s"  THEN list_dot_product(emb, emb) > 0 ELSE false END$where"
+
   /** SQL fragment mirroring `round(Similarity.cosine(a, b), 6)`. */
   def sqlCosine(a: String, b: String): String =
     s"round(list_dot_product($a, $b) / " +

@@ -1646,7 +1646,8 @@ class SimilaritySpec extends SparkSpec {
     // a ring of 36 vectors 10° apart (neighbours at cos 0.985, two
     // apart at 0.940 — far from the threshold either way, so the
     // rounding cannot decide a case), exact duplicates of four ring
-    // points, and one NULL embedding: 41 rows, 40 of them vectors
+    // points, one NULL embedding, one with a NULL element and one zero
+    // vector: 43 rows, 40 of them vectors the guard keeps
     val thr = 0.95
     def ring(deg: Int): Seq[Float] =
       Seq(math.cos(deg.toRadians).toFloat, math.sin(deg.toRadians).toFloat) ++
@@ -1656,7 +1657,10 @@ class SimilaritySpec extends SparkSpec {
         Seq(5, 14, 23, 32).zipWithIndex.map { case (src, j) =>
           ((37 + j).toLong, Some(ring((src - 1) * 10)))
         } :+ ((41L, None))
-    val df = fixture.toDF("vec_id", "embedding")
+    val df = fixture.toDF("vec_id", "embedding").unionByName(spark.sql(
+      "SELECT 42L AS vec_id, array(1.0F, 0.0F, CAST(NULL AS FLOAT), " +
+        "0.0F, 0.0F, 0.0F, 0.0F, 0.0F) AS embedding " +
+        "UNION ALL SELECT 43L, array_repeat(0.0F, 8)"))
     val emb = fixture.collect { case (id, Some(v)) =>
       id -> v.map(_.toDouble)
     }.toMap
@@ -1669,9 +1673,9 @@ class SimilaritySpec extends SparkSpec {
       dim = 8)
     val gateSplit = 5
     // (shape, spec, gate, the k its grid derives): per-rows counts the
-    // 41 raw rows (⌈41/8⌉ = 6, not 5); hier counts the 40 vectors
+    // 43 raw rows (⌈43/8⌉ = 6, not 5); hier counts the 40 vectors
     // (⌈√⌈40/10⌉⌉ = 2, not 3), the gate the 32 manifest vectors
-    // (⌈√⌈32/8⌉⌉ = 2, not ⌈√⌈33/8⌉⌉ = 3)
+    // (⌈√⌈32/8⌉⌉ = 2, not ⌈√⌈35/8⌉⌉ = 3)
     val shapes = Seq(
       ("flat fixed", flat, false, 3),
       ("flat per-rows", flat.copy(grid = Flat(PerRowsMin2(8))), false, 6),
