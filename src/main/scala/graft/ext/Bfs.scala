@@ -10,6 +10,13 @@ import org.apache.spark.sql.functions._
   * influence, triangles score cohesion, connected components give
   * membership, BFS gives DISTANCE.
   *
+  * Within [[DriverGraph.MaxEdges]] directed input edges every entry
+  * point runs on the driver: the raw edge list collects in one job and
+  * the rounds below run over a CSR adjacency, with the same rows, the
+  * same horizon and the same warning (GraphFormSpec). Past the gate,
+  * in reliable [[Ckpt]] mode (which forces this loop), or on a NULL
+  * endpoint or a non-integral id, the distributed loop runs:
+  *
   * Distributed shape — frontier iteration, the standard Pregel-style
   * BFS on a DataFrame: per round, ONE equi-join of the (tiny,
   * shrinking) frontier against the edge list keyed on the source
@@ -45,7 +52,43 @@ object Bfs {
     * the precondition holds (GraphOpsSpec pins it on the bipartite
     * fixture). */
   def distances(edges: DataFrame, src: String, dst: String,
-      maxIter: Int = 20, symIsDistinct: Boolean = false): DataFrame = {
+      maxIter: Int = 20, symIsDistinct: Boolean = false): DataFrame =
+    onDriver(edges, src, dst, maxIter, symIsDistinct)
+      .getOrElse(distancesLoop(edges, src, dst, maxIter, symIsDistinct))
+
+  /** [[distances]] on the driver ([[DriverGraph]]), or None where the
+    * distributed loop runs. The `symIsDistinct` debug guard is free
+    * here: it counts the collected pairs. */
+  private def onDriver(edges: DataFrame, src: String, dst: String,
+      maxIter: Int, symIsDistinct: Boolean): Option[DataFrame] =
+    DriverGraph.collect(edges, src, dst).map { g =>
+      if (symIsDistinct && debugAssertions(edges)) {
+        val (n, nd) = g.symCounts
+        requireDistinct(n, nd)
+      }
+      val (out, live) = g.bfs(maxIter)
+      if (live) warnHorizon(maxIter)
+      out
+    }
+
+  private def debugAssertions(edges: DataFrame): Boolean =
+    edges.sparkSession.conf.get("graft.debug.assertions", "false") == "true"
+
+  private def requireDistinct(n: Long, nd: Long): Unit =
+    require(n == nd, "symIsDistinct asserted but the symmetrized " +
+      s"union carries duplicates ($n rows, $nd distinct)")
+
+  // reaching maxIter with a live frontier means nodes beyond maxIter
+  // hops are silently absent — indistinguishable from unreachable ones
+  // — so make the truncation observable
+  private def warnHorizon(maxIter: Int): Unit = System.err.println(
+    s"[bfs] WARNING: frontier still non-empty after maxIter=$maxIter" +
+      " rounds; distances beyond that horizon are missing" +
+      " (raise maxIter for deeper graphs)")
+
+  /** [[distances]]' distributed frontier loop. */
+  private def distancesLoop(edges: DataFrame, src: String, dst: String,
+      maxIter: Int, symIsDistinct: Boolean): DataFrame = {
     val symRaw = edges.select(col(src).as("a"), col(dst).as("b"))
       .unionByName(edges.select(col(dst).as("a"), col(src).as("b")))
     // the dedup-free branch coalesces the union (narrow — no
@@ -64,13 +107,8 @@ object Bfs {
       // check re-adds exactly the exchange the flag exists to skip.
       // New opt-ins need a written proof at the call site plus a spec
       // case (the g_bfs even/odd encoding is the template).
-      if (edges.sparkSession.conf
-          .get("graft.debug.assertions", "false") == "true") {
-        val n = c.count()
-        val nd = c.distinct().count()
-        require(n == nd, "symIsDistinct asserted but the symmetrized " +
-          s"union carries duplicates ($n rows, $nd distinct)")
-      }
+      if (debugAssertions(edges))
+        requireDistinct(c.count(), c.distinct().count())
       c
     } else symRaw.distinct())
       // r16 barrier fusion: sym's truncation is marked lazily — the
@@ -86,8 +124,10 @@ object Bfs {
     // diameter), and one materialization job per round disappears
     // (same rows, BfsSpec/GraphOpsSpec unchanged).
     // The init's truncation is marked lazily too and probed with a
-    // full count. Measured (perfbench catalog_iterative --trace 1,
-    // g_bfs on this in-memory path): 2 SQL executions, 3 jobs — the
+    // full count. Measured on g_bfs before it moved to the driver
+    // path (perfbench catalog_iterative --trace 1; this loop now
+    // serves graphs past the gate, and reliable mode, whose
+    // truncations are eager): 2 SQL executions, 3 jobs — the
     // lazily call runs the min-aggregate's exchange stage (1 job,
     // which also builds sym's blocks), the count runs 2.
     var frontier = Ckpt.lazily(sym.agg(min(col("a")).as("node"))
@@ -100,8 +140,9 @@ object Bfs {
       // The round's truncation is marked LAZILY and the emptiness
       // probe is a full count(), so the count's own job materializes
       // the frontier blocks. That is NOT one job per round. Measured
-      // (perfbench catalog_iterative --trace 1, g_bfs on this
-      // in-memory path): each round is 2 SQL executions and 5–6
+      // on g_bfs before it moved to the driver path (perfbench
+      // catalog_iterative --trace 1): each round is 2 SQL executions
+      // and 5–6
       // jobs. Under AQE, localCheckpoint(eager = false) executes the
       // round's plan to get its RDD, which runs the round's 3–4
       // shuffle-map stages as jobs during the call; the count then
@@ -119,13 +160,7 @@ object Bfs {
         iter += 1
       }
     }
-    // reaching maxIter with a live frontier means nodes beyond
-    // maxIter hops are silently absent — indistinguishable from
-    // unreachable ones — so make the truncation observable
-    if (!done) System.err.println(
-      s"[bfs] WARNING: frontier still non-empty after maxIter=$maxIter" +
-        " rounds; distances beyond that horizon are missing" +
-        " (raise maxIter for deeper graphs)")
+    if (!done) warnHorizon(maxIter)
     labels
   }
 
@@ -147,8 +182,10 @@ object Bfs {
     }))
   }
 
-  /** [[distances]] over a MATERIALIZED adjacency index: the
-    * symmetrized edge list is written ONCE as a bucketed table
+  /** [[distances]] over a MATERIALIZED adjacency index. Within
+    * [[DriverGraph.MaxEdges]] it runs on the driver as [[distances]]
+    * does and writes no layout; past the gate, or in reliable mode,
+    * the symmetrized edge list is written ONCE as a bucketed table
     * (`bucketBy(nBuckets, a)`, sorted within buckets — the
     * `q_bucketed_join` lever), and every round's frontier join reads
     * it back through the catalog. Two things change vs the cached
@@ -220,7 +257,18 @@ object Bfs {
     distancesIndexedImpl(edges, src, dst, maxIter, Some(autoBuckets), 0,
       symIsDistinct)
 
+  /** Within the driver gate both indexed entries run [[onDriver]]
+    * before any persist, count or layout write, so the upstream edge
+    * pipeline executes once, in the collect. */
   private def distancesIndexedImpl(edges0: DataFrame, src: String,
+      dst: String, maxIter: Int, bucketsOf: Option[Long => Int],
+      fixedBuckets: Int, symIsDistinct: Boolean): DataFrame =
+    onDriver(edges0, src, dst, maxIter, symIsDistinct).getOrElse(
+      indexedLoop(edges0, src, dst, maxIter, bucketsOf, fixedBuckets,
+        symIsDistinct))
+
+  /** The indexed entries' distributed loop over the bucketed layout. */
+  private def indexedLoop(edges0: DataFrame, src: String,
       dst: String, maxIter: Int, bucketsOf: Option[Long => Int],
       fixedBuckets: Int, symIsDistinct: Boolean): DataFrame = {
     val spark = edges0.sparkSession
@@ -255,9 +303,10 @@ object Bfs {
         // the in-memory frontier loop instead; GraphOpsSpec pins
         // `distances` ≡ `distancesIndexed`, so results are identical,
         // and the measured 100× cold-heap sensitivity started at ~6M
-        // sym edges — above this bound by construction.
+        // sym edges — above this bound by construction. The driver
+        // path was already tried, so this goes to the loop directly.
         if (bound < BfsEdgesPerBucket)
-          return distances(edges, src, dst, maxIter, symIsDistinct)
+          return distancesLoop(edges, src, dst, maxIter, symIsDistinct)
         f(bound)
     }
     val token =
@@ -289,7 +338,7 @@ object Bfs {
     var done = frontier.count() == 0L
     while (!done && iter < maxIter) {
       // The round's truncation is marked LAZILY and the emptiness
-      // probe is a full count() — the [[distances]] loop, whose
+      // probe is a full count() — the [[distancesLoop]] loop, whose
       // measured round is 2 SQL executions and 5–6 jobs (the lazily
       // call runs the round's shuffle-map stages under AQE), not one
       // job. This bucketed path was not traced.
@@ -305,10 +354,7 @@ object Bfs {
         iter += 1
       }
     }
-    if (!done) System.err.println(
-      s"[bfs] WARNING: frontier still non-empty after maxIter=$maxIter" +
-        " rounds; distances beyond that horizon are missing" +
-        " (raise maxIter for deeper graphs)")
+    if (!done) warnHorizon(maxIter)
     val out = labels // every member frontier is checkpoint-backed
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
     deleteRec(new java.io.File(dir))

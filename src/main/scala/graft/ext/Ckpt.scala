@@ -1,10 +1,13 @@
 package graft.ext
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Checkpoint placement for ITERATIVE loop state — the one shared
   * knob behind PageRank / BFS / ConnectedComponents / the k-means
-  * fits ([[Similarity]]).
+  * fits ([[Similarity]]). BFS, components and the k-means fits run on
+  * the driver within their static bounds ([[DriverGraph]], the Lloyd
+  * fits' gate) and only loop through here past them, or when
+  * reliable mode below forces the distributed loop.
   *
   * Every iterative operator here truncates its otherwise-geometric
   * loop lineage each round. `localCheckpoint()` (the default) does
@@ -57,12 +60,19 @@ object Ckpt {
     * SparkContext has no checkpoint dir set yet. */
   val DirKey = "graft.checkpoint.dir"
 
+  /** True when `ss` has opted into durable placement: the bounded
+    * driver-side loops ([[DriverGraph]], the Lloyd fits in
+    * [[Similarity]]) then run distributed, so the opt-in still writes
+    * its recoverable files. */
+  def reliable(ss: SparkSession): Boolean =
+    ss.conf.get(ModeKey, "local") == "reliable"
+
   /** Truncate `df`'s lineage at the configured placement (eager in
     * both modes, like the bare `localCheckpoint()` calls this
     * replaces). */
   def apply(df: DataFrame): DataFrame = {
     val ss = df.sparkSession
-    if (ss.conf.get(ModeKey, "local") == "reliable") {
+    if (reliable(ss)) {
       if (ss.sparkContext.getCheckpointDir.isEmpty) {
         val dir = ss.conf.get(DirKey, "")
         require(dir.nonEmpty, s"$ModeKey=reliable needs $DirKey " +
@@ -82,18 +92,18 @@ object Ckpt {
     * round one job: under AQE `localCheckpoint(eager = false)` still
     * executes the plan to get its RDD, which runs every shuffle-map
     * stage below the result stage as a job during the call. Measured
-    * with perfbench catalog_iterative --trace 1 (g_bfs): each BFS
-    * round is 2 SQL executions and 5–6 jobs (3–4 in this call, 2 in
-    * the count), and the BFS init is 3 jobs (1 + 2). The caller MUST
-    * run such a full-partition action before any other consumer; a
-    * partial-partition first action (limit/isEmpty) would leave the
-    * tail partitions to a separate backfill job, re-paying what this
-    * exists to remove. Reliable mode stays EAGER — a lazy reliable
-    * checkpoint re-executes the plan for the write, which is strictly
-    * worse, and CkptSpec pins the durable artifacts. */
-  def lazily(df: DataFrame): DataFrame = {
-    val ss = df.sparkSession
-    if (ss.conf.get(ModeKey, "local") == "reliable") apply(df)
+    * with perfbench catalog_iterative --trace 1 on g_bfs before it
+    * moved to the driver path (the BFS loop now runs only past
+    * [[DriverGraph.MaxEdges]], or in reliable mode, where this call is
+    * eager): each BFS round is 2 SQL executions and 5–6 jobs (3–4 in
+    * this call, 2 in the count), and the BFS init is 3 jobs (1 + 2).
+    * The caller MUST run such a full-partition action before any other
+    * consumer; a partial-partition first action (limit/isEmpty) would
+    * leave the tail partitions to a separate backfill job, re-paying
+    * what this exists to remove. Reliable mode stays EAGER — a lazy
+    * reliable checkpoint re-executes the plan for the write, which is
+    * strictly worse, and CkptSpec pins the durable artifacts. */
+  def lazily(df: DataFrame): DataFrame =
+    if (reliable(df.sparkSession)) apply(df)
     else df.localCheckpoint(eager = false)
-  }
 }

@@ -8,7 +8,13 @@ import org.apache.spark.sql.functions._
   * (a pair list alone under-merges: A≈B and B≈C must collapse A, B,
   * C together).
   *
-  * Two-phase strategy:
+  * Within [[DriverGraph.MaxEdges]] directed input edges it runs on the
+  * driver: the raw edge list collects in one job and a union-find
+  * gives every node its component's smallest id (GraphFormSpec
+  * compares it with the loop below). Past the gate, in reliable
+  * [[Ckpt]] mode (which forces the distributed loop), or on a NULL
+  * endpoint or a non-integral id, the distributed two-phase strategy
+  * runs:
   *   1. min-label propagation (one grouped-min shuffle per round,
   *      converges in O(diameter) rounds) — near-dup graphs are
   *      typically unions of small cliques, so a handful of cheap
@@ -33,9 +39,16 @@ object ConnectedComponents {
     * every node that appears in an edge; component = min node id in
     * the connected component. `propRounds` label-propagation rounds
     * are tried first; `maxIter` bounds the star-contraction fallback
-    * (log-rounds, so 50 covers any realistic graph). */
+    * (log-rounds, so 50 covers any realistic graph); the driver path
+    * needs neither bound. */
   def components(edges: DataFrame, src: String, dst: String,
-      maxIter: Int = 50, propRounds: Int = 15): DataFrame = {
+      maxIter: Int = 50, propRounds: Int = 15): DataFrame =
+    DriverGraph.collect(edges, src, dst).fold(
+      componentsLoop(edges, src, dst, maxIter, propRounds))(_.components)
+
+  /** [[components]]' distributed two-phase loop. */
+  private def componentsLoop(edges: DataFrame, src: String, dst: String,
+      maxIter: Int, propRounds: Int): DataFrame = {
     // materialize the working edge set once — without this the
     // upstream pipeline that produced the edges (e.g. the whole
     // shingle+Jaccard computation) would re-execute every round

@@ -1,8 +1,9 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** Okapi BM25 ranked retrieval over a tokenized document corpus —
@@ -285,16 +286,18 @@ object Retrieval {
     * frame — the ONE ranking definition used by both derivation
     * physical shapes (the text-sample aggregate and
     * [[topBigramsFromIndex]]), so the two can never order-drift: the
-    * top-5 compiles to TakeOrderedAndProject (per-partition top-n) and
-    * the pid window then runs over 5 rows. The tiny result is
-    * checkpointed so the derivation aggregate never re-runs per
-    * downstream use of the phrase frame. */
-  private[graft] def rankTopBigrams(bi: DataFrame): DataFrame =
-    bi.orderBy(desc("n_bg"), asc("w1"), asc("w2")).limit(5)
-      .withColumn("pid", row_number().over(
-        Window.orderBy(desc("n_bg"), asc("w1"), asc("w2"))).cast("long"))
-      .select(col("pid"), col("w1"), col("w2"))
-      .localCheckpoint()
+    * top-5 compiles to TakeOrderedAndProject (per-partition top-n),
+    * its ≤ 5 rows collect in rank order and are numbered 1.. on the
+    * driver. The result is a LocalRelation, so the derivation
+    * aggregate never re-runs per downstream use of the phrase frame. */
+  private[graft] def rankTopBigrams(bi: DataFrame): DataFrame = {
+    val top = bi.orderBy(desc("n_bg"), asc("w1"), asc("w2")).limit(5)
+      .select(col("w1"), col("w2"))
+    Similarity.localFrame(bi.sparkSession, StructType(
+        StructField("pid", LongType, nullable = false) +: top.schema),
+      top.collect().toSeq.zipWithIndex.map { case (r, i) =>
+        Row(i + 1L, r.get(0), r.get(1)) })
+  }
 
   /** DERIVATION FROM THE INDEX (the r11 carry-forward): the 5 hottest
     * bigrams computed from a [[buildPhraseIndex]] layout instead of a

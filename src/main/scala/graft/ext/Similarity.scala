@@ -435,9 +435,8 @@ object Similarity {
       assignSubClusters(base, _, key))((c, _) => Ckpt(c))
   }
 
-  /** Rows of `schema` as a LocalRelation: collects and broadcasts of it
-    * are job-free. */
-  private def localFrame(spark: org.apache.spark.sql.SparkSession,
+  /** Rows of `schema` as a LocalRelation: collects of it are job-free. */
+  private[graft] def localFrame(spark: org.apache.spark.sql.SparkSession,
       schema: StructType, rows: Seq[Row]): DataFrame =
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 
@@ -452,13 +451,6 @@ object Similarity {
     centroids.select(col("cid"), col("centroid")).collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1).toSeq))
       .sortBy(_._1).toSeq
-
-  /** True when the session has opted into durable loop-state
-    * placement ([[Ckpt.ModeKey]] = reliable): the fits then run
-    * distributed, so the opt-in still produces its recoverable
-    * files. */
-  private def reliableMode(df: DataFrame): Boolean =
-    df.sparkSession.conf.get(Ckpt.ModeKey, "local") == "reliable"
 
   /** The embedding dimension the fits of the public k-means and the
     * IVF levels size the driver gate's row cap with. */
@@ -499,7 +491,7 @@ object Similarity {
     * caller then runs the distributed fit. */
   private def collectFit(df: DataFrame, dim: Int,
       key: Option[String] = None): Option[FitRows] =
-    if (reliableMode(df)) None
+    if (Ckpt.reliable(df.sparkSession)) None
     else {
       val cap = DriverFitMaxDoubles / math.max(1, dim)
       val rows = df.select(col("vec_id") +: key.map(col).toSeq :+

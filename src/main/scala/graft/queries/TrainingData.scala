@@ -1,7 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType,
+  StructField, StructType}
 
 import graft.Tables
 import graft.ext.{AnnFilter, Coarse, Dedup, IvfCodes, IvfSpec, PqLayout,
@@ -1978,12 +1980,10 @@ object TrainingData {
     *
     * Scale shape: one projection computes every metric + the
     * first-fail verdict in a single pass (whole-stage codegen, no
-    * shuffle), then a 6-group partial-combined count; everything
-    * after operates on the 5-row rule frame (the global window runs
-    * on 5 rows post-aggregation, not on data). */
+    * shuffle), then a 6-group partial-combined count, collected; the
+    * 5-row funnel (the total is the sum of the groups) is built on the
+    * driver as a LocalRelation. */
   def dFilterStack(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import s.implicits._
     val base = docs(s, d).withColumn("_toks",
       TextStats.tokens(col("text")))
     val n = size(col("_toks")).cast("double")
@@ -2006,25 +2006,21 @@ object TrainingData {
       .when(TextStats.predictedLang(col("_toks")) === "und", 4)
       .when(score <= 0, 5)
       .otherwise(0)
-    val perDoc = base.select(firstFail.as("first_fail"))
-    val counts = perDoc.groupBy(col("first_fail"))
-      .agg(count(lit(1)).as("n"))
-    val tot = perDoc.agg(count(lit(1)).as("total"))
-    val rules = Seq((1, "too_short"), (2, "bad_tok_shape"),
-      (3, "repetitive"), (4, "lang_unknown"), (5, "low_quality"))
-      .toDF("rule_idx", "rule")
-    val w = Window.orderBy(col("rule_idx"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    rules.join(counts.withColumnRenamed("first_fail", "rule_idx"),
-        Seq("rule_idx"), "left")
-      .withColumn("n_dropped", coalesce(col("n"), lit(0L)))
-      .crossJoin(broadcast(tot))
-      .withColumn("n_in", col("total") -
-        coalesce(sum(col("n_dropped")).over(w), lit(0L)))
-      .withColumn("n_out", col("n_in") - col("n_dropped"))
-      .select(col("rule_idx"), col("rule"), col("n_in"),
-        col("n_dropped"), col("n_out"))
-      .orderBy("rule_idx")
+    val counts = base.groupBy(firstFail.as("first_fail"))
+      .agg(count(lit(1)).as("n")).collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val rules = Seq("too_short", "bad_tok_shape", "repetitive",
+      "lang_unknown", "low_quality")
+    // a doc reaches rule i unless an earlier rule dropped it
+    val dropped = (1 to rules.size).map(counts.getOrElse(_, 0L))
+    val nIn = dropped.scanLeft(counts.values.sum)(_ - _)
+    Similarity.localFrame(s, StructType(Seq(
+        StructField("rule_idx", IntegerType, nullable = false),
+        StructField("rule", StringType)) ++
+        Seq("n_in", "n_dropped", "n_out")
+          .map(StructField(_, LongType, nullable = false))),
+      rules.indices.map(i =>
+        Row(i + 1, rules(i), nIn(i), dropped(i), nIn(i + 1))))
   }
 
   private val dFilterStackSql = {
@@ -2141,10 +2137,10 @@ object TrainingData {
     * Deciles are NOT a global per-doc sort (single-task at corpus
     * scale): the [[dCcnetBuckets]] histogram-cutoff construction —
     * exact integer scores aggregate to a (score, count) histogram
-    * bounded by DISTINCT scores, a cumulative count over that
-    * histogram yields the nine cutoffs (c_k = smallest score with
-    * cum·10 ≥ k·n), the tiny cutoff frame broadcasts back, and a
-    * doc's bin is the smallest k with score ≤ c_k (ties share a bin
+    * bounded by DISTINCT scores, which collects; its cumulative count
+    * yields the nine cutoffs on the driver (c_k = smallest score with
+    * cum·10 ≥ k·n), they enter the plan as literals, and a doc's bin
+    * is the smallest k with score ≤ c_k (ties share a bin
     * by construction — deterministic, engine-identical). Per-bin
     * stats are exact BIGINT sums; the two rates do one rounded
     * double division each. At 100 TB the histogram bound is the
@@ -2157,26 +2153,27 @@ object TrainingData {
     * definition feeding both the reliability table and the
     * threshold-selection decision, so the two can never bin-drift. */
   private def qualityBinned(dd: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val toksCol = TextStats.tokens(col("text"))
     val base = dd.select(col("doc_id"),
       lrWeightSum(graft.functions.ArrayOps.array_poly_hash(toksCol))
         .as("score_milli"),
       (size(array_distinct(toksCol)) * 2 >= size(toksCol)).as("label"))
+    // NULL scores sort first and count, but are never a cutoff nor
+    // at or below one
     val hist = base.groupBy(col("score_milli"))
-      .agg(count(lit(1)).as("c"))
-    val cum = hist.withColumn("cum",
-      sum(col("c")).over(Window.orderBy(col("score_milli"))))
-    val tot = hist.agg(sum(col("c")).as("n"))
-    val cuts = cum.crossJoin(broadcast(tot))
-      .select(col("score_milli"), col("cum"), col("n"),
-        explode(sequence(lit(1), lit(9))).as("k"))
-      .filter(col("cum") * 10 >= col("n") * col("k"))
-      .groupBy(col("k")).agg(min(col("score_milli")).as("cut"))
-    base
-      .join(broadcast(cuts), col("score_milli") <= col("cut"), "left")
-      .groupBy(col("doc_id"), col("score_milli"), col("label"))
-      .agg(coalesce(min(col("k")), lit(10)).cast("long").as("bin"))
+      .agg(count(lit(1)).as("c")).collect()
+      .map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]), r.getLong(1)))
+      .sortBy(_._1)
+    val n = hist.map(_._2).sum
+    val cum = hist.map(_._2).scanLeft(0L)(_ + _).tail
+    val cuts = (1 to 9).flatMap(k => hist.indices
+      .filter(i => cum(i) * 10 >= n * k).flatMap(hist(_)._1)
+      .minOption.map(k -> _))
+    // a doc's bin: the smallest k whose cutoff its score is at or below
+    val bin = cuts.foldRight(lit(10L)) { case ((k, cut), rest) =>
+      when(col("score_milli") <= cut, lit(k.toLong)).otherwise(rest) }
+    base.groupBy(col("doc_id"), col("score_milli"), col("label"))
+      .agg(min(bin).as("bin"))
   }
 
   private[queries] def qualityCalibration(dd: DataFrame): DataFrame = {

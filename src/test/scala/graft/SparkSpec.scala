@@ -24,4 +24,20 @@ object TestSpark {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   val sf0001 = "/root/testdata/sf0.001"
+
+  /** `f` in reliable checkpoint mode (a fresh temp checkpoint dir),
+    * which forces the distributed form of every loop that otherwise
+    * runs on the driver within its bound. */
+  protected def inReliableMode[T](f: => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_reliable")
+    try {
+      spark.conf.set(graft.ext.Ckpt.ModeKey, "reliable")
+      spark.conf.set(graft.ext.Ckpt.DirKey, dir.toString)
+      f
+    } finally {
+      spark.conf.unset(graft.ext.Ckpt.ModeKey)
+      spark.conf.unset(graft.ext.Ckpt.DirKey)
+      spark.sparkContext.setCheckpointDir(null)
+    }
+  }
 }

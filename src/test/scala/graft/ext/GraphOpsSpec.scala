@@ -19,12 +19,15 @@ class GraphOpsSpec extends SparkSpec {
 
   test("star contraction handles a 100-node path in logarithmic rounds") {
     // diameter-99 chain — O(diameter) label propagation would need
-    // ~100 rounds; star contraction must finish well within 50
-    val edges = (0L until 99L).map(i => (i, i + 1)).toDF("src", "dst")
-    val got = ConnectedComponents.components(edges, "src", "dst")
-      .as[(Long, Long)].collect()
-    assert(got.length == 100)
-    assert(got.forall(_._2 == 0L))
+    // ~100 rounds; star contraction must finish well within 50.
+    // Reliable mode keeps this on the distributed loop.
+    inReliableMode {
+      val edges = (0L until 99L).map(i => (i, i + 1)).toDF("src", "dst")
+      val got = ConnectedComponents.components(edges, "src", "dst")
+        .as[(Long, Long)].collect()
+      assert(got.length == 100)
+      assert(got.forall(_._2 == 0L))
+    }
   }
 
   test("BFS distances: branch + cycle fixture gets exact min-hop " +
@@ -49,31 +52,34 @@ class GraphOpsSpec extends SparkSpec {
 
   test("BFS over the bucketed adjacency index: identical distances " +
       "to the cached-frame form, empty edges, and layout reclaimed") {
-    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (2L, 10L),
-      (3L, 11L), (11L, 12L), (12L, 1L), (50L, 51L))
-      .toDF("src", "dst")
-    val want = Bfs.distances(edges, "src", "dst")
-      .as[(Long, Long)].collect().toMap
-    val got = Bfs.distancesIndexed(edges, "src", "dst")
-      .as[(Long, Long)].collect().toMap
-    assert(got == want, s"indexed BFS drifted: $got vs $want")
-    // the run-scoped adjacency table must not survive the call
-    assert(!spark.catalog.listTables()
-      .collect().exists(_.name.startsWith("graft_bfs_adj")),
-      "adjacency table leaked")
-    // empty edge set: same guard as the cached form
-    val none = Seq.empty[(Long, Long)].toDF("src", "dst")
-    assert(Bfs.distancesIndexed(none, "src", "dst").isEmpty)
-    // a random graph for non-trivial fan-out equality
-    val rnd = new scala.util.Random(7)
-    val re = Seq.fill(120)((rnd.nextInt(50).toLong,
-      rnd.nextInt(50).toLong)).filter(e => e._1 != e._2)
-      .toDF("src", "dst")
-    val w2 = Bfs.distances(re, "src", "dst")
-      .as[(Long, Long)].collect().toMap
-    val g2 = Bfs.distancesIndexed(re, "src", "dst")
-      .as[(Long, Long)].collect().toMap
-    assert(g2 == w2)
+    // reliable mode keeps both forms on their distributed loops
+    inReliableMode {
+      val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (2L, 10L),
+        (3L, 11L), (11L, 12L), (12L, 1L), (50L, 51L))
+        .toDF("src", "dst")
+      val want = Bfs.distances(edges, "src", "dst")
+        .as[(Long, Long)].collect().toMap
+      val got = Bfs.distancesIndexed(edges, "src", "dst")
+        .as[(Long, Long)].collect().toMap
+      assert(got == want, s"indexed BFS drifted: $got vs $want")
+      // the run-scoped adjacency table must not survive the call
+      assert(!spark.catalog.listTables()
+        .collect().exists(_.name.startsWith("graft_bfs_adj")),
+        "adjacency table leaked")
+      // empty edge set: same guard as the cached form
+      val none = Seq.empty[(Long, Long)].toDF("src", "dst")
+      assert(Bfs.distancesIndexed(none, "src", "dst").isEmpty)
+      // a random graph for non-trivial fan-out equality
+      val rnd = new scala.util.Random(7)
+      val re = Seq.fill(120)((rnd.nextInt(50).toLong,
+        rnd.nextInt(50).toLong)).filter(e => e._1 != e._2)
+        .toDF("src", "dst")
+      val w2 = Bfs.distances(re, "src", "dst")
+        .as[(Long, Long)].collect().toMap
+      val g2 = Bfs.distancesIndexed(re, "src", "dst")
+        .as[(Long, Long)].collect().toMap
+      assert(g2 == w2)
+    }
   }
 
   test("BFS autoBuckets: exact integer rule — floored at the proven " +
@@ -88,11 +94,13 @@ class GraphOpsSpec extends SparkSpec {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (2L, 10L),
       (3L, 11L), (11L, 12L), (12L, 1L), (50L, 51L))
       .toDF("src", "dst")
-    val want = Bfs.distancesIndexed(edges, "src", "dst")
-      .as[(Long, Long)].collect().toMap
-    val got = Bfs.distancesIndexedAuto(edges, "src", "dst")
-      .as[(Long, Long)].collect().toMap
-    assert(got == want, "auto bucket count changed BFS results")
+    inReliableMode { // both on their distributed loops
+      val want = Bfs.distancesIndexed(edges, "src", "dst")
+        .as[(Long, Long)].collect().toMap
+      val got = Bfs.distancesIndexedAuto(edges, "src", "dst")
+        .as[(Long, Long)].collect().toMap
+      assert(got == want, "auto bucket count changed BFS results")
+    }
   }
 
   test("BFS symIsDistinct: identical distances on a bipartite " +
@@ -104,15 +112,17 @@ class GraphOpsSpec extends SparkSpec {
     val edges = Seq.fill(200)((rnd.nextInt(30).toLong * 2,
         rnd.nextInt(30).toLong * 2 + 1)).distinct
       .toDF("src", "dst")
-    val want = Bfs.distances(edges, "src", "dst")
-      .as[(Long, Long)].collect().toMap
-    val got = Bfs.distances(edges, "src", "dst", symIsDistinct = true)
-      .as[(Long, Long)].collect().toMap
-    assert(got == want, "symIsDistinct changed BFS results")
-    val gotAuto = Bfs.distancesIndexedAuto(edges, "src", "dst",
-        symIsDistinct = true)
-      .as[(Long, Long)].collect().toMap
-    assert(gotAuto == want, "symIsDistinct auto path drifted")
+    inReliableMode { // every form on its distributed loop
+      val want = Bfs.distances(edges, "src", "dst")
+        .as[(Long, Long)].collect().toMap
+      val got = Bfs.distances(edges, "src", "dst", symIsDistinct = true)
+        .as[(Long, Long)].collect().toMap
+      assert(got == want, "symIsDistinct changed BFS results")
+      val gotAuto = Bfs.distancesIndexedAuto(edges, "src", "dst",
+          symIsDistinct = true)
+        .as[(Long, Long)].collect().toMap
+      assert(gotAuto == want, "symIsDistinct auto path drifted")
+    }
   }
 
   test("symIsDistinct debug guard: a WRONG opt-in fails loudly under " +

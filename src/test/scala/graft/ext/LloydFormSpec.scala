@@ -22,16 +22,7 @@ class LloydFormSpec extends SparkSpec {
   private def bothForms(f: => DataFrame): (Seq[String], Seq[String]) = {
     def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
     val driver = rows(f)
-    val dir = java.nio.file.Files.createTempDirectory("graft_lloyd")
-    try {
-      spark.conf.set(Ckpt.ModeKey, "reliable")
-      spark.conf.set(Ckpt.DirKey, dir.toString)
-      (driver, rows(f))
-    } finally {
-      spark.conf.unset(Ckpt.ModeKey)
-      spark.conf.unset(Ckpt.DirKey)
-      spark.sparkContext.setCheckpointDir(null)
-    }
+    (driver, inReliableMode(rows(f)))
   }
 
   private def isLocal(df: DataFrame): Boolean =
