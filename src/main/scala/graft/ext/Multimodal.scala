@@ -1065,7 +1065,7 @@ object Multimodal {
     * ships only (band, bkey, doc_id) — never media bytes; Hamming
     * verification reattaches the 4-band fingerprints by doc_id
     * equi-joins, spreading hot-band pair work across the cluster
-    * (the [[graft.ext.Dedup.jaccardPairs]] hot-block cap applies
+    * (the [[graft.ext.NearDupCandidates.MinShingle]] hot-block cap applies
     * unchanged if a corpus-common band emerges, e.g. all-zero
     * fingerprints from constant-byte blobs). */
   def phashDupPairs(docs: DataFrame, maxHamming: Int): DataFrame =

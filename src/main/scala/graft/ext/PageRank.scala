@@ -67,6 +67,30 @@ object PageRank {
     * it stops being FASTER two orders of magnitude earlier. */
   val BroadcastMaxNodes: Long = 3000000L
 
+  /** [[pagerank]]'s DuckDB mirror over the directed (src, dst) edge
+    * CTE `e`: CTEs `deg`, `nn` and `p0` … `p{iters}`, the last holding
+    * (node, pr_pico). Pure BIGINT arithmetic — `//` is DuckDB's integer
+    * division, `div` Spark's, identical on these positive values; the
+    * LEFT JOIN from the node set keeps zero-in-degree nodes at the
+    * 0.15/n baseline (coalesce over the empty sum), as the engine
+    * does. */
+  def oracleCtes(e: String, iters: Int): String = {
+    def iter(i: Int) =
+      s"""p$i AS (SELECT d0.src AS node,
+         |    (150000000000 // max(nn.n)) +
+         |      ((85 * CAST(coalesce(sum(t.c), 0) AS BIGINT)) // 100)
+         |      AS pr_pico
+         |  FROM deg d0 LEFT JOIN (SELECT e.dst, p.pr_pico // d.deg AS c
+         |    FROM $e e JOIN p${i - 1} p ON e.src = p.node
+         |      JOIN deg d ON d.src = e.src) t ON t.dst = d0.src, nn
+         |  GROUP BY d0.src)""".stripMargin
+    s"""deg AS (SELECT src, count(*) AS deg FROM $e GROUP BY 1),
+       |nn AS (SELECT count(*) AS n FROM deg),
+       |p0 AS (SELECT src AS node, 1000000000000 // n AS pr_pico
+       |  FROM deg, nn),
+       |${(1 to iters).map(iter).mkString(",\n")}""".stripMargin
+  }
+
   /** `edges` must be the directed edge list (src, dst) with every
     * node appearing as a src (symmetrize first for undirected graphs
     * — that also eliminates dangling nodes). Returns (node, pr_pico):

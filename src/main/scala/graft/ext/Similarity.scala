@@ -147,7 +147,7 @@ object Similarity {
     * verified. Miss probability (1−(1−θ/π)^b)^T — e.g. 8 tables × 2
     * planes ≈ 1.3% at cos 0.45.
     *
-    * Scale shape mirrors [[Dedup.jaccardPairs]]: the bucket self-join
+    * Scale shape mirrors [[Dedup.nearDupPairs]]: the bucket self-join
     * ships only (vec_id, table, bucket); embeddings + precomputed
     * norms reattach by id equi-join; per-(table,pair) duplicates are
     * NOT deduplicated before verification (verification is one
@@ -157,7 +157,7 @@ object Similarity {
       tables: Int, planesPerTable: Int, seed: Long,
       dim: Int = 64): DataFrame = {
     // feeds three plan subtrees (bucket keying + both reattaches) —
-    // persist like Dedup.jaccardPairs so the scan+norm runs once.
+    // persist like Dedup.nearDupPairs so the scan+norm runs once.
     // NULL embeddings are dropped (they can never pair — pre-guard
     // they bucketed to 0 and verified to null cos_sim, i.e. were
     // dropped late); non-null rows fail fast on a dim mismatch:
@@ -1791,7 +1791,7 @@ object Similarity {
     }
 
   /** The ingest gate's per-batch leg — index MAINTENANCE without refit,
-    * the vector-side sibling of [[Dedup.minhashLshIncremental]]: each
+    * the vector-side sibling of [[Dedup.nearDupProbe]]: each
     * incoming vector scores the O(k) centroids of the frozen `index`,
     * keeps its nprobe best cells and fine-ranks ONLY against the
     * manifest vectors in them, emitting its top-`k` attach points

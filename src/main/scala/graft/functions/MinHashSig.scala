@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 /** Codegen'd MinHash signature: given an array of pre-hashed shingles
   * (longs in [0, p)), produces `numHashes` permutation minima
   * min_j = MIN_h (a_j·h + b_j) mod p with a_j = 2j+1, b_j = 7919(j+1),
-  * p = 2^31−1 — the same family as [[graft.ext.Dedup.minhashSignature]].
+  * p = 2^31−1 — the same family as the HOF reference in DedupSpec.
   *
   * The HOF formulation (`numHashes` × `array_min(transform(...))`)
   * walks the shingle array once per permutation through interpreted

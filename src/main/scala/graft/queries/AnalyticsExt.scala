@@ -413,36 +413,17 @@ object AnalyticsExt {
       .orderBy("kind", "id")
   }
 
-  private val gPagerankSql = {
-    // pure BIGINT arithmetic mirror — `//` is DuckDB's integer
-    // division, `div` Spark's; identical on the positive values here
-    // LEFT JOIN from the node set mirrors the engine: zero-in-degree
-    // nodes keep the 0.15/n baseline (coalesce over the empty sum)
-    def iterSql(prev: String, out: String) =
-      s"""$out AS (SELECT d0.src AS node,
-         |    (150000000000 // max(nn.n)) +
-         |      ((85 * CAST(coalesce(sum(t.c), 0) AS BIGINT)) // 100)
-         |      AS pr_pico
-         |  FROM deg d0 LEFT JOIN (SELECT e.dst, p.pr_pico // d.deg AS c
-         |    FROM e JOIN $prev p ON e.src = p.node
-         |      JOIN deg d ON d.src = e.src) t ON t.dst = d0.src, nn
-         |  GROUP BY d0.src)""".stripMargin
+  private val gPagerankSql =
     s"""WITH e0 AS (SELECT DISTINCT o_custkey * 2 AS src,
        |    l_suppkey * 2 + 1 AS dst
        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
        |e AS (SELECT src, dst FROM e0
        |  UNION ALL SELECT dst, src FROM e0),
-       |deg AS (SELECT src, count(*) AS deg FROM e GROUP BY 1),
-       |nn AS (SELECT count(*) AS n FROM deg),
-       |p0 AS (SELECT src AS node, 1000000000000 // n AS pr_pico
-       |  FROM deg, nn),
-       |${iterSql("p0", "p1")},
-       |${iterSql("p1", "p2")}
+       |${graft.ext.PageRank.oracleCtes("e", iters = 2)}
        |SELECT CASE WHEN node % 2 = 0 THEN 'cust' ELSE 'supp' END
        |    AS kind,
        |  CAST(floor(node / 2) AS BIGINT) AS id, pr_pico
        |FROM p2 ORDER BY kind, id""".stripMargin
-  }
 
   /** BFS hop distances ([[graft.ext.Bfs.distances]]) from the
     * smallest node over the SAME bipartite customer↔supplier graph

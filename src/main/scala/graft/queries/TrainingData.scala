@@ -6,8 +6,9 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType,
   StructField, StructType}
 
 import graft.Tables
-import graft.ext.{AnnFilter, Coarse, Dedup, IvfCodes, IvfSpec, PqLayout,
-  PqSpec, QuerySet, SemDedupGrid, SemDedupSpec, Similarity, TextStats}
+import graft.ext.{AnnFilter, Coarse, Dedup, GramCap, IvfCodes, IvfSpec,
+  NearDupCandidates, NearDupMeasure, NearDupSpec, PqLayout, PqSpec,
+  QuerySet, SemDedupGrid, SemDedupSpec, Similarity, TextStats}
 import QueryUtil._
 
 /** Training-data pipeline operators over `documents` / `embeddings`:
@@ -138,249 +139,105 @@ object TrainingData {
        |FROM b JOIN k USING (h) LEFT JOIN c ON b.h = c.h
        |ORDER BY doc_id""".stripMargin
 
-  def dJaccardPairs(s: SparkSession, d: String): DataFrame =
-    Dedup.jaccardPairs(docs(s, d), "doc_id", "text",
-      n = 3, threshold = 0.2)
-      .withColumn("jaccard", round(col("jaccard"), 6))
-      .orderBy("doc_a", "doc_b")
+  // ---- shingle-set near-dup family ---------------------------------
+  /** One near-dup catalog row: the [[NearDupSpec]], and for the ingest
+    * gate the `doc_id % n` split — the multiples of n are the incoming
+    * batch, probed against the rest (the manifest). */
+  private final case class NearDupEntry(spec: NearDupSpec,
+      split: Option[Int] = None)
 
-  private val dJaccardPairsSql =
-    s"""WITH sh AS (SELECT doc_id, $sqlShingles AS sh
-      |  FROM documents),
-      |blocked AS (SELECT doc_id, sh, sh[1] AS block FROM sh
-      |  WHERE len(sh) > 0)
-      |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-      |  round(len(list_intersect(a.sh, b.sh))::DOUBLE /
-      |    (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))), 6)
-      |    AS jaccard
-      |FROM blocked a JOIN blocked b
-      |  ON a.block = b.block AND a.doc_id < b.doc_id
-      |WHERE len(list_intersect(a.sh, b.sh))::DOUBLE /
-      |    (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.2
-      |ORDER BY doc_a, doc_b""".stripMargin
+  /** Min-shingle-blocked 3-gram Jaccard ≥ 0.2: `d_jaccard_pairs`, and
+    * the pair graph of the cluster, keep-best, recall and triangle
+    * entries. */
+  private val blockedJaccard =
+    NearDupSpec(3, NearDupCandidates.MinShingle(), NearDupMeasure.Jaccard(0.2))
 
-  /** Exact threshold-Jaccard pairs via PREFIX FILTERING
-    * ([[Dedup.jaccardPrefixPairs]], the AllPairs/SSJoin family):
-    * lossless candidate pruning on the global df-rarity token order,
-    * so — unlike [[dJaccardPairs]]' min-shingle blocking — the result
-    * provably equals the all-pairs exact join. The oracle states
-    * exactly that: it compares EVERY pair with no pruning, so the
-    * hash match IS the recall-1.0 proof. τ = 4/5 as a rational (the
-    * prefix length must be exact integer arithmetic): prefix length
-    * is (1−τ)·l+1, so the exact join is a HIGH-threshold tool — at
-    * τ=0.8 each doc indexes ~l/5 tokens; at τ=0.2 it would index
-    * ~4l/5 and candidate volume approaches the all-pairs it exists
-    * to avoid (measured in BASELINE.md's τ-sensitivity row). The
-    * low-τ regime belongs to MinHash/LSH ([[dMinhashLsh]]), which
-    * trades exactly that recall guarantee for τ-independent cost. */
-  def dJaccardPrefix(s: SparkSession, d: String): DataFrame =
-    Dedup.jaccardPrefixPairs(docs(s, d), "doc_id", "text",
-      n = 3, tNum = 4, tDen = 5)
-      .withColumn("jaccard", round(col("jaccard"), 6))
-      .orderBy("doc_a", "doc_b")
+  /** MinHash+LSH (16 bands × 4 rows) 3-gram Jaccard ≥ 0.2:
+    * `d_minhash_lsh`, its ingest gate, and the pair graph of the
+    * near-dup pipeline, recall and centrality entries. */
+  private val minhashJaccard = blockedJaccard.copy(
+    candidates = NearDupCandidates.MinhashBands(bands = 16, rowsPerBand = 4))
 
-  private val dJaccardPrefixSql =
-    s"""WITH sh AS (SELECT doc_id, $sqlShingles AS sh
-      |  FROM documents),
-      |s2 AS (SELECT doc_id, sh, len(sh) AS l FROM sh
-      |  WHERE len(sh) > 0),
-      |p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-      |    len(list_intersect(a.sh, b.sh)) AS ni,
-      |    a.l AS la, b.l AS lb
-      |  FROM s2 a JOIN s2 b ON a.doc_id < b.doc_id)
-      |SELECT doc_a, doc_b,
-      |  round(ni::DOUBLE / (la + lb - ni), 6) AS jaccard
-      |FROM p WHERE ni::DOUBLE / (la + lb - ni) >= 0.8
-      |ORDER BY doc_a, doc_b""".stripMargin
-
-  /** Asymmetric containment near-dup pairs
-    * ([[Dedup.containmentPairs]]): C(A→B) = |S_A ∩ S_B| / |S_A| over
-    * 8-token shingle-hash sets — the doc-in-doc signal (quotation,
-    * boilerplate inclusion, version supersets) that symmetric Jaccard
-    * under-scores. Candidates come only from grams with document
-    * frequency ≤ 16 (the hot-gram cap — see the operator's scale
-    * note); each emitted pair carries the exact shared-gram count and
-    * both containment directions. */
-  def dContainment(s: SparkSession, d: String): DataFrame =
-    Dedup.containmentPairs(docs(s, d), "doc_id", "text",
-      n = 8, threshold = 0.5, dfCap = 16)
-      .orderBy("doc_a", "doc_b")
-
-  /** [[dContainment]] with the hot-gram cap DERIVED from corpus size
-    * ([[Dedup.containmentPairsAuto]]: cap = ⌈16·N/5000⌉, min 2, exact
-    * integer arithmetic) — the production sibling for corpora where a
-    * fixed absolute cap would prune a growing share of true pairs as
-    * boilerplate df scales with N (recall measurements in
-    * BASELINE.md's containment-cap section). */
-  def dContainmentAuto(s: SparkSession, d: String): DataFrame =
-    Dedup.containmentPairsAuto(docs(s, d), "doc_id", "text",
-      n = 8, threshold = 0.5)
-      .orderBy("doc_a", "doc_b")
-
-  private val dContainmentSql = containmentSqlWith("16")
-
-  private val dContainmentAutoSql = containmentSqlWith(
-    "(SELECT greatest(2, (16 * count(*) + 4999) // 5000) " +
-      "FROM documents)")
-
-  private def containmentSqlWith(capExpr: String): String =
-    s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks
-       |  FROM documents),
-       |g AS (SELECT doc_id, unnest(list_transform(
-       |    ${sqlShingleList("toks", 8)},
-       |    s -> ${sqlPolyHash("s")})) AS g
-       |  FROM t),
-       |sz AS (SELECT doc_id, count(*) AS n_grams FROM g GROUP BY 1),
-       |dfq AS (SELECT g, count(*) AS df FROM g GROUP BY 1),
-       |rare AS (SELECT g.doc_id, g.g FROM g JOIN dfq USING (g)
-       |  WHERE dfq.df <= $capExpr),
-       |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM rare a JOIN rare b
-       |    ON a.g = b.g AND a.doc_id < b.doc_id),
-       |sh AS (SELECT c.doc_a, c.doc_b, count(*) AS n_shared
-       |  FROM cand c
-       |  JOIN g ga ON ga.doc_id = c.doc_a
-       |  JOIN g gb ON gb.doc_id = c.doc_b AND gb.g = ga.g
-       |  GROUP BY 1, 2)
-       |SELECT sh.doc_a, sh.doc_b, sh.n_shared,
-       |  round(sh.n_shared::DOUBLE / sa.n_grams, 6) AS cont_a,
-       |  round(sh.n_shared::DOUBLE / sb.n_grams, 6) AS cont_b
-       |FROM sh
-       |JOIN sz sa ON sa.doc_id = sh.doc_a
-       |JOIN sz sb ON sb.doc_id = sh.doc_b
-       |WHERE greatest(round(sh.n_shared::DOUBLE / sa.n_grams, 6),
-       |  round(sh.n_shared::DOUBLE / sb.n_grams, 6)) >= 0.5
-       |ORDER BY doc_a, doc_b""".stripMargin
-
-  /** MinHash+LSH near-dup pairs, exact-Jaccard-verified so every
-    * emitted pair is a true near duplicate. Oracle-verified: the
-    * signature family is the engine-portable polynomial hash, so the
-    * full pipeline (shingle → 64-permutation minima → 16 band keys →
-    * candidate join → verification) is mirrored in DuckDB SQL. */
-  def dMinhashLsh(s: SparkSession, d: String): DataFrame =
-    Dedup.minhashLshPairs(docs(s, d), "doc_id", "text",
-      n = 3, bands = 16, rowsPerBand = 4, threshold = 0.2)
-      .withColumn("jaccard", round(col("jaccard"), 6))
-      .orderBy("doc_a", "doc_b")
-
-  private val minhashP = 2147483647L
-
-  // oracle-side polynomial hash: the single shared definition lives
-  // in QueryUtil.sqlPolyHash (imported via `QueryUtil._`)
-
-  /** DuckDB fragment: the distinct word-n-gram list over token-list
-    * expression `toks` — the ONE oracle-side mirror of
-    * [[graft.functions.ShingleSet]], including its truncated
-    * whole-doc gram when a doc has fewer than `n` tokens. Every
-    * gram-building oracle (Jaccard/MinHash n=3, decontamination n=5,
-    * span dedup n=8) must use it so an edge-case fix cannot drift
-    * between copies (defs, not vals: order-independent within the
-    * object). */
-  private def sqlShingleList(toks: String, n: Int): String =
-    s"list_distinct(list_transform(" +
-    s"range(1, greatest(len($toks) - ${n - 1}, 1) + 1), " +
-    s"i -> array_to_string($toks[i:i+${n - 1}], ' ')))"
-
-  /** Sorted n=3 variant over raw `text` (Jaccard/MinHash oracles —
-    * sorted because [[Dedup.shingles]] sorts for the min-shingle
-    * block and the merge-walk intersect). */
-  private def sqlShingles: String =
-    s"list_sort(${sqlShingleList("(string_split(text, ' '))", 3)})"
-
-  /** One SIDE of the MinHash oracle (shingle → 64-hash signature →
-    * 16 band keys) as CTEs suffixed `sfx`, over `documents` rows
-    * matching `where` (empty = all). Shared by the self-join and
-    * incremental oracles so the signature family cannot drift between
-    * them. */
-  private def minhashSideCtes(sfx: String, where: String): String = {
-    val numHashes = 64
-    val bands = 16
-    val rowsPerBand = 4
-    val sigExprs = (0 until numHashes).map { j =>
-      s"list_min(list_transform(hs, h -> " +
-      s"((${2L * j + 1} * h + ${7919L * (j + 1)}) % $minhashP))) AS s_$j"
-    }.mkString(",\n    ")
-    val sigList = "[" + (0 until numHashes).map("s_" + _).mkString(", ") + "]"
-    val bandSelects = (0 until bands).map { b =>
-      val lo = b * rowsPerBand + 1
-      val hi = b * rowsPerBand + rowsPerBand
-      s"SELECT doc_id, $b AS band, " +
-      s"array_to_string(sig[$lo:$hi], ',') AS band_key FROM sig$sfx"
-    }.mkString("\n  UNION ALL ")
-    // MATERIALIZED on h/sig: the same DuckDB per-reference CTE
-    // inlining the OPQ rotation hit — the 64-hash signature is
-    // re-derived by each of the 16 band selects and every downstream
-    // consumer. Measured on g_doc_centrality at sf0.01: 37.2 s
-    // as-dumped → 1.6 s with both materialized, results identical;
-    // every mh_pairs consumer (neardup pipeline, dup clusters,
-    // centrality, minhash_lsh) shares the cut.
-    s"""shs$sfx AS (SELECT doc_id, $sqlShingles AS sh FROM documents$where),
-       |f$sfx AS (SELECT doc_id, sh FROM shs$sfx WHERE len(sh) > 0),
-       |h$sfx AS MATERIALIZED (SELECT doc_id,
-       |    list_transform(sh, s -> ${sqlPolyHash("s")}) AS hs FROM f$sfx),
-       |sigc$sfx AS (SELECT doc_id,
-       |    $sigExprs
-       |  FROM h$sfx),
-       |sig$sfx AS MATERIALIZED (SELECT doc_id, $sigList AS sig FROM sigc$sfx),
-       |bands$sfx AS ($bandSelects)""".stripMargin
+  /** The near-dup pair entries — one Spark implementation
+    * ([[Dedup.nearDupPairs]], or [[Dedup.nearDupProbe]] for the gate)
+    * and one oracle generator ([[NearDupSpec.oracleSql]]) serve every
+    * row:
+    *
+    *  - `d_jaccard_pairs`: min-shingle blocking, which finds a pair
+    *    only if the two min shingles coincide;
+    *  - `d_jaccard_prefix`: the lossless prefix-filter join at τ = 4/5,
+    *    whose oracle compares every pair. Prefix length is (1−τ)·l+1,
+    *    so it is a high-threshold tool: at τ = 0.2 candidate volume
+    *    approaches all pairs (BASELINE.md's τ-sensitivity row); the
+    *    low-τ regime belongs to MinHash, which trades the recall
+    *    guarantee for τ-independent cost;
+    *  - `d_containment`: 8-gram containment ≥ 0.5 from grams of df ≤ 16;
+    *  - `d_containment_auto`: the cap derived from corpus size,
+    *    ⌈16·N/5000⌉ (min 2), so boilerplate df growing with N does not
+    *    prune a growing share of true pairs (BASELINE.md's
+    *    containment-cap section);
+    *  - `d_minhash_lsh`: 16 × 4 banding;
+    *  - `d_incremental_minhash`: every 10th doc probed against the
+    *    rest — the near-dup counterpart of `d_incremental_dedup`. */
+  private val nearDupEntries: Seq[(String, NearDupEntry)] = {
+    import NearDupCandidates._
+    val prefix = Prefix(4, 5)
+    val rare = NearDupSpec(8, RareGrams(GramCap.Fixed(16)),
+      NearDupMeasure.Containment(0.5))
+    Seq(
+      "d_jaccard_pairs" -> NearDupEntry(blockedJaccard),
+      "d_jaccard_prefix" -> NearDupEntry(NearDupSpec(3, prefix,
+        NearDupMeasure.Jaccard(prefix.threshold))),
+      "d_containment" -> NearDupEntry(rare),
+      "d_containment_auto" -> NearDupEntry(rare.copy(
+        candidates = RareGrams(GramCap.PerDocs(16, 5000, 2)))),
+      "d_minhash_lsh" -> NearDupEntry(minhashJaccard),
+      "d_incremental_minhash" -> NearDupEntry(minhashJaccard, Some(10)))
   }
 
-  /** Shared oracle fragment: the full MinHash+LSH near-dup pipeline
-    * (shingle → 64-hash signature → 16 band keys → candidate join →
-    * exact-Jaccard verify at 0.2) as a WITH-clause body ending in CTE
-    * `mh_pairs(doc_a, doc_b, jaccard)`. Used by both the pair query
-    * and the end-to-end near-dup dedup pipeline so they cannot
-    * drift. */
-  private def minhashPairsCtes: String =
-    s"""${minhashSideCtes("", "")},
-       |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM bands a JOIN bands b ON a.band = b.band
-       |    AND a.band_key = b.band_key AND a.doc_id < b.doc_id),
-       |v AS (SELECT doc_a, doc_b,
-       |    len(list_intersect(sa.sh, sb.sh)) AS n_inter,
-       |    len(sa.sh) AS n_a, len(sb.sh) AS n_b
-       |  FROM cand JOIN f sa ON sa.doc_id = cand.doc_a
-       |    JOIN f sb ON sb.doc_id = cand.doc_b),
-       |mh_pairs AS (SELECT doc_a, doc_b,
-       |    round(n_inter::DOUBLE / (n_a + n_b - n_inter), 6) AS jaccard
-       |  FROM v WHERE n_inter::DOUBLE / (n_a + n_b - n_inter) >= 0.2)""".stripMargin
+  /** The self-join pairs of `spec` over the documents. */
+  private def nearDupPairs(spec: NearDupSpec, s: SparkSession,
+      d: String): DataFrame =
+    Dedup.nearDupPairs(spec, docs(s, d), "doc_id", "text")
 
-  private val dMinhashLshSql =
-    s"""WITH $minhashPairsCtes
-       |SELECT doc_a, doc_b, jaccard FROM mh_pairs
-       |ORDER BY doc_a, doc_b""".stripMargin
+  /** (doc_id, comp): the min-id components of `spec`'s pair graph. */
+  private def componentsOf(spec: NearDupSpec, s: SparkSession,
+      d: String): DataFrame =
+    graft.ext.ConnectedComponents
+      .components(nearDupPairs(spec, s, d), "doc_a", "doc_b")
+      .select(col("id").as("doc_id"), col("comp"))
+
+  /** Run `entry`, Jaccard rounded to 6 places, ordered by the id pair. */
+  private def runNearDup(entry: NearDupEntry)(s: SparkSession, d: String)
+      : DataFrame = {
+    val out = entry.split.fold(nearDupPairs(entry.spec, s, d)) { m =>
+      val sh = Dedup.shingleFrame(docs(s, d), "doc_id", "text", entry.spec.n)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try Dedup.nearDupProbe(entry.spec, sh.filter(col("doc_id") % m === 0),
+        sh.filter(col("doc_id") % m =!= 0))
+      finally sh.unpersist()
+    }
+    (if (out.columns.contains("jaccard"))
+      out.withColumn("jaccard", round(col("jaccard"), 6))
+    else out).orderBy(out.columns.take(2).map(col): _*)
+  }
 
   /** Candidate-generation eval for the near-dup family — the dedup
-    * analog of [[sAnnRecall]]: how much of the blocked-exact-Jaccard
-    * pair set ([[dJaccardPairs]]' min-shingle blocking) the
-    * MinHash+LSH index ([[dMinhashLsh]]) recovers, and how many true
-    * pairs LSH finds that blocking misses (both generators verify
-    * with exact Jaccard, so every emitted pair is true — the two
-    * heuristics differ only in which CANDIDATES they surface). The
-    * accept/reject metric for banding parameters, exactly like
-    * recall@k gates an ANN index. Output: one row — n_exact, n_lsh,
-    * n_both, recall_lsh, n_lsh_only.
-    *
-    * Scale shape: both pair generators are the shipped linear paths
-    * (block equi-join / band equi-join); the overlap is a pair-keyed
-    * equi-join of two pair-id frames and the rest is three
-    * partial-combined counts folded into one broadcast-composed row.
-    * Nothing here adds a shape beyond what the generators already
-    * carry at 100×. */
+    * analog of [[sAnnRecall]]: how much of the min-shingle-blocked
+    * pair set (`d_jaccard_pairs`) the MinHash+LSH index
+    * (`d_minhash_lsh`) recovers, and how many true pairs LSH finds
+    * that blocking misses (both verify with exact Jaccard, so they
+    * differ only in which candidates they surface). The accept/reject
+    * metric for banding parameters, as recall@k gates an ANN index.
+    * One row: n_exact, n_lsh, n_both, recall_lsh, n_lsh_only. Both
+    * generators read one persisted shingle frame; each checkpoints its
+    * pair set, so the cache releases as soon as both return. */
   def dDedupRecall(s: SparkSession, d: String): DataFrame = {
-    val dd = docs(s, d)
-    // both generators consume the SAME corpus at the SAME shingle
-    // width — tokenize+shingle once (r16; guide §5: cache exactly
-    // what ≥2 consumers re-read). Each generator localCheckpoints its
-    // pair set, so the shared cache releases as soon as both return.
-    val sh = Dedup.shingleFrame(dd, "doc_id", "text", n = 3)
+    val sh = Dedup.shingleFrame(docs(s, d), "doc_id", "text", n = 3)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val ex = Dedup.jaccardPairsOnShingles(sh, threshold = 0.2)
-      .select(col("doc_a"), col("doc_b"))
-    val mh = Dedup.minhashLshPairsOnShingles(sh,
-        bands = 16, rowsPerBand = 4, threshold = 0.2)
-      .select(col("doc_a"), col("doc_b"))
-    sh.unpersist()
+    val Seq(ex, mh) = try Seq(blockedJaccard, minhashJaccard)
+      .map(Dedup.nearDupPairs(_, sh).select("doc_a", "doc_b"))
+    finally sh.unpersist()
     val exC = ex.agg(count(lit(1)).as("n_exact"))
     val mhC = mh.agg(count(lit(1)).as("n_lsh"))
     val bothC = ex.join(mh, Seq("doc_a", "doc_b"))
@@ -393,59 +250,160 @@ object TrainingData {
   }
 
   private val dDedupRecallSql =
-    s"""WITH $minhashPairsCtes,
-       |esh AS (SELECT doc_id, $sqlShingles AS sh FROM documents),
-       |eblocked AS (SELECT doc_id, sh, sh[1] AS block FROM esh
-       |  WHERE len(sh) > 0),
-       |ex_pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM eblocked a JOIN eblocked b
-       |    ON a.block = b.block AND a.doc_id < b.doc_id
-       |  WHERE len(list_intersect(a.sh, b.sh))::DOUBLE /
-       |    (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))
-       |    >= 0.2),
-       |bc AS (SELECT count(*) AS n_both FROM ex_pairs e
-       |  JOIN mh_pairs m ON e.doc_a = m.doc_a AND e.doc_b = m.doc_b),
-       |ec AS (SELECT count(*) AS n_exact FROM ex_pairs),
-       |mc AS (SELECT count(*) AS n_lsh FROM mh_pairs)
-       |SELECT CAST(n_exact AS BIGINT) AS n_exact,
-       |  CAST(n_lsh AS BIGINT) AS n_lsh,
-       |  CAST(n_both AS BIGINT) AS n_both,
+    s"""WITH ${NearDupSpec.pairCtes(blockedJaccard, "_e")},
+       |${NearDupSpec.pairCtes(minhashJaccard, "_m")},
+       |c AS (SELECT (SELECT count(*) FROM pairs_e) AS n_exact,
+       |    (SELECT count(*) FROM pairs_m) AS n_lsh,
+       |    (SELECT count(*) FROM pairs_e JOIN pairs_m USING (doc_a, doc_b))
+       |      AS n_both)
+       |SELECT n_exact, n_lsh, n_both,
        |  round(n_both::DOUBLE / n_exact, 6) AS recall_lsh,
-       |  CAST(n_lsh - n_both AS BIGINT) AS n_lsh_only
-       |FROM ec, mc, bc""".stripMargin
+       |  n_lsh - n_both AS n_lsh_only FROM c""".stripMargin
 
-  /** Incremental near-dup ingest gate ([[Dedup.minhashLshIncremental]]):
-    * the batch = every 10th doc, the manifest = the rest; output =
-    * which incoming docs near-duplicate the already-ingested corpus
-    * (band-key probe join + exact-Jaccard verify — per-batch work
-    * scales with the batch, never all-pairs over the corpus). The
-    * near-dup counterpart of `d_incremental_dedup`. */
-  def dIncrementalMinhash(s: SparkSession, d: String): DataFrame = {
-    val all = docs(s, d)
-    Dedup.minhashLshIncremental(
-        all.filter(col("doc_id") % 10 === 0),
-        all.filter(col("doc_id") % 10 =!= 0),
-        "doc_id", "text", n = 3, bands = 16, rowsPerBand = 4,
-        threshold = 0.2)
-      .withColumn("jaccard", round(col("jaccard"), 6))
-      .orderBy("new_id", "dup_of")
+  /** `WITH RECURSIVE` prefix of the cluster oracles: `spec`'s pairs,
+    * then their min-id components `comp(doc_id, comp)`. */
+  private def componentsSql(spec: NearDupSpec): String =
+    s"""WITH RECURSIVE ${NearDupSpec.pairCtes(spec)},
+       |${NearDupSpec.componentsCtes("pairs")}""".stripMargin
+
+  /** End-to-end near-duplicate dedup — the production composition the
+    * pair/cluster queries exist FOR: MinHash+LSH verified pairs →
+    * connected components → keep the smallest-id representative per
+    * cluster → per-source accounting (docs / clustered / dropped /
+    * kept). [[dCurationPipeline]] is the exact-dedup flow; this is
+    * its near-dup counterpart. The only per-doc join is the left join
+    * of (doc_id, source) against the cluster map. */
+  def dNeardupPipeline(s: SparkSession, d: String): DataFrame = {
+    docs(s, d).select(col("doc_id"), col("source"))
+      .join(componentsOf(minhashJaccard, s, d), Seq("doc_id"), "left")
+      .groupBy(col("source"))
+      .agg(count(lit(1)).as("n_docs"),
+        count(col("comp")).as("n_clustered"),
+        count(when(col("comp") =!= col("doc_id"), 1)).as("n_dropped"))
+      .withColumn("n_kept", col("n_docs") - col("n_dropped"))
+      .orderBy("source")
   }
 
-  private val dIncrementalMinhashSql =
-    s"""WITH ${minhashSideCtes("_n", " WHERE doc_id % 10 = 0")},
-       |${minhashSideCtes("_m", " WHERE doc_id % 10 <> 0")},
-       |cand AS (SELECT DISTINCT a.doc_id AS new_id, b.doc_id AS dup_of
-       |  FROM bands_n a JOIN bands_m b ON a.band = b.band
-       |    AND a.band_key = b.band_key),
-       |v AS (SELECT new_id, dup_of,
-       |    len(list_intersect(sa.sh, sb.sh)) AS n_inter,
-       |    len(sa.sh) AS n_a, len(sb.sh) AS n_b
-       |  FROM cand JOIN f_n sa ON sa.doc_id = cand.new_id
-       |    JOIN f_m sb ON sb.doc_id = cand.dup_of)
-       |SELECT new_id, dup_of,
-       |  round(n_inter::DOUBLE / (n_a + n_b - n_inter), 6) AS jaccard
-       |FROM v WHERE n_inter::DOUBLE / (n_a + n_b - n_inter) >= 0.2
-       |ORDER BY new_id, dup_of""".stripMargin
+  private val dNeardupPipelineSql =
+    s"""${componentsSql(minhashJaccard)}
+       |SELECT *, n_docs - n_dropped AS n_kept FROM (
+       |  SELECT d.source, count(*) AS n_docs, count(c.comp) AS n_clustered,
+       |    count(CASE WHEN c.comp <> d.doc_id THEN 1 END) AS n_dropped
+       |  FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id
+       |  GROUP BY d.source) ORDER BY source""".stripMargin
+
+  /** Near-dup clusters: blocked Jaccard pairs → connected components →
+    * cluster assignment per doc (transitive closure of near-dup hits).
+    * Oracle: recursive CTE over the same pair list. */
+  def dDupClusters(s: SparkSession, d: String): DataFrame =
+    componentsOf(blockedJaccard, s, d)
+      .select(col("doc_id"), col("comp").as("component"))
+      .orderBy("doc_id")
+
+  private val dDupClustersSql =
+    s"""${componentsSql(blockedJaccard)}
+       |SELECT doc_id, comp AS component
+       |FROM comp ORDER BY doc_id""".stripMargin
+
+  /** Quality-aware near-dup resolution — what production curation
+    * actually does with a duplicate cluster: instead of keeping the
+    * arbitrary min-id representative, keep the HIGHEST-QUALITY member
+    * (hashing-trick LR score of [[dQualityLr]]; exact integer milli
+    * units, so the argmax is deterministic cross-engine; ties by
+    * smallest doc_id). Docs in no cluster are their own singleton
+    * component and always kept. Output: one row per doc —
+    * (doc_id, component, score_milli, keep).
+    *
+    * Scale shape: clustering is the [[dDupClusters]] blocked-pair +
+    * label-propagation path (never all-pairs); the quality score is a
+    * pure projection; resolution is one window keyed by component —
+    * components are near-dup clusters, bounded by the block cap, so
+    * no window partition is corpus-sized. Only (doc_id, component,
+    * score) rows shuffle. */
+  def dDedupKeepBest(s: SparkSession, d: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val labeled = lrScoreMilli(docs(s, d))
+      .select(col("doc_id"), col("score_milli"))
+      .join(componentsOf(blockedJaccard, s, d), Seq("doc_id"), "left")
+      .withColumn("component", coalesce(col("comp"), col("doc_id")))
+    val w = Window.partitionBy(col("component"))
+      .orderBy(desc("score_milli"), asc("doc_id"))
+    labeled.withColumn("rnk", row_number().over(w))
+      .select(col("doc_id"), col("component"), col("score_milli"),
+        (col("rnk") === 1).as("keep"))
+      .orderBy("doc_id")
+  }
+
+  private val dDedupKeepBestSql =
+    s"""${componentsSql(blockedJaccard)},
+      |$lrScoreCtes,
+      |l AS (SELECT w.doc_id,
+      |    coalesce(c.comp, w.doc_id) AS component, w.score_milli
+      |  FROM w LEFT JOIN comp c ON w.doc_id = c.doc_id)
+      |SELECT doc_id, component, score_milli,
+      |  row_number() OVER (PARTITION BY component
+      |    ORDER BY score_milli DESC, doc_id ASC) = 1 AS keep
+      |FROM l ORDER BY doc_id""".stripMargin
+
+  /** Document centrality in the near-duplicate similarity graph:
+    * integer-arithmetic PageRank ([[graft.ext.PageRank]]) over the
+    * symmetrized MinHash+LSH pair graph — highly-connected documents
+    * are template/boilerplate hubs (rank DOWN for training-data
+    * diversity), isolated documents never enter the graph. The oracle
+    * splices the same spec's pair CTEs into the unrolled integer
+    * iterations. */
+  def gDocCentrality(s: SparkSession, d: String): DataFrame = {
+    val pairs = nearDupPairs(minhashJaccard, s, d)
+    val edges = pairs.select(col("doc_a").as("src"),
+        col("doc_b").as("dst"))
+      .unionByName(pairs.select(col("doc_b").as("src"),
+        col("doc_a").as("dst")))
+    graft.ext.PageRank.pagerank(edges, iters = 2)
+      .select(col("node").as("doc_id"), col("pr_pico"))
+      .orderBy("doc_id")
+  }
+
+  private val gDocCentralitySql =
+    s"""WITH ${NearDupSpec.pairCtes(minhashJaccard)},
+       |pe AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
+       |  UNION ALL SELECT doc_b, doc_a FROM pairs),
+       |${graft.ext.PageRank.oracleCtes("pe", iters = 2)}
+       |SELECT node AS doc_id, pr_pico FROM p2
+       |ORDER BY doc_id""".stripMargin
+
+  /** Per-doc triangle participation over the near-dup pair graph
+    * ([[graft.ext.Triangles]], degree-ordered wedge join): the
+    * cluster-quality diagnostic that separates pairwise-verified
+    * near-dup cliques from hub-chained components — a dup component
+    * with zero triangles is transitive linking through one template
+    * doc, one with many is a genuine mutual-duplicate family. Edges
+    * are the blocked Jaccard pairs; output is (doc_id, n_tri, deg)
+    * for every doc in the pair graph, zeros included. The oracle
+    * enumerates each id-ordered triangle once with NO orientation —
+    * the degree ordering is pure Spark-side candidate pruning, proven
+    * result-neutral by the hash match. */
+  def gTriangles(s: SparkSession, d: String): DataFrame =
+    graft.ext.Triangles
+      .triangleCounts(nearDupPairs(blockedJaccard, s, d), "doc_a", "doc_b")
+      .select(col("node").as("doc_id"), col("n_tri"), col("deg"))
+      .orderBy("doc_id")
+
+  private val gTrianglesSql =
+    s"""WITH ${NearDupSpec.pairCtes(blockedJaccard)},
+      |e AS (SELECT doc_a AS lo, doc_b AS hi FROM pairs),
+      |d AS (SELECT node, count(*) AS deg FROM
+      |  (SELECT lo AS node FROM e UNION ALL SELECT hi FROM e)
+      |  GROUP BY node),
+      |t AS (SELECT e1.lo AS u, e1.hi AS v, e2.hi AS w
+      |  FROM e e1 JOIN e e2 ON e2.lo = e1.lo AND e2.hi > e1.hi
+      |  JOIN e e3 ON e3.lo = e1.hi AND e3.hi = e2.hi),
+      |c AS (SELECT node, count(*) AS n_tri FROM
+      |  (SELECT u AS node FROM t UNION ALL SELECT v FROM t
+      |   UNION ALL SELECT w FROM t) GROUP BY node)
+      |SELECT d.node AS doc_id,
+      |  CAST(coalesce(c.n_tri, 0) AS BIGINT) AS n_tri, d.deg
+      |FROM d LEFT JOIN c ON d.node = c.node
+      |ORDER BY doc_id""".stripMargin
 
   /** Corpus data card: per (source, lang) release accounting — doc
     * and token counts, mean document length, and each cell's share of
@@ -489,142 +447,6 @@ object TrainingData {
        |SELECT source, lang, n_docs, n_tokens, mean_tokens,
        |  round(n_tokens::DOUBLE / t, 6) AS token_share
        |FROM cell, tot ORDER BY source, lang""".stripMargin
-
-  /** End-to-end near-duplicate dedup — the production composition the
-    * pair/cluster queries exist FOR: MinHash+LSH verified pairs →
-    * connected components → keep the smallest-id representative per
-    * cluster → per-source accounting (docs / clustered / dropped /
-    * kept). [[dCurationPipeline]] is the exact-dedup flow; this is
-    * its near-dup counterpart.
-    *
-    * Scale shape: inherits its stages' — banded candidate generation,
-    * O(log n)-round label propagation over id pairs, and a final
-    * partial-combined accounting aggregate; the only per-doc join is
-    * the left join of (doc_id, source) against the cluster map. */
-  def dNeardupPipeline(s: SparkSession, d: String): DataFrame = {
-    val dd = docs(s, d)
-    val pairs = Dedup.minhashLshPairs(dd, "doc_id", "text",
-      n = 3, bands = 16, rowsPerBand = 4, threshold = 0.2)
-    val comps = graft.ext.ConnectedComponents
-      .components(pairs, "doc_a", "doc_b")
-      .select(col("id").as("doc_id"), col("comp"))
-    dd.select(col("doc_id"), col("source"))
-      .join(comps, Seq("doc_id"), "left")
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_docs"),
-        count(col("comp")).as("n_clustered"),
-        count(when(col("comp").isNotNull &&
-          col("comp") =!= col("doc_id"), 1)).as("n_dropped"))
-      .withColumn("n_kept", col("n_docs") - col("n_dropped"))
-      .orderBy("source")
-  }
-
-  private val dNeardupPipelineSql =
-    s"""WITH RECURSIVE $minhashPairsCtes,
-       |edges AS (SELECT doc_a AS a, doc_b AS b FROM mh_pairs
-       |  UNION SELECT doc_b, doc_a FROM mh_pairs),
-       |reach(a, b) AS (SELECT a, b FROM edges
-       |  UNION SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-       |comp AS (SELECT a AS doc_id, least(a, min(b)) AS comp
-       |  FROM reach GROUP BY a)
-       |SELECT d.source, count(*) AS n_docs,
-       |  count(c.comp) AS n_clustered,
-       |  count(CASE WHEN c.comp IS NOT NULL AND c.comp <> d.doc_id
-       |    THEN 1 END) AS n_dropped,
-       |  count(*) - count(CASE WHEN c.comp IS NOT NULL AND
-       |    c.comp <> d.doc_id THEN 1 END) AS n_kept
-       |FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id
-       |GROUP BY d.source ORDER BY d.source""".stripMargin
-
-  /** Document centrality in the near-duplicate similarity graph:
-    * integer-arithmetic PageRank ([[graft.ext.PageRank]]) over the
-    * symmetrized MinHash+LSH pair graph — highly-connected documents
-    * are template/boilerplate hubs (rank DOWN for training-data
-    * diversity), isolated documents never enter the graph. The
-    * composition reuses both shared fragments: the engine reuses
-    * `Dedup.minhashLshPairs` + `PageRank.pagerank`; the oracle splices
-    * the `mh_pairs` CTE chain into the unrolled integer iterations. */
-  def gDocCentrality(s: SparkSession, d: String): DataFrame = {
-    val pairs = Dedup.minhashLshPairs(docs(s, d), "doc_id", "text",
-      n = 3, bands = 16, rowsPerBand = 4, threshold = 0.2)
-    val edges = pairs.select(col("doc_a").as("src"),
-        col("doc_b").as("dst"))
-      .unionByName(pairs.select(col("doc_b").as("src"),
-        col("doc_a").as("dst")))
-    graft.ext.PageRank.pagerank(edges, iters = 2)
-      .select(col("node").as("doc_id"), col("pr_pico"))
-      .orderBy("doc_id")
-  }
-
-  private val gDocCentralitySql = {
-    def iterSql(prev: String, out: String) =
-      s"""$out AS (SELECT d0.src AS node,
-         |    (150000000000 // max(nn.n)) +
-         |      ((85 * CAST(coalesce(sum(t.c), 0) AS BIGINT)) // 100)
-         |      AS pr_pico
-         |  FROM pdeg d0 LEFT JOIN (SELECT pe.dst,
-         |      p.pr_pico // d.deg AS c
-         |    FROM pe JOIN $prev p ON pe.src = p.node
-         |      JOIN pdeg d ON d.src = pe.src) t ON t.dst = d0.src, nn
-         |  GROUP BY d0.src)""".stripMargin
-    s"""WITH $minhashPairsCtes,
-       |pe AS (SELECT doc_a AS src, doc_b AS dst FROM mh_pairs
-       |  UNION ALL SELECT doc_b, doc_a FROM mh_pairs),
-       |pdeg AS (SELECT src, count(*) AS deg FROM pe GROUP BY 1),
-       |nn AS (SELECT count(*) AS n FROM pdeg),
-       |p0 AS (SELECT src AS node, 1000000000000 // n AS pr_pico
-       |  FROM pdeg, nn),
-       |${iterSql("p0", "p1")},
-       |${iterSql("p1", "p2")}
-       |SELECT node AS doc_id, pr_pico FROM p2
-       |ORDER BY doc_id""".stripMargin
-  }
-
-  /** Per-doc triangle participation over the near-dup pair graph
-    * ([[graft.ext.Triangles]], degree-ordered wedge join): the
-    * cluster-quality diagnostic that separates pairwise-verified
-    * near-dup cliques from hub-chained components — a dup component
-    * with zero triangles is transitive linking through one template
-    * doc, one with many is a genuine mutual-duplicate family. Edges
-    * are [[dJaccardPairs]]' generator; output is (doc_id, n_tri, deg)
-    * for every doc in the pair graph, zeros included. The oracle
-    * enumerates each id-ordered triangle once with NO orientation —
-    * the degree ordering is pure Spark-side candidate pruning, proven
-    * result-neutral by the hash match. */
-  def gTriangles(s: SparkSession, d: String): DataFrame = {
-    val pairs = Dedup.jaccardPairs(docs(s, d), "doc_id", "text",
-      n = 3, threshold = 0.2)
-    graft.ext.Triangles.triangleCounts(pairs, "doc_a", "doc_b")
-      .select(col("node").as("doc_id"), col("n_tri"), col("deg"))
-      .orderBy("doc_id")
-  }
-
-  private val gTrianglesSql =
-    s"""WITH sh AS (SELECT doc_id, $sqlShingles AS sh
-      |  FROM documents),
-      |blocked AS (SELECT doc_id, sh, sh[1] AS block FROM sh
-      |  WHERE len(sh) > 0),
-      |e AS (SELECT DISTINCT a.doc_id AS lo, b.doc_id AS hi
-      |  FROM blocked a JOIN blocked b
-      |    ON a.block = b.block AND a.doc_id < b.doc_id
-      |  WHERE len(list_intersect(a.sh, b.sh))::DOUBLE /
-      |    (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))
-      |    >= 0.2),
-      |n AS (SELECT lo AS node FROM e UNION SELECT hi FROM e),
-      |d AS (SELECT node, count(*) AS deg FROM
-      |  (SELECT lo AS node FROM e UNION ALL SELECT hi FROM e)
-      |  GROUP BY node),
-      |t AS (SELECT e1.lo AS u, e1.hi AS v, e2.hi AS w
-      |  FROM e e1 JOIN e e2 ON e2.lo = e1.lo AND e2.hi > e1.hi
-      |  JOIN e e3 ON e3.lo = e1.hi AND e3.hi = e2.hi),
-      |c AS (SELECT node, count(*) AS n_tri FROM
-      |  (SELECT u AS node FROM t UNION ALL SELECT v FROM t
-      |   UNION ALL SELECT w FROM t) GROUP BY node)
-      |SELECT n.node AS doc_id,
-      |  CAST(coalesce(c.n_tri, 0) AS BIGINT) AS n_tri, d.deg
-      |FROM n JOIN d ON n.node = d.node
-      |LEFT JOIN c ON n.node = c.node
-      |ORDER BY doc_id""".stripMargin
 
   /** Per-doc 32-bit SimHash fingerprints. Oracle-verified via the
     * portable polynomial token hash (bit 31 is constantly 0 — the
@@ -758,7 +580,7 @@ object TrainingData {
     * partial-combined count keyed by the 8-byte hash, reattached by
     * an fp equi-join — compact keys, linear in corpus size, and no
     * doc-pair frame is ever materialized (pair generation is
-    * [[dJaccardPairs]]' job; this op reports overlap statistics
+    * `d_jaccard_pairs`' job; this op reports overlap statistics
     * without the quadratic). */
   def dWinnowing(s: SparkSession, d: String): DataFrame =
     winnowStats(docs(s, d))
@@ -767,7 +589,7 @@ object TrainingData {
     * separate so specs can assert the winnowing guarantee on
     * constructed corpora. Fingerprint selection is the codegen'd
     * [[graft.functions.WinnowSet]] kernel — the interpreted HOF
-    * formulation ([[hofWinnowFps]], kept for equivalence specs)
+    * formulation (TrainingDataSpec keeps it as the reference)
     * allocates a gram string + slice per position and measured 75s
     * on the 10× probe corpus vs ~2s compiled. */
   def winnowStats(documents: DataFrame): DataFrame = {
@@ -791,26 +613,6 @@ object TrainingData {
     val res = out.localCheckpoint()
     base.unpersist()
     res
-  }
-
-  /** HOF reference formulation of the [[graft.functions.WinnowSet]]
-    * kernel — interpreted lambda per position; kept for equivalence
-    * testing only (TrainingDataSpec). */
-  def hofWinnowFps(textCol: Column, k: Int = 4, w: Int = 4): Column = {
-    val toks = split(textCol, " ")
-    val n = size(toks)
-    val grams = when(n >= k,
-        transform(sequence(lit(1), n - (k - 1)),
-          i => concat_ws(" ", slice(toks, i, lit(k)))))
-      .otherwise(array().cast("array<string>"))
-    val gh = graft.functions.ArrayOps.array_poly_hash(grams)
-    val m = size(gh)
-    val sel = when(m >= w,
-        transform(sequence(lit(1), m - (w - 1)),
-          j => array_min(slice(gh, j, lit(w)))))
-      .when(m > 0, array(array_min(gh)))
-      .otherwise(array().cast("array<long>"))
-    array_sort(array_distinct(sel))
   }
 
   private val dWinnowingSql =
@@ -921,96 +723,6 @@ object TrainingData {
        |    count(CASE WHEN kept THEN 1 END), 6) AS avg_kept_quality
        |FROM k2 GROUP BY source ORDER BY source""".stripMargin
   }
-
-  /** Near-dup clusters: Jaccard pairs → connected components →
-    * cluster assignment per doc (transitive closure of near-dup
-    * hits). Oracle: recursive CTE over the same pair list. */
-  def dDupClusters(s: SparkSession, d: String): DataFrame = {
-    val pairs = Dedup.jaccardPairs(docs(s, d), "doc_id", "text",
-      n = 3, threshold = 0.2)
-    graft.ext.ConnectedComponents
-      .components(pairs, "doc_a", "doc_b")
-      .select(col("id").as("doc_id"), col("comp").as("component"))
-      .orderBy("doc_id")
-  }
-
-  /** Shared recursive-CTE chain computing near-dup components from
-    * 3-gram Jaccard pairs (min-id component labels), ending at
-    * `comp(doc_id, comp)` — ONE SQL definition of the transitive
-    * closure, shared by [[dDupClustersSql]] and
-    * [[dDedupKeepBestSql]]. */
-  private val dupClusterCtes =
-    """WITH RECURSIVE sh AS (SELECT doc_id,
-      |    list_sort(list_distinct(list_transform(
-      |      range(1, greatest(len(string_split(text, ' ')) - 2, 1) + 1),
-      |      i -> array_to_string((string_split(text, ' '))[i:i+2], ' '))))
-      |      AS sh
-      |  FROM documents),
-      |blocked AS (SELECT doc_id, sh, sh[1] AS block FROM sh
-      |  WHERE len(sh) > 0),
-      |pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-      |  FROM blocked a JOIN blocked b
-      |    ON a.block = b.block AND a.doc_id < b.doc_id
-      |  WHERE len(list_intersect(a.sh, b.sh))::DOUBLE /
-      |    (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))
-      |    >= 0.2),
-      |edges AS (SELECT doc_a AS a, doc_b AS b FROM pairs
-      |  UNION SELECT doc_b, doc_a FROM pairs),
-      |reach(a, b) AS (SELECT a, b FROM edges
-      |  UNION SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-      |comp AS (SELECT a AS doc_id, least(a, min(b)) AS comp
-      |  FROM reach GROUP BY a)""".stripMargin
-
-  private val dDupClustersSql =
-    s"""$dupClusterCtes
-      |SELECT doc_id, comp AS component
-      |FROM comp ORDER BY doc_id""".stripMargin
-
-  /** Quality-aware near-dup resolution — what production curation
-    * actually does with a duplicate cluster: instead of keeping the
-    * arbitrary min-id representative, keep the HIGHEST-QUALITY member
-    * (hashing-trick LR score of [[dQualityLr]]; exact integer milli
-    * units, so the argmax is deterministic cross-engine; ties by
-    * smallest doc_id). Docs in no cluster are their own singleton
-    * component and always kept. Output: one row per doc —
-    * (doc_id, component, score_milli, keep).
-    *
-    * Scale shape: clustering is the [[dDupClusters]] blocked-pair +
-    * label-propagation path (never all-pairs); the quality score is a
-    * pure projection; resolution is one window keyed by component —
-    * components are near-dup clusters, bounded by the block cap, so
-    * no window partition is corpus-sized. Only (doc_id, component,
-    * score) rows shuffle. */
-  def dDedupKeepBest(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val dd = docs(s, d)
-    val pairs = Dedup.jaccardPairs(dd, "doc_id", "text",
-      n = 3, threshold = 0.2)
-    val comps = graft.ext.ConnectedComponents
-      .components(pairs, "doc_a", "doc_b")
-      .select(col("id").as("doc_id"), col("comp"))
-    val labeled = lrScoreMilli(dd)
-      .select(col("doc_id"), col("score_milli"))
-      .join(comps, Seq("doc_id"), "left")
-      .withColumn("component", coalesce(col("comp"), col("doc_id")))
-    val w = Window.partitionBy(col("component"))
-      .orderBy(desc("score_milli"), asc("doc_id"))
-    labeled.withColumn("rnk", row_number().over(w))
-      .select(col("doc_id"), col("component"), col("score_milli"),
-        (col("rnk") === 1).as("keep"))
-      .orderBy("doc_id")
-  }
-
-  private val dDedupKeepBestSql =
-    s"""$dupClusterCtes,
-      |$lrScoreCtes,
-      |l AS (SELECT w.doc_id,
-      |    coalesce(c.comp, w.doc_id) AS component, w.score_milli
-      |  FROM w LEFT JOIN comp c ON w.doc_id = c.doc_id)
-      |SELECT doc_id, component, score_milli,
-      |  row_number() OVER (PARTITION BY component
-      |    ORDER BY score_milli DESC, doc_id ASC) = 1 AS keep
-      |FROM l ORDER BY doc_id""".stripMargin
 
   // ---- similarity search --------------------------------------------
   /** Greedy k-center diverse subset selection (k = 8) over the
@@ -3044,7 +2756,7 @@ object TrainingData {
     s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks
        |  FROM documents),
        |sh AS (SELECT doc_id, unnest(list_transform(
-       |    ${sqlShingleList("toks", 5)},
+       |    ${NearDupSpec.sqlShingleList("toks", 5)},
        |    s -> ${sqlPolyHash("s")})) AS g
        |  FROM t),
        |e AS (SELECT doc_id AS eval_doc, g FROM sh WHERE doc_id % 10 = 0),
@@ -3093,7 +2805,7 @@ object TrainingData {
     s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks
        |  FROM documents),
        |sh AS (SELECT doc_id, unnest(list_transform(
-       |    ${sqlShingleList("toks", 8)},
+       |    ${NearDupSpec.sqlShingleList("toks", 8)},
        |    s -> ${sqlPolyHash("s")})) AS g
        |  FROM t),
        |df AS (SELECT g, count(*) AS df FROM sh GROUP BY 1)
@@ -4214,12 +3926,6 @@ object TrainingData {
     "d_dedup_exact" -> (dDedupExact _),
     "d_incremental_dedup" -> (dIncrementalDedup _),
     "d_snapshot_diff" -> (dSnapshotDiff _),
-    "d_incremental_minhash" -> (dIncrementalMinhash _),
-    "d_jaccard_pairs" -> (dJaccardPairs _),
-    "d_jaccard_prefix" -> (dJaccardPrefix _),
-    "d_containment" -> (dContainment _),
-    "d_containment_auto" -> (dContainmentAuto _),
-    "d_minhash_lsh" -> (dMinhashLsh _),
     "d_bm25" -> (dBm25 _),
     "d_phrase_search" -> (dPhraseSearch _),
     "d_phrase_search_sampled" -> (dPhraseSearchSampled _),
@@ -4293,6 +3999,7 @@ object TrainingData {
     "m_phash_dups" -> (mPhashDups _),
   ) ++ pqEntries.map { case (n, e) => n -> (runPq(n, e) _) } ++
     ivfEntries.map { case (n, e) => n -> (runIvf(e) _) } ++
+    nearDupEntries.map { case (n, e) => n -> (runNearDup(e) _) } ++
     hybridEntries.map { case (n, e) => n -> (hybridRrf(e) _) } ++
     semDedupEntries.map { case (n, e) =>
       n -> ((s: SparkSession, d: String) => runSemDedup(e)(embs(s, d)))
@@ -4302,12 +4009,6 @@ object TrainingData {
     "d_dedup_exact" -> dDedupExactSql,
     "d_incremental_dedup" -> dIncrementalDedupSql,
     "d_snapshot_diff" -> dSnapshotDiffSql,
-    "d_incremental_minhash" -> dIncrementalMinhashSql,
-    "d_jaccard_pairs" -> dJaccardPairsSql,
-    "d_jaccard_prefix" -> dJaccardPrefixSql,
-    "d_containment" -> dContainmentSql,
-    "d_containment_auto" -> dContainmentAutoSql,
-    "d_minhash_lsh" -> dMinhashLshSql,
     "d_bm25" -> dBm25Sql,
     "d_phrase_search" -> dPhraseSearchSql,
     "d_phrase_search_sampled" -> dPhraseSearchSampledSql,
@@ -4388,6 +4089,8 @@ object TrainingData {
       fitWhere = e.appendMod.map(m => s"vec_id % $m <> 0"))
   } ++ ivfEntries.map { case (n, e) =>
     n -> IvfSpec.oracleSql(e.spec, e.k, e.queries)
+  } ++ nearDupEntries.map { case (n, e) =>
+    n -> NearDupSpec.oracleSql(e.spec, e.split)
   } ++ hybridEntries.map { case (n, e) => n -> hybridRrfSql(e)
   } ++ semDedupEntries.map { case (n, e) =>
     n -> SemDedupSpec.oracleSql(e.spec, e.split)

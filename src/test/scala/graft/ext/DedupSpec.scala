@@ -1,10 +1,68 @@
 package graft.ext
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import NearDupCandidates._
+import NearDupMeasure._
 
 class DedupSpec extends SparkSpec {
   import spark.implicits._
+
+  /** `spec`'s self-join pairs over (doc_id, text) rows. */
+  private def runSpec(docs: DataFrame, spec: NearDupSpec): DataFrame =
+    Dedup.nearDupPairs(spec, docs, "doc_id", "text")
+
+  private def blocked(n: Int, threshold: Double,
+      c: MinShingle = MinShingle()): NearDupSpec =
+    NearDupSpec(n, c, Jaccard(threshold))
+
+  private def prefix(n: Int, tNum: Int, tDen: Int): NearDupSpec =
+    NearDupSpec(n, Prefix(tNum, tDen),
+      Jaccard(Prefix(tNum, tDen).threshold))
+
+  private def containment(threshold: Double, dfCap: Int): NearDupSpec =
+    NearDupSpec(8, RareGrams(GramCap.Fixed(dfCap)), Containment(threshold))
+
+  /** Jaccard similarity of two sorted pre-distinct shingle arrays — the
+    * brute-force reference. */
+  private def jaccard(a: Column, b: Column): Column = {
+    val inter = graft.functions.ArrayOps.sorted_intersect_size(a, b)
+      .cast("double")
+    inter / (size(a) + size(b) - inter)
+  }
+
+  /** HOF MinHash signature over pre-hashed shingles: for permutation j,
+    * min over h of (a_j·h + b_j) mod p — the formulation
+    * [[graft.functions.MinHashSig]] replaced. */
+  private def hofMinhashSignature(shingleHashes: Column,
+      numHashes: Int): Column = {
+    val p = lit(2147483647L)
+    array((0 until numHashes).map { j =>
+      val a = lit(2L * j + 1)
+      val b = lit(7919L * (j + 1))
+      array_min(transform(shingleHashes, h => pmod(a * h + b, p)))
+    }: _*)
+  }
+
+  /** HOF SimHash over rolling token hashes — the formulation
+    * [[graft.functions.SimHash32]] replaced. */
+  private def hofSimhash32(textCol: Column): Column = {
+    val toks = split(textCol, " ")
+    def tokHash(t: Column): Column =
+      graft.functions.RollingHash.rolling_hash(t)
+    val votes = aggregate(toks,
+      array_repeat(lit(0), 32),
+      (acc, t) => zip_with(acc,
+        array((0 until 32).map(i =>
+          when(shiftright(tokHash(t), i).bitwiseAND(1) === 1, 1)
+            .otherwise(-1)): _*),
+        (x, y) => x + y))
+    aggregate(zip_with(votes, sequence(lit(0), lit(31)),
+        (v, i) => when(v > 0, pow(lit(2.0), i).cast("long"))
+          .otherwise(lit(0L))),
+      lit(0L), (acc, x) => acc.bitwiseOR(x))
+  }
 
   private def docs = Seq(
     (1L, "the quick brown fox jumps over the lazy dog"),
@@ -22,7 +80,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("jaccard pairs finds the near duplicate above threshold") {
-    val got = Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.5)
+    val got = runSpec(docs, blocked(3, 0.5))
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     // 1-5 identical (jaccard 1.0); 1-3 and 3-5 share most shingles
     assert(got.contains((1L, 5L)))
@@ -64,8 +122,7 @@ class DedupSpec extends SparkSpec {
       val t = base(i % base.size)
       (i.toLong, if (i < base.size * 2) t else s"$t suffix$i tail$i")
     }.toDF("doc_id", "text")
-    val got = Dedup
-      .jaccardPrefixPairs(corpus, "doc_id", "text", 3, 1, 5)
+    val got = runSpec(corpus, prefix(3, 1, 5))
       .select($"doc_a", $"doc_b", round($"jaccard", 9).as("j"))
       .as[(Long, Long, Double)].collect().toSet
     // brute force: cross join, exact jaccard, no pruning
@@ -74,7 +131,7 @@ class DedupSpec extends SparkSpec {
     val brute = sh.as("a").join(sh.as("b"),
         $"a.doc_id" < $"b.doc_id")
       .select($"a.doc_id".as("doc_a"), $"b.doc_id".as("doc_b"),
-        round(Dedup.jaccard($"a.sh", $"b.sh"), 9).as("j"))
+        round(jaccard($"a.sh", $"b.sh"), 9).as("j"))
       .filter($"j" >= 0.2)
       .as[(Long, Long, Double)].collect().toSet
     assert(got == brute)
@@ -93,8 +150,7 @@ class DedupSpec extends SparkSpec {
         (i.toLong, Seq.fill(n)(words(rnd.nextInt(words.size)))
           .mkString(" "))
       }.toDF("doc_id", "text")
-      val got = Dedup
-        .jaccardPrefixPairs(corpus, "doc_id", "text", 3, tNum, tDen)
+      val got = runSpec(corpus, prefix(3, tNum, tDen))
         .select($"doc_a", $"doc_b", round($"jaccard", 9).as("j"))
         .as[(Long, Long, Double)].collect().toSet
       val sh = corpus.select($"doc_id",
@@ -104,7 +160,7 @@ class DedupSpec extends SparkSpec {
       val brute = sh.as("a").join(sh.as("b"),
           $"a.doc_id" < $"b.doc_id")
         .select($"a.doc_id".as("doc_a"), $"b.doc_id".as("doc_b"),
-          round(Dedup.jaccard($"a.sh", $"b.sh"), 9).as("j"))
+          round(jaccard($"a.sh", $"b.sh"), 9).as("j"))
         .filter($"j" >= tau)
         .as[(Long, Long, Double)].collect().toSet
       assert(got == brute, s"seed=$seed tau=$tNum/$tDen")
@@ -117,12 +173,11 @@ class DedupSpec extends SparkSpec {
       (i.toLong, s"shared head words here item$i plus shared tail " +
         s"words var${i % 7}")
     }.toDF("doc_id", "text")
-    val pref = Dedup
-      .jaccardPrefixPairs(corpus, "doc_id", "text", 3, 1, 5)
+    val pref = runSpec(corpus, prefix(3, 1, 5))
       .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
-    val blocked = Dedup.jaccardPairs(corpus, "doc_id", "text", 3, 0.2)
+    val block = runSpec(corpus, blocked(3, 0.2))
       .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
-    assert(blocked.subsetOf(pref))
+    assert(block.subsetOf(pref))
   }
 
   test("prefix length uses exact rational ceil — the IEEE " +
@@ -146,8 +201,7 @@ class DedupSpec extends SparkSpec {
     val long = s"$short k l m n o p q r"                    // superset
     val corpus = Seq((1L, short), (2L, long),
       (3L, "z y x w v u t s r q p o")).toDF("doc_id", "text")
-    val got = Dedup.containmentPairs(corpus, "doc_id", "text",
-      n = 8, threshold = 0.9, dfCap = 16)
+    val got = runSpec(corpus, containment(threshold = 0.9, dfCap = 16))
       .select("doc_a", "doc_b", "cont_a", "cont_b")
       .as[(Long, Long, Double, Double)].collect()
     assert(got.length == 1)
@@ -156,8 +210,7 @@ class DedupSpec extends SparkSpec {
     assert(ca == 1.0, s"short-in-long containment must be 1.0, got $ca")
     assert(cb < 0.9, "reverse direction is partial")
     // the same pair under symmetric Jaccard sits far below 0.9
-    val jac = Dedup.jaccardPairs(corpus, "doc_id", "text", 8, 0.9)
-      .collect()
+    val jac = runSpec(corpus, blocked(8, 0.9)).collect()
     assert(jac.isEmpty, "Jaccard at the same threshold misses the pair")
   }
 
@@ -169,19 +222,17 @@ class DedupSpec extends SparkSpec {
     val corpus = (1 to 5).map(i => (i.toLong,
       s"$header u${i}a u${i}b u${i}c u${i}d u${i}e u${i}f u${i}g u${i}h"))
       .toDF("doc_id", "text")
-    val capped = Dedup.containmentPairs(corpus, "doc_id", "text",
-      n = 8, threshold = 0.05, dfCap = 3)
+    val capped = runSpec(corpus, containment(threshold = 0.05, dfCap = 3))
     assert(capped.collect().isEmpty,
       "over-cap gram must not generate candidates")
-    val uncapped = Dedup.containmentPairs(corpus, "doc_id", "text",
-      n = 8, threshold = 0.05, dfCap = 16)
+    val uncapped = runSpec(corpus, containment(threshold = 0.05, dfCap = 16))
     assert(uncapped.count() == 10,
       "all 10 pairs emerge once the shared gram is under the cap")
   }
 
   test("minhash LSH finds true near-dup pairs with verified jaccard") {
-    val got = Dedup.minhashLshPairs(docs, "doc_id", "text",
-      n = 3, bands = 16, rowsPerBand = 2, threshold = 0.5)
+    val got = runSpec(docs,
+        NearDupSpec(3, MinhashBands(bands = 16, rowsPerBand = 2), Jaccard(0.5)))
       .select("doc_a", "doc_b", "jaccard")
       .as[(Long, Long, Double)].collect()
     val pairs = got.map(r => (r._1, r._2)).toSet
@@ -206,8 +257,8 @@ class DedupSpec extends SparkSpec {
 
     // cap smaller than the block: exact path must see zero candidates,
     // rescue must still surface the true near-dup pair
-    val capped = Dedup.jaccardPairs(corpus, "doc_id", "text", 3, 0.5,
-      maxBlockSize = 10, rescueBands = 16, rescueRowsPerBand = 2)
+    val capped = runSpec(corpus, blocked(3, 0.5,
+        MinShingle(maxBlockSize = 10, rescue = MinhashBands(16, 2))))
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     assert(capped.contains((100L, 101L)),
       "MinHash rescue must recover the near-dup pair in the hot block")
@@ -216,18 +267,18 @@ class DedupSpec extends SparkSpec {
     assert(capped == Set((100L, 101L)))
 
     // cap above the block size → behavior identical to uncapped
-    val uncapped = Dedup.jaccardPairs(corpus, "doc_id", "text", 3, 0.5,
-      maxBlockSize = Int.MaxValue)
+    val uncapped = runSpec(corpus, blocked(3, 0.5,
+        MinShingle(maxBlockSize = Int.MaxValue)))
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     assert(uncapped == capped)
   }
 
   test("hot-block cap: normal corpus output is unchanged by the cap") {
-    val a = Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.5,
-      maxBlockSize = 2, rescueBands = 16, rescueRowsPerBand = 2)
+    val a = runSpec(docs, blocked(3, 0.5,
+        MinShingle(maxBlockSize = 2, rescue = MinhashBands(16, 2))))
       .select("doc_a", "doc_b", "jaccard")
       .as[(Long, Long, Double)].collect().toSet
-    val b = Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.5)
+    val b = runSpec(docs, blocked(3, 0.5))
       .select("doc_a", "doc_b", "jaccard")
       .as[(Long, Long, Double)].collect().toSet
     // every emitted pair is exact-verified on both routes, so a tiny
@@ -239,9 +290,10 @@ class DedupSpec extends SparkSpec {
   test("codegen SimHash32 equals the HOF simhash formulation") {
     val both = docs.select(
       Dedup.simhash32($"text").as("fast"),
-      Dedup.hofSimhash32($"text").as("ref"))
+      hofSimhash32($"text").as("ref"))
       .as[(Long, Long)].collect()
     both.foreach { case (fast, ref) => assert(fast == ref) }
+    assert(both(0)._1 == both(4)._1) // identical text, identical simhash
   }
 
   test("codegen MinHashSig equals the HOF minhash formulation") {
@@ -251,7 +303,7 @@ class DedupSpec extends SparkSpec {
         s => pmod(xxhash64(s), lit(2147483647L))))
     val both = sh.select(
       graft.functions.MinHashSig.minhash_sig($"hs", 16).as("fast"),
-      Dedup.minhashSignature($"hs", 16).as("ref"))
+      hofMinhashSignature($"hs", 16).as("ref"))
       .as[(Seq[Long], Seq[Long])].collect()
     both.foreach { case (fast, ref) => assert(fast == ref) }
   }
@@ -260,17 +312,16 @@ class DedupSpec extends SparkSpec {
       "full self-join, and never reports within-batch pairs") {
     val corpus = graft.Tables.documents(spark, sf0001)
     val isNew = col("doc_id") % 10 === 0
-    val inc = Dedup.minhashLshIncremental(
-        corpus.filter(isNew), corpus.filter(!isNew),
-        "doc_id", "text", n = 3, bands = 16, rowsPerBand = 4,
-        threshold = 0.2)
+    val spec = NearDupSpec(3, MinhashBands(bands = 16, rowsPerBand = 4),
+      Jaccard(0.2))
+    val sh = Dedup.shingleFrame(corpus, "doc_id", "text", spec.n)
+    val inc = Dedup.nearDupProbe(spec, sh.filter(isNew), sh.filter(!isNew))
       .select("new_id", "dup_of").as[(Long, Long)].collect().toSet
     // reference: the full self-join's verified pairs, restricted to
     // pairs with exactly one side in the batch, re-oriented to
     // (new, manifest) — band keys are per-doc, so the cross-side
     // candidate sets coincide and the verified sets must be equal
-    val full = Dedup.minhashLshPairs(corpus, "doc_id", "text",
-        n = 3, bands = 16, rowsPerBand = 4, threshold = 0.2)
+    val full = runSpec(corpus, spec)
       .select("doc_a", "doc_b").as[(Long, Long)].collect()
     val expected = full.flatMap { case (a, b) =>
       (a % 10 == 0, b % 10 == 0) match {
@@ -285,13 +336,28 @@ class DedupSpec extends SparkSpec {
     assert(inc.forall { case (n2, m) => n2 % 10 == 0 && m % 10 != 0 })
   }
 
-  test("simhash: identical text → distance 0; pairs respect maxHamming") {
-    val h = docs.select(Dedup.simhash32($"text").as("h"))
-      .as[Long].collect()
-    assert(h(0) == h(4)) // identical text, identical simhash
-    val pairs = Dedup.simhashPairs(docs, "doc_id", "text", 3)
-      .as[(Long, Long, Int)].collect()
-    assert(pairs.map(r => (r._1, r._2)).contains((1L, 5L)))
-    assert(pairs.forall(_._3 <= 3))
+  test("containment cap PerDocs: exact-integer max(min, ceil(num*N/den)), " +
+      "and the oracle's cap expression is the same rule") {
+    val cap = GramCap.PerDocs(16, 5000, 2)
+    assert(cap.of(5000) == 16)
+    assert(cap.of(5001) == 17)
+    assert(cap.of(1) == 2)
+    for (n <- 1L to 20000L)
+      assert(cap.of(n) == ((BigInt(16) * n + 4999) / 5000).max(2).toInt,
+        s"N=$n")
+    // the rule is exact where a double ceil is not: 1/75 of 525 docs
+    // is exactly 7, but IEEE (1.0/75)*525 ceils to 8
+    assert(math.ceil((1.0 / 75) * 525).toInt == 8)
+    assert(GramCap.PerDocs(1, 75, 2).of(525) == 7)
+    // the oracle splices cap.sql over its shingle CTE; evaluated over
+    // N rows (DuckDB's integer // is Spark's div) it is cap.of(N)
+    val spec = NearDupSpec(8, RareGrams(cap), Containment(0.5))
+    assert(NearDupSpec.oracleSql(spec).contains(s"<= ${cap.sql("f")}"))
+    for (n <- Seq(1L, 4999L, 5000L, 5001L, 12345L)) {
+      val sqlCap = spark.sql(cap.sql(s"range($n)").replace("//", "div")
+          .stripPrefix("(").stripSuffix(")"))
+        .as[Long].head()
+      assert(sqlCap == cap.of(n), s"N=$n")
+    }
   }
 }

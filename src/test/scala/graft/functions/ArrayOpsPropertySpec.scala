@@ -36,7 +36,7 @@ class ArrayOpsPropertySpec extends SparkSpec {
       val texts = sample(text, 40)
       val both = texts.toDF("text").select(
         Dedup.shingles($"text", n).as("fast"),
-        Dedup.hofShingles($"text", n).as("ref"))
+        HofShingles($"text", n).as("ref"))
         .as[(Seq[String], Seq[String])].collect()
       both.zip(texts).foreach { case ((fast, ref), t) =>
         assert(fast == ref, s"n=$n text='$t'")

@@ -22,7 +22,7 @@ class ArrayOpsSpec extends SparkSpec {
     for (n <- Seq(1, 2, 3, 5)) {
       val both = docs.select(
         Dedup.shingles($"text", n).as("fast"),
-        Dedup.hofShingles($"text", n).as("ref"))
+        HofShingles($"text", n).as("ref"))
         .as[(Seq[String], Seq[String])].collect()
       both.foreach { case (fast, ref) =>
         assert(fast == ref, s"n=$n")

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -8,6 +9,25 @@ import graft.SparkSpec
   * can't phrase). */
 class TrainingDataSpec extends SparkSpec {
   import spark.implicits._
+
+  /** The built-in-HOF formulation the [[graft.functions.WinnowSet]]
+    * kernel replaced — one interpreted lambda per position. */
+  private def hofWinnowFps(textCol: Column, k: Int = 4, w: Int = 4): Column = {
+    val toks = split(textCol, " ")
+    val n = size(toks)
+    val grams = when(n >= k,
+        transform(sequence(lit(1), n - (k - 1)),
+          i => concat_ws(" ", slice(toks, i, lit(k)))))
+      .otherwise(array().cast("array<string>"))
+    val gh = graft.functions.ArrayOps.array_poly_hash(grams)
+    val m = size(gh)
+    val sel = when(m >= w,
+        transform(sequence(lit(1), m - (w - 1)),
+          j => array_min(slice(gh, j, lit(w)))))
+      .when(m > 0, array(array_min(gh)))
+      .otherwise(array().cast("array<long>"))
+    array_sort(array_distinct(sel))
+  }
 
   test("d_pack: spans are ordered and per-source sequence counts " +
       "match the token totals") {
@@ -278,7 +298,7 @@ class TrainingDataSpec extends SparkSpec {
     val docs = graft.Tables.documents(spark, sf0001)
     assert(acct.agg(sum(col("n_docs"))).as[Long].head() == docs.count())
     // total clustered == distinct ids appearing in the verified pairs
-    val pairs = TrainingData.dMinhashLsh(spark, sf0001).cache()
+    val pairs = TrainingData.queries("d_minhash_lsh")(spark, sf0001).cache()
     val inPairs = pairs.select(col("doc_a").as("id"))
       .unionByName(pairs.select(col("doc_b").as("id"))).distinct()
     assert(acct.agg(sum(col("n_clustered"))).as[Long].head() ==
@@ -297,7 +317,7 @@ class TrainingDataSpec extends SparkSpec {
     val c = TrainingData.queries("g_doc_centrality")(spark, sf0001)
       .cache()
     assert(c.filter(col("pr_pico") <= 0).isEmpty)
-    val pairs = TrainingData.dMinhashLsh(spark, sf0001)
+    val pairs = TrainingData.queries("d_minhash_lsh")(spark, sf0001)
     val ids = pairs.select(col("doc_a").as("doc_id"))
       .unionByName(pairs.select(col("doc_b").as("doc_id"))).distinct()
     assert(c.select("doc_id").exceptAll(ids).isEmpty &&
@@ -519,8 +539,8 @@ class TrainingDataSpec extends SparkSpec {
   test("d_dedup_recall: counts reconcile with the two pair queries " +
       "and the overlap bounds hold") {
     val r = TrainingData.dDedupRecall(spark, sf0001).collect()(0)
-    val nExact = TrainingData.dJaccardPairs(spark, sf0001).count()
-    val nLsh = TrainingData.dMinhashLsh(spark, sf0001).count()
+    val nExact = TrainingData.queries("d_jaccard_pairs")(spark, sf0001).count()
+    val nLsh = TrainingData.queries("d_minhash_lsh")(spark, sf0001).count()
     assert(r.getAs[Long]("n_exact") == nExact)
     assert(r.getAs[Long]("n_lsh") == nLsh)
     val nBoth = r.getAs[Long]("n_both")
@@ -680,7 +700,7 @@ class TrainingDataSpec extends SparkSpec {
       .select(
         graft.functions.WinnowSet.winnow_set(
           split(col("text"), " "), k = 4, w = 4).as("kern"),
-        TrainingData.hofWinnowFps(col("text")).as("hof"))
+        hofWinnowFps(col("text")).as("hof"))
       .filter(col("kern") =!= col("hof"))
     assert(diff.isEmpty, "kernel and HOF winnow sets must be identical")
   }
