@@ -7,12 +7,12 @@ import graft.queries.QueryUtil.{kmUnrolledSql, qidsSql, quantizeSql,
   sqlCosine, sqlSumDec, vectorRowsSql}
 
 /** The coarse level of an ANN index: how the corpus is cut into cells
-  * and which of them each query probes. [[IvfSpec]] searches with
-  * every variant; [[PqSpec]] shares the label cells. The centroid
-  * levels (labels, k-means, two-level) probe by one rule: keep the
-  * `nprobe` cells of best rounded similarity, ties to the smaller cell
-  * id. [[Coarse.Exhaustive]] has one cell and nothing to probe;
-  * [[Coarse.Lsh]] has no centroids and probes by hyperplane margins. */
+  * and which of them each query probes; [[IvfSpec]] searches with
+  * every variant. The centroid levels (labels, k-means, two-level)
+  * probe by one rule: keep the `nprobe` cells of best rounded
+  * similarity, ties to the smaller cell id. [[Coarse.Exhaustive]]
+  * has one cell and nothing to probe; [[Coarse.Lsh]] has no centroids
+  * and probes by hyperplane margins. */
 sealed trait Coarse { def nprobe: Int }
 
 object Coarse {
@@ -149,16 +149,49 @@ object Coarse {
     }
 }
 
-/** What the fine ranking scores: the exact double cosine, or the
+/** What the fine ranking scores: the exact double cosine, the
   * quantized cosine of the 72-byte int8 codes
   * ([[graft.functions.QuantizeOps]]) for corpus, centroids and
-  * queries alike. */
+  * queries alike, or the asymmetric PQ inner product. */
 sealed trait IvfCodes
 object IvfCodes {
   case object Exact extends IvfCodes
   /** `rerank = Some(n)`: keep the n best int8 candidates per query and
     * rescore them with the exact cosine. */
   final case class Int8(rerank: Option[Int] = None) extends IvfCodes
+
+  /** Product quantization (Jégou et al. 2011): `m` codebooks of `kSub`
+    * L2 centroids over dim/m-dim subspaces, `iters` Lloyd rounds
+    * seeded on the kSub smallest vec_ids (on the
+    * `vec_id % fitSampleMod == 0` sample while every row is encoded).
+    * A corpus vector is its m cids; a query keeps its raw vector and
+    * is probed by exact cosine, and a candidate scores the ADC sum of
+    * the query's m partial dots at its codes, `adc_dot`. `residual`
+    * encodes `v − c(v)` against the vector's label centroid and adds
+    * the coarse term ⟨q,c⟩; `layout` chooses which dims share a
+    * codebook. */
+  final case class Pq(m: Int, kSub: Int, iters: Int,
+      layout: PqLayout = PqLayout.Contiguous, residual: Boolean = false,
+      fitSampleMod: Long = 1L, dim: Int = 64) extends IvfCodes {
+    require(m >= 1 && dim % m == 0, s"dim=$dim must split into m=$m")
+    require(fitSampleMod >= 1L, "fitSampleMod must be >= 1")
+    def subDim: Int = dim / m
+  }
+}
+
+/** Which dimensions share a PQ codebook. The true inner product is
+  * invariant under all three, so only the quantization error moves. */
+sealed trait PqLayout
+object PqLayout {
+  /** Subspace s owns dims [s·dim/m, (s+1)·dim/m). */
+  case object Contiguous extends PqLayout
+  /** Dims ranked by exact-decimal variance (DESC, then dim) and dealt
+    * round-robin: rank r goes to subspace r % m, slot r / m. */
+  case object VarianceBalanced extends PqLayout
+  /** A dim×dim rotation applied first (row i = output dim i's
+    * coefficients), e.g. [[Pca.opqRotation]]; the same literals
+    * replay in the oracle. */
+  final case class Rotation(rot: Array[Array[Double]]) extends PqLayout
 }
 
 /** A candidate restriction applied before fine ranking (the coarse
@@ -178,12 +211,14 @@ object AnnFilter {
   * `filter`. `otherLabel` mines hard negatives: the query's own label
   * cell is never probed and same-label candidates are dropped. The
   * flat scan ([[Coarse.Exhaustive]]) and LSH buckets ([[Coarse.Lsh]])
-  * are two more coarse levels, so every cosine top-k here is a spec.
+  * are two more coarse levels, so every cosine top-k here is a spec,
+  * and PQ codes ([[IvfCodes.Pq]]) a third kind of fine ranking.
   *
   * [[Similarity.ivfSearch]] (a query-id set), the ingest gate
   * ([[Similarity.ivfBuild]] + [[Similarity.ivfProbe]], an incoming
-  * batch against a frozen index) and the DuckDB oracle
-  * ([[IvfSpec.oracleSql]]) all read this one value. */
+  * batch against a frozen index), the stored PQ index
+  * ([[Similarity.buildPqIndex]] and its append/probe) and the DuckDB
+  * oracle ([[IvfSpec.oracleSql]]) all read this one value. */
 final case class IvfSpec(coarse: Coarse,
     codes: IvfCodes = IvfCodes.Exact, filter: Option[AnnFilter] = None,
     otherLabel: Boolean = false) {
@@ -192,13 +227,26 @@ final case class IvfSpec(coarse: Coarse,
     case _ => false
   }
   require(codes == IvfCodes.Exact || labelOrFlat,
-    "int8 codes run on label cells or the exhaustive scan")
+    "int8 and PQ codes run on label cells or the exhaustive scan")
   require(!otherLabel || labelOrFlat,
     "otherLabel excludes label cells or filters the exhaustive scan")
   require(coarse match {
     case c: Coarse.Labels => !c.widenForFilter || filter.isDefined
     case _ => true
   }, "widenForFilter needs a candidate filter")
+  require(!pq.exists(_.residual) || coarse.isInstanceOf[Coarse.Labels],
+    "residual encoding needs label cells")
+
+  private[ext] def pq: Option[IvfCodes.Pq] =
+    PartialFunction.condOpt(codes) { case p: IvfCodes.Pq => p }
+
+  /** The fine score's column: PQ ranks by its ADC inner product. */
+  private[ext] def score: String = if (pq.isDefined) "adc_dot" else "cos_sim"
+
+  /** The codes the cells are probed with: a PQ query keeps its raw
+    * vector, so PQ probes by the exact cosine. */
+  private[ext] def probeCodes: IvfCodes =
+    if (pq.isDefined) IvfCodes.Exact else codes
 
   /** The corpus keeps its label: label cells and the hard-negative
     * exclusion read it. */
@@ -209,12 +257,12 @@ final case class IvfSpec(coarse: Coarse,
 
   /** The corpus is read by several jobs — the Lloyd fit, or the label
     * centroid pass ahead of quantization — so the search persists it
-    * and materializes its top-k before releasing it. The single-cell
-    * and LSH levels read it once. */
+    * and materializes its top-k before releasing it. The other
+    * single-cell and LSH searches read it once. */
   private[ext] def persistsCorpus: Boolean = coarse match {
     case _: Coarse.Kmeans => true
     case _: Coarse.Labels => codes != IvfCodes.Exact
-    case _ => false
+    case _ => pq.isDefined
   }
 
   /** The k-means fine-rank join carries no broadcast hint: an ingest
@@ -243,59 +291,78 @@ object IvfSpec {
   /** The embeddings table's dimension (the oracle unrolls per dim). */
   private val Dim = 64
 
-  /** The DuckDB oracle of `spec` over `queries`, top-`k` per query. */
-  def oracleSql(spec: IvfSpec, k: Int, queries: QuerySet): String =
+  /** The DuckDB oracle of `spec` over `queries`, top-`k` per query.
+    * `fitWhere` restricts the fits (label centroids, PQ codebooks) to
+    * the rows it passes while every row is still encoded: the stored
+    * PQ index built on a manifest and appended to without refit. */
+  def oracleSql(spec: IvfSpec, k: Int, queries: QuerySet,
+      fitWhere: Option[String] = None): String =
     queries match {
       // sampled, like the Spark entry, among the non-NULL rows
       case QuerySet.Sample(n) => searchSql(spec, k, qidsSql(n,
-        "(SELECT vec_id FROM embeddings WHERE embedding IS NOT NULL)"))
+        "(SELECT vec_id FROM embeddings WHERE embedding IS NOT NULL)"),
+        fitWhere)
       case QuerySet.EveryNth(n) => searchSql(spec, k,
         s"qids AS (SELECT vec_id FROM base WHERE vec_id % $n = 0)")
       case QuerySet.Gate(n) =>
         sql(spec, k,
           s"base AS (${vectorRowsSql(s" AND vec_id % $n <> 0")}),\n" +
-            s"newb AS (${vectorRowsSql(s" AND vec_id % $n = 0")})", None)
+            s"newb AS (${vectorRowsSql(s" AND vec_id % $n = 0")})", None,
+          None)
     }
 
   /** The oracle of [[Similarity.ivfSearch]] for the ids of the CTE
     * `qids` (one `vec_id` column; it may read the corpus CTE `base` or
     * the CTEs of an enclosing query): (query_id, neighbor_id,
-    * [neg_label,] cos_sim, rank), ordered. */
-  def searchSql(spec: IvfSpec, k: Int, qids: String): String =
-    sql(spec, k, s"base AS (${vectorRowsSql()})", Some(qids))
+    * [neg_label,] cos_sim | adc_dot, rank), ordered. */
+  def searchSql(spec: IvfSpec, k: Int, qids: String,
+      fitWhere: Option[String] = None): String =
+    sql(spec, k, spec.pq.fold(s"base AS (${vectorRowsSql()})")(layoutSql),
+      Some(qids), fitWhere)
 
   /** The search over the corpus CTE(s) `corpus`: queried by `qids`, or
     * without it the gate's `newb` batch. */
   private def sql(spec: IvfSpec, k: Int, corpus: String,
-      qids: Option[String]): String = {
+      qids: Option[String], fitWhere: Option[String]): String = {
     import spec._
-    val int8 = codes != IvfCodes.Exact
+    val int8 = codes.isInstanceOf[IvfCodes.Int8]
+    val dim = pq.fold(Dim)(_.dim)
     val (qid, nid) =
       if (qids.isEmpty) ("new_id", "match_id")
       else ("query_id", "neighbor_id")
-    // the codes: corpus (…, emb) or (…, qv, qn), queries q_-prefixed
+    // the codes: corpus (…, emb) or (…, qv, qn), queries q_-prefixed;
+    // PQ queries keep q_emb and add their ADC table q_lut
     val quantized = if (int8) Seq(quantizeSql(" label,")) else Nil
     val coded = if (int8) "qn" else "base"
+    val members0 = if (pq.isDefined) "pqm" else coded
     val vec = if (int8) Seq("qv", "qn") else Seq("emb")
     def sim(a: String, b: String): String =
       if (int8) s"round(list_dot_product($a.q_qv, $b.qv) / " +
         s"($a.q_qn * $b.qn), 6)"
       else sqlCosine(s"$a.q_emb", s"$b.emb")
     val qLabel = if (otherLabel) Seq("q_label") else Nil
-    val qCols = vec.map(v => s"q_$v") ++ qLabel
+    val qCols = vec.map(v => s"q_$v") ++ pq.map(_ => "q_lut") ++ qLabel
     val queries = qids.fold(
       "q AS (SELECT vec_id AS new_id, emb AS q_emb FROM newb)")(ids =>
       s"""$ids,
          |q AS (SELECT b.vec_id AS query_id,
          |    ${(vec.map(v => s"b.$v AS q_$v") ++
+                 pq.map(p => s"${lutSql(p, "b.emb")} AS q_lut") ++
                  qLabel.map(_ => "b.label AS q_label")).mkString(", ")}
-         |  FROM $coded b JOIN qids s ON b.vec_id = s.vec_id)"""
+         |  FROM $coded b JOIN qids s ON b.vec_id = s.vec_id${
+              pq.fold("")(_ => " CROSS JOIN pqbook k")})"""
         .stripMargin)
     def probeCols(cell: String*) = (qid +: qCols).map(c => s"q.$c") ++
       cell.map(c => s"c.$c")
+    val centCtes = coarse match {
+      case _: Coarse.Labels | _: Coarse.TwoLevel => Seq(Coarse.centroidsSql(
+        fitWhere.fold("base")(w => s"(SELECT label, emb FROM base WHERE $w)"),
+        dim))
+      case _ => Nil
+    }
     // cell centroids renamed to the corpus' code columns
     val (coarseCtes, members, join) = coarse match {
-      case Coarse.Exhaustive => (Nil, coded, "CROSS JOIN q p")
+      case Coarse.Exhaustive => (Nil, members0, "CROSS JOIN q p")
       case c: Coarse.Lsh =>
         val own = s"SELECT $qid, q_emb, q_bucket AS bucket FROM qb"
         val probes =
@@ -326,11 +393,13 @@ object IvfSpec {
             "FROM cent)", key = "label", prefix = "c")
         val pairs = s"q CROSS JOIN ${if (int8) "cqn" else "cents"} c" +
           (if (otherLabel) " WHERE c.label <> q.q_label" else "")
-        (Seq(Coarse.centroidsSql("base", Dim), cents,
-          Coarse.probedSql("probed", pairs, probeCols("label"),
-            sim("q", "c"), Seq(qid), "label",
+        // a residual spec's coarse ADC term, free at probe time
+        val qc = if (pq.exists(_.residual))
+          Seq("list_dot_product(q.q_emb, c.emb) AS qc_dot") else Nil
+        (Seq(cents, Coarse.probedSql("probed", pairs,
+            probeCols("label") ++ qc, sim("q", "c"), Seq(qid), "label",
             Coarse.nprobeSql(c, filter, "base"))),
-          coded, "JOIN probed p ON m.label = p.label")
+          members0, "JOIN probed p ON m.label = p.label")
       case c: Coarse.Kmeans =>
         val fit =
           if (c.fitSampleMod == 1L) "base"
@@ -342,8 +411,7 @@ object IvfSpec {
             c.nprobe.toString)),
           "members", "JOIN probed p ON m.cid = p.cid")
       case c: Coarse.TwoLevel =>
-        (Seq(Coarse.centroidsSql("base", Dim),
-          "cents AS (SELECT label, centroid AS emb FROM cent)",
+        (Seq("cents AS (SELECT label, centroid AS emb FROM cent)",
           kmUnrolledSql("base", "base", c.k2.toString, c.iters,
             Some("label"), dim = Dim),
           Coarse.probedSql("probed", "q CROSS JOIN cents c",
@@ -363,11 +431,11 @@ object IvfSpec {
     val notSame = if (otherLabel) " AND m.label <> p.q_label" else ""
     val ranked =
       s"""scored AS (SELECT p.$qid, m.vec_id AS $nid, $negLabel
-         |    ${sim("p", "m")} AS cos_sim
+         |    ${pq.fold(sim("p", "m"))(adcSql)} AS $score
          |  FROM $cand m $join
          |  WHERE m.vec_id <> p.$qid$notSame),
          |ranked AS (SELECT *, CAST(row_number() OVER (PARTITION BY $qid
-         |    ORDER BY cos_sim DESC, $nid ASC) AS INT) AS rank
+         |    ORDER BY $score DESC, $nid ASC) AS INT) AS rank
          |  FROM scored)""".stripMargin
     val out = if (otherLabel) s"$qid, $nid, neg_label" else s"$qid, $nid"
     val tail = codes match {
@@ -387,10 +455,103 @@ object IvfSpec {
            |WHERE rank <= $k ORDER BY query_id, rank""".stripMargin
       case _ =>
         s"""
-           |SELECT $out, cos_sim, rank FROM ranked
+           |SELECT $out, $score, rank FROM ranked
            |WHERE rank <= $k ORDER BY $qid, rank""".stripMargin
     }
-    ((corpus +: quantized :+ queries) ++ coarseCtes :+ ranked)
-      .mkString("WITH ", ",\n", tail)
+    ((corpus +: quantized) ++ centCtes ++
+      pq.toSeq.flatMap(codesSql(_, fitWhere)) ++ (queries +: coarseCtes) :+
+      ranked).mkString("WITH ", ",\n", tail)
   }
+
+  /** The PQ corpus CTE `base`: the guarded rows (`rawb`) in the
+    * subspace layout of `p`. */
+  private def layoutSql(p: IvfCodes.Pq): String = {
+    import p._
+    val allDims = s"range(1, ${dim + 1})"
+    val rawb = s"rawb AS (${vectorRowsSql()}),\n"
+    p.layout match {
+      case PqLayout.Contiguous => s"base AS (${vectorRowsSql()})"
+      case PqLayout.VarianceBalanced =>
+        rawb + s"""vstat AS (SELECT i,
+           |    ${sqlSumDec("emb[i]")} AS s1,
+           |    ${sqlSumDec("emb[i] * emb[i]")} AS s2,
+           |    count(*) AS n
+           |  FROM rawb CROSS JOIN $allDims t(i) GROUP BY i),
+           |vr AS (SELECT i, round((s2 - s1 * s1 / n) / n, 6) AS variance
+           |  FROM vstat),
+           |rk AS (SELECT i AS olddim, CAST(row_number() OVER (
+           |      ORDER BY variance DESC, i) - 1 AS INT) AS r FROM vr),
+           |dm AS (SELECT (r % $m) * $subDim + (r // $m) AS newpos, olddim
+           |  FROM rk),
+           |pm AS (SELECT list(olddim ORDER BY newpos) AS pm FROM dm),
+           |base AS (SELECT vec_id, label,
+           |    list_transform($allDims, p -> emb[pm[p]]) AS emb
+           |  FROM rawb CROSS JOIN pm)""".stripMargin
+      case PqLayout.Rotation(rot) =>
+        val rows = rot.map(_.zipWithIndex
+          .map { case (r, j) => s"($r) * emb[${j + 1}]" }.mkString(" + "))
+          .mkString(",\n      ")
+        // MATERIALIZED: a dim²-term expression per row that the body
+        // references ~20 times; DuckDB would re-evaluate an inlined
+        // CTE at every reference (minutes instead of seconds at
+        // sf0.01)
+        rawb + s"""base AS MATERIALIZED (SELECT vec_id, label, list_value(
+           |      $rows) AS emb
+           |  FROM rawb)""".stripMargin
+    }
+  }
+
+  /** The PQ code level of `p` over `base`: residuals `rbase` against
+    * the label centroids `cent`; every row's m subspace slices `pqs`;
+    * the m codebooks as one k-means keyed by `sub` under L2 (the Spark
+    * fit's seeds, L2 expression tree and decimal-mean updates, fitted
+    * on the rows `fitWhere` and the sample pass), each slice's code
+    * `pqa`; then each vector's code list (`codes`), the coded corpus
+    * (`pqm`) and the codebooks as one cid-slotted list per subspace
+    * (`pqbook`). */
+  private def codesSql(p: IvfCodes.Pq, fitWhere: Option[String])
+      : Seq[String] = {
+    import p._
+    val residualCte =
+      if (!residual) Nil
+      else Seq(s"""rbase AS (SELECT b.vec_id,
+              |    list_transform(range(1, ${dim + 1}),
+              |      i -> b.emb[i] - c.centroid[i]) AS emb
+              |  FROM base b JOIN cent c ON b.label = c.label)""".stripMargin)
+    val fitConds = fitWhere.toSeq ++
+      (if (fitSampleMod > 1L) Seq(s"vec_id % $fitSampleMod = 0") else Nil)
+    val encSrc = if (residual) "rbase" else "base"
+    val fit = if (fitConds.isEmpty) "pqs"
+      else fitConds.mkString("(SELECT * FROM pqs WHERE ", " AND ", ")")
+    residualCte ++ Seq(
+      s"""pqs AS (SELECT vec_id, CAST(t.sub AS INT) AS sub,
+         |    emb[t.sub * $subDim + 1:(t.sub + 1) * $subDim] AS emb
+         |  FROM $encSrc CROSS JOIN range($m) t(sub))""".stripMargin,
+      kmUnrolledSql(fit, "pqs", kSub.toString, iters, Some("sub"), "pqa",
+        subDim, l2 = true),
+      """codes AS (SELECT vec_id, list(scid ORDER BY sub) AS codes
+        |  FROM pqa GROUP BY vec_id)""".stripMargin,
+      """pqm AS (SELECT b.vec_id, b.label, c.codes
+        |  FROM base b JOIN codes c ON b.vec_id = c.vec_id)""".stripMargin,
+      s"""pqbook AS (SELECT list(cs ORDER BY sub) AS cents FROM (
+         |  SELECT t.sub, list(b.centroid ORDER BY u.cid) AS cs
+         |  FROM range($m) t(sub) CROSS JOIN range($kSub) u(cid)
+         |  LEFT JOIN sc$iters b ON b.sub = t.sub AND b.scid = u.cid
+         |  GROUP BY t.sub))""".stripMargin)
+  }
+
+  /** Query vector `v`'s ADC table over `pqbook k`: per subspace the raw
+    * partial dot with every cid slot (NULL where the fit dropped the
+    * cid; no code points there). */
+  private def lutSql(p: IvfCodes.Pq, v: String): String =
+    "list_transform(k.cents, (cs, s) -> list_transform(cs, c -> " +
+      s"list_dot_product($v[(s - 1) * ${p.subDim} + 1:s * ${p.subDim}], c)))"
+
+  /** The ADC score of candidate `m` for probe row `p`: its m table
+    * entries cast to DECIMAL(18,6) and summed exactly (the per-pair
+    * form of `sqlSumDec`), plus a residual spec's coarse term. */
+  private def adcSql(p: IvfCodes.Pq): String =
+    s"round(${if (p.residual) "p.qc_dot + " else ""}CAST(list_sum(" +
+      s"list_transform(range(${p.m}), s -> CAST(" +
+      "p.q_lut[s + 1][m.codes[s + 1] + 1] AS DECIMAL(18,6)))) AS DOUBLE), 6)"
 }

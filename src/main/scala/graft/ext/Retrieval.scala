@@ -345,13 +345,18 @@ object Retrieval {
       materialize: Boolean): DataFrame = {
     val post = docs.select(col("doc_id"),
         posexplode(TextStats.tokens(col("text"))).as(Seq("pos", "term")))
-    val terms = phrases.select(col("w1").as("term"))
-      .unionByName(phrases.select(col("w2").as("term"))).distinct()
+    // the ≤ 2·|phrases| query terms collect driver-side (the
+    // phrase-frame contract, job-free from a LocalRelation) and filter
+    // the postings as literals, as phraseIndexProbe does: a join with
+    // the distinct of a few-row frame fans out over
+    // defaultParallelism tasks
+    val terms = phrases.select(col("w1"), col("w2")).collect()
+      .flatMap(r => Seq(r.getString(0), r.getString(1))).distinct.toSeq
     // BOTH adjacency legs read the filtered postings; without
     // materialization each leg re-runs the corpus-sized token explode
     // (measured: the doubled pass dominated the 1000x probe at 5M
     // docs). The frame is query-term-df-sized — cheap to cache.
-    val qpostLazy = post.join(broadcast(terms), Seq("term"))
+    val qpostLazy = post.filter(col("term").isin(terms: _*))
     val qpost =
       if (materialize) qpostLazy.persist(StorageLevel.MEMORY_AND_DISK)
       else qpostLazy

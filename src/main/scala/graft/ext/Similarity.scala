@@ -8,11 +8,11 @@ import org.apache.spark.sql.types._
 /** Approximate-nearest-neighbor search over an embedding column
   * (`array<float>`).
   *
-  * Every cosine top-k is one [[IvfSpec]] run by [[ivfSearch]]: the
-  * exhaustive scan broadcasts the (small) query set against the
+  * Every cosine or PQ top-k is one [[IvfSpec]] run by [[ivfSearch]]:
+  * the exhaustive scan broadcasts the (small) query set against the
   * corpus at O(|Q|·|C|) work; LSH buckets, label, k-means and
-  * two-level cells prune the candidates. PQ ([[pqSearch]]) and
-  * SemDeDup ([[semDedup]]) have their own specs; MIPS
+  * two-level cells prune the candidates. SemDeDup ([[semDedup]]) has
+  * its own spec; MIPS
   * ([[mipsTopK]]) scores inner products over a norm-augmented corpus.
   */
 object Similarity {
@@ -54,9 +54,9 @@ object Similarity {
     * rounded before ranking so the ordering is reproducible
     * cross-engine. */
   private def rankTopK(scored: DataFrame, k: Int, qid: String = "query_id",
-      nid: String = "neighbor_id"): DataFrame = {
+      nid: String = "neighbor_id", score: String = "cos_sim"): DataFrame = {
     val w = Window.partitionBy(col(qid))
-      .orderBy(desc("cos_sim"), asc(nid))
+      .orderBy(desc(score), asc(nid))
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
   }
@@ -422,17 +422,18 @@ object Similarity {
     * projection. Every round is truncated through [[Ckpt]] (the
     * broadcast-LUT sub-assign never collects, so the plan would
     * otherwise chain geometrically). The two-level IVF grid keys it on
-    * `label`, the hierarchical SemDeDup on `cid`; both fit on the
-    * driver within the gate ([[DriverLloyd.perKey]]). */
+    * `label`, the hierarchical SemDeDup on `cid` — both fit on the
+    * driver within the gate ([[DriverLloyd.perKey]]) — and the PQ
+    * codebooks on `sub` under [[L2]]. */
   private def subCellFit(base: DataFrame, key: String, k: Int,
-      iters: Int): DataFrame = {
+      iters: Int, metric: Metric = Cosine): DataFrame = {
     val w = Window.partitionBy(col(key)).orderBy(col("vec_id"))
     val seed = base.withColumn("rn", row_number().over(w))
       .filter(col("rn") <= k)
       .select(col(key), (col("rn") - 1).cast("int").as("scid"),
         col("emb").as("centroid"))
     lloyd(seed, iters, Seq(key, "scid"), "emb")(
-      assignSubClusters(base, _, key))((c, _) => Ckpt(c))
+      assignSubClusters(base, _, key, metric))((c, _) => Ckpt(c))
   }
 
   /** Rows of `schema` as a LocalRelation: collects of it are job-free. */
@@ -531,16 +532,87 @@ object Similarity {
       for ((key, c) <- cells; j <- c.ids.indices)
         yield Row.fromSeq(key ++ Seq(c.ids(j), c.vecs(j).toSeq)))
 
-  /** The assignment metric of a Lloyd fit: its two Spark projection
-    * forms (plan-literal LUT, broadcast row) — [[DriverLloyd.nearest]]
-    * is the driver's. */
-  private sealed abstract class Metric(
-      val lut: (DataFrame, Seq[(Int, Seq[Double])]) => DataFrame,
-      val bcast: (DataFrame, DataFrame) => DataFrame)
-  private case object Cosine
-      extends Metric(assignClustersLut, assignClustersBcast)
-  private case object L2
-      extends Metric(assignClustersL2Lut, assignClustersL2Bcast)
+  /** The assignment metric of a Lloyd fit: the candidate struct each
+    * centroid scores as and the pick among them, ONE definition under
+    * both Spark projection forms (plan-literal LUT, broadcast row) and
+    * the PQ encode, so no two physical shapes can drift —
+    * [[DriverLloyd.nearest]] is the driver's mirror. */
+  private sealed abstract class Metric {
+    /** `emb`'s candidate struct against centroid `c` of id `i`, the id
+      * field named `id`. */
+    def cand(emb: Column, id: String)(c: Column, i: Column): Column
+    /** The best of an array of candidates. */
+    def pick(cands: Column): Column
+
+    /** The `id` of `emb`'s nearest centroid among the parallel arrays
+      * `cents`/`ids`. */
+    def nearest(cents: Column, ids: Column, emb: Column,
+        id: String = "cid"): Column =
+      pick(zip_with(cents, ids, cand(emb, id))).getField(id)
+
+    /** Plan-literal projection form of [[assign]] — centroids already
+      * collected and sorted by cid. */
+    def lut(base: DataFrame, sorted: Seq[(Int, Seq[Double])]): DataFrame =
+      base.select(col("vec_id"), col("emb"), nearest(typedLit(sorted.map(_._2)),
+        typedLit(sorted.map(_._1)), col("emb")).as("cid"))
+
+    /** Broadcast one-row LUT form of [[assign]] — the k ∝ N shape. The
+      * codebook aggregates to a SINGLE row of two arrays (sorted by
+      * cid, so candidate order matches the literal form), broadcast and
+      * cross-joined: every base row runs the IDENTICAL projection as
+      * the literal form — no N·k row expansion, no N-group argmin
+      * aggregate (the shape that spilled at the 1000× tier, r12
+      * pqAssign finding), no k·dim plan literal. The only moving data
+      * is one k·dim-double broadcast row. */
+    def bcast(base: DataFrame, centroids: DataFrame): DataFrame = {
+      val lutRow = broadcast(centroids
+        .agg(array_sort(collect_list(struct(col("cid"), col("centroid"))))
+          .as("_lut"))
+        .select(transform(col("_lut"), e => e("centroid")).as("_cent_lut"),
+          transform(col("_lut"), e => e("cid")).as("_cid_lut")))
+      base.crossJoin(lutRow)
+        .select(col("vec_id"), col("emb"), nearest(col("_cent_lut"),
+          col("_cid_lut"), col("emb")).as("cid"))
+    }
+
+    /** Nearest-centroid assignment, ties to the smallest cid —
+      * deterministic and SQL-mirrorable. Physical shape (the r12
+      * pqAssign finding, measured at the 1000× tier): ALWAYS a per-row
+      * projection over the candidate array — never the broadcast-join +
+      * N-group argmin aggregate, which SPILLS once N·k outgrows executor
+      * memory. Up to [[AssignLutMaxCentroids]] centroids the codebook
+      * embeds as plan literals ([[lut]], whole-stage codegen); above
+      * the gate it arrives as one broadcast row ([[bcast]]). Both rank
+      * the same collected doubles in the same cid order —
+      * bit-identical, AssignFormSpec pins frame equality — so the
+      * DuckDB oracles verify either shape unchanged. */
+    def assign(base: DataFrame, centroids: DataFrame): DataFrame = {
+      val local = centroids.select(col("cid"), col("centroid"))
+        .limit(AssignLutMaxCentroids + 1).collect()
+      if (local.length > AssignLutMaxCentroids) bcast(base, centroids)
+      else lut(base, local
+        .map(r => (r.getInt(0), r.getSeq[Double](1).toSeq))
+        .sortBy(_._1).toSeq)
+    }
+  }
+
+  /** Rounded cosine: `array_max` over (a_sim, −cid, cid) orders by
+    * similarity then smallest cid — `row_number() OVER (ORDER BY a_sim
+    * DESC, cid ASC) = 1`. */
+  private case object Cosine extends Metric {
+    def cand(emb: Column, id: String)(c: Column, i: Column): Column =
+      struct(round(cosine(emb, c), 6).as("a_sim"),
+        (-i).as(s"neg_$id"), i.as(id))
+    def pick(cands: Column): Column = array_max(cands)
+  }
+
+  /** Rounded squared L2 ([[l2sq]]): `array_min` over (a_d2, cid) orders
+    * by distance then smallest cid. */
+  private case object L2 extends Metric {
+    def cand(emb: Column, id: String)(c: Column, i: Column): Column =
+      struct(l2sq(emb, c).as("a_d2"), i.as(id))
+    def pick(cands: Column): Column = array_min(cands)
+  }
 
   /** Lloyd on the driver, mirroring the distributed forms' arithmetic
     * bit for bit by reusing Spark's own: the [[graft.functions.DotProduct]]
@@ -676,76 +748,25 @@ object Similarity {
     * form. */
   private val AssignLutMaxCentroids = 1024
 
-  /** The (a_sim, −cid, cid) candidate struct both cosine-assignment
-    * forms rank with — ONE definition so the two physical shapes can
-    * never drift. `array_max` over it orders by similarity then
-    * smallest cid: identical semantics to `row_number() OVER (ORDER
-    * BY a_sim DESC, cid ASC) = 1`. */
-  private def cosCand(emb: Column)(c: Column, id: Column): Column =
-    struct(round(cosine(emb, c), 6).as("a_sim"),
-      (-id).as("neg_cid"), id.as("cid"))
+  /** Nearest-centroid assignment by rounded cosine, ties to the
+    * smallest cid ([[Metric.assign]]). */
+  def assignClusters(base: DataFrame, centroids: DataFrame): DataFrame =
+    Cosine.assign(base, centroids)
 
-  /** Plan-literal projection form of [[assignClusters]] — centroids
-    * already collected and sorted by cid. */
+  /** Nearest-centroid assignment by rounded squared L2, ties to the
+    * smallest cid ([[Metric.assign]]). */
+  def assignClustersL2(base: DataFrame, centroids: DataFrame): DataFrame =
+    L2.assign(base, centroids)
+
+  // the two physical forms of each metric, as AssignFormSpec pins them
   private[graft] def assignClustersLut(base: DataFrame,
-      sorted: Seq[(Int, Seq[Double])]): DataFrame = {
-    val centLut: Column = typedLit(sorted.map(_._2))
-    val cidLut: Column = typedLit(sorted.map(_._1))
-    base.select(col("vec_id"), col("emb"),
-      array_max(zip_with(centLut, cidLut, cosCand(col("emb"))))
-        .getField("cid").as("cid"))
-  }
-
-  /** Broadcast one-row LUT form of [[assignClusters]] — the k ∝ N
-    * shape. The codebook aggregates to a SINGLE row of two arrays
-    * (sorted by cid, so candidate order matches the literal form),
-    * broadcast and cross-joined: every base row sees the same arrays
-    * and runs the IDENTICAL `array_max(zip_with(…))` projection as
-    * the literal form — no N·k row expansion, no N-group argmax
-    * aggregate (the shape that spilled at the 1000× tier, r12
-    * pqAssign finding), no k·dim plan literal. The only moving data
-    * is one k·dim-double broadcast row. */
+      sorted: Seq[(Int, Seq[Double])]): DataFrame = Cosine.lut(base, sorted)
   private[graft] def assignClustersBcast(base: DataFrame,
-      centroids: DataFrame): DataFrame = {
-    val lutRow = broadcast(centroids
-      .agg(array_sort(collect_list(struct(col("cid"), col("centroid"))))
-        .as("_lut"))
-      .select(transform(col("_lut"), e => e("centroid")).as("_cent_lut"),
-        transform(col("_lut"), e => e("cid")).as("_cid_lut")))
-    base.crossJoin(lutRow)
-      .select(col("vec_id"), col("emb"),
-        array_max(zip_with(col("_cent_lut"), col("_cid_lut"),
-          cosCand(col("emb")))).getField("cid").as("cid"))
-  }
-
-  /** Nearest-centroid assignment by rounded cosine, ties broken by
-    * cluster id — deterministic and SQL-mirrorable: equal
-    * similarities resolve to the smallest cid, identical semantics to
-    * `row_number() OVER (ORDER BY a_sim DESC, cid ASC) = 1`.
-    *
-    * Physical shape (the r12 pqAssign finding, measured at the 1000×
-    * tier): ALWAYS a per-row projection over the candidate array —
-    * never the broadcast-join + N-group argmax aggregate, which is
-    * what SPILLS once N·k outgrows executor memory (it cost the PQ
-    * build ~1.7× at 2M vectors). For bounded k
-    * (≤ [[AssignLutMaxCentroids]]) the codebook embeds as plan
-    * literals ([[assignClustersLut]], whole-stage codegen); above the
-    * gate it arrives as one broadcast row ([[assignClustersBcast]]),
-    * keeping tasks and plans small at k ∝ N. Both forms rank with the
-    * SHARED [[cosCand]] struct on the same collected doubles in the
-    * same cid order — bit-identical, AssignFormSpec pins frame
-    * equality — so the DuckDB oracles verify either physical shape
-    * unchanged. */
-  def assignClusters(base: DataFrame, centroids: DataFrame): DataFrame = {
-    val local = centroids.select(col("cid"), col("centroid"))
-      .limit(AssignLutMaxCentroids + 1).collect()
-    if (local.length > AssignLutMaxCentroids)
-      assignClustersBcast(base, centroids)
-    else
-      assignClustersLut(base, local
-        .map(r => (r.getInt(0), r.getSeq[Double](1).toSeq))
-        .sortBy(_._1).toSeq)
-  }
+      centroids: DataFrame): DataFrame = Cosine.bcast(base, centroids)
+  private[graft] def assignClustersL2Lut(base: DataFrame,
+      sorted: Seq[(Int, Seq[Double])]): DataFrame = L2.lut(base, sorted)
+  private[graft] def assignClustersL2Bcast(base: DataFrame,
+      centroids: DataFrame): DataFrame = L2.bcast(base, centroids)
 
   /** Rounded squared-L2 distance between two double arrays, in the
     * algebraic form `⟨a,a⟩ − 2⟨a,b⟩ + ⟨b,b⟩` — three [[cosine]]-style
@@ -757,53 +778,6 @@ object Similarity {
     * fit uses it rather than cosine. */
   private def l2sq(a: Column, b: Column): Column =
     round(dot(a, a) - lit(2) * dot(a, b) + dot(b, b), 6)
-
-  /** Nearest-centroid assignment under rounded squared-L2 — the
-    * [[assignClusters]] sibling for L2 fits, with the same
-    * literal-vs-broadcast-row projection gate and the same bit parity
-    * argument: ties resolve by distance then smallest cid, identical
-    * semantics to `row_number() OVER (ORDER BY d2 ASC, cid ASC) = 1`
-    * in the oracle, in either physical form. */
-  def assignClustersL2(base: DataFrame, centroids: DataFrame): DataFrame = {
-    val local = centroids.select(col("cid"), col("centroid"))
-      .limit(AssignLutMaxCentroids + 1).collect()
-    if (local.length > AssignLutMaxCentroids)
-      assignClustersL2Bcast(base, centroids)
-    else
-      assignClustersL2Lut(base, local
-        .map(r => (r.getInt(0), r.getSeq[Double](1).toSeq))
-        .sortBy(_._1).toSeq)
-  }
-
-  /** The (a_d2, cid) candidate struct both L2-assignment forms rank
-    * with — `array_min` over it = distance-then-smallest-cid. */
-  private def l2Cand(emb: Column)(c: Column, id: Column): Column =
-    struct(l2sq(emb, c).as("a_d2"), id.as("cid"))
-
-  /** Plan-literal projection form of [[assignClustersL2]]. */
-  private[graft] def assignClustersL2Lut(base: DataFrame,
-      sorted: Seq[(Int, Seq[Double])]): DataFrame = {
-    val centLut: Column = typedLit(sorted.map(_._2))
-    val cidLut: Column = typedLit(sorted.map(_._1))
-    base.select(col("vec_id"), col("emb"),
-      array_min(zip_with(centLut, cidLut, l2Cand(col("emb"))))
-        .getField("cid").as("cid"))
-  }
-
-  /** Broadcast one-row LUT form of [[assignClustersL2]] — see
-    * [[assignClustersBcast]] for the shape argument. */
-  private[graft] def assignClustersL2Bcast(base: DataFrame,
-      centroids: DataFrame): DataFrame = {
-    val lutRow = broadcast(centroids
-      .agg(array_sort(collect_list(struct(col("cid"), col("centroid"))))
-        .as("_lut"))
-      .select(transform(col("_lut"), e => e("centroid")).as("_cent_lut"),
-        transform(col("_lut"), e => e("cid")).as("_cid_lut")))
-    base.crossJoin(lutRow)
-      .select(col("vec_id"), col("emb"),
-        array_min(zip_with(col("_cent_lut"), col("_cid_lut"),
-          l2Cand(col("emb")))).getField("cid").as("cid"))
-  }
 
   /** [[kmeansCentroids]] under squared-L2 assignment (the textbook
     * k-means objective and the metric PQ codebooks are trained with):
@@ -917,65 +891,93 @@ object Similarity {
     }
   }
 
-  /** (vec_id, sub, semb): the corpus exploded into its m PQ
-    * subspaces — one narrow pass, the posexplode index IS the
-    * subspace id. All PQ fit/encode work runs on this one frame so
-    * every Lloyd iteration is ONE broadcast join + two aggregates
-    * regardless of m (the per-subspace formulation cost m separate
-    * job chains — 16× the scheduling and corpus passes at the
-    * catalog parameterization; measured 38.5s → see pqSearch). */
-  private def pqSubExplode(base: DataFrame, m: Int, subDim: Int)
-      : DataFrame =
-    base.select(col("vec_id"), posexplode(
-        array((0 until m).map(si =>
-          slice(col("emb"), si * subDim + 1, subDim)): _*))
-      .as(Seq("sub", "semb")))
+  /** Fitted PQ codebooks, collected once (m·kSub rows, the fit
+    * contract; job-free from a driver fit or the stored meta): `frame`
+    * as fitted, and per subspace its (cid, centroid) rows in cid
+    * order. */
+  private final class PqBook(pq: IvfCodes.Pq, val frame: DataFrame) {
+    private val bySub: Seq[Seq[(Int, Seq[Double])]] = {
+      val rows = frame.select(col("sub"), col("cid"), col("centroid"))
+        .collect().map(r => (r.getInt(0), r.getInt(1),
+          r.getSeq[Double](2).toSeq))
+      (0 until pq.m).map(s => rows.filter(_._1 == s)
+        .map(r => (r._2, r._3)).sortBy(_._1).toSeq)
+    }
 
-  /** Batched nearest-centroid assignment for all m subspaces at once,
-    * as a PURE PROJECTION: the codebook frame is m·kSub rows (≤512 at
-    * the catalog parameterization — the k-center-argmax bound), so it
-    * collects to the driver and embeds as two plan-literal lookup
-    * arrays indexed by `sub`; each subspace row computes its argmin
-    * over the ≤kSub (distance, cid) candidates with `zip_with` +
-    * `array_min` — whole-stage-codegen, NO join explosion and NO
-    * corpus-sized aggregate.
-    *
-    * This shape replaced the r11 broadcast-join + struct-min
-    * aggregate after the 1000× diagnosis: at 2M vectors the join
-    * expanded 32M subspace rows × kSub=32 into a ~1B-row argmin hash
-    * aggregate over 32M groups — in-memory at 100×, SPILLING at
-    * 1000× (the measured ~2.4× super-linear build constant that the
-    * storage-level matrix could not move). As a projection the
-    * encode is embarrassingly parallel and scan-bound at any scale.
-    *
-    * Semantics are EXACTLY the aggregate form's, bit for bit: the
-    * collected centroid doubles re-embed unchanged, [[l2sq]] is the
-    * same expression tree, and `array_min` over struct(a_d2, cid)
-    * orders lexicographically — the identical distance-then-cid tie
-    * break as `min(struct(a_d2, cid))` — so the unrolled per-subspace
-    * DuckDB oracle verifies this physical shape unchanged. Missing
-    * (sub, cid) slots (an empty Lloyd cluster drops out of the mean
-    * update) simply shorten that sub's candidate array, exactly as
-    * they were absent from the broadcast join. */
-  private def pqAssign(subBase: DataFrame, cents: DataFrame): DataFrame = {
-    // bounded collect: m·kSub codebook rows (the fit contract)
-    val rows = cents.select(col("sub"), col("cid"), col("centroid"))
-      .collect()
-      .map(r => (r.getInt(0), r.getInt(1),
-        r.getSeq[Double](2).toIndexedSeq))
-    val m = rows.map(_._1).max + 1
-    val bySub: Seq[Seq[(Int, Int, IndexedSeq[Double])]] =
-      (0 until m).map(s => rows.filter(_._1 == s).sortBy(_._2).toSeq)
-    val centLut: Column =
-      typedLit(bySub.map(_.map(_._3.toSeq)))
-    val cidLut: Column = typedLit(bySub.map(_.map(_._2)))
-    val cands = zip_with(
-      element_at(centLut, col("sub") + 1),
-      element_at(cidLut, col("sub") + 1),
-      (c, id) => struct(l2sq(col("semb"), c).as("a_d2"),
-        id.as("cid")))
-    subBase.select(col("vec_id"), col("sub"), col("semb"),
-      array_min(cands).getField("cid").as("cid"))
+    /** The m codes of the vector `emb`: per subspace its nearest cid
+      * under rounded [[L2]], ties to the smaller cid. */
+    def encode(emb: Column): Column = array((0 until pq.m).map { s =>
+      L2.nearest(typedLit(bySub(s).map(_._2)), typedLit(bySub(s).map(_._1)),
+        slice(emb, s * pq.subDim + 1, pq.subDim))
+    }: _*)
+
+    /** The ADC table of the query vector `q`: per subspace its raw
+      * partial dot ⟨q_s, c⟩ at every cid slot (a cid the fit dropped
+      * has an empty centroid: a NULL entry no code points at). Raw, not
+      * rounded: the decimal cast in the ADC sum ([[codeSim]]) is the
+      * one quantization point — a per-term round would add m half-way
+      * decisions per pair, the one operation Spark (exact-expansion
+      * HALF_UP) and DuckDB (scaled multiply) can round apart. */
+    def lut(q: Column): Column = {
+      val slots = bySub.map { cs =>
+        val byCid = cs.toMap
+        (0 until pq.kSub).map(byCid.getOrElse(_, Seq.empty[Double]))
+      }
+      transform(typedLit(slots), (cs, s) => transform(cs, c =>
+        dot(slice(q, s * pq.subDim + 1, lit(pq.subDim)), c)))
+    }
+  }
+
+  /** The PQ code level of `spec` over its laid-out corpus `base`: the
+    * label centroids, collected (the probe and the residual read them
+    * as plan literals — a broadcast even of a LocalRelation costs a
+    * job); the m codebooks fitted on the `fitSampleMod` sample of the
+    * rows, as residuals `v − c(v)` for a residual spec; and every row
+    * keyed by its cell with its codes. Within the driver gate the one
+    * collect of `base` serves the label means, the residuals and all m
+    * subspace fits ([[DriverLloyd]]); otherwise the label means
+    * aggregate and the codebooks fit in one batched distributed Lloyd
+    * loop ([[pqFitCodebooks]]). */
+  private def pqCells(spec: IvfSpec, pq: IvfCodes.Pq, base: DataFrame)
+      : Cells = {
+    val labels = PartialFunction.condOpt(spec.coarse) {
+      case c: Coarse.Labels => c
+    }
+    val rows = collectFit(base, pq.dim, labels.map(_ => "label"))
+    val cent = labels.map(_ => rows.flatMap(r =>
+        DriverLloyd.mirrored(labelCentroidsLocal(base, r)))
+      .getOrElse {
+        val c = labelCentroids(base)
+        localFrame(base.sparkSession, c.schema, c.collect().toSeq)
+      })
+    // residuals: raw doubles, a−b is IEEE-exact so Spark and DuckDB
+    // agree
+    val src = cent.filter(_ => pq.residual).fold(base) { c =>
+      val byLabel = c.collect()
+      val centOf = element_at(map_from_arrays(
+          array(byLabel.map(r => lit(r.get(0))).toSeq: _*),
+          typedLit(byLabel.map(_.getSeq[Double](1).toSeq).toSeq)),
+        col("label"))
+      base.select(col("vec_id"), col("label"),
+        zip_with(col("emb"), centOf, (a, b) => a - b).as("emb"))
+    }
+    // the driver fit's corpus: the collected rows — as residuals to
+    // their label means, the rows `cent` holds — on the fit sample
+    val fitRows = rows.flatMap(r => DriverLloyd.mirrored {
+      val res = if (!pq.residual) r else {
+        val means = DriverLloyd.keyMeans(r).toMap
+        r.withVecs(i => r.vecs(i).zip(means(r.keys(i))).map {
+          case (a, b) => a - b
+        })
+      }
+      res.select(res.all.filter(i => res.ids(i) % pq.fitSampleMod == 0))
+    })
+    val book = new PqBook(pq,
+      pqFitCodebooks(pq, fitSample(src, pq.fitSampleMod), fitRows))
+    Cells(src.select(src.columns.toSeq.filter(_ != "emb").map(col) :+
+        book.encode(col("emb")).as("codes"): _*),
+      cent, None, labels.fold(1)(labelNprobe(_, spec.filter, base)),
+      Some(book))
   }
 
   /** All m PQ codebooks (sub, cid, centroid), fitted on `base`. Seeds
@@ -983,261 +985,47 @@ object Similarity {
     * and each round is an L2 assignment plus the decimal-mean update
     * keyed (sub, cid), order-independent and unrounded per
     * [[kmeansCentroids]]' portability note. With the collected fit
-    * corpus `rows` the m subspace fits run on the driver; otherwise
-    * ([[pqCodebooksSpark]]) in one batched distributed loop over
-    * `subBase`, the subspace-exploded `base`. */
-  private def pqFitCodebooks(spec: PqSpec, base: DataFrame,
-      rows: Option[FitRows], subBase: => DataFrame): DataFrame = {
-    import spec._
+    * corpus `rows` the m subspace fits run on the driver; otherwise as
+    * one distributed [[subCellFit]] keyed by subspace over the
+    * subspace-exploded corpus (vec_id, sub, emb) — one loop for all m
+    * codebooks, whatever m. */
+  private def pqFitCodebooks(pq: IvfCodes.Pq, base: DataFrame,
+      rows: Option[FitRows]): DataFrame = {
+    import pq._
     rows.filter(_.vecs.forall(_.length >= m * subDim))
       .flatMap(rows => DriverLloyd.mirrored((0 until m).map { si =>
         val sub = rows.slice(si * subDim, subDim)
         Seq[Any](si) -> DriverLloyd.fit(sub, sub.all, kSub, iters, L2)
       }))
-      .fold(pqCodebooksSpark(base, subBase, m, subDim, kSub, iters))(
+      .fold(subCellFit(base.select(col("vec_id"), posexplode(array(
+          (0 until m).map(s => slice(col("emb"), s * subDim + 1, subDim)): _*))
+          .as(Seq("sub", "emb"))), "sub", kSub, iters, L2)
+        .withColumnRenamed("scid", "cid"))(
         centroidFrame(base.sparkSession, Seq(StructField("sub", IntegerType)),
           _, "cid"))
   }
 
-  /** The distributed PQ fit: one [[lloyd]] loop for all m codebooks,
-    * one TakeOrdered of the unsliced corpus seeding every subspace.
-    * [[pqAssign]] collects the codebook frame each round (the bounded
-    * m·kSub contract) and embeds it as plan literals, so lineage is
-    * flat without truncation; the fitted codebook is a Ckpt. */
-  private def pqCodebooksSpark(base: DataFrame, subBase: DataFrame,
-      m: Int, subDim: Int, kSub: Int, iters: Int): DataFrame = {
-    // the kSub seed rows are local: slice them on the driver
-    val seed = lloydSeed(base, kSub)
-    val seeds = localFrame(base.sparkSession, StructType(
-        StructField("sub", IntegerType) +: seed.schema.fields),
-      for (r <- seed.collect().toSeq; si <- 0 until m) yield
-        Row(si, r.getInt(0), r.getSeq[Double](1)
-          .slice(si * subDim, (si + 1) * subDim)))
-    lloyd(seeds, iters, Seq("sub", "cid"), "semb")(pqAssign(subBase, _))(
-      (c, last) => if (last) Ckpt(c) else c)
-  }
-
-  /** Product-quantization ANN (Jégou et al. 2011) under `spec` — the
-    * memory-layout production shape for corpus-scale similarity
-    * search: every corpus vector is encoded as `m` codes (nearest
-    * sub-centroid per subspace — at kSub ≤ 256 that is m BYTES per
-    * vector vs 8·dim for raw doubles), queries are NOT quantized
-    * (asymmetric distance computation): each query precomputes a
-    * lookup table of `⟨q_sub, centroid⟩` partial dots — |Q|·m·kSub
-    * tiny rows, broadcast — and a candidate's approximate inner
-    * product (`adc_dot`) is the sum of its m table entries, reached
-    * without touching the raw corpus vectors again.
-    *
-    * With `spec.coarse` this is IVF-PQ, the FAISS/SCaNN-class
-    * composition: the per-label coarse quantizer prunes the corpus to
-    * the `nprobe` probed label partitions per query and fine ranking
-    * runs on the codes inside them; `residual` encodes `v − c(v)`
-    * (residuals concentrate near the origin, so the same code budget
-    * buys tighter reconstruction) and scores `⟨q,c(v)⟩ + Σ LUT` with
-    * the coarse term computed while probing; `filter` restricts the
-    * CODE index before the probed-partition join (a pushed predicate
-    * on the index read — fits and codes stay filter-agnostic, callers
-    * widen nprobe ∝ 1/selectivity).
-    *
-    * Distributed shape: all m codebooks fit in ONE batched Lloyd loop
-    * over the subspace-exploded corpus ([[pqFitEncode]]); encode is
-    * one projection; scoring joins the corpus-sized CODES frame to
-    * the broadcast LUT and reduces per (query, vector) — the only
-    * corpus-sized shuffle carries (query_id, vec_id, partial-sum)
-    * rows, never vectors. Every step is rounded/decimal-summed, so
-    * the whole index — fit, codes, ADC scores — is hash-verified
-    * against [[PqSpec.oracleSql]]; recall vs the exact scan is
-    * bounded in SimilaritySpec. */
-  def pqSearch(spec: PqSpec, embeddings: DataFrame, queryIds: DataFrame,
-      k: Int): DataFrame = {
-    val keep = if (spec.coarse.isDefined) Seq("vec_id", "label")
-      else Seq("vec_id")
-    val base = pqBase(spec, embeddings, keep)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var persisted = Seq.empty[DataFrame]
-    try {
-      val rows = pqRows(spec, base)
-      // the residual pass and the probes both read the centroids —
-      // computed once (local rows of a driver fit, or checkpointed);
-      // without residuals they feed only the probe broadcast
-      val cent = spec.coarse.map { _ =>
-        val c = labelCentroidsOf(base, rows)
-        if (spec.residual && !isLocal(c)) c.localCheckpoint() else c
-      }
-      val (cents, index, fitPersisted) = pqFitEncode(spec, base, cent, rows)
-      persisted = fitPersisted
-      val q = pqQueries(base, queryIds)
-      val probed = cent.map(pqProbed(spec, q, _, base))
-      pqAdcTopK(spec, index, probed, pqLut(spec, q, cents), k)
-        .localCheckpoint()
-    } finally {
-      persisted.foreach(_.unpersist())
-      base.unpersist()
-    }
-  }
-
-  /** (vec_id, `keep`…, emb): the non-NULL corpus as doubles in the
-    * spec's subspace layout. */
-  private def pqBase(spec: PqSpec, embeddings: DataFrame,
-      keep: Seq[String]): DataFrame = {
-    val laid = spec.layout match {
-      case PqLayout.Contiguous => embeddings
+  /** `base` with its `emb` in the subspace layout of `pq`: as read,
+    * variance-balanced ([[varianceOrder]]), or rotated by the
+    * [[graft.functions.MatVec]] kernel. */
+  private def laidOut(pq: IvfCodes.Pq, base: DataFrame): DataFrame =
+    pq.layout match {
+      case PqLayout.Contiguous => base
       case PqLayout.VarianceBalanced =>
-        variancePermuted(embeddings, spec.m, spec.dim, keep)
-      case PqLayout.Rotation(rot) => Pca.applyRotation(embeddings, rot, keep)
+        base.withColumn("emb", varianceOrder(base, pq))
+      case PqLayout.Rotation(rot) => base.withColumn("emb",
+        graft.functions.MatVec.mat_vec_lit(col("emb"), rot))
     }
-    laid.select(keep.map(col) :+ toDouble(col("embedding")).as("emb"): _*)
-      .filter(col("emb").isNotNull)
-  }
 
-  /** The PQ base collected for a driver fit — keyed by label with a
-    * coarse level, whose centroids then come from the same rows. */
-  private def pqRows(spec: PqSpec, base: DataFrame): Option[FitRows] =
-    collectFit(base, spec.dim, spec.coarse.map(_ => "label"))
-
-  /** Fit the m codebooks and encode `base` (persisted by the caller):
-    * returns the codebook frame (sub, cid, centroid), the code index
-    * (vec_id, [label,] sub, cid) — label attached when the spec has a
-    * coarse level — and the frames to unpersist once the codes are
-    * consumed.
-    *
-    * Storage, MEASURED at the 1000× tier (2M vectors / 32M subspace
-    * rows, BASELINE.md r12 ANN section): under the FULL distributed
-    * fit the subspace frame is read three times (two Lloyd rounds +
-    * encode), so it persists SER (706 s vs 847 s re-exploding; the
-    * pressure is round-trip volume, not object overhead), and so does
-    * the residual frame it derives from. Under a SAMPLED fit both are
-    * consumed exactly once (the encode) and stay lazy — dropping that
-    * single-use persist cut the 1000× build ~2.2× (host-adjusted); the
-    * fit passes re-derive the sample-sized slice (the modulus
-    * filter pushes below the residual join). A driver fit reads the
-    * fit corpus in its one collect, so the encode's subspace frame is
-    * single-use there too and stays lazy. The coded frame itself
-    * streams into its consumer. */
-  private def pqFitEncode(spec: PqSpec, base: DataFrame,
-      cent: Option[DataFrame], rows: Option[FitRows])
-      : (DataFrame, DataFrame, Seq[DataFrame]) = {
-    val sampled = spec.fitSampleMod > 1L
-    def multiPass(df: DataFrame): DataFrame =
-      if (sampled) df
-      else df.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    // residual pass: one broadcast join + element-wise subtraction
-    // (raw doubles; a-b is IEEE-exact so Spark and DuckDB agree)
-    val src = cent.filter(_ => spec.residual).fold(base)(c =>
-      multiPass(base.join(broadcast(c), Seq("label"))
-        .select(col("vec_id"), zip_with(col("emb"), col("centroid"),
-          (a, b) => a - b).as("emb"))))
-    lazy val shared = multiPass(pqSubExplode(src, spec.m, spec.subDim))
-    val fitBase = fitSample(src, spec.fitSampleMod)
-    // the driver fit's corpus: the collected base — as residuals to
-    // its label means, the rows `cent` holds — on the fit sample
-    val fitRows = rows.flatMap(r => DriverLloyd.mirrored {
-      val res = if (!spec.residual) r else {
-        val means = DriverLloyd.keyMeans(r).toMap
-        r.withVecs(i => r.vecs(i).zip(means(r.keys(i))).map {
-          case (a, b) => a - b
-        })
-      }
-      res.select(res.all.filter(i =>
-        !sampled || res.ids(i) % spec.fitSampleMod == 0))
-    })
-    val cents = pqFitCodebooks(spec, fitBase, fitRows,
-      if (sampled) pqSubExplode(fitBase, spec.m, spec.subDim) else shared)
-    val subBase =
-      if (isLocal(cents)) pqSubExplode(src, spec.m, spec.subDim) else shared
-    val codes = pqAssign(subBase, cents)
-      .select(col("vec_id"), col("sub"), col("cid"))
-    val index = if (spec.coarse.isEmpty) codes
-      else codes.join(base.select(col("vec_id"), col("label")),
-        Seq("vec_id"))
-    (cents, index, if (src eq base) Seq(subBase) else Seq(subBase, src))
-  }
-
-  /** (query_id, q_emb) for the query ids — queries are never
-    * quantized (the asymmetric-ADC contract). */
-  private def pqQueries(base: DataFrame, queryIds: DataFrame): DataFrame =
-    base.join(broadcast(queryIds), Seq("vec_id"))
-      .select(col("vec_id").as("query_id"), col("emb").as("q_emb"))
-
-  /** (query_id, label[, qc_dot]): each query's probed label
-    * partitions — the top nprobe by rounded cosine to the coarse
-    * centroids, ties to the smaller label; residual specs carry the
-    * raw coarse dot ⟨q,c⟩, the first ADC term, free at probe time.
-    * `corpus` only feeds the selectivity-widened nprobe. */
-  private def pqProbed(spec: PqSpec, q: DataFrame, cent: DataFrame,
-      corpus: => DataFrame): DataFrame = {
-    val qc = if (spec.residual)
-      Seq(dot(col("q_emb"), col("centroid")).as("qc_dot")) else Nil
-    probeCells(q.crossJoin(broadcast(cent)),
-      Seq(col("query_id"), col("label")) ++ qc,
-      round(cosine(col("q_emb"), col("centroid")), 6), Seq("query_id"),
-      "label", labelNprobe(spec.coarse.get, spec.filter, corpus))
-  }
-
-  /** (query_id, sub, cid, pdot): the per-query ADC lookup table. pdot
-    * stays a RAW double: the decimal cast inside sumDec is the one
-    * quantization point (the proven centroid-mean pattern). A per-term
-    * round(·,6) would add m extra half-way rounding decisions per
-    * pair, and round() at a boundary is the one operation Spark
-    * (exact-expansion HALF_UP) and DuckDB (scaled multiply) can
-    * disagree on — observed once in 40 960 terms at sf0.01. The
-    * m·kSub codebook rows (the fit contract) collect and enter the
-    * plan as one literal, [[pqAssign]]'s LUT: broadcasting them would
-    * cost a job even from a LocalRelation. */
-  private def pqLut(spec: PqSpec, q: DataFrame, cents: DataFrame)
-      : DataFrame = {
-    val book = cents.select(col("sub"), col("cid"), col("centroid"))
-      .collect().map(r => (r.getInt(0), r.getInt(1),
-        r.getSeq[Double](2).toSeq)).toSeq
-    q.select(col("query_id"), col("q_emb"),
-        inline(typedLit(book)).as(Seq("sub", "cid", "centroid")))
-      .select(col("query_id"), col("sub"), col("cid"),
-        dot(slice(col("q_emb"), col("sub") * lit(spec.subDim) + lit(1),
-          lit(spec.subDim)), col("centroid")).as("pdot"))
-  }
-
-  /** ADC score → top-k over a code index: exhaustive when `probed` is
-    * absent, else restricted to each query's probed partitions; the
-    * spec's candidate filter applies to the index first. */
-  private def pqAdcTopK(spec: PqSpec, index: DataFrame,
-      probed: Option[DataFrame], lut: DataFrame, k: Int): DataFrame = {
-    val cand = spec.filter.fold(index)(f => index.filter(f.column))
-    val notSelf = col("vec_id") =!= col("query_id")
-    val pairs = probed match {
-      case None => cand.join(broadcast(lut), Seq("sub", "cid"))
-        .filter(notSelf)
-      case Some(p) => cand.join(broadcast(p), Seq("label")).filter(notSelf)
-        .join(broadcast(lut), Seq("query_id", "sub", "cid"))
-    }
-    val adc = graft.queries.QueryUtil.sumDec(col("pdot"))
-    // qc_dot is constant per (query, candidate): its cell is the
-    // candidate's one label ∩ the query's probed set
-    val scored = pairs.groupBy(col("query_id"), col("vec_id"))
-      .agg(round(if (spec.residual) first(col("qc_dot")) + adc else adc,
-        6).as("adc_dot"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(desc("adc_dot"), asc("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("adc_dot"), col("rank"))
-  }
-
-  /** The variance-balancing permutation applied as a plan-literal
-    * projection. Per-dim variance via exact decimal sums: both
-    * engines compute (s2 − s1²/n)/n on identical doubles, rounded
+  /** The variance-balancing permutation of `base`'s `emb` as a
+    * plan-literal projection. Per-dim variance via exact decimal sums:
+    * both engines compute (s2 − s1²/n)/n on identical doubles, rounded
     * before ranking so a 1-ulp divergence can never flip the
     * permutation; rank r deals to subspace r % m, slot r / m. The
     * permutation derives from ONE narrow corpus pass (dim driver
-    * rows, the MLlib local-finish pattern). `keep` lists the id
-    * columns carried through. */
-  private def variancePermuted(embeddings: DataFrame, m: Int,
-      dim: Int, keep: Seq[String]): DataFrame = {
-    val subDim = dim / m
-    val base = embeddings.select(col("vec_id"),
-        toDouble(col("embedding")).as("emb"))
-      .filter(col("emb").isNotNull)
+    * rows, the MLlib local-finish pattern). */
+  private def varianceOrder(base: DataFrame, pq: IvfCodes.Pq): Column = {
+    import pq._
     val varRows = base
       .select(posexplode(col("emb")).as(Seq("dim", "v")))
       .groupBy(col("dim"))
@@ -1255,67 +1043,77 @@ object Similarity {
     ranked.zipWithIndex.foreach { case ((d, _), r) =>
       perm((r % m) * subDim + (r / m)) = d
     }
-    embeddings
-      .filter(col("embedding").isNotNull)
-      .select(keep.map(col) :+ array(
-        perm.toIndexedSeq.map(d =>
-          element_at(col("embedding"), d + 1)): _*).as("embedding"): _*)
+    array(perm.toIndexedSeq.map(d => element_at(col("emb"), d + 1)): _*)
   }
 
   /** Materialize the STORED IVF-PQ index of `spec` — what a 100 TB
     * deployment keeps between corpus snapshots (the ANN sibling of
-    * [[graft.ext.Retrieval.buildPhraseIndex]]). Layout v2, two
-    * artifacts:
+    * [[graft.ext.Retrieval.buildPhraseIndex]]). Layout v3:
     *
-    *  - `$dir/codes` — (vec_id, sub, cid) PARTITIONED BY label, so a
-    *    probe's label set is a planning-time partition filter;
+    *  - `$dir/codes` — (vec_id, codes) PARTITIONED BY label, one m-code
+    *    array per vector, so a probe's label set is a planning-time
+    *    partition filter;
     *  - `$dir/meta` — the two vocab-sized fit tables in ONE
     *    kind-discriminated file: `coarse` rows carry the per-label
     *    centroids (O(labels)), `codebooks` rows the m·kSub fitted
-    *    sub-centroids. One commit cycle, one read per serve.
+    *    sub-centroids. One commit cycle, one read per serve;
+    *  - `$dir/VERSION` — the layout version, written last.
     *
-    * Fit/encode are [[pqSearch]]'s (shared helpers); parquet
+    * Fit and encode are [[ivfSearch]]'s ([[pqCells]]); parquet
     * round-trips doubles bit-exactly, so serving from the layout can
-    * never change results — SimilaritySpec pins probe ≡ pqSearch and
+    * never change results — SimilaritySpec pins probe ≡ ivfSearch and
     * the partition pruning. Overwrites `dir`, including the
     * `coarse`/`codebooks` dirs a v1 layout left there. */
-  def buildPqIndex(spec: PqSpec, embeddings: DataFrame, dir: String)
+  def buildPqIndex(spec: IvfSpec, embeddings: DataFrame, dir: String)
       : Unit = {
-    requireStorable(spec)
-    val base = pqBase(spec, embeddings, Seq("vec_id", "label"))
+    val (_, pq) = storable(spec)
+    val base = ivfBase(spec, embeddings)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val rows = pqRows(spec, base)
-    val (cents, index, persisted) = pqFitEncode(spec, base, None, rows)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(base.sparkSession.sparkContext.hadoopConfiguration)
-    PqIndexV1Dirs.foreach(d =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/$d"), true))
-    // label is normalized to LONG at write time: the partition
-    // directory re-infers its own numeric type, so one explicit width
-    // keeps the probe's joins exact
-    labelCentroidsOf(base, rows)
-      .select(lit("coarse").as("kind"),
-        col("label").cast("long").as("label"),
-        lit(null).cast("int").as("sub"), lit(null).cast("int").as("cid"),
-        col("centroid"))
-      .unionByName(cents.select(lit("codebooks").as("kind"),
-        lit(null).cast("long").as("label"), col("sub"), col("cid"),
-        col("centroid")))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/meta")
-    writePqCodes(index, "overwrite", dir)
-    persisted.foreach(_.unpersist())
-    base.unpersist(): Unit
+    try {
+      val cells = pqCells(spec, pq, base)
+      val fs = pqIndexFs(base.sparkSession, dir)
+      (PqIndexVersionFile +: PqIndexV1Dirs).foreach(d =>
+        fs.delete(new org.apache.hadoop.fs.Path(s"$dir/$d"), true))
+      // label is normalized to LONG at write time: the partition
+      // directory re-infers its own numeric type, so one explicit width
+      // keeps the probe's joins exact
+      cells.centroids.get
+        .select(lit("coarse").as("kind"),
+          col("label").cast("long").as("label"),
+          lit(null).cast("int").as("sub"), lit(null).cast("int").as("cid"),
+          col("centroid"))
+        .unionByName(cells.book.get.frame.select(lit("codebooks").as("kind"),
+          lit(null).cast("long").as("label"), col("sub"), col("cid"),
+          col("centroid")))
+        .coalesce(1)
+        .write.mode("overwrite").parquet(s"$dir/meta")
+      writePqCodes(cells.members, "overwrite", dir)
+      val out = fs.create(
+        new org.apache.hadoop.fs.Path(s"$dir/$PqIndexVersionFile"))
+      try out.writeBytes(s"$PqIndexVersion\n") finally out.close()
+    } finally base.unpersist()
   }
 
-  /** The v1 layout's separate fit dirs (replaced by `meta` in v2). */
+  /** The stored layout's version and its marker file. v1 kept the fit
+    * tables in separate dirs ([[PqIndexV1Dirs]]), v2 one
+    * (vec_id, sub, cid) row per code and no marker. */
+  private val PqIndexVersion = 3
+  private val PqIndexVersionFile = "VERSION"
   private val PqIndexV1Dirs = Seq("coarse", "codebooks")
 
-  /** The stored layout holds plain codes of the raw coordinates. */
-  private def requireStorable(spec: PqSpec): Unit =
-    require(spec.coarse.isDefined && !spec.residual &&
-      spec.layout == PqLayout.Contiguous,
-      "the stored PQ index holds contiguous non-residual IVF-PQ codes")
+  private def pqIndexFs(spark: org.apache.spark.sql.SparkSession,
+      dir: String) = new org.apache.hadoop.fs.Path(dir)
+    .getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** The stored layout holds plain codes of the raw coordinates under
+    * label cells. */
+  private def storable(spec: IvfSpec): (Coarse.Labels, IvfCodes.Pq) =
+    (spec.coarse, spec.codes) match {
+      case (c: Coarse.Labels, p: IvfCodes.Pq)
+          if !p.residual && p.layout == PqLayout.Contiguous => (c, p)
+      case _ => throw new IllegalArgumentException(
+        "the stored PQ index holds contiguous non-residual IVF-PQ codes")
+    }
 
   /** One writer task per label partition dir. */
   private def writePqCodes(index: DataFrame, mode: String, dir: String)
@@ -1325,45 +1123,42 @@ object Similarity {
 
   /** ONE read of a [[buildPqIndex]] layout's `meta` artifact,
     * collected driver-side (bounded: O(labels) + m·kSub rows by the
-    * layout contract) and split back into its two tables as
-    * LocalRelations — every downstream broadcast/collect of either
-    * table is then job-free. Returns (coarse (label, centroid),
-    * codebooks (sub, cid, centroid)); fails loudly on a v1 layout, a
-    * meta without codebooks, or a codebook count that is not
-    * `spec.m`. */
+    * layout contract) and split back into its two tables: the coarse
+    * (label, centroid) LocalRelation and the codebooks. Fails loudly,
+    * naming the layout, on a v1 or v2 dir or another version (rebuild
+    * required), on a meta without codebooks, or on a codebook count
+    * that is not the spec's m. */
   private def readPqIndexMeta(spark: org.apache.spark.sql.SparkSession,
-      dir: String, spec: PqSpec): (DataFrame, DataFrame) = {
-    requireStorable(spec)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def has(d: String) = fs.exists(new org.apache.hadoop.fs.Path(s"$dir/$d"))
-    if (!has("meta") && PqIndexV1Dirs.exists(has))
-      throw new IllegalStateException(s"$dir holds a v1 PQ index " +
-        "layout (coarse/codebooks dirs, no meta) — rebuild required: " +
-        "run buildPqIndex on it")
-    val df = spark.read.parquet(s"$dir/meta")
-    val rows = df.collect()
-    val iKind = df.schema.fieldIndex("kind")
-    val iLabel = df.schema.fieldIndex("label")
-    val iSub = df.schema.fieldIndex("sub")
-    val iCid = df.schema.fieldIndex("cid")
-    val iCent = df.schema.fieldIndex("centroid")
-    val centType = df.schema("centroid").dataType
-    val coarse = localFrame(spark, StructType(Seq(
-        StructField("label", LongType), StructField("centroid", centType))),
-      rows.filter(_.getString(iKind) == "coarse").toSeq
-        .map(r => Row(r.getLong(iLabel), r.get(iCent))))
-    val cbRows = rows.filter(_.getString(iKind) == "codebooks")
-    require(cbRows.nonEmpty, s"$dir/meta holds no codebooks rows — " +
+      dir: String, spec: IvfSpec): (DataFrame, PqBook) = {
+    val (_, pq) = storable(spec)
+    val fs = pqIndexFs(spark, dir)
+    def path(d: String) = new org.apache.hadoop.fs.Path(s"$dir/$d")
+    def rebuild(layout: String) = new IllegalStateException(
+      s"$dir holds $layout — rebuild required: run buildPqIndex on it")
+    if (!fs.exists(path("meta")) &&
+        PqIndexV1Dirs.exists(d => fs.exists(path(d))))
+      throw rebuild("a v1 PQ index layout (coarse/codebooks dirs, no meta)")
+    if (!fs.exists(path(PqIndexVersionFile)))
+      throw rebuild("a v2 PQ index layout (one (vec_id, sub, cid) row " +
+        s"per code, no $PqIndexVersionFile marker)")
+    val in = fs.open(path(PqIndexVersionFile))
+    val version = try new String(in.readAllBytes(), "UTF-8").trim
+      finally in.close()
+    if (version != PqIndexVersion.toString)
+      throw rebuild(s"PQ index layout v$version, not v$PqIndexVersion")
+    val meta = spark.read.parquet(s"$dir/meta")
+      .select("kind", "label", "sub", "cid", "centroid")
+    val (coarse, book) =
+      meta.collect().toSeq.partition(_.getString(0) == "coarse")
+    require(book.nonEmpty, s"$dir/meta holds no codebooks rows — " +
       "corrupt PQ index meta, rebuild the index")
-    val m = cbRows.map(_.getInt(iSub)).max + 1
-    require(m == spec.m, s"$dir holds m=$m codebooks, spec has m=${spec.m}")
-    val cents = localFrame(spark, StructType(Seq(
-        StructField("sub", IntegerType), StructField("cid", IntegerType),
-        StructField("centroid", centType))),
-      cbRows.toSeq.map(r =>
-        Row(r.getInt(iSub), r.getInt(iCid), r.get(iCent))))
-    (coarse, cents)
+    val m = book.map(_.getInt(2)).max + 1
+    require(m == pq.m, s"$dir holds m=$m codebooks, spec has m=${pq.m}")
+    def local(cols: String*)(rows: Seq[Row]) = localFrame(spark,
+      StructType(cols.map(meta.schema(_))), rows.map(r =>
+        Row.fromSeq(cols.map(c => r.get(meta.schema.fieldIndex(c))))))
+    (local("label", "centroid")(coarse),
+      new PqBook(pq, local("sub", "cid", "centroid")(book)))
   }
 
   /** Append a batch to a [[buildPqIndex]] layout WITHOUT refit — the
@@ -1377,11 +1172,11 @@ object Similarity {
     * codes bit-identical pre/post append, and split-appends compose
     * to the one-shot append. */
   def appendToPqIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String, spec: PqSpec, batch: DataFrame): Unit = {
+      dir: String, spec: IvfSpec, batch: DataFrame): Unit = {
     // one meta read serves the known-label check AND the frozen
     // codebooks
-    val (coarse, cents) = readPqIndexMeta(spark, dir, spec)
-    val base = pqBase(spec, batch, Seq("vec_id", "label"))
+    val (coarse, book) = readPqIndexMeta(spark, dir, spec)
+    val base = ivfBase(spec, batch)
     // a label the stored coarse centroids don't know would land in a
     // partition NO probe ever selects — silently unreachable rows.
     // New labels are the refit trigger, not an append; fail loudly.
@@ -1392,10 +1187,8 @@ object Similarity {
       s"batch carries labels absent from the stored coarse index " +
         s"(${novel.mkString(",")}) — appending them would create " +
         "unreachable partitions; rebuild the index instead")
-    writePqCodes(pqAssign(pqSubExplode(base, spec.m, spec.subDim), cents)
-      .select(col("vec_id"), col("sub"), col("cid"))
-      .join(base.select(col("vec_id"), col("label")), Seq("vec_id")),
-      "append", dir)
+    writePqCodes(base.select(col("vec_id"), col("label"),
+      book.encode(col("emb")).as("codes")), "append", dir)
   }
 
   /** Probe served from a [[buildPqIndex]] layout: the query vectors
@@ -1403,28 +1196,30 @@ object Similarity {
     * collects driver-side (bounded by the fixed-|Q| contract — the
     * phraseIndexProbe rule), its label set becomes a PLANNING-time
     * partition filter on the codes read, and fine ranking is
-    * [[pqSearch]]'s ADC over the pruned partitions — no raw corpus
+    * [[ivfSearch]]'s over the pruned partitions — no raw corpus
     * vectors, no fit, no corpus-proportional probe state.
     * `embeddings` supplies the |Q| query rows (and, for a widened
     * nprobe, the corpus the filter's selectivity is measured on).
-    * Results are bit-identical to [[pqSearch]] at the same spec. */
+    * Results are bit-identical to [[ivfSearch]] at the same spec. */
   def pqIndexProbe(spark: org.apache.spark.sql.SparkSession,
-      dir: String, spec: PqSpec, embeddings: DataFrame,
+      dir: String, spec: IvfSpec, embeddings: DataFrame,
       queryIds: DataFrame, k: Int): DataFrame = {
-    val (cent, cents) = readPqIndexMeta(spark, dir, spec)
-    val q = pqQueries(pqBase(spec, embeddings, Seq("vec_id")), queryIds)
-    val probedRows = pqProbed(spec, q, cent,
-      embeddings.filter(col("embedding").isNotNull)).collect()
-    import spark.implicits._
-    val probed = probedRows.map(r => (r.getLong(0), r.getLong(1)))
-      .toSeq.toDF("query_id", "label")
+    val (c, _) = storable(spec)
+    val (cent, book) = readPqIndexMeta(spark, dir, spec)
+    val base = ivfBase(spec, embeddings)
+    val cells = Cells(spark.read.parquet(s"$dir/codes"), Some(cent), None,
+      labelNprobe(c, spec.filter, base), Some(book))
+    val q = queryCodes(spec, cells,
+      base.join(broadcast(queryIds), Seq("vec_id")),
+      Seq(col("vec_id").as("query_id")))
+    val (probed, keys) = probe(spec, cells, q, "query_id")
+    val local = localFrame(spark, probed.schema, probed.collect().toSeq)
     // filter BEFORE the cast so the isin stays a partition filter;
     // the directory-inferred partition type then normalizes to long
-    val codes = spark.read.parquet(s"$dir/codes")
-      .filter(col("label").isin(probedRows.map(_.getLong(1)).distinct
-        .toSeq: _*))
-      .withColumn("label", col("label").cast("long"))
-    pqAdcTopK(spec, codes, Some(probed), pqLut(spec, q, cents), k)
+    val labels = local.select("label").collect().map(_.get(0)).distinct
+    rank(spec, cells.members.filter(col("label").isin(labels.toSeq: _*))
+        .withColumn("label", col("label").cast("long")),
+      local, keys, "query_id", "neighbor_id", k, bounded = true)
   }
 
   /** The per-label exact decimal-mean centroid frame (label, centroid)
@@ -1441,13 +1236,6 @@ object Similarity {
     localFrame(base.sparkSession, StructType(Seq(base.schema("label"),
         CentroidField)),
       DriverLloyd.keyMeans(rows).map { case (k, v) => Row(k, v.toSeq) })
-
-  /** [[labelCentroidsLocal]] when `base` was collected, else
-    * [[labelCentroids]]. */
-  private def labelCentroidsOf(base: DataFrame, rows: Option[FitRows])
-      : DataFrame =
-    rows.flatMap(r => DriverLloyd.mirrored(labelCentroidsLocal(base, r)))
-      .getOrElse(labelCentroids(base))
 
   /** Keep each query's `nprobe` best coarse cells — the one probe
     * rule of every coarse level ([[Coarse.probedSql]] mirrors it):
@@ -1479,10 +1267,13 @@ object Similarity {
     * per vector. A NULL-element or zero-norm code drops (the oracle's
     * `qn > 0`; the corpus and queries are already clean, see
     * [[ivfBase]]). Corpus, centroids and queries all pass through
-    * here, so every level scores the same codes. */
+    * here, so every level scores the same codes. PQ keeps the raw
+    * vector: its corpus codes and query tables come from the fitted
+    * [[PqBook]]. */
   private def encoded(codes: IvfCodes, df: DataFrame, keep: Seq[Column],
       vec: String, p: String): DataFrame = codes match {
-    case IvfCodes.Exact => df.select(keep :+ col(vec).as(s"${p}emb"): _*)
+    case IvfCodes.Exact | _: IvfCodes.Pq =>
+      df.select(keep :+ col(vec).as(s"${p}emb"): _*)
     case _: IvfCodes.Int8 =>
       import graft.functions.QuantizeOps._
       df.select(keep :+ quantize_i8(col(vec)).as(s"${p}qv"): _*)
@@ -1492,9 +1283,14 @@ object Similarity {
         .filter(col(s"${p}qn") > 0)
   }
 
-  /** Rounded cosine between the `a`- and `b`-prefixed codes: exact
-    * doubles, or the int8 integer dot over the code norms (per-vector
-    * scales cancel out of cosine). */
+  /** The rounded score between the `a`- and `b`-prefixed codes: the
+    * cosine of exact doubles, or the int8 integer dot over the code
+    * norms (per-vector scales cancel out of cosine); for PQ the ADC
+    * inner product of the `a` query table at the `b` codes — the m
+    * entries cast to DECIMAL(18,6) and summed exactly, the per-pair
+    * form of [[graft.queries.QueryUtil.sumDec]] (order-independent,
+    * so bit-identical to the oracle), plus a residual spec's coarse
+    * term `qc_dot`. */
   private def codeSim(codes: IvfCodes, a: String, b: String): Column =
     codes match {
       case IvfCodes.Exact =>
@@ -1503,6 +1299,11 @@ object Similarity {
         import graft.functions.QuantizeOps._
         round(dot_i8(col(s"${a}qv"), col(s"${b}qv")).cast("double") /
           (col(s"${a}qn") * col(s"${b}qn")), 6)
+      case pq: IvfCodes.Pq =>
+        val adc = (1 to pq.m).map(s => element_at(element_at(
+            col(s"${a}lut"), s), element_at(col(s"${b}codes"), s) + 1)
+          .cast(DecimalType(18, 6))).reduce(_ + _).cast("double")
+        round(if (pq.residual) col("qc_dot") + adc else adc, 6)
     }
 
   /** The cosine corpus read of the IVF and SemDeDup families: `keep`
@@ -1527,13 +1328,16 @@ object Similarity {
         lit(s"$dimError: embedding dim != $d")), lit(true))))
   }
 
-  /** LSH cells check the dim: a mismatch would collapse the corpus
-    * into one bucket (a silent flat scan). */
-  private def ivfBase(spec: IvfSpec, embeddings: DataFrame): DataFrame =
-    vectorRows(embeddings, Seq(col("vec_id")) ++
+  /** The corpus of `spec`: [[vectorRows]], in the PQ layout for PQ
+    * codes. LSH cells check the dim: a mismatch would collapse the
+    * corpus into one bucket (a silent flat scan). */
+  private def ivfBase(spec: IvfSpec, embeddings: DataFrame): DataFrame = {
+    val rows = vectorRows(embeddings, Seq(col("vec_id")) ++
       (if (spec.keepsLabel) Seq(col("label")) else Nil),
       PartialFunction.condOpt(spec.coarse) { case c: Coarse.Lsh => c.dim },
       "Coarse.Lsh")
+    spec.pq.fold(rows)(laidOut(_, rows))
+  }
 
   /** A k-means coarse index — the ingest gate's state between refits:
     * the fitted centroids (cid, centroid) and the manifest keyed by
@@ -1563,13 +1367,15 @@ object Similarity {
 
   /** A built coarse level: the corpus (under the spec's codes) keyed by
     * cell, and for the centroid levels the cell centroids keyed by the
-    * spec's cell column plus the two-level grid's sub-cells. */
+    * spec's cell column plus the two-level grid's sub-cells; PQ codes
+    * carry their fitted codebooks. */
   private final case class Cells(members: DataFrame,
       centroids: Option[DataFrame] = None, sub: Option[DataFrame] = None,
-      nprobe: Int = 1)
+      nprobe: Int = 1, book: Option[PqBook] = None)
 
   private def buildCells(spec: IvfSpec, base: DataFrame): Cells =
     spec.coarse match {
+      case _ if spec.pq.isDefined => pqCells(spec, spec.pq.get, base)
       case Coarse.Exhaustive =>
         Cells(encoded(spec.codes, base,
           base.columns.toSeq.filter(_ != "emb").map(col), "emb", ""))
@@ -1614,13 +1420,20 @@ object Similarity {
       case _ => "label"
     }
     val qCols = q.columns.toSeq.map(col)
-    val sim = codeSim(spec.codes, "q_", "c_")
-    val pairs = q.crossJoin(broadcast(encoded(spec.codes, centroids,
-      Seq(col(cell)), "centroid", "c_")))
+    val sim = codeSim(spec.probeCodes, "q_", "c_")
+    // a PQ level's centroids are local rows: they enter as one plan
+    // literal, where a broadcast even of a LocalRelation costs a job
+    val pairs =
+      if (cells.book.isDefined) crossLocal(q, centroids, cell)
+      else q.crossJoin(broadcast(encoded(spec.codes, centroids,
+        Seq(col(cell)), "centroid", "c_")))
+    // a residual spec's coarse ADC term ⟨q,c⟩, free at probe time
+    val qc = if (spec.pq.exists(_.residual))
+      Seq(dot(col("q_emb"), col("c_emb")).as("qc_dot")) else Nil
     val probed1 = probeCells(
       if (spec.otherLabel) pairs.filter(col(cell) =!= col("q_label"))
       else pairs,
-      qCols :+ col(cell), sim, Seq(qid), cell, cells.nprobe)
+      (qCols :+ col(cell)) ++ qc, sim, Seq(qid), cell, cells.nprobe)
     (spec.coarse, cells.sub) match {
       case (c: Coarse.TwoLevel, Some(sub)) =>
         val subCodes = encoded(spec.codes, sub,
@@ -1657,21 +1470,45 @@ object Similarity {
     }
   }
 
+  /** `q` × the rows of the local (key, centroid) frame `cents`, which
+    * enter as one plan literal of (key, c_emb) structs. */
+  private def crossLocal(q: DataFrame, cents: DataFrame, key: String)
+      : DataFrame = {
+    val kt = cents.schema(key).dataType
+    q.select(q.columns.toSeq.map(col) :+ inline(array(
+      cents.select(col(key), col("centroid")).collect().toSeq.map(r =>
+        struct(lit(r.get(0)).cast(kt).as(key),
+          typedLit(r.getSeq[Double](1).toSeq).as("c_emb"))): _*)): _*)
+  }
+
+  /** Each query's probed cells and the keys they join the members on:
+    * LSH buckets, the centroid cells, or for the exhaustive scan the
+    * query frame itself with no key. */
+  private def probe(spec: IvfSpec, cells: Cells, q: DataFrame, qid: String)
+      : (DataFrame, Seq[String]) = spec.coarse match {
+    case c: Coarse.Lsh => (lshProbes(c, q), Seq("bucket"))
+    case _ => cells.centroids.fold((q, Seq.empty[String]))(
+      nearestCells(spec, cells, _, q, qid))
+  }
+
   /** Probe `cells` with the query frame `q` (`qid`, q_-prefixed codes,
-    * optional q_label) and rank the `k` best candidates per query
-    * (`qid`, `nid`, [neg_label,] cos_sim, rank). The exhaustive scan
-    * pairs every query with every candidate. A `bounded` query set's
-    * probes broadcast into the fine-rank join (|Q|·nprobe rows); the
-    * k-means join stays unhinted ([[IvfSpec.hintsProbed]]). */
+    * optional q_label) and rank the `k` best candidates per query. */
   private def probeRank(spec: IvfSpec, cells: Cells, q: DataFrame,
       qid: String, nid: String, k: Int, bounded: Boolean): DataFrame = {
-    val (probed, keys) = spec.coarse match {
-      case c: Coarse.Lsh => (lshProbes(c, q), Seq("bucket"))
-      case _ => cells.centroids.fold((q, Seq.empty[String]))(
-        nearestCells(spec, cells, _, q, qid))
-    }
-    val cand = spec.filter.fold(cells.members)(f =>
-      cells.members.filter(f.column))
+    val (probed, keys) = probe(spec, cells, q, qid)
+    rank(spec, cells.members, probed, keys, qid, nid, k, bounded)
+  }
+
+  /** The `k` best `members` per query of `probed`, joined on `keys`
+    * (`qid`, `nid`, [neg_label,] cos_sim | adc_dot, rank). The
+    * exhaustive scan pairs every query with every candidate. A
+    * `bounded` query set's probes broadcast into the fine-rank join
+    * (|Q|·nprobe rows); the k-means join stays unhinted
+    * ([[IvfSpec.hintsProbed]]). */
+  private def rank(spec: IvfSpec, members: DataFrame, probed: DataFrame,
+      keys: Seq[String], qid: String, nid: String, k: Int,
+      bounded: Boolean): DataFrame = {
+    val cand = spec.filter.fold(members)(f => members.filter(f.column))
     val right =
       if (spec.hintsProbed && bounded) broadcast(probed) else probed
     val notSelf = col("vec_id") =!= col(qid)
@@ -1681,8 +1518,8 @@ object Similarity {
       (if (keys.isEmpty) cand.join(right) else cand.join(right, keys))
         .filter(if (spec.otherLabel)
           notSelf && col("label") =!= col("q_label") else notSelf)
-        .select(keep :+ codeSim(spec.codes, "q_", "").as("cos_sim"): _*),
-      k, qid, nid)
+        .select(keep :+ codeSim(spec.codes, "q_", "").as(spec.score): _*),
+      k, qid, nid, spec.score)
   }
 
   /** Cosine top-k under `spec` for a query-id frame (single `vec_id`
@@ -1712,6 +1549,13 @@ object Similarity {
     *    rescores that coarse top-n with the exact cosine on raw
     *    vectors reattached by id, repairing quantization at the final
     *    ranking;
+    *  - PQ codes (Jégou et al. 2011, FAISS/ScaNN-class IVF-PQ on label
+    *    cells): each corpus vector is its m sub-centroid ids (at
+    *    kSub ≤ 256, m bytes instead of 8·dim), the query keeps its raw
+    *    vector and one m×kSub table of partial dots, and a candidate's
+    *    `adc_dot` is the sum of its m table entries — a per-pair
+    *    projection with no join to the table and no per-pair
+    *    aggregate ([[pqCells]]);
     *  - `otherLabel` mines hard negatives (contrastive training: close
     *    in embedding space, of another class): the anchor's own label
     *    cell is dropped at probe time, and the candidate stream keeps
@@ -1747,11 +1591,11 @@ object Similarity {
     if (spec.persistsCorpus)
       base.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val top = try {
-      val q = encoded(spec.codes, pick(base),
+      val cells = buildCells(spec, base)
+      val q = queryCodes(spec, cells, pick(base),
         col("vec_id").as("query_id") +:
-          (if (spec.otherLabel) Seq(col("label").as("q_label")) else Nil),
-        "emb", "q_")
-      val ranked = probeRank(spec, buildCells(spec, base), q,
+          (if (spec.otherLabel) Seq(col("label").as("q_label")) else Nil))
+      val ranked = probeRank(spec, cells, q,
         "query_id", "neighbor_id", coarseK, bounded)
       if (spec.persistsCorpus) ranked.localCheckpoint() else ranked
     } finally if (spec.persistsCorpus) base.unpersist()
@@ -1759,6 +1603,14 @@ object Similarity {
       case IvfCodes.Int8(Some(_)) => exactRerank(embeddings, pick, top, k)
       case _ => top
     }
+  }
+
+  /** The query frame under the spec's codes; PQ queries add their ADC
+    * table `q_lut` ([[PqBook.lut]]). */
+  private def queryCodes(spec: IvfSpec, cells: Cells, df: DataFrame,
+      keep: Seq[Column]): DataFrame = {
+    val q = encoded(spec.codes, df, keep, "emb", "q_")
+    cells.book.fold(q)(b => q.withColumn("q_lut", b.lut(col("q_emb"))))
   }
 
   /** Rescore coarse (query_id, neighbor_id) candidates with the exact
@@ -1823,9 +1675,9 @@ object Similarity {
     * exact cold-cost pathology the [[lshBucket]] kernel note
     * documents — the broadcast row keeps plans small instead. `key`
     * is `label` for the ANN grid, `cid` for the hierarchical
-    * SemDeDup ([[semDedup]]). */
-  private def assignSubClusters(base: DataFrame,
-      cents2: DataFrame, key: String): DataFrame = {
+    * SemDeDup ([[semDedup]]), `sub` for the PQ codebooks. */
+  private def assignSubClusters(base: DataFrame, cents2: DataFrame,
+      key: String, metric: Metric = Cosine): DataFrame = {
     // when the sub-codebook is a LocalRelation (a driver fit's state)
     // it is grouped and sorted on the DRIVER instead of through the
     // aggregate, whose exchange is one more job per consumer; the
@@ -1843,12 +1695,10 @@ object Similarity {
         .select(col(key),
           transform(col("_sl"), e => e("centroid")).as("_cents"),
           transform(col("_sl"), e => e("scid")).as("_scids"))
-    val cands = zip_with(col("_cents"), col("_scids"),
-      (c, id) => struct(round(cosine(col("emb"), c), 6).as("a_sim"),
-        (-id).as("neg_scid"), id.as("scid")))
     base.join(broadcast(lut), Seq(key))
       .select(col("vec_id"), col(key), col("emb"),
-        array_max(cands).getField("scid").as("scid"))
+        metric.nearest(col("_cents"), col("_scids"), col("emb"), "scid")
+          .as("scid"))
   }
 
   /** Driver-side construction of the (key, _cents, _scids) LUT frame

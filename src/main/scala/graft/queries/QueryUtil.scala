@@ -86,21 +86,33 @@ object QueryUtil {
        |    sqrt(list_dot_product(qv, qv)) AS qn FROM ${prefix}qz)
        |  WHERE qn > 0)""".stripMargin
 
+  /** SQL fragment mirroring `Similarity.l2sq(a, b)`: the rounded
+    * squared L2 distance as the same `⟨a,a⟩ − 2⟨a,b⟩ + ⟨b,b⟩`
+    * expression tree. */
+  def sqlL2sq(a: String, b: String): String =
+    s"round(list_dot_product($a, $a) - 2 * list_dot_product($a, $b)" +
+      s" + list_dot_product($b, $b), 6)"
+
   /** Nearest-centroid assignment CTE `out`: each row of `src` to its
-    * centroid in `cent` by rounded cosine, ties to the smaller id —
+    * centroid in `cent` by rounded cosine — or with `l2` by rounded
+    * squared L2 — ties to the smaller id:
     * [[graft.ext.Similarity.assignClusters]]' mirror. With a `key` the
     * centroids are per-key sub-cells (`scid`) and a row ranks only its
     * own key's. Emits (vec_id, [key,] emb, cid | scid). */
   def kmAssignSql(src: String, cent: String, out: String,
-      key: Option[String] = None): String = {
+      key: Option[String] = None, l2: Boolean = false): String = {
     val id = if (key.isDefined) "scid" else "cid"
     val kc = key.fold("")(k => s"$k, ")
     val from = key.fold(s"$src b CROSS JOIN $cent c")(k =>
       s"$src b JOIN $cent c ON b.$k = c.$k")
+    val order =
+      if (l2) s"${sqlL2sq("b.emb", "c.centroid")} ASC"
+      else s"${sqlCosine("b.emb", "c.centroid")} DESC"
     s"""$out AS (SELECT vec_id, ${kc}emb, $id FROM (
        |  SELECT b.vec_id, ${key.fold("")(k => s"b.$k, ")}b.emb, c.$id,
-       |    row_number() OVER (PARTITION BY b.vec_id
-       |      ORDER BY ${sqlCosine("b.emb", "c.centroid")} DESC, c.$id)
+       |    row_number() OVER (PARTITION BY b.vec_id${key.fold("")(k =>
+              s", b.$k")}
+       |      ORDER BY $order, c.$id)
        |      AS rn
        |  FROM $from) WHERE rn = 1)""".stripMargin
   }
@@ -118,10 +130,11 @@ object QueryUtil {
     * cell `cid`). With one, every seed, assignment and mean runs per
     * key (CTEs sc0 … sc`iters`, sub-cell `scid`): keyed on `label` it
     * is the two-level IVF grid's sub-cells, keyed on `cid` the
-    * hierarchical SemDeDup level 2. */
+    * hierarchical SemDeDup level 2, keyed on `sub` under `l2` the PQ
+    * codebooks. */
   def kmUnrolledSql(fitB: String, assignB: String, kExpr: String,
       iters: Int = 2, key: Option[String] = None, out: String = "members",
-      dim: Int = 64): String = {
+      dim: Int = 64, l2: Boolean = false): String = {
     val p = if (key.isDefined) "s" else ""
     val id = if (key.isDefined) "scid" else "cid"
     val kc = key.fold("")(k => s"$k, ")
@@ -137,10 +150,10 @@ object QueryUtil {
          |      ${key.fold("")(k => s"PARTITION BY $k ")}ORDER BY vec_id) AS rn
          |    FROM $fitB) WHERE rn <= ($kExpr))""".stripMargin
     val rounds = (1 to iters).map { r =>
-      s"${kmAssignSql(fitB, s"${p}c${r - 1}", s"${p}a$r", key)},\n" +
+      s"${kmAssignSql(fitB, s"${p}c${r - 1}", s"${p}a$r", key, l2)},\n" +
         update(s"${p}a$r", s"${p}c$r")
     }
-    (seed +: rounds :+ kmAssignSql(assignB, s"${p}c$iters", out, key))
+    (seed +: rounds :+ kmAssignSql(assignB, s"${p}c$iters", out, key, l2))
       .mkString(",\n")
   }
 

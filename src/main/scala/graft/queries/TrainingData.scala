@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType,
 
 import graft.Tables
 import graft.ext.{AnnFilter, Coarse, Dedup, GramCap, IvfCodes, IvfSpec,
-  NearDupCandidates, NearDupMeasure, NearDupSpec, PqLayout, PqSpec,
+  NearDupCandidates, NearDupMeasure, NearDupSpec, PqLayout,
   QuerySet, SemDedupGrid, SemDedupSpec, Similarity, TextStats}
 import QueryUtil._
 
@@ -737,9 +737,6 @@ object TrainingData {
     * Distance is the engine-shared `⟨a,a⟩ − 2⟨a,b⟩ + ⟨b,b⟩` form,
     * rounded to 6 dp before every comparison. */
   private def sKcenterSql(k: Int): String = {
-    def dist(e: String, c: String) =
-      s"round(list_dot_product($e, $e) - 2*list_dot_product($e, $c)" +
-        s" + list_dot_product($c, $c), 6)"
     val sb = new StringBuilder
     // MATERIALIZED is load-bearing: each cᵢ references all earlier
     // centers several times (distance + NOT IN), and DuckDB inlines
@@ -755,7 +752,7 @@ object TrainingData {
       val notIn = (1 until i).map(j => s"SELECT vec_id FROM c$j")
         .mkString(" UNION ALL ")
       val dists = (1 until i)
-        .map(j => dist("b.emb", s"(SELECT emb FROM c$j)"))
+        .map(j => sqlL2sq("b.emb", s"(SELECT emb FROM c$j)"))
       val minD =
         if (dists.size == 1) dists.head
         else s"least(${dists.mkString(",\n    ")})"
@@ -769,7 +766,7 @@ object TrainingData {
     sb ++= s"cent AS ($cent),\n"
     sb ++= "asg AS (SELECT b.vec_id AS v, cent.sel_order,\n" +
       "    row_number() OVER (PARTITION BY b.vec_id ORDER BY " +
-      s"${dist("b.emb", "cent.emb")}, cent.sel_order) AS rn\n" +
+      s"${sqlL2sq("b.emb", "cent.emb")}, cent.sel_order) AS rn\n" +
       "  FROM base b CROSS JOIN cent),\n" +
       "n AS (SELECT sel_order, count(*) AS n_assigned FROM asg" +
       " WHERE rn = 1 GROUP BY 1)\n"
@@ -825,25 +822,60 @@ object TrainingData {
        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
   }
 
-  /** One IVF catalog row: the [[IvfSpec]], the top-k and the query
-    * set — the standard 16-id sample unless given. */
-  private[queries] final case class IvfEntry(spec: IvfSpec, k: Int,
-      queries: QuerySet = QuerySet.Sample(16))
+  /** How an ANN entry serves its search: inline, or from a stored PQ
+    * index built and reclaimed per run ([[Similarity.buildPqIndex]] /
+    * [[Similarity.pqIndexProbe]]; parquet round-trips the fit's
+    * doubles bit-exactly, so the oracle is the inline spec's). With
+    * `appendMod` the index is built on the manifest
+    * (`vec_id % n <> 0`) and the rest is appended without refit
+    * ([[Similarity.appendToPqIndex]]); the oracle fits on the manifest
+    * and encodes every row, so fit-freeze semantics are hash-verified
+    * end to end. */
+  private[queries] sealed trait Serve
+  private[queries] case object Inline extends Serve
+  private[queries] final case class Stored(appendMod: Option[Int] = None)
+      extends Serve
 
-  /** Every cosine top-k of the catalog, flat scan, LSH buckets or
-    * inverted file, on raw or int8 vectors — one Spark implementation
-    * ([[Similarity.ivfSearch]], or [[Similarity.ivfBuild]] +
-    * [[Similarity.ivfProbe]] for the gates) and one oracle generator
-    * ([[IvfSpec.oracleSql]]) serve every row, so no two entries' coarse
-    * levels, probes or rankings can drift. Every score is rounded,
-    * every centroid an exact decimal mean (k-means fits unroll in the
-    * oracle) and every hyperplane a plan literal the oracle inlines,
-    * so each row is hash-verified. */
+  /** One ANN catalog row: the [[IvfSpec]], the top-k, the query set —
+    * the standard 16-id sample unless given — and how it is served.
+    * `trainOpq`: the OPQ rotation ([[graft.ext.Pca.opqRotation]], Ge et
+    * al. 2013's parametric form: full Jacobi eigenbasis + greedy
+    * eigenvalue allocation across the subspaces) is trained at run time
+    * from the covariance integers `d_embed_cov` hash-verifies, and runs
+    * as the PQ codes' `Rotation` layout; the rotation is a pure local
+    * function of those integers (PcaSpec pins its invariants) and the
+    * oracle replays the same literals, dumped after the query runs
+    * ([[dynamicOracle]]). */
+  private[queries] final case class IvfEntry(spec: IvfSpec, k: Int,
+      queries: QuerySet = QuerySet.Sample(16), serve: Serve = Inline,
+      trainOpq: Boolean = false)
+
+  /** Every ANN top-k of the catalog — flat scan, LSH buckets or
+    * inverted file, on raw, int8 or PQ codes — one Spark implementation
+    * ([[Similarity.ivfSearch]], [[Similarity.ivfBuild]] +
+    * [[Similarity.ivfProbe]] for the gates, the stored PQ index) and
+    * one oracle generator ([[IvfSpec.oracleSql]]) serve every row, so
+    * no two entries' coarse levels, fits, codes or rankings can drift.
+    * Every score is rounded, every centroid an exact decimal mean
+    * (k-means and PQ fits unroll in the oracle) and every hyperplane a
+    * plan literal the oracle inlines, so each row is hash-verified.
+    *
+    * PQ parameterization: 64 dims → 16 subspaces × 4 dims, 32 L2
+    * centroids each, 2 Lloyd rounds, |Q| = 16, k = 5. On this corpus
+    * (uniform-random embeddings — PQ's worst case, no cluster
+    * structure) exhaustive recall@5 vs brute is 0.16 (m=4, kSub=8),
+    * 0.29 (8,16), 0.54 (16,32), 0.65 (16,64); (16,32) is the
+    * cost/recall balance. The fixtures where residuals, balancing and
+    * rotation each win recall are pinned in SimilaritySpec. */
   private[queries] val ivfEntries: Seq[(String, IvfEntry)] = {
     import Coarse._
     val flat = IvfSpec(Exhaustive)
     val labels = IvfSpec(Labels(nprobe = 3))
     val int8 = labels.copy(codes = IvfCodes.Int8())
+    val pq = IvfCodes.Pq(m = 16, kSub = 32, iters = 2)
+    val sampled = pq.copy(fitSampleMod = 4L)
+    val balanced = pq.copy(layout = PqLayout.VarianceBalanced)
+    val res = pq.copy(residual = true)
     Seq(
       // the exact O(Q·C) reference: the one proportional query set
       "s_ann_brute" -> IvfEntry(flat, 5, QuerySet.EveryNth(40)),
@@ -886,130 +918,94 @@ object TrainingData {
         QuerySet.Gate(10)),
       "s_ann_incremental_sqrt" -> IvfEntry(
         IvfSpec(Kmeans(SqrtRows, iters = 2, nprobe = 3)), 3,
-        QuerySet.Gate(10)))
+        QuerySet.Gate(10)),
+      "s_ann_pq" -> IvfEntry(flat.copy(codes = pq), 5),
+      "s_ann_pq_sampled" -> IvfEntry(flat.copy(codes = sampled), 5),
+      "s_ann_pq_balanced" -> IvfEntry(flat.copy(codes = balanced), 5),
+      "s_ann_pq_opq" -> IvfEntry(flat.copy(codes = pq), 5, trainOpq = true),
+      "s_ann_ivf_pq" -> IvfEntry(labels.copy(codes = pq), 5),
+      "s_ann_ivf_pq_sampled" -> IvfEntry(labels.copy(codes = sampled), 5),
+      "s_ann_ivf_pq_res" -> IvfEntry(labels.copy(codes = res), 5),
+      "s_ann_ivf_pq_resbal" -> IvfEntry(labels.copy(
+        codes = res.copy(layout = PqLayout.VarianceBalanced)), 5),
+      "s_ann_ivf_pq_opq_res" ->
+        IvfEntry(labels.copy(codes = res), 5, trainOpq = true),
+      "s_ann_ivf_pq_opq_res_sampled" -> IvfEntry(labels.copy(
+        codes = res.copy(fitSampleMod = 4L)), 5, trainOpq = true),
+      // s_ann_filtered's predicate and widening on the codes
+      "s_ann_filtered_pq" -> IvfEntry(IvfSpec(Labels(nprobe = 5), pq,
+        Some(AnnFilter.vecIdMultipleOf(3))), 5),
+      "s_ann_filtered_pq_auto" -> IvfEntry(IvfSpec(
+        Labels(nprobe = 3, widenForFilter = true), pq,
+        Some(AnnFilter.vecIdMultipleOf(2))), 5),
+      "s_ann_index_scan" ->
+        IvfEntry(labels.copy(codes = sampled), 5, serve = Stored()),
+      "s_ann_index_append" -> IvfEntry(labels.copy(codes = sampled), 5,
+        serve = Stored(appendMod = Some(10))))
   }
 
-  private def runIvf(entry: IvfEntry)(s: SparkSession, d: String)
-      : DataFrame = {
+  private def runIvf(name: String, entry: IvfEntry)(s: SparkSession,
+      d: String): DataFrame = {
     val e = embs(s, d)
-    entry.queries match {
-      case QuerySet.Sample(n) =>
-        Similarity.ivfSearch(entry.spec, e, Similarity.sampleQueryIds(
-            e.filter(col("embedding").isNotNull), n), entry.k)
-          .orderBy("query_id", "rank")
-      case QuerySet.EveryNth(n) =>
-        Similarity.ivfSearchWhere(entry.spec, e, col("vec_id") % n === 0,
+    val spec = entry.spec.codes match {
+      case pq: IvfCodes.Pq if entry.trainOpq =>
+        val (_, c) = graft.ext.Pca.covMeans(e, pq.dim)
+        val rot = graft.ext.Pca.opqRotation(c, pq.dim, m = pq.m)
+        recordRotation(name, d, rot)
+        rotated(entry.spec, rot)
+      case _ => entry.spec
+    }
+    (entry.queries, entry.serve) match {
+      case (QuerySet.Sample(n), serve) =>
+        val qids = Similarity.sampleQueryIds(
+          e.filter(col("embedding").isNotNull), n)
+        serve match {
+          case Inline => Similarity.ivfSearch(spec, e, qids, entry.k)
+            .orderBy("query_id", "rank")
+          case Stored(appendMod) =>
+            val dir = java.nio.file.Files.createTempDirectory(s"graft_$name")
+              .toString
+            try {
+              appendMod match {
+                case None => Similarity.buildPqIndex(spec, e, dir)
+                case Some(n) =>
+                  Similarity.buildPqIndex(spec,
+                    e.filter(col("vec_id") % n =!= 0), dir)
+                  Similarity.appendToPqIndex(s, dir, spec,
+                    e.filter(col("vec_id") % n === 0))
+              }
+              Similarity.pqIndexProbe(s, dir, spec, e, qids, entry.k)
+                .orderBy("query_id", "rank").localCheckpoint()
+            } finally QueryUtil.deleteRecursively(dir)
+        }
+      case (QuerySet.EveryNth(n), _) =>
+        Similarity.ivfSearchWhere(spec, e, col("vec_id") % n === 0,
             entry.k)
           .orderBy("query_id", "rank")
-      case QuerySet.Gate(n) =>
-        Similarity.ivfProbe(entry.spec,
-            Similarity.ivfBuild(entry.spec, e.filter(col("vec_id") % n =!= 0)),
+      case (QuerySet.Gate(n), _) =>
+        Similarity.ivfProbe(spec,
+            Similarity.ivfBuild(spec, e.filter(col("vec_id") % n =!= 0)),
             e.filter(col("vec_id") % n === 0), entry.k)
           .orderBy("new_id", "rank")
     }
   }
 
-  /** One PQ catalog row: the [[PqSpec]] plus how the entry runs it.
-    *
-    *  - `trainOpq` — the OPQ rotation ([[graft.ext.Pca.opqRotation]],
-    *    Ge et al. 2013's parametric form: full Jacobi eigenbasis +
-    *    greedy eigenvalue allocation across the subspaces) is trained
-    *    at run time from the covariance integers `d_embed_cov`
-    *    hash-verifies, and runs as the spec's `Rotation` layout; the
-    *    rotation is a pure local function of those integers (PcaSpec
-    *    pins its invariants) and the oracle replays the same literals,
-    *    dumped after the query runs ([[dynamicOracle]]);
-    *  - `stored` — served from the persisted index, built and
-    *    reclaimed per run ([[Similarity.buildPqIndex]] /
-    *    [[Similarity.pqIndexProbe]]); parquet round-trips the fit's
-    *    doubles bit-exactly, so the oracle is the inline spec's;
-    *  - `appendMod` — that index is built on the manifest
-    *    (`vec_id % n <> 0`) and the rest is appended without refit
-    *    ([[Similarity.appendToPqIndex]]); the oracle fits on the
-    *    manifest and encodes every row, so fit-freeze semantics are
-    *    hash-verified end to end. */
-  private final case class PqEntry(spec: PqSpec,
-      trainOpq: Boolean = false, stored: Boolean = false,
-      appendMod: Option[Int] = None)
-
-  /** The PQ / IVF-PQ family — one Spark implementation and one oracle
-    * generator ([[PqSpec.oracleSql]]) serve every row, so no two
-    * entries' fits, codes or ADC chains can drift. Catalog
-    * parameterization: 64 dims → 16 subspaces × 4 dims, 32 L2
-    * centroids each, 2 Lloyd rounds, |Q| = 16, k = 5. On this corpus
-    * (uniform-random embeddings — PQ's worst case, no cluster
-    * structure) exhaustive recall@5 vs brute is 0.16 (m=4, kSub=8),
-    * 0.29 (8,16), 0.54 (16,32), 0.65 (16,64); (16,32) is the
-    * cost/recall balance. The fixtures where residuals, balancing and
-    * rotation each win recall are pinned in SimilaritySpec. */
-  private val PqTopK = 5 // both engines rank the same k
-
-  private val pqEntries: Seq[(String, PqEntry)] = {
-    val pq = PqSpec(m = 16, kSub = 32, iters = 2)
-    val ivf = pq.copy(coarse = Some(Coarse.Labels(nprobe = 3)))
-    val balanced = PqLayout.VarianceBalanced
-    Seq(
-      "s_ann_pq" -> PqEntry(pq),
-      "s_ann_pq_sampled" -> PqEntry(pq.copy(fitSampleMod = 4L)),
-      "s_ann_pq_balanced" -> PqEntry(pq.copy(layout = balanced)),
-      "s_ann_pq_opq" -> PqEntry(pq, trainOpq = true),
-      "s_ann_ivf_pq" -> PqEntry(ivf),
-      "s_ann_ivf_pq_sampled" -> PqEntry(ivf.copy(fitSampleMod = 4L)),
-      "s_ann_ivf_pq_res" -> PqEntry(ivf.copy(residual = true)),
-      "s_ann_ivf_pq_resbal" ->
-        PqEntry(ivf.copy(residual = true, layout = balanced)),
-      "s_ann_ivf_pq_opq_res" ->
-        PqEntry(ivf.copy(residual = true), trainOpq = true),
-      "s_ann_ivf_pq_opq_res_sampled" -> PqEntry(
-        ivf.copy(residual = true, fitSampleMod = 4L), trainOpq = true),
-      // nprobe widened 3 → 5 for the ~1/3 selectivity (the
-      // raw-vector s_ann_filtered's stand-in predicate)
-      "s_ann_filtered_pq" -> PqEntry(ivf.copy(
-        coarse = Some(Coarse.Labels(nprobe = 5)),
-        filter = Some(AnnFilter.vecIdMultipleOf(3)))),
-      // nprobe derived from the selectivity: 6 of 10 on the fixture
-      "s_ann_filtered_pq_auto" -> PqEntry(ivf.copy(
-        coarse = Some(Coarse.Labels(nprobe = 3, widenForFilter = true)),
-        filter = Some(AnnFilter.vecIdMultipleOf(2)))),
-      "s_ann_index_scan" ->
-        PqEntry(ivf.copy(fitSampleMod = 4L), stored = true),
-      "s_ann_index_append" -> PqEntry(ivf.copy(fitSampleMod = 4L),
-        stored = true, appendMod = Some(10)))
-  }
-
-  private def runPq(name: String, entry: PqEntry)(s: SparkSession,
-      d: String): DataFrame = {
-    val e = embs(s, d)
-    val qids = Similarity.sampleQueryIds(
-      e.filter(col("embedding").isNotNull), n = 16)
-    val spec =
-      if (!entry.trainOpq) entry.spec
-      else {
-        val (_, c) = graft.ext.Pca.covMeans(e, entry.spec.dim)
-        val rot = graft.ext.Pca.opqRotation(c, entry.spec.dim,
-          m = entry.spec.m)
-        recordRotation(name, d, rot)
-        entry.spec.copy(layout = PqLayout.Rotation(rot))
-      }
-    if (!entry.stored)
-      Similarity.pqSearch(spec, e, qids, PqTopK)
-        .orderBy("query_id", "rank")
-    else {
-      val dir = java.nio.file.Files.createTempDirectory(s"graft_$name")
-        .toString
-      try {
-        entry.appendMod match {
-          case None => Similarity.buildPqIndex(spec, e, dir)
-          case Some(n) =>
-            Similarity.buildPqIndex(spec, e.filter(col("vec_id") % n =!= 0),
-              dir)
-            Similarity.appendToPqIndex(s, dir, spec,
-              e.filter(col("vec_id") % n === 0))
-        }
-        Similarity.pqIndexProbe(s, dir, spec, e, qids, PqTopK)
-          .orderBy("query_id", "rank").localCheckpoint()
-      } finally QueryUtil.deleteRecursively(dir)
+  /** `spec` with its PQ codes laid out by the rotation `rot`. */
+  private def rotated(spec: IvfSpec, rot: Array[Array[Double]]): IvfSpec =
+    spec.codes match {
+      case pq: IvfCodes.Pq =>
+        spec.copy(codes = pq.copy(layout = PqLayout.Rotation(rot)))
+      case _ => spec
     }
+
+  /** The oracle of every entry but the `trainOpq` rows, whose rotation
+    * only exists once the query ran ([[dynamicOracle]]). */
+  private def ivfOracles: Seq[(String, String)] = ivfEntries.collect {
+    case (n, e) if !e.trainOpq =>
+      n -> IvfSpec.oracleSql(e.spec, e.k, e.queries, e.serve match {
+        case Stored(Some(m)) => Some(s"vec_id % $m <> 0")
+        case _ => None
+      })
   }
 
   /** The rotation each `trainOpq` entry derived, keyed by entry name,
@@ -1029,12 +1025,11 @@ object TrainingData {
     * one dataset ran the entry in this JVM; none or several → a marker
     * statement that fails the compare loudly instead of passing
     * wrongly. */
-  private[graft] def rotationOracle(name: String, spec: PqSpec): String =
+  private[graft] def rotationOracle(name: String, spec: IvfSpec): String =
     opqRotations.getOrDefault(name, Map.empty).toSeq match {
       case Seq() => s"SELECT 'run $name before dumping its oracle' AS err"
       case Seq((_, rot)) =>
-        PqSpec.oracleSql(spec.copy(layout = PqLayout.Rotation(rot)),
-          PqTopK)
+        IvfSpec.oracleSql(rotated(spec, rot), 5, QuerySet.Sample(16))
       case many =>
         s"SELECT '$name ran against ${many.size} datasets in this " +
           "JVM - rotation ambiguous, rerun a single-dataset dump' AS err"
@@ -1043,7 +1038,7 @@ object TrainingData {
   /** Oracle statements that depend on state a query derives at run
     * time (plan-literal rotations). [[graft.SparkEntry.oracleSql]]
     * splices these in at dump time. */
-  def dynamicOracle: Map[String, String] = pqEntries.collect {
+  def dynamicOracle: Map[String, String] = ivfEntries.collect {
     case (n, e) if e.trainOpq => n -> rotationOracle(n, e.spec)
   }.toMap
 
@@ -3997,8 +3992,7 @@ object TrainingData {
     "m_features" -> (mFeatures _),
     "m_resize" -> (mResize _),
     "m_phash_dups" -> (mPhashDups _),
-  ) ++ pqEntries.map { case (n, e) => n -> (runPq(n, e) _) } ++
-    ivfEntries.map { case (n, e) => n -> (runIvf(e) _) } ++
+  ) ++ ivfEntries.map { case (n, e) => n -> (runIvf(n, e) _) } ++
     nearDupEntries.map { case (n, e) => n -> (runNearDup(e) _) } ++
     hybridEntries.map { case (n, e) => n -> (hybridRrf(e) _) } ++
     semDedupEntries.map { case (n, e) =>
@@ -4082,14 +4076,7 @@ object TrainingData {
     "m_features" -> mFeaturesSql,
     "m_resize" -> mResizeSql,
     "m_phash_dups" -> mPhashDupsSql,
-  ) ++ pqEntries.collect {
-    // trainOpq rows: dynamicOracle (plan-literal rotation, dumped
-    // after the query runs)
-    case (n, e) if !e.trainOpq => n -> PqSpec.oracleSql(e.spec, PqTopK,
-      fitWhere = e.appendMod.map(m => s"vec_id % $m <> 0"))
-  } ++ ivfEntries.map { case (n, e) =>
-    n -> IvfSpec.oracleSql(e.spec, e.k, e.queries)
-  } ++ nearDupEntries.map { case (n, e) =>
+  ) ++ ivfOracles ++ nearDupEntries.map { case (n, e) =>
     n -> NearDupSpec.oracleSql(e.spec, e.split)
   } ++ hybridEntries.map { case (n, e) => n -> hybridRrfSql(e)
   } ++ semDedupEntries.map { case (n, e) =>

@@ -14,12 +14,13 @@ class AppendSpec extends SparkSpec {
   import spark.implicits._
 
   // the catalog's stored-index spec (s_ann_index_scan/_append)
-  private val spec = PqSpec(m = 16, kSub = 32, iters = 2,
-    coarse = Some(Coarse.Labels(nprobe = 3)), fitSampleMod = 4L)
+  private val spec = IvfSpec(Coarse.Labels(nprobe = 3),
+    IvfCodes.Pq(m = 16, kSub = 32, iters = 2, fitSampleMod = 4L))
 
+  // (vec_id, sub, cid): each stored code array exploded by subspace
   private def codesOf(dir: String): Seq[(Long, Int, Int)] =
     spark.read.parquet(s"$dir/codes")
-      .select($"vec_id", $"sub", $"cid")
+      .select($"vec_id", posexplode($"codes").as(Seq("sub", "cid")))
       .as[(Long, Int, Int)].collect().sortBy(r => (r._1, r._2)).toSeq
 
   test("append freezes the fit: manifest codes are bit-identical " +
@@ -99,8 +100,8 @@ class AppendSpec extends SparkSpec {
     .map(i => (i, i % 3,
       Seq.tabulate(8)(d => ((i * 7 + d * 5) % 11).toFloat)))
     .toDF("vec_id", "label", "embedding")
-  private val smallSpec = PqSpec(m = 2, kSub = 2, iters = 1, dim = 8,
-    coarse = Some(Coarse.Labels(nprobe = 2)))
+  private val smallSpec = IvfSpec(Coarse.Labels(nprobe = 2),
+    IvfCodes.Pq(m = 2, kSub = 2, iters = 1, dim = 8))
 
   private def exists(path: String) = new java.io.File(path).exists()
 
@@ -136,6 +137,50 @@ class AppendSpec extends SparkSpec {
       for (e <- Seq(probe, append))
         assert(e.getMessage.contains("v1") &&
           e.getMessage.contains("rebuild required"), e.getMessage)
+    } finally graft.queries.QueryUtil.deleteRecursively(dir)
+  }
+
+  test("probe and append refuse a v2 layout (meta, no VERSION marker) " +
+      "and an unknown version, each with a rebuild-required error") {
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_append_v2").toString
+    try {
+      Similarity.buildPqIndex(smallSpec, small, dir)
+      // the marker and its local-filesystem checksum
+      val marker = new java.io.File(s"$dir/VERSION")
+      assert(marker.delete(), "the build wrote no VERSION marker")
+      new java.io.File(s"$dir/.VERSION.crc").delete()
+      def refusals() = Seq(
+        intercept[IllegalStateException] {
+          Similarity.pqIndexProbe(spark, dir, smallSpec, small,
+            Seq(0L).toDF("vec_id"), k = 3)
+        },
+        intercept[IllegalStateException] {
+          Similarity.appendToPqIndex(spark, dir, smallSpec, small)
+        })
+      for (e <- refusals())
+        assert(e.getMessage.contains("v2") &&
+          e.getMessage.contains("rebuild required"), e.getMessage)
+      java.nio.file.Files.write(marker.toPath, "9\n".getBytes("UTF-8"))
+      for (e <- refusals())
+        assert(e.getMessage.contains("v9") &&
+          e.getMessage.contains("rebuild required"), e.getMessage)
+    } finally graft.queries.QueryUtil.deleteRecursively(dir)
+  }
+
+  test("a probe whose spec has another m than the stored codebooks " +
+      "fails, naming both") {
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_append_m").toString
+    try {
+      Similarity.buildPqIndex(smallSpec, small, dir)
+      val e = intercept[IllegalArgumentException] {
+        Similarity.pqIndexProbe(spark, dir, smallSpec.copy(
+            codes = IvfCodes.Pq(m = 4, kSub = 2, iters = 1, dim = 8)),
+          small, Seq(0L).toDF("vec_id"), k = 3)
+      }
+      assert(e.getMessage.contains("m=2") && e.getMessage.contains("m=4"),
+        e.getMessage)
     } finally graft.queries.QueryUtil.deleteRecursively(dir)
   }
 

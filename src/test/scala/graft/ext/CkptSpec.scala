@@ -120,12 +120,13 @@ class CkptSpec extends SparkSpec {
       .map(i => (i, Seq.tabulate(8)(d => ((i * 13 + d * 3) % 17).toFloat)))
       .toDF("vec_id", "embedding")
     val qids = Seq(0L, 7L).toDF("vec_id")
-    val spec = PqSpec(m = 4, kSub = 4, iters = 2, dim = 8)
-    val local = Similarity.pqSearch(spec, embs, qids, k = 3)
+    val spec = IvfSpec(Coarse.Exhaustive,
+      IvfCodes.Pq(m = 4, kSub = 4, iters = 2, dim = 8))
+    val local = Similarity.ivfSearch(spec, embs, qids, k = 3)
       .orderBy("query_id", "rank").collect().map(_.toSeq).toSeq
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_pq")
     withMode("reliable", dir.toString) {
-      val rel = Similarity.pqSearch(spec, embs, qids, k = 3)
+      val rel = Similarity.ivfSearch(spec, embs, qids, k = 3)
         .orderBy("query_id", "rank").collect().map(_.toSeq).toSeq
       assert(rel == local)
       val nFiles = java.nio.file.Files.walk(dir)

@@ -101,12 +101,13 @@ class LloydFormSpec extends SparkSpec {
   test("PQ codebooks and label centroids: pqSearch is the same on both " +
       "fits, full, sampled, IVF-PQ and residual") {
     val qids = Seq(0L, 7L, 30L).toDF("vec_id")
-    val ivf = PqSpec(m = 4, kSub = 3, iters = 2, dim = 8,
-      coarse = Some(Coarse.Labels(nprobe = 1)))
-    for (spec <- Seq(PqSpec(m = 4, kSub = 4, iters = 2, dim = 8),
-        PqSpec(m = 2, kSub = 3, iters = 3, dim = 8, fitSampleMod = 3),
-        ivf, ivf.copy(residual = true, fitSampleMod = 2))) {
-      val (d, s) = bothForms(Similarity.pqSearch(spec, embs, qids, k = 5))
+    val pq = IvfCodes.Pq(m = 4, kSub = 3, iters = 2, dim = 8)
+    val ivf = IvfSpec(Coarse.Labels(nprobe = 1), pq)
+    for (spec <- Seq(IvfSpec(Coarse.Exhaustive, pq.copy(kSub = 4)),
+        IvfSpec(Coarse.Exhaustive, IvfCodes.Pq(m = 2, kSub = 3, iters = 3,
+          dim = 8, fitSampleMod = 3)),
+        ivf, ivf.copy(codes = pq.copy(residual = true, fitSampleMod = 2)))) {
+      val (d, s) = bothForms(Similarity.ivfSearch(spec, embs, qids, k = 5))
       assert(d == s, spec.toString)
     }
   }

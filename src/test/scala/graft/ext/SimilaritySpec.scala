@@ -8,10 +8,16 @@ class SimilaritySpec extends SparkSpec {
 
   // the PQ specs the tests share: the 8-dim fixtures' starved
   // codebooks and the catalog parameterization
-  private val ivf8 = PqSpec(m = 2, kSub = 2, iters = 2, dim = 8,
-    coarse = Some(Coarse.Labels(nprobe = 2)))
-  private val pq64 = PqSpec(m = 16, kSub = 32, iters = 2)
-  private val ivf64 = pq64.copy(coarse = Some(Coarse.Labels(nprobe = 3)))
+  private val ivf8 = IvfSpec(Coarse.Labels(nprobe = 2),
+    IvfCodes.Pq(m = 2, kSub = 2, iters = 2, dim = 8))
+  private val pq64 = IvfSpec(Coarse.Exhaustive,
+    IvfCodes.Pq(m = 16, kSub = 32, iters = 2))
+  private val ivf64 = pq64.copy(coarse = Coarse.Labels(nprobe = 3))
+  // the exhaustive PQ spec of `codes`, and `spec` with its PQ codes
+  // changed by `f`
+  private def flatPq(codes: IvfCodes.Pq) = IvfSpec(Coarse.Exhaustive, codes)
+  private def pqCopy(spec: IvfSpec)(f: IvfCodes.Pq => IvfCodes.Pq) =
+    spec.copy(codes = f(spec.pq.get))
 
   // the IVF family's spec shorthands: the flat scan, LSH buckets (seed
   // 42, 64 dims), label cells
@@ -202,6 +208,18 @@ class SimilaritySpec extends SparkSpec {
       assert(got == topK(emb,
         (q, n) => probed(emb(q)).contains(bucket(emb(n)))), s"$c")
     }
+    // PQ codes read the same guarded corpus: exhaustive, label cells
+    // and residual, every clean query answered and none of the three
+    // dropped rows ever a query or a neighbor
+    val pq = IvfCodes.Pq(m = 4, kSub = 4, iters = 2)
+    val dropped = Set(7L, 11L, NullElement)
+    for (spec <- Seq(flatPq(pq), IvfSpec(Coarse.Labels(2), pq),
+        IvfSpec(Coarse.Labels(2), pq.copy(residual = true)))) {
+      val got = Similarity.ivfSearch(spec, df, qids, 5)
+        .select("query_id", "neighbor_id").as[(Long, Long)].collect()
+      assert(got.map(_._1).toSet == queries.filterNot(dropped).toSet &&
+        got.forall { case (q, n) => !dropped(q) && !dropped(n) }, s"$spec")
+    }
   }
 
   test("an LSH spec fails loudly on an embedding of the wrong dim") {
@@ -257,7 +275,7 @@ class SimilaritySpec extends SparkSpec {
   test("a failed PQ search releases its persisted corpus") {
     val emb = graft.Tables.embeddings(spark, sf0001)
     val badIds = emb.select(col("vec_id").as("id")).limit(4)
-    assertReleasesCorpus(() => Similarity.pqSearch(ivf64, emb, badIds, 5))
+    assertReleasesCorpus(() => Similarity.ivfSearch(ivf64, emb, badIds, 5))
   }
 
   test("filtered ANN: every neighbor satisfies the predicate, all-" +
@@ -865,8 +883,8 @@ class SimilaritySpec extends SparkSpec {
       (i.toLong, v(i % 3, 0.01 * (i / 3))))
     val df = vecs.toDF("vec_id", "embedding")
     val qids = Seq(0L, 1L, 2L).toDF("vec_id")
-    val pq = Similarity.pqSearch(PqSpec(m = 2, kSub = 3, iters = 2,
-      dim = 8), df, qids, k = 3)
+    val pq = Similarity.ivfSearch(flatPq(IvfCodes.Pq(m = 2, kSub = 3,
+      iters = 2, dim = 8)), df, qids, k = 3)
     val byQ = pq.select("query_id", "neighbor_id")
       .as[(Long, Long)].collect().groupBy(_._1)
     assert(byQ.keySet == Set(0L, 1L, 2L))
@@ -882,7 +900,7 @@ class SimilaritySpec extends SparkSpec {
     val truth = Similarity.ivfSearch(flat, emb, q16, 5)
       .select("query_id", "neighbor_id").as[(Long, Long)]
       .collect().toSet
-    val approx = Similarity.pqSearch(pq64, emb, q16, 5)
+    val approx = Similarity.ivfSearch(pq64, emb, q16, 5)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect()
     val recall = approx.count(truth.contains).toDouble / truth.size
     // uniform-random embeddings are PQ's worst case (no cluster
@@ -923,8 +941,9 @@ class SimilaritySpec extends SparkSpec {
       rows.map(t => (t._1, t._2)).count(truthB.contains)
         .toDouble / truthB.size
     }
-    val nonres = recallOf(Similarity.pqSearch(ivf8, df, qids, 3))
-    val res = recallOf(Similarity.pqSearch(ivf8.copy(residual = true),
+    val nonres = recallOf(Similarity.ivfSearch(ivf8, df, qids, 3))
+    val res = recallOf(Similarity.ivfSearch(
+      pqCopy(ivf8)(_.copy(residual = true)),
       df, qids, 3))
     // deterministic fits: measured non-residual 2/3, residual 3/4
     assert(res >= nonres,
@@ -944,9 +963,9 @@ class SimilaritySpec extends SparkSpec {
     def recallC(r: org.apache.spark.sql.DataFrame): Double =
       r.select("query_id", "neighbor_id").as[(Long, Long)]
         .collect().count(truth.contains).toDouble / truth.size
-    val nonresC = recallC(Similarity.pqSearch(ivf64, emb, q16, 5))
-    val resC = recallC(Similarity.pqSearch(
-      ivf64.copy(residual = true), emb, q16, 5))
+    val nonresC = recallC(Similarity.ivfSearch(ivf64, emb, q16, 5))
+    val resC = recallC(Similarity.ivfSearch(
+      pqCopy(ivf64)(_.copy(residual = true)), emb, q16, 5))
     assert(resC >= nonresC - 0.05,
       s"residual recall $resC collapsed vs non-residual $nonresC")
   }
@@ -970,11 +989,12 @@ class SimilaritySpec extends SparkSpec {
     def recallOf(r: org.apache.spark.sql.DataFrame): Double =
       r.select("query_id", "neighbor_id").as[(Long, Long)]
         .collect().count(truth.contains).toDouble / truth.size
-    val nonres = recallOf(Similarity.pqSearch(ivf8, df, qids, 3))
-    val res = recallOf(Similarity.pqSearch(ivf8.copy(residual = true),
+    val nonres = recallOf(Similarity.ivfSearch(ivf8, df, qids, 3))
+    val res = recallOf(Similarity.ivfSearch(
+      pqCopy(ivf8)(_.copy(residual = true)),
       df, qids, 3))
-    val resbal = recallOf(Similarity.pqSearch(ivf8.copy(residual = true,
-      layout = PqLayout.VarianceBalanced), df, qids, 3))
+    val resbal = recallOf(Similarity.ivfSearch(pqCopy(ivf8)(_.copy(
+      residual = true, layout = PqLayout.VarianceBalanced)), df, qids, 3))
     assert(resbal >= res,
       s"composition $resbal < residual parent $res")
     assert(resbal >= nonres,
@@ -992,10 +1012,10 @@ class SimilaritySpec extends SparkSpec {
     def recallC(r: org.apache.spark.sql.DataFrame): Double =
       r.select("query_id", "neighbor_id").as[(Long, Long)]
         .collect().count(truthC.contains).toDouble / truthC.size
-    val resC = recallC(Similarity.pqSearch(
-      ivf64.copy(residual = true), emb, q16, 5))
-    val resbalC = recallC(Similarity.pqSearch(ivf64.copy(residual = true,
-      layout = PqLayout.VarianceBalanced), emb, q16, 5))
+    val resC = recallC(Similarity.ivfSearch(
+      pqCopy(ivf64)(_.copy(residual = true)), emb, q16, 5))
+    val resbalC = recallC(Similarity.ivfSearch(pqCopy(ivf64)(_.copy(
+      residual = true, layout = PqLayout.VarianceBalanced)), emb, q16, 5))
     assert(resbalC >= resC - 0.1,
       s"composition recall $resbalC collapsed vs residual $resC")
   }
@@ -1032,12 +1052,14 @@ class SimilaritySpec extends SparkSpec {
       .select("query_id", "neighbor_id").as[(Long, Long)]
       .collect().toSet
     assert(truthRot == truth, "rotation moved the exact ground truth")
-    val res = recallOf(Similarity.pqSearch(ivf8.copy(residual = true),
+    val res = recallOf(Similarity.ivfSearch(
+      pqCopy(ivf8)(_.copy(residual = true)),
       df, qids, 3))
-    val opqExh = recallOf(Similarity.pqSearch(PqSpec(m = 2, kSub = 2,
-      iters = 2, dim = 8, layout = PqLayout.Rotation(rot)), df, qids, 3))
-    val opqRes = recallOf(Similarity.pqSearch(ivf8.copy(residual = true,
-      layout = PqLayout.Rotation(rot)), df, qids, 3))
+    val opqExh = recallOf(Similarity.ivfSearch(flatPq(IvfCodes.Pq(m = 2,
+      kSub = 2, iters = 2, dim = 8, layout = PqLayout.Rotation(rot))), df,
+      qids, 3))
+    val opqRes = recallOf(Similarity.ivfSearch(pqCopy(ivf8)(_.copy(
+      residual = true, layout = PqLayout.Rotation(rot))), df, qids, 3))
     assert(opqRes >= res,
       s"OPQ x residual $opqRes < residual parent $res")
     assert(opqRes >= opqExh,
@@ -1055,10 +1077,10 @@ class SimilaritySpec extends SparkSpec {
         .collect().count(truthC.contains).toDouble / truthC.size
     val (_, covC) = Pca.covMeans(emb, 64)
     val rotC = Pca.opqRotation(covC, 64, m = 16)
-    val resC = recallC(Similarity.pqSearch(
-      ivf64.copy(residual = true), emb, q16, 5))
-    val opqResC = recallC(Similarity.pqSearch(ivf64.copy(residual = true,
-      layout = PqLayout.Rotation(rotC)), emb, q16, 5))
+    val resC = recallC(Similarity.ivfSearch(
+      pqCopy(ivf64)(_.copy(residual = true)), emb, q16, 5))
+    val opqResC = recallC(Similarity.ivfSearch(pqCopy(ivf64)(_.copy(
+      residual = true, layout = PqLayout.Rotation(rotC))), emb, q16, 5))
     assert(opqResC >= resC - 0.1,
       s"OPQ x residual recall $opqResC collapsed vs residual $resC")
   }
@@ -1070,8 +1092,8 @@ class SimilaritySpec extends SparkSpec {
     val q16 = Similarity.sampleQueryIds(nn, 16)
     val pred = AnnFilter.vecIdMultipleOf(3)
     // catalog shape: nprobe widened 3 → 5 for ~1/3 selectivity
-    val got = Similarity.pqSearch(ivf64.copy(
-      coarse = Some(Coarse.Labels(nprobe = 5)), filter = Some(pred)),
+    val got = Similarity.ivfSearch(ivf64.copy(
+      coarse = Coarse.Labels(nprobe = 5), filter = Some(pred)),
       emb, q16, 5)
     assert(got.filter(pmod(col("neighbor_id"), lit(3)) =!= 0).isEmpty,
       "a result violated the candidate predicate")
@@ -1080,12 +1102,12 @@ class SimilaritySpec extends SparkSpec {
     // and codes are filter-agnostic, so adc_dot values are identical
     // row-for-row)
     val nLabels = nn.select("label").distinct().count().toInt
-    val allProbes = ivf64.copy(coarse = Some(Coarse.Labels(nprobe = nLabels)))
-    val all = Similarity.pqSearch(allProbes.copy(filter = Some(pred)),
+    val allProbes = ivf64.copy(coarse = Coarse.Labels(nprobe = nLabels))
+    val all = Similarity.ivfSearch(allProbes.copy(filter = Some(pred)),
         emb, q16, 5)
       .orderBy("query_id", "rank").collect().toSeq
     val nCorpus = nn.count().toInt
-    val exhaustive = Similarity.pqSearch(allProbes, emb, q16, nCorpus)
+    val exhaustive = Similarity.ivfSearch(allProbes, emb, q16, nCorpus)
       .filter(pmod(col("neighbor_id"), lit(3)) === 0)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id"))
@@ -1114,12 +1136,12 @@ class SimilaritySpec extends SparkSpec {
     assert(Similarity.autoNprobe(nn, 3, pred) == expected)
     assert(expected > 3 && expected < l,
       s"fixture widening degenerate (nprobe=$expected, labels=$l)")
-    val auto = Similarity.pqSearch(ivf64.copy(
-        coarse = Some(Coarse.Labels(nprobe = 3, widenForFilter = true)),
+    val auto = Similarity.ivfSearch(ivf64.copy(
+        coarse = Coarse.Labels(nprobe = 3, widenForFilter = true),
         filter = Some(filter)), emb, q16, 5)
       .orderBy("query_id", "rank").collect().toSeq
-    val hand = Similarity.pqSearch(ivf64.copy(
-        coarse = Some(Coarse.Labels(nprobe = expected)),
+    val hand = Similarity.ivfSearch(ivf64.copy(
+        coarse = Coarse.Labels(nprobe = expected),
         filter = Some(filter)), emb, q16, 5)
       .orderBy("query_id", "rank").collect().toSeq
     assert(auto == hand)
@@ -1140,7 +1162,7 @@ class SimilaritySpec extends SparkSpec {
       .createTempDirectory("pqidx_spec").toString
     try {
       spark.sharedState.cacheManager.clearCache()
-      val spec = ivf64.copy(fitSampleMod = 4L)
+      val spec = pqCopy(ivf64)(_.copy(fitSampleMod = 4L))
       Similarity.buildPqIndex(spec, emb, dir)
       val nLabelDirs = Option(new java.io.File(s"$dir/codes")
         .listFiles()).toSeq.flatten.count(_.getName.startsWith("label="))
@@ -1149,7 +1171,7 @@ class SimilaritySpec extends SparkSpec {
       val probe = Similarity.pqIndexProbe(spark, dir, spec, emb, q16,
         k = 5)
       val got = probe.orderBy("query_id", "rank").collect().toSeq
-      val want = Similarity.pqSearch(spec, emb, q16, 5)
+      val want = Similarity.ivfSearch(spec, emb, q16, 5)
         .orderBy("query_id", "rank").collect().toSeq
       assert(got == want, "stored layout changed results")
       // the executed codes scan reads ONLY the probed labels'
@@ -1165,7 +1187,7 @@ class SimilaritySpec extends SparkSpec {
         case o => o.children.flatMap(allScans)
       }
       val one = Similarity.pqIndexProbe(spark, dir,
-        spec.copy(coarse = Some(Coarse.Labels(nprobe = 1))), emb,
+        spec.copy(coarse = Coarse.Labels(nprobe = 1)), emb,
         q16.limit(1), k = 5)
       one.collect()
       val codeScans = allScans(one.queryExecution.executedPlan)
@@ -1198,7 +1220,7 @@ class SimilaritySpec extends SparkSpec {
     def v(a: Int, b: Int, j: Int): Seq[Float] =
       (Seq((2 * a - 1) * 10.0, (2 * b - 1) * 10.0) ++
         (2 until 8).map(i => 0.01 * j * (i - 1))).map(_.toFloat)
-    // vec_ids are assigned so the two SMALLEST ids — pqSearch's
+    // vec_ids are assigned so the two SMALLEST ids — the PQ fit's
     // deterministic codebook seeds — come from clusters (0,0) and
     // (1,1): both subspace signals are seeded with both of their
     // values, isolating the allocation effect from seed starvation.
@@ -1215,10 +1237,10 @@ class SimilaritySpec extends SparkSpec {
     def recallOf(r: org.apache.spark.sql.DataFrame): Double =
       r.select("query_id", "neighbor_id").as[(Long, Long)]
         .collect().count(truth.contains).toDouble / truth.size
-    val pq8 = PqSpec(m = 2, kSub = 2, iters = 2, dim = 8)
-    val contig = recallOf(Similarity.pqSearch(pq8, df, qids, 3))
-    val balanced = recallOf(Similarity.pqSearch(
-      pq8.copy(layout = PqLayout.VarianceBalanced), df, qids, 3))
+    val pq8 = flatPq(IvfCodes.Pq(m = 2, kSub = 2, iters = 2, dim = 8))
+    val contig = recallOf(Similarity.ivfSearch(pq8, df, qids, 3))
+    val balanced = recallOf(Similarity.ivfSearch(
+      pqCopy(pq8)(_.copy(layout = PqLayout.VarianceBalanced)), df, qids, 3))
     assert(balanced > contig,
       s"balanced recall $balanced !> contiguous $contig on " +
         "anisotropic data")
@@ -1230,8 +1252,8 @@ class SimilaritySpec extends SparkSpec {
     // reward allocation
     val (_, cov) = Pca.covMeans(df, 8)
     val rot = Pca.opqRotation(cov, 8, m = 2)
-    val opq = recallOf(Similarity.pqSearch(
-      pq8.copy(layout = PqLayout.Rotation(rot)), df, qids, 3))
+    val opq = recallOf(Similarity.ivfSearch(
+      pqCopy(pq8)(_.copy(layout = PqLayout.Rotation(rot))), df, qids, 3))
     assert(opq >= balanced,
       s"trained rotation $opq < balanced heuristic $balanced on " +
         "anisotropic data")
@@ -1248,9 +1270,9 @@ class SimilaritySpec extends SparkSpec {
     def recallC(r: org.apache.spark.sql.DataFrame): Double =
       r.select("query_id", "neighbor_id").as[(Long, Long)]
         .collect().count(truthC.contains).toDouble / truthC.size
-    val plainC = recallC(Similarity.pqSearch(pq64, emb, q16, 5))
-    val balC = recallC(Similarity.pqSearch(
-      pq64.copy(layout = PqLayout.VarianceBalanced), emb, q16, 5))
+    val plainC = recallC(Similarity.ivfSearch(pq64, emb, q16, 5))
+    val balC = recallC(Similarity.ivfSearch(
+      pqCopy(pq64)(_.copy(layout = PqLayout.VarianceBalanced)), emb, q16, 5))
     assert(balC >= plainC - 0.15,
       s"balanced recall $balC collapsed vs contiguous $plainC")
   }
@@ -1261,13 +1283,15 @@ class SimilaritySpec extends SparkSpec {
     val emb = graft.Tables.embeddings(spark, sf0001)
     val nn = emb.filter(col("embedding").isNotNull)
     val q16 = Similarity.sampleQueryIds(nn, 16)
-    val full = Similarity.pqSearch(pq64, emb, q16, 5)
+    val full = Similarity.ivfSearch(pq64, emb, q16, 5)
       .orderBy("query_id", "rank").collect().toSeq
-    val mod1 = Similarity.pqSearch(pq64.copy(fitSampleMod = 1L), emb,
+    val mod1 = Similarity.ivfSearch(
+        pqCopy(pq64)(_.copy(fitSampleMod = 1L)), emb,
         q16, 5)
       .orderBy("query_id", "rank").collect().toSeq
     assert(mod1 == full)
-    val sampled = Similarity.pqSearch(pq64.copy(fitSampleMod = 4L), emb,
+    val sampled = Similarity.ivfSearch(
+        pqCopy(pq64)(_.copy(fitSampleMod = 4L)), emb,
         q16, 5)
       .orderBy("query_id", "rank")
       .select("query_id", "neighbor_id", "rank")
@@ -1297,13 +1321,15 @@ class SimilaritySpec extends SparkSpec {
     val emb = graft.Tables.embeddings(spark, sf0001)
     val nn = emb.filter(col("embedding").isNotNull)
     val q16 = Similarity.sampleQueryIds(nn, 16)
-    val full = Similarity.pqSearch(ivf64, emb, q16, 5)
+    val full = Similarity.ivfSearch(ivf64, emb, q16, 5)
       .orderBy("query_id", "rank").collect().toSeq
-    val mod1 = Similarity.pqSearch(ivf64.copy(fitSampleMod = 1L), emb,
+    val mod1 = Similarity.ivfSearch(
+        pqCopy(ivf64)(_.copy(fitSampleMod = 1L)), emb,
         q16, 5)
       .orderBy("query_id", "rank").collect().toSeq
     assert(mod1 == full)
-    val sampled = Similarity.pqSearch(ivf64.copy(fitSampleMod = 4L), emb,
+    val sampled = Similarity.ivfSearch(
+        pqCopy(ivf64)(_.copy(fitSampleMod = 4L)), emb,
         q16, 5)
       .orderBy("query_id", "rank")
       .select("query_id", "neighbor_id", "rank")
@@ -1337,15 +1363,17 @@ class SimilaritySpec extends SparkSpec {
     val q16 = Similarity.sampleQueryIds(nn, 16)
     val (_, cov) = Pca.covMeans(emb, 64)
     val rot = Pca.opqRotation(cov, 64, m = 16)
-    val opqRes = ivf64.copy(residual = true,
-      layout = PqLayout.Rotation(rot))
-    val full = Similarity.pqSearch(opqRes, emb, q16, 5)
+    val opqRes = pqCopy(ivf64)(_.copy(residual = true,
+      layout = PqLayout.Rotation(rot)))
+    val full = Similarity.ivfSearch(opqRes, emb, q16, 5)
       .orderBy("query_id", "rank").collect().toSeq
-    val mod1 = Similarity.pqSearch(opqRes.copy(fitSampleMod = 1L), emb,
+    val mod1 = Similarity.ivfSearch(
+        pqCopy(opqRes)(_.copy(fitSampleMod = 1L)), emb,
         q16, 5)
       .orderBy("query_id", "rank").collect().toSeq
     assert(mod1 == full)
-    val sampled = Similarity.pqSearch(opqRes.copy(fitSampleMod = 4L), emb,
+    val sampled = Similarity.ivfSearch(
+        pqCopy(opqRes)(_.copy(fitSampleMod = 4L)), emb,
         q16, 5)
       .orderBy("query_id", "rank")
       .select("query_id", "neighbor_id", "rank")
@@ -1417,11 +1445,12 @@ class SimilaritySpec extends SparkSpec {
         .select("cid", "centroid").as[(Int, Seq[Double])].collect()
         .map { case (cid, c) => (si, cid) -> c }
     }.toMap
-    // batched: what pqSearch actually runs (private — reached through
-    // the query, so compare through the LUT-visible quantity: the
-    // pqSearch output against a hand-built ADC over the per-sub fit)
+    // batched: what the PQ search actually runs (private — reached
+    // through the query, so compare through the LUT-visible quantity:
+    // the search output against a hand-built ADC over the per-sub fit)
     val qids = Similarity.sampleQueryIds(emb, 4).localCheckpoint()
-    val pq = Similarity.pqSearch(PqSpec(m = m, kSub = kSub, iters = 2),
+    val pq = Similarity.ivfSearch(
+      flatPq(IvfCodes.Pq(m = m, kSub = kSub, iters = 2)),
       emb, qids, k = 3)
     // hand ADC from the per-subspace reference fit
     val codes = (0 until m).flatMap { si =>
@@ -1453,17 +1482,17 @@ class SimilaritySpec extends SparkSpec {
     val got = pq.select("query_id", "neighbor_id")
       .as[(Long, Long)].collect().toSet
     assert(got == want,
-      "batched pqSearch diverged from the per-subspace reference ADC")
+      "batched PQ search diverged from the per-subspace reference ADC")
     // IVF×PQ with every label probed ranks the same candidate set as
     // the unpruned PQ scan — the pruning-only invariant (mirrors the
     // int8 nprobe=all spec)
     val nLabels = emb.select("label").distinct().count().toInt
-    val full = Similarity.pqSearch(PqSpec(m = m, kSub = kSub, iters = 2,
-      coarse = Some(Coarse.Labels(nprobe = nLabels))), emb, qids, k = 3)
+    val full = Similarity.ivfSearch(IvfSpec(Coarse.Labels(nprobe = nLabels),
+      IvfCodes.Pq(m = m, kSub = kSub, iters = 2)), emb, qids, k = 3)
       .select("query_id", "neighbor_id", "rank")
       .as[(Long, Long, Int)].collect().toSet
-    val plain = Similarity.pqSearch(PqSpec(m = m, kSub = kSub,
-      iters = 2), emb, qids, k = 3)
+    val plain = Similarity.ivfSearch(flatPq(IvfCodes.Pq(m = m, kSub = kSub,
+      iters = 2)), emb, qids, k = 3)
       .select("query_id", "neighbor_id", "rank")
       .as[(Long, Long, Int)].collect().toSet
     assert(full == plain,

@@ -893,7 +893,8 @@ class TrainingDataSpec extends SparkSpec {
     // a name no catalog entry uses, so queries other suites run in
     // this JVM cannot touch its state
     val name = "opq_oracle_spec_probe"
-    val spec = graft.ext.PqSpec(m = 16, kSub = 32, iters = 2)
+    val spec = graft.ext.IvfSpec(graft.ext.Coarse.Exhaustive,
+      graft.ext.IvfCodes.Pq(m = 16, kSub = 32, iters = 2))
     val none = TrainingData.rotationOracle(name, spec)
     assert(none.contains(s"run $name before dumping its oracle"), none)
     val rot = Array.tabulate(64, 64)((i, j) => if (i == j) 0.5 else 0.0)
