@@ -1125,7 +1125,7 @@ object Multimodal {
       .orderBy("doc_a", "doc_b")
     // The passing pair set is orders smaller than the fingerprint
     // frame: materialize it once and release the persist immediately
-    // (the cosineDupPairs hygiene) so repeated calls — every Bench
+    // (the embedDupPairs hygiene) so repeated calls — every Bench
     // rep, every spec — don't accumulate cached blocks.
     if (!materialize) pairs
     else {

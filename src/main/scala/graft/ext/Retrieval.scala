@@ -370,7 +370,7 @@ object Retrieval {
       .agg(countDistinct(col("doc_id")).as("n_docs"),
         count(lit(1)).as("n_hits"))
     // phrase-count-sized output: materialize once, release the
-    // postings cache immediately (the cosineDupPairs hygiene)
+    // postings cache immediately (the embedDupPairs hygiene)
     if (!materialize) result
     else {
       val out = result.localCheckpoint()

@@ -11,8 +11,9 @@ import org.apache.spark.sql.types._
   * Every cosine or PQ top-k is one [[IvfSpec]] run by [[ivfSearch]]:
   * the exhaustive scan broadcasts the (small) query set against the
   * corpus at O(|Q|·|C|) work; LSH buckets, label, k-means and
-  * two-level cells prune the candidates. SemDeDup ([[semDedup]]) has
-  * its own spec; MIPS
+  * two-level cells prune the candidates. SemDeDup ([[semDedup]]) and
+  * the embedding-cosine near-dups ([[embedDupPairs]],
+  * [[embedDupProbe]]: one [[EmbedDupSpec]]) have their own specs; MIPS
   * ([[mipsTopK]]) scores inner products over a norm-augmented corpus.
   */
 object Similarity {
@@ -68,22 +69,6 @@ object Similarity {
     Seq.fill(numPlanes)(Seq.fill(dim)(rnd.nextGaussian()))
   }
 
-  /** Sign-of-projection LSH bucket id (one int per vector).
-    *
-    * Reference composition, kept for the kernel-equivalence spec and
-    * for readers: the production paths ([[Coarse.Lsh]] cells, the
-    * dedup blocking below) use the [[graft.functions.HyperplaneBuckets]]
-    * kernel, which computes the identical bucket ids (same
-    * left-to-right IEEE dots, same bit layout) without inlining
-    * planes × dim literals into the plan —
-    * at auto-p scale the literal composition's analysis + Janino
-    * compile dominated cold runs (~100 s at sf0.01 vs ~1 s warm). */
-  def lshBucket(emb: Column, planes: Seq[Seq[Double]]): Column =
-    planes.zipWithIndex.map { case (plane, i) =>
-      val proj = dot(emb, typedLit(plane))
-      when(proj > 0, lit(1 << i)).otherwise(lit(0))
-    }.reduce(_ + _)
-
   /** Maximum-inner-product search (MIPS) via norm augmentation
     * (Bachrach et al. 2014, "XBOX"): when corpus vectors carry
     * meaningful NORMS (recommendation scores, popularity-weighted
@@ -104,12 +89,13 @@ object Similarity {
     * once (narrow projection; the 1-row max-norm frame broadcasts),
     * candidates come from a bucket equi-join against the broadcast
     * |Q|-row query frame, and no pair outside the query's bucket is
-    * ever scored. */
+    * ever scored. NULL, NULL-element and zero-norm embeddings drop
+    * ([[vectorRows]]), from the corpus and the queries alike; a dim
+    * mismatch fails fast. */
   def mipsTopK(embeddings: DataFrame, queryIds: DataFrame, k: Int,
       numPlanes: Int, seed: Long, dim: Int = 64): DataFrame = {
-    val base0 = embeddings.select(col("vec_id"),
-        toDouble(col("embedding")).as("emb"))
-      .filter(col("emb").isNotNull)
+    val base0 = vectorRows(embeddings, Seq(col("vec_id")), Some(dim),
+      "mipsTopK")
     val scaled = base0.select(col("vec_id"),
       transform(col("emb"), x =>
         x * (lit(1.0) + pmod(col("vec_id"), lit(5L)).cast("double")))
@@ -138,179 +124,85 @@ object Similarity {
       .filter(col("rank") <= k)
   }
 
-  /** Embedding-cosine near-duplicate pairs — the vector-space member
-    * of the dedup family (exact / Jaccard / MinHash / SimHash /
-    * cosine): all pairs with cosine ≥ `threshold`, found via
-    * multi-table hyperplane LSH blocking (OR-construction: `tables`
-    * independent tables of `planesPerTable` planes each; a pair is a
-    * candidate if it shares any table's bucket) and then exactly
-    * verified. Miss probability (1−(1−θ/π)^b)^T — e.g. 8 tables × 2
-    * planes ≈ 1.3% at cos 0.45.
+  /** Embedding-cosine near-duplicate pairs of `spec` — the
+    * vector-space member of the dedup family: every pair whose
+    * rounded cosine is ≥ the threshold among those sharing a bucket of
+    * any LSH table, as (vec_a, vec_b, cos_sim) with vec_a < vec_b.
+    * NULL, NULL-element and zero-norm embeddings drop ([[vectorRows]]:
+    * a zero vector's norm divides by zero); a dim mismatch fails fast.
     *
     * Scale shape mirrors [[Dedup.nearDupPairs]]: the bucket self-join
-    * ships only (vec_id, table, bucket); embeddings + precomputed
-    * norms reattach by id equi-join; per-(table,pair) duplicates are
-    * NOT deduplicated before verification (verification is one
-    * broadcast-join dot product — cheaper than a 10⁷-row distinct
-    * shuffle; the tiny passing set dedups at the end). */
-  def cosineDupPairs(embeddings: DataFrame, threshold: Double,
-      tables: Int, planesPerTable: Int, seed: Long,
-      dim: Int = 64): DataFrame = {
-    // feeds three plan subtrees (bucket keying + both reattaches) —
-    // persist like Dedup.nearDupPairs so the scan+norm runs once.
-    // NULL embeddings are dropped (they can never pair — pre-guard
-    // they bucketed to 0 and verified to null cos_sim, i.e. were
-    // dropped late); non-null rows fail fast on a dim mismatch:
-    // hyperplanes are generated at `dim`, and dot_product would
-    // otherwise NULL-out every projection, collapsing all vectors
-    // into one bucket with no visible error. assert_true is kept
-    // alive by the filter (a dropped column would be pruned).
-    val base = embeddings.select(col("vec_id"),
-        toDouble(col("embedding")).as("emb"))
-      .filter(col("emb").isNotNull)
-      .filter(coalesce(assert_true(size(col("emb")) === dim,
-        lit(s"cosineDupPairs: embedding dim != $dim")), lit(true)))
+    * ships only (vec_id, table, bucket); embeddings and norms reattach
+    * by id equi-join; a pair colliding in several tables is verified
+    * once per table (one dot product is cheaper than a distinct
+    * shuffle over every candidate) and the small passing set dedups
+    * at the end. */
+  def embedDupPairs(spec: EmbedDupSpec, embeddings: DataFrame): DataFrame =
+    embedDups(spec, embeddings, None)
+
+  /** Embedding-space benchmark decontamination with `spec`: the rows
+    * where `isEval` holds are the held-out eval set, the rest the
+    * training corpus, and candidates pair only across the split. One
+    * verdict row per eval vector: (eval_id, n_matches, best_sim — NULL
+    * when clean —, contaminated). Paraphrased eval items share no
+    * 5-grams with their source (the lexical `d_decontaminate` gate)
+    * but still sit at high cosine. The same rows as
+    * [[embedDupPairs]] drop. The eval side is a benchmark, constant
+    * while the corpus grows, so the bucket join probes the corpus's
+    * buckets with a small key set (the optimizer broadcasts it). */
+  def embedDupProbe(spec: EmbedDupSpec, embeddings: DataFrame,
+      isEval: Column): DataFrame =
+    embedDups(spec, embeddings, Some(isEval))
+
+  /** The one body of [[embedDupPairs]] and [[embedDupProbe]]: guarded
+    * base (persisted: it feeds the count, the keying and both
+    * reattaches) → every table's bucket from one kernel call → id-pair
+    * candidates → rounded-cosine verify → localCheckpoint, so the base
+    * is released before this returns. */
+  private def embedDups(spec: EmbedDupSpec, embeddings: DataFrame,
+      isEval: Option[Column]): DataFrame = {
+    val evalCol = isEval.map(_ => col("_eval")).toSeq
+    val base = vectorRows(embeddings,
+        col("vec_id") +: isEval.map(_.as("_eval")).toSeq,
+        Some(spec.dim), "EmbedDupSpec")
       .withColumn("norm", sqrt(dot(col("emb"), col("emb"))))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // one kernel call yields every table's bucket id — plan size is
-    // independent of tables × planes (vs the literal composition,
-    // whose codegen dominated cold runs at auto-p plane counts)
-    val keyed = base.select(col("vec_id"),
-      posexplode(graft.functions.HyperplaneBuckets(col("emb"),
-        (0 until tables).map(t =>
-          hyperplanes(planesPerTable, dim, seed + t)))))
-      .withColumnRenamed("pos", "table")
-      .withColumnRenamed("col", "bucket")
-    val cand = keyed.alias("a").join(keyed.alias("b"),
-        col("a.table") === col("b.table") &&
-        col("a.bucket") === col("b.bucket") &&
-        col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"))
-    val ea = base.select(col("vec_id").as("vec_a"), col("emb").as("emb_a"),
-      col("norm").as("norm_a"))
-    val eb = base.select(col("vec_id").as("vec_b"), col("emb").as("emb_b"),
-      col("norm").as("norm_b"))
-    // no broadcast hint: the optimizer broadcasts while base is small
-    // and falls back to an id-partitioned shuffle join at scale
-    val pairs = cand.join(ea, "vec_a").join(eb, "vec_b")
-      .select(col("vec_a"), col("vec_b"),
-        round(dot(col("emb_a"), col("emb_b")) /
-          (col("norm_a") * col("norm_b")), 6).as("cos_sim"))
-      .filter(col("cos_sim") >= threshold)
-      .distinct()
-    // The passing pair set is orders smaller than the corpus:
-    // materialize it once (localCheckpoint) and release the cached
-    // base immediately, instead of leaking the persist until the
-    // caller's frame is GC'd (long-lived sessions accumulate blocks).
-    val out = pairs.localCheckpoint()
-    base.unpersist()
-    out
-  }
-
-  /** [[cosineDupPairs]] in its SCALE-SAFE parameterization: the
-    * hyperplane count per table is derived from the corpus so the
-    * bucket count tracks n (2^planes ≈ n / targetBucketSize) and the
-    * per-bucket pair enumeration Σ|b|² stays ≈ n·targetBucketSize —
-    * LINEAR in the corpus. With planes fixed (the hash-verified
-    * `d_embed_dups` shape: 2 planes = 4 buckets per table) bucket
-    * population grows with n and the self-join is quadratic: at the
-    * 100× probe (200k vectors) 4 buckets/table means ~50k vectors per
-    * bucket ≈ 10^10 candidate pairs per table — unrunnable, the exact
-    * failure mode the deep probe caught. Growing planes with log n
-    * keeps per-table candidate generation sparse while the
-    * OR-construction over `tables` independent tables retains
-    * near-dup recall (miss probability for a pair at angle θ is
-    * (1−(1−θ/π)^p)^T — e.g. at cos 0.9, p=12, T=8: <6%; borderline
-    * pairs near the threshold lose more, which is the documented
-    * recall/cost trade every LSH blocking makes). Rows-only by
-    * contract: the oracle SQL inlines plane literals, whose count
-    * auto-p by definition doesn't fix;
-    * SimilaritySpec asserts auto ≡ explicit at the derived p. */
-  def cosineDupPairsAuto(embeddings: DataFrame, threshold: Double,
-      tables: Int, targetBucketSize: Long, seed: Long,
-      dim: Int = 64): DataFrame = {
-    require(targetBucketSize >= 1, "targetBucketSize must be >= 1")
-    // bounded driver-side scalar (count), as the row-derived k rules
-    val n = embeddings.filter(col("embedding").isNotNull).count()
-    val buckets = math.max(2L,
-      (n + targetBucketSize - 1) / targetBucketSize)
-    val planes = math.max(1,
-      math.min(24, 64 - java.lang.Long.numberOfLeadingZeros(buckets - 1)))
-    cosineDupPairs(embeddings, threshold, tables, planes, seed, dim)
-  }
-
-  /** Semantic (embedding-level) benchmark decontamination — the
-    * embedding-space complement of the lexical 5-gram gate
-    * (`d_decontaminate`): paraphrased or lightly-rewritten eval items
-    * share no 5-grams with their corpus source but still sit at high
-    * cosine, which is how modern decontamination actually audits a
-    * pretraining corpus (cf. SemDeDup's cross-split variant). The
-    * `isEval` predicate splits the embedded corpus into the held-out
-    * eval set and the training side; candidate pairs are generated
-    * ONLY across the split, through the same multi-table hyperplane
-    * buckets as [[cosineDupPairs]] (one kernel call, all tables),
-    * then exact-cosine verified at `threshold`. Output: one verdict
-    * row per eval vector — match count, best similarity (NULL when
-    * clean), contaminated flag.
-    *
-    * Scale shape: the eval side is a benchmark — constant-sized while
-    * the corpus grows — so the bucket join degenerates to "probe the
-    * corpus's bucket index with a tiny key set" (the
-    * `d_incremental_minhash` ingest-gate shape; the optimizer
-    * broadcasts the eval side on its own). Per-bucket work is
-    * |E_b|·|C_b| with |E_b| bounded by the eval set; raising planes
-    * with log n bounds |C_b| exactly as [[cosineDupPairsAuto]]
-    * argues. Only ids and bucket keys shuffle; vectors reattach by id
-    * for the verified candidates. */
-  def embedDecontaminate(embeddings: DataFrame, isEval: Column,
-      threshold: Double, tables: Int, planesPerTable: Int, seed: Long,
-      dim: Int = 64): DataFrame = {
-    // same base guards as cosineDupPairs (NULL embeddings can never
-    // pair; dim mismatch fails fast), plus the eval flag computed
-    // once from the caller's predicate
-    val base = embeddings.withColumn("_eval", isEval)
-      .select(col("vec_id"), col("_eval"),
-        toDouble(col("embedding")).as("emb"))
-      .filter(col("emb").isNotNull)
-      .filter(coalesce(assert_true(size(col("emb")) === dim,
-        lit(s"embedDecontaminate: embedding dim != $dim")), lit(true)))
-      .withColumn("norm", sqrt(dot(col("emb"), col("emb"))))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val keyed = base.select(col("vec_id"), col("_eval"),
-      posexplode(graft.functions.HyperplaneBuckets(col("emb"),
-        (0 until tables).map(t =>
-          hyperplanes(planesPerTable, dim, seed + t)))))
-      .withColumnRenamed("pos", "table")
-      .withColumnRenamed("col", "bucket")
-    // cross-split candidates only: eval × corpus within a bucket
-    val cand = keyed.filter(col("_eval")).alias("a")
-      .join(keyed.filter(!col("_eval")).alias("b"),
-        col("a.table") === col("b.table") &&
-        col("a.bucket") === col("b.bucket"))
-      .select(col("a.vec_id").as("eval_id"),
-        col("b.vec_id").as("corpus_id"))
-      .distinct()
-    val ea = base.select(col("vec_id").as("eval_id"),
-      col("emb").as("emb_a"), col("norm").as("norm_a"))
-    val eb = base.select(col("vec_id").as("corpus_id"),
-      col("emb").as("emb_b"), col("norm").as("norm_b"))
-    val hits = cand.join(ea, "eval_id").join(eb, "corpus_id")
-      .select(col("eval_id"), col("corpus_id"),
-        round(dot(col("emb_a"), col("emb_b")) /
-          (col("norm_a") * col("norm_b")), 6).as("cos_sim"))
-      .filter(col("cos_sim") >= threshold)
-    val perEval = hits.groupBy(col("eval_id"))
-      .agg(count(lit(1)).as("n_matches"), max(col("cos_sim")).as("best_sim"))
-    val out = base.filter(col("_eval"))
-      .select(col("vec_id").as("eval_id"))
-      .join(perEval, Seq("eval_id"), "left")
-      .select(col("eval_id"),
-        coalesce(col("n_matches"), lit(0L)).as("n_matches"),
-        col("best_sim"),
-        col("n_matches").isNotNull.as("contaminated"))
-      .localCheckpoint()
-    base.unpersist()
-    out
+    try {
+      val planes = spec.planes(base.count())
+      val keyed = base.select(col("vec_id") +: evalCol :+
+          posexplode(graft.functions.HyperplaneBuckets(col("emb"),
+            (0 until spec.tables).map(t =>
+              hyperplanes(planes, spec.dim, spec.seed + t)))): _*)
+        .withColumnsRenamed(Map("pos" -> "table", "col" -> "bucket"))
+      val (a, b, order) =
+        if (isEval.isEmpty) (keyed, keyed, col("a.vec_id") < col("b.vec_id"))
+        else (keyed.filter(col("_eval")), keyed.filter(!col("_eval")), lit(true))
+      val cand = a.alias("a").join(b.alias("b"),
+          col("a.table") === col("b.table") &&
+          col("a.bucket") === col("b.bucket") && order)
+        .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"))
+      def side(s: String) = base.select(col("vec_id").as(s"vec_$s"),
+        col("emb").as(s"emb_$s"), col("norm").as(s"norm_$s"))
+      // no broadcast hint: the optimizer broadcasts while base is small
+      // and falls back to an id-partitioned shuffle join at scale
+      val hits = cand.join(side("a"), "vec_a").join(side("b"), "vec_b")
+        .select(col("vec_a"), col("vec_b"),
+          round(dot(col("emb_a"), col("emb_b")) /
+            (col("norm_a") * col("norm_b")), 6).as("cos_sim"))
+        .filter(col("cos_sim") >= spec.threshold)
+        .distinct()
+      val out = if (isEval.isEmpty) hits else {
+        val perEval = hits.groupBy(col("vec_a").as("eval_id"))
+          .agg(count(lit(1)).as("n_matches"),
+            max(col("cos_sim")).as("best_sim"))
+        base.filter(col("_eval")).select(col("vec_id").as("eval_id"))
+          .join(perEval, Seq("eval_id"), "left")
+          .select(col("eval_id"),
+            coalesce(col("n_matches"), lit(0L)).as("n_matches"),
+            col("best_sim"), col("n_matches").isNotNull.as("contaminated"))
+      }
+      out.localCheckpoint()
+    } finally base.unpersist()
   }
 
   /** Deterministic Lloyd's k-means over an embedding frame
@@ -807,6 +699,8 @@ object Similarity {
     * doubles). The final coverage pass is the same narrow projection
     * plus a map-side-combined count. Total O(kN) — the cost floor for
     * the greedy guarantee; FAISS seeds coarse quantizers the same way.
+    * NULL, NULL-element and zero-norm embeddings drop ([[vectorRows]]):
+    * the corpus is the cosine corpus the rest of the family reads.
     */
   def kcenterSelect(embeddings: DataFrame, k: Int): DataFrame =
     kcenterSelectImpl(embeddings, k, materialize = true)
@@ -825,8 +719,8 @@ object Similarity {
     require(k >= 1, "k-center needs at least one center")
     val spark = embeddings.sparkSession
     import spark.implicits._
-    val baseLazy = embeddings.select(col("vec_id"),
-        toDouble(col("embedding")).as("emb"))
+    val baseLazy = vectorRows(embeddings, Seq(col("vec_id")), None,
+      "kcenterSelect")
     val base = if (materialize)
       baseLazy.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     else baseLazy
@@ -877,7 +771,7 @@ object Similarity {
       .agg(count(lit(1)).as("n_assigned"))
     // k rows total: materialize once and release the cached base
     // (same persist/localCheckpoint/unpersist hygiene as
-    // [[cosineDupPairs]]) — the returned frame no longer references
+    // [[embedDupPairs]]) — the returned frame no longer references
     // `base`, so repeated calls don't accumulate cached blocks.
     val result = centersDf.join(counts, Seq("sel_order"), "left")
       .select(col("sel_order"), col("vec_id"), col("radius"),
@@ -1306,9 +1200,10 @@ object Similarity {
         round(if (pq.residual) col("qc_dot") + adc else adc, 6)
     }
 
-  /** The cosine corpus read of the IVF and SemDeDup families: `keep`
-    * and `emb` (the embedding as doubles) of the rows whose vector has
-    * a cosine direction, mirrored by the oracles' corpus filter
+  /** The corpus read of every embedding operator (IVF, PQ, SemDeDup,
+    * the embedding near-dups, k-center, MIPS): `keep` and `emb` (the
+    * embedding as doubles) of the rows whose vector has a cosine
+    * direction, mirrored by the oracles' corpus filter
     * ([[graft.queries.QueryUtil.vectorRowsSql]]). NULL, NULL-element
     * and zero-norm embeddings drop: a NULL row would enter fine ranking
     * with a NULL cos_sim and surface whenever a probed cell holds fewer
@@ -1672,10 +1567,10 @@ object Similarity {
     * k2·dim doubles (the grid contract). A map-literal variant of
     * this projection measured ~10× slower end-to-end at sf0.01: the
     * k1·k2·dim literal re-enters analysis + Janino per assign, the
-    * exact cold-cost pathology the [[lshBucket]] kernel note
-    * documents — the broadcast row keeps plans small instead. `key`
-    * is `label` for the ANN grid, `cid` for the hierarchical
-    * SemDeDup ([[semDedup]]), `sub` for the PQ codebooks. */
+    * exact cold-cost pathology the
+    * [[graft.functions.HyperplaneBuckets]] kernel note documents — the
+    * broadcast row keeps plans small instead. `key` is `label` for the
+    * ANN grid, `cid` for the hierarchical SemDeDup ([[semDedup]]), `sub` for the PQ codebooks. */
   private def assignSubClusters(base: DataFrame, cents2: DataFrame,
       key: String, metric: Metric = Cosine): DataFrame = {
     // when the sub-codebook is a LocalRelation (a driver fit's state)

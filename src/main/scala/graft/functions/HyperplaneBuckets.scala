@@ -39,7 +39,7 @@ case class HyperplaneBuckets(child: Expression,
     "ragged plane matrix")
   // bucket ids are one int bitmap per table: `b |= 1 << p` wraps
   // silently at p >= 32 (1 << 32 == 1 in JVM semantics), which would
-  // merge buckets with no visible error. cosineDupPairsAuto caps its
+  // merge buckets with no visible error. EmbedDupSpec.planes caps its
   // derived plane count at 24, but direct callers can pass anything.
   require(planes.head.length <= 31,
     s"at most 31 planes per table (got ${planes.head.length}): " +

@@ -928,7 +928,7 @@ object Parity {
     // Projects.run materializes once; the narrow exploded melt persists
     // LAZILY so its three consumers share one copy inside the single
     // union job — the handle is held here and released after the
-    // eager evaluation below (the cosineDupPairs lifecycle pattern:
+    // eager evaluation below (the embedDupPairs lifecycle pattern:
     // a DataFrame persist is CacheManager-rooted and never GC-cleaned,
     // so without the unpersist every Bench rep would leak a cache)
     var meltCache: Option[DataFrame] = None

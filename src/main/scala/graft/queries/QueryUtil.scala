@@ -38,7 +38,7 @@ object QueryUtil {
   /** The embeddings rows (vec_id, label, emb) whose vector has a cosine
     * direction — no NULL, NULL-element or zero-norm vector — and that
     * pass the extra predicate `where` (`" AND …"`): the oracle side of
-    * the IVF and SemDeDup corpus read (`Similarity.vectorRows`).
+    * every embedding operator's corpus read (`Similarity.vectorRows`).
     * `list_dot_product` raises on a NULL element, and DuckDB does not
     * promise to short-circuit AND, so a CASE keeps it off those rows. */
   def vectorRowsSql(where: String = ""): String =

@@ -6,9 +6,9 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType,
   StructField, StructType}
 
 import graft.Tables
-import graft.ext.{AnnFilter, Coarse, Dedup, GramCap, IvfCodes, IvfSpec,
-  NearDupCandidates, NearDupMeasure, NearDupSpec, PqLayout,
-  QuerySet, SemDedupGrid, SemDedupSpec, Similarity, TextStats}
+import graft.ext.{AnnFilter, Coarse, Dedup, EmbedDupSpec, GramCap,
+  IvfCodes, IvfSpec, NearDupCandidates, NearDupMeasure, NearDupSpec,
+  PqLayout, QuerySet, SemDedupGrid, SemDedupSpec, Similarity, TextStats}
 import QueryUtil._
 
 /** Training-data pipeline operators over `documents` / `embeddings`:
@@ -726,7 +726,8 @@ object TrainingData {
 
   // ---- similarity search --------------------------------------------
   /** Greedy k-center diverse subset selection (k = 8) over the
-    * embedding corpus — [[Similarity.kcenterSelect]]. */
+    * embedding corpus — [[Similarity.kcenterSelect]]; NULL, NULL-element
+    * and zero-norm embeddings drop on both engines. */
   def sKcenter(s: SparkSession, d: String): DataFrame =
     Similarity.kcenterSelect(embs(s, d), 8)
 
@@ -735,7 +736,8 @@ object TrainingData {
     * scalar subqueries, then the coverage pass replayed with the same
     * (rounded distance, sel_order) tie order Spark's struct-min uses.
     * Distance is the engine-shared `⟨a,a⟩ − 2⟨a,b⟩ + ⟨b,b⟩` form,
-    * rounded to 6 dp before every comparison. */
+    * rounded to 6 dp before every comparison; the corpus is
+    * [[QueryUtil.vectorRowsSql]]. */
   private def sKcenterSql(k: Int): String = {
     val sb = new StringBuilder
     // MATERIALIZED is load-bearing: each cᵢ references all earlier
@@ -743,8 +745,8 @@ object TrainingData {
     // plain CTEs — the expansion is exponential in k and exhausts
     // file handles re-opening the parquet. Materializing caps every
     // CTE at one evaluation.
-    sb ++= "WITH base AS MATERIALIZED (SELECT vec_id," +
-      " embedding::DOUBLE[] AS emb FROM embeddings),\n"
+    sb ++= s"WITH base AS MATERIALIZED (SELECT vec_id, emb FROM (\n" +
+      s"  ${vectorRowsSql()})),\n"
     sb ++= "c1 AS MATERIALIZED (SELECT vec_id, emb, 0.0 AS d FROM base\n" +
       "  ORDER BY ((((vec_id % 2147483647) + 2147483647) % 2147483647)" +
       " * 48271) % 2147483647, vec_id LIMIT 1),\n"
@@ -778,9 +780,11 @@ object TrainingData {
 
   /** MIPS via norm augmentation ([[Similarity.mipsTopK]]): corpus
     * vectors carry synthetic norms `1 + (vec_id mod 5)`, queries are
-    * the 16 sampled raw embeddings, candidates come from sign-LSH
-    * buckets over the (dim+1)-augmented space, ranked by exact inner
-    * product. */
+    * the 16 ids sampled from the raw table, candidates come from
+    * sign-LSH buckets over the (dim+1)-augmented space, ranked by exact
+    * inner product. NULL, NULL-element and zero-norm embeddings drop
+    * from corpus and queries on both engines (the oracle reads
+    * [[QueryUtil.vectorRowsSql]] and samples the raw table too). */
   def sAnnMips(s: SparkSession, d: String): DataFrame =
     Similarity.mipsTopK(embs(s, d),
         Similarity.sampleQueryIds(embs(s, d), 16), k = 5,
@@ -790,8 +794,7 @@ object TrainingData {
   private val sAnnMipsSql = {
     // the LSH level's bucket SQL over the (dim+1)-augmented space
     val lsh = Coarse.Lsh(planes = 4, nprobe = 1, seed = 77L, dim = 65)
-    s"""WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS emb
-       |  FROM embeddings WHERE embedding IS NOT NULL),
+    s"""WITH base AS (${vectorRowsSql()}),
        |sc AS (SELECT vec_id, emb,
        |    list_transform(emb,
        |      x -> x * (1.0 + CAST(((vec_id % 5) + 5) % 5 AS DOUBLE))) AS sv
@@ -804,7 +807,7 @@ object TrainingData {
        |bk AS (SELECT vec_id, sv,
        |    ${lsh.bucketSql("av")} AS bucket
        |  FROM corp),
-       |${qidsSql()},
+       |${qidsSql(from = "embeddings")},
        |qa AS (SELECT b.vec_id, b.emb,
        |    list_append(b.emb, 0.0) AS aq
        |  FROM base b JOIN qids s ON b.vec_id = s.vec_id),
@@ -1168,155 +1171,44 @@ object TrainingData {
     }).orderBy("vec_id")
   }
 
-  /** Embedding-cosine near-dup pairs (the vector-space dedup variant):
-    * multi-table hyperplane LSH blocking + exact cosine verification.
-    * Oracle-verified — plane literals are inlined into the SQL. */
-  def dEmbedDups(s: SparkSession, d: String): DataFrame =
-    Similarity.cosineDupPairs(embs(s, d), threshold = 0.45,
-      tables = 8, planesPerTable = 2, seed = 7L)
-      .orderBy("vec_a", "vec_b")
+  /** One embedding-cosine near-dup catalog row: the [[EmbedDupSpec]],
+    * and for decontamination the `vec_id % n` split — the multiples of
+    * n are the eval set, judged against the rest. */
+  private final case class EmbedDupEntry(spec: EmbedDupSpec,
+      evalMod: Option[Int] = None)
 
-  /** [[dEmbedDups]] in its SCALE-SAFE parameterization: hyperplanes
-    * per table derived from the corpus (2^p ≈ n/64), keeping bucket
-    * population — and the per-bucket self-join — bounded as n grows.
-    * The fixed-plane catalog shape above is quadratic past ~10×
-    * (4 buckets per table regardless of n; the 100× deep probe
-    * measured it unrunnable at 200k vectors), so THIS is the shape a
-    * production corpus runs.
+  /** The embedding-cosine near-dup family — one Spark implementation
+    * ([[Similarity.embedDupPairs]], or [[Similarity.embedDupProbe]] for
+    * decontamination) and one oracle generator
+    * ([[EmbedDupSpec.oracleSql]]) serve every row, at 8 tables, seed 7
+    * and threshold 0.45:
     *
-    * Hash-verified since r9: `hyperplanes` draws planes SEQUENTIALLY
-    * from one seeded PRNG, so plane i is the same for every p ≥ i+1
-    * (prefix-stable) — the oracle inlines the first 12 plane literals
-    * per table and masks bit i with `i < p`, deriving
-    * p = clamp(1, 24, bitlength(max(2, ⌈n/64⌉) − 1)) from a scalar
-    * subquery over the non-null count, exactly
-    * [[Similarity.cosineDupPairsAuto]]'s integer arithmetic. p > 12
-    * (a > 262k-vector corpus at target 64) raises a SQL error rather
-    * than silently diverging; SimilaritySpec additionally pins
-    * auto ≡ explicit-p. */
-  def dEmbedDupsAuto(s: SparkSession, d: String): DataFrame =
-    Similarity.cosineDupPairsAuto(embs(s, d), threshold = 0.45,
-      tables = 8, targetBucketSize = 64L, seed = 7L)
-      .orderBy("vec_a", "vec_b")
-
-  private val dEmbedDupsAutoSql = {
-    val tables = 8
-    val pMax = 12 // covers corpora to 64·2^12 ≈ 262k vectors; guarded
-    val buckets = (0 until tables).map { t =>
-      val planes = Similarity.hyperplanes(pMax, 64, 7L + t)
-      val bucket = planes.zipWithIndex.map { case (pl, i) =>
-        val arr = "[" + pl.mkString(", ") + "]"
-        s"CASE WHEN $i < (SELECT p FROM params) AND " +
-        s"list_dot_product(emb, $arr) > 0 THEN ${1 << i} ELSE 0 END"
-      }.mkString(" + ")
-      s"SELECT vec_id, $t AS tbl, $bucket AS bucket FROM base"
-    }.mkString("\n  UNION ALL ")
-    s"""WITH praw AS (SELECT LEAST(24, GREATEST(1,
-       |    length(bin(GREATEST(2, (count(*) + 63) // 64) - 1)))) AS p
-       |  FROM embeddings WHERE embedding IS NOT NULL),
-       |params AS (SELECT CASE WHEN p > $pMax THEN CAST(error(
-       |    'd_embed_dups_auto oracle: derived p exceeds inlined $pMax '
-       |    || 'planes') AS INT) ELSE p END AS p FROM praw),
-       |base AS (SELECT vec_id, embedding::DOUBLE[] AS emb,
-       |    sqrt(list_dot_product(embedding::DOUBLE[],
-       |      embedding::DOUBLE[])) AS norm
-       |  FROM embeddings),
-       |keyed AS ($buckets),
-       |cand AS (SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
-       |  FROM keyed a JOIN keyed b
-       |  ON a.tbl = b.tbl AND a.bucket = b.bucket
-       |    AND a.vec_id < b.vec_id),
-       |v AS (SELECT vec_a, vec_b,
-       |    round(list_dot_product(ea.emb, eb.emb) /
-       |      (ea.norm * eb.norm), 6) AS cos_sim
-       |  FROM cand JOIN base ea ON ea.vec_id = cand.vec_a
-       |    JOIN base eb ON eb.vec_id = cand.vec_b)
-       |SELECT DISTINCT vec_a, vec_b, cos_sim FROM v
-       |WHERE cos_sim >= 0.45 ORDER BY vec_a, vec_b""".stripMargin
+    *  - `d_embed_dups`: 2 planes (4 buckets) per table;
+    *  - `d_embed_dups_auto`: max(2, ⌈n/64⌉) buckets per table, the
+    *    shape a production corpus runs (the fixed shape is quadratic
+    *    past ~10×: the 100× probe measured it unrunnable at 200k
+    *    vectors);
+    *  - `d_embed_decontaminate`: the fixed shape across the split
+    *    `vec_id % 20 = 0` (≈5% eval) — the embedding-space complement
+    *    of the lexical `d_decontaminate` gate. */
+  private val embedDupEntries: Seq[(String, EmbedDupEntry)] = {
+    val fixed = EmbedDupSpec(tables = 8, Coarse.Fixed(4), seed = 7L,
+      threshold = 0.45)
+    Seq(
+      "d_embed_dups" -> EmbedDupEntry(fixed),
+      "d_embed_dups_auto" -> EmbedDupEntry(
+        fixed.copy(buckets = Coarse.PerRowsMin2(64))),
+      "d_embed_decontaminate" -> EmbedDupEntry(fixed, Some(20)))
   }
 
-  private val dEmbedDupsSql = {
-    val tables = 8
-    val planesPerTable = 2
-    val buckets = (0 until tables).map { t =>
-      val planes = Similarity.hyperplanes(planesPerTable, 64, 7L + t)
-      val bucket = planes.zipWithIndex.map { case (pl, i) =>
-        val arr = "[" + pl.mkString(", ") + "]"
-        s"CASE WHEN list_dot_product(emb, $arr) > 0 " +
-        s"THEN ${1 << i} ELSE 0 END"
-      }.mkString(" + ")
-      s"SELECT vec_id, $t AS tbl, $bucket AS bucket FROM base"
-    }.mkString("\n  UNION ALL ")
-    s"""WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS emb,
-       |    sqrt(list_dot_product(embedding::DOUBLE[],
-       |      embedding::DOUBLE[])) AS norm
-       |  FROM embeddings),
-       |keyed AS ($buckets),
-       |cand AS (SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
-       |  FROM keyed a JOIN keyed b
-       |  ON a.tbl = b.tbl AND a.bucket = b.bucket
-       |    AND a.vec_id < b.vec_id),
-       |v AS (SELECT vec_a, vec_b,
-       |    round(list_dot_product(ea.emb, eb.emb) /
-       |      (ea.norm * eb.norm), 6) AS cos_sim
-       |  FROM cand JOIN base ea ON ea.vec_id = cand.vec_a
-       |    JOIN base eb ON eb.vec_id = cand.vec_b)
-       |SELECT DISTINCT vec_a, vec_b, cos_sim FROM v
-       |WHERE cos_sim >= 0.45 ORDER BY vec_a, vec_b""".stripMargin
-  }
-
-  /** Semantic benchmark decontamination
-    * ([[Similarity.embedDecontaminate]]): the embedding-space
-    * complement of the lexical `d_decontaminate` gate — eval items
-    * whose wording changed but whose meaning (embedding) still
-    * matches a training document. Eval split = `vec_id % 20 = 0`
-    * (≈5%), same hyperplane-bucket family and 0.45 threshold as
-    * `d_embed_dups`; one verdict row per eval vector, hash-verified
-    * with inlined plane literals. */
-  def dEmbedDecontaminate(s: SparkSession, d: String): DataFrame =
-    Similarity.embedDecontaminate(embs(s, d),
-        col("vec_id") % 20 === 0, threshold = 0.45,
-        tables = 8, planesPerTable = 2, seed = 7L)
-      .orderBy("eval_id")
-
-  private val dEmbedDecontaminateSql = {
-    val tables = 8
-    val planesPerTable = 2
-    val buckets = (0 until tables).map { t =>
-      val planes = Similarity.hyperplanes(planesPerTable, 64, 7L + t)
-      val bucket = planes.zipWithIndex.map { case (pl, i) =>
-        val arr = "[" + pl.mkString(", ") + "]"
-        s"CASE WHEN list_dot_product(emb, $arr) > 0 " +
-        s"THEN ${1 << i} ELSE 0 END"
-      }.mkString(" + ")
-      s"SELECT vec_id, is_eval, $t AS tbl, $bucket AS bucket FROM base"
-    }.mkString("\n  UNION ALL ")
-    s"""WITH base AS (SELECT vec_id, vec_id % 20 = 0 AS is_eval,
-       |    embedding::DOUBLE[] AS emb,
-       |    sqrt(list_dot_product(embedding::DOUBLE[],
-       |      embedding::DOUBLE[])) AS norm
-       |  FROM embeddings WHERE embedding IS NOT NULL),
-       |keyed AS ($buckets),
-       |cand AS (SELECT DISTINCT a.vec_id AS eval_id,
-       |    b.vec_id AS corpus_id
-       |  FROM keyed a JOIN keyed b
-       |  ON a.tbl = b.tbl AND a.bucket = b.bucket
-       |  WHERE a.is_eval AND NOT b.is_eval),
-       |hits AS (SELECT * FROM (SELECT eval_id, corpus_id,
-       |    round(list_dot_product(ea.emb, eb.emb) /
-       |      (ea.norm * eb.norm), 6) AS cos_sim
-       |  FROM cand JOIN base ea ON ea.vec_id = cand.eval_id
-       |    JOIN base eb ON eb.vec_id = cand.corpus_id)
-       |  WHERE cos_sim >= 0.45),
-       |per AS (SELECT eval_id, count(*) AS n_matches,
-       |    max(cos_sim) AS best_sim
-       |  FROM hits GROUP BY eval_id)
-       |SELECT b.vec_id AS eval_id,
-       |  coalesce(p.n_matches, 0) AS n_matches, p.best_sim,
-       |  p.n_matches IS NOT NULL AS contaminated
-       |FROM base b LEFT JOIN per p ON b.vec_id = p.eval_id
-       |WHERE b.is_eval ORDER BY eval_id""".stripMargin
-  }
+  /** Run `entry`, ordered by its id columns. */
+  private def runEmbedDup(entry: EmbedDupEntry)(s: SparkSession, d: String)
+      : DataFrame =
+    entry.evalMod.fold(Similarity.embedDupPairs(entry.spec, embs(s, d))
+        .orderBy("vec_a", "vec_b")) { m =>
+      Similarity.embedDupProbe(entry.spec, embs(s, d),
+        col("vec_id") % m === 0).orderBy("eval_id")
+    }
 
   // ---- multimodal plumbing ------------------------------------------
   /** Binary-column metadata pass: treat text bytes as an opaque media
@@ -3939,9 +3831,6 @@ object TrainingData {
     "s_kcenter" -> (sKcenter _),
     "s_ann_mips" -> (sAnnMips _),
     "d_embed_cov" -> (dEmbedCov _),
-    "d_embed_dups" -> (dEmbedDups _),
-    "d_embed_decontaminate" -> (dEmbedDecontaminate _),
-    "d_embed_dups_auto" -> (dEmbedDupsAuto _),
     "d_curation_pipeline" -> (dCurationPipeline _),
     "d_dup_clusters" -> (dDupClusters _),
     "d_dedup_keep_best" -> (dDedupKeepBest _),
@@ -3997,7 +3886,7 @@ object TrainingData {
     hybridEntries.map { case (n, e) => n -> (hybridRrf(e) _) } ++
     semDedupEntries.map { case (n, e) =>
       n -> ((s: SparkSession, d: String) => runSemDedup(e)(embs(s, d)))
-    }
+    } ++ embedDupEntries.map { case (n, e) => n -> (runEmbedDup(e) _) }
 
   val oracle: Map[String, String] = Map(
     "d_dedup_exact" -> dDedupExactSql,
@@ -4065,9 +3954,6 @@ object TrainingData {
     "s_kcenter" -> sKcenterSql(8),
     "s_ann_mips" -> sAnnMipsSql,
     "d_embed_cov" -> dEmbedCovSql,
-    "d_embed_dups" -> dEmbedDupsSql,
-    "d_embed_dups_auto" -> dEmbedDupsAutoSql,
-    "d_embed_decontaminate" -> dEmbedDecontaminateSql,
     "m_binary_meta" -> mBinaryMetaSql,
     "m_media_decode" -> mMediaDecodeSql,
     "m_frame_sample" -> mFrameSampleSql,
@@ -4081,5 +3967,7 @@ object TrainingData {
   } ++ hybridEntries.map { case (n, e) => n -> hybridRrfSql(e)
   } ++ semDedupEntries.map { case (n, e) =>
     n -> SemDedupSpec.oracleSql(e.spec, e.split)
+  } ++ embedDupEntries.map { case (n, e) =>
+    n -> EmbedDupSpec.oracleSql(e.spec, e.evalMod)
   }
 }

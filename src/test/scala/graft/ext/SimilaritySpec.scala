@@ -460,17 +460,39 @@ class SimilaritySpec extends SparkSpec {
 
   test("cosine dup pairs finds duplicate/near-dup vectors, skips distant") {
     // dim-64 vectors: 0 and 1 identical, 2 a scaled copy (cos 1.0),
-    // 3 orthogonal-ish noise
+    // 3 orthogonal-ish noise, 4 the negated unit; 5 is all-zero (its
+    // norm would divide by zero), 6 has a NULL element, 7 is NULL —
+    // none of the three may raise or pair
     val unit = Seq.fill(64)(1.0f)
     val scaled = unit.map(_ * 2.5f)
     val ortho = (0 until 64).map(i => if (i % 2 == 0) 1.0f else -1.0f)
     val vecs = Seq(
-      (0L, unit), (1L, unit), (2L, scaled), (3L, ortho.toSeq))
+      (0L, unit), (1L, unit), (2L, scaled), (3L, ortho.toSeq),
+      (4L, unit.map(-_)), (5L, Seq.fill(64)(0.0f)), (6L, unit),
+      (7L, null.asInstanceOf[Seq[Float]]))
       .toDF("vec_id", "embedding")
-    val got = Similarity.cosineDupPairs(vecs, threshold = 0.99,
-      tables = 8, planesPerTable = 2, seed = 7L)
+      .withColumn("embedding", when(col("vec_id") === 6L,
+          transform(col("embedding"), (x, j) => when(j =!= 3, x)))
+        .otherwise(col("embedding")))
+    val fixed = EmbedDupSpec(tables = 8, Coarse.Fixed(4), seed = 7L,
+      threshold = 0.99)
+    assert(fixed.planes(sys.error("a fixed rule never counts")) == 2)
+    val got = Similarity.embedDupPairs(fixed, vecs)
       .select("vec_a", "vec_b").as[(Long, Long)].collect().toSet
     assert(got == Set((0L, 1L), (0L, 2L), (1L, 2L)))
+    // a row-derived rule equals the fixed rule at its derived plane
+    // count, 2^p ≈ n/64, and still finds the corpus near-dups
+    val emb = graft.Tables.embeddings(spark, sf0001)
+    val n = emb.filter(col("embedding").isNotNull).count()
+    val planes = 64 - java.lang.Long.numberOfLeadingZeros(
+      math.max(2L, (n + 63) / 64) - 1)
+    def pairs(spec: EmbedDupSpec) = Similarity.embedDupPairs(spec, emb)
+      .select("vec_a", "vec_b").as[(Long, Long)].collect().toSet
+    val auto = fixed.copy(buckets = Coarse.PerRowsMin2(64), threshold = 0.45)
+    assert(auto.planes(n) == planes)
+    val autoPairs = pairs(auto)
+    assert(autoPairs == pairs(auto.copy(buckets = Coarse.Fixed(1 << planes))))
+    assert(autoPairs.nonEmpty, "auto-p blocking must still surface near-dups")
   }
 
   test("semDedup drops higher-id near-dups within clusters, keeps " +
@@ -703,23 +725,6 @@ class SimilaritySpec extends SparkSpec {
     assert(!got.exists(_._1 == 1L))
     assert(got.map(_._1).toSeq == Seq(2L, 3L))
     assert(got.forall(_._2 != 1))
-  }
-
-  test("cosineDupPairsAuto equals cosineDupPairs at the derived plane " +
-      "count and still finds the corpus near-dups") {
-    val emb = graft.Tables.embeddings(spark, sf0001)
-    val n = emb.filter(col("embedding").isNotNull).count()
-    val buckets = math.max(2L, (n + 63) / 64)
-    val planes = math.max(1, math.min(24,
-      64 - java.lang.Long.numberOfLeadingZeros(buckets - 1)))
-    val auto = Similarity.cosineDupPairsAuto(emb, threshold = 0.45,
-      tables = 8, targetBucketSize = 64L, seed = 7L)
-      .select("vec_a", "vec_b").as[(Long, Long)].collect().toSet
-    val explicit = Similarity.cosineDupPairs(emb, threshold = 0.45,
-      tables = 8, planesPerTable = planes, seed = 7L)
-      .select("vec_a", "vec_b").as[(Long, Long)].collect().toSet
-    assert(auto == explicit)
-    assert(auto.nonEmpty, "auto-p blocking must still surface near-dups")
   }
 
   test("int8 query-id overload matches the predicate form, and IVF×int8 " +
@@ -1400,8 +1405,7 @@ class SimilaritySpec extends SparkSpec {
         s"vs full-fit $recallFull")
   }
 
-  test("embedDecontaminate flags planted cross-split near-dups, " +
-      "ignores eval-eval and corpus-corpus pairs, drops NULLs") {
+  test("EmbedDupSpec probe flags cross-split near-dups; NULL/zero rows drop") {
     def v(axis: Int): Seq[Float] =
       (0 until 64).map(i => if (i == axis) 1.0f else 0.0f)
     val near = (0 until 64).map(i =>
@@ -1414,11 +1418,18 @@ class SimilaritySpec extends SparkSpec {
       (4L, v(20)),         // eval: clean (only eval 8 matches it)
       (8L, v(20)),         // eval: identical to eval 4 — must NOT flag
       (5L, v(30)),         // corpus: far
-      (12L, null.asInstanceOf[Seq[Float]])) // NULL eval — no verdict
+      (12L, null.asInstanceOf[Seq[Float]]), // NULL eval — no verdict
+      (16L, Seq.fill(64)(0.0f)),            // zero eval — no verdict
+      (20L, v(0)),         // eval, NULL element below — no verdict
+      (9L, Seq.fill(64)(0.0f)),             // zero corpus — never a match
+      (13L, v(20)))        // corpus, NULL element below — never a match
       .toDF("vec_id", "embedding")
-    val got = Similarity.embedDecontaminate(vecs,
-        col("vec_id") % 4 === 0, threshold = 0.9,
-        tables = 8, planesPerTable = 2, seed = 7L)
+      .withColumn("embedding", when(col("vec_id").isin(20L, 13L),
+          transform(col("embedding"), (x, j) => when(j =!= 5, x)))
+        .otherwise(col("embedding")))
+    val spec = EmbedDupSpec(tables = 8, Coarse.Fixed(4), seed = 7L,
+      threshold = 0.9)
+    val got = Similarity.embedDupProbe(spec, vecs, col("vec_id") % 4 === 0)
       .select("eval_id", "n_matches", "contaminated")
       .as[(Long, Long, Boolean)].collect()
       .map { case (k, n, c) => k -> ((n, c)) }.toMap

@@ -114,7 +114,7 @@ class ArrayOpsSpec extends SparkSpec {
     val both = vecs.select(
       HyperplaneBuckets($"emb", allPlanes).as("fast"),
       array(allPlanes.map(p =>
-        Similarity.lshBucket($"emb", p)): _*).as("ref"))
+        LiteralLshBucket($"emb", p)): _*).as("ref"))
       .as[(Seq[Int], Seq[Int])].collect()
     both.foreach { case (fast, ref) => assert(fast == ref) }
     // dim mismatch must be null, not a silent one-bucket collapse
