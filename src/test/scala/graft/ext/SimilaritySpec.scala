@@ -480,15 +480,23 @@ class SimilaritySpec extends SparkSpec {
     val got = Similarity.embedDupPairs(fixed, vecs)
       .select("vec_a", "vec_b").as[(Long, Long)].collect().toSet
     assert(got == Set((0L, 1L), (0L, 2L), (1L, 2L)))
+  }
+
+  // the test name keeps the entry points the row-derived and fixed
+  // EmbedDupSpec rules replaced (cosineDupPairsAuto, cosineDupPairs)
+  test("cosineDupPairsAuto equals cosineDupPairs at the derived plane " +
+      "count and still finds the corpus near-dups") {
     // a row-derived rule equals the fixed rule at its derived plane
     // count, 2^p ≈ n/64, and still finds the corpus near-dups
+    val fixed = EmbedDupSpec(tables = 8, Coarse.Fixed(4), seed = 7L,
+      threshold = 0.45)
     val emb = graft.Tables.embeddings(spark, sf0001)
     val n = emb.filter(col("embedding").isNotNull).count()
     val planes = 64 - java.lang.Long.numberOfLeadingZeros(
       math.max(2L, (n + 63) / 64) - 1)
     def pairs(spec: EmbedDupSpec) = Similarity.embedDupPairs(spec, emb)
       .select("vec_a", "vec_b").as[(Long, Long)].collect().toSet
-    val auto = fixed.copy(buckets = Coarse.PerRowsMin2(64), threshold = 0.45)
+    val auto = fixed.copy(buckets = Coarse.PerRowsMin2(64))
     assert(auto.planes(n) == planes)
     val autoPairs = pairs(auto)
     assert(autoPairs == pairs(auto.copy(buckets = Coarse.Fixed(1 << planes))))
