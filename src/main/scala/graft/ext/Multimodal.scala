@@ -1068,20 +1068,7 @@ object Multimodal {
     * (the [[graft.ext.NearDupCandidates.MinShingle]] hot-block cap applies
     * unchanged if a corpus-common band emerges, e.g. all-zero
     * fingerprints from constant-byte blobs). */
-  def phashDupPairs(docs: DataFrame, maxHamming: Int): DataFrame =
-    phashDupPairsImpl(docs, maxHamming, materialize = true)
-
-  /** The same plan WITHOUT persist/localCheckpoint — full parquet
-    * lineage preserved for the scan audit (the public path severs it
-    * by design: localCheckpoint is what releases the cached
-    * fingerprint frame). Tests only; production callers want the
-    * materializing form. */
-  private[graft] def phashDupPairsPlan(docs: DataFrame,
-      maxHamming: Int): DataFrame =
-    phashDupPairsImpl(docs, maxHamming, materialize = false)
-
-  private def phashDupPairsImpl(docs: DataFrame, maxHamming: Int,
-      materialize: Boolean): DataFrame = {
+  def phashDupPairs(docs: DataFrame, maxHamming: Int): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.partitionBy("doc_id")
     // blobs shorter than the cell count would yield empty blocks
     // (degenerate fingerprints); route them to exact-hash dedup
@@ -1097,16 +1084,14 @@ object Multimodal {
         graft.functions.RollingHash.rolling_hash(
           col("text").substr((col("i") * blockLen + 1).cast("int"),
             blockLen.cast("int"))).as("h"))
-    val fpLazy = cells
+    val fp = cells
       .withColumn("mean",
         floor(sum(col("h")).over(w) / 64.0).cast("long"))
       .groupBy(col("doc_id"), (col("i") / 16).cast("int").as("band"))
       .agg(sum(when(col("h") > col("mean"),
           expr("CAST(shiftleft(1, CAST(i % 16 AS INT)) AS BIGINT)"))
         .otherwise(lit(0L))).cast("long").as("bkey"))
-    val fp = if (materialize)
-      fpLazy.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else fpLazy
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cand = fp.as("a").join(fp.as("b"),
         col("a.band") === col("b.band") &&
         col("a.bkey") === col("b.bkey") &&
@@ -1127,12 +1112,9 @@ object Multimodal {
     // frame: materialize it once and release the persist immediately
     // (the embedDupPairs hygiene) so repeated calls — every Bench
     // rep, every spec — don't accumulate cached blocks.
-    if (!materialize) pairs
-    else {
-      val out = pairs.localCheckpoint()
-      fp.unpersist()
-      out
-    }
+    val out = pairs.localCheckpoint()
+    fp.unpersist()
+    out
   }
 
   def mediaFromDocuments(s: SparkSession, dir: String): Dataset[MediaRecord] = {

@@ -160,16 +160,37 @@ object Retrieval {
     * postings frame. At 100 TB the postings frame is the thing a
     * deployment persists (partitioned by term); the probe then never
     * touches text at all. */
-  def phraseSearch(docs: DataFrame, phrases: DataFrame): DataFrame =
-    phraseSearchImpl(docs, phrases, materialize = true)
-
-  /** The same plan WITHOUT persist/localCheckpoint — full parquet
-    * lineage preserved for the scan audit (the public path severs it:
-    * materializing the filtered postings once is what stops the
-    * corpus-sized token explode from running twice). Tests only. */
-  private[graft] def phraseSearchPlan(docs: DataFrame,
-      phrases: DataFrame): DataFrame =
-    phraseSearchImpl(docs, phrases, materialize = false)
+  def phraseSearch(docs: DataFrame, phrases: DataFrame): DataFrame = {
+    val post = docs.select(col("doc_id"),
+        posexplode(TextStats.tokens(col("text"))).as(Seq("pos", "term")))
+    // the ≤ 2·|phrases| query terms collect driver-side (the
+    // phrase-frame contract, job-free from a LocalRelation) and filter
+    // the postings as literals, as phraseIndexProbe does: a join with
+    // the distinct of a few-row frame fans out over
+    // defaultParallelism tasks
+    val terms = phrases.select(col("w1"), col("w2")).collect()
+      .flatMap(r => Seq(r.getString(0), r.getString(1))).distinct.toSeq
+    // BOTH adjacency legs read the filtered postings; without
+    // materialization each leg re-runs the corpus-sized token explode
+    // (measured: the doubled pass dominated the 1000x probe at 5M
+    // docs). The frame is query-term-df-sized — cheap to cache.
+    val qpost = post.filter(col("term").isin(terms: _*))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val leg1 = qpost.join(broadcast(phrases), col("term") === col("w1"))
+      .select(col("pid"), col("w1"), col("w2"), col("doc_id"),
+        col("pos"))
+    val leg2 = qpost.select(col("term").as("w2"),
+      col("doc_id"), (col("pos") - 1).as("pos"))
+    val result = leg1.join(leg2, Seq("w2", "doc_id", "pos"))
+      .groupBy(col("pid"), col("w1"), col("w2"))
+      .agg(countDistinct(col("doc_id")).as("n_docs"),
+        count(lit(1)).as("n_hits"))
+    // phrase-count-sized output: materialize once, release the
+    // postings cache immediately (the embedDupPairs hygiene)
+    val out = result.localCheckpoint()
+    qpost.unpersist()
+    out
+  }
 
   /** Bucket count for the persisted postings layout: wide enough that
     * a handful of query terms prunes most of the index, small enough
@@ -338,44 +359,5 @@ object Retrieval {
       a.join(b, Seq("doc_id", "pos"))
         .groupBy(col("w1"), col("w2"))
         .agg(count(lit(1)).as("n_bg")))
-  }
-
-  /** `materialize = false`: no persist, lineage recompute per leg. */
-  private def phraseSearchImpl(docs: DataFrame, phrases: DataFrame,
-      materialize: Boolean): DataFrame = {
-    val post = docs.select(col("doc_id"),
-        posexplode(TextStats.tokens(col("text"))).as(Seq("pos", "term")))
-    // the ≤ 2·|phrases| query terms collect driver-side (the
-    // phrase-frame contract, job-free from a LocalRelation) and filter
-    // the postings as literals, as phraseIndexProbe does: a join with
-    // the distinct of a few-row frame fans out over
-    // defaultParallelism tasks
-    val terms = phrases.select(col("w1"), col("w2")).collect()
-      .flatMap(r => Seq(r.getString(0), r.getString(1))).distinct.toSeq
-    // BOTH adjacency legs read the filtered postings; without
-    // materialization each leg re-runs the corpus-sized token explode
-    // (measured: the doubled pass dominated the 1000x probe at 5M
-    // docs). The frame is query-term-df-sized — cheap to cache.
-    val qpostLazy = post.filter(col("term").isin(terms: _*))
-    val qpost =
-      if (materialize) qpostLazy.persist(StorageLevel.MEMORY_AND_DISK)
-      else qpostLazy
-    val leg1 = qpost.join(broadcast(phrases), col("term") === col("w1"))
-      .select(col("pid"), col("w1"), col("w2"), col("doc_id"),
-        col("pos"))
-    val leg2 = qpost.select(col("term").as("w2"),
-      col("doc_id"), (col("pos") - 1).as("pos"))
-    val result = leg1.join(leg2, Seq("w2", "doc_id", "pos"))
-      .groupBy(col("pid"), col("w1"), col("w2"))
-      .agg(countDistinct(col("doc_id")).as("n_docs"),
-        count(lit(1)).as("n_hits"))
-    // phrase-count-sized output: materialize once, release the
-    // postings cache immediately (the embedDupPairs hygiene)
-    if (!materialize) result
-    else {
-      val out = result.localCheckpoint()
-      qpost.unpersist()
-      out
-    }
   }
 }

@@ -702,28 +702,13 @@ object Similarity {
     * NULL, NULL-element and zero-norm embeddings drop ([[vectorRows]]):
     * the corpus is the cosine corpus the rest of the family reads.
     */
-  def kcenterSelect(embeddings: DataFrame, k: Int): DataFrame =
-    kcenterSelectImpl(embeddings, k, materialize = true)
-
-  /** [[kcenterSelect]] WITHOUT persist/localCheckpoint — the k driver
-    * passes recompute the projection, but the returned frame keeps
-    * its full parquet lineage for the scan audit (the public path
-    * severs it: localCheckpoint is what lets `base` unpersist).
-    * Tests only. */
-  private[graft] def kcenterSelectPlan(embeddings: DataFrame,
-      k: Int): DataFrame =
-    kcenterSelectImpl(embeddings, k, materialize = false)
-
-  private def kcenterSelectImpl(embeddings: DataFrame, k: Int,
-      materialize: Boolean): DataFrame = {
+  def kcenterSelect(embeddings: DataFrame, k: Int): DataFrame = {
     require(k >= 1, "k-center needs at least one center")
     val spark = embeddings.sparkSession
     import spark.implicits._
-    val baseLazy = vectorRows(embeddings, Seq(col("vec_id")), None,
+    val base = vectorRows(embeddings, Seq(col("vec_id")), None,
       "kcenterSelect")
-    val base = if (materialize)
-      baseLazy.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else baseLazy
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // k passes reuse `base`; a corpus smaller than k would exhaust the
     // isin-filtered argmax mid-loop (empty collect) — fail fast with
     // the actual counts instead of an ArrayIndexOutOfBoundsException.
@@ -777,12 +762,9 @@ object Similarity {
       .select(col("sel_order"), col("vec_id"), col("radius"),
         coalesce(col("n_assigned"), lit(0L)).as("n_assigned"))
       .orderBy("sel_order")
-    if (!materialize) result
-    else {
-      val out = result.localCheckpoint()
-      base.unpersist()
-      out
-    }
+    val out = result.localCheckpoint()
+    base.unpersist()
+    out
   }
 
   /** Fitted PQ codebooks, collected once (m·kSub rows, the fit

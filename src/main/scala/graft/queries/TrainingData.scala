@@ -7,8 +7,9 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType,
 
 import graft.Tables
 import graft.ext.{AnnFilter, Coarse, Dedup, EmbedDupSpec, GramCap,
-  IvfCodes, IvfSpec, NearDupCandidates, NearDupMeasure, NearDupSpec,
-  PqLayout, QuerySet, SemDedupGrid, SemDedupSpec, Similarity, TextStats}
+  IvfCodes, IvfSpec, LmModel, LmSpec, NearDupCandidates, NearDupMeasure,
+  NearDupSpec, PqLayout, QuerySet, SemDedupGrid, SemDedupSpec, Similarity,
+  TextStats}
 import QueryUtil._
 
 /** Training-data pipeline operators over `documents` / `embeddings`:
@@ -2189,8 +2190,8 @@ object TrainingData {
     * unigram attach joins broadcast a VOCABULARY-sized frame; the
     * totals are two 1-row broadcast frames; the top-50 compiles to
     * TakeOrderedAndProject over the vocabulary²-bounded scored frame
-    * (per-partition top-n — no global sort shuffle), and the final
-    * rank window runs over 50 rows. */
+    * (per-partition top-n — no global sort shuffle), and the 50 rows
+    * are numbered on the driver. */
   def dCollocations(s: SparkSession, d: String): DataFrame = {
     val base = docs(s, d).select(TextStats.tokens(col("text")).as("toks"))
     val uni = base.select(explode(col("toks")).as("w"))
@@ -2214,12 +2215,12 @@ object TrainingData {
       .withColumn("lift",
         round(col("n_xy").cast("double") * col("n_tok") * col("n_tok") /
           (col("n_big").cast("double") * col("n_x") * col("n_y")), 6))
-    scored.orderBy(desc("lift"), asc("w1"), asc("w2")).limit(50)
-      .withColumn("rk", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .orderBy(desc("lift"), asc("w1"), asc("w2"))).cast("long"))
-      .select(col("rk"), col("w1"), col("w2"), col("n_xy"), col("lift"))
-      .orderBy("rk")
+    val top = scored.orderBy(desc("lift"), asc("w1"), asc("w2")).limit(50)
+      .select(col("w1"), col("w2"), col("n_xy"), col("lift"))
+    Similarity.localFrame(s, StructType(
+        StructField("rk", LongType, nullable = false) +: top.schema),
+      top.collect().toSeq.zipWithIndex.map { case (r, i) =>
+        Row(i + 1L, r.get(0), r.get(1), r.get(2), r.get(3)) })
   }
 
   private val dCollocationsSql =
@@ -2812,92 +2813,24 @@ object TrainingData {
        |FROM t LEFT JOIN agg a USING (doc_id)
        |ORDER BY doc_id""".stripMargin
 
-  /** Unigram-LM quality score (the perplexity-filter family, CCNet /
-    * Wenzek et al. 2020 shape, with the LM trained on the corpus
-    * itself): per-token negative log-probability −ln(cnt/total) under
-    * the corpus unigram distribution, averaged per document. Junk and
-    * off-distribution documents score high; fluent in-distribution
-    * text scores low — the standard cheap quality gate before an
-    * expensive model-based filter.
+  // ---- n-gram LM family -----------------------------------------------
+  /** The unigram MLE score: `d_lm_score` and the LM leg of
+    * `d_ccnet_buckets`. */
+  private val unigramLm = LmSpec(LmModel.Unigram)
+
+  /** The n-gram LM quality scores — one Spark body ([[LmSpec.score]])
+    * and one oracle generator ([[LmSpec.oracleSql]]) serve every row:
     *
-    * Scale shape: the vocabulary frame (token, cnt) is tiny relative
-    * to the corpus (Heaps' law) and aggregates with partial combine;
-    * the corpus total attaches as a broadcast 1-row cross join; the
-    * score join back to token positions is an equi-join on the token.
-    * Hot tokens ("the") skew that key, and LmSkewSpec PROVED that AQE
-    * does NOT rescue this shape when the vocab side outgrows the
-    * broadcast threshold (the SMJ's vocab child is an aggregate, not
-    * a raw shuffle read, so OptimizeSkewedJoin's pattern cannot
-    * match) — so the skew handling is deterministic instead: tokens
-    * with count ≥ `hotThreshold` take a broadcast-join branch (the
-    * hot set is tiny by definition — ≤ total/hotThreshold keys), the
-    * shuffled branch sees only sub-threshold keys, and the union of
-    * the two disjoint inner joins is exactly the original join.
-    * Cross-engine parity: the per-token score is rounded to 6
-    * decimals BEFORE the per-doc decimal-sum average
-    * (order-independent; ln parity with DuckDB is already exercised
-    * by [[dTfidf]]). */
-  def dLmScore(s: SparkSession, d: String): DataFrame =
-    lmScore(docs(s, d))
-
-  /** Operator body of [[dLmScore]] over any (doc_id, text) frame —
-    * separate so specs can assert the ordering property on a
-    * constructed corpus. `materialize = false` (dev/spec only) skips
-    * the persist + localCheckpoint so the returned frame carries the
-    * full logical plan — LmSkewSpec uses it to audit the hot-token
-    * join strategy that the checkpoint would otherwise truncate. */
-  def lmScore(documents: DataFrame, materialize: Boolean = true,
-      hotThreshold: Long = 1L << 20): DataFrame = {
-    val toksRaw = documents.select(col("doc_id"),
-      explode(TextStats.tokens(col("text"))).as("tok"))
-    val toks = if (materialize)
-      toksRaw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else toksRaw
-    val vocab = toks.groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
-    val total = vocab.agg(sum(col("cnt")).as("total"))
-    val scored = vocab.crossJoin(broadcast(total))
-      .select(col("tok"), col("cnt"), round(
-        log(col("total").cast("double") / col("cnt")), 6).as("nll_tok"))
-    // deterministic hot-key bypass (see scaladoc): hot scores
-    // broadcast — at most total/hotThreshold rows, and every one of
-    // them would otherwise pin its whole occurrence mass on a single
-    // shuffle partition; the anti-join keeps hot occurrences out of
-    // the shuffled branch so the skew never ships
-    val hotScores = scored.filter(col("cnt") >= hotThreshold).drop("cnt")
-    val coldScores = scored.filter(col("cnt") < hotThreshold).drop("cnt")
-    val coldToks = toks.join(broadcast(hotScores.select(col("tok"))),
-      Seq("tok"), "left_anti")
-    val perTok = toks.join(broadcast(hotScores), "tok")
-      .unionByName(coldToks.join(coldScores, "tok"))
-    val joined = perTok
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_tok"), avgDec(col("nll_tok")).as("nll"))
-      .orderBy("doc_id")
-    if (!materialize) joined
-    else {
-      val out = joined.localCheckpoint()
-      toks.unpersist()
-      out
-    }
-  }
-
-  /** Oracle CTE chain of the unigram LM (`tk`, `v`, `tot`, `sc`) —
-    * ONE SQL definition of the per-token NLL model, shared by
-    * [[dLmScoreSql]] and [[dCcnetBucketsSql]]. */
-  private val lmScoreCtes =
-    """tk AS (SELECT doc_id, unnest(string_split(text, ' '))
-      |    AS tok FROM documents),
-      |v AS (SELECT tok, count(*) AS cnt FROM tk GROUP BY 1),
-      |tot AS (SELECT sum(cnt) AS total FROM v),
-      |sc AS (SELECT tok, round(ln(total::DOUBLE / cnt), 6) AS nll_tok
-      |  FROM v, tot)""".stripMargin
-
-  private val dLmScoreSql =
-    s"""WITH $lmScoreCtes
-       |SELECT doc_id, count(*) AS n_tok,
-       |  ${sqlAvgDec("nll_tok")} AS nll
-       |FROM tk JOIN sc USING (tok)
-       |GROUP BY doc_id ORDER BY doc_id""".stripMargin
+    *  - `d_lm_score`: unigram MLE, the cheap gate before a model-based
+    *    quality filter;
+    *  - `d_lm_bigram`: add-one bigrams, which see word order;
+    *  - `d_lm_kn`: Kneser-Ney bigrams at D = 0.75 (exactly
+    *    binary-representable), the smoothing production n-gram LMs use
+    *    (the real CCNet filter is a 5-gram KN LM). */
+  private val lmEntries: Seq[(String, LmSpec)] = Seq(
+    "d_lm_score" -> unigramLm,
+    "d_lm_bigram" -> LmSpec(LmModel.AddOneBigram),
+    "d_lm_kn" -> LmSpec(LmModel.KneserNey))
 
   /** CCNet-style perplexity bucketing (Wenzek et al. 2020,
     * arXiv:1911.00359, public): per-language tercile split of the
@@ -2916,7 +2849,7 @@ object TrainingData {
   def dCcnetBuckets(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val dd = docs(s, d)
-    val withLang = lmScore(dd)
+    val withLang = LmSpec.score(unigramLm, dd)
       .join(dd.select(col("doc_id"), col("lang")), Seq("doc_id"))
       .withColumn("micro", round(col("nll") * 1e6).cast("long"))
     val hist = withLang.groupBy(col("lang"), col("micro"))
@@ -2939,12 +2872,10 @@ object TrainingData {
   }
 
   private val dCcnetBucketsSql =
-    s"""WITH $lmScoreCtes,
-       |s AS (SELECT doc_id, ${sqlAvgDec("nll_tok")} AS nll
-       |  FROM tk JOIN sc USING (tok) GROUP BY doc_id),
-       |wl AS (SELECT s.doc_id, d.lang, s.nll,
-       |    CAST(round(s.nll * 1000000) AS BIGINT) AS micro
-       |  FROM s JOIN documents d ON s.doc_id = d.doc_id),
+    s"""WITH ${LmSpec.oracleCtes(unigramLm)},
+       |wl AS (SELECT lm.doc_id, d.lang, lm.nll,
+       |    CAST(round(lm.nll * 1000000) AS BIGINT) AS micro
+       |  FROM lm JOIN documents d ON lm.doc_id = d.doc_id),
        |h AS (SELECT lang, micro, count(*) AS c FROM wl GROUP BY 1, 2),
        |cum AS (SELECT lang, micro, c,
        |    CAST(sum(c) OVER (PARTITION BY lang ORDER BY micro)
@@ -2978,8 +2909,8 @@ object TrainingData {
     * `buckets` rows regardless of corpus size, so the per-bucket
     * score frame BROADCASTS by construction and the per-token join
     * back is shuffle-free (hot buckets are irrelevant under a
-    * broadcast join — contrast the shuffled-join skew machinery
-    * [[lmScore]] needs for its unbounded exact vocabulary). One
+    * broadcast join — contrast the hot-key split
+    * [[graft.ext.LmSpec]] needs for its unbounded exact vocabulary). One
     * corpus scan, one fixed-width aggregate, one per-doc aggregate.
     * Parity: per-bucket score rounded to 6 decimals before the
     * order-independent decimal sum, as everywhere in this family. */
@@ -2989,15 +2920,13 @@ object TrainingData {
   /** Operator body of [[dDsir]] over any (doc_id, text, …) frame,
     * `isTarget` marking the target-distribution rows. */
   def dsirWeights(documents: DataFrame, isTarget: Column,
-      buckets: Int = 4096, materialize: Boolean = true): DataFrame = {
-    val toksRaw = documents.select(col("doc_id"),
+      buckets: Int = 4096): DataFrame = {
+    val toks = documents.select(col("doc_id"),
         isTarget.as("is_t"),
         explode(graft.functions.ArrayOps.array_poly_hash(
           TextStats.tokens(col("text")))).as("th"))
       .withColumn("b", col("th") % buckets).drop("th")
-    val toks = if (materialize)
-      toksRaw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else toksRaw
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val model = toks.groupBy(col("b"))
       .agg(count(lit(1)).as("cnt_r"),
         count(when(col("is_t"), 1)).as("cnt_t"))
@@ -3013,12 +2942,9 @@ object TrainingData {
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_tok"), sumDec(col("w")).as("logw"))
       .orderBy("doc_id")
-    if (!materialize) out
-    else {
-      val res = out.localCheckpoint()
-      toks.unpersist()
-      res
-    }
+      .localCheckpoint()
+    toks.unpersist()
+    out
   }
 
   private val dDsirSql =
@@ -3125,9 +3051,8 @@ object TrainingData {
     * derived FROM the per-source counts — a second aggregation of the
     * counted frame, not a re-scan — the corpus total attaches as a
     * broadcast 1-row cross join, and the per-term join is an
-    * equi-join on the token (AQE splits the hot-token skew, as in
-    * [[dLmScore]]). Per-term rounding before the decimal sum keeps
-    * the result order-independent and engine-portable. */
+    * equi-join on the token. Per-term rounding before the decimal sum
+    * keeps the result order-independent and engine-portable. */
   def dKlSources(s: SparkSession, d: String): DataFrame =
     klSources(docs(s, d))
 
@@ -3177,191 +3102,6 @@ object TrainingData {
        |SELECT source, max(t_s) AS n_tok,
        |  round(${sqlSumDec("term")}, 6) AS kl
        |FROM terms GROUP BY source ORDER BY source""".stripMargin
-
-  /** Bigram-LM quality score — the conditional-probability upgrade of
-    * [[dLmScore]] (the real CCNet filter is a 5-gram Kneser-Ney LM;
-    * add-one-smoothed bigrams are the SQL-reproducible stand-in with
-    * the same shape): per position, −ln P(tᵢ | tᵢ₋₁) with
-    * P = (c₂(tᵢ₋₁ tᵢ) + 1) / (c₁(tᵢ₋₁) + V), averaged per document.
-    * Catches locally-incoherent text (right words, wrong order) that
-    * a unigram score cannot.
-    *
-    * Scale shape mirrors [[dLmScore]]: the bigram vocabulary is
-    * larger but still corpus-sublinear (Zipf); counts aggregate with
-    * partial combine, V and the totals broadcast. The per-bigram
-    * score table is assembled vocabulary-side (prefix re-derived from
-    * the bigram text, c1 attached by a vocab⋈vocab equi-join), so the
-    * corpus-sized frame passes through ONE join-back instead of two —
-    * and that join gets the same deterministic hot-key broadcast
-    * bypass as [[lmScore]] (LmSkewSpec: AQE does not split this
-    * shape's skew). Docs under 2 tokens have no bigrams and are
-    * excluded (documented). */
-  def dLmBigram(s: SparkSession, d: String): DataFrame =
-    lmBigram(docs(s, d))
-
-  /** Operator body of [[dLmBigram]] over any (doc_id, text) frame.
-    * `materialize = false` is the plan-inspection mode (see
-    * [[lmScore]]). */
-  def lmBigram(documents: DataFrame, materialize: Boolean = true,
-      hotThreshold: Long = 1L << 20): DataFrame = {
-    def cached(df: DataFrame): DataFrame = if (materialize)
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else df
-    val toksF = documents.select(col("doc_id"),
-      TextStats.tokens(col("text")).as("toks"))
-    val uni = toksF.select(explode(col("toks")).as("tok"))
-    // c1 feeds both the score table and the vocabulary count — persist
-    // the (vocabulary-sized) frame so the corpus-wide tokenize +
-    // unigram aggregation runs once, not twice
-    val c1 = cached(uni.groupBy(col("tok")).agg(count(lit(1)).as("c1")))
-    val vocab = c1.agg(count(lit(1)).as("v"))
-    val bi = cached(toksF.filter(size(col("toks")) >= 2)
-      .select(col("doc_id"), explode(transform(
-        sequence(lit(1), size(col("toks")) - 1),
-        i => concat(element_at(col("toks"), i), lit(" "),
-          element_at(col("toks"), i + 1)))).as("big")))
-    val c2 = bi.groupBy(col("big")).agg(count(lit(1)).as("c2"))
-    // vocabulary-side score assembly: the prefix IS the bigram's first
-    // token (tokens are space-split, so the first space delimits it) —
-    // re-deriving it here keeps the prefix join off the corpus-sized
-    // frame entirely (bigram-vocab ⋈ unigram-vocab)
-    val scoreT = c2
-      .withColumn("prefix", substring_index(col("big"), " ", 1))
-      .join(c1, col("prefix") === col("tok"))
-      .crossJoin(broadcast(vocab))
-      .select(col("big"), col("c2"), round(log(
-        (col("c1") + col("v")).cast("double") / (col("c2") + lit(1L))),
-        6).as("nll_tok"))
-    // hot-key bypass, keyed on bigram occurrence count (c2)
-    val hotScores = scoreT.filter(col("c2") >= hotThreshold).drop("c2")
-    val coldScores = scoreT.filter(col("c2") < hotThreshold).drop("c2")
-    val coldBi = bi.join(broadcast(hotScores.select(col("big"))),
-      Seq("big"), "left_anti")
-    val perBig = bi.join(broadcast(hotScores), "big")
-      .unionByName(coldBi.join(coldScores, "big"))
-    val joined = perBig
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_big"), avgDec(col("nll_tok")).as("nll2"))
-      .orderBy("doc_id")
-    if (!materialize) joined
-    else {
-      val out = joined.localCheckpoint()
-      bi.unpersist()
-      c1.unpersist()
-      out
-    }
-  }
-
-  private val dLmBigramSql =
-    s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks
-       |  FROM documents),
-       |uni AS (SELECT unnest(toks) AS tok FROM t),
-       |c1 AS (SELECT tok, count(*) AS c1 FROM uni GROUP BY 1),
-       |vv AS (SELECT count(*) AS v FROM c1),
-       |b AS (SELECT doc_id,
-       |    unnest(list_transform(range(1, len(toks)),
-       |      i -> toks[i])) AS prefix,
-       |    unnest(list_transform(range(1, len(toks)),
-       |      i -> toks[i] || ' ' || toks[i+1])) AS big
-       |  FROM t WHERE len(toks) >= 2),
-       |c2 AS (SELECT big, count(*) AS c2 FROM b GROUP BY 1)
-       |SELECT doc_id, count(*) AS n_big,
-       |  ${sqlAvgDec("round(ln((c1 + v)::DOUBLE / (c2 + 1)), 6)")}
-       |    AS nll2
-       |FROM b JOIN c2 USING (big) JOIN c1 ON b.prefix = c1.tok, vv
-       |GROUP BY doc_id ORDER BY doc_id""".stripMargin
-
-  /** Interpolated Kneser-Ney bigram negative log-likelihood (Kneser &
-    * Ney 1995; the smoothing production n-gram LMs actually use, vs
-    * [[lmBigram]]'s add-one):
-    * `P(w2|w1) = max(c(w1w2)−D, 0)/c(w1·) + D·N1+(w1·)/c(w1·) ·
-    * N1+(·w2)/N1+(··)` with discount D = 0.75 (exactly
-    * binary-representable). The continuation term scores a word by
-    * how many CONTEXTS it follows, not how often it occurs — the
-    * "San Francisco" correction: "Francisco" is frequent but occurs
-    * after almost nothing else, so its continuation probability is
-    * tiny.
-    *
-    * Scale shape = [[lmBigram]] exactly: every KN component (prefix
-    * context counts c(w1·), prefix/suffix type counts N1+, the type
-    * total) aggregates over the BIGRAM-TYPE table, which is
-    * vocabulary-sized, never corpus-sized; the corpus is touched
-    * twice (bigram explode, final per-occurrence score attach keyed
-    * by the bigram string) and the same hot-token broadcast bypass
-    * splits score rows at `hotThreshold` occurrences so a Zipf-head
-    * bigram joins map-side. Per-term NLLs round to 6 before the
-    * exact-decimal per-doc average. */
-  def dLmKneserNey(s: SparkSession, d: String): DataFrame =
-    lmKneserNey(docs(s, d))
-
-  /** Operator body of [[dLmKneserNey]] over any (doc_id, text)
-    * frame. */
-  def lmKneserNey(documents: DataFrame,
-      hotThreshold: Long = 1L << 20): DataFrame = {
-    val bi = documents.select(col("doc_id"),
-        TextStats.tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) >= 2)
-      .select(col("doc_id"), explode(transform(
-        sequence(lit(1), size(col("toks")) - 1),
-        i => concat(element_at(col("toks"), i), lit(" "),
-          element_at(col("toks"), i + 1)))).as("big"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the bigram-TYPE table feeds all four component aggregations
-    val typ = bi.groupBy(col("big")).agg(count(lit(1)).as("c2"))
-      .withColumn("prefix", substring_index(col("big"), " ", 1))
-      .withColumn("suffix", substring_index(col("big"), " ", -1))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cp = typ.groupBy(col("prefix"))
-      .agg(sum(col("c2")).as("cp"), count(lit(1)).as("n1p"))
-    val cs = typ.groupBy(col("suffix")).agg(count(lit(1)).as("n1s"))
-    val tt = typ.agg(count(lit(1)).as("t"))
-    val scoreT = typ.join(cp, "prefix").join(cs, "suffix")
-      .crossJoin(broadcast(tt))
-      .select(col("big"), col("c2"), round(-log(
-        (col("c2") - lit(0.75)) / col("cp") +
-        lit(0.75) * col("n1p") / col("cp") * col("n1s") / col("t")),
-        6).as("nll_tok"))
-    val hotScores = scoreT.filter(col("c2") >= hotThreshold).drop("c2")
-    val coldScores = scoreT.filter(col("c2") < hotThreshold).drop("c2")
-    val coldBi = bi.join(broadcast(hotScores.select(col("big"))),
-      Seq("big"), "left_anti")
-    val perBig = bi.join(broadcast(hotScores), "big")
-      .unionByName(coldBi.join(coldScores, "big"))
-    val out = perBig
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_big"),
-        avgDec(col("nll_tok")).as("nll_kn"))
-      .orderBy("doc_id")
-      .localCheckpoint()
-    typ.unpersist()
-    bi.unpersist()
-    out
-  }
-
-  private val dLmKneserNeySql =
-    s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks
-       |  FROM documents),
-       |b AS (SELECT doc_id,
-       |    unnest(list_transform(range(1, len(toks)),
-       |      i -> toks[i] || ' ' || toks[i+1])) AS big
-       |  FROM t WHERE len(toks) >= 2),
-       |ty AS (SELECT big, count(*) AS c2,
-       |    string_split(big, ' ')[1] AS prefix,
-       |    string_split(big, ' ')[2] AS suffix
-       |  FROM b GROUP BY 1),
-       |cp AS (SELECT prefix, CAST(sum(c2) AS BIGINT) AS cp,
-       |    count(*) AS n1p
-       |  FROM ty GROUP BY 1),
-       |cs AS (SELECT suffix, count(*) AS n1s FROM ty GROUP BY 1),
-       |tt AS (SELECT count(*) AS t FROM ty),
-       |sc AS (SELECT big, round(-ln(
-       |    (c2 - 0.75) / cp + 0.75 * n1p / cp * n1s / t), 6)
-       |    AS nll_tok
-       |  FROM ty JOIN cp USING (prefix) JOIN cs USING (suffix), tt)
-       |SELECT doc_id, count(*) AS n_big,
-       |  ${sqlAvgDec("nll_tok")} AS nll_kn
-       |FROM b JOIN sc USING (big)
-       |GROUP BY doc_id ORDER BY doc_id""".stripMargin
 
   /** Catalog BPE merge budget — 8 rounds keeps the unrolled oracle
     * CTE chain tractable; production training runs the same per-round
@@ -3853,9 +3593,6 @@ object TrainingData {
     "d_decontaminate" -> (dDecontaminate _),
     "d_span_dedup" -> (dSpanDedup _),
     "d_span_cut" -> (dSpanCut _),
-    "d_lm_score" -> (dLmScore _),
-    "d_lm_bigram" -> (dLmBigram _),
-    "d_lm_kn" -> (dLmKneserNey _),
     "d_bpe_train" -> (dBpeTrain _),
     "d_bpe_tokens" -> (dBpeTokens _),
     "d_bpe_tokens_fast" -> (dBpeTokensFast _),
@@ -3886,7 +3623,10 @@ object TrainingData {
     hybridEntries.map { case (n, e) => n -> (hybridRrf(e) _) } ++
     semDedupEntries.map { case (n, e) =>
       n -> ((s: SparkSession, d: String) => runSemDedup(e)(embs(s, d)))
-    } ++ embedDupEntries.map { case (n, e) => n -> (runEmbedDup(e) _) }
+    } ++ embedDupEntries.map { case (n, e) => n -> (runEmbedDup(e) _) } ++
+    lmEntries.map { case (n, spec) =>
+      n -> ((s: SparkSession, d: String) => LmSpec.score(spec, docs(s, d)))
+    }
 
   val oracle: Map[String, String] = Map(
     "d_dedup_exact" -> dDedupExactSql,
@@ -3931,9 +3671,6 @@ object TrainingData {
     "d_decontaminate" -> dDecontaminateSql,
     "d_span_dedup" -> dSpanDedupSql,
     "d_span_cut" -> dSpanCutSql,
-    "d_lm_score" -> dLmScoreSql,
-    "d_lm_bigram" -> dLmBigramSql,
-    "d_lm_kn" -> dLmKneserNeySql,
     "d_bpe_train" -> graft.ext.Bpe.mergeTableSql(BpeRounds),
     "d_bpe_tokens" -> graft.ext.Bpe.tokenStatsSql(BpeRounds),
     "d_bpe_tokens_fast" -> graft.ext.Bpe.tokenStatsSql(BpeRounds),
@@ -3969,5 +3706,5 @@ object TrainingData {
     n -> SemDedupSpec.oracleSql(e.spec, e.split)
   } ++ embedDupEntries.map { case (n, e) =>
     n -> EmbedDupSpec.oracleSql(e.spec, e.evalMod)
-  }
+  } ++ lmEntries.map { case (n, spec) => n -> LmSpec.oracleSql(spec) }
 }

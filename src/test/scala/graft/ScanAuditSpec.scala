@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 
 /** Scan-level plan audit: column pruning and filter pushdown must
   * reach the parquet scans — the discipline that decides whether a
@@ -21,14 +21,13 @@ import org.apache.spark.sql.execution.FileSourceScanExec
 class ScanAuditSpec extends SparkSpec {
 
   /** (table, read columns, pushed-filter string) for every parquet
-    * scan in the query's physical plan (pre-AQE: pruning and pushdown
-    * are planning-time properties, AQE only re-plans exchanges).
-    * Descends into `InMemoryTableScanExec` — a `persist()`ed subtree
-    * hides its file scan behind the cache node, and the audit must
-    * still see what the cache itself reads from parquet. */
-  private def scans(df: DataFrame): Seq[(String, Set[String], String)] = {
-    def gather(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[(String, Set[String], String)] = p.collect {
+    * scan in `plans`. Descends into `InMemoryTableScanExec` — a
+    * `persist()`ed subtree hides its file scan behind the cache node,
+    * and the audit must still see what the cache itself reads from
+    * parquet. */
+  private def scans(plans: Seq[SparkPlan])
+      : Seq[(String, Set[String], String)] = {
+    def gather(p: SparkPlan): Seq[(String, Set[String], String)] = p.collect {
       case f: FileSourceScanExec =>
         val table = f.relation.location.rootPaths.headOption
           .map(_.getName.stripSuffix(".parquet")).getOrElse("?")
@@ -38,19 +37,33 @@ class ScanAuditSpec extends SparkSpec {
           .InMemoryTableScanExec =>
         gather(im.relation.cachedPlan)
       // a cached plan is itself adaptive: the file scan hides inside
-      // AQE stage nodes whose plans are fields, not children
+      // AQE stage nodes whose plans are fields, not children. The
+      // input plan keeps the scans of a branch that AQE dropped once
+      // it ran empty (an empty cached relation folds its join away)
       case a: org.apache.spark.sql.execution.adaptive
           .AdaptiveSparkPlanExec =>
-        gather(a.executedPlan)
+        gather(a.inputPlan) ++ gather(a.executedPlan)
       case qs: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
         gather(qs.plan)
     }.flatten
-    gather(df.queryExecution.sparkPlan)
+    plans.flatMap(gather)
   }
 
-  private def scanOf(df: DataFrame, table: String)
+  /** The widest scan of `table` in the returned frame's physical plan
+    * (pre-AQE: pruning and pushdown are planning-time properties, AQE
+    * only re-plans exchanges). */
+  private def scanOf(df: DataFrame, table: String): (Set[String], String) =
+    scanOf(Seq(df.queryExecution.sparkPlan), table)
+
+  /** The widest scan of `table` among the plans that `body` executed
+    * ([[executedPlans]]): the audit of an operator that persists or
+    * checkpoints, whose returned frame hides its scans. */
+  private def scanRun(table: String)(body: => Any): (Set[String], String) =
+    scanOf(executedPlans(body)._2, table)
+
+  private def scanOf(plans: Seq[SparkPlan], table: String)
       : (Set[String], String) = {
-    val hits = scans(df).filter(_._1 == table)
+    val hits = scans(plans).filter(_._1 == table)
     assert(hits.nonEmpty, s"no parquet scan of $table in the plan")
     // a table may be scanned more than once (self-join shapes); the
     // audit bounds the WIDEST read
@@ -132,8 +145,10 @@ class ScanAuditSpec extends SparkSpec {
 
   test("d_collocations: the documents scan ships ONLY text — at " +
       "100 TB the bigram pass is a single-column read") {
-    val (cols, _) = scanOf(
-      queries.TrainingData.dCollocations(spark, sf0001), "documents")
+    // the top-50 is numbered on the driver: the scan is in the plan
+    // that ran, not in the returned local frame
+    val (cols, _) = scanRun("documents")(
+      queries.TrainingData.dCollocations(spark, sf0001))
     assert(cols == Set("text"), s"scan widened to $cols")
   }
 
@@ -149,25 +164,21 @@ class ScanAuditSpec extends SparkSpec {
   }
 
   test("m_phash_dups: the documents scan ships only (doc_id, text)") {
-    // the production path localCheckpoints its result (severing
-    // lineage so the fingerprint persist can release); the audit runs
-    // the identical plan via the test-only un-materialized variant
-    val df = ext.Multimodal.phashDupPairsPlan(
-      Tables.documents(spark, sf0001), maxHamming = 6)
-    val (cols, _) = scanOf(df, "documents")
+    // the result is checkpointed (severing lineage so the fingerprint
+    // persist can release): audit the plans that ran
+    val (cols, _) = scanRun("documents")(ext.Multimodal.phashDupPairs(
+      Tables.documents(spark, sf0001), maxHamming = 6))
     assert(cols == Set("doc_id", "text"), s"scan widened to $cols")
   }
 
   test("round-10 additions: every new query's scans stay minimal") {
     // d_phrase_search: the postings pass reads only (doc_id, text) —
-    // audited via the un-materialized variant (the production path
-    // caches the filtered postings and checkpoints its 5-row result,
-    // severing lineage; same rationale as phashDupPairsPlan below)
+    // audited through the plans that ran (the operator caches the
+    // filtered postings and checkpoints its 5-row result)
     import spark.implicits._
     val phFixture = Seq((1L, "alpha", "beta")).toDF("pid", "w1", "w2")
-    val ph = ext.Retrieval.phraseSearchPlan(
-      Tables.documents(spark, sf0001), phFixture)
-    val (phCols, _) = scanOf(ph, "documents")
+    val (phCols, _) = scanRun("documents")(ext.Retrieval.phraseSearch(
+      Tables.documents(spark, sf0001), phFixture))
     assert(phCols == Set("doc_id", "text"), s"widened to $phCols")
     // q_skyline: orders scan = key + the two criteria columns
     val sk = queries.AnalyticsExt.qSkyline(spark, sf0001)
@@ -195,10 +206,9 @@ class ScanAuditSpec extends SparkSpec {
 
   test("s_kcenter / s_ann_mips: the embeddings scans ship only " +
       "(vec_id, embedding) — label is pruned everywhere") {
-    // same un-materialized-variant rationale as m_phash_dups above
-    val kc = ext.Similarity.kcenterSelectPlan(
-      Tables.embeddings(spark, sf0001), 8)
-    val (kcCols, _) = scanOf(kc, "embeddings")
+    // checkpointed, as m_phash_dups above: audit the plans that ran
+    val (kcCols, _) = scanRun("embeddings")(ext.Similarity.kcenterSelect(
+      Tables.embeddings(spark, sf0001), 8))
     assert(kcCols == Set("vec_id", "embedding"),
       s"s_kcenter scan widened to $kcCols")
     val mips = queries.TrainingData.sAnnMips(spark, sf0001)

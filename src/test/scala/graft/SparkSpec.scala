@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.graft.ListenerBusFence
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session for all suites — one local JVM session, UTC, small
@@ -39,5 +42,31 @@ abstract class SparkSpec extends AnyFunSuite {
       spark.conf.unset(graft.ext.Ckpt.DirKey)
       spark.sparkContext.setCheckpointDir(null)
     }
+  }
+
+  /** `body`'s value and the executed plan of every action it ran, in
+    * order — also the `localCheckpoint` action and the actions that
+    * filled a persist, whose returned frame no longer carries the plan
+    * that computed it. */
+  protected def executedPlans[T](body: => T): (T, Seq[SparkPlan]) = {
+    val plans = java.util.Collections.synchronizedList(
+      new java.util.ArrayList[SparkPlan]())
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit =
+        // `Dataset.rdd` reports its conversion too, which reads nothing
+        // (`TrainingData.spread` only asks it for the partition count)
+        if (funcName != "rdd") plans.add(qe.executedPlan): Unit
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    // events of earlier actions still queued would reach the listener
+    ListenerBusFence.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      val out = body
+      ListenerBusFence.drain(spark.sparkContext)
+      (out, plans.toArray(Array.empty[SparkPlan]).toSeq)
+    } finally spark.listenerManager.unregister(listener)
   }
 }

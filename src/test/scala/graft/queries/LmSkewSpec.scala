@@ -1,15 +1,21 @@
 package graft.queries
 
+import org.apache.spark.sql.catalyst.expressions.{EqualTo, Expression, In,
+  InSet, Literal, Not}
+import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+  QueryStageExec}
+import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.ext.{LmModel, LmSpec}
 
-/** Skew evidence for the hot-token score joins (`d_lm_score` /
-  * `d_lm_bigram`): their scaladocs claim (a) the vocabulary side
-  * broadcasts under the default config, so the hot key never shuffles
-  * into a skewed partition, and (b) if the vocab side ever outgrows
-  * the broadcast threshold, the resulting sort-merge join is exactly
-  * AQE's skew-join case. Both claims are executed-plan-verified here
-  * instead of taken on faith. */
+/** Skew evidence for the n-gram score join of [[LmSpec.score]]: (a) the
+  * vocabulary side broadcasts under the default config, so a hot key
+  * never shuffles into a skewed partition; (b) when it cannot
+  * broadcast, no hot key reaches the shuffled join; (c) the hot-key
+  * split never changes a score. Asserted on the plans that ran
+  * ([[executedPlans]]): the returned frame is checkpointed. */
 class LmSkewSpec extends SparkSpec {
   import spark.implicits._
 
@@ -24,30 +30,35 @@ class LmSkewSpec extends SparkSpec {
           else concat(lit("w"), col("id") * tokensPerDoc + j)): _*)
         .as("text"))
 
+  /** Every node of `p`, descending into AQE and query-stage plans. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case q: QueryStageExec => nodes(q.plan)
+    case o => o.children.flatMap(nodes)
+  })
+
+  /** The result's plan: the last action is the checkpoint. */
+  private def resultPlan(spec: LmSpec, docs: org.apache.spark.sql.DataFrame) =
+    executedPlans(LmSpec.score(spec, docs))._2.last
+
   test("default config: the vocab side of the lm-score join " +
       "broadcasts (no skewable shuffle on the hot token)") {
-    val df = TrainingData.lmScore(
-      graft.Tables.documents(spark, sf0001), materialize = false)
-    // collect() (not .write) so the inspected QueryExecution is the
-    // one that ran — a write action plans its own QueryExecution and
-    // leaves this frame's AQE plan un-finalized
-    df.collect()
-    val plan = df.queryExecution.executedPlan.toString
+    val plan = resultPlan(LmSpec(LmModel.Unigram),
+      graft.Tables.documents(spark, sf0001)).toString
     assert(plan.contains("BroadcastHashJoin"),
       s"vocab join must broadcast under defaults:\n${plan.take(4000)}")
   }
 
-  test("broadcast disabled: the deterministic hot-key bypass splits " +
-      "the join — hot tokens broadcast, the shuffled branch is cold") {
+  test("broadcast disabled: hot keys take the literal lookup and the " +
+      "shuffled join's input excludes them") {
     // MEASURED FINDING (this spec's earlier form): with the vocab
     // broadcast suppressed and AQE skew thresholds scaled to corpus
     // size (factor 2.0, threshold 32kb, advisory 16kb), AQE did NOT
     // split the hot token's partition — the SMJ's vocab child is a
     // HashAggregate over the shuffle, not a raw AQEShuffleRead, so
     // OptimizeSkewedJoin's pattern cannot match this operator's
-    // shape. Hence the deterministic bypass in lmScore/lmBigram,
-    // whose plan shape is asserted here under the same adversarial
-    // config.
+    // shape. Hence LmSpec's deterministic hot-key split, whose plan
+    // shape is asserted here under the same adversarial config.
     val conf = spark.conf
     val keys = Seq(
       "spark.sql.autoBroadcastJoinThreshold",
@@ -55,23 +66,33 @@ class LmSkewSpec extends SparkSpec {
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes")
     val saved = keys.map(k => k -> conf.getOption(k))
+    def excludesHot(e: Expression): Boolean = e match {
+      case Not(EqualTo(_, Literal(v, _))) => String.valueOf(v) == "hot"
+      case Not(In(_, list)) =>
+        list.exists(l => String.valueOf(l.eval()) == "hot")
+      case Not(InSet(_, set)) => set.exists(v => String.valueOf(v) == "hot")
+      case _ => e.children.exists(excludesHot)
+    }
     try {
       conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2.0")
       conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
         "32kb")
       conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16kb")
-      // hotThreshold 1000 < the 8000 "hot" occurrences → bypass fires
-      val df = TrainingData.lmScore(hotCorpus(400, 40),
-        materialize = false, hotThreshold = 1000L)
-      df.collect()
-      val plan = df.queryExecution.executedPlan.toString
-      // hot branch: explicit broadcast hint survives threshold=-1
-      assert(plan.contains("BroadcastHashJoin"),
-        s"hot branch must broadcast:\n${plan.take(4000)}")
-      // cold branch still shuffles — but only sub-threshold keys
-      assert(plan.contains("SortMergeJoin") && plan.contains("Union"),
-        s"cold branch + union expected:\n${plan.take(4000)}")
+      // hotThreshold 1000 < the 8000 "hot" occurrences → the split fires
+      val plan = resultPlan(LmSpec(LmModel.Unigram, hotThreshold = 1000L),
+        hotCorpus(400, 40))
+      val text = plan.toString
+      // hot branch: a plan-literal lookup, unioned with the cold join
+      assert(text.contains("Union") && !text.contains("BroadcastHashJoin"),
+        s"literal hot branch + union expected:\n${text.take(4000)}")
+      val smjs = nodes(plan).collect { case j: SortMergeJoinExec => j }
+      assert(smjs.nonEmpty, s"cold branch must shuffle:\n${text.take(4000)}")
+      for (j <- smjs)
+        assert(nodes(j.left).exists {
+          case f: FilterExec => excludesHot(f.condition)
+          case _ => false
+        }, s"shuffled join input keeps the hot key:\n${j.treeString.take(4000)}")
     } finally saved.foreach {
       case (k, Some(v)) => conf.set(k, v)
       case (k, None) => conf.unset(k)
@@ -79,19 +100,17 @@ class LmSkewSpec extends SparkSpec {
   }
 
   test("hot-key bypass is semantics-preserving: threshold extremes " +
-      "agree for lmScore and lmBigram") {
+      "agree for every LmSpec model") {
     val corpus = hotCorpus(120, 30)
-    def rowsS(t: Long) =
-      TrainingData.lmScore(corpus, materialize = false, hotThreshold = t)
+    for (model <- Seq(LmModel.Unigram, LmModel.AddOneBigram, LmModel.KneserNey)) {
+      def rows(t: Long) = LmSpec.score(LmSpec(model, t), corpus)
         .as[(Long, Long, Double)].collect().sortBy(_._1).toSeq
-    // Long.MaxValue → bypass never fires (pure single-join semantics);
-    // 2 → almost every token rides the broadcast branch
-    assert(rowsS(Long.MaxValue) == rowsS(2L))
-    assert(rowsS(Long.MaxValue) == rowsS(1000L))
-    def rowsB(t: Long) =
-      TrainingData.lmBigram(corpus, materialize = false, hotThreshold = t)
-        .as[(Long, Long, Double)].collect().sortBy(_._1).toSeq
-    assert(rowsB(Long.MaxValue) == rowsB(2L))
-    assert(rowsB(Long.MaxValue) == rowsB(1000L))
+      // Long.MaxValue → nothing is hot (one plain join); 1 → every
+      // n-gram takes the literal lookup; 2 and 1000 split the unigram
+      // "hot" token off
+      val plain = rows(Long.MaxValue)
+      for (t <- Seq(1L, 2L, 1000L))
+        assert(rows(t) == plain, s"$model differs at hotThreshold $t")
+    }
   }
 }

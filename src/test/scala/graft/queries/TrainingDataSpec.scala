@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.ext.{LmModel, LmSpec}
 
 /** Structural invariants of the round-3 training-data operators (their
   * values are oracle-verified; these assert the properties the oracle
@@ -224,7 +225,7 @@ class TrainingDataSpec extends SparkSpec {
 
   test("d_lm_score: rare-token docs score higher NLL than " +
       "common-token docs, and scores are deterministic") {
-    val lm = TrainingData.dLmScore(spark, sf0001).cache()
+    val lm = TrainingData.queries("d_lm_score")(spark, sf0001).cache()
     assert(lm.filter(col("nll") <= 0).isEmpty,
       "every token has cnt < total, so nll is strictly positive")
     // token counts must be conserved: Σ n_tok == Σ len(tokens)
@@ -232,7 +233,7 @@ class TrainingDataSpec extends SparkSpec {
       .select(sum(size(split(col("text"), " ")))).as[Long].head()
     val gotToks = lm.select(sum(col("n_tok"))).as[Long].head()
     assert(gotToks == wantToks)
-    val again = TrainingData.dLmScore(spark, sf0001)
+    val again = TrainingData.queries("d_lm_score")(spark, sf0001)
     assert(lm.exceptAll(again).isEmpty && again.exceptAll(lm).isEmpty)
     lm.unpersist()
     // the property in the title, on a constructed corpus: a doc of
@@ -240,7 +241,7 @@ class TrainingDataSpec extends SparkSpec {
     // hapax tokens
     val synth = Seq((1L, "the the the the"), (2L, "qqq www eee rrr"),
       (3L, "the of and to")).toDF("doc_id", "text")
-    val nll = TrainingData.lmScore(synth)
+    val nll = LmSpec.score(LmSpec(LmModel.Unigram), synth)
       .select("doc_id", "nll").as[(Long, Double)].collect().toMap
     assert(nll(2L) > nll(1L) && nll(2L) > nll(3L),
       s"hapax doc must score highest: $nll")
@@ -259,14 +260,15 @@ class TrainingDataSpec extends SparkSpec {
       (5L, "alpha beta gamma beta", false), // A-speaking probe
       (6L, "omega tau sigma rho", false))   // B-speaking probe
       .toDF("doc_id", "text", "is_t")
-    val w = TrainingData.dsirWeights(synth, col("is_t"),
-        materialize = false)
+    val (w, plans) =
+      executedPlans(TrainingData.dsirWeights(synth, col("is_t")))
     val m = w.select("doc_id", "logw").as[(Long, Double)]
       .collect().toMap
     assert(m(5L) > m(6L),
       s"target-vocabulary probe must outweigh off-target probe: $m")
-    // fixed-bucket model ⇒ score frame broadcasts (never a shuffle)
-    val plan = w.queryExecution.executedPlan.toString
+    // fixed-bucket model ⇒ score frame broadcasts (never a shuffle);
+    // the checkpoint's plan is the one that joined
+    val plan = plans.last.toString
     assert(plan.contains("BroadcastHashJoin"), plan.take(2000))
     // token conservation on the real corpus
     val d = TrainingData.dDsir(spark, sf0001).cache()
@@ -329,7 +331,7 @@ class TrainingDataSpec extends SparkSpec {
 
   test("d_lm_bigram: word order matters — a locally-incoherent " +
       "shuffle of common words scores higher than fluent text") {
-    val lm = TrainingData.dLmBigram(spark, sf0001).cache()
+    val lm = TrainingData.queries("d_lm_bigram")(spark, sf0001).cache()
     assert(lm.filter(col("nll2") <= 0).isEmpty)
     // bigram count conservation: Σ n_big == Σ (len - 1) over docs
     // with ≥ 2 tokens
@@ -343,7 +345,8 @@ class TrainingDataSpec extends SparkSpec {
     // same unigrams in reversed order ("b a") and must score higher
     val synth = (1L to 8L).map(i => (i, "a b a b a b")) :+
       (9L, "b a b a b a")
-    val got = TrainingData.lmBigram(synth.toDF("doc_id", "text"))
+    val got = LmSpec.score(LmSpec(LmModel.AddOneBigram),
+        synth.toDF("doc_id", "text"))
       .select("doc_id", "nll2").as[(Long, Double)].collect().toMap
     assert(got(9L) > got(1L),
       s"reversed word order must score higher: $got")
@@ -629,45 +632,61 @@ class TrainingDataSpec extends SparkSpec {
 
   test("Kneser-Ney bigram NLL matches an independent plain-Scala " +
       "reference, and shares d_lm_bigram's bigram stream") {
+    // doc 6 has one token: the bigram rows drop it, the unigram row
+    // counts it, and the add-one c1 and V count its token
     val docsSeq = Seq(
       1L -> "a b c a b",
       2L -> "a b a c",
       3L -> "c b c b a",
       4L -> "d e",
-      5L -> "e d e d")
+      5L -> "e d e d",
+      6L -> "a")
     val df = docsSeq.toDF("doc_id", "text")
-    val got = TrainingData.lmKneserNey(df).collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
+    def run(model: LmModel): Map[Long, (Long, Double)] =
+      LmSpec.score(LmSpec(model), df).collect()
+        .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
 
     // reference: collections-only reimplementation, same IEEE op order
-    val bigs = docsSeq.flatMap { case (id, t) =>
-      t.split(" ").toSeq.sliding(2).filter(_.length == 2)
-        .map(p => id -> (p(0), p(1))).toSeq
+    def r6(x: Double): Double =
+      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    val toks = docsSeq.map { case (id, t) => id -> t.split(" ").toSeq }
+    val c1 = toks.flatMap(_._2).groupBy(identity).view
+      .mapValues(_.size).toMap
+    val total = toks.map(_._2.size).sum
+    val bigs = toks.map { case (id, ts) =>
+      id -> ts.sliding(2).filter(_.length == 2).map(p => (p(0), p(1))).toSeq
     }
-    val c2 = bigs.groupBy(_._2).view.mapValues(_.size).toMap
+    val c2 = bigs.flatMap(_._2).groupBy(identity).view
+      .mapValues(_.size).toMap
     val cp = c2.toSeq.groupBy(_._1._1).view
       .mapValues(_.map(_._2).sum).toMap
     val n1p = c2.toSeq.groupBy(_._1._1).view.mapValues(_.size).toMap
     val n1s = c2.toSeq.groupBy(_._1._2).view.mapValues(_.size).toMap
     val tTot = c2.size
-    def nll(bg: (String, String)): Double = {
-      val p = (c2(bg) - 0.75) / cp(bg._1) +
-        0.75 * n1p(bg._1) / cp(bg._1) * n1s(bg._2) / tTot
-      BigDecimal(-math.log(p))
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    }
-    for ((id, _) <- docsSeq) {
-      val mine = bigs.filter(_._1 == id).map(x => nll(x._2))
-      val want = BigDecimal(mine.map(BigDecimal(_)).sum.toDouble /
-        mine.size).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-      assert(got(id)._1 == mine.size, s"doc $id n_big")
-      assert(got(id)._2 == want, s"doc $id: got ${got(id)._2}, want $want")
+    def kn(bg: (String, String)): Double = r6(-math.log(
+      (c2(bg) - 0.75) / cp(bg._1) +
+        0.75 * n1p(bg._1) / cp(bg._1) * n1s(bg._2) / tTot))
+    def addOne(bg: (String, String)): Double =
+      r6(math.log((c1(bg._1) + c1.size).toDouble / (c2(bg) + 1)))
+    val want: Seq[(LmModel, Seq[(Long, Seq[Double])])] = Seq(
+      LmModel.Unigram -> toks.map { case (id, ts) =>
+        id -> ts.map(t => r6(math.log(total.toDouble / c1(t)))) },
+      LmModel.AddOneBigram -> bigs.map { case (id, bs) => id -> bs.map(addOne) },
+      LmModel.KneserNey -> bigs.map { case (id, bs) => id -> bs.map(kn) })
+    for ((model, perDoc) <- want) {
+      val got = run(model)
+      val scored = perDoc.filter(_._2.nonEmpty)
+      assert(got.keySet == scored.map(_._1).toSet, s"$model docs: $got")
+      for ((id, mine) <- scored) {
+        val mean = r6(mine.map(BigDecimal(_)).sum.toDouble / mine.size)
+        assert(got(id) == ((mine.size.toLong, mean)),
+          s"$model doc $id: got ${got(id)}, want ${(mine.size, mean)}")
+      }
     }
 
     // the per-doc bigram stream is the same one d_lm_bigram scores
-    val kn = TrainingData.lmKneserNey(df).select("doc_id", "n_big")
-    val bg = TrainingData.lmBigram(df).select("doc_id", "n_big")
-    assert(kn.except(bg).isEmpty && bg.except(kn).isEmpty)
+    assert(run(LmModel.KneserNey).view.mapValues(_._1).toMap ==
+      run(LmModel.AddOneBigram).view.mapValues(_._1).toMap)
   }
 
   test("span cut: the globally-first occurrence of a duplicated " +
