@@ -27,10 +27,21 @@ object SparkEntry {
       TrainingData.queries ++ Streaming.queries
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
+    * the same parquet tables. Omit for non-SQL-expressible ops. The
+    * oracles whose plan literals are fitted from the dataset are
+    * [[datasetOracleSql]]'s. */
   def oracleSql: Map[String, String] =
     Analytics.oracle ++ AnalyticsExt.oracle ++
       Relational.oracle ++ Parity.oracle ++
-      TrainingData.oracle ++ Streaming.oracle ++
-      TrainingData.dynamicOracle // plan-literal SQL, built at dump time
+      TrainingData.oracle ++ Streaming.oracle
+
+  /** The oracles that embed literals fitted from the dataset at `sfDir`
+    * (the OPQ rotations), derived from the dataset alone: the same
+    * statements whichever queries ran in this JVM. */
+  def datasetOracleSql(spark: SparkSession, sfDir: String)
+      : Map[String, String] =
+    TrainingData.opqOracleSql(spark, sfDir)
+
+  /** The keys [[datasetOracleSql]] returns. */
+  def datasetOracleKeys: Seq[String] = TrainingData.opqEntryNames
 }

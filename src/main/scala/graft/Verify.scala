@@ -29,7 +29,15 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    val json = SparkEntry.oracleSql
+    // a failed fit fails its entries' compare loudly, not the dump
+    val dataset = try SparkEntry.datasetOracleSql(spark, sfDir)
+    catch { case e: Exception =>
+      System.err.println(s"[verify] dataset oracles failed: ${e.getMessage}")
+      SparkEntry.datasetOracleKeys.map(k =>
+        k -> s"SELECT 'dataset oracle of $k failed - see the Verify log' AS err")
+        .toMap
+    }
+    val json = (SparkEntry.oracleSql ++ dataset)
       .map { case (k, v) => s"${quote(k)}: ${quote(v)}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

@@ -189,7 +189,7 @@ object PqLayout {
     * round-robin: rank r goes to subspace r % m, slot r / m. */
   case object VarianceBalanced extends PqLayout
   /** A dim×dim rotation applied first (row i = output dim i's
-    * coefficients), e.g. [[Pca.opqRotation]]; the same literals
+    * coefficients), e.g. [[CovSpec.opqRotation]]; the same literals
     * replay in the oracle. */
   final case class Rotation(rot: Array[Array[Double]]) extends PqLayout
 }

@@ -1193,7 +1193,7 @@ object Similarity {
     * error under ANSI, NaN in DuckDB). A dim mismatch, which would NULL
     * every score, fails fast with `dimError` (assert_true is kept alive
     * by the filter). */
-  private def vectorRows(embeddings: DataFrame, keep: Seq[Column],
+  private[graft] def vectorRows(embeddings: DataFrame, keep: Seq[Column],
       dim: Option[Int], dimError: String): DataFrame = {
     // the IS NOT NULL conjunct keeps a NULL row away from the dim
     // check (a NULL norm test alone would not short-circuit it)

@@ -6,10 +6,10 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType,
   StructField, StructType}
 
 import graft.Tables
-import graft.ext.{AnnFilter, Coarse, Dedup, EmbedDupSpec, GramCap,
-  IvfCodes, IvfSpec, LmModel, LmSpec, NearDupCandidates, NearDupMeasure,
-  NearDupSpec, PqLayout, QuerySet, SemDedupGrid, SemDedupSpec, Similarity,
-  TextStats}
+import graft.ext.{AnnFilter, Coarse, CovOutput, CovSpec, Dedup,
+  EmbedDupSpec, GramCap, IvfCodes, IvfSpec, LmModel, LmSpec,
+  NearDupCandidates, NearDupMeasure, NearDupSpec, PqLayout, QuerySet,
+  SemDedupGrid, SemDedupSpec, Similarity, TextStats}
 import QueryUtil._
 
 /** Training-data pipeline operators over `documents` / `embeddings`:
@@ -842,14 +842,15 @@ object TrainingData {
 
   /** One ANN catalog row: the [[IvfSpec]], the top-k, the query set —
     * the standard 16-id sample unless given — and how it is served.
-    * `trainOpq`: the OPQ rotation ([[graft.ext.Pca.opqRotation]], Ge et
+    * `trainOpq`: the OPQ rotation ([[CovSpec.opqRotation]], Ge et
     * al. 2013's parametric form: full Jacobi eigenbasis + greedy
-    * eigenvalue allocation across the subspaces) is trained at run time
-    * from the covariance integers `d_embed_cov` hash-verifies, and runs
-    * as the PQ codes' `Rotation` layout; the rotation is a pure local
-    * function of those integers (PcaSpec pins its invariants) and the
-    * oracle replays the same literals, dumped after the query runs
-    * ([[dynamicOracle]]). */
+    * eigenvalue allocation across the subspaces) is derived from the
+    * dataset's covariance — the integers `d_embed_cov` hash-verifies —
+    * and runs as the PQ codes' `Rotation` layout. The rotation is a
+    * pure local function of those integers (PcaSpec pins its
+    * invariants), so the oracle derives the same literals from the
+    * same dataset at dump time ([[opqOracleSql]]), whatever ran
+    * before. */
   private[queries] final case class IvfEntry(spec: IvfSpec, k: Int,
       queries: QuerySet = QuerySet.Sample(16), serve: Serve = Inline,
       trainOpq: Boolean = false)
@@ -951,14 +952,7 @@ object TrainingData {
   private def runIvf(name: String, entry: IvfEntry)(s: SparkSession,
       d: String): DataFrame = {
     val e = embs(s, d)
-    val spec = entry.spec.codes match {
-      case pq: IvfCodes.Pq if entry.trainOpq =>
-        val (_, c) = graft.ext.Pca.covMeans(e, pq.dim)
-        val rot = graft.ext.Pca.opqRotation(c, pq.dim, m = pq.m)
-        recordRotation(name, d, rot)
-        rotated(entry.spec, rot)
-      case _ => entry.spec
-    }
+    val spec = trained(entry, CovSpec.opqRotation(e, _, _))
     (entry.queries, entry.serve) match {
       case (QuerySet.Sample(n), serve) =>
         val qids = Similarity.sampleQueryIds(
@@ -994,79 +988,62 @@ object TrainingData {
     }
   }
 
-  /** `spec` with its PQ codes laid out by the rotation `rot`. */
-  private def rotated(spec: IvfSpec, rot: Array[Array[Double]]): IvfSpec =
-    spec.codes match {
-      case pq: IvfCodes.Pq =>
-        spec.copy(codes = pq.copy(layout = PqLayout.Rotation(rot)))
-      case _ => spec
+  /** `entry`'s spec; a `trainOpq` row's PQ codes laid out by the
+    * rotation `rotation(dim, m)` derives. */
+  private def trained(entry: IvfEntry,
+      rotation: (Int, Int) => Array[Array[Double]]): IvfSpec =
+    entry.spec.codes match {
+      case pq: IvfCodes.Pq if entry.trainOpq => entry.spec.copy(codes =
+        pq.copy(layout = PqLayout.Rotation(rotation(pq.dim, pq.m))))
+      case _ => entry.spec
     }
 
-  /** The oracle of every entry but the `trainOpq` rows, whose rotation
-    * only exists once the query ran ([[dynamicOracle]]). */
+  private def ivfOracle(spec: IvfSpec, e: IvfEntry): String =
+    IvfSpec.oracleSql(spec, e.k, e.queries, e.serve match {
+      case Stored(Some(m)) => Some(s"vec_id % $m <> 0")
+      case _ => None
+    })
+
+  /** The oracle of every ANN row but the `trainOpq` ones, whose
+    * rotation is derived from the dataset ([[opqOracleSql]]). */
   private def ivfOracles: Seq[(String, String)] = ivfEntries.collect {
-    case (n, e) if !e.trainOpq =>
-      n -> IvfSpec.oracleSql(e.spec, e.k, e.queries, e.serve match {
-        case Stored(Some(m)) => Some(s"vec_id % $m <> 0")
-        case _ => None
-      })
+    case (n, e) if !e.trainOpq => n -> ivfOracle(e.spec, e)
   }
 
-  /** The rotation each `trainOpq` entry derived, keyed by entry name,
-    * then by dataset dir (a bare global would yield a
-    * plausible-but-wrong oracle if one JVM ran queries on one dataset
-    * and dumped for another). */
-  private val opqRotations = new java.util.concurrent.ConcurrentHashMap[
-    String, Map[String, Array[Array[Double]]]]()
-
-  private[graft] def recordRotation(name: String, dir: String,
-      rot: Array[Array[Double]]): Unit =
-    opqRotations.merge(name, Map(dir -> rot), (a, b) => a ++ b): Unit
-
-  /** Oracle of a `trainOpq` entry, built at DUMP time from the
-    * rotation the query derived (Verify runs every query before
-    * dumping oracle_sql.json): the rotation literals only when exactly
-    * one dataset ran the entry in this JVM; none or several → a marker
-    * statement that fails the compare loudly instead of passing
-    * wrongly. */
-  private[graft] def rotationOracle(name: String, spec: IvfSpec): String =
-    opqRotations.getOrDefault(name, Map.empty).toSeq match {
-      case Seq() => s"SELECT 'run $name before dumping its oracle' AS err"
-      case Seq((_, rot)) =>
-        IvfSpec.oracleSql(rotated(spec, rot), 5, QuerySet.Sample(16))
-      case many =>
-        s"SELECT '$name ran against ${many.size} datasets in this " +
-          "JVM - rotation ambiguous, rerun a single-dataset dump' AS err"
-    }
-
-  /** Oracle statements that depend on state a query derives at run
-    * time (plan-literal rotations). [[graft.SparkEntry.oracleSql]]
-    * splices these in at dump time. */
-  def dynamicOracle: Map[String, String] = ivfEntries.collect {
-    case (n, e) if e.trainOpq => n -> rotationOracle(n, e.spec)
-  }.toMap
-
-  /** The exact integer-micro covariance matrix of the embedding
-    * corpus — [[graft.ext.Pca.covMeans]]' fused-kernel aggregate
-    * surfaced as its own hash-verified entry. This is the
-    * verification anchor for every LOCAL eigensolve built on it
-    * (power iteration, Hotelling deflation, and the OPQ Jacobi
-    * rotation of the `trainOpq` PQ entries): DuckDB independently
-    * reproduces the 4096 BIGINT cells, and the rotation is a pure
-    * deterministic function of exactly these integers (PcaSpec pins
-    * the function's invariants), so the chain covariance → rotation
-    * → rotated-ADC is verified end to end even though no SQL engine
-    * can replay a Jacobi sweep. One corpus pass; the shuffle is
-    * matrix-sized. */
-  def dEmbedCov(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val (_, c) = graft.ext.Pca.covMeans(embs(s, d), 64)
-    (for (i <- 0 until 64; j <- 0 until 64)
-      yield (i.toLong, j.toLong, c(i)(j)))
-      .toDF("i", "j", "ci").orderBy("i", "j")
+  /** The `trainOpq` rows' names. */
+  def opqEntryNames: Seq[String] = ivfEntries.collect {
+    case (n, e) if e.trainOpq => n
   }
 
-  private val dEmbedCovSql = graft.ext.Pca.covSql(64)
+  /** The oracle of every `trainOpq` row on dataset `d`: the rotation
+    * [[CovSpec.opqRotation]] derives from `d`'s corpus, as the entry
+    * does — one covariance fit per (dim, m) the rows use. */
+  def opqOracleSql(s: SparkSession, d: String): Map[String, String] = {
+    val rots = scala.collection.mutable.Map
+      .empty[(Int, Int), Array[Array[Double]]]
+    ivfEntries.collect { case (n, e) if e.trainOpq =>
+      n -> ivfOracle(trained(e, (dim, m) => rots.getOrElseUpdate((dim, m),
+        CovSpec.opqRotation(embs(s, d), dim, m))), e)
+    }.toMap
+  }
+
+  /** The embedding covariance family ([[CovSpec]]): one fit, one
+    * Spark body ([[CovSpec.run]]) and one oracle generator
+    * ([[CovSpec.oracleSql]]) serve every row. `d_embed_cov` is the
+    * verification anchor of every LOCAL eigensolve built on the fit
+    * (power iteration, Hotelling deflation, the OPQ Jacobi rotation):
+    * DuckDB reproduces its 4096 BIGINT cells, and the eigensolves are
+    * pure functions of exactly these integers (PcaSpec pins their
+    * invariants), so covariance → rotation → rotated ADC is verified
+    * end to end although no SQL engine can replay a Jacobi sweep. */
+  private val covEntries: Seq[(String, CovSpec)] = Seq(
+    "d_embed_cov" -> CovSpec(CovOutput.Cov),
+    // top principal component — the anisotropy diagnostic
+    "d_embed_pca" -> CovSpec(CovOutput.Components(1)),
+    // top two by deflation, with the cumulative subspace evr
+    "d_embed_pca2" -> CovSpec(CovOutput.Components(2)),
+    // per-vector norm before/after removing mean + dominant direction
+    "d_embed_abtt" -> CovSpec(CovOutput.AllButTop))
 
   /** ANN quality evaluation: recall@k of the LSH path against the
     * brute-force ground truth — the number that decides whether an
@@ -2191,7 +2168,8 @@ object TrainingData {
     * totals are two 1-row broadcast frames; the top-50 compiles to
     * TakeOrderedAndProject over the vocabulary²-bounded scored frame
     * (per-partition top-n — no global sort shuffle), and the 50 rows
-    * are numbered on the driver. */
+    * are numbered in the same plan by one sorted `collect_list` +
+    * `posexplode` (no window, no driver collect). */
   def dCollocations(s: SparkSession, d: String): DataFrame = {
     val base = docs(s, d).select(TextStats.tokens(col("text")).as("toks"))
     val uni = base.select(explode(col("toks")).as("w"))
@@ -2215,12 +2193,14 @@ object TrainingData {
       .withColumn("lift",
         round(col("n_xy").cast("double") * col("n_tok") * col("n_tok") /
           (col("n_big").cast("double") * col("n_x") * col("n_y")), 6))
-    val top = scored.orderBy(desc("lift"), asc("w1"), asc("w2")).limit(50)
-      .select(col("w1"), col("w2"), col("n_xy"), col("lift"))
-    Similarity.localFrame(s, StructType(
-        StructField("rk", LongType, nullable = false) +: top.schema),
-      top.collect().toSeq.zipWithIndex.map { case (r, i) =>
-        Row(i + 1L, r.get(0), r.get(1), r.get(2), r.get(3)) })
+    // ascending (−lift, w1, w2) is the top-n's order
+    scored.orderBy(desc("lift"), asc("w1"), asc("w2")).limit(50)
+      .agg(sort_array(collect_list(struct((-col("lift")).as("neg_lift"),
+        col("w1"), col("w2"), col("n_xy")))).as("top"))
+      .select(posexplode(col("top")).as(Seq("pos", "t")))
+      .select((col("pos") + 1L).as("rk"), col("t.w1").as("w1"),
+        col("t.w2").as("w2"), col("t.n_xy").as("n_xy"),
+        (-col("t.neg_lift")).as("lift"))
   }
 
   private val dCollocationsSql =
@@ -3370,22 +3350,6 @@ object TrainingData {
       "\nORDER BY tokenizer, source"
   }
 
-  /** Top principal component of the embedding corpus by distributed
-    * power iteration — the anisotropy diagnostic; see
-    * [[graft.ext.Pca]] for the matrix-sized-shuffle scale shape. */
-  def dEmbedPca(s: SparkSession, d: String): DataFrame =
-    graft.ext.Pca.topComponent(embs(s, d))
-
-  /** All-but-the-Top correction: per-vector pc1 coefficient and
-    * norm before/after removing mean + dominant direction. */
-  def dEmbedAbtt(s: SparkSession, d: String): DataFrame =
-    graft.ext.Pca.allButTop(embs(s, d))
-
-  /** Top-2 principal components by Hotelling deflation, with the
-    * cumulative subspace explained-variance ratio. */
-  def dEmbedPca2(s: SparkSession, d: String): DataFrame =
-    graft.ext.Pca.topComponents2(embs(s, d))
-
   /** Greedy (next-fit) sample packing: per source, documents in
     * doc_id order are placed whole into 128-token bins — a document
     * that would overflow the current bin starts a new one (an
@@ -3570,7 +3534,6 @@ object TrainingData {
     "d_winnowing" -> (dWinnowing _),
     "s_kcenter" -> (sKcenter _),
     "s_ann_mips" -> (sAnnMips _),
-    "d_embed_cov" -> (dEmbedCov _),
     "d_curation_pipeline" -> (dCurationPipeline _),
     "d_dup_clusters" -> (dDupClusters _),
     "d_dedup_keep_best" -> (dDedupKeepBest _),
@@ -3600,9 +3563,6 @@ object TrainingData {
     "d_unigram_train" -> (dUnigramTrain _),
     "d_unigram_tokens" -> (dUnigramTokens _),
     "d_tokenizer_eval" -> (dTokenizerEval _),
-    "d_embed_pca" -> (dEmbedPca _),
-    "d_embed_abtt" -> (dEmbedAbtt _),
-    "d_embed_pca2" -> (dEmbedPca2 _),
     "d_dsir" -> (dDsir _),
     "d_chunk_dedup" -> (dChunkDedup _),
     "d_kl_sources" -> (dKlSources _),
@@ -3626,6 +3586,8 @@ object TrainingData {
     } ++ embedDupEntries.map { case (n, e) => n -> (runEmbedDup(e) _) } ++
     lmEntries.map { case (n, spec) =>
       n -> ((s: SparkSession, d: String) => LmSpec.score(spec, docs(s, d)))
+    } ++ covEntries.map { case (n, spec) =>
+      n -> ((s: SparkSession, d: String) => CovSpec.run(spec, embs(s, d)))
     }
 
   val oracle: Map[String, String] = Map(
@@ -3678,9 +3640,6 @@ object TrainingData {
     "d_unigram_train" -> dUnigramTrainSql,
     "d_unigram_tokens" -> dUnigramTokensSql,
     "d_tokenizer_eval" -> dTokenizerEvalSql,
-    "d_embed_pca" -> graft.ext.Pca.topComponentSql(),
-    "d_embed_abtt" -> graft.ext.Pca.allButTopSql(),
-    "d_embed_pca2" -> graft.ext.Pca.topComponents2Sql(),
     "d_dsir" -> dDsirSql,
     "d_chunk_dedup" -> dChunkDedupSql,
     "d_kl_sources" -> dKlSourcesSql,
@@ -3690,7 +3649,6 @@ object TrainingData {
     "d_mix_sources" -> dMixSourcesSql,
     "s_kcenter" -> sKcenterSql(8),
     "s_ann_mips" -> sAnnMipsSql,
-    "d_embed_cov" -> dEmbedCovSql,
     "m_binary_meta" -> mBinaryMetaSql,
     "m_media_decode" -> mMediaDecodeSql,
     "m_frame_sample" -> mFrameSampleSql,
@@ -3706,5 +3664,6 @@ object TrainingData {
     n -> SemDedupSpec.oracleSql(e.spec, e.split)
   } ++ embedDupEntries.map { case (n, e) =>
     n -> EmbedDupSpec.oracleSql(e.spec, e.evalMod)
-  } ++ lmEntries.map { case (n, spec) => n -> LmSpec.oracleSql(spec) }
+  } ++ lmEntries.map { case (n, spec) => n -> LmSpec.oracleSql(spec)
+  } ++ covEntries.map { case (n, spec) => n -> CovSpec.oracleSql(spec) }
 }

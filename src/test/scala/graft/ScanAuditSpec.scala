@@ -145,10 +145,8 @@ class ScanAuditSpec extends SparkSpec {
 
   test("d_collocations: the documents scan ships ONLY text — at " +
       "100 TB the bigram pass is a single-column read") {
-    // the top-50 is numbered on the driver: the scan is in the plan
-    // that ran, not in the returned local frame
-    val (cols, _) = scanRun("documents")(
-      queries.TrainingData.dCollocations(spark, sf0001))
+    val (cols, _) = scanOf(
+      queries.TrainingData.dCollocations(spark, sf0001), "documents")
     assert(cols == Set("text"), s"scan widened to $cols")
   }
 

@@ -1,10 +1,17 @@
 package graft.ext
 
 import graft.SparkSpec
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType, LongType,
+  StructField, StructType}
 
-/** Power-iteration PCA: eigen-properties on the real corpus and a
-  * constructed corpus with a planted dominant direction. */
+import CovOutput.{AllButTop, Components, Cov}
+
+/** The [[CovSpec]] family: eigen-properties of the power-iteration PCA
+  * on the real corpus and on a constructed corpus with a planted
+  * dominant direction, the corpus guard, and the local eigensolves the
+  * OPQ rotation is built on. */
 class PcaSpec extends SparkSpec {
   import spark.implicits._
 
@@ -20,10 +27,23 @@ class PcaSpec extends SparkSpec {
       base(1) = t * math.sqrt(0.5)
       for (j <- 2 until dim)
         base(j) = ((k * (j + 3)) % 7 - 3).toDouble * 0.05   // tiny
-      (k.toLong, base.map(_.toFloat))
+      Row(k.toLong, base.map(_.toFloat).toSeq)
     }
-    val df = rows.toDF("vec_id", "embedding")
-    val out = Pca.topComponent(df, dim = dim, iters = 12)
+    val schema = StructType(Seq(StructField("vec_id", LongType),
+      StructField("embedding", ArrayType(FloatType, containsNull = true))))
+    def frame(rs: Seq[Row]) =
+      spark.createDataFrame(java.util.Arrays.asList(rs: _*), schema)
+    // a NULL-element vector and an all-zero vector have no direction:
+    // the fit and every output drop them
+    val df = frame(rows ++ Seq(
+      Row(200L, Seq[Any](1.0f, 2.0f, null, 0.5f, 0f, 0f, 0f, 0f)),
+      Row(201L, Seq.fill(dim)(0.0f))))
+    for (output <- Seq(Cov, Components(1), Components(2), AllButTop)) {
+      val spec = CovSpec(output, dim = dim)
+      assert(CovSpec.run(spec, df).collect().toSeq ==
+        CovSpec.run(spec, frame(rows)).collect().toSeq, output)
+    }
+    val out = CovSpec.run(CovSpec(Components(1), iters = 12, dim = dim), df)
       .orderBy("dim").collect()
     assert(out.length == dim)
     val pc = out.map(_.getDouble(2))
@@ -57,7 +77,7 @@ class PcaSpec extends SparkSpec {
       (k.toLong, base.map(_.toFloat))
     }
     val df = rows.toDF("vec_id", "embedding")
-    val out = Pca.topComponents2(df, dim = dim, iters = 16)
+    val out = CovSpec.run(CovSpec(Components(2), iters = 16, dim = dim), df)
       .orderBy("comp", "dim").collect()
     assert(out.length == 2 * dim)
     val c1 = out.take(dim)
@@ -82,7 +102,7 @@ class PcaSpec extends SparkSpec {
   test("all-but-the-top: Pythagoras holds (orig² ≈ coef² + corr²) " +
       "and the correction can only shrink the centered norm") {
     val e = graft.Tables.embeddings(spark, sf0001)
-    val out = Pca.allButTop(e).collect()
+    val out = CovSpec.run(CovSpec(AllButTop), e).collect()
     assert(out.nonEmpty)
     for (r <- out) {
       val coef = r.getDouble(1)
@@ -160,7 +180,7 @@ class PcaSpec extends SparkSpec {
   test("real corpus: Rayleigh residual is small (C·v ≈ λ·v) and evr " +
       "is a valid share") {
     val e = graft.Tables.embeddings(spark, sf0001)
-    val out = Pca.topComponent(e).orderBy("dim").collect()
+    val out = CovSpec.run(CovSpec(Components(1)), e).orderBy("dim").collect()
     assert(out.length == 64)
     val pc = out.map(_.getDouble(2))
     val lambda = out.head.getDouble(3)

@@ -1054,12 +1054,11 @@ class SimilaritySpec extends SparkSpec {
     def recallOf(r: org.apache.spark.sql.DataFrame): Double =
       r.select("query_id", "neighbor_id").as[(Long, Long)]
         .collect().count(truth.contains).toDouble / truth.size
-    val (_, cov) = Pca.covMeans(df, 8)
-    val rot = Pca.opqRotation(cov, 8, m = 2)
+    val rot = CovSpec.opqRotation(df, 8, m = 2)
     // rotation preserves ground truth: the rotated brute-force top-k
     // pairs are the raw ones (inner products rotation-invariant up to
     // the 6-decimal literal rounding — identical on this fixture)
-    val rotated = Pca.applyRotation(df, rot,
+    val rotated = graft.functions.RotationFrames.applyRotation(df, rot,
       keep = Seq("vec_id", "label"))
     val truthRot = Similarity.ivfSearch(flat, rotated, qids, 3)
       .select("query_id", "neighbor_id").as[(Long, Long)]
@@ -1088,8 +1087,7 @@ class SimilaritySpec extends SparkSpec {
     def recallC(r: org.apache.spark.sql.DataFrame): Double =
       r.select("query_id", "neighbor_id").as[(Long, Long)]
         .collect().count(truthC.contains).toDouble / truthC.size
-    val (_, covC) = Pca.covMeans(emb, 64)
-    val rotC = Pca.opqRotation(covC, 64, m = 16)
+    val rotC = CovSpec.opqRotation(emb, 64, m = 16)
     val resC = recallC(Similarity.ivfSearch(
       pqCopy(ivf64)(_.copy(residual = true)), emb, q16, 5))
     val opqResC = recallC(Similarity.ivfSearch(pqCopy(ivf64)(_.copy(
@@ -1263,8 +1261,7 @@ class SimilaritySpec extends SparkSpec {
     // allocation — what s_ann_pq_opq runs) must do at least as well
     // as the round-robin variance heuristic on the fixture built to
     // reward allocation
-    val (_, cov) = Pca.covMeans(df, 8)
-    val rot = Pca.opqRotation(cov, 8, m = 2)
+    val rot = CovSpec.opqRotation(df, 8, m = 2)
     val opq = recallOf(Similarity.ivfSearch(
       pqCopy(pq8)(_.copy(layout = PqLayout.Rotation(rot))), df, qids, 3))
     assert(opq >= balanced,
@@ -1374,8 +1371,7 @@ class SimilaritySpec extends SparkSpec {
     val emb = graft.Tables.embeddings(spark, sf0001)
     val nn = emb.filter(col("embedding").isNotNull)
     val q16 = Similarity.sampleQueryIds(nn, 16)
-    val (_, cov) = Pca.covMeans(emb, 64)
-    val rot = Pca.opqRotation(cov, 64, m = 16)
+    val rot = CovSpec.opqRotation(emb, 64, m = 16)
     val opqRes = pqCopy(ivf64)(_.copy(residual = true,
       layout = PqLayout.Rotation(rot)))
     val full = Similarity.ivfSearch(opqRes, emb, q16, 5)

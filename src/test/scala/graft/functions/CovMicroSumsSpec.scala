@@ -7,7 +7,7 @@ import org.scalacheck.rng.Seed
 
 /** The fused covariance kernel must be bit-identical to the explode
   * pipeline it replaced: the quantizer to Spark's double→DECIMAL(18,6)
-  * cast, and the whole aggregate (via [[graft.ext.Pca.covExplode]]) to
+  * cast, and the whole aggregate (via [[CovExplode]]) to
   * the dim²-struct explode + groupBy formulation. Generators are
   * sampled from fixed seeds (the scalatest↔scalacheck bridge isn't in
   * the offline cache — the ArrayOpsPropertySpec pattern). */
@@ -64,8 +64,8 @@ class CovMicroSumsSpec extends SparkSpec {
   test("fused kernel ≡ explode pipeline, cell-for-cell, on the real " +
       "sf0.001 embedding corpus") {
     val e = graft.Tables.embeddings(spark, sf0001)
-    val (_, c) = graft.ext.Pca.covMeans(e, 64)
-    val exploded = graft.ext.Pca.covExplode(e, 64).collect()
+    val c = graft.ext.CovSpec.fit(e, 64).c
+    val exploded = CovExplode(e, 64).collect()
     assert(exploded.length == 64 * 64)
     for (r <- exploded) {
       val (i, j, ci) = (r.getInt(0), r.getInt(1), r.getLong(2))
@@ -83,8 +83,8 @@ class CovMicroSumsSpec extends SparkSpec {
       (k.toLong, arr.map(_.toFloat))
     }
     val df = rows.toDF("vec_id", "embedding").repartition(16)
-    val (_, c) = graft.ext.Pca.covMeans(df, dim)
-    val exploded = graft.ext.Pca.covExplode(df, dim).collect()
+    val c = graft.ext.CovSpec.fit(df, dim).c
+    val exploded = CovExplode(df, dim).collect()
     assert(exploded.length == dim * dim)
     for (r <- exploded)
       assert(c(r.getInt(0))(r.getInt(1)) == r.getLong(2),
@@ -99,8 +99,8 @@ class CovMicroSumsSpec extends SparkSpec {
     }
     val one = rows.toDF("vec_id", "embedding").coalesce(1)
     val many = rows.toDF("vec_id", "embedding").repartition(13)
-    val (_, c1) = graft.ext.Pca.covMeans(one, dim)
-    val (_, cm) = graft.ext.Pca.covMeans(many, dim)
+    val c1 = graft.ext.CovSpec.fit(one, dim).c
+    val cm = graft.ext.CovSpec.fit(many, dim).c
     for (i <- 0 until dim; j <- 0 until dim)
       assert(c1(i)(j) == cm(i)(j), s"cell ($i,$j)")
   }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.types._
 import graft.SparkSpec
 
 /** The [[MatVecLit]] kernel must be BIT-identical to the dim²-literal
-  * expression tree it replaced ([[graft.ext.Pca.applyRotationTree]]) —
+  * expression tree it replaced ([[RotationFrames.applyRotationTree]]) —
   * that equivalence is what keeps the OPQ oracles' plan-literal
   * rotation CTEs valid (the oracle replays the tree's left-fold `a +
   * b + c` chain in SQL). */
@@ -24,9 +24,9 @@ class MatVecSpec extends SparkSpec {
     val vecs = (0 until 50).map(i =>
       (i.toLong, Seq.fill(dim)(rng.nextFloat() * 4 - 2)))
     val df = vecs.toDF("vec_id", "embedding")
-    val got = graft.ext.Pca.applyRotation(df, mat)
+    val got = RotationFrames.applyRotation(df, mat)
       .orderBy("vec_id").select("embedding").as[Seq[Double]].collect()
-    val want = graft.ext.Pca.applyRotationTree(df, mat)
+    val want = RotationFrames.applyRotationTree(df, mat)
       .orderBy("vec_id").select("embedding").as[Seq[Double]].collect()
     assert(got.length == want.length)
     got.zip(want).foreach { case (g, w) =>
@@ -46,9 +46,9 @@ class MatVecSpec extends SparkSpec {
       (i.toLong, Seq.fill(dim)(rng.nextDouble() * 2 - 1))) :+
       (99L, Seq.fill(dim)(0.0)) // an all-zero vector
     val df = vecs.toDF("vec_id", "embedding")
-    val got = graft.ext.Pca.applyRotation(df, mat)
+    val got = RotationFrames.applyRotation(df, mat)
       .orderBy("vec_id").select("embedding").as[Seq[Double]].collect()
-    val want = graft.ext.Pca.applyRotationTree(df, mat)
+    val want = RotationFrames.applyRotationTree(df, mat)
       .orderBy("vec_id").select("embedding").as[Seq[Double]].collect()
     got.zip(want).foreach { case (g, w) =>
       g.zip(w).foreach { case (a, b) =>
@@ -68,10 +68,10 @@ class MatVecSpec extends SparkSpec {
       Row(1L, Seq(1.0, 2.0, 3.0, 4.0)),
       Row(2L, Seq[Any](1.0, null, 3.0, 4.0)))
     val df = spark.createDataFrame(rows, schema)
-    val got = graft.ext.Pca.applyRotation(df, mat)
+    val got = RotationFrames.applyRotation(df, mat)
       .orderBy("vec_id").select("embedding")
       .collect().map(_.getSeq[Any](0))
-    val want = graft.ext.Pca.applyRotationTree(df, mat)
+    val want = RotationFrames.applyRotationTree(df, mat)
       .orderBy("vec_id").select("embedding")
       .collect().map(_.getSeq[Any](0))
     assert(got(1).forall(_ == null) && want(1).forall(_ == null))

@@ -907,27 +907,19 @@ class TrainingDataSpec extends SparkSpec {
     e.unpersist()
   }
 
-  test("OPQ rotation oracle: marker before any run, rotation literals " +
-      "after exactly one dataset, ambiguity marker after two") {
-    // a name no catalog entry uses, so queries other suites run in
-    // this JVM cannot touch its state
-    val name = "opq_oracle_spec_probe"
-    val spec = graft.ext.IvfSpec(graft.ext.Coarse.Exhaustive,
-      graft.ext.IvfCodes.Pq(m = 16, kSub = 32, iters = 2))
-    val none = TrainingData.rotationOracle(name, spec)
-    assert(none.contains(s"run $name before dumping its oracle"), none)
-    val rot = Array.tabulate(64, 64)((i, j) => if (i == j) 0.5 else 0.0)
-    TrainingData.recordRotation(name, "/data/a", rot)
-    val one = TrainingData.rotationOracle(name, spec)
-    assert(!one.contains(" AS err"), one)
-    assert(one.contains("(0.5) * emb[1] + (0.0) * emb[2]") &&
-      one.contains("base AS MATERIALIZED"), one.take(400))
-    // the same dataset again is still one rotation
-    TrainingData.recordRotation(name, "/data/a", rot)
-    assert(TrainingData.rotationOracle(name, spec) == one)
-    TrainingData.recordRotation(name, "/data/b", rot)
-    val many = TrainingData.rotationOracle(name, spec)
-    assert(many.contains("ran against 2 datasets") &&
-      many.contains("rotation ambiguous"), many)
+  test("OPQ oracle from the dataset: same before and after the entry runs") {
+    // derived from the dataset alone: no marker before the entry ran,
+    // and running it changes nothing
+    val name = "s_ann_pq_opq"
+    val before = graft.SparkEntry.datasetOracleSql(spark, sf0001)(name)
+    TrainingData.queries(name)(spark, sf0001).collect()
+    val after = graft.SparkEntry.datasetOracleSql(spark, sf0001)(name)
+    assert(before == after)
+    assert(!before.contains(" AS err"), before.take(400))
+    assert(raw"\(-?[0-9]+\.[0-9]+(E-?[0-9]+)?\) \* emb\[1\] \+ ".r
+      .findFirstIn(before).isDefined && before.contains("base AS MATERIALIZED"),
+      before.take(400))
+    assert(graft.SparkEntry.datasetOracleKeys.toSet ==
+      Set(name, "s_ann_ivf_pq_opq_res", "s_ann_ivf_pq_opq_res_sampled"))
   }
 }
